@@ -779,7 +779,7 @@ def _q_triple_pr(spark, sf_dir):
     from vnlp_spark.plans.gold_ud import score_vs_ud_gold
     from vnlp_spark.plans.pipeline import run_kg_pipeline
 
-    kg = run_kg_pipeline(_corpus_docs(spark, sf_dir), persist=True, dedup_sentences=True)
+    kg = run_kg_pipeline(_corpus_docs(spark, sf_dir), persist=True)
     pr = score_triples(kg.triples, kg.sentences)
     for df in (kg.annotated, kg.triples, kg.entities):
         df.unpersist()

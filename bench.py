@@ -45,8 +45,7 @@ def kg_docs_for_sf(sf: float) -> int:
     return max(500, int(sf * 200_000))
 
 
-def run_kg(spark, n_docs: int, dedup_sentences: bool = True,
-           unique_tail: bool = False) -> tuple[float, int]:
+def run_kg(spark, n_docs: int, unique_tail: bool = False) -> tuple[float, int]:
     """Returns (elapsed_sec, n_triples) for the full KG pipeline, entities
     and edges materialized too (counts forced)."""
     from vnlp_spark.plans.corpus import generate_web_pages
@@ -56,7 +55,7 @@ def run_kg(spark, n_docs: int, dedup_sentences: bool = True,
     n_parts = spark.sparkContext.defaultParallelism * 4
     docs = generate_web_pages(spark, n_docs, unique_tail=unique_tail, n_partitions=n_parts)
     t0 = time.monotonic()
-    kg = run_kg_pipeline(docs, persist=True, dedup_sentences=dedup_sentences)
+    kg = run_kg_pipeline(docs, persist=True)
     n_triples = kg.triples.count()
     kg.entities.count()
     kg.edges.count()

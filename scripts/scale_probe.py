@@ -55,7 +55,7 @@ def main():
         def job(d):
             t0, st0 = _cpu_counters()
             w0 = time.monotonic()
-            ntr = run_kg_pipeline(d, dedup_sentences=False).triples.count()
+            ntr = run_kg_pipeline(d).triples.count()
             sec = time.monotonic() - w0
             t1, st1 = _cpu_counters()
             steal = 100.0 * (st1 - st0) / max(t1 - t0, 1)

@@ -15,7 +15,12 @@ from vnlp_spark.operators.entity_resolution import (
 )
 from vnlp_spark.plans.corpus import generate_web_pages
 from vnlp_spark.plans.lineage import StageRunner
-from vnlp_spark.plans.pipeline import run_kg_pipeline
+from vnlp_spark.plans.pipeline import (
+    annotate_stage,
+    annotated_documents_stage,
+    run_kg_pipeline,
+    sentences_stage,
+)
 
 
 @pytest.fixture(scope="module")
@@ -134,6 +139,51 @@ def test_long_sentence_routed_not_crashing(spark):
     kg = run_kg_pipeline(docs.select("url", "warc_ts", "html", "text", "lang"))
     assert kg.annotated.filter(F.col("arcs").isNull()).count() == 1
     assert kg.triples.count() == 0
+
+
+def _edge_case_docs(spark):
+    texts = [
+        None,
+        "",
+        "   \n\t ",
+        "Merhaba 😀 dünya! 🎉🎉 İstanbul'a gittik.",
+        " ".join(["kedi"] * 45) + ".",
+    ]
+    return spark.createDataFrame(
+        [(f"u{i}", t, "tr") for i, t in enumerate(texts)],
+        "url string, text string, lang string",
+    ).select(
+        "url",
+        F.current_timestamp().alias("warc_ts"),
+        F.lit(None).cast("binary").alias("html"),
+        "text",
+        "lang",
+    )
+
+
+@pytest.mark.parametrize("corpus", ["pooled", "unique_tail", "edge_cases"])
+def test_per_document_and_per_sentence_paths_agree(spark, corpus):
+    """run_kg_pipeline's per-document UDF and kg_job's per-sentence UDF
+    wrap the same kernel: same rows, same order-insensitive digest."""
+    if corpus == "edge_cases":
+        docs = _edge_case_docs(spark)
+    else:
+        docs = generate_web_pages(spark, 400, unique_tail=corpus == "unique_tail")
+    docs = docs.cache()
+    digest = F.expr(
+        "bit_xor(xxhash64(url, sent_id, sentence, tokens, analyses, mentions, arcs))"
+    )
+
+    def summary(df):
+        return tuple(df.agg(F.count(F.lit(1)), digest).first())
+
+    try:
+        per_doc = summary(annotated_documents_stage(docs))
+        per_sent = summary(annotate_stage(sentences_stage(docs)))
+    finally:
+        docs.unpersist()
+    assert per_doc == per_sent
+    assert per_doc[0] > 0
 
 
 def test_kg_job_end_to_end_with_resume(spark, tmp_path):

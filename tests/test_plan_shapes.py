@@ -96,43 +96,3 @@ def test_edges_auto_switch(spark):
     finally:
         for df in (kg.annotated, kg.triples, kg.entities):
             df.unpersist()
-
-
-def test_gru_annotate_path(spark):
-    """model='gru' routes NER through the AutoregressiveTagger harness on
-    the production plan: same schema, shuffle-free stage, deterministic."""
-    from vnlp_spark.plans.pipeline import annotate_stage, sentences_stage
-
-    docs = generate_web_pages(spark, 30)
-    ann = annotate_stage(sentences_stage(docs), model="gru")
-    plan = _plan(ann)
-    assert "Exchange" not in plan, "GRU annotation must stay a narrow map"
-    assert "ArrowEvalPython" in plan
-    heur = annotate_stage(sentences_stage(docs))
-    assert ann.schema == heur.schema
-
-    def snap(df):
-        return sorted(
-            (r["url"], r["sent_id"], r["m"])
-            for r in df.select("url", "sent_id", F.to_json("mentions").alias("m")).collect()
-        )
-
-    first = snap(ann)
-    second = snap(annotate_stage(sentences_stage(docs), model="gru"))
-    assert first == second and len(first) > 0
-
-
-def test_pos_tags_gru_shape(spark):
-    from vnlp_spark.functions.tokenizer import treebank_tokenize
-    from vnlp_spark.operators.pos import pos_tags_gru, upos_label_names
-
-    # the label space is the reference's REAL PoS tokenizer id order
-    names = upos_label_names()
-    assert names[1] == "NOUN" and names[2] == "PUNCT" and names[3] == "VERB"
-    docs = generate_web_pages(spark, 20)
-    df = docs.select(treebank_tokenize("text").alias("tokens"))
-    out = df.select("tokens", pos_tags_gru("tokens", spark).alias("upos")).collect()
-    assert len(out) > 0
-    for r in out:
-        assert len(r["upos"]) == len(r["tokens"])
-        assert set(r["upos"]) <= set(names)

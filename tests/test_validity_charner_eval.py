@@ -49,7 +49,7 @@ def test_triple_pr_meets_target(spark):
     from vnlp_spark.plans.pipeline import run_kg_pipeline
 
     docs = generate_web_pages(spark, 300)
-    kg = run_kg_pipeline(docs, persist=True, dedup_sentences=True)
+    kg = run_kg_pipeline(docs, persist=True)
     pr = score_triples(kg.triples, kg.sentences)
     assert pr.n_gold > 100
     assert pr.precision >= 0.95, f"precision {pr.precision}"

@@ -16,6 +16,10 @@ interrupted job re-runs only incomplete stages; see plans/lineage.py):
     sentences -> annotated -> mentions -> triples -> entities -> edges
     plus _lineage/<stage>/ rows (bucket, n_rows, checksum, completed_ts)
 
+``annotated`` runs ``annotate_stage``'s per-sentence fused UDF over the
+written ``sentences`` table — the same kernel, and the same rows, as the
+per-document UDF behind ``run_kg_pipeline``.
+
 All model/lexicon resources ship inside the vnlp_spark package (the
 --py-files zip), so executors need no network access (the reference's
 lazy S3 download at utils.py:9-24 is replaced by packaged data).
@@ -36,8 +40,6 @@ def parse_args(argv=None):
     p.add_argument("--stages", default="all",
                    help="comma list of sentences,annotated,mentions,triples,entities,edges")
     p.add_argument("--force", action="store_true", help="recompute even if stages are complete")
-    p.add_argument("--dedup-sentences", action="store_true",
-                   help="annotate distinct sentences once (crawl-shaped corpora)")
     return p.parse_args(argv)
 
 
@@ -73,7 +75,7 @@ def main(argv=None) -> int:
     sentences = P.sentences_stage(docs, lang)
     if "sentences" in wanted:
         sentences = runner.run("sentences", sentences, force=args.force)
-    annotated = P.annotate_stage(sentences, dedup_sentences=args.dedup_sentences)
+    annotated = P.annotate_stage(sentences)
     if "annotated" in wanted:
         annotated = runner.run("annotated", annotated, force=args.force)
     mentions = P.mentions_stage(annotated)

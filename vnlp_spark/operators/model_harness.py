@@ -154,116 +154,6 @@ def process_word_context(
     return np.vstack([lmat, cur, rmat])
 
 
-class AutoregressiveTagger:
-    """SPUContext-style autoregressive sequence labeler (SURVEY W2): the
-    label predicted for token t-1 is embedded and fed into token t's input,
-    so prediction is **sequential within a sentence** — the reference's
-    per-token loops at spu_context_ner.py:147-161, spu_context_pos.py:
-    142-157, spu_context_dp.py:164-186.
-
-    The Spark-legal vectorization (the only one W2 allows): parallelize
-    ACROSS sentences — all sentences in an Arrow batch advance one
-    timestep per Python-loop iteration, each consuming its own previous
-    argmax.  Python-level work is O(max_sentence_len) per batch, with one
-    (batch, ·) matmul bundle per step, never O(total tokens)."""
-
-    def __init__(self, emb, lab_emb, W, U, b, Wo, bo):
-        self.emb, self.lab_emb = emb, lab_emb
-        self.W, self.U, self.b, self.Wo, self.bo = W, U, b, Wo, bo
-        self.hidden = U.shape[0]
-        self.n_labels = lab_emb.shape[0]
-
-    @classmethod
-    def surrogate(cls, vocab: int, dim: int, hidden: int, n_labels: int, seed: int = 11):
-        rng = np.random.default_rng(seed)
-        return cls(
-            emb=_glorot(rng, (vocab, dim)),
-            lab_emb=_glorot(rng, (n_labels, dim)),
-            W=_glorot(rng, (2 * dim, 3 * hidden)),
-            U=_glorot(rng, (hidden, 3 * hidden)),
-            b=np.zeros(3 * hidden, dtype=np.float32),
-            Wo=_glorot(rng, (hidden, n_labels)),
-            bo=np.zeros(n_labels, dtype=np.float32),
-        )
-
-    def arrays(self) -> List[np.ndarray]:
-        return [self.emb, self.lab_emb, self.W, self.U, self.b, self.Wo, self.bo]
-
-    @classmethod
-    def from_arrays(cls, arrays: List[np.ndarray]) -> "AutoregressiveTagger":
-        return cls(*arrays)
-
-    def tag_batch(self, id_batches: List[List[int]]) -> List[List[int]]:
-        """Label ids per token for a batch of sentences.  Label 0 is the
-        initial previous-label for every sentence (the reference seeds its
-        feedback features with zeros the same way)."""
-        if not id_batches:
-            return []
-        n = len(id_batches)
-        max_len = max(1, max(len(s) for s in id_batches))
-        ids = np.zeros((n, max_len), dtype=np.int64)
-        mask = np.zeros((n, max_len), dtype=np.float32)
-        for i, seq in enumerate(id_batches):
-            ids[i, : len(seq)] = np.asarray(seq, dtype=np.int64) % self.emb.shape[0]
-            mask[i, : len(seq)] = 1.0
-        H = self.hidden
-        h = np.zeros((n, H), dtype=np.float32)
-        prev = np.zeros(n, dtype=np.int64)  # previous predicted label per sentence
-        out = np.zeros((n, max_len), dtype=np.int64)
-        for t in range(max_len):
-            x = np.concatenate([self.emb[ids[:, t]], self.lab_emb[prev]], axis=1)
-            gx = x @ self.W + self.b
-            gh = h @ self.U
-            z = _sigmoid(gx[:, :H] + gh[:, :H])
-            r = _sigmoid(gx[:, H: 2 * H] + gh[:, H: 2 * H])
-            hh = np.tanh(gx[:, 2 * H:] + r * gh[:, 2 * H:])
-            h_new = (1 - z) * h + z * hh
-            m = mask[:, t:t + 1]
-            h = m * h_new + (1 - m) * h
-            labels = np.argmax(h @ self.Wo + self.bo, axis=1)
-            active = mask[:, t] > 0
-            out[active, t] = labels[active]
-            prev = np.where(active, labels, prev)  # feedback only on real tokens
-        return [out[i, : len(seq)].tolist() for i, seq in enumerate(id_batches)]
-
-
-def make_autoregressive_tagger_udf(broadcast_weights, vocab: int = 32768,
-                                   spm_pieces_bc=None):
-    """Iterator pandas UDF over array<string> token columns returning
-    array<int> label ids — weights rebuilt once per worker, the per-token
-    feedback loop runs inside ``tag_batch`` (W2: the parallelism unit is
-    the sentence, never the token).
-
-    ``spm_pieces_bc`` (a broadcast of subword.parse_spm_model output)
-    switches featurization from the hashing trick to REAL SentencePiece
-    ids: each token is represented by its first (stem) piece id — the
-    surrogate reduction of the reference's 8-wide piece matrix; the full
-    matrix path for trained weights is process_word_context +
-    subword.spm_tokenize_tokens."""
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def tagger(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        model = AutoregressiveTagger.from_arrays(broadcast_weights.value)
-        encoder = None
-        if spm_pieces_bc is not None:
-            from .subword import SpmUnigramEncoder
-
-            encoder = SpmUnigramEncoder(spm_pieces_bc.value)  # once per worker
-
-        def featurize(ts):
-            toks = list(ts) if ts is not None else []
-            if encoder is None:
-                return hash_token_ids(toks, vocab)
-            return [(ids[0] if (ids := encoder.encode_as_ids(t)) else encoder.unk_id)
-                    for t in toks]
-
-        for token_arrays in batches:
-            yield pd.Series(model.tag_batch([featurize(ts) for ts in token_arrays]))
-
-    return tagger
-
-
 def make_sequence_scorer_udf(broadcast_weights, vocab: int = 32768):
     """Iterator-of-Series pandas UDF: weights deserialize ONCE per Python
     worker (the prologue before the ``for`` loop), then every Arrow batch

@@ -1221,24 +1221,21 @@ def _harmony_ok(stem: str, sfx: str) -> bool:
 
 
 # Process-wide bounded analysis cache.  Keyed on everything the selection
-# depends on: the token plus its two context flags (sentence-final-before-
-# punct, non-initial).  Web vocabulary is Zipfian, so steady-state hit rate
-# is high; the bound caps worker memory on adversarial inputs.
+# depends on: the token plus its context facts (sentence-final-before-punct,
+# non-initial, previous case, next-is-coordinator, previous-is-punct).  Web
+# vocabulary is Zipfian, so steady-state hit rate is high; the bound caps
+# worker memory on adversarial inputs.
 _ANALYSIS_CACHE: dict = {}
 _ANALYSIS_CACHE_MAX = 500_000
 
 
 def _analyze_one(token: str, sent_final: bool, non_initial: bool,
                  prev_case: str = "", next_coord: bool = False,
-                 prev_is_punct: bool = False, selector=None) -> str:
-    """``selector`` (same interface as HeuristicDisambiguator.select)
-    swaps the candidate-selection model — the trained student ranker
-    (operators/students.py) plugs in here, exactly where the reference
-    swaps its context-GRU scorer (stemmer_morph_analyzer.py predict
-    loop).  Selector results are cached under a distinct tag so the
-    heuristic and student paths never cross-pollinate."""
+                 prev_is_punct: bool = False) -> str:
+    """One token's best analysis: the heuristic disambiguator's pick
+    among the generator's candidates."""
     key = (token, sent_final, non_initial, prev_case, next_coord,
-           prev_is_punct, None if selector is None else id(selector))
+           prev_is_punct)
     hit = _ANALYSIS_CACHE.get(key)
     if hit is None:
         gen, dis = _engine()
@@ -1265,9 +1262,8 @@ def _analyze_one(token: str, sent_final: bool, non_initial: bool,
             right = [] if sent_final else (["ve"] if next_coord else ["x"])
             left = ([":"] if prev_is_punct else [""]) if non_initial else []
             ctx = left + [token] + right
-            pick = (selector or dis.select)(candidates,
-                                            1 if non_initial else 0, ctx,
-                                            prev_case)
+            pick = dis.select(candidates, 1 if non_initial else 0, ctx,
+                              prev_case)
         root, _suffix, tags = candidates[pick]
         if isinstance(tags, str):
             tags = [tags]
@@ -1286,18 +1282,13 @@ _PERIOD_ROOTS = {"yıl", "hafta", "ay", "gün", "sezon", "dönem", "yüzyıl",
                  "sınav", "yarış", "tören", "görüşme", "seçim"}
 
 
-def py_analyze_tokens(tokens: Sequence[str],
-                      selector=None) -> List[str]:
+def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     """Tokenized sentence -> best analysis string per token (the
     ``StemmerAnalyzer.predict`` output contract, CAPITALIZE_PNONS=False).
 
     Left context (previous token's chosen case) feeds the disambiguator's
     homograph preferences (yola çıktı -> çık+Past, not the 'printout'
-    noun); it is part of the bounded cache key.
-
-    ``selector`` swaps the per-token disambiguation model (see
-    ``_analyze_one``); every context-window post-pass below runs
-    unchanged on top of either selector."""
+    noun); it is part of the bounded cache key."""
     out = []
     n = len(tokens)
     # trailing-punct run: every token at or after this position is NON_WORD
@@ -1310,8 +1301,7 @@ def py_analyze_tokens(tokens: Sequence[str],
         next_coord = _next_is_coord(tokens, idx)
         prev_is_punct = idx > 0 and bool(_NON_WORD.match(tokens[idx - 1]))
         analysis = _analyze_one(token, sent_final, idx > 0, prev_case,
-                                next_coord, prev_is_punct,
-                                selector=selector)
+                                next_coord, prev_is_punct)
         if (
             analysis == "aracı+Noun+A3sg+Pnon+Nom"
             and idx > 0

@@ -1596,31 +1596,3 @@ def _upos_sql(a: Column) -> Column:
     ).when(
         (first_tag == "Noun") & (second_tag == "Time"), F.lit("NUM")
     ).otherwise(F.coalesce(mapping[first_tag], F.lit("X")))
-
-
-def upos_label_names() -> List[str]:
-    """The reference's REAL PoS label id order (PoS_label_tokenizer.json:
-    NOUN=1, PUNCT=2, VERB=3, ...; 0 = Keras pad, decoded as X) — trained
-    weights' output units line up with the harness's label ids."""
-    from .. import resources
-
-    return resources.label_list("pos_label", pad="X")
-
-
-def pos_tags_gru(tokens_col: Column | str, spark) -> Column:
-    """PoS via the AutoregressiveTagger model harness (SURVEY W2):
-    broadcast weights, previous-label feedback per token — the executor
-    shape of the reference's SPUContext PoS GRU (spu_context_pos.py:
-    142-157).  Surrogate weights -> deterministic ids; swapping in trained
-    arrays changes only the broadcast payload."""
-    from .model_harness import AutoregressiveTagger, make_autoregressive_tagger_udf
-
-    UPOS_LABEL_SET = upos_label_names()
-    tagger = AutoregressiveTagger.surrogate(
-        vocab=32768, dim=32, hidden=64, n_labels=len(UPOS_LABEL_SET), seed=13
-    )
-    bc = spark.sparkContext.broadcast(tagger.arrays())
-    label_udf = make_autoregressive_tagger_udf(bc)
-    names = F.array(*[F.lit(x) for x in UPOS_LABEL_SET])
-    c = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    return F.transform(label_udf(c), lambda i: F.element_at(names, i + 1))

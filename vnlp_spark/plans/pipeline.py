@@ -2,9 +2,8 @@
 
 documents(url, warc_ts, html, text, lang)
   -> filter lang='tr'                      (predicate pushdown to the scan)
-  -> sentence split + posexplode           (T1; pandas UDF, narrow)
-  -> treebank tokenize                     (T3; pandas UDF, narrow)
-  -> morphology / NER mentions / parse     (M1/M2/M6; pandas UDFs, narrow)
+  -> split / tokenize / morphology /       (T1/T3/M1/M2/M6; ONE fused
+     NER mentions / parse + explode         pandas UDF per document, narrow)
   -> triples                               (native HOFs, narrow)
   -> entities + edges                      (hash aggregates + hash joins —
                                             the ONLY shuffles in the plan)
@@ -33,13 +32,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.sentence_splitter import split_sentences
-from ..functions.tokenizer import treebank_tokenize
-from ..operators.dep_parser import dependency_parse
+from ..functions.sentence_splitter import py_split_sentences, split_sentences
+from ..functions.tokenizer import py_treebank_tokenize, treebank_tokenize
+from ..operators.dep_parser import dependency_parse, py_parse_tokens
 from ..operators.entity_resolution import build_entities, canonical_key
-from ..operators.morphology import analyze_morphology, roots_from_analyses
-from ..operators.ner import ner_mentions
+from ..operators.morphology import (
+    analyze_morphology,
+    py_analyze_tokens,
+    roots_from_analyses,
+)
+from ..operators.ner import py_ner_mentions
 from ..operators.triples import explode_triples
+from ..resources import non_breaking_prefixes
 
 _ANNOTATION_SCHEMA = StructType(
     [
@@ -84,11 +88,6 @@ _DOC_ANNOTATION_SCHEMA = ArrayType(
 
 
 def _annotate_sentence_cached(cache: dict, sentence: str):
-    from ..functions.tokenizer import py_treebank_tokenize
-    from ..operators.dep_parser import py_parse_tokens
-    from ..operators.morphology import py_analyze_tokens
-    from ..operators.ner import py_ner_mentions
-
     hit = cache.get(sentence)
     if hit is None:
         tokens = py_treebank_tokenize(sentence)
@@ -108,9 +107,6 @@ def _annotate_document_udf(texts: pd.Series) -> pd.Series:
     """Document-level full fusion: split + tokenize + morphology + NER +
     parse in ONE python pass per document — a single ArrowEvalPython node
     for the whole annotation layer (callers posexplode the result)."""
-    from ..functions.sentence_splitter import py_split_sentences
-    from ..resources import non_breaking_prefixes
-
     prefixes = non_breaking_prefixes()
     cache: dict = {}
 
@@ -161,182 +157,64 @@ def _ner_label_names() -> list:
     return resources.label_list("ner_label", pad="O")
 
 
-def _make_gru_annotate(sentences: DataFrame, model: str = "gru",
-                       weights=None, sentence_max_len: int | None = None):
-    """The model-harness annotators: NER labels come from a broadcast
-    neural tagger instead of the heuristic rules.
+def _spu_context_annotate(sentences: DataFrame, weights,
+                          sentence_max_len: int | None) -> DataFrame:
+    """NER labels from a broadcast copy of the reference's full 4-branch
+    architecture (operators/spu_context.py): word/left/right/prev-entity
+    GRU stacks over real SentencePiece piece ids, autoregressive decode.
 
-    - ``"gru"``: the AutoregressiveTagger harness (single GRU with
-      previous-label feedback — the executor SHAPE of the reference's
-      loop, spu_context_ner.py:147-161).
-    - ``"spu_context"``: the reference's FULL 4-branch architecture
-      (operators/spu_context.py) — word/left/right/prev-entity GRU stacks
-      over real SentencePiece piece ids, autoregressive decode.
-
-    With surrogate weights the outputs are deterministic but not
-    linguistically meaningful; dropping in trained arrays is the ONLY
-    change left.  Morphology and parsing stay on their own annotators
-    (separate models in the reference too)."""
+    Without ``weights`` the arrays are deterministic surrogates, so the
+    labels are not linguistically meaningful; passing trained arrays is
+    the only change left.  Morphology and parsing stay on their own
+    annotators (separate models in the reference too)."""
     from ..operators.ner import mentions_from_labels
+    from ..operators.spu_context import make_spu_context_tagger_udf
 
-    spark = sentences.sparkSession
     names = _ner_label_names()
-    if model == "spu_context":
-        from ..operators.spu_context import make_spu_context_tagger_udf
-
-        kw = {"n_labels": len(names)}
-        if weights is not None:
-            kw["weights"] = weights
-        if sentence_max_len is not None:
-            kw["sentence_max_len"] = sentence_max_len
-        label_udf = make_spu_context_tagger_udf(spark, **kw)
-    else:
-        from ..operators.model_harness import (
-            AutoregressiveTagger,
-            make_autoregressive_tagger_udf,
-        )
-        from ..operators.subword import parse_spm_model
-
-        tagger = AutoregressiveTagger.surrogate(
-            vocab=32768, dim=32, hidden=64, n_labels=len(names), seed=11
-        )
-        bc = spark.sparkContext.broadcast(tagger.arrays())
-        # featurize through the reference's real 16k SentencePiece
-        # vocabulary (S4) — the id space trained weights would expect
-        spm_bc = spark.sparkContext.broadcast(parse_spm_model())
-        label_udf = make_autoregressive_tagger_udf(bc, spm_pieces_bc=spm_bc)
+    kw = {"n_labels": len(names)}
+    if weights is not None:
+        kw["weights"] = weights
+    if sentence_max_len is not None:
+        kw["sentence_max_len"] = sentence_max_len
+    label_udf = make_spu_context_tagger_udf(sentences.sparkSession, **kw)
     label_names = F.array(*[F.lit(x) for x in names])
-
-    def annotate(df: DataFrame) -> DataFrame:
-        out = (
-            df.withColumn("tokens", treebank_tokenize("sentence"))
-            .withColumn("_lab_ids", label_udf("tokens"))
-            .withColumn(
-                "_labels",
-                F.transform("_lab_ids", lambda i: F.element_at(label_names, i + 1)),
-            )
-            .withColumn("mentions", mentions_from_labels("tokens", "_labels"))
-            .withColumn("analyses", analyze_morphology("tokens"))
-            .withColumn("arcs", dependency_parse("tokens", "analyses"))
+    out = (
+        sentences.withColumn("tokens", treebank_tokenize("sentence"))
+        .withColumn("_lab_ids", label_udf("tokens"))
+        .withColumn(
+            "_labels",
+            F.transform("_lab_ids", lambda i: F.element_at(label_names, i + 1)),
         )
-        return out.select(*df.columns, "tokens", "analyses", "mentions", "arcs")
-
-    return annotate
-
-
-def _make_students_annotate(sentences: DataFrame):
-    """The TRAINED-student annotator (VERDICT r03 #4): morphology via
-    the char-GRU candidate ranker, NER via the distilled 4-branch
-    SPUContext, arcs via the arc+deprel SPUContext students — all four
-    weight payloads broadcast once, models rebuilt once per Python
-    worker, one fused ArrowEvalPython node (same plan shape as the
-    heuristic path).  Weights are the pinned npz trained by
-    scripts/distill_students.py — the ship-trained-weights contract the
-    reference uses for its pickled S3 arrays."""
-    from ..operators.students import load_students
-    from ..operators.subword import parse_spm_model
-
-    spark = sentences.sparkSession
-    payload_bc = spark.sparkContext.broadcast(load_students())
-    pieces_bc = spark.sparkContext.broadcast(parse_spm_model())
-
-    @_F.pandas_udf(_ANNOTATION_SCHEMA)
-    def _students_udf(sentences_s: pd.Series) -> pd.DataFrame:
-        from ..operators.students import (
-            models_for_payloads,
-            py_annotate_tokens_students,
-        )
-        from ..functions.tokenizer import py_treebank_tokenize
-        from ..operators.subword import SpmUnigramEncoder
-
-        # worker-global singletons: model objects + encoder built once
-        # per Python worker, shared across Arrow batches
-        models = models_for_payloads(payload_bc.value)
-        enc = models.setdefault(
-            "_enc", SpmUnigramEncoder(pieces_bc.value))
-        cache = models.setdefault("_cache", {})
-        rows = []
-        for s in sentences_s:
-            if s is None:
-                rows.append((None, None, None, None))
-                continue
-            hit = cache.get(s)
-            if hit is None:
-                toks = py_treebank_tokenize(s)
-                hit = (toks,) + py_annotate_tokens_students(
-                    toks, models, enc)
-                cache[s] = hit
-            rows.append(hit)
-        return pd.DataFrame(
-            rows, columns=["tokens", "analyses", "mentions", "arcs"])
-
-    def annotate(df: DataFrame) -> DataFrame:
-        return df.withColumn("_ann", _students_udf("sentence")).select(
-            *df.columns,
-            F.col("_ann.tokens").alias("tokens"),
-            F.col("_ann.analyses").alias("analyses"),
-            F.col("_ann.mentions").alias("mentions"),
-            F.col("_ann.arcs").alias("arcs"),
-        )
-
-    return annotate
+        .withColumn("mentions", mentions_from_labels("tokens", "_labels"))
+        .withColumn("analyses", analyze_morphology("tokens"))
+        .withColumn("arcs", dependency_parse("tokens", "analyses"))
+    )
+    return out.select(*sentences.columns, "tokens", "analyses", "mentions", "arcs")
 
 
-def annotate_stage(sentences: DataFrame, dedup_sentences: bool = False,
-                   model: str = "heuristic", weights=None,
+def annotate_stage(sentences: DataFrame, model: str = "heuristic", weights=None,
                    sentence_max_len: int | None = None) -> DataFrame:
     """(url, sent_id, sentence) -> + tokens, analyses, mentions, arcs.
 
-    One select chain — Spark fuses the Python evals into a minimal number
-    of Arrow passes, and each column is computed once per sentence row.
+    ``model="heuristic"`` (default) runs the fused per-sentence UDF over
+    the same kernel as ``annotated_documents_stage``; the staged kg_job
+    uses it because it writes ``sentences`` before ``annotated``.
 
-    ``dedup_sentences=True`` annotates each DISTINCT sentence once and
-    hash-joins the results back (annotation is a pure function of the
-    sentence).  Web crawls are heavily boilerplate-duplicated, so at scale
-    this trades two shuffles on uniformly-hashed keys for an N-fold cut in
-    pandas-UDF work — the right default for crawl-shaped corpora; leave it
-    off for unique-heavy text.
-
-    ``model="gru"`` routes NER through the AutoregressiveTagger model
-    harness (broadcast weights); ``model="spu_context"`` through the
-    reference's full 4-branch architecture — both real-weight swap
-    points, proven on the production plan; ``"heuristic"`` (default) is
-    the fused deterministic annotator.
+    ``model="spu_context"`` is the one swap point for real weights:
+    ``annotate_stage(sentences, model="spu_context", weights=...)`` routes
+    NER through the reference's 4-branch architecture with the given
+    arrays (surrogates when ``weights`` is None).
     """
-    if model in ("gru", "spu_context"):
-        annotate = _make_gru_annotate(sentences, model=model, weights=weights,
-                                      sentence_max_len=sentence_max_len)
-    elif model == "students":
-        annotate = _make_students_annotate(sentences)
-    elif model == "heuristic":
-        def annotate(df: DataFrame) -> DataFrame:
-            return df.withColumn("_ann", _annotate_fused_udf("sentence")).select(
-                *df.columns,
-                F.col("_ann.tokens").alias("tokens"),
-                F.col("_ann.analyses").alias("analyses"),
-                F.col("_ann.mentions").alias("mentions"),
-                F.col("_ann.arcs").alias("arcs"),
-            )
-    else:
-        raise ValueError(
-            f"unknown model {model!r}; use 'heuristic', 'gru', "
-            f"'spu_context' or 'students'"
-        )
-
-    if not dedup_sentences:
-        return annotate(sentences)
-    # join on a 64-bit sentence hash, not the sentence string: shuffle keys
-    # shrink from whole sentences to 8 bytes on both exchanges.  xxhash64
-    # collisions at realistic distinct-sentence counts (even 10^10) are
-    # ~1e-2 birthday-probability per corpus and only swap one sentence's
-    # annotations; acceptable for corpus analytics, switch to a 128-bit
-    # key (md5 halves) if exactness is required.
-    keyed = sentences.withColumn("_skey", F.xxhash64("sentence"))
-    distinct = annotate(
-        keyed.select("_skey", "sentence").dropDuplicates(["_skey"])
-    ).drop("sentence")
-    return keyed.join(distinct, on="_skey", how="left").select(
-        *sentences.columns, "tokens", "analyses", "mentions", "arcs"
+    if model == "spu_context":
+        return _spu_context_annotate(sentences, weights, sentence_max_len)
+    if model != "heuristic":
+        raise ValueError(f"unknown model {model!r}; use 'heuristic' or 'spu_context'")
+    return sentences.withColumn("_ann", _annotate_fused_udf("sentence")).select(
+        *sentences.columns,
+        F.col("_ann.tokens").alias("tokens"),
+        F.col("_ann.analyses").alias("analyses"),
+        F.col("_ann.mentions").alias("mentions"),
+        F.col("_ann.arcs").alias("arcs"),
     )
 
 
@@ -478,25 +356,19 @@ class KGResult:
 
 
 def run_kg_pipeline(docs: DataFrame, lang: str | None = "tr", persist: bool = False,
-                    dedup_sentences: bool = False,
-                    entity_join: str = "broadcast",
-                    model: str = "heuristic") -> KGResult:
+                    entity_join: str = "broadcast") -> KGResult:
     """Assemble the full logical plan (lazy — nothing executes here).
+
+    Annotation runs as one fused python stage per document
+    (``annotated_documents_stage``); ``sentences`` is a projection of it.
 
     ``persist=True`` caches the annotated sentences (MEMORY_AND_DISK):
     triples, entities, and edges all branch from that column set, so
     without it each downstream action re-runs the pandas-UDF annotation
     chain — the dominant cost.  On a cluster the same role is played by
     the stage-boundary write (plans.lineage.StageRunner)."""
-    if dedup_sentences or model != "heuristic":
-        sentences = sentences_stage(docs, lang)
-        annotated = annotate_stage(
-            sentences, dedup_sentences=dedup_sentences, model=model
-        )
-    else:
-        # fully-fused single python stage (split + annotate per document)
-        annotated = annotated_documents_stage(docs, lang)
-        sentences = annotated.select("url", "warc_ts", "sent_id", "sentence")
+    annotated = annotated_documents_stage(docs, lang)
+    sentences = annotated.select("url", "warc_ts", "sent_id", "sentence")
     if persist:
         from pyspark import StorageLevel
 
