@@ -1141,7 +1141,7 @@ def _canon_sql(expr: str) -> str:
 
 
 def _triples_sql_body(fixture: str, keep: str = "") -> str:
-    """extract_triples (operators/triples.py:21-72) as DuckDB list
+    """triples_sql (operators/triples.py) as DuckDB list
     lambdas: clause predicates = root/parataxis arcs; first nsubj/obj/obl
     child each (arcs are in idx order, so list order == Spark's
     element_at(filter(...), 1)); keep triples binding >=1 argument."""
@@ -1165,7 +1165,7 @@ trip AS (
 
 
 def _mentions_sql_body() -> str:
-    """mentions_stage (plans/pipeline.py:312-331) as SQL: explode
+    """mentions_stage (plans/pipeline.py) as SQL: explode
     mentions, canon key = head-token root (analysis at last_tok) with
     apostrophe-stripped lowered surface fallback."""
     return f"""
@@ -1188,7 +1188,7 @@ mm AS (
 
 
 def _entities_sql_body() -> str:
-    """build_entities (entity_resolution.py:45-75) as SQL: two-level
+    """build_entities (entity_resolution.py) as SQL: two-level
     canonical-surface aggregation (count-desc, surface-desc tie-break ==
     Spark's max_by struct ordering), ids from the pinned xxhash64 map."""
     return f"""
@@ -1239,7 +1239,7 @@ FROM eids ORDER BY n_mentions DESC, canon_key, type"""
 
 
 def _kg_edges_oracle() -> str:
-    """edges_stage (pipeline.py:344-411) as SQL: resolve subj/obj via
+    """edges_stage (pipeline.py) as SQL: resolve subj/obj via
     canonical surface keys against the entity table (join on canon_key
     only — type fan-out is part of the semantics), keep edges with >=1
     resolved endpoint."""

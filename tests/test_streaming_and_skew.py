@@ -134,7 +134,7 @@ def test_stateful_entity_totals_accumulate(spark, landing_dir):
     batch = (
         annotated_documents_stage(spark.read.parquet(landing_dir), "tr")
         .select(F.explode("mentions").alias("m"))
-        .select(canonical_key(F.col("m.mention")).alias("canon_key"))
+        .select(canonical_key("m.mention").alias("canon_key"))
         .groupBy("canon_key").count()
     ).collect()
     expect = {r["canon_key"]: r["count"] for r in batch}

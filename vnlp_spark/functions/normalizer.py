@@ -33,6 +33,11 @@ def turkish_lower(col: Column | str) -> Column:
     return F.lower(F.translate(F.col(col) if isinstance(col, str) else col, _TR_UPPER, _TR_LOWER))
 
 
+def turkish_lower_sql(expr: str) -> str:
+    """``turkish_lower`` as Spark SQL text over the expression ``expr``."""
+    return f"lower(translate({expr}, '{_TR_UPPER}', '{_TR_LOWER}'))"
+
+
 def py_turkish_lower(text: str) -> str:
     for k, v in zip(_TR_UPPER, _TR_LOWER):
         text = text.replace(k, v)

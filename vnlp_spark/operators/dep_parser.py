@@ -55,8 +55,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .morphology import py_analyze_tokens, to_lower
-from .pos import _GRAMMAT_ADPS, _MATERIAL_NOUNS, upos_from_analysis
+from .morphology import (
+    _GRAMMAT_ADPS,
+    _MATERIAL_NOUNS,
+    py_analyze_tokens,
+    to_lower,
+    upos_from_analysis,
+)
 
 MAX_TOKENS = 40  # reference hard cap (spu_context_dp.py:159-162)
 

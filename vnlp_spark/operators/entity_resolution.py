@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.normalizer import turkish_lower
+from ..functions.normalizer import turkish_lower, turkish_lower_sql
 
 
 # generic organizational HEAD words (closed class): a multiword entity
@@ -51,28 +51,36 @@ GENERIC_ORG_HEADS = frozenset({
 })
 
 
-def canonical_key(mention_col: Column | str, analyses_root: Column | str | None = None) -> Column:
-    """Mention surface -> canonical entity key.  The head (last) word,
-    apostrophe-clitic-stripped and lowered; the morphological root wins
-    over the head surface when supplied — EXCEPT when the head word is a
-    generic organizational head (GENERIC_ORG_HEADS) of a multiword
-    surface, where the key is the clitic-stripped lowered FULL surface
-    on both paths (the root path must not fragment from the surface
-    path: edge endpoints carry no analyses)."""
-    m = F.col(mention_col) if isinstance(mention_col, str) else mention_col
-    words = F.split(m, " ")
-    nw = F.size(words)
-    head = F.element_at(words, -1)
-    head_key = turkish_lower(F.split(head, "['’]")[0])
-    full_key = F.concat(
-        turkish_lower(F.concat_ws(" ", F.slice(words, 1, nw - 1))),
-        F.lit(" "), head_key)
-    generic = (nw > 1) & head_key.isin(*GENERIC_ORG_HEADS)
-    surface_key = F.when(generic, full_key).otherwise(head_key)
-    if analyses_root is None:
-        return surface_key
-    r = F.col(analyses_root) if isinstance(analyses_root, str) else analyses_root
-    return F.when(generic, full_key).otherwise(F.coalesce(r, head_key))
+# the literal IN list, built once (a Column ``isin`` sends one gateway
+# call per head word on every plan build)
+_GENERIC_HEADS_IN = ", ".join(f"'{h}'" for h in sorted(GENERIC_ORG_HEADS))
+# the regex ['’] as a SQL literal (backslash escapes are on by default)
+_CLITIC_RE = r"'[\'’]'"
+
+
+def canonical_key_sql(mention: str, root: str | None = None) -> str:
+    """SQL text: mention surface -> canonical entity key.  The head (last)
+    word, apostrophe-clitic-stripped and lowered; the morphological
+    ``root`` wins over the head surface when supplied — EXCEPT when the
+    head word is a generic organizational head (GENERIC_ORG_HEADS) of a
+    multiword surface, where the key is the clitic-stripped lowered FULL
+    surface on both paths (the root path must not fragment from the
+    surface path: edge endpoints carry no analyses).
+
+    ``mention`` and ``root`` are SQL expressions over the caller's
+    columns (``"mention"``, ``"m.mention"``, ``"subj"``)."""
+    words = f"split({mention}, ' ')"
+    head_key = turkish_lower_sql(f"split(element_at({words}, -1), {_CLITIC_RE})[0]")
+    non_head = turkish_lower_sql(f"concat_ws(' ', slice({words}, 1, size({words}) - 1))")
+    full_key = f"concat({non_head}, ' ', {head_key})"
+    generic = f"size({words}) > 1 AND {head_key} IN ({_GENERIC_HEADS_IN})"
+    other = head_key if root is None else f"coalesce({root}, {head_key})"
+    return f"CASE WHEN {generic} THEN {full_key} ELSE {other} END"
+
+
+def canonical_key(mention: str, root: str | None = None) -> Column:
+    """``canonical_key_sql`` as a Column, for DataFrame-API callers."""
+    return F.expr(canonical_key_sql(mention, root))
 
 
 def build_entities(mentions_df: DataFrame, key_col: str = "canon_key",
@@ -83,25 +91,22 @@ def build_entities(mentions_df: DataFrame, key_col: str = "canon_key",
     already-small (key, surface) table.  No window functions, no sort of
     the full mention set."""
     per_surface = mentions_df.groupBy(key_col, label_col, surface_col).agg(
-        F.count(F.lit(1)).alias("surface_cnt")
-    )
+        F.expr("count(1) AS surface_cnt"))
     return (
         per_surface.groupBy(key_col, label_col)
         .agg(
             # struct ordering makes the count-tie deterministic (max
             # surface wins) — a bare max_by would pick whichever surface
             # the partial-aggregate merge order happened to see first
-            F.max_by(
-                surface_col, F.struct(F.col("surface_cnt"), F.col(surface_col))
-            ).alias("canonical"),
-            F.sum("surface_cnt").alias("n_mentions"),
+            F.expr(f"max_by({surface_col}, struct(surface_cnt, {surface_col})) AS canonical"),
+            F.expr("sum(surface_cnt) AS n_mentions"),
         )
-        .select(
-            F.xxhash64(F.col(key_col), F.col(label_col)).alias("entity_id"),
-            F.col(key_col).alias("canon_key"),
-            F.col("canonical"),
-            F.col(label_col).alias("type"),
-            F.col("n_mentions"),
+        .selectExpr(
+            f"xxhash64({key_col}, {label_col}) AS entity_id",
+            f"{key_col} AS canon_key",
+            "canonical",
+            f"{label_col} AS type",
+            "n_mentions",
         )
     )
 

@@ -22,7 +22,28 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
-from .morphology import _GENUINE_IN_FINAL_STEMS, py_analyze_tokens
+from .dep_parser import (
+    _CAP_RE,
+    _DEGREE_ADVS,
+    _SPATIAL_ROOTS,
+    _TEMPORAL_ADVS,
+    _TEMPORAL_ROOTS,
+    _TITLES,
+    _TRANSITIVE_ROOTS,
+    _case_of,
+    _is_possessed,
+    _typed_gazetteer,
+)
+from .morphology import (
+    _GENUINE_IN_FINAL_STEMS,
+    _GRAMMAT_ADPS,
+    _LOAN_I_ACC_ADJS,
+    _MATERIAL_NOUNS,
+    _MORPH_TO_UPOS,
+    py_analyze_tokens,
+    to_lower,
+    upos_from_analysis,
+)
 
 # lexicalized terrain/ground -lIk ADJECTIVES (dictionary adjectives, not
 # productive abstract -lIk nouns like işsizlik/kuraklık): attributive
@@ -31,56 +52,6 @@ _TERRAIN_LIK_ADJS = {
     "ormanlık", "kayalık", "çamlık", "sazlık", "kumluk", "taşlık",
     "çalılık", "ağaçlık", "fundalık", "makilik", "bataklık", "yeşillik",
 }
-
-# material nouns modify as NOUN+nmod in UD (cam kavanoz, ahşap ev,
-# demir kapı) even where the lexicon also lists an Adj reading — keep
-# them out of the noun->ADJ attributive rewrites
-_MATERIAL_NOUNS = {
-    "cam", "demir", "çelik", "ahşap", "taş", "altın", "gümüş", "bakır",
-    "mermer", "beton", "plastik", "deri", "yün", "ipek", "tahta",
-    "kağıt", "naylon", "porselen", "kadife", "kömür", "maden",
-    "ceviz", "zeytin", "bez",
-    # offspring/kind attributives share the mechanism (YAVRU levrekleri
-    # kafeslere dağıttı — yavru modifies as NOUN+nmod per TDK's noun
-    # listing, like the material class)
-    "yavru",
-    # degree-juxtaposition nouns share the mechanism (REKOR ziyaretçi
-    # ağırladı, rekor katılım)
-    "rekor",
-}
-
-_MORPH_TO_UPOS = {
-    "Noun": "NOUN",
-    "Adj": "ADJ",
-    "Adverb": "ADV",
-    "Verb": "VERB",
-    "Pron": "PRON",
-    "Det": "DET",
-    "Conj": "CCONJ",
-    "Postp": "ADP",
-    "Ques": "AUX",
-    "Interj": "INTJ",
-    "Num": "NUM",
-    "Punc": "PUNCT",
-    "Dup": "X",
-    "Unknown": "NOUN",  # unanalyzable content words are usually nominals
-}
-
-
-def upos_from_analysis(analysis: str) -> str:
-    """Morph analysis string -> UD UPOS.  The PoS is the first tag of the
-    LAST derivation group (after the final ^DB), with Prop -> PROPN
-    (reference get_pos_from_analysis, _yildiz_analyzer.py:531-535)."""
-    tags_str = analysis.split("+", 1)[1] if "+" in analysis else analysis
-    if "^" in tags_str:
-        tags_str = tags_str[tags_str.rfind("^") + 4 :]  # skip '^DB+'
-    tags = tags_str.split("+")
-    if tags[0] == "Noun" and len(tags) > 1 and tags[1] == "Prop":
-        return "PROPN"
-    if tags[0] == "Noun" and len(tags) > 1 and tags[1] == "Time":
-        return "NUM"  # digit tokens analyzed Noun+Time (29, 2024)
-    return _MORPH_TO_UPOS.get(tags[0], "X")
-
 
 @lru_cache(maxsize=200_000)
 def _readings(token: str) -> frozenset:
@@ -199,30 +170,6 @@ _LEX_PRONOUNS = {
     "onlar", "onları", "onlara", "onların", "onlarla", "onlardan",
 }
 
-# grammaticalized postpositions: frozen possessed-case nominals that
-# function as ADP after a bare/genitive complement (yağmur YÜZÜNDEN iptal
-# edildi, çalışmaları SAYESİNDE kazandı) — UD Turkish treebanks tag the
-# postpositional use ADP + case
-_GRAMMAT_ADPS = {
-    "yüzünden", "sayesinde", "uğruna", "hakkında", "boyunca",
-    # possessed-instrumental members of the same class (blind-2 showed
-    # the class was under-enumerated: nedeniyle)
-    "nedeniyle", "sebebiyle", "dolayısıyla", "aracılığıyla", "sonucunda",
-    "kapsamında", "çerçevesinde", "doğrultusunda",
-    # blind-3 confirmed the class was still under-enumerated (ardından
-    # after a genitive complement); remaining productive members
-    "ardından", "uyarınca", "gereğince", "itibarıyla", "itibariyle",
-    "adına", "açısından", "bakımından",
-    # blind-7 confirmed the temporal sub-class was still missing its
-    # possessed-locative members (Kaza SONRASINDA yol kapatıldı — the
-    # instrumental twins nedeniyle/sonucunda were listed, the locatives
-    # were not)
-    "sonrasında", "öncesinde", "sırasında", "esnasında",
-}
-# NOTE: "tarafından" is NOT in the list — this repo's gold convention
-# (tuning 104, blind-4) keeps the agentive passive as NOUN+obl with an
-# nmod agent, the UD-BOUN treatment
-
 # frequent adjectives the reference stem list tags Noun-only (net,
 # direkt, kalabalık): the vendored lexicon cannot be edited (candidate-
 # generator parity), so the ADJUSTED-POS layer supplies the adjectival
@@ -320,15 +267,6 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     clusters): temporal/degree adverbs read as nominals, case-marked
     participles as subordinate verbs, noun/adjective homographs resolved
     by the following token.  Shared by py_pos_tags and the parser."""
-    from .dep_parser import (
-        _CAP_RE, _DEGREE_ADVS, _TEMPORAL_ADVS, _TITLES, _case_of,
-        _is_possessed, _typed_gazetteer,
-    )
-    from .dep_parser import _TEMPORAL_ROOTS as _TEMPORAL_ROOTS_POS
-    from .dep_parser import _TRANSITIVE_ROOTS as _TRANS_ROOTS_POS
-    from .dep_parser import _SPATIAL_ROOTS as _SPATIAL_ROOTS_POS
-    from .morphology import to_lower
-
     n = len(tokens)
     out = list(upos)
     has_finite_verb = any(
@@ -455,7 +393,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             # (SON yıllarda turizm hızla gelişti)
             and any(
                 out[j] == "VERB"
-                and (analyses[j].split("+", 1)[0] in _TRANS_ROOTS_POS
+                and (analyses[j].split("+", 1)[0] in _TRANSITIVE_ROOTS
                      or "Caus" in set(analyses[j]
                                       .replace("^", "+").split("+")))
                 for j in range(i + 2, n)
@@ -639,7 +577,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                 # case-marked NON-temporal noun is a verb argument and
                 # erken is the manner adverb (erken YOLA çıktı)
                 and (analyses[i + 1].split("+", 1)[0]
-                     in _TEMPORAL_ROOTS_POS
+                     in _TEMPORAL_ROOTS
                      or analyses[i + 1].split("+", 1)[0]
                      in ("yaş", "saat", "dönem", "vakit", "tarih")
                      or _case_of(analyses[i + 1]) in ("Nom", ""))
@@ -718,7 +656,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
         elif (
             low in ("gelecek", "önümüzdeki", "geçtiğimiz")
             and i + 1 < n
-            and analyses[i + 1].split("+", 1)[0] in _TEMPORAL_ROOTS_POS
+            and analyses[i + 1].split("+", 1)[0] in _TEMPORAL_ROOTS
         ):
             # lexicalized temporal modifiers (gelecek ay, önümüzdeki hafta)
             out[i] = "ADJ"
@@ -868,7 +806,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                     out[j] in ("NOUN", "PROPN", "PRON")
                     and _case_of(analyses[j]) in ("Nom", "")
                     and analyses[j].split("+", 1)[0]
-                    not in _TEMPORAL_ROOTS_POS
+                    not in _TEMPORAL_ROOTS
                     for j in range(0, i)
                 )
             )
@@ -1004,7 +942,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                          for j in range(i + 2, n))))
             # a possessed SPATIAL relational host takes the bare noun as
             # its nmod, not an amod (kağıt ÜZERİNDE kusursuz görünüyor)
-            and not (analyses[i + 1].split("+", 1)[0] in _SPATIAL_ROOTS_POS
+            and not (analyses[i + 1].split("+", 1)[0] in _SPATIAL_ROOTS
                      and "P3sg" in set(analyses[i + 1]
                                        .replace("^", "+").split("+")))
             and "Agt" not in tags
@@ -1091,7 +1029,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                  # nouns (Sözcü the paper vs sözcü 'spokesperson') read
                  # as the common noun sentence-initially before
                  # lowercase text
-                 or low in _TEMPORAL_ROOTS_POS
+                 or low in _TEMPORAL_ROOTS
                  or _agentive_common(low))
             and _common_noun_stem(low)
         ):
@@ -1166,7 +1104,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             and _CAP_RE.match(tokens[i])
             and to_lower(tokens[i]).split("'")[0] in _typed_gazetteer()[1]
             and to_lower(tokens[i]) not in _TITLES
-            and not (i == 0 and (to_lower(tokens[i]) in _TEMPORAL_ROOTS_POS
+            and not (i == 0 and (to_lower(tokens[i]) in _TEMPORAL_ROOTS
                                  or _agentive_common(to_lower(tokens[i]))))
             # a SENTENCE-INITIAL gazetteer homograph whose common-noun
             # reading feeds a lowercase izafet head keeps the common
@@ -1208,25 +1146,21 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     # with an otherwise objectless transitive finite verb is the hidden
     # accusative object (erimiş MADENİ kalıba döktü = maden+Acc) —
     # mirror of the parser's upos/eff_case re-read
-    from .morphology import _LOAN_I_ACC_ADJS as _LOAN_I_POS
-
     for i in range(1, n - 1):
         if (
             out[i] == "ADJ"
             and analyses[i].count("+") == 1
             and analyses[i].endswith("+Adj")
-            and to_lower(tokens[i]) in _LOAN_I_POS
+            and to_lower(tokens[i]) in _LOAN_I_ACC_ADJS
             and out[i + 1] in ("NOUN", "PROPN")
             and _case_of(analyses[i + 1]) in ("Dat", "Loc", "Abl", "Ins")
             and not (i + 2 < n and out[i + 2] == "ADP")
         ):
-            from .dep_parser import _TRANSITIVE_ROOTS as _TR_POS
-
             v = next((j for j in range(i + 1, n) if out[j] == "VERB"),
                      None)
             if (
                 v is not None
-                and analyses[v].split("+", 1)[0] in _TR_POS
+                and analyses[v].split("+", 1)[0] in _TRANSITIVE_ROOTS
                 # bare-object ACTIVITY verbs need no object: the loan-î
                 # word before their oblique stays attributive (resmi
                 # TATİLDE çalıştı)
@@ -1293,7 +1227,6 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     # non-temporal nominal is attributive outright (Bu anlaşma TARİHİ
     # bir adımdır) — mirror of the parser's re-read; "toplantı tarihi
     # bir gün önce" keeps the date reading (gün is temporal)
-    from .dep_parser import _TEMPORAL_ROOTS as _TEMP_ROOTS_M
     for i in range(1, n - 2):
         if (
             out[i] == "NOUN"
@@ -1305,7 +1238,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             and "bare_adj" in _readings(tokens[i])
             and to_lower(tokens[i + 1]) == "bir"
             and out[i + 2] in ("NOUN", "PROPN")
-            and analyses[i + 2].split("+", 1)[0] not in _TEMP_ROOTS_M
+            and analyses[i + 2].split("+", 1)[0] not in _TEMPORAL_ROOTS
             and out[i - 1] in ("NOUN", "PROPN", "PRON", "NUM")
         ):
             out[i] = "ADJ"

@@ -5,86 +5,55 @@ predicate (root / parataxis verb) is mined for its ``nsubj`` / ``obj`` /
 ``obl`` children (SURVEY §2.9 M6 mapping).  Entity types come from NER
 mention spans covering the argument token.
 
-Everything here is **native Spark higher-order functions** over the
+The extractor is **one Spark SQL higher-order expression** over the
 array<struct> columns produced by the annotator UDFs — no Python in the
 extraction itself, so it stays in Tungsten and adds zero Python round
-trips after the annotation pass.
+trips after the annotation pass.  Building it as SQL text also keeps the
+driver cheap: the whole expression crosses to the JVM as one string
+instead of one gateway call per Column-builder node.  The DuckDB replica
+in ``__spark_entry__._triples_sql_body`` states the same semantics.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 _PRED_RELS = ("root", "parataxis")
 
 
-def extract_triples(arcs_col: Column | str, mentions_col: Column | str) -> Column:
-    """arcs array<struct<idx,token,head,deprel>> + mentions
+def triples_sql(arcs: str = "arcs", mentions: str = "mentions") -> str:
+    """SQL text: arcs array<struct<idx,token,head,deprel>> + mentions
     array<struct<mention,label,first_tok,last_tok>>
     -> array<struct<subj,pred,obj,obl,subj_type,obj_type>>.
 
     One struct per clause predicate; subj/obj may be null (Turkish is
     pro-drop — the reference's golden parse yields subject-less triples).
     """
-    arcs = F.col(arcs_col) if isinstance(arcs_col, str) else arcs_col
-    mentions = F.col(mentions_col) if isinstance(mentions_col, str) else mentions_col
 
-    def child(p, rel):
+    def child(rel: str) -> str:
         # try_element_at: ANSI-safe null when the predicate has no such child
-        return F.try_element_at(
-            F.filter(arcs, lambda x: (x["head"] == p["idx"]) & (x["deprel"] == rel)),
-            F.lit(1),
-        )
+        return (f"try_element_at(filter({arcs}, "
+                f"x -> x.head = p.idx AND x.deprel = '{rel}'), 1)")
 
-    def mention_label(tok_struct):
+    def mention_label(tok: str) -> str:
         # token idx is 1-based; mention spans are 0-based token positions
-        return F.try_element_at(
-            F.filter(
-                mentions,
-                lambda m: (m["first_tok"] <= tok_struct["idx"] - 1)
-                & (m["last_tok"] >= tok_struct["idx"] - 1),
-            ),
-            F.lit(1),
-        )["label"]
+        return (f"try_element_at(filter({mentions}, m -> m.first_tok <= {tok}.idx - 1 "
+                f"AND m.last_tok >= {tok}.idx - 1), 1).label")
 
-    def one(p):
-        subj = child(p, "nsubj")
-        obj = child(p, "obj")
-        obl = child(p, "obl")
-        return F.struct(
-            subj["token"].alias("subj"),
-            p["token"].alias("pred"),
-            obj["token"].alias("obj"),
-            obl["token"].alias("obl"),
-            mention_label(subj).alias("subj_type"),
-            mention_label(obj).alias("obj_type"),
-            subj["idx"].alias("subj_idx"),
-            obj["idx"].alias("obj_idx"),
-        )
-
-    preds = F.filter(
-        arcs, lambda a: a["deprel"].isin(*_PRED_RELS)
-    )
-    triples = F.transform(preds, one)
+    rels = ", ".join(f"'{r}'" for r in _PRED_RELS)
+    # bind each predicate's children once, then read token and type off them
+    clauses = (f"transform(filter({arcs}, a -> a.deprel IN ({rels})), p -> named_struct("
+               f"'pred', p.token, 's', {child('nsubj')}, 'o', {child('obj')}, "
+               f"'l', {child('obl')}))")
+    one = (f"named_struct('subj', c.s.token, 'pred', c.pred, 'obj', c.o.token, "
+           f"'obl', c.l.token, 'subj_type', {mention_label('c.s')}, "
+           f"'obj_type', {mention_label('c.o')})")
     # keep clauses that bind at least one argument
-    return F.filter(
-        triples, lambda t: t["subj"].isNotNull() | t["obj"].isNotNull() | t["obl"].isNotNull()
-    )
+    return (f"filter(transform({clauses}, c -> {one}), "
+            "t -> t.subj IS NOT NULL OR t.obj IS NOT NULL OR t.obl IS NOT NULL)")
 
 
 def explode_triples(df: DataFrame, arcs_col: str = "arcs", mentions_col: str = "mentions",
                     keep_cols: tuple = ("url", "sent_id")) -> DataFrame:
     """Sentence-level df -> flat triples table
     (keep_cols..., subj, pred, obj, obl, subj_type, obj_type)."""
-    t = df.select(
-        *keep_cols, F.explode(extract_triples(arcs_col, mentions_col)).alias("t")
-    )
-    return t.select(
-        *keep_cols,
-        F.col("t.subj").alias("subj"),
-        F.col("t.pred").alias("pred"),
-        F.col("t.obj").alias("obj"),
-        F.col("t.obl").alias("obl"),
-        F.col("t.subj_type").alias("subj_type"),
-        F.col("t.obj_type").alias("obj_type"),
-    )
+    return df.selectExpr(*keep_cols, f"inline({triples_sql(arcs_col, mentions_col)})")

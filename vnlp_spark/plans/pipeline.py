@@ -3,8 +3,9 @@
 documents(url, warc_ts, html, text, lang)
   -> filter lang='tr'                      (predicate pushdown to the scan)
   -> split / tokenize / morphology /       (T1/T3/M1/M2/M6; ONE fused
-     NER mentions / parse + explode         pandas UDF per document, narrow)
-  -> triples                               (native HOFs, narrow)
+     NER mentions / parse + inline          Arrow UDF per document, narrow)
+  -> triples                               (one SQL higher-order
+                                            expression, native, narrow)
   -> entities + edges                      (hash aggregates + hash joins —
                                             the ONLY shuffles in the plan)
 
@@ -14,16 +15,24 @@ The entity aggregate shuffles (key, type) pairs (vocabulary-sized), and
 the edge join resolves subj/obj via broadcast when entities are small or
 a salted hash join otherwise.  Column pruning keeps `html` out of every
 scan (only `text` is read).
+
+Boundary costs are kept small on both sides.  On the driver, each
+relational stage is built from SQL expression strings (``selectExpr`` /
+``F.expr``), so a plan costs a few hundred py4j round trips instead of
+one per Column-builder node.  On the workers, the annotation UDFs take
+and return Arrow arrays directly: the kernel's tuples become one
+``pa.array(rows, type=...)`` call, with no pandas conversion of the
+nested ``array<struct<...>>`` output.
 """
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-import pandas as pd
-from pyspark.sql import functions as _F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -35,12 +44,8 @@ from pyspark.sql.types import (
 from ..functions.sentence_splitter import py_split_sentences, split_sentences
 from ..functions.tokenizer import py_treebank_tokenize, treebank_tokenize
 from ..operators.dep_parser import dependency_parse, py_parse_tokens
-from ..operators.entity_resolution import build_entities, canonical_key
-from ..operators.morphology import (
-    analyze_morphology,
-    py_analyze_tokens,
-    roots_from_analyses,
-)
+from ..operators.entity_resolution import build_entities, canonical_key_sql, salted_join
+from ..operators.morphology import analyze_morphology, py_analyze_tokens
 from ..operators.ner import py_ner_mentions
 from ..operators.triples import explode_triples
 from ..resources import non_breaking_prefixes
@@ -87,6 +92,10 @@ _DOC_ANNOTATION_SCHEMA = ArrayType(
 )
 
 
+_ANNOTATION_ARROW_TYPE = to_arrow_type(_ANNOTATION_SCHEMA)
+_DOC_ANNOTATION_ARROW_TYPE = to_arrow_type(_DOC_ANNOTATION_SCHEMA)
+
+
 def _annotate_sentence_cached(cache: dict, sentence: str):
     hit = cache.get(sentence)
     if hit is None:
@@ -102,39 +111,38 @@ def _annotate_sentence_cached(cache: dict, sentence: str):
     return hit
 
 
-@_F.pandas_udf(_DOC_ANNOTATION_SCHEMA)
-def _annotate_document_udf(texts: pd.Series) -> pd.Series:
+@arrow_udf(_DOC_ANNOTATION_SCHEMA)
+def _annotate_document_udf(texts: pa.Array) -> pa.Array:
     """Document-level full fusion: split + tokenize + morphology + NER +
     parse in ONE python pass per document — a single ArrowEvalPython node
-    for the whole annotation layer (callers posexplode the result)."""
+    for the whole annotation layer (callers inline the result).  The
+    kernel's tuples go straight into one Arrow array."""
     prefixes = non_breaking_prefixes()
     cache: dict = {}
-
-    def one(text):
-        if text is None:
-            return None
-        out = []
-        for sid, sent in enumerate(py_split_sentences(text, prefixes)):
-            out.append((sid, sent) + _annotate_sentence_cached(cache, sent))
-        return out
-
-    return texts.map(one)
+    rows = [
+        None if text is None else [
+            (sid, sent) + _annotate_sentence_cached(cache, sent)
+            for sid, sent in enumerate(py_split_sentences(text, prefixes))
+        ]
+        for text in texts.to_pylist()
+    ]
+    return pa.array(rows, type=_DOC_ANNOTATION_ARROW_TYPE)
 
 
-@_F.pandas_udf(_ANNOTATION_SCHEMA)
-def _annotate_fused_udf(sentences: pd.Series) -> pd.DataFrame:
+@arrow_udf(_ANNOTATION_SCHEMA)
+def _annotate_fused_udf(sentences: pa.Array) -> pa.Array:
     """Fused annotator: tokenize + morphology + NER + parse in ONE python
-    pass.  Four chained pandas UDFs would be four ArrowEvalPython nodes —
-    four worker pools and three JVM round-trips of nested arrays per row;
+    pass.  Four chained UDFs would be four ArrowEvalPython nodes — four
+    worker pools and three JVM round-trips of nested arrays per row;
     fusing them keeps intermediates in Python and cuts the per-row Arrow
     traffic to one in (string) and one out (struct).  Measured ~3x on the
     annotation stage and restores near-linear core scaling."""
     cache: dict = {}
     rows = [
         (None, None, None, None) if s is None else _annotate_sentence_cached(cache, s)
-        for s in sentences
+        for s in sentences.to_pylist()
     ]
-    return pd.DataFrame(rows, columns=["tokens", "analyses", "mentions", "arcs"])
+    return pa.array(rows, type=_ANNOTATION_ARROW_TYPE)
 
 
 def sentences_stage(docs: DataFrame, lang: str | None = "tr") -> DataFrame:
@@ -209,13 +217,8 @@ def annotate_stage(sentences: DataFrame, model: str = "heuristic", weights=None,
         return _spu_context_annotate(sentences, weights, sentence_max_len)
     if model != "heuristic":
         raise ValueError(f"unknown model {model!r}; use 'heuristic' or 'spu_context'")
-    return sentences.withColumn("_ann", _annotate_fused_udf("sentence")).select(
-        *sentences.columns,
-        F.col("_ann.tokens").alias("tokens"),
-        F.col("_ann.analyses").alias("analyses"),
-        F.col("_ann.mentions").alias("mentions"),
-        F.col("_ann.arcs").alias("arcs"),
-    )
+    return sentences.select("*", _annotate_fused_udf("sentence").alias("_ann")).selectExpr(
+        *sentences.columns, "_ann.*")
 
 
 def annotated_documents_stage(docs: DataFrame, lang: str | None = "tr") -> DataFrame:
@@ -224,18 +227,7 @@ def annotated_documents_stage(docs: DataFrame, lang: str | None = "tr") -> DataF
     Same output columns as sentences_stage + annotate_stage."""
     if lang is not None:
         docs = docs.filter(F.col("lang") == lang)
-    return docs.select(
-        "url", "warc_ts", F.explode(_annotate_document_udf("text")).alias("_ann")
-    ).select(
-        "url",
-        "warc_ts",
-        F.col("_ann.sent_id").alias("sent_id"),
-        F.col("_ann.sentence").alias("sentence"),
-        F.col("_ann.tokens").alias("tokens"),
-        F.col("_ann.analyses").alias("analyses"),
-        F.col("_ann.mentions").alias("mentions"),
-        F.col("_ann.arcs").alias("arcs"),
-    )
+    return docs.select("url", "warc_ts", F.inline(_annotate_document_udf("text")))
 
 
 def triples_stage(annotated: DataFrame) -> DataFrame:
@@ -244,25 +236,21 @@ def triples_stage(annotated: DataFrame) -> DataFrame:
 
 
 def mentions_stage(annotated: DataFrame) -> DataFrame:
-    """-> flat mention rows with canonical keys (roots preferred)."""
-    m = annotated.select(
+    """-> flat mention rows with canonical keys (roots preferred): the
+    head token's root is the analysis at ``last_tok`` up to its first
+    ``+``."""
+    head_root = "split(try_element_at(analyses, m.last_tok + 1), '[+]')[0]"
+    return annotated.selectExpr(
+        "url", "sent_id", "analyses", "explode(mentions) AS m"
+    ).selectExpr(
         "url",
         "sent_id",
-        F.col("tokens"),
-        F.col("analyses"),
-        F.explode("mentions").alias("m"),
-    ).select(
-        "url",
-        "sent_id",
-        F.col("m.mention").alias("mention"),
-        F.col("m.label").alias("label"),
-        F.col("m.first_tok").alias("first_tok"),
-        F.col("m.last_tok").alias("last_tok"),
-        F.try_element_at(
-            roots_from_analyses("analyses"), F.col("m.last_tok") + 1
-        ).alias("head_root"),
+        "m.mention AS mention",
+        "m.label AS label",
+        "m.first_tok AS first_tok",
+        "m.last_tok AS last_tok",
+        f"{canonical_key_sql('m.mention', head_root)} AS canon_key",
     )
-    return m.withColumn("canon_key", canonical_key("mention", "head_root")).drop("head_root")
 
 
 def entities_stage(mentions: DataFrame) -> DataFrame:
@@ -301,8 +289,6 @@ def edges_stage(
       call sites where `entities` is materialized; counting a lazy
       entities plan would execute the full annotation chain twice.
     """
-    from ..operators.entity_resolution import salted_join
-
     mode = entity_join
     if mode == "auto":
         n = entities_rows if entities_rows is not None else entities.count()
@@ -315,16 +301,14 @@ def edges_stage(
         ent = F.broadcast(ent)
 
     # subj/obj surfaces resolved via their canon keys against entities
-    t = triples
-    for arg in ("subj", "obj"):
-        key = canonical_key(F.coalesce(F.col(arg), F.lit("")))
-        t = t.withColumn(f"{arg}_key", F.when(F.col(arg).isNotNull(), key))
+    t = triples.selectExpr("*", *(
+        f"CASE WHEN {arg} IS NOT NULL THEN {canonical_key_sql(arg)} END AS {arg}_key"
+        for arg in ("subj", "obj")
+    ))
 
     def rename(side: str):
-        return (
-            ent.withColumnRenamed("entity_id", f"{side}_id")
-            .withColumnRenamed("canon_key", f"{side}_key")
-            .withColumnRenamed("type", f"{side}_etype")
+        return ent.selectExpr(
+            f"entity_id AS {side}_id", f"canon_key AS {side}_key", f"type AS {side}_etype"
         )
 
     if mode == "broadcast":
@@ -334,15 +318,8 @@ def edges_stage(
     else:
         e = salted_join(t, rename("subj"), key="subj_key", n_salts=n_salts, how="left")
         e = salted_join(e, rename("obj"), key="obj_key", n_salts=n_salts, how="left")
-    return e.select(
-        "subj_id",
-        F.col("subj"),
-        "pred",
-        "obj_id",
-        F.col("obj"),
-        "url",
-        "warc_ts",
-    ).filter(F.col("subj_id").isNotNull() | F.col("obj_id").isNotNull())
+    return e.select("subj_id", "subj", "pred", "obj_id", "obj", "url", "warc_ts").where(
+        "subj_id IS NOT NULL OR obj_id IS NOT NULL")
 
 
 @dataclass
@@ -364,7 +341,7 @@ def run_kg_pipeline(docs: DataFrame, lang: str | None = "tr", persist: bool = Fa
 
     ``persist=True`` caches the annotated sentences (MEMORY_AND_DISK):
     triples, entities, and edges all branch from that column set, so
-    without it each downstream action re-runs the pandas-UDF annotation
+    without it each downstream action re-runs the Arrow-UDF annotation
     chain — the dominant cost.  On a cluster the same role is played by
     the stage-boundary write (plans.lineage.StageRunner)."""
     annotated = annotated_documents_stage(docs, lang)

@@ -24,6 +24,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..operators.entity_resolution import canonical_key_sql
+from ..operators.triples import explode_triples
+
 WEB_PAGE_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -47,8 +50,6 @@ def stream_annotated(pages: DataFrame, lang: str | None = "tr") -> DataFrame:
 def stream_triples(pages: DataFrame, lang: str | None = "tr") -> DataFrame:
     """Streaming documents -> (url, warc_ts, sent_id, subj, pred, obj, ...)
     in append mode (no aggregation state)."""
-    from ..operators.triples import explode_triples
-
     ann = stream_annotated(pages, lang)
     return explode_triples(ann, keep_cols=("url", "warc_ts", "sent_id"))
 
@@ -63,15 +64,9 @@ def windowed_mention_counts(
     """Rolling per-entity mention counts over event time (warc_ts) with a
     watermark for late crawls — the streaming analog of the entities
     aggregate.  Output: (window, canon_key, label, n_mentions)."""
-    from ..operators.entity_resolution import canonical_key
-
     ann = stream_annotated(pages, lang).withWatermark("warc_ts", watermark)
-    mentions = ann.select(
-        "warc_ts", F.explode("mentions").alias("m")
-    ).select(
-        "warc_ts",
-        canonical_key(F.col("m.mention")).alias("canon_key"),
-        F.col("m.label").alias("label"),
+    mentions = ann.selectExpr("warc_ts", "explode(mentions) AS m").selectExpr(
+        "warc_ts", f"{canonical_key_sql('m.mention')} AS canon_key", "m.label AS label"
     )
     win = F.window("warc_ts", window, slide) if slide else F.window("warc_ts", window)
     return (
@@ -99,11 +94,9 @@ def stateful_entity_totals(pages: DataFrame, lang: str | None = "tr") -> DataFra
     from pyspark.sql.types import StructField as _Field
     from pyspark.sql.types import StructType as _Struct
 
-    from ..operators.entity_resolution import canonical_key
-
     ann = stream_annotated(pages, lang)
-    mentions = ann.select(F.explode("mentions").alias("m")).select(
-        canonical_key(F.col("m.mention")).alias("canon_key")
+    mentions = ann.selectExpr("explode(mentions) AS m").selectExpr(
+        f"{canonical_key_sql('m.mention')} AS canon_key"
     )
 
     out_schema = _Struct(
