@@ -418,10 +418,10 @@ def _corpus_docs(spark, sf_dir):
 
 
 def _q_ner_mentions(spark, sf_dir):
-    from vnlp_spark.plans.pipeline import annotate_stage, mentions_stage, sentences_stage
+    from vnlp_spark.plans.pipeline import run_kg_pipeline
 
-    ann = annotate_stage(sentences_stage(_corpus_docs(spark, sf_dir)))
-    return mentions_stage(ann).orderBy("url", "sent_id", "first_tok")
+    kg = run_kg_pipeline(_corpus_docs(spark, sf_dir))
+    return kg.mentions.orderBy("url", "sent_id", "first_tok")
 
 
 def _q_pos_tags(spark, sf_dir):

@@ -15,12 +15,7 @@ from vnlp_spark.operators.entity_resolution import (
 )
 from vnlp_spark.plans.corpus import generate_web_pages
 from vnlp_spark.plans.lineage import StageRunner
-from vnlp_spark.plans.pipeline import (
-    annotate_stage,
-    annotated_documents_stage,
-    run_kg_pipeline,
-    sentences_stage,
-)
+from vnlp_spark.plans.pipeline import run_kg_pipeline
 
 
 @pytest.fixture(scope="module")
@@ -162,28 +157,34 @@ def _edge_case_docs(spark):
 
 
 @pytest.mark.parametrize("corpus", ["pooled", "unique_tail", "edge_cases"])
-def test_per_document_and_per_sentence_paths_agree(spark, corpus):
-    """run_kg_pipeline's per-document UDF and kg_job's per-sentence UDF
-    wrap the same kernel: same rows, same order-insensitive digest."""
+def test_kg_job_tables_match_lazy_plan(spark, tmp_path, corpus):
+    """The staged kg_job and run_kg_pipeline run the same annotation UDF
+    and relational stages: each of the six written tables equals the
+    same field of the lazy plan by row count and order-insensitive
+    digest."""
+    from vnlp_spark.bin.kg_job import main
+
     if corpus == "edge_cases":
         docs = _edge_case_docs(spark)
     else:
         docs = generate_web_pages(spark, 400, unique_tail=corpus == "unique_tail")
-    docs = docs.cache()
-    digest = F.expr(
-        "bit_xor(xxhash64(url, sent_id, sentence, tokens, analyses, mentions, arcs))"
-    )
+    # written once, so both plans read the same warc_ts values
+    src = str(tmp_path / "docs")
+    docs.write.parquet(src)
+    out = str(tmp_path / "kg_out")
+    assert main(["--input", src, "--output", out, "--force"]) == 0
+    kg = run_kg_pipeline(spark.read.parquet(src))
 
     def summary(df):
-        return tuple(df.agg(F.count(F.lit(1)), digest).first())
+        h = df.select(F.xxhash64(*df.columns).alias("h"))
+        return tuple(h.selectExpr("count(1)", "bit_xor(h)").first())
 
-    try:
-        per_doc = summary(annotated_documents_stage(docs))
-        per_sent = summary(annotate_stage(sentences_stage(docs)))
-    finally:
-        docs.unpersist()
-    assert per_doc == per_sent
-    assert per_doc[0] > 0
+    for stage in ("sentences", "annotated", "mentions", "triples", "entities", "edges"):
+        staged = spark.read.parquet(f"{out}/{stage}")
+        lazy = getattr(kg, stage)
+        assert staged.columns == lazy.columns, stage
+        assert summary(staged) == summary(lazy), stage
+    assert summary(kg.annotated)[0] > 0
 
 
 def test_kg_job_end_to_end_with_resume(spark, tmp_path):

@@ -104,23 +104,24 @@ def test_spu_context_udf(spark):
 
 
 def test_spu_context_annotate_stage(spark):
-    """model='spu_context' runs the full 4-branch architecture on the
-    production annotate plan: same schema as heuristic, deterministic,
-    shuffle-free."""
+    """annotate_stage runs the full 4-branch architecture on the KG plan's
+    sentence rows: same schema as the heuristic annotated rows,
+    deterministic, shuffle-free."""
     import io
     from contextlib import redirect_stdout
 
     from vnlp_spark.plans.corpus import generate_web_pages
-    from vnlp_spark.plans.pipeline import annotate_stage, sentences_stage
+    from vnlp_spark.plans.pipeline import annotate_stage, run_kg_pipeline
 
     docs = generate_web_pages(spark, 15)
-    ann = annotate_stage(sentences_stage(docs), model="spu_context")
+    kg = run_kg_pipeline(docs)
+    ann = annotate_stage(kg.sentences)
     buf = io.StringIO()
     with redirect_stdout(buf):
         ann.explain("formatted")
     plan = buf.getvalue()
     assert "Exchange" not in plan
-    heur = annotate_stage(sentences_stage(docs))
+    heur = kg.annotated
     assert ann.schema == heur.schema
 
     def snap(df):
@@ -132,7 +133,7 @@ def test_spu_context_annotate_stage(spark):
         )
 
     first = snap(ann)
-    assert first == snap(annotate_stage(sentences_stage(docs), model="spu_context"))
+    assert first == snap(annotate_stage(kg.sentences))
     assert len(first) > 0
 
 

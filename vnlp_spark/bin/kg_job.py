@@ -13,12 +13,13 @@ checkpoint-resumable batch job per the north rule):
 Stages (each a parquet table under --output, each resumable — an
 interrupted job re-runs only incomplete stages; see plans/lineage.py):
 
-    sentences -> annotated -> mentions -> triples -> entities -> edges
+    annotated -> sentences, mentions, triples -> entities -> edges
     plus _lineage/<stage>/ rows (bucket, n_rows, checksum, completed_ts)
 
-``annotated`` runs ``annotate_stage``'s per-sentence fused UDF over the
-written ``sentences`` table — the same kernel, and the same rows, as the
-per-document UDF behind ``run_kg_pipeline``.
+``annotated`` runs ``annotated_documents_stage``, the one per-document
+annotation UDF behind ``run_kg_pipeline`` too, so every table equals the
+same field of the lazy plan.  ``sentences`` is a projection of the
+written ``annotated`` table.
 
 All model/lexicon resources ship inside the vnlp_spark package (the
 --py-files zip), so executors need no network access (the reference's
@@ -72,12 +73,12 @@ def main(argv=None) -> int:
     runner = StageRunner(spark, args.output)
     t0 = time.monotonic()
 
-    sentences = P.sentences_stage(docs, lang)
-    if "sentences" in wanted:
-        sentences = runner.run("sentences", sentences, force=args.force)
-    annotated = P.annotate_stage(sentences)
+    annotated = P.annotated_documents_stage(docs, lang)
     if "annotated" in wanted:
         annotated = runner.run("annotated", annotated, force=args.force)
+    if "sentences" in wanted:
+        runner.run("sentences", annotated.select("url", "warc_ts", "sent_id", "sentence"),
+                   force=args.force)
     mentions = P.mentions_stage(annotated)
     if "mentions" in wanted:
         mentions = runner.run("mentions", mentions, force=args.force)

@@ -272,7 +272,6 @@ def link_mentions(
     min_jaccard: float = 0.4,
     min_containment: float = 0.7,
     max_edit: int = 1,
-    n_salts: int = 8,
     block_prefix: int = 2,
     aliases_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -324,8 +323,7 @@ def link_mentions(
         .withColumn("_grams", char_ngrams("_fkey"))
 
     joined = salted_join(
-        blocked_mentions, blocked_entities,
-        key="_block", n_salts=n_salts,
+        blocked_mentions, blocked_entities, key="_block",
     ).filter(F.col(label_col) == F.col("_cand_label"))
     scored = joined.withColumn(
         "_jac", jaccard(F.col("_grams"), F.col("_cand_grams"))

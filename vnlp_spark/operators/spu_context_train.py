@@ -7,7 +7,7 @@ unreachable offline, so round 2 proved only the ARCHITECTURE and the
 This module makes the contract carry weights that actually encode a
 labeling function: it distills the deterministic heuristic NER
 (operators/ner.py) into the SPUContext model over synthetic Turkish
-sentences, so ``annotate_stage(model="spu_context")`` runs the full
+sentences, so ``annotate_stage(sentences, weights=...)`` runs the full
 architecture with weights that reproduce the production annotator.
 
 Training scheme (NumPy only, deterministic):

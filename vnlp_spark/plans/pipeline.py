@@ -19,8 +19,8 @@ scan (only `text` is read).
 Boundary costs are kept small on both sides.  On the driver, each
 relational stage is built from SQL expression strings (``selectExpr`` /
 ``F.expr``), so a plan costs a few hundred py4j round trips instead of
-one per Column-builder node.  On the workers, the annotation UDFs take
-and return Arrow arrays directly: the kernel's tuples become one
+one per Column-builder node.  On the workers, the one annotation UDF
+takes and returns Arrow arrays directly: the kernel's tuples become one
 ``pa.array(rows, type=...)`` call, with no pandas conversion of the
 nested ``array<struct<...>>`` output.
 """
@@ -92,8 +92,7 @@ _DOC_ANNOTATION_SCHEMA = ArrayType(
 )
 
 
-_ANNOTATION_ARROW_TYPE = to_arrow_type(_ANNOTATION_SCHEMA)
-_DOC_ANNOTATION_ARROW_TYPE = to_arrow_type(_DOC_ANNOTATION_SCHEMA)
+_DOC_ARROW_TYPE = to_arrow_type(_DOC_ANNOTATION_SCHEMA)
 
 
 def _annotate_sentence_cached(cache: dict, sentence: str):
@@ -126,27 +125,14 @@ def _annotate_document_udf(texts: pa.Array) -> pa.Array:
         ]
         for text in texts.to_pylist()
     ]
-    return pa.array(rows, type=_DOC_ANNOTATION_ARROW_TYPE)
-
-
-@arrow_udf(_ANNOTATION_SCHEMA)
-def _annotate_fused_udf(sentences: pa.Array) -> pa.Array:
-    """Fused annotator: tokenize + morphology + NER + parse in ONE python
-    pass.  Four chained UDFs would be four ArrowEvalPython nodes — four
-    worker pools and three JVM round-trips of nested arrays per row;
-    fusing them keeps intermediates in Python and cuts the per-row Arrow
-    traffic to one in (string) and one out (struct).  Measured ~3x on the
-    annotation stage and restores near-linear core scaling."""
-    cache: dict = {}
-    rows = [
-        (None, None, None, None) if s is None else _annotate_sentence_cached(cache, s)
-        for s in sentences.to_pylist()
-    ]
-    return pa.array(rows, type=_ANNOTATION_ARROW_TYPE)
+    return pa.array(rows, type=_DOC_ARROW_TYPE)
 
 
 def sentences_stage(docs: DataFrame, lang: str | None = "tr") -> DataFrame:
-    """documents -> (url, warc_ts, sent_id, sentence)."""
+    """documents -> (url, warc_ts, sent_id, sentence) through the
+    ``split_sentences`` UDF alone: the input of ``annotate_stage`` when
+    NER runs on real weights.  The KG plans take their sentence rows from
+    ``annotated_documents_stage`` instead."""
     if lang is not None:
         docs = docs.filter(F.col("lang") == lang)
     return docs.select(
@@ -165,16 +151,20 @@ def _ner_label_names() -> list:
     return resources.label_list("ner_label", pad="O")
 
 
-def _spu_context_annotate(sentences: DataFrame, weights,
-                          sentence_max_len: int | None) -> DataFrame:
-    """NER labels from a broadcast copy of the reference's full 4-branch
+def annotate_stage(sentences: DataFrame, weights=None,
+                   sentence_max_len: int | None = None) -> DataFrame:
+    """(url, sent_id, sentence) -> + tokens, analyses, mentions, arcs with
+    NER from a broadcast copy of the reference's full 4-branch
     architecture (operators/spu_context.py): word/left/right/prev-entity
     GRU stacks over real SentencePiece piece ids, autoregressive decode.
 
-    Without ``weights`` the arrays are deterministic surrogates, so the
-    labels are not linguistically meaningful; passing trained arrays is
-    the only change left.  Morphology and parsing stay on their own
-    annotators (separate models in the reference too)."""
+    This is the one swap point for real weights:
+    ``annotate_stage(sentences, weights=...)``.  Without ``weights`` the
+    arrays are deterministic surrogates, so the labels are not
+    linguistically meaningful; passing trained arrays is the only change
+    left.  Morphology and parsing stay on their own annotators (separate
+    models in the reference too).  The heuristic annotator every KG job
+    runs is ``annotated_documents_stage``."""
     from ..operators.ner import mentions_from_labels
     from ..operators.spu_context import make_spu_context_tagger_udf
 
@@ -200,31 +190,11 @@ def _spu_context_annotate(sentences: DataFrame, weights,
     return out.select(*sentences.columns, "tokens", "analyses", "mentions", "arcs")
 
 
-def annotate_stage(sentences: DataFrame, model: str = "heuristic", weights=None,
-                   sentence_max_len: int | None = None) -> DataFrame:
-    """(url, sent_id, sentence) -> + tokens, analyses, mentions, arcs.
-
-    ``model="heuristic"`` (default) runs the fused per-sentence UDF over
-    the same kernel as ``annotated_documents_stage``; the staged kg_job
-    uses it because it writes ``sentences`` before ``annotated``.
-
-    ``model="spu_context"`` is the one swap point for real weights:
-    ``annotate_stage(sentences, model="spu_context", weights=...)`` routes
-    NER through the reference's 4-branch architecture with the given
-    arrays (surrogates when ``weights`` is None).
-    """
-    if model == "spu_context":
-        return _spu_context_annotate(sentences, weights, sentence_max_len)
-    if model != "heuristic":
-        raise ValueError(f"unknown model {model!r}; use 'heuristic' or 'spu_context'")
-    return sentences.select("*", _annotate_fused_udf("sentence").alias("_ann")).selectExpr(
-        *sentences.columns, "_ann.*")
-
-
 def annotated_documents_stage(docs: DataFrame, lang: str | None = "tr") -> DataFrame:
     """documents -> fully annotated sentence rows in ONE python stage
-    (split + tokenize + morphology + NER + parse fused per document).
-    Same output columns as sentences_stage + annotate_stage."""
+    (split + tokenize + morphology + NER + parse fused per document): the
+    heuristic annotation stage of every KG job, lazy or staged.  Same
+    output columns as ``annotate_stage(sentences_stage(docs))``."""
     if lang is not None:
         docs = docs.filter(F.col("lang") == lang)
     return docs.select("url", "warc_ts", F.inline(_annotate_document_udf("text")))
@@ -268,7 +238,6 @@ def edges_stage(
     entities: DataFrame,
     entity_join: str = "broadcast",
     entities_rows: int | None = None,
-    n_salts: int = 8,
 ) -> DataFrame:
     """Resolve triple arguments to entity ids -> edges table.
 
@@ -316,8 +285,8 @@ def edges_stage(
             rename("obj"), on=["obj_key"], how="left"
         )
     else:
-        e = salted_join(t, rename("subj"), key="subj_key", n_salts=n_salts, how="left")
-        e = salted_join(e, rename("obj"), key="obj_key", n_salts=n_salts, how="left")
+        e = salted_join(t, rename("subj"), key="subj_key", how="left")
+        e = salted_join(e, rename("obj"), key="obj_key", how="left")
     return e.select("subj_id", "subj", "pred", "obj_id", "obj", "url", "warc_ts").where(
         "subj_id IS NOT NULL OR obj_id IS NOT NULL")
 
@@ -332,8 +301,8 @@ class KGResult:
     edges: DataFrame
 
 
-def run_kg_pipeline(docs: DataFrame, lang: str | None = "tr", persist: bool = False,
-                    entity_join: str = "broadcast") -> KGResult:
+def run_kg_pipeline(docs: DataFrame, lang: str | None = "tr",
+                    persist: bool = False) -> KGResult:
     """Assemble the full logical plan (lazy — nothing executes here).
 
     Annotation runs as one fused python stage per document
@@ -359,5 +328,5 @@ def run_kg_pipeline(docs: DataFrame, lang: str | None = "tr", persist: bool = Fa
         # consumer re-derives them from `annotated`
         triples = triples.persist(StorageLevel.MEMORY_AND_DISK)
         entities = entities.persist(StorageLevel.MEMORY_AND_DISK)
-    edges = edges_stage(triples, entities, entity_join=entity_join)
+    edges = edges_stage(triples, entities)
     return KGResult(sentences, annotated, mentions, triples, entities, edges)

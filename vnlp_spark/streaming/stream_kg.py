@@ -3,9 +3,10 @@
 The reference has no streaming semantics (SURVEY §2.11) and the north rule
 asks for batch + checkpoint-resume, which plans/lineage.py provides.  This
 module exists for the continuous-ingestion deployment mode: the SAME fused
-annotation UDF and triple extractor run unchanged on a streaming DataFrame
-(they are stateless per sentence), plus watermarked event-time windowing
-for rolling entity statistics.
+annotation stage (``annotated_documents_stage``) and triple extractor run
+unchanged on a streaming DataFrame (they are stateless per document, so
+trivially micro-batch-safe), plus watermarked event-time windowing for
+rolling entity statistics.
 
     pages = (spark.readStream.schema(WEB_PAGE_SCHEMA).parquet(landing_dir))
     triples = stream_triples(pages)                      # append mode
@@ -26,6 +27,7 @@ from pyspark.sql.types import (
 
 from ..operators.entity_resolution import canonical_key_sql
 from ..operators.triples import explode_triples
+from ..plans.pipeline import annotated_documents_stage
 
 WEB_PAGE_SCHEMA = StructType(
     [
@@ -38,19 +40,10 @@ WEB_PAGE_SCHEMA = StructType(
 )
 
 
-def stream_annotated(pages: DataFrame, lang: str | None = "tr") -> DataFrame:
-    """Streaming documents -> annotated sentence rows (stateless map —
-    identical plan to the batch fused stage, so it is trivially
-    micro-batch-safe)."""
-    from ..plans.pipeline import annotated_documents_stage
-
-    return annotated_documents_stage(pages, lang)
-
-
 def stream_triples(pages: DataFrame, lang: str | None = "tr") -> DataFrame:
     """Streaming documents -> (url, warc_ts, sent_id, subj, pred, obj, ...)
     in append mode (no aggregation state)."""
-    ann = stream_annotated(pages, lang)
+    ann = annotated_documents_stage(pages, lang)
     return explode_triples(ann, keep_cols=("url", "warc_ts", "sent_id"))
 
 
@@ -64,7 +57,7 @@ def windowed_mention_counts(
     """Rolling per-entity mention counts over event time (warc_ts) with a
     watermark for late crawls — the streaming analog of the entities
     aggregate.  Output: (window, canon_key, label, n_mentions)."""
-    ann = stream_annotated(pages, lang).withWatermark("warc_ts", watermark)
+    ann = annotated_documents_stage(pages, lang).withWatermark("warc_ts", watermark)
     mentions = ann.selectExpr("warc_ts", "explode(mentions) AS m").selectExpr(
         "warc_ts", f"{canonical_key_sql('m.mention')} AS canon_key", "m.label AS label"
     )
@@ -94,7 +87,7 @@ def stateful_entity_totals(pages: DataFrame, lang: str | None = "tr") -> DataFra
     from pyspark.sql.types import StructField as _Field
     from pyspark.sql.types import StructType as _Struct
 
-    ann = stream_annotated(pages, lang)
+    ann = annotated_documents_stage(pages, lang)
     mentions = ann.selectExpr("explode(mentions) AS m").selectExpr(
         f"{canonical_key_sql('m.mention')} AS canon_key"
     )
