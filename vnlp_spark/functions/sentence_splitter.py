@@ -64,9 +64,13 @@ def py_split_sentences(text: str, prefixes: dict | None = None) -> List[str]:
     text = _RULE_PUNCT_QUOTE.sub(r"\1\n\2", text)
 
     words = _WORD_SPLIT.split(text)
-    out = ""
     for i in range(len(words) - 1):
-        m = _TRAILING_DOT.search(words[i])
+        # _TRAILING_DOT ends in (\.+)$, and `$` also matches before a
+        # final newline: only a word ending in "." or ".\n" can match
+        w = words[i]
+        if w[-1:] != "." and w[-2:] != ".\n":
+            continue
+        m = _TRAILING_DOT.search(w)
         if m:
             prefix, starting_punct = m.group(1), m.group(2)
             is_honorific = bool(
@@ -87,10 +91,8 @@ def py_split_sentences(text: str, prefixes: dict | None = None) -> List[str]:
                 )
                 if not is_numeric_nb:
                     words[i] = words[i] + "\n"
-        out += words[i] + " "
-    out += words[-1]
 
-    out = _MULTI_SPACE.sub(" ", out)
+    out = _MULTI_SPACE.sub(" ", " ".join(words))
     out = out.replace("\n ", "\n").replace(" \n", "\n").strip()
     return out.split("\n")
 

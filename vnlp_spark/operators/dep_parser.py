@@ -57,6 +57,7 @@ from pyspark.sql.types import (
 
 from .morphology import (
     _GRAMMAT_ADPS,
+    _LOAN_I_ACC_ADJS,
     _MATERIAL_NOUNS,
     py_analyze_tokens,
     to_lower,
@@ -442,6 +443,7 @@ def py_parse_tokens(
 
     upos = adjust_upos(tokens, upos, analyses)
 
+    lows = [to_lower(t) for t in tokens]
     tagsets = [set(a.replace("^", "+").split("+")) for a in analyses]
     roots_of = [a.split("+", 1)[0] for a in analyses]
 
@@ -467,7 +469,7 @@ def py_parse_tokens(
             # the emphatic particle is transparent for the argument frame
             # (hizmetleri DE sunmaya başladı)
             pi = i - 1
-            while pi > 0 and to_lower(tokens[pi]) in ("de", "da"):
+            while pi > 0 and lows[pi] in ("de", "da"):
                 pi -= 1
             prev_arg = (
                 pi >= 0
@@ -621,7 +623,7 @@ def py_parse_tokens(
             if upos[i] == "VERB" and "PastPart" in tagsets[i]
             and _case_of(analyses[i]) == "Loc"
             and not (i + 1 < n
-                     and to_lower(tokens[i + 1]) in ("sonra", "önce"))
+                     and lows[i + 1] in ("sonra", "önce"))
         ]
         # conditional protasis clauses likewise host their own subject
         # (Yağmur yağarsa -> Yağmur is yağarsa's nsubj)
@@ -656,8 +658,8 @@ def py_parse_tokens(
                 # conjunct (uygulama HEM hızlı hem güvenli): the walk
                 # stops there — the token before it is the subject, not
                 # an earlier conjunct
-                if (to_lower(tokens[k]) in _CORRELATIVE_CCS
-                        and not any(to_lower(tokens[j]) == to_lower(tokens[k])
+                if (lows[k] in _CORRELATIVE_CCS
+                        and not any(lows[j] == lows[k]
                                     for j in range(k))):
                     break
                 nk = k - 1
@@ -714,7 +716,7 @@ def py_parse_tokens(
 
     # --- lexicalized fixed expressions ----------------------------------
     for i in range(1, n):
-        if (to_lower(tokens[i - 1]), to_lower(tokens[i])) in _FIXED_BIGRAMS:
+        if (lows[i - 1], lows[i]) in _FIXED_BIGRAMS:
             heads[i], rels[i] = i, "fixed"
 
     # --- correlative coordination (hem..hem, ne..ne, ya..ya, gerek..) ----
@@ -727,8 +729,8 @@ def py_parse_tokens(
     corr_cc_idx = set()
     _corr_groups = {}
     for i in range(n):
-        if upos[i] == "CCONJ" and to_lower(tokens[i]) in _CORRELATIVE_CCS:
-            _corr_groups.setdefault(to_lower(tokens[i]), []).append(i)
+        if upos[i] == "CCONJ" and lows[i] in _CORRELATIVE_CCS:
+            _corr_groups.setdefault(lows[i], []).append(i)
     for _w, _idxs in _corr_groups.items():
         if len(_idxs) < 2:
             continue
@@ -907,11 +909,11 @@ def py_parse_tokens(
             and analyses[i].count("+") == 1
             and analyses[i].endswith("+Adj")
             and "p3nom" in _readings(tokens[i])
-            and to_lower(tokens[i]) not in _CORE_ADJS
+            and lows[i] not in _CORE_ADJS
             # the asker/resim/din loan-î trio reads attributive before a
             # nominal (resmi RAKAMLARI açıkladı) — adjust_upos's mirror
             # carries the same exclusion
-            and to_lower(tokens[i]) not in ("askeri", "resmi", "dini",
+            and lows[i] not in ("askeri", "resmi", "dini",
                                             "madeni")
             and upos[i - 1] == "NOUN"
             and eff_case[i - 1] in ("Nom", "")
@@ -928,14 +930,12 @@ def py_parse_tokens(
     # döktü = maden+Acc poured into the mold, never 'metallic mold'):
     # the adjective reading would strand the verb without an object
     # while an overt subject stands left
-    from .morphology import _LOAN_I_ACC_ADJS as _LOAN_I
-
     for i in range(1, n - 1):
         if (
             upos[i] == "ADJ"
             and analyses[i].count("+") == 1
             and analyses[i].endswith("+Adj")
-            and to_lower(tokens[i]) in _LOAN_I
+            and lows[i] in _LOAN_I_ACC_ADJS
             and upos[i + 1] in _NOMINAL
             and eff_case[i + 1] in ("Dat", "Loc", "Abl", "Ins")
             and not (i + 2 < n and upos[i + 2] == "ADP")
@@ -1005,7 +1005,7 @@ def py_parse_tokens(
             and eff_case[i] in ("Dat", "Loc", "Abl", "Ins")
             and not eff_poss[i]
             and "bare_noun" in _readings(tokens[i])
-            and roots_of[i] != to_lower(tokens[i])
+            and roots_of[i] != lows[i]
             and upos[i + 1] in _NOMINAL
             and eff_poss[i + 1]
             and eff_case[i + 1] == eff_case[i]
@@ -1022,7 +1022,7 @@ def py_parse_tokens(
     for i in range(1, n - 1):
         if (
             upos[i] in ("NOUN",)
-            and roots_of[i] != to_lower(tokens[i])
+            and roots_of[i] != lows[i]
             and ("Acc" in tagsets[i]
                  or ("Nom" in tagsets[i]
                      and tagsets[i] & {"P3sg", "P3pl"}))
@@ -1048,12 +1048,12 @@ def py_parse_tokens(
     for i in range(1, n - 2):
         if (
             upos[i] == "NOUN"
-            and roots_of[i] != to_lower(tokens[i])
+            and roots_of[i] != lows[i]
             and ("Acc" in tagsets[i]
                  or ("Nom" in tagsets[i]
                      and tagsets[i] & {"P3sg", "P3pl"}))
             and "bare_adj" in _readings(tokens[i])
-            and to_lower(tokens[i + 1]) == "bir"
+            and lows[i + 1] == "bir"
             and upos[i + 2] in ("NOUN", "PROPN")
             and roots_of[i + 2] not in _TEMPORAL_ROOTS
             and upos[i - 1] in _NOMINAL
@@ -1125,7 +1125,7 @@ def py_parse_tokens(
         for j in range(i + 1, v):
             if upos[j] in _TRANSPARENT:
                 continue
-            if to_lower(tokens[j]) in ("de", "da") and upos[j] == "CCONJ":
+            if lows[j] in ("de", "da") and upos[j] == "CCONJ":
                 continue  # the emphatic particle is transparent for the
                 # object frame (hizmetleri DE sunmaya başladı)
             if upos[j] in _NOMINAL and eff_case[j] in ("Dat", "Loc", "Abl", "Ins"):
@@ -1156,7 +1156,7 @@ def py_parse_tokens(
                     # ... except the concessive class, whose frame
                     # signals a compound subject (sakatlığına RAĞMEN
                     # oynadı keeps the izafet reading)
-                    and to_lower(tokens[j + 1]) not in ("rağmen",
+                    and lows[j + 1] not in ("rağmen",
                                                         "karşın")):
                 continue  # a bare-Nom ADP complement is inside an
                 # adjunct phrase (yazışmaları GÜVENLİK İÇİN şifreledi)
@@ -1175,14 +1175,14 @@ def py_parse_tokens(
     # candidates, and attached nmod later
     juxt_mod = [False] * n
     for j in range(n - 1):
-        if (to_lower(tokens[j]) == "sağanak"
-                and to_lower(tokens[j + 1]).startswith(("yağış",
+        if (lows[j] == "sağanak"
+                and lows[j + 1].startswith(("yağış",
                                                         "yağmur"))):
             juxt_mod[j] = True
         # lexicalized institution juxtaposition (SAHİL güvenlik
         # botları = the Coast Guard's boats): same closed class
-        if (to_lower(tokens[j]) == "sahil"
-                and to_lower(tokens[j + 1]).startswith("güvenlik")):
+        if (lows[j] == "sahil"
+                and lows[j + 1].startswith("güvenlik")):
             juxt_mod[j] = True
 
     for i in range(n - 1, -1, -1):
@@ -1292,7 +1292,7 @@ def py_parse_tokens(
             # (Mektubu dun aksam postaya verdim)
             eff_case[i], eff_poss[i] = "Acc", False
             continue
-        if i == 0 and to_lower(tokens[i]).split("'")[0] in _TITLES:
+        if i == 0 and lows[i].split("'")[0] in _TITLES:
             # a sentence-initial title/role noun (cumhurbaşkanı, vali) is
             # the agent, not a fronted object, regardless of adjacency
             eff_case[i], eff_poss[i] = "Nom", True
@@ -1355,7 +1355,7 @@ def py_parse_tokens(
             # (Gazeteci YILDIZ soruları ... yanıtladı: Yıldız stays in
             # the mention, the possessed nominal is the clause object)
             and not (i > 1 and _CAP_RE.match(tokens[i - 1])
-                     and to_lower(tokens[i - 2]).split("'")[0] in _TITLES)
+                     and lows[i - 2].split("'")[0] in _TITLES)
         )
         obj_later = any(
             upos[j] in _NOMINAL and eff_case[j] == "Acc" for j in range(i + 1, v)
@@ -1401,7 +1401,7 @@ def py_parse_tokens(
                     # ordinary time adjuncts compatible with the object
                     # reading (KAPTAN yolcuları kalkıştan ÖNCE uyardı)
                     and not (j + 1 < n and upos[j + 1] == "ADP"
-                             and to_lower(tokens[j + 1]) not in
+                             and lows[j + 1] not in
                              ("önce", "sonra", "itibaren", "beri",
                               "boyunca")))
                 # bare time expressions are obliques here too (Belediye
@@ -1414,7 +1414,7 @@ def py_parse_tokens(
                 # concessive class (sakatlığına RAĞMEN)
                 or (upos[j] in _NOMINAL and j + 1 < n
                     and upos[j + 1] == "ADP"
-                    and to_lower(tokens[j + 1]) not in ("rağmen",
+                    and lows[j + 1] not in ("rağmen",
                                                         "karşın"))
                 or _spatial_frame_mod(j)
                 # adjective inside an intervening oblique phrase
@@ -1461,7 +1461,7 @@ def py_parse_tokens(
         if (
             i + 2 < n
             and upos[i + 1] == "CCONJ"
-            and to_lower(tokens[i + 1]) in ("ve", "veya", "ya")
+            and lows[i + 1] in ("ve", "veya", "ya")
             and upos[i + 2] in _NOMINAL
             and _case_of(analyses[i + 2]) == "Acc"
             and transitive_v
@@ -1713,7 +1713,7 @@ def py_parse_tokens(
                   # -mAsInA rağmen/karşın is the concessive ADVERBIAL
                   # clause (zarar ETMESİNE rağmen sürdürdü), never a
                   # complement
-                  and not (i + 1 < n and to_lower(tokens[i + 1])
+                  and not (i + 1 < n and lows[i + 1]
                            in ("rağmen", "karşın"))):
                 heads[i], rels[i] = p + 1, "ccomp"
             elif (tags & {"FutPart", "PastPart", "Inf2"}
@@ -1728,7 +1728,7 @@ def py_parse_tokens(
                 tags & {"PastPart"}
                 and case in ("Abl", "Loc")
                 and i + 1 < n
-                and to_lower(tokens[i + 1]) in ("sonra", "önce")
+                and lows[i + 1] in ("sonra", "önce")
             ):
                 # temporal adverbial frame: yedikten sonra
                 heads[i], rels[i] = p + 1, "advcl"
@@ -1742,7 +1742,7 @@ def py_parse_tokens(
                 nom = next_nominal(i)
                 heads[i], rels[i] = (nom + 1 if nom is not None else p + 1), "acl"
             elif (i + 1 < n
-                  and to_lower(tokens[i + 1]) in ("rağmen", "karşın")):
+                  and lows[i + 1] in ("rağmen", "karşın")):
                 # -mAsInA rağmen is the concessive ADVERBIAL clause
                 # (zarar ETMESİNE rağmen sürdürdü), never a complement
                 heads[i], rels[i] = p + 1, "advcl"
@@ -1755,7 +1755,7 @@ def py_parse_tokens(
             prev_fin = max([v for v in finite if v < i], default=-1)
             ki_c = next(
                 (c for c in range(prev_fin + 1, i)
-                 if upos[c] == "SCONJ" and to_lower(tokens[c]) == "ki"),
+                 if upos[c] == "SCONJ" and lows[c] == "ki"),
                 None,
             )
             if ki_c is not None:
@@ -1810,7 +1810,7 @@ def py_parse_tokens(
             # for the fossil -ArAsI adjectives, which scope over the
             # whole compound (şehirlerarası otobüs BİLETLERİNE)
             and (_case_of(analyses[nom + 1]) in ("Nom", "Acc")
-                 or (to_lower(tokens[i]).endswith("arası")
+                 or (lows[i].endswith("arası")
                      and not (roots_of[nom + 1] in _SPATIAL_ROOTS
                               or roots_of[nom + 1] in _TEMPORAL_ROOTS
                               or roots_of[nom + 1] in ("son", "taraf",
@@ -1843,7 +1843,7 @@ def py_parse_tokens(
                           and (roots_of[nom + 1] in _SPATIAL_ROOTS
                                or roots_of[nom + 1] in _TEMPORAL_ROOTS
                                or roots_of[nom + 1] == "son"))
-                         or (to_lower(tokens[nom + 2]) in _DEGREE_ADVS
+                         or (lows[nom + 2] in _DEGREE_ADVS
                              and _case_of(analyses[nom + 1]) == "Abl")))
         ):
             nom += 1
@@ -1860,7 +1860,7 @@ def py_parse_tokens(
             nxt = [p for p in preds if p > i]
             heads[i], rels[i] = (nxt[0] if nxt else root) + 1, "punct"
         elif u == "CCONJ":
-            if to_lower(tokens[i]) in ("de", "da") and i > 0:
+            if lows[i] in ("de", "da") and i > 0:
                 prev_w = next(
                     (j for j in range(i - 1, -1, -1)
                      if upos[j] != "PUNCT"), None,
@@ -1868,7 +1868,7 @@ def py_parse_tokens(
                 if (
                     prev_w is not None
                     and upos[prev_w] == "CCONJ"
-                    and to_lower(tokens[prev_w]) == "ya"
+                    and lows[prev_w] == "ya"
                 ):
                     # the bigram second correlative 'ya da' keeps ya as
                     # the cc and da as its fixed continuation
@@ -1914,7 +1914,7 @@ def py_parse_tokens(
                 continue
             if (
                 i > 0
-                and to_lower(tokens[i - 1]) == "yüzde"
+                and lows[i - 1] == "yüzde"
                 and upos[i - 1] == "NOUN"
                 and not eff_poss[i - 1]
             ):
@@ -1931,7 +1931,7 @@ def py_parse_tokens(
             elif (
                 i + 1 < n
                 and upos[i + 1] == "ADJ"
-                and to_lower(tokens[i + 1])[-3:] in ("lık", "lik", "luk",
+                and lows[i + 1][-3:] in ("lık", "lik", "luk",
                                                      "lük")
             ):
                 # the numeral quantifies a measure -lIk adjective, not
@@ -1952,7 +1952,7 @@ def py_parse_tokens(
             )
             heads[i], rels[i] = ((prev_nom if prev_nom is not None else root) + 1), "case"
         elif u == "ADV":
-            low = to_lower(tokens[i])
+            low = lows[i]
             if i > 0 and tokens[i] == tokens[i - 1] and upos[i - 1] == "ADV":
                 # reduplicated adverb: second token compounds on the first
                 # (bol bol, yavaş yavaş)
@@ -2057,12 +2057,12 @@ def py_parse_tokens(
         v = next_verbish(i)
         vt = v if v is not None else p  # local attachment for obj/obl
         if (
-            (to_lower(tokens[i]) == "sağanak"
+            (lows[i] == "sağanak"
              and i + 1 < n
-             and to_lower(tokens[i + 1]).startswith(("yağış", "yağmur")))
-            or (to_lower(tokens[i]) == "sahil"
+             and lows[i + 1].startswith(("yağış", "yağmur")))
+            or (lows[i] == "sahil"
                 and i + 1 < n
-                and to_lower(tokens[i + 1]).startswith("güvenlik"))
+                and lows[i + 1].startswith("güvenlik"))
         ):
             # lexicalized bare weather juxtaposition: sağanak modifies
             # its precipitation head without possession (SAĞANAK yağış
@@ -2130,7 +2130,7 @@ def py_parse_tokens(
             heads[i], rels[i] = i + 2, "nmod"
             continue
         if (
-            to_lower(tokens[i]) == "yüzde"
+            lows[i] == "yüzde"
             and i + 2 < n and upos[i + 1] == "NUM"
             and upos[i + 2] in ("NOUN", "PROPN")
         ):
@@ -2196,10 +2196,10 @@ def py_parse_tokens(
             prev_upos == "ADJ"
             and rels[i - 1] == "amod" and heads[i - 1] == i + 1
             and i - 2 >= 0 and upos[i - 2] == "CCONJ"
-            and to_lower(tokens[i - 2]) not in ("de", "da")
+            and lows[i - 2] not in ("de", "da")
             and i - 2 not in corr_cc_idx
         )
-        if ((prev_upos == "CCONJ" and to_lower(tokens[i - 1]) not in ("de", "da")
+        if ((prev_upos == "CCONJ" and lows[i - 1] not in ("de", "da")
                 and i not in corr_first
                 # a nominal fronted by a CLAUSAL correlative particle is
                 # its own clause's argument, not a conjunct of an earlier
@@ -2417,7 +2417,7 @@ def py_parse_tokens(
                 vt is not None
                 and i + 2 == vt
                 and upos[i + 1] == "CCONJ"
-                and to_lower(tokens[i + 1]) in ("de", "da")
+                and lows[i + 1] in ("de", "da")
             )
             # case-marked oblique nominals and adverbs between the
             # nominal and its verb are transparent for preverbality
@@ -2494,7 +2494,7 @@ def py_parse_tokens(
                 and "A3pl" not in tagsets[i]
                 and not (i + 3 < n
                          and (upos[i + 3] == "ADP"
-                              or to_lower(tokens[i + 3])
+                              or lows[i + 3]
                               in _GRAMMAT_ADPS))
                 and not (i + 3 < n and upos[i + 3] == "VERB"
                          and subord[i + 3])
@@ -2547,7 +2547,7 @@ def py_parse_tokens(
                 and not (
                     low_root in _TEMPORAL_ROOTS
                     and i > 0
-                    and to_lower(tokens[i - 1]) in _TIME_DETS
+                    and lows[i - 1] in _TIME_DETS
                     and roots_of[i + 1] not in _TEMPORAL_ROOTS
                     and roots_of[i + 1] not in ("son", "baş", "orta",
                                                 "iç", "sonu")
@@ -2790,7 +2790,7 @@ def py_parse_tokens(
                 else:
                     heads[i], rels[i] = p + 1, "obl"
             elif (
-                to_lower(tokens[i]) in _PRON_12
+                lows[i] in _PRON_12
                 and verb_person_12(p)
                 and p not in subj_of
             ):
@@ -2819,7 +2819,7 @@ def py_parse_tokens(
                     )
                     subjish = (
                         modified
-                        or to_lower(tokens[vt]) in ("var", "yok")
+                        or lows[vt] in ("var", "yok")
                         or roots_of[vt] in ("var", "yok")
                         or eff_poss[i]
                         or "A3pl" in tagsets[i]
@@ -2943,7 +2943,7 @@ def py_parse_tokens(
                              or ("PastPart" in tagsets[vt]
                                  and _case_of(analyses[vt]) == "Abl"
                                  and vt + 1 < n
-                                 and to_lower(tokens[vt + 1])
+                                 and lows[vt + 1]
                                  in ("sonra", "önce")))
                         and (_intrans(vt)
                              or "Pass" in tagsets[vt]
@@ -2966,7 +2966,7 @@ def py_parse_tokens(
                         heads[i], rels[i] = vt + 1, "nsubj"
                     elif ((roots_of[vt] in ("ol", "et")
                            or (roots_of[vt] == "gel"
-                               and to_lower(tokens[i])
+                               and lows[i]
                                in _GEL_SUPPORT_NOMINALS))
                           and not lv_nominal
                           and not eff_poss[i]):
@@ -3092,7 +3092,7 @@ def py_parse_tokens(
             elif (preverbal
                   and (roots_of[vt] in ("ol", "et")
                        or (roots_of[vt] == "gel"
-                           and to_lower(tokens[i])
+                           and lows[i]
                            in _GEL_SUPPORT_NOMINALS))
                   and not lv_nominal and not eff_poss[i]):
                 heads[i], rels[i] = vt + 1, "compound"
@@ -3106,7 +3106,7 @@ def py_parse_tokens(
                        or ("PastPart" in tagsets[vt]
                            and _case_of(analyses[vt]) == "Abl"
                            and vt + 1 < n
-                           and to_lower(tokens[vt + 1]) in ("sonra",
+                           and lows[vt + 1] in ("sonra",
                                                             "önce")))
                   and vt != p and p in subj_of
                   and not any(rels[j] == "nsubj" and heads[j] == vt + 1

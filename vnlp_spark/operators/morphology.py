@@ -54,6 +54,7 @@ _ROOT_TRANSFORM = {
     "tıp": "tıb", "prof.": "profesör", "dr.": "doktor",
     "yi": "ye", "ed": "et", "di": "de",
 }
+_PRONOUN_SWAP = {"ban": "ben", "Ban": "Ben", "san": "sen", "San": "Sen"}
 _SOFTEN = {"b": "p", "B": "P", "c": "ç", "C": "Ç", "d": "t", "D": "T",
            "ğ": "k", "Ğ": "K", "g": "k", "G": "K"}
 
@@ -243,26 +244,23 @@ _TR_LOWER_FIX = str.maketrans({"İ": "i", "I": "ı"})
 def to_lower(text: str) -> str:
     if text.islower():
         return text
-    # token-sized inputs repeat massively across the annotation stack
-    # (~130 to_lower calls per sentence); memoize those, pass long
-    # texts (normalizer inputs) straight through
+    # token-sized inputs repeat massively across the annotation stack;
+    # memoize those, pass long texts (normalizer inputs) straight through
     if len(text) <= 40:
         return _to_lower_cached(text)
     return text.translate(_TR_LOWER_FIX).lower()
 
 
-from functools import lru_cache as _lru_cache
-
-
-@_lru_cache(maxsize=65536)
+@lru_cache(maxsize=65536)
 def _to_lower_cached(text: str) -> str:
     return text.translate(_TR_LOWER_FIX).lower()
 
 
+_ASCIIFY = str.maketrans("İÇĞÜŞÖıçğüşö", "ICGUSOicgusö")
+
+
 def _asciify(text: str) -> str:
-    for k, v in zip("İÇĞÜŞÖıçğüşö", "ICGUSOicgusö"):
-        text = text.replace(k, v)
-    return text
+    return text.translate(_ASCIIFY)
 
 
 def capitalize(text: str) -> str:
@@ -360,8 +358,18 @@ def _patched_stem_dict() -> dict:
     return out
 
 
+# words whose candidate lists each generator keeps (LRU); about 0.5 kB a
+# word over inflected dictionary nouns, so a full memo is a few MB
+_CANDIDATE_MEMO_MAX = 8192
+
+
 class CandidateGenerator:
-    """Rule engine producing (root, suffix, tags) candidates per token."""
+    """Rule engine producing (root, suffix, tags) candidates per token.
+
+    ``get_analysis_candidates`` is memoized per instance in a bounded LRU
+    (``_CANDIDATE_MEMO_MAX`` words): the selection layer, the PoS reading
+    classes and the post-passes ask for the same token's candidates, and
+    every caller shares the returned list, so none may mutate it."""
 
     def __init__(self, stem_dic=None, suffix_dic=None, exact_table=None):
         self.stem_dic = stem_dic if stem_dic is not None else _patched_stem_dict()
@@ -369,6 +377,9 @@ class CandidateGenerator:
         self.exact = exact_table if exact_table is not None else resources.exact_lookup()
         for k, v in _IRREGULAR_EXACT.items():
             self.exact.setdefault(k, v)
+        self._parsed: dict = {}
+        self.get_analysis_candidates = lru_cache(maxsize=_CANDIDATE_MEMO_MAX)(
+            self._analysis_candidates)
 
     # --- split enumeration + phonology ---------------------------------
 
@@ -378,9 +389,8 @@ class CandidateGenerator:
             suffixes.append(suffix)
             return
         # bana/sana -> ben/sen
-        swap = {"ban": "ben", "Ban": "Ben", "san": "sen", "San": "Sen"}
-        if stem in swap and suffix == "a":
-            roots.append(swap[stem])
+        if suffix == "a" and stem in _PRONOUN_SWAP:
+            roots.append(_PRONOUN_SWAP[stem])
             suffixes.append("a")
             return
         roots.append(stem)
@@ -395,7 +405,7 @@ class CandidateGenerator:
             roots.append(stem)
             suffixes.append(suffix[1:])
         # vowel narrowing before -yor: bekli+yor -> bekle
-        elif len(stem) > 1 and _ENDS_NARROW.search(stem) and "yor" in suffix:
+        elif "yor" in suffix and len(stem) > 1 and _ENDS_NARROW.search(stem):
             if stem[-1] in "iü":
                 roots.append(stem[:-1] + "e")
                 suffixes.append(suffix)
@@ -444,14 +454,36 @@ class CandidateGenerator:
     def _stem_suffix_candidates(self, word: str) -> Tuple[list, list]:
         roots: list = []
         suffixes: list = []
+        low = to_lower(word)
+        upper = _STARTS_UPPER.match(word) is not None
+        # Turkish lowering is per code point except for the Greek final
+        # sigma, so the root and suffix of every split are slices of the
+        # one lowered word; otherwise each slice is lowered on its own
+        sliced = len(low) == len(word) and "Σ" not in word
+        head = _asciify(word[:1]).upper()
+        sdic = self.suffix_dic
         for i in range(1, len(word)):
-            root, suffix = word[:i], to_lower(word[i:])
-            self._add(to_lower(root), suffix, roots, suffixes)
-            if _STARTS_UPPER.match(root):
-                self._add(capitalize(root), suffix, roots, suffixes)
+            suffix = low[i:] if sliced else to_lower(word[i:])
+            # _add emits only `suffix` or `rest`, and _tags_for_suffix
+            # resolves only the empty suffix, a table key or "'" + a key:
+            # a split where neither resolves yields no candidate
+            rest = suffix[1:]
+            if not (suffix in sdic or not rest or rest in sdic
+                    or (rest[0] == "'" and rest[1:] in sdic)):
+                continue
+            self._add(low[:i] if sliced else to_lower(word[:i]), suffix,
+                      roots, suffixes)
+            if upper:
+                if not sliced:
+                    cap = capitalize(word[:i])
+                elif i > 1:
+                    cap = head + low[1:i]
+                else:
+                    cap = word[0]  # capitalize() leaves one letter as it is
+                self._add(cap, suffix, roots, suffixes)
         suffixes.append("")
-        roots.append(to_lower(word))
-        if _STARTS_UPPER.match(word):
+        roots.append(low)
+        if upper:
             suffixes.append("")
             roots.append(capitalize(word))
         roots = [_ROOT_TRANSFORM.get(r, r) for r in roots]
@@ -459,7 +491,14 @@ class CandidateGenerator:
 
     # --- tag lookup -----------------------------------------------------
 
-    def _tags_for_suffix(self, suffix: str, stem_tags=None) -> list:
+    def _parsed_tags(self, suffix: str) -> tuple:
+        """``(first, seq, joined)`` per tag of ``suffix``, in sorted tag
+        order: ``first`` is the tag the stem must carry, ``seq`` the split
+        tag sequence and ``joined`` its analysis-string form.  Memoized
+        per suffix; bounded by the suffix table."""
+        hit = self._parsed.get(suffix)
+        if hit is not None:
+            return hit
         if suffix:
             if suffix in self.suffix_dic:
                 tags = list(self.suffix_dic[suffix])
@@ -468,22 +507,26 @@ class CandidateGenerator:
             elif suffix.startswith("'") and suffix[1:] in self.suffix_dic:
                 tags = list(self.suffix_dic[suffix[1:]])
             else:
-                return []
+                return ()
         else:
             tags = list(self.suffix_dic.get("null", []))
         res = []
         for tag in sorted(set(tags)):
-            seq = _TAG_SEP.split(tag)
+            seq = tuple(_TAG_SEP.split(tag))
             first = seq[0]
             if len(seq) > 1 and seq[1] in ("Prop", "Time"):
                 first = "+".join(seq[:2])
-            if stem_tags is None or first in stem_tags:
-                res.append(seq)
-        return res
+            res.append((first, seq, "+".join(seq).replace("+DB", "^DB")))
+        hit = self._parsed[suffix] = tuple(res)
+        return hit
+
+    def _tags_for_suffix(self, suffix: str, stem_tags=None) -> list:
+        return [list(seq) for first, seq, _j in self._parsed_tags(suffix)
+                if stem_tags is None or first in stem_tags]
 
     # --- candidate assembly --------------------------------------------
 
-    def get_analysis_candidates(self, word: str):
+    def _analysis_candidates(self, word: str):
         """Returns list of (root, suffix, tags) where tags is a list of tag
         strings, or the literal string 'Unknown' for the fallback."""
         low = to_lower(word)
@@ -510,9 +553,10 @@ class CandidateGenerator:
                     continue
             else:
                 stem_tags = list(self.stem_dic[root])
-                if not _STARTS_UPPER.match(root) and "Noun+Prop" in stem_tags:
+                upper = _STARTS_UPPER.match(root)
+                if not upper and "Noun+Prop" in stem_tags:
                     stem_tags.remove("Noun+Prop")
-                elif _STARTS_UPPER.match(root) and "Noun+Prop" in stem_tags:
+                elif upper and "Noun+Prop" in stem_tags:
                     stem_tags = ["Noun+Prop"]
                 elif (
                     suffix.startswith("'")
@@ -520,15 +564,20 @@ class CandidateGenerator:
                     and "Noun+Prop" in stem_tags
                 ):
                     stem_tags = ["Noun+Prop"]
-                elif _STARTS_UPPER.match(root):
+                elif upper:
                     continue
-            for tag_seq in self._tags_for_suffix(suffix, stem_tags):
-                key = to_lower(root) + "+" + "+".join(tag_seq).replace("+DB", "^DB")
+            lroot = None
+            for first, seq, joined in self._parsed_tags(suffix):
+                if first not in stem_tags:
+                    continue
+                if lroot is None:
+                    lroot = to_lower(root)
+                key = lroot + "+" + joined
                 if key not in seen:
                     seen.add(key)
-                    out.append((to_lower(root), suffix, tag_seq))
+                    out.append((lroot, suffix, list(seq)))
         if not out:
-            out.append((to_lower(word), "", "Unknown"))
+            out.append((low, "", "Unknown"))
         return out
 
 
@@ -1351,6 +1400,54 @@ def _analyze_one(token: str, sent_final: bool, non_initial: bool,
 
 _CASE_TAGS = ("Acc", "Dat", "Loc", "Abl", "Gen", "Ins", "Nom")
 
+# analysis strings whose tag split and context class are kept (LRU): the
+# post-passes re-read one sentence's analyses, so a small bound serves them
+_TAG_SPLIT_MEMO_MAX = 2048
+
+
+@lru_cache(maxsize=_TAG_SPLIT_MEMO_MAX)
+def _tag_split(analysis: str) -> list:
+    """``_TAG_SEP.split(analysis)``, memoized for the post-passes that
+    re-read every chosen analysis; the list is shared, so callers must
+    not mutate it."""
+    return _TAG_SEP.split(analysis)
+
+
+@lru_cache(maxsize=_TAG_SPLIT_MEMO_MAX)
+def _context_case(analysis: str) -> str:
+    """The left-context class a chosen analysis hands the next token's
+    disambiguation: its case, with bare-Nom split into the classes
+    below (memoized; a pure function of the analysis string)."""
+    tags = set(analysis.split("+"))
+    prev_case = next((c for c in _CASE_TAGS if c in tags), "")
+    if prev_case == "Nom" and tags & {"P3sg", "P3pl", "P1sg", "P1pl",
+                                      "P2sg", "P2pl"}:
+        # possessed-Nom is its own context class: it heads izafet
+        # chains rather than feeding them (ekibi TARİHİ konağı ...)
+        prev_case = "NomP"
+    elif prev_case == "Nom" and "A3pl" in tags and "Pnon" in tags:
+        # a PLURAL bare-Nom is its own class too: it licenses izafet
+        # only for institutional heads (Bakanlar Kurulu), not the
+        # open class — see the P3sg+Nom demotion in score()
+        prev_case = "NomPl"
+    elif (prev_case == "Nom" and "A3sg" in tags
+          and not _tag_split(analysis)[1:2] == ["Adj"]
+          and "DB" not in analysis
+          and "Adj" in _engine()[0].stem_dic.get(
+              analysis.split("+", 1)[0], ())):
+        # a bare Noun/Adj DUAL stem (kaçak, dolu) licenses singular
+        # izafet heads (dolu YAĞIŞI) but not PLURAL possessed ones
+        # (kaçak YAPILARI = the Acc object of a transitive, with
+        # kaçak attributive) — see the matching demotion in score().
+        # QUALITY duals (kışlık, yazlık, antika) never head plural
+        # izafet at all (kışlık LASTİKLERİ is attributive + Acc),
+        # while substance duals keep it (DOLU taneleri = hailstones)
+        prev_case = ("NomDq"
+                     if analysis.split("+", 1)[0]
+                     in ("kışlık", "yazlık", "antika")
+                     else "NomD")
+    return prev_case
+
 # bare time-period nouns that head "X sonunda/başında" izafet frames
 _PERIOD_ROOTS = {"yıl", "hafta", "ay", "gün", "sezon", "dönem", "yüzyıl",
                  "asır", "maç", "film", "toplantı", "konser", "ders",
@@ -1366,15 +1463,17 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     noun); it is part of the bounded cache key."""
     out = []
     n = len(tokens)
+    lows = [to_lower(t) for t in tokens]
+    non_word = [_NON_WORD.match(t) is not None for t in tokens]
     # trailing-punct run: every token at or after this position is NON_WORD
     tail = n
-    while tail > 0 and _NON_WORD.match(tokens[tail - 1]):
+    while tail > 0 and non_word[tail - 1]:
         tail -= 1
     prev_case = ""
     for idx, token in enumerate(tokens):
         sent_final = idx >= tail - 1
-        next_coord = _next_is_coord(tokens, idx)
-        prev_is_punct = idx > 0 and bool(_NON_WORD.match(tokens[idx - 1]))
+        next_coord = _next_is_coord(lows, idx)
+        prev_is_punct = idx > 0 and non_word[idx - 1]
         analysis = _analyze_one(token, sent_final, idx > 0, prev_case,
                                 next_coord, prev_is_punct)
         if (
@@ -1400,34 +1499,7 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
             # whole-word adverb otherwise outscores the possessed noun
             analysis = "son+Noun+A3sg+P3sg+Loc"
         out.append(analysis)
-        tags = set(analysis.split("+"))
-        prev_case = next((c for c in _CASE_TAGS if c in tags), "")
-        if prev_case == "Nom" and tags & {"P3sg", "P3pl", "P1sg", "P1pl",
-                                          "P2sg", "P2pl"}:
-            # possessed-Nom is its own context class: it heads izafet
-            # chains rather than feeding them (ekibi TARİHİ konağı ...)
-            prev_case = "NomP"
-        elif prev_case == "Nom" and "A3pl" in tags and "Pnon" in tags:
-            # a PLURAL bare-Nom is its own class too: it licenses izafet
-            # only for institutional heads (Bakanlar Kurulu), not the
-            # open class — see the P3sg+Nom demotion in score()
-            prev_case = "NomPl"
-        elif (prev_case == "Nom" and "A3sg" in tags
-              and not _TAG_SEP.split(analysis)[1:2] == ["Adj"]
-              and "DB" not in analysis
-              and "Adj" in _engine()[0].stem_dic.get(
-                  analysis.split("+", 1)[0], ())):
-            # a bare Noun/Adj DUAL stem (kaçak, dolu) licenses singular
-            # izafet heads (dolu YAĞIŞI) but not PLURAL possessed ones
-            # (kaçak YAPILARI = the Acc object of a transitive, with
-            # kaçak attributive) — see the matching demotion in score().
-            # QUALITY duals (kışlık, yazlık, antika) never head plural
-            # izafet at all (kışlık LASTİKLERİ is attributive + Acc),
-            # while substance duals keep it (DOLU taneleri = hailstones)
-            prev_case = ("NomDq"
-                         if analysis.split("+", 1)[0]
-                         in ("kışlık", "yazlık", "antika")
-                         else "NomD")
+        prev_case = _context_case(analysis)
     # LVC-nominal repair (needs RIGHT context the per-token pass lacks):
     # a chosen finite-verb reading directly before a light-verb finite
     # (tahliyesine KARAR verdi = karar the noun + ver-, never kar+Aor +
@@ -1437,17 +1509,17 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     # (çıkar çıkmaz).
     gen, _dis = _engine()
     for idx in range(len(out) - 1):
-        tags_i = set(_TAG_SEP.split(out[idx]))
+        tags_i = set(_tag_split(out[idx]))
         if "Verb" not in tags_i or not tags_i & {"Aor", "Past", "Prog1",
                                                  "Fut", "Narr"}:
             continue
-        nxt = _TAG_SEP.split(out[idx + 1])
+        nxt = _tag_split(out[idx + 1])
         if "Verb" not in nxt or nxt[0] not in ("ver", "et", "yap", "ol",
                                                "al", "kıl", "bulun"):
             continue
         if not {"Aor", "Past", "Prog1", "Fut", "Narr", "Imp"} & set(nxt):
             continue
-        low = to_lower(tokens[idx])
+        low = lows[idx]
         if low != out[idx].split("+", 1)[0] and "Noun" in gen.stem_dic.get(
                 low, ()):
             out[idx] = low + "+Noun+A3sg+Pnon+Nom"
@@ -1460,13 +1532,13 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
         if ("+Inf2+" not in out[idx].replace("^", "+")
                 or not out[idx].endswith("+A3pl+Pnon+Acc")):
             continue
-        prv = _TAG_SEP.split(out[idx - 1])
+        prv = _tag_split(out[idx - 1])
         if not ("Noun" in prv and "Pnon" in prv and "Nom" in prv):
             continue
         nxt_verb = next((a for a in out[idx + 1:]
-                         if "Verb" in _TAG_SEP.split(a)
-                         and "Inf2" not in _TAG_SEP.split(a)), None)
-        if nxt_verb is not None and "Pass" in _TAG_SEP.split(nxt_verb):
+                         if "Verb" in _tag_split(a)
+                         and "Inf2" not in _tag_split(a)), None)
+        if nxt_verb is not None and "Pass" in _tag_split(nxt_verb):
             out[idx] = out[idx].replace("+A3pl+Pnon+Acc",
                                         "+A3pl+P3sg+Nom")
     # every Turkish prose sentence needs a predicate: when NO chosen
@@ -1482,7 +1554,7 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     # Bare copula-less equational sentences (Hedef büyüme. / Sonuç
     # başarı.) carry no such argument and keep their nominal reading
     # even when the final word has an Aor/Past noun-verb homograph.
-    if not any("Verb" in _TAG_SEP.split(a) for a in out):
+    if not any("Verb" in _tag_split(a) for a in out):
         for idx in range(len(out) - 1, -1, -1):
             if not any(ch.isalpha() for ch in tokens[idx]):
                 continue
@@ -1492,7 +1564,7 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
                     # object shape (hamuru = hamur+P3sg+Nom / +Acc)
                     # and counts as argument evidence too
                     or {"P3sg", "Nom"} <= set(tg)
-                    for tg in (_TAG_SEP.split(out[j])
+                    for tg in (_tag_split(out[j])
                                for j in range(idx))):
                 break
             for root, sfx, tags in gen.get_analysis_candidates(
@@ -1513,8 +1585,8 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     for idx in range(1, len(out) - 1):
         if out[idx] != "kalan+Noun+A3sg+Pnon+Nom":
             continue
-        prv = _TAG_SEP.split(out[idx - 1])
-        nxt = _TAG_SEP.split(out[idx + 1])
+        prv = _tag_split(out[idx - 1])
+        nxt = _tag_split(out[idx + 1])
         if ("Noun" in prv and "Pnon" in prv and "Nom" in prv
                 and "Noun" in nxt):
             out[idx] = "kal+Verb+Pos^DB+Adj+PresPart"
@@ -1528,13 +1600,13 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
         # candidate only exists for these prefixes — skipping the
         # candidate-generator call for everything else keeps this pass
         # out of the kernel's hot path
-        if not to_lower(tokens[idx]).startswith(
+        if not lows[idx].startswith(
                 ("ed", "et", "ol", "yap", "kıl", "bulun")):
             continue
-        tags_i = _TAG_SEP.split(out[idx])
+        tags_i = _tag_split(out[idx])
         if "Verb" in tags_i:
             continue
-        prv = _TAG_SEP.split(out[idx - 1])
+        prv = _tag_split(out[idx - 1])
         if not (prv[0:1] and "Noun" in prv and "Pnon" in prv
                 and "Nom" in prv):
             continue
@@ -1563,7 +1635,7 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     for idx in range(len(out) - 1):
         if out[idx] != "son+Adj":
             continue
-        nxt = _TAG_SEP.split(out[idx + 1])
+        nxt = _tag_split(out[idx + 1])
         if ("Verb" in nxt and nxt[0] in ("ver", "bul")
                 and {"Aor", "Past", "Prog1", "Fut", "Narr",
                      "Imp"} & set(nxt)):
@@ -1578,12 +1650,12 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
         cur = out[idx]
         if cur.count("+") != 1 or not cur.endswith("+Adj"):
             continue
-        nxt = _TAG_SEP.split(out[idx + 1])
+        nxt = _tag_split(out[idx + 1])
         if ("Verb" not in nxt
                 or not {"Aor", "Past", "Prog1", "Fut", "Narr"}
                 & set(nxt)):
             continue
-        prv = _TAG_SEP.split(out[idx - 1])
+        prv = _tag_split(out[idx - 1])
         prv_stem = prv[0]
         # final derivation segment's PoS: a derived adjective (yaşlı =
         # yaş+With, kiralık = kira+Ness) is attributive-capable too
@@ -1599,7 +1671,7 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
                          and "Nom" in prv))
         if not prev_attr:
             continue
-        earlier = [set(_TAG_SEP.split(out[j])) for j in range(idx - 1)]
+        earlier = [set(_tag_split(out[j])) for j in range(idx - 1)]
         if not any("Acc" in t for t in earlier):
             continue
         if not any("Noun" in t and "Pnon" in t and "Nom" in t
@@ -1630,12 +1702,12 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     for idx in range(1, len(out)):
         if out[idx] != "düşünce+Noun+A3sg+Pnon+Nom":
             continue
-        prv = set(_TAG_SEP.split(out[idx - 1]))
+        prv = set(_tag_split(out[idx - 1]))
         if not ({"Noun", "Nom"} <= prv or {"Noun", "Acc"} <= prv):
             continue
-        if any("Verb" in _TAG_SEP.split(out[j])
+        if any("Verb" in _tag_split(out[j])
                and {"Aor", "Past", "Prog1", "Fut", "Narr"}
-               & set(_TAG_SEP.split(out[j]))
+               & set(_tag_split(out[j]))
                for j in range(idx + 1, len(out))):
             out[idx] = "düş+Verb+Pos+When"
     # a -mA deverbal nominal whose surface collides with a RARE noun's
@@ -1645,10 +1717,10 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     # (YÜKLEME bitince ambarı mühürledi).  Scoped to the phase class so
     # "bu ANLAMA gelir" keeps anlam+Dat.
     for idx in range(len(out) - 1):
-        parts = _TAG_SEP.split(out[idx])
+        parts = _tag_split(out[idx])
         if parts[-1:] != ["Dat"] or parts[0:1] == ["Verb"]:
             continue
-        nxt = _TAG_SEP.split(out[idx + 1])
+        nxt = _tag_split(out[idx + 1])
         if "Verb" not in nxt or nxt[0] not in ("bit", "başla", "sür",
                                                "tamamlan", "uza"):
             continue
@@ -1669,10 +1741,10 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     # reading does not exist for this closed class.  Copular/light verbs
     # keep the predicative adjective (resmi OLDU).
     for idx in range(1, len(out) - 1):
-        low = to_lower(tokens[idx])
+        low = lows[idx]
         if low not in _LOAN_I_ACC_ADJS or out[idx] != low + "+Adj":
             continue
-        nxt = _TAG_SEP.split(out[idx + 1])
+        nxt = _tag_split(out[idx + 1])
         if ("Verb" not in nxt
                 or nxt[0] in ("et", "ol", "kıl", "bulun", "gel",
                               "görün", "dur", "kal", "say", "ver",
@@ -1684,7 +1756,7 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
                         "Narr"} & set(nxt)):
             continue
         if not any(
-            "Noun" in _TAG_SEP.split(o) and "Nom" in _TAG_SEP.split(o)
+            "Noun" in _tag_split(o) and "Nom" in _tag_split(o)
             for o in out[:idx]
         ):
             continue
@@ -1705,17 +1777,17 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     # unlike tarih/merkez, whose possessed readings are everyday izafet
     # heads (ülke tarihi, şehir merkezi) and stay untouched
     for idx in range(len(out) - 1):
-        low = to_lower(tokens[idx])
+        low = lows[idx]
         if low not in ("askeri", "resmi", "dini", "madeni"):
             continue
-        parts = _TAG_SEP.split(out[idx])
+        parts = _tag_split(out[idx])
         if parts[0] not in ("asker", "resim", "din", "maden") \
                 or "P3sg" not in parts:
             continue
         # the HOST test reads the final derivation group's PoS, so a
         # deverbal noun host counts (resmi AÇILIŞLA başladı: açılış =
         # aç+Pass+Inf3 ends Noun)
-        nxt_parts = _TAG_SEP.split(out[idx + 1])
+        nxt_parts = _tag_split(out[idx + 1])
         if "DB" in nxt_parts:
             last_db = len(nxt_parts) - 1 - nxt_parts[::-1].index("DB")
             nxt_pos = nxt_parts[last_db + 1] \
@@ -1730,18 +1802,18 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     # ekipleri kaçak YAPILARI mühürledi); sentence-initially the izafet
     # stands (DOLU taneleri camları kırdı)
     for idx in range(1, len(out) - 1):
-        low = to_lower(tokens[idx])
-        parts = _TAG_SEP.split(out[idx])
+        low = lows[idx]
+        parts = _tag_split(out[idx])
         if (parts[0] == low
                 and parts[1:2] == ["Noun"] and "Pnon" in parts
                 and "Nom" in parts and "A3sg" in parts
                 and "Adj" in gen.stem_dic.get(low, ())):
-            nxt = _TAG_SEP.split(out[idx + 1])
+            nxt = _tag_split(out[idx + 1])
             if not ("A3pl" in nxt and "P3sg" in nxt and "Nom" in nxt
                     and "Noun" in nxt):
                 continue
             if not any(
-                "Noun" in _TAG_SEP.split(o) and "Nom" in _TAG_SEP.split(o)
+                "Noun" in _tag_split(o) and "Nom" in _tag_split(o)
                 for o in out[:idx]
             ):
                 continue
@@ -1763,12 +1835,12 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     # sineması, YALNIZ kadın); the adverb reading needs a verb or
     # clause-level scope
     for idx in range(len(out) - 1):
-        low = to_lower(tokens[idx])
+        low = lows[idx]
         if out[idx] != low + "+Adverb":
             continue
         if "Adj" not in gen.stem_dic.get(low, ()):
             continue
-        nxt_parts = _TAG_SEP.split(out[idx + 1])
+        nxt_parts = _tag_split(out[idx + 1])
         if ("Noun" in nxt_parts and "Verb" not in nxt_parts
                 and "Pnon" in nxt_parts
                 and ("Nom" in nxt_parts
@@ -1777,9 +1849,9 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
     # clock-time frame: a numeral-Loc reading directly after bare "saat"
     # beats the pronoun homograph (Tören saat ONDA başladı != 'in it')
     for idx in range(1, len(out)):
-        if to_lower(tokens[idx - 1]) != "saat":
+        if lows[idx - 1] != "saat":
             continue
-        if "Pron" not in _TAG_SEP.split(out[idx]):
+        if "Pron" not in _tag_split(out[idx]):
             continue
         num_loc = next(
             (f"{root}+" + "+".join(tags).replace("+DB+", "^DB+")

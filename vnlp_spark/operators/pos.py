@@ -40,6 +40,8 @@ from .morphology import (
     _LOAN_I_ACC_ADJS,
     _MATERIAL_NOUNS,
     _MORPH_TO_UPOS,
+    _engine,
+    _unknown_fallback_candidates,
     py_analyze_tokens,
     to_lower,
     upos_from_analysis,
@@ -59,8 +61,6 @@ def _readings(token: str) -> frozenset:
     generator (cached; used for context disambiguation in the adjusted-POS
     layer and the parser — 'can this word be a bare adjective / a plain
     noun / both Acc and P3sg+Nom?')."""
-    from .morphology import _engine, _unknown_fallback_candidates
-
     gen, _dis = _engine()
     cands = gen.get_analysis_candidates(token)
     if all(isinstance(t, str) or t == ["Unknown"] for _r, _s, t in cands):
@@ -208,8 +208,6 @@ def _zero_cop_class(analysis: str) -> str:
     gs = analysis.replace("^", "+").split("+DB+")
     if len(gs) < 2:
         return ""
-    from .morphology import to_lower as _tl
-
     pre = gs[-2]
     parts = pre.split("+")
     pre_set = set(parts)
@@ -219,7 +217,7 @@ def _zero_cop_class(analysis: str) -> str:
     pre_bare = pre is gs[0] or {"Pnon", "Nom"} <= pre_set
     if pre_bare and (
         gs[0].split("+")[1:2] == ["Adj"]
-        or _tl(gs[0].split("+")[0]) in _LOAN_ADJS
+        or to_lower(gs[0].split("+")[0]) in _LOAN_ADJS
     ):
         return "Adj"
     pos = parts[1] if len(gs) == 2 and len(parts) > 1 else parts[0]
@@ -268,10 +266,12 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     participles as subordinate verbs, noun/adjective homographs resolved
     by the following token.  Shared by py_pos_tags and the parser."""
     n = len(tokens)
+    lows = [to_lower(t) for t in tokens]
+    tagsets = [set(a.replace("^", "+").split("+")) for a in analyses]
     out = list(upos)
     has_finite_verb = any(
         u == "VERB" and not (
-            set(analyses[i].replace("^", "+").split("+"))
+            tagsets[i]
             & {"Inf", "Inf2", "Inf3", "FutPart", "PastPart", "PresPart"}
         )
         for i, u in enumerate(upos)
@@ -287,7 +287,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     if (
         n > 1
         and upos[0] == "ADJ"
-        and to_lower(tokens[0]) in _ROLE_NOUN_ADJS
+        and lows[0] in _ROLE_NOUN_ADJS
         and upos[1] in ("NOUN", "PROPN")
         and (_case_of(analyses[1]) not in ("Nom", "")
              or "acc" in _readings(tokens[1]))
@@ -297,8 +297,8 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
         out = list(out)
         out[0] = "NOUN"
     for i in range(n):
-        low = to_lower(tokens[i])
-        tags = set(analyses[i].replace("^", "+").split("+"))
+        low = lows[i]
+        tags = tagsets[i]
         if low in _EXISTENTIALS:
             out[i] = "ADJ"
         elif (
@@ -320,12 +320,11 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                  or (out[i] == "VERB" and "PresPart" in tags))
             and _CAP_RE.match(tokens[i])
             and "Prop" not in tags
-            and (to_lower(tokens[i - 1]).split("'")[0] in _TITLES
+            and (lows[i - 1].split("'")[0] in _TITLES
                  # POSSESSED title forms select persons too (belediye
                  # BAŞKANI Akın, kulüp müdürü Aydın): match by root
                  or (analyses[i - 1].split("+", 1)[0] in _TITLES
-                     and "P3sg" in set(analyses[i - 1]
-                                       .replace("^", "+").split("+"))))
+                     and "P3sg" in tagsets[i - 1]))
             and out[i - 1] == "NOUN"
             and (_CAP_RE.match(tokens[i - 1])
                  or analyses[i - 1].split("+", 1)[0] in _TITLES)
@@ -344,8 +343,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             and (
                 (out[i + 1] in ("NOUN", "PROPN")
                  and _case_of(analyses[i + 1]) in ("Nom", "")
-                 and "Pnon" in set(analyses[i + 1].replace("^", "+")
-                                   .split("+")))
+                 and "Pnon" in tagsets[i + 1])
                 # determiner 'bir' may intervene between the attributive
                 # homograph and its nominal host (ÜNLÜ bir mimar) — the
                 # host may then carry any case, the DET proves the
@@ -360,8 +358,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                     and _case_of(analyses[i + 1]) == "Gen"
                     and i + 2 < n
                     and out[i + 2] in ("NOUN", "PROPN")
-                    and {"P3sg", "P3pl"} & set(
-                        analyses[i + 2].replace("^", "+").split("+")))
+                    and {"P3sg", "P3pl"} & tagsets[i + 2])
             )
         ):
             # whole-word noun with a derivational-adjective homograph
@@ -394,8 +391,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             and any(
                 out[j] == "VERB"
                 and (analyses[j].split("+", 1)[0] in _TRANSITIVE_ROOTS
-                     or "Caus" in set(analyses[j]
-                                      .replace("^", "+").split("+")))
+                     or "Caus" in tagsets[j])
                 for j in range(i + 2, n)
             )
         ):
@@ -420,7 +416,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             )
             and any(
                 out[j] == "VERB"
-                and not set(analyses[j].replace("^", "+").split("+"))
+                and not tagsets[j]
                 & {"A1sg", "A2sg", "A1pl", "A2pl"}
                 for j in range(i + 1, n)
             )
@@ -472,7 +468,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
         elif (
             low == "yerine"
             and i > 0
-            and "Inf" in set(analyses[i - 1].replace("^", "+").split("+"))
+            and "Inf" in tagsets[i - 1]
         ):
             # 'instead of V-ing' (artırmak YERİNE): grammaticalized ADP
             # over the infinitive clause; after plain nominals the
@@ -510,8 +506,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             and out[i] == "NOUN"
             and all(out[j] == "PUNCT" for j in range(i + 1, n))
             and any(out[j] == "VERB"
-                    and "Inf" in set(analyses[j].replace("^", "+")
-                                     .split("+"))
+                    and "Inf" in tagsets[j]
                     for j in range(i))
         ):
             # zero-copula prohibition/permission predicate over an
@@ -589,7 +584,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
         elif low in _DEGREE_ADVS:
             nxt = out[i + 1] if i + 1 < n else ""
             if nxt in ("ADJ", "ADV", "VERB") or (
-                i + 1 < n and to_lower(tokens[i + 1]) in _DEGREE_ADVS
+                i + 1 < n and lows[i + 1] in _DEGREE_ADVS
             ):
                 out[i] = "ADV"
         elif out[i] == "NOUN" and (
@@ -619,8 +614,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                     # stays the ccomp verb via the case disjunct above
                     or (out[pv] == "NOUN"
                         and _case_of(analyses[pv]) in ("Nom", "")
-                        and "Pnon" in set(
-                            analyses[pv].replace("^", "+").split("+"))
+                        and "Pnon" in tagsets[pv]
                         and (not tags & {"P1sg", "P2sg", "P3sg",
                                          "P1pl", "P2pl", "P3pl"}
                              # light-verb roots keep the VERB reading:
@@ -635,7 +629,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                             and _case_of(analyses[j]) in ("Nom", "")
                             for j in range(0, pv)))
                 ))(next((k for k in range(i - 1, -1, -1)
-                         if to_lower(tokens[k]) not in ("de", "da")),
+                         if lows[k] not in ("de", "da")),
                         i - 1)))
             # a bare-Nom possessed -mA nominalization with its own
             # GENITIVE subject on the left is a clausal subject, still a
@@ -670,7 +664,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                                         "DET")
                      # a following pronoun cannot be determined even if
                      # its own conversion has not run yet
-                     and to_lower(tokens[i + 1]) not in _LEX_PRONOUNS)
+                     and lows[i + 1] not in _LEX_PRONOUNS)
         ):
             # a demonstrative with nothing to determine is the pronoun
             # (BU onların kararı; Bunu gördüm -> already PRON by case)
@@ -718,7 +712,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             # the next token may be a nominalized verb whose own NOUN ->
             # VERB rewrite runs later in this pass: read the analysis
             and (out[i + 1] == "VERB"
-                 or "Verb" in analyses[i + 1].replace("^", "+").split("+"))
+                 or "Verb" in tagsets[i + 1])
         ):
             # the bare interrogative directly before a verb is the
             # wh-adverb 'why' (fiyatların NEDEN arttığını açıkladı);
@@ -731,8 +725,8 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             and out[i + 1] in ("NOUN", "PROPN")
             # the reduplication 'tek tek' keeps NUM for the later
             # ADV-pair rewrite
-            and to_lower(tokens[i + 1]) != "tek"
-            and not (i > 0 and to_lower(tokens[i - 1]) == "tek")
+            and lows[i + 1] != "tek"
+            and not (i > 0 and lows[i - 1] == "tek")
         ):
             # 'tek' before ANY noun is the adjective 'single/sole'
             # (TEK başına taşıyamadı, takımın TEK golü, TEK şeride
@@ -755,8 +749,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                 # a POSSESSED Nom nominal is the Acc-ambiguous OBJECT
                 # shape, not a bare predicate (Çevirmen raporu ANCAK
                 # sabah bitirdi keeps the focalizer reading)
-                and not (set(analyses[i - 1].replace("^", "+")
-                             .split("+"))
+                and not (tagsets[i - 1]
                          & {"P1sg", "P2sg", "P3sg",
                             "P1pl", "P2pl", "P3pl"})
                 and any(out[j] in ("NOUN", "PROPN", "PRON")
@@ -772,7 +765,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             out[i] = "ADV"
         elif (
             low == "ne"
-            and sum(1 for t in tokens if to_lower(t) == "ne") >= 2
+            and sum(1 for t in lows if t == "ne") >= 2
             and i + 1 < n and out[i + 1] in ("NOUN", "PROPN", "ADJ",
                                              "VERB", "NUM")
         ):
@@ -817,8 +810,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                           # later in this pass: a copular/verbal host read
                           # from the analysis counts (riskli OLDUĞUNU
                           # savunuyor keeps the predicative adjective)
-                          or "Verb" in analyses[i + 1].replace("^", "+")
-                          .split("+")))
+                          or "Verb" in tagsets[i + 1]))
             # a conjunct chain of adjectives closing the sentence is a
             # zero-copula coordinated predicate: every token after this
             # one being CCONJ/ADJ/PUNCT keeps the adjective reading
@@ -866,15 +858,14 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                      # nominal-chain member — it will be rewritten ADP
                      # over the host, which keeps the homograph
                      # attributive (KAÇAK avlanma nedeniyle)
-                     and to_lower(tokens[i + 2]) not in _GRAMMAT_ADPS
+                     and lows[i + 2] not in _GRAMMAT_ADPS
                      and (_case_of(analyses[i + 2]) in ("Nom", "")
                           or _is_possessed(tokens[i + 2], analyses[i + 2])
                           # an overtly case-marked POSSESSED tail is a
                           # chain too (SEYİS yarış atını eyerledi: the
                           # izafet object ends the chain, the homograph
                           # is the subject)
-                          or set(analyses[i + 2].replace("^", "+")
-                                 .split("+"))
+                          or tagsets[i + 2]
                           & {"P1sg", "P2sg", "P3sg",
                              "P1pl", "P2pl", "P3pl"})
                      # ... unless that third nominal is a light-verb
@@ -906,8 +897,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                  # with a left subject and a transitive/LVC frame, is
                  # case-marked in effect (Kaportacı EZİK çamurluğu
                  # tamir etti)
-                 or ("P3sg" in set(analyses[i + 1].replace("^", "+")
-                                   .split("+"))
+                 or ("P3sg" in tagsets[i + 1]
                      and "acc" in _readings(tokens[i + 1])
                      and any(
                          out[j] == "NOUN"
@@ -920,8 +910,8 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             # grammaticalized postpositions is NOMINAL: the homograph is
             # the agent/complement, never attributive over the frame
             # word itself (açılışı BAKAN tarafından yapıldı)
-            and to_lower(tokens[i + 1]) != "tarafından"
-            and to_lower(tokens[i + 1]) not in _GRAMMAT_ADPS
+            and lows[i + 1] != "tarafından"
+            and lows[i + 1] not in _GRAMMAT_ADPS
             # mid-sentence capitals are names; a SENTENCE-INITIAL capital
             # is attributive when a later bare nominal can be the subject
             # (YABANCI yatırımcılarla görüşmeler sürüyor), the subject
@@ -943,20 +933,19 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             # a possessed SPATIAL relational host takes the bare noun as
             # its nmod, not an amod (kağıt ÜZERİNDE kusursuz görünüyor)
             and not (analyses[i + 1].split("+", 1)[0] in _SPATIAL_ROOTS
-                     and "P3sg" in set(analyses[i + 1]
-                                       .replace("^", "+").split("+")))
+                     and "P3sg" in tagsets[i + 1])
             and "Agt" not in tags
             # a lexicalized adverb surface (yakında, önceden) is about
             # to be rewritten ADV: the homograph then has no nominal to
             # modify and stays the subject noun (hasta YAKINDA iyileşecek)
-            and to_lower(tokens[i + 1]) not in _TEMPORAL_ADVS
+            and lows[i + 1] not in _TEMPORAL_ADVS
             # an ablative comparative frame keeps the noun: the Abl is
             # the predicate's standard of comparison, not an argument
             # the homograph must escape (Bu KUMAŞ diğerinden daha
             # yumuşak)
             and not (_case_of(analyses[i + 1]) == "Abl"
                      and i + 2 < n
-                     and to_lower(tokens[i + 2]) in _DEGREE_ADVS)
+                     and lows[i + 2] in _DEGREE_ADVS)
         ):
             # noun/adjective homograph before a CASE-MARKED nominal it
             # cannot compound with is the adjective (yabancı liderlerle
@@ -1045,7 +1034,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
         if (
             out[i] in ("ADJ", "NOUN")
             and _CAP_RE.match(tokens[i])
-            and to_lower(tokens[i - 1]) in _TITLES
+            and lows[i - 1] in _TITLES
             and out[i - 1] in ("NOUN", "PROPN")
             and _CAP_RE.match(tokens[i - 1])
         ):
@@ -1068,7 +1057,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             and "'" not in tokens[i] and "’" not in tokens[i]
         ):
             continue
-        low = to_lower(tokens[i])
+        low = lows[i]
         if ("'" in tokens[i] or "’" in tokens[i]) and out[i] == "NOUN":
             out[i] = "PROPN"
             continue
@@ -1087,7 +1076,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
         )
         neighbor_cap = (
             (i + 1 < n and out[i + 1] in ("NOUN", "PROPN")
-             and _CAP_RE.match(tokens[i + 1]) and to_lower(tokens[i + 1]) not in _TITLES
+             and _CAP_RE.match(tokens[i + 1]) and lows[i + 1] not in _TITLES
              and not fwd_izafet)
             or (i > 0 and out[i - 1] in ("NOUN", "PROPN")
                 and _CAP_RE.match(tokens[i - 1]))
@@ -1102,10 +1091,10 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
         if (
             out[i] == "NOUN"
             and _CAP_RE.match(tokens[i])
-            and to_lower(tokens[i]).split("'")[0] in _typed_gazetteer()[1]
-            and to_lower(tokens[i]) not in _TITLES
-            and not (i == 0 and (to_lower(tokens[i]) in _TEMPORAL_ROOTS
-                                 or _agentive_common(to_lower(tokens[i]))))
+            and lows[i].split("'")[0] in _typed_gazetteer()[1]
+            and lows[i] not in _TITLES
+            and not (i == 0 and (lows[i] in _TEMPORAL_ROOTS
+                                 or _agentive_common(lows[i])))
             # a SENTENCE-INITIAL gazetteer homograph whose common-noun
             # reading feeds a lowercase izafet head keeps the common
             # reading (ZİRAAT odası üreticilere fide dağıttı); the
@@ -1128,12 +1117,12 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             and analyses[i].count("+") == 1
             and analyses[i].endswith("+Adj")
             and "p3nom" in _readings(tokens[i])
-            and to_lower(tokens[i]) not in _CORE_ADJS
+            and lows[i] not in _CORE_ADJS
             # the asker/resim/din loan-î trio reads attributive before a
             # nominal (resmi RAKAMLARI açıkladı): their izafet-head uses
             # are rare, unlike kurul/oda/tarih/merkez (morphology.py's
             # sub-class rule chose the Adj deliberately)
-            and to_lower(tokens[i]) not in ("askeri", "resmi", "dini",
+            and lows[i] not in ("askeri", "resmi", "dini",
                                             "madeni")
             and out[i - 1] == "NOUN"
             and _case_of(analyses[i - 1]) in ("Nom", "")
@@ -1151,7 +1140,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             out[i] == "ADJ"
             and analyses[i].count("+") == 1
             and analyses[i].endswith("+Adj")
-            and to_lower(tokens[i]) in _LOAN_I_ACC_ADJS
+            and lows[i] in _LOAN_I_ACC_ADJS
             and out[i + 1] in ("NOUN", "PROPN")
             and _case_of(analyses[i + 1]) in ("Dat", "Loc", "Abl", "Ins")
             and not (i + 2 < n and out[i + 2] == "ADP")
@@ -1166,8 +1155,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                 # TATİLDE çalıştı)
                 and analyses[v].split("+", 1)[0] not in ("oyna", "çalış",
                                                          "yüz")
-                and "Pass" not in set(analyses[v].replace("^", "+")
-                                      .split("+"))
+                and "Pass" not in tagsets[v]
                 and not any(_case_of(analyses[j]) == "Acc"
                             for j in range(n) if j != i)
                 and not any(out[j] in ("NOUN", "PROPN")
@@ -1207,10 +1195,10 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     for i in range(1, n - 1):
         if (
             out[i] == "NOUN"
-            and analyses[i].split("+", 1)[0] != to_lower(tokens[i])
-            and (set(analyses[i].replace("^", "+").split("+")) & {"Acc"}
+            and analyses[i].split("+", 1)[0] != lows[i]
+            and (tagsets[i] & {"Acc"}
                  or ("Nom" in analyses[i]
-                     and set(analyses[i].replace("^", "+").split("+"))
+                     and tagsets[i]
                      & {"P3sg", "P3pl"}))
             and "bare_adj" in _readings(tokens[i])
             and out[i + 1] in ("NOUN", "PROPN")
@@ -1230,13 +1218,13 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     for i in range(1, n - 2):
         if (
             out[i] == "NOUN"
-            and analyses[i].split("+", 1)[0] != to_lower(tokens[i])
-            and (set(analyses[i].replace("^", "+").split("+")) & {"Acc"}
+            and analyses[i].split("+", 1)[0] != lows[i]
+            and (tagsets[i] & {"Acc"}
                  or ("Nom" in analyses[i]
-                     and set(analyses[i].replace("^", "+").split("+"))
+                     and tagsets[i]
                      & {"P3sg", "P3pl"}))
             and "bare_adj" in _readings(tokens[i])
-            and to_lower(tokens[i + 1]) == "bir"
+            and lows[i + 1] == "bir"
             and out[i + 2] in ("NOUN", "PROPN")
             and analyses[i + 2].split("+", 1)[0] not in _TEMPORAL_ROOTS
             and out[i - 1] in ("NOUN", "PROPN", "PRON", "NUM")
@@ -1261,8 +1249,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                  or (i + 2 < n and out[i + 2] in ("NOUN", "PROPN")
                      and "Pnon" in analyses[i + 1]
                      and "Nom" in analyses[i + 1]
-                     and {"P3sg", "P3pl"} & set(
-                         analyses[i + 2].replace("^", "+").split("+"))))
+                     and {"P3sg", "P3pl"} & tagsets[i + 2]))
         ):
             # ... but a sentence-final zero-copula predicate keeps the
             # adjectival reading (çok ETKİLEYİCİ.) unless a determiner
@@ -1277,10 +1264,10 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     for i in range(n - 2):
         if (
             out[i] == "NOUN"
-            and analyses[i].split("+", 1)[0] == to_lower(tokens[i])
+            and analyses[i].split("+", 1)[0] == lows[i]
             and "Pnon" in analyses[i] and "Nom" in analyses[i]
             and "bare_adj" in _readings(tokens[i])
-            and to_lower(tokens[i + 1]) == "bir"
+            and lows[i + 1] == "bir"
             and out[i + 1] == "DET"
             and out[i + 2] in ("NOUN", "PROPN")
             and not _CAP_RE.match(tokens[i])
@@ -1293,7 +1280,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     for i in range(n - 1):
         if (
             out[i] == "VERB"
-            and to_lower(tokens[i]) == "giderek"
+            and lows[i] == "giderek"
             and "ByDoingSo" in analyses[i]
             and out[i + 1] in ("VERB", "ADJ", "ADV")
             and not (i > 0 and _case_of(analyses[i - 1]) in ("Dat", "Abl"))
@@ -1306,7 +1293,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     for i in range(n - 1):
         if (
             out[i] == "NOUN"
-            and analyses[i].split("+", 1)[0] == to_lower(tokens[i])
+            and analyses[i].split("+", 1)[0] == lows[i]
             and "Pnon" in analyses[i] and "Nom" in analyses[i]
             and "bare_adj" in _readings(tokens[i])
             and out[i + 1] == "NOUN"
@@ -1321,7 +1308,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             # mühendisler tarafından inşa edildi)
             and not (i + 2 < n
                      and (out[i + 2] == "ADP"
-                          or to_lower(tokens[i + 2]) == "tarafından")
+                          or lows[i + 2] == "tarafından")
                      and not any(out[j] in ("NOUN", "PROPN", "PRON")
                                  for j in range(i)))
             # ... and not when the bare nominal is itself the bare
@@ -1333,8 +1320,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             # reading — the chain there is not yet resolved
             and not (i == 0 and i + 2 < n
                      and out[i + 2] in ("NOUN", "PROPN")
-                     and set(analyses[i + 2].replace("^", "+")
-                             .split("+"))
+                     and tagsets[i + 2]
                      & {"P1sg", "P2sg", "P3sg",
                         "P1pl", "P2pl", "P3pl"}
                      and _case_of(analyses[i + 2])
@@ -1349,7 +1335,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     for i in range(n):
         if out[i] != "NOUN" or "Unknown" not in analyses[i]:
             continue
-        low = to_lower(tokens[i])
+        low = lows[i]
         if len(low) < 5 or low[-2:] not in ("lı", "li", "lu", "lü"):
             continue
         stem_vowels = [c for c in low[:-2] if c in "aeıioöuü"]
@@ -1372,7 +1358,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     # adjective (Yemekler TAZE ama servis yavaş.)
     for i in range(1, n - 1):
         if (out[i] == "NOUN"
-                and analyses[i].split("+", 1)[0] == to_lower(tokens[i])
+                and analyses[i].split("+", 1)[0] == lows[i]
                 and "Pnon" in analyses[i] and "Nom" in analyses[i]
                 and "bare_adj" in _readings(tokens[i])
                 and out[i - 1] in ("NOUN", "PROPN")
@@ -1393,12 +1379,12 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     for i in range(1, n):
         if (out[i] == "NOUN"
                 and "bare_adj" in _readings(tokens[i])
-                and to_lower(tokens[i - 1]) in ("hem", "ne", "ya",
+                and lows[i - 1] in ("hem", "ne", "ya",
                                                 "gerek")
                 and not any(out[j] == "VERB" for j in range(n))):
             pair = next(
                 (j for j in range(i + 1, n - 1)
-                 if to_lower(tokens[j]) == to_lower(tokens[i - 1])),
+                 if lows[j] == lows[i - 1]),
                 None,
             )
             if pair is not None and out[pair + 1] == "ADJ":
@@ -1427,7 +1413,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     for i in range(n - 1):
         if (
             out[i] == "NOUN"
-            and to_lower(tokens[i]) == "geri"
+            and lows[i] == "geri"
             and "Pnon" in analyses[i] and "Nom" in analyses[i]
             and out[i + 1] == "VERB"
         ):
@@ -1439,7 +1425,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
     for i in range(n - 2):
         if (
             out[i] == "ADJ"
-            and to_lower(tokens[i]) in ("erken", "geç", "çabuk")
+            and lows[i] in ("erken", "geç", "çabuk")
             and out[i + 1] == "NOUN"
             and out[i + 2] == "VERB"
             and analyses[i + 2].split("+", 1)[0] in ("et", "yap", "ol",
@@ -1458,7 +1444,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
                 _case_of(analyses[i - 1]) == "Dat"
             ):
                 continue  # psych-verb frame: bana mantıklı geldi
-            low = to_lower(tokens[i])
+            low = lows[i]
             if ("bare_noun" in _readings(tokens[i])
                     and low not in _ADVERBIAL_ADJS
                     # loan adjectives' bare_noun reading is an artifact of
@@ -1482,7 +1468,7 @@ def adjust_upos(tokens: List[str], upos: List[str], analyses: List[str]) -> List
             out[i] == "ADJ"
             and analyses[i].count("+") == 1
             and analyses[i].endswith("+Adj")
-            and to_lower(tokens[i]) in _MATERIAL_NOUNS
+            and lows[i] in _MATERIAL_NOUNS
             and out[i + 1] in ("NOUN", "PROPN")
         ):
             out[i] = "NOUN"
