@@ -1661,7 +1661,7 @@ def oracle_sql() -> dict[str, str]:
             # the pseudo-decode emits unit-norm features, so every row's
             # squared norm rounds to exactly 1.0 at 5 decimals — the check
             # covers row multiplicity, id/kind alignment through
-            # mapInPandas, and the normalization contract
+            # mapInArrow, and the normalization contract
             "SELECT r.range AS doc_id, "
             "CASE (r.range % 3) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' "
             "ELSE 'video' END AS kind, 1.0::DOUBLE AS feature_sq_norm "

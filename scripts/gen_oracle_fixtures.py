@@ -4,7 +4,7 @@ Independence argument (VERDICT r03 item #1/#2): every fixture here is
 computed by the PURE-PYTHON twin functions (py_split_sentences,
 py_analyze_tokens, py_ner_mentions, py_parse_tokens, ...) executed in
 this plain CPython process — no Spark, no Arrow, no JVM.  The driver's
-correctness gate then compares the LIVE Spark query (pandas-UDF plumbing,
+correctness gate then compares the LIVE Spark query (Arrow-UDF plumbing,
 Arrow transport, relational stages) against these fixtures via DuckDB:
 
 - simple annotator queries (morph_analyses, pos_tags, ...) check

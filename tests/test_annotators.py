@@ -1,10 +1,7 @@
 """NER / PoS / DP golden-parity (reference tests/test_general.py:43-110)
-and sentiment/model-harness behavior."""
-import numpy as np
-
+and sentiment behavior."""
 from vnlp_spark.functions.tokenizer import py_treebank_tokenize
 from vnlp_spark.operators.dep_parser import py_parse_sentence, py_parse_tokens
-from vnlp_spark.operators.model_harness import GRUModel, hash_token_ids
 from vnlp_spark.operators.ner import py_ner_mentions, py_ner_pairs
 from vnlp_spark.operators.pos import py_pos_pairs
 from vnlp_spark.operators.sentiment import py_sentiment, py_sentiment_proba
@@ -144,21 +141,3 @@ def test_sentiment_rule_categories_pinned():
     ]
     bad = [(t, g, py_sentiment(t)) for t, g in cases if py_sentiment(t) != g]
     assert not bad, bad
-
-
-def test_gru_model_deterministic_and_batched():
-    m = GRUModel.surrogate(vocab=1000, dim=8, hidden=16, out=1, seed=3)
-    seqs = [hash_token_ids(["merhaba", "dünya"], 1000), hash_token_ids(["bir"], 1000), []]
-    a = m.score_batch(seqs)
-    b = m.score_batch(seqs)
-    assert np.allclose(a, b)
-    assert a.shape == (3, 1)
-    assert np.all((a >= 0) & (a <= 1))
-    # batch invariance: same sequence alone or in a batch scores the same
-    solo = m.score_batch([seqs[0]])
-    assert np.allclose(solo[0], a[0], atol=1e-6)
-
-
-def test_hash_token_ids_stable():
-    assert hash_token_ids(["İstanbul"], 32768) == hash_token_ids(["İstanbul"], 32768)
-    assert hash_token_ids(["İstanbul"], 32768)[0] == 25878 % 32768 or True  # crc32-stable across runs

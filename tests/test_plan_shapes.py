@@ -59,6 +59,7 @@ def test_edges_salted_fallback_matches_broadcast(spark):
         salted = edges_stage(kg.triples, kg.entities, entity_join="salted")
         # emulate an entities table too big for auto-broadcast (at test
         # scale Catalyst would otherwise auto-broadcast the salted side)
+        threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             plan = _plan(salted)
@@ -68,7 +69,7 @@ def test_edges_salted_fallback_matches_broadcast(spark):
             cols = bcast.columns
             b = sorted(map(tuple, salted.select(*cols).collect()))
         finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
         a = sorted(map(tuple, bcast.select(*cols).collect()))
         assert a == b and len(a) > 0
     finally:
@@ -88,11 +89,12 @@ def test_edges_auto_switch(spark):
         auto_big = edges_stage(
             kg.triples, kg.entities, entity_join="auto", entities_rows=10_000_000
         )
+        threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             assert "BroadcastHashJoin" not in _plan(auto_big)
         finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     finally:
         for df in (kg.annotated, kg.triples, kg.entities):
             df.unpersist()

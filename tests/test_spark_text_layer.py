@@ -1,4 +1,4 @@
-"""Spark-side parity: the Column/pandas-UDF surface must agree byte-for-byte
+"""Spark-side parity: the Column/Arrow-UDF surface must agree byte-for-byte
 with the pure-Python cores on a mixed corpus (the per-url byte-identical
 invariant), and native expressions must match Python semantics."""
 import pyspark.sql.functions as F
@@ -62,8 +62,16 @@ def test_treebank_udf_parity(docs):
     _col_vs_py(docs, tokenizer.treebank_tokenize("text"), tokenizer.py_treebank_tokenize)
 
 
-def test_wordpunct_udf_parity(docs):
-    _col_vs_py(docs, tokenizer.word_punct_tokenize_udf("text"), tokenizer.py_word_punct_tokenize)
+# each tokenizes differently under Java's (?U)\\w: combining mark, zero-width
+# joiner, superscript digit, vulgar fraction
+WORDPUNCT_EDGES = ["Kafe\u0301 açık", "a\u200db", "x²y", "İstanbul'da 3½ saat"]
+
+
+def test_wordpunct_udf_parity(spark):
+    texts = CORPUS + WORDPUNCT_EDGES
+    df = spark.createDataFrame(list(enumerate(texts)), ["id", "text"])
+    rows = df.select("id", tokenizer.word_punct_tokenize("text").alias("out")).orderBy("id").collect()
+    assert [r["out"] for r in rows] == [tokenizer.py_word_punct_tokenize(t) for t in texts]
 
 
 def test_deasciify_udf_parity(spark):

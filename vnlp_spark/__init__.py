@@ -6,8 +6,8 @@ Layout
 ------
 - ``vnlp_spark.functions``  deterministic text ops (normalizer, tokenizers,
   sentence splitter, deasciifier, text analytics) as native Column
-  expressions where byte-parity allows, Arrow-vectorized pandas UDFs
-  otherwise.
+  expressions where byte-parity allows, Arrow UDFs (one helper,
+  ``functions/_udf.arrow_map``) otherwise.
 - ``vnlp_spark.operators``  stopwords, morphology (candidate generation +
   disambiguation), NER / PoS / dependency annotators, triple extraction,
   entity resolution, dedup, similarity search, multimodal plumbing.
@@ -16,7 +16,7 @@ Layout
 - ``vnlp_spark.resources``  data resources (lexicons, pattern tables).
 
 Everything is batch DataFrame-first: declare the logical plan, let Catalyst
-pick the physical one; drop to pandas UDFs only where Turkish-specific
+pick the physical one; drop to Arrow UDFs only where Turkish-specific
 Python `regex` semantics or model scoring genuinely require it.
 """
 

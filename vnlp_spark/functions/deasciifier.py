@@ -12,21 +12,20 @@ toggles to its Turkish counterpart.  Left context uses *already corrected*
 characters (upcased where accented), right context uses raw input —
 faithful to the original scanning order.
 
-Spark surface: pandas UDF over token arrays with per-batch unique-token
-caching (web text is Zipfian; the cache converts the per-char Python loop
-into a near-dictionary-lookup for hot tokens).
+Spark surface: an Arrow UDF over token arrays; a bounded per-worker LRU
+on the per-token kernel (web text is Zipfian; the cache turns the
+per-char Python loop into a near-dictionary lookup for hot tokens).
 """
 from __future__ import annotations
 
 import string
+from functools import lru_cache
 from typing import List
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..resources import deasciifier_patterns
+from ._udf import arrow_map
 
 _CONTEXT = 10
 
@@ -134,31 +133,17 @@ def py_deasciify_token(token: str, patterns: dict | None = None) -> str:
     return turkish
 
 
+_TOKEN_MEMO_MAX = 8192
+
+
+@lru_cache(maxsize=_TOKEN_MEMO_MAX)
+def _deasciify_token_cached(token: str) -> str:
+    return py_deasciify_token(token, deasciifier_patterns())
+
+
 def py_deasciify(tokens: List[str]) -> List[str]:
-    patterns = deasciifier_patterns()
-    return [py_deasciify_token(t, patterns) for t in tokens]
+    return [_deasciify_token_cached(t) for t in tokens]
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def _deasciify_udf(token_arrays: pd.Series) -> pd.Series:
-    patterns = deasciifier_patterns()
-    cache: dict[str, str] = {}
-
-    def one(tokens):
-        if tokens is None:
-            return None
-        out = []
-        for t in tokens:
-            hit = cache.get(t)
-            if hit is None:
-                hit = py_deasciify_token(t, patterns)
-                cache[t] = hit
-            out.append(hit)
-        return out
-
-    return token_arrays.map(one)
-
-
-def deasciify(col: Column | str) -> Column:
-    """array<string> tokens -> deasciified array<string>."""
-    return _deasciify_udf(F.col(col) if isinstance(col, str) else col)
+# array<string> tokens -> deasciified array<string>
+deasciify = arrow_map(py_deasciify, ArrayType(StringType()))

@@ -18,8 +18,8 @@ displaCy renders.  Re-implemented from the output contract:
   on text whose tokens contain no regex metacharacters (differentially
   tested in tests/test_reference_parity.py).
 
-Spark shape: per-sentence formatting is presentation, not analytics — a
-pandas UDF emits the dicts as JSON strings (Arrow-friendly) for export
+Spark shape: per-sentence formatting is presentation, not analytics — an
+Arrow UDF emits the dicts as JSON strings (Arrow-friendly) for export
 sinks; the heavy lifting (parse/NER) stays in the annotation stage.
 """
 from __future__ import annotations
@@ -27,10 +27,9 @@ from __future__ import annotations
 import json
 from typing import List, Optional, Sequence, Tuple
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
+
+from ._udf import arrow_map
 
 
 def dp_to_displacy(
@@ -112,40 +111,23 @@ def ner_to_displacy(text: str, ner_result: Sequence[Tuple[str, str]]) -> dict:
     return out
 
 
-@F.pandas_udf(StringType())
-def _dp_displacy_udf(arcs: pd.Series, upos: pd.Series) -> pd.Series:
-    def one(a, u):
-        if a is None:
-            return None
-        dp = [(r["idx"], r["token"], r["head"], r["deprel"]) for r in a]
-        pos = list(zip([r["token"] for r in a], u)) if u is not None else None
-        return json.dumps(dp_to_displacy(dp, pos), ensure_ascii=False)
-
-    return pd.Series([one(a, u) for a, u in zip(arcs, upos)])
+def py_dp_displacy_json(arcs: list, upos: Optional[list]) -> str:
+    """arcs [{idx, token, head, deprel}] (+ upos, or None) -> displaCy JSON."""
+    dp = [(r["idx"], r["token"], r["head"], r["deprel"]) for r in arcs]
+    pos = list(zip([r["token"] for r in arcs], upos)) if upos is not None else None
+    return json.dumps(dp_to_displacy(dp, pos), ensure_ascii=False)
 
 
-def dp_displacy_json(arcs_col: Column | str, upos_col: Column | str) -> Column:
-    """arcs array<struct<idx,token,head,deprel>> + upos array<string> ->
-    displaCy JSON string per sentence."""
-    a = F.col(arcs_col) if isinstance(arcs_col, str) else arcs_col
-    u = F.col(upos_col) if isinstance(upos_col, str) else upos_col
-    return _dp_displacy_udf(a, u)
+def py_ner_displacy_json(text: str, tokens: Optional[list],
+                         labels: Optional[list]) -> Optional[str]:
+    """(sentence, tokens, labels) -> displaCy entity JSON; null without
+    tokens or labels."""
+    if tokens is None or labels is None:
+        return None
+    return json.dumps(ner_to_displacy(text, list(zip(tokens, labels))), ensure_ascii=False)
 
 
-@F.pandas_udf(StringType())
-def _ner_displacy_udf(texts: pd.Series, tokens: pd.Series, labels: pd.Series) -> pd.Series:
-    def one(t, ts, ls):
-        if t is None or ts is None or ls is None:
-            return None
-        return json.dumps(ner_to_displacy(t, list(zip(ts, ls))), ensure_ascii=False)
-
-    return pd.Series([one(t, ts, ls) for t, ts, ls in zip(texts, tokens, labels)])
-
-
-def ner_displacy_json(text_col: Column | str, tokens_col: Column | str,
-                      labels_col: Column | str) -> Column:
-    """(sentence, tokens, labels) -> displaCy entity JSON per sentence."""
-    t = F.col(text_col) if isinstance(text_col, str) else text_col
-    ts = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    ls = F.col(labels_col) if isinstance(labels_col, str) else labels_col
-    return _ner_displacy_udf(t, ts, ls)
+# (arcs array<struct<idx,token,head,deprel>>, upos array<string>) -> JSON
+dp_displacy_json = arrow_map(py_dp_displacy_json, StringType())
+# (sentence, tokens, labels) -> JSON
+ner_displacy_json = arrow_map(py_ner_displacy_json, StringType())

@@ -4,7 +4,7 @@ Ops P1/P2/P3/P9/P10 of the reference (vnlp/normalizer/normalizer.py:39-127,
 part_of_speech_tagger/_treestack_utils.py:185-190,390-398) expressed as
 **native Spark Column expressions** so they stay inside whole-stage codegen
 — no Python round-trip.  Each op also has a ``py_*`` pure-Python twin used
-for parity tests and inside composite pandas UDFs.
+for parity tests and inside composite Arrow UDFs.
 
 Byte-parity notes
 -----------------
@@ -89,7 +89,7 @@ def correct_typos(col: Column | str) -> Column:
     removed its Jamspell-based implementation on 2024-11-27 and the method
     body is ``pass`` — it computes nothing.  Kept here as identity so
     pipelines porting from the reference keep working; a real corrector
-    slots in as a pandas UDF."""
+    slots in as an Arrow UDF."""
     return F.col(col) if isinstance(col, str) else col
 
 

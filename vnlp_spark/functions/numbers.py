@@ -1,7 +1,7 @@
 """Number -> Turkish-word expansion (reference P5, normalizer.py:184-400).
 
-Pure-Python core (`py_convert_numbers_to_words`) + an Arrow-vectorized
-pandas UDF over token arrays.  Semantics preserved from the reference,
+Pure-Python core (`py_convert_numbers_to_words`) + an Arrow UDF over
+token arrays.  Semantics preserved from the reference,
 including its quirks:
 
 - with ``decimal_seperator=","`` a token's ``.`` becomes ``_`` (Python
@@ -15,10 +15,9 @@ from __future__ import annotations
 
 from typing import List
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
+
+from ._udf import arrow_map
 
 _SCALE = [
     " yüz", " bin", "", "", " milyon", " milyar", " trilyon", " katrilyon",
@@ -113,11 +112,5 @@ def py_convert_numbers_to_words(
     return out
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def _numbers_to_words_udf(tokens: pd.Series) -> pd.Series:
-    return tokens.map(lambda ts: py_convert_numbers_to_words(list(ts)) if ts is not None else None)
-
-
-def convert_numbers_to_words(col: Column | str) -> Column:
-    """Array<string> -> array<string> with numeric tokens expanded to words."""
-    return _numbers_to_words_udf(F.col(col) if isinstance(col, str) else col)
+# array<string> -> array<string> with numeric tokens expanded to words
+convert_numbers_to_words = arrow_map(py_convert_numbers_to_words, ArrayType(StringType()))

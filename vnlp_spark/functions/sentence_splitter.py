@@ -4,7 +4,7 @@ public Koehn & Schroeder splitter).
 
 This op defines the **byte-identical extracted text per url** invariant of
 the pipeline, so the break rules use the Python ``regex`` module (``\\p{...}``
-unicode classes) inside a pandas UDF — Java regex classes differ subtly and
+unicode classes) inside an Arrow UDF — Java regex classes differ subtly and
 would silently break parity.  The four break-insertion rules, the
 non-breaking-prefix / acronym / numeric look-ahead pass, and the whitespace
 normalization are reproduced rule-for-rule.
@@ -16,13 +16,12 @@ from __future__ import annotations
 
 from typing import List
 
-import pandas as pd
 import regex
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..resources import non_breaking_prefixes
+from ._udf import arrow_map
 
 _U = regex.UNICODE
 # sentence starter = optional initial quotes/brackets then an uppercase/other letter
@@ -97,14 +96,8 @@ def py_split_sentences(text: str, prefixes: dict | None = None) -> List[str]:
     return out.split("\n")
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def _split_sentences_udf(texts: pd.Series) -> pd.Series:
-    prefixes = non_breaking_prefixes()  # parsed once per python worker
-    return texts.map(lambda t: py_split_sentences(t, prefixes) if t is not None else None)
-
-
-def split_sentences(col: Column | str) -> Column:
-    return _split_sentences_udf(F.col(col) if isinstance(col, str) else col)
+# prefixes parsed once per python worker (non_breaking_prefixes is cached)
+split_sentences = arrow_map(py_split_sentences, ArrayType(StringType()))
 
 
 def explode_sentences(df, text_col: str = "text", id_cols: tuple = ("url",)):

@@ -1,22 +1,22 @@
 """Word tokenizers (reference T2/T3, vnlp/tokenizer/tokenizer.py).
 
-``WordPunct`` is a single findall — expressible natively via
-``regexp_extract_all`` (JVM-side, codegen).  ``Treebank`` is a 16-step
-sequential ``re.sub`` chain whose Python-regex semantics are the parity
-contract for every downstream annotator (it is the canonical tokenizer of
-the reference's stemmer/NER/PoS/DP), so it runs as an Arrow-vectorized
-pandas UDF over whole columns with the regexes precompiled once per
-interpreter.
+``WordPunct`` is a single Python ``re.findall``; ``Treebank`` is a
+16-step sequential ``re.sub`` chain whose Python-regex semantics are the
+parity contract for every downstream annotator (it is the canonical
+tokenizer of the reference's stemmer/NER/PoS/DP).  Both run as Arrow
+UDFs (``functions/_udf.arrow_map``) with the regexes precompiled once
+per interpreter.  Java's ``\\w`` differs from Python's on combining
+marks, joiners, superscripts and vulgar fractions, so neither tokenizer
+is rewritten as a native regex.
 """
 from __future__ import annotations
 
 import re
 from typing import List
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
+
+from ._udf import arrow_map
 
 # T2 ---------------------------------------------------------------------
 _WORDPUNCT_RE = re.compile(r"\w+|[^\w\s]+", re.UNICODE | re.MULTILINE | re.DOTALL)
@@ -24,16 +24,6 @@ _WORDPUNCT_RE = re.compile(r"\w+|[^\w\s]+", re.UNICODE | re.MULTILINE | re.DOTAL
 
 def py_word_punct_tokenize(text: str) -> List[str]:
     return _WORDPUNCT_RE.findall(text)
-
-
-def word_punct_tokenize(col: Column | str) -> Column:
-    """Native regexp_extract_all — matches Python ``\\w+|[^\\w\\s]+`` for
-    unicode text (Java regex is unicode-category aware for \\w with the
-    UNICODE_CHARACTER_CLASS flag, embedded below as ``(?U)``).  Built from
-    the function API with a Column literal pattern — no expr()-string
-    composition, so it survives arbitrary input Columns and Spark Connect."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract_all(c, F.lit(r"(?U)\w+|[^\w\s]+"), 0)
 
 
 # T3 ---------------------------------------------------------------------
@@ -76,20 +66,6 @@ def py_treebank_tokenize(text: str) -> List[str]:
     return text.replace("``", '"').replace("''", '"').split()
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def _treebank_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: py_treebank_tokenize(t) if t is not None else None)
-
-
-def treebank_tokenize(col: Column | str) -> Column:
-    return _treebank_udf(F.col(col) if isinstance(col, str) else col)
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def _wordpunct_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: py_word_punct_tokenize(t) if t is not None else None)
-
-
-def word_punct_tokenize_udf(col: Column | str) -> Column:
-    """Pandas-UDF variant guaranteeing exact Python-regex semantics."""
-    return _wordpunct_udf(F.col(col) if isinstance(col, str) else col)
+# string -> array<string>, exact Python-regex semantics
+word_punct_tokenize = arrow_map(py_word_punct_tokenize, ArrayType(StringType()))
+treebank_tokenize = arrow_map(py_treebank_tokenize, ArrayType(StringType()))

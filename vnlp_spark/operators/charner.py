@@ -11,19 +11,17 @@ The trained weights are S3-hosted and unavailable offline; the char
 scorer here is the deterministic gazetteer labeler projected down to
 char level, run through the reference's own mode-decode + halving control
 flow so the operator's structure (and its cost profile) is faithful.  The
-``char_scores`` hook is the swap point for the real BiGRU (a
-model_harness.GRUModel over char ids).
+``char_scores`` hook is the swap point for the real BiGRU over char
+ids.
 """
 from __future__ import annotations
 
 from collections import Counter
 from typing import List, Tuple
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from ..functions._udf import arrow_map
 from .ner import py_ner_tags
 
 MAX_CHARS = 256  # reference halving threshold (charner.py:174)
@@ -87,17 +85,13 @@ def py_charner(text: str) -> List[Tuple[str, str]]:
     return _decode_mode(text, tokens, chars)
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def _charner_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(
-        lambda t: [tok + "\x01" + lab for tok, lab in py_charner(t)] if t is not None else None
-    )
+def py_charner_pairs(text: str) -> List[str]:
+    """text -> 'token\\x01label' pairs (flat encoding keeps the column
+    Arrow-friendly; split downstream with substring_index)."""
+    return [tok + "\x01" + lab for tok, lab in py_charner(text)]
 
 
-def charner_pairs(col: Column | str) -> Column:
-    """text -> array<string> of 'token\\x01label' pairs (flat encoding keeps
-    the column Arrow-friendly; split downstream with substring_index)."""
-    return _charner_udf(F.col(col) if isinstance(col, str) else col)
+charner_pairs = arrow_map(py_charner_pairs, ArrayType(StringType()))
 
 
 def charner_char_ids(text: str) -> List[int]:

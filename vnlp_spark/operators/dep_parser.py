@@ -35,7 +35,7 @@ plans/gold_ud_heldout.py):
 The 40-token refusal is reproduced as ``arcs = null`` (callers route long
 sentences to chunking upstream and the lineage layer counts refusals).
 
-Spark mapping: pandas UDF per sentence returning
+Spark mapping: Arrow UDF per sentence returning
 array<struct<idx:int, token:string, head:int, deprel:string>>.
 """
 from __future__ import annotations
@@ -44,9 +44,6 @@ import re
 from functools import lru_cache
 from typing import List, Optional, Tuple
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -55,6 +52,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions._udf import arrow_map
 from .morphology import (
     _GRAMMAT_ADPS,
     _LOAN_I_ACC_ADJS,
@@ -3271,31 +3269,13 @@ ARC_SCHEMA = ArrayType(
 )
 
 
-@F.pandas_udf(ARC_SCHEMA)
-def _parse_udf(token_arrays: pd.Series, analyses_arrays: pd.Series) -> pd.Series:
-    # per-batch memo on the token sequence: web corpora repeat sentences
-    # (boilerplate), and the struct-array output is the expensive part
-    cache: dict = {}
-
-    def one(row):
-        ts, an = row
-        if ts is None:
-            return None
-        key = tuple(ts)
-        hit = cache.get(key)
-        if hit is None:
-            an = list(an) if an is not None else None
-            hit = py_parse_tokens(list(ts), analyses=an)
-            cache[key] = hit
-        return hit
-
-    return pd.Series(map(one, zip(token_arrays, analyses_arrays)))
+def py_parse_with_analyses(tokens: List[str],
+                           analyses: Optional[List[str]]) -> Optional[list]:
+    """Parse over precomputed analyses; null analyses run morphology here."""
+    return py_parse_tokens(tokens, analyses=analyses)
 
 
-def dependency_parse(tokens_col: Column | str, analyses_col: Column | str) -> Column:
-    """(tokens array, analyses array) -> arcs array<struct>.  Passing the
-    analyses column avoids re-running morphology (treestack-style chaining,
-    reference treestack_dp.py:163-171)."""
-    t = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    a = F.col(analyses_col) if isinstance(analyses_col, str) else analyses_col
-    return _parse_udf(t, a)
+# (tokens array, analyses array) -> arcs array<struct>.  Passing the
+# analyses column avoids re-running morphology (treestack-style chaining,
+# reference treestack_dp.py:163-171).
+dependency_parse = arrow_map(py_parse_with_analyses, ARC_SCHEMA)

@@ -23,10 +23,11 @@ on top of AQE's runtime skew-split, which is also enabled in session.py.
 """
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
+from ..functions._udf import arrow_map
 from ..functions.normalizer import turkish_lower, turkish_lower_sql
 
 
@@ -197,37 +198,36 @@ def initials_aliases(entities_df: DataFrame) -> DataFrame:
     return initials.unionByName(clubs).distinct()
 
 
-from pyspark.sql.types import IntegerType as _IntegerType
-
-
-@F.pandas_udf(_IntegerType())
-def _damerau_levenshtein_udf(a: "pd.Series", b: "pd.Series") -> "pd.Series":
+def py_damerau_levenshtein(x: str, y: str | None) -> int:
     """Bounded Damerau-Levenshtein on BLOCKED candidate pairs — the
     verify stage of the similarity join (runs only on the residual that
-    failed the gram thresholds, a tiny fraction of the block join)."""
+    failed the gram thresholds, a tiny fraction of the block join).
+    99 = no match: a null side or a length gap over 2."""
+    if y is None:
+        return 99
+    lx, ly = len(x), len(y)
+    if abs(lx - ly) > 2:
+        return 99
+    prev2: list = []
+    prev = list(range(ly + 1))
+    for i in range(1, lx + 1):
+        cur = [i] + [0] * ly
+        for j in range(1, ly + 1):
+            cost = 0 if x[i - 1] == y[j - 1] else 1
+            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
+            if (i > 1 and j > 1 and x[i - 1] == y[j - 2]
+                    and x[i - 2] == y[j - 1]):
+                cur[j] = min(cur[j], prev2[j - 2] + 1)
+        prev2, prev = prev, cur
+    return prev[ly]
 
-    def dl(x: str, y: str) -> int:
-        if x is None or y is None:
-            return 99
-        lx, ly = len(x), len(y)
-        if abs(lx - ly) > 2:
-            return 99
-        prev2: list = []
-        prev = list(range(ly + 1))
-        for i in range(1, lx + 1):
-            cur = [i] + [0] * ly
-            for j in range(1, ly + 1):
-                cost = 0 if x[i - 1] == y[j - 1] else 1
-                cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
-                if (i > 1 and j > 1 and x[i - 1] == y[j - 2]
-                        and x[i - 2] == y[j - 1]):
-                    cur[j] = min(cur[j], prev2[j - 2] + 1)
-            prev2, prev = prev, cur
-        return prev[ly]
 
-    import pandas as pd
+_damerau_levenshtein = arrow_map(py_damerau_levenshtein, IntegerType())
 
-    return pd.Series([dl(x, y) for x, y in zip(a, b)], dtype="int32")
+
+def _damerau_levenshtein_udf(a: Column | str, b: Column | str) -> Column:
+    # a null left side is 99 too (the helper returns null for it)
+    return F.coalesce(_damerau_levenshtein(a, b), F.lit(99))
 
 
 def char_ngrams(col: Column | str, n: int = 3) -> Column:

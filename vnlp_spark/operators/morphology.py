@@ -18,7 +18,7 @@ The suffix dictionary is a generated morphotactic fixture
 (scripts/gen_suffix_fixture.py) because the reference's full
 ``Suffixes&Tags.txt`` is absent from the snapshot.
 
-Spark mapping: one pandas-UDF row = one tokenized sentence
+Spark mapping: one Arrow-UDF row = one tokenized sentence
 (``array<string> -> array<string>``); the three lexicons are process-local
 singletons inside the Python worker (shipped with the wheel — no per-task
 deserialization, no driver broadcast traffic).
@@ -29,12 +29,10 @@ import re
 from functools import lru_cache
 from typing import List, Sequence, Tuple
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from .. import resources
+from ..functions._udf import arrow_map
 
 NUM_MAX_ANALYSIS = 10  # reference stemmer_morph_analyzer.py:34
 
@@ -1872,17 +1870,8 @@ def py_analyze_sentence(sentence: str) -> List[str]:
     return py_analyze_tokens(py_treebank_tokenize(sentence))
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def _analyze_udf(token_arrays: pd.Series) -> pd.Series:
-    _engine()  # built once per python worker
-    return token_arrays.map(
-        lambda ts: py_analyze_tokens(list(ts)) if ts is not None else None
-    )
-
-
-def analyze_morphology(col: Column | str) -> Column:
-    """array<string> tokens -> array<string> analyses."""
-    return _analyze_udf(F.col(col) if isinstance(col, str) else col)
+# array<string> tokens -> array<string> analyses
+analyze_morphology = arrow_map(py_analyze_tokens, ArrayType(StringType()))
 
 
 def root_of(analysis: str) -> str:

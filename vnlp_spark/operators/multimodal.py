@@ -1,6 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + typed
-metadata, with decode / feature-extraction / resize / frame-sampling as
-``mapInPandas`` stages.
+metadata, with decode / feature-extraction / frame-sampling as
+``mapInArrow`` stages.
 
 The container has no image/audio codecs, so the decode kernels are STUBS:
 ``decode_image`` raises NotImplementedError unless ``fake=True``, in which
@@ -20,9 +20,10 @@ import hashlib
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -113,25 +114,24 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
     return _pseudo_decode(payload)
 
 
-def extract_features(media: DataFrame, fake: bool = True, batch_note: bool = False) -> DataFrame:
-    """media -> features via mapInPandas: one Arrow batch in, one out;
+def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
+    """media -> features via mapInArrow: one Arrow batch in, one out;
     partitioning untouched (narrow), payload column pruned away after use."""
+    arrow_schema = to_arrow_schema(FEATURE_SCHEMA)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             feats = [
-                _pseudo_decode(p) if fake else decode_image(p, fake=False)
-                for p in pdf["payload"]
+                (_pseudo_decode(p) if fake else decode_image(p, fake=False)).tolist()
+                for p in batch.column("payload").to_pylist()
             ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "kind": pdf["kind"],
-                    "feature": [f.tolist() for f in feats],
-                }
+            yield pa.RecordBatch.from_pydict(
+                {"doc_id": batch.column("doc_id"), "kind": batch.column("kind"),
+                 "feature": feats},
+                schema=arrow_schema,
             )
 
-    return media.mapInPandas(gen, schema=FEATURE_SCHEMA)
+    return media.mapInArrow(gen, schema=FEATURE_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_ms: int = 1000, fake: bool = True) -> DataFrame:
@@ -147,10 +147,12 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, fake: bool = True) -> 
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    arrow_schema = to_arrow_schema(schema)
+
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             rows = {"doc_id": [], "frame_idx": [], "ts_ms": [], "feature": []}
-            for _, r in pdf.iterrows():
+            for r in batch.to_pylist():
                 dur = r["meta"]["duration_ms"] or 0
                 n_frames = max(1, int(dur) // every_ms)
                 if not fake:
@@ -162,9 +164,9 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, fake: bool = True) -> 
                     rows["feature"].append(
                         _pseudo_decode((r["payload"] or b"") + i.to_bytes(4, "big")).tolist()
                     )
-            yield pd.DataFrame(rows)
+            yield pa.RecordBatch.from_pydict(rows, schema=arrow_schema)
 
-    return media.filter(F.col("kind") == "video").mapInPandas(gen, schema=schema)
+    return media.filter(F.col("kind") == "video").mapInArrow(gen, schema=schema)
 
 
 def synth_media(spark, n: int = 100, seed: int = 42) -> DataFrame:

@@ -20,8 +20,8 @@ surrogate with the same I/O contract (swap point: any callable
 5. ORG/LOC/PER continuation: capitalized token following an entity token
    keeps that label
 
-Spark mapping: Arrow-vectorized pandas UDFs, one row per tokenized
-sentence; gazetteer is a process-local singleton in the Python worker.
+Spark mapping: Arrow UDFs (``functions/_udf.arrow_map``), one row per
+tokenized sentence; gazetteer is a process-local singleton in the Python worker.
 """
 from __future__ import annotations
 
@@ -29,9 +29,6 @@ import re
 from functools import lru_cache
 from typing import List, Tuple
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -41,6 +38,7 @@ from pyspark.sql.types import (
 )
 
 from .. import resources
+from ..functions._udf import arrow_map
 from .morphology import to_lower
 
 _UPPER_RE = re.compile(r"^[A-ZÇĞİIÖŞÜ]")
@@ -154,57 +152,14 @@ _MENTION_SCHEMA = ArrayType(
 )
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def _ner_tags_udf(token_arrays: pd.Series) -> pd.Series:
-    return token_arrays.map(lambda ts: py_ner_tags(list(ts)) if ts is not None else None)
+def py_mentions_from_labels(tokens: List[str], labels: List[str] | None) -> List[dict] | None:
+    """(tokens, labels) -> mention spans; null without labels.  The span
+    assembler for external label sources (e.g. the SPUContext tagger)."""
+    return None if labels is None else py_merge_mentions(tokens, labels)
 
 
-@F.pandas_udf(_MENTION_SCHEMA)
-def _ner_mentions_udf(token_arrays: pd.Series) -> pd.Series:
-    cache: dict = {}
-
-    def one(ts):
-        if ts is None:
-            return None
-        key = tuple(ts)
-        hit = cache.get(key)
-        if hit is None:
-            hit = [
-                (m["mention"], m["label"], m["first_tok"], m["last_tok"])
-                for m in py_ner_mentions(list(ts))
-            ]
-            cache[key] = hit
-        return hit
-
-    return token_arrays.map(one)
-
-
-def ner_tags(col: Column | str) -> Column:
-    """array<string> tokens -> array<string> labels (O/PER/LOC/ORG)."""
-    return _ner_tags_udf(F.col(col) if isinstance(col, str) else col)
-
-
-def ner_mentions(col: Column | str) -> Column:
-    """array<string> tokens -> array<struct<mention,label,first_tok,last_tok>>."""
-    return _ner_mentions_udf(F.col(col) if isinstance(col, str) else col)
-
-
-@F.pandas_udf(_MENTION_SCHEMA)
-def _merge_mentions_udf(token_arrays: pd.Series, label_arrays: pd.Series) -> pd.Series:
-    def one(ts, ls):
-        if ts is None or ls is None:
-            return None
-        return [
-            (m["mention"], m["label"], m["first_tok"], m["last_tok"])
-            for m in py_merge_mentions(list(ts), list(ls))
-        ]
-
-    return pd.Series([one(ts, ls) for ts, ls in zip(token_arrays, label_arrays)])
-
-
-def mentions_from_labels(tokens_col: Column | str, labels_col: Column | str) -> Column:
-    """(tokens, labels) -> mention spans; the span assembler for external
-    label sources (e.g. the GRU model harness)."""
-    t = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    l = F.col(labels_col) if isinstance(labels_col, str) else labels_col
-    return _merge_mentions_udf(t, l)
+# array<string> tokens -> array<string> labels (O/PER/LOC/ORG)
+ner_tags = arrow_map(py_ner_tags, ArrayType(StringType()))
+# array<string> tokens -> array<struct<mention,label,first_tok,last_tok>>
+ner_mentions = arrow_map(py_ner_mentions, _MENTION_SCHEMA)
+mentions_from_labels = arrow_map(py_mentions_from_labels, _MENTION_SCHEMA)

@@ -7,7 +7,7 @@ tags (treestack_pos.py) — exactly the architecture used here: run the
 morphological disambiguator, then map the analysis's final PoS tag to UD
 UPOS.  This replaces the unavailable S3-hosted GRU with a deterministic
 two-stage pipeline (morphology -> tag map) and keeps the same Spark shape:
-one pandas-UDF row per tokenized sentence.
+one Arrow-UDF row per tokenized sentence.
 
 The morph->UPOS mapping follows the reference tagsets (morph tags per
 _yildiz_analyzer.py TAG_FLAG_MAP; UPOS per the PoS model's label set).
@@ -17,10 +17,11 @@ from __future__ import annotations
 from functools import lru_cache
 from typing import List, Tuple
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
+
+from ..functions._udf import arrow_map
 
 from .dep_parser import (
     _CAP_RE,
@@ -1485,14 +1486,8 @@ def py_pos_pairs(tokens: List[str]) -> List[Tuple[str, str]]:
     return list(zip(tokens, py_pos_tags(tokens)))
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def _pos_udf(token_arrays: pd.Series) -> pd.Series:
-    return token_arrays.map(lambda ts: py_pos_tags(list(ts)) if ts is not None else None)
-
-
-def pos_tags(col: Column | str) -> Column:
-    """array<string> tokens -> array<string> UPOS tags."""
-    return _pos_udf(F.col(col) if isinstance(col, str) else col)
+# array<string> tokens -> array<string> UPOS tags
+pos_tags = arrow_map(py_pos_tags, ArrayType(StringType()))
 
 
 def pos_from_analyses(col: Column | str) -> Column:

@@ -5,7 +5,8 @@ Reference surface: ``SentimentAnalyzer.predict_proba(text)`` -> float and
 sentiment_analyzer.py:26-76; BiGRU impl spu_context_bigru_sentiment.py:
 118-164, with recursive halving of >256-piece inputs).
 
-Two scorers share the Spark surface:
+The Spark surface (``sentiment_proba`` / ``sentiment_label``) runs one
+scorer:
 
 - ``sentiment_lexicon``: deterministic clause-scoped polarity scorer over
   Turkish review-register stems, squashed through a sigmoid.
@@ -40,10 +41,10 @@ Two scorers share the Spark surface:
   Measured against the frozen 120-sentence blind gold set
   (plans/gold_sentiment.py, scripts/score_sentiment_gold.py); the
   first-run and post-fix numbers are recorded in BENCH.md.
-- ``make_sentiment_model_udf``: the GRU model harness
-  (operators/model_harness.py) with broadcast weights — the exact
-  executor shape of the reference model; carries surrogate weights until
-  the S3-hosted trained arrays are supplied.
+
+The reference's BiGRU weights are S3-hosted; the broadcast-weights
+executor shape of its neural annotators lives in
+``operators/spu_context.py`` (``make_spu_context_tagger_udf(weights=...)``).
 """
 from __future__ import annotations
 
@@ -51,11 +52,10 @@ import math
 import re
 from typing import List, Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
+from ..functions._udf import arrow_map
 from .morphology import to_lower
 
 _POSITIVE = {
@@ -411,24 +411,8 @@ def py_sentiment(text: str) -> int:
     return int(py_sentiment_proba(text) >= 0.5)
 
 
-@F.pandas_udf(DoubleType())
-def _sentiment_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: py_sentiment_proba(t) if t is not None else None)
-
-
-def sentiment_proba(col: Column | str) -> Column:
-    return _sentiment_udf(F.col(col) if isinstance(col, str) else col)
+sentiment_proba = arrow_map(py_sentiment_proba, DoubleType())
 
 
 def sentiment_label(col: Column | str) -> Column:
     return (sentiment_proba(col) >= 0.5).cast("int")
-
-
-def make_sentiment_model_udf(spark, seed: int = 7):
-    """GRU-harness scorer over token arrays (broadcast surrogate weights);
-    returns a Column function usable as ``udf(tokens_col)``."""
-    from .model_harness import GRUModel, make_sequence_scorer_udf
-
-    model = GRUModel.surrogate(vocab=32768, dim=32, hidden=64, out=1, seed=seed)
-    bc = spark.sparkContext.broadcast(model.arrays())
-    return make_sequence_scorer_udf(bc)

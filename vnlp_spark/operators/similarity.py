@@ -11,16 +11,24 @@ Two plans with one answer shape (query_id, vec_id, cos_sim, rank):
   exactly within the probed set.  At 100 TB this turns a full-corpus
   scan per query into a bucket-local join on uniformly distributed keys.
 
-Signatures are computed by a vectorized pandas UDF — one numpy matmul per
-Arrow batch against a broadcast hyperplane matrix (a few KB).
+Signatures are computed by an Arrow UDF — one numpy matmul per Arrow
+batch against a broadcast hyperplane matrix (a few KB).
 """
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import LongType
+
+
+def _valid_matrix(vecs: pa.Array) -> tuple:
+    """(non-null row positions, their vectors as one float64 matrix)."""
+    rows = vecs.to_pylist()
+    valid = [i for i, v in enumerate(rows) if v is not None]
+    return valid, np.asarray([rows[i] for i in valid], dtype=np.float64)
 
 
 def cosine_sim(a: Column, b: Column) -> Column:
@@ -83,18 +91,17 @@ def make_lsh_bucket_udf(dim: int, n_planes: int = 12, seed: int = 42):
     bit pattern against ``n_planes`` seeded Gaussian hyperplanes)."""
     planes = lsh_planes(dim, n_planes, seed)
 
-    @F.pandas_udf(LongType())
-    def bucket(vecs: pd.Series) -> pd.Series:
+    @arrow_udf(LongType())
+    def bucket(vecs: pa.Array) -> pa.Array:
         out = np.zeros(len(vecs), dtype=np.int64)
-        valid = [i for i, v in enumerate(vecs) if v is not None]
+        valid, mat = _valid_matrix(vecs)
         if valid:
-            mat = np.asarray([vecs.iloc[i] for i in valid], dtype=np.float64)
             signs = (mat @ planes) > 0
             ids = np.zeros(len(valid), dtype=np.int64)
             for b in range(n_planes):
                 ids |= signs[:, b].astype(np.int64) << b
             out[valid] = ids
-        return pd.Series(out)
+        return pa.array(out)
 
     return bucket
 
@@ -192,16 +199,15 @@ def make_ivf_cell_udf(centroids: np.ndarray):
     """vector -> nearest-centroid cell id (one matmul per Arrow batch)."""
     cent = centroids
 
-    @F.pandas_udf(LongType())
-    def cell(vecs: pd.Series) -> pd.Series:
+    @arrow_udf(LongType())
+    def cell(vecs: pa.Array) -> pa.Array:
         out = np.zeros(len(vecs), dtype=np.int64)
-        valid = [i for i, v in enumerate(vecs) if v is not None]
+        valid, mat = _valid_matrix(vecs)
         if valid:
-            mat = np.asarray([vecs.iloc[i] for i in valid], dtype=np.float64)
             norms = np.linalg.norm(mat, axis=1, keepdims=True)
             mat = mat / np.clip(norms, 1e-12, None)
             out[valid] = np.argmax(mat @ cent.T, axis=1)
-        return pd.Series(out)
+        return pa.array(out)
 
     return cell
 
@@ -224,7 +230,7 @@ def ivf_topk(
 
     Plan: (1) train a spherical-kmeans coarse quantizer on a bounded
     sample; (2) assign every corpus vector to its nearest-centroid cell
-    (vectorized pandas UDF, narrow); (3) each query probes its ``n_probe``
+    (Arrow UDF, narrow); (3) each query probes its ``n_probe``
     nearest cells; (4) exact cosine rerank inside the probed cells.
 
     At 100 TB the cell assignment is a narrow map fused into the scan, the
@@ -241,12 +247,11 @@ def ivf_topk(
 
     cent = centroids
 
-    @F.pandas_udf("array<bigint>")
-    def probe_cells(vecs: pd.Series) -> pd.Series:
+    @arrow_udf("array<bigint>")
+    def probe_cells(vecs: pa.Array) -> pa.Array:
         out = [[]] * len(vecs)
-        valid = [i for i, v in enumerate(vecs) if v is not None]
+        valid, mat = _valid_matrix(vecs)
         if valid:
-            mat = np.asarray([vecs.iloc[i] for i in valid], dtype=np.float64)
             norms = np.linalg.norm(mat, axis=1, keepdims=True)
             mat = mat / np.clip(norms, 1e-12, None)
             sims = mat @ cent.T  # one matmul per Arrow batch
@@ -254,7 +259,7 @@ def ivf_topk(
             top = np.argsort(-sims, axis=1)[:, :k_probe]
             for row, i in enumerate(valid):
                 out[i] = [int(t) for t in top[row]]
-        return pd.Series(out)
+        return pa.array(out, type=pa.list_(pa.int64()))
 
     q = queries.select(query_id_col, query_vec_col).withColumn(
         "cell", F.explode(probe_cells(F.col(query_vec_col)))

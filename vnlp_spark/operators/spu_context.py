@@ -40,8 +40,8 @@ from __future__ import annotations
 from typing import Iterator, List, Sequence
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
 
 TOKEN_PIECE_MAX_LEN = 8
 SENTENCE_MAX_LEN = 40
@@ -281,20 +281,20 @@ def make_spu_context_tagger_udf(spark, n_labels: int = 5, units: int = 32,
     bc_weights = spark.sparkContext.broadcast(weights)
     bc_pieces = spark.sparkContext.broadcast(parse_spm_model())
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def tagger(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    arrow_type = pa.list_(pa.int32())
+
+    @arrow_udf(ArrayType(IntegerType()))
+    def tagger(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         from .subword import SpmUnigramEncoder, spm_tokenize_tokens
 
         m = SPUContextModel.from_arrays(bc_weights.value)  # once per worker
         enc = SpmUnigramEncoder(bc_pieces.value)
         for token_arrays in batches:
-            pieces = [
-                [] if ts is None else spm_tokenize_tokens(list(ts), enc)
-                for ts in token_arrays
-            ]
+            rows = token_arrays.to_pylist()
+            pieces = [[] if ts is None else spm_tokenize_tokens(ts, enc) for ts in rows]
             tags = m.tag_sentences(pieces, sentence_max_len=sentence_max_len)
-            yield pd.Series(
-                [None if ts is None else t for ts, t in zip(token_arrays, tags)]
+            yield pa.array(
+                [None if ts is None else t for ts, t in zip(rows, tags)], type=arrow_type
             )
 
     return tagger

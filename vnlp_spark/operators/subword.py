@@ -22,8 +22,9 @@ With the real model file this produces real 16k-vocab piece ids, so the
 featurization contract of M2/M4/M6/M8 (ids -> embedding rows -> GRU) is
 complete end to end; only the trained GRU weights remain S3-only.
 
-Spark shape: the encoder dict is broadcast once; encoding runs inside the
-existing Arrow-batched UDFs (model_harness) — never per-row Python.
+Spark shape: the encoder dict is broadcast once; encoding runs inside
+Arrow-batched iterator UDFs (``make_spm_ids_udf``, the SPUContext tagger),
+with the encoder rebuilt once per Python worker.
 """
 from __future__ import annotations
 
@@ -31,7 +32,7 @@ import struct
 import unicodedata
 from typing import Iterator, List, Tuple
 
-import pandas as pd
+import pyarrow as pa
 
 _NORMAL, _UNKNOWN, _CONTROL = 1, 2, 3
 _UNK_PENALTY = 10.0
@@ -211,20 +212,22 @@ def make_spm_ids_udf(spark, model_path: str | None = None, max_pieces: int = 8):
     The parsed piece list (16k entries, ~1 MB) is broadcast once; each
     Python worker rebuilds the Viterbi encoder a single time (iterator
     UDF prologue) and then encodes whole Arrow batches."""
-    from pyspark.sql import functions as F
+    from pyspark.sql.functions import arrow_udf
 
     bc = spark.sparkContext.broadcast(parse_spm_model(model_path))
+    arrow_type = pa.list_(pa.list_(pa.int32()))
 
-    @F.pandas_udf("array<array<int>>")
-    def spm_ids(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @arrow_udf("array<array<int>>")
+    def spm_ids(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         encoder = SpmUnigramEncoder(bc.value)  # once per worker
         for token_arrays in batches:
-            yield pd.Series(
+            yield pa.array(
                 [
                     None if ts is None
-                    else spm_tokenize_tokens(list(ts), encoder, max_pieces)
-                    for ts in token_arrays
-                ]
+                    else spm_tokenize_tokens(ts, encoder, max_pieces)
+                    for ts in token_arrays.to_pylist()
+                ],
+                type=arrow_type,
             )
 
     return spm_ids

@@ -4,75 +4,41 @@ A token is valid Turkish iff the morphological candidate generator finds a
 non-Unknown analysis OR the token is in the 111,899-word lexicon.
 
 Spark mapping (SURVEY J2): the lexicon half is a broadcast-hash left-semi
-join when used relationally; the combined predicate runs as a pandas UDF
-(the candidate generator is Python).  Both forms provided.
+join when used relationally; the combined predicate runs as an Arrow UDF
+(the candidate generator is Python) over a bounded per-worker LRU of
+token verdicts.  Both forms provided.
 """
 from __future__ import annotations
 
+from functools import lru_cache
 from typing import List
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType
 
 from .. import resources
-from .morphology import CandidateGenerator, _engine
+from ..functions._udf import arrow_map
+from .morphology import _engine
+
+_TOKEN_MEMO_MAX = 8192
 
 
+@lru_cache(maxsize=_TOKEN_MEMO_MAX)
 def py_is_token_valid_turkish(token: str) -> bool:
     gen, _ = _engine()
     valid_by_analyzer = gen.get_analysis_candidates(token)[0][-1] != "Unknown"
     return valid_by_analyzer or token in resources.known_words()
 
 
-@F.pandas_udf(BooleanType())
-def _valid_udf(tokens: pd.Series) -> pd.Series:
-    gen, _ = _engine()
-    lex = resources.known_words()
-    cache: dict = {}
-
-    def one(t):
-        if t is None:
-            return None
-        hit = cache.get(t)
-        if hit is None:
-            hit = gen.get_analysis_candidates(t)[0][-1] != "Unknown" or t in lex
-            cache[t] = hit
-        return hit
-
-    return tokens.map(one)
+def py_tokens_validity(tokens: List[str]) -> List[bool]:
+    return [py_is_token_valid_turkish(t) for t in tokens]
 
 
-def is_token_valid_turkish(col: Column | str) -> Column:
-    """string token -> boolean validity."""
-    return _valid_udf(F.col(col) if isinstance(col, str) else col)
-
-
-@F.pandas_udf(ArrayType(BooleanType()))
-def _valid_arr_udf(token_arrays: pd.Series) -> pd.Series:
-    gen, _ = _engine()
-    lex = resources.known_words()
-    cache: dict = {}
-
-    def one(ts):
-        if ts is None:
-            return None
-        out = []
-        for t in ts:
-            hit = cache.get(t)
-            if hit is None:
-                hit = gen.get_analysis_candidates(t)[0][-1] != "Unknown" or t in lex
-                cache[t] = hit
-            out.append(hit)
-        return out
-
-    return token_arrays.map(one)
-
-
-def tokens_validity(col: Column | str) -> Column:
-    """array<string> -> array<boolean> (per-token validity)."""
-    return _valid_arr_udf(F.col(col) if isinstance(col, str) else col)
+# string token -> boolean validity
+is_token_valid_turkish = arrow_map(py_is_token_valid_turkish, BooleanType())
+# array<string> -> array<boolean> (per-token validity)
+tokens_validity = arrow_map(py_tokens_validity, ArrayType(BooleanType()))
 
 
 def filter_valid_tokens(df: DataFrame, token_col: str = "token") -> DataFrame:

@@ -2,7 +2,7 @@
 
 All resources are plain data (lexicons, pattern tables) extracted from the
 reference's resource files (see scripts/extract_reference_data.py).  Loaders
-are process-local singletons so that a pandas-UDF worker pays the parse cost
+are process-local singletons so that an Arrow-UDF worker pays the parse cost
 once; on a cluster the dicts are additionally shipped via
 ``SparkContext.broadcast`` (see vnlp_spark.operators) so each executor
 deserializes once instead of once per task.
