@@ -719,7 +719,7 @@ def _q_displacy_outputs(spark, sf_dir):
 
 
 def _q_er_similarity_link(spark, sf_dir):
-    """J6 machinery value check: blocked + salted char-3-gram Jaccard
+    """J6 machinery value check: blocked char-3-gram Jaccard
     similarity join (the entity-resolution primitive behind
     link_mentions), on SQL-reproducible inputs — customer names as
     mentions, supplier names as candidate entities, blocked on their
@@ -727,7 +727,7 @@ def _q_er_similarity_link(spark, sf_dir):
     instead of max_by so the oracle can replay it exactly."""
     from pyspark.sql import Window
 
-    from vnlp_spark.operators.entity_resolution import char_ngrams, jaccard, salted_join
+    from vnlp_spark.operators.entity_resolution import char_ngrams, jaccard
 
     cust = (
         _load(spark, sf_dir, "customer")
@@ -747,7 +747,7 @@ def _q_er_similarity_link(spark, sf_dir):
             char_ngrams(F.col("s_name")).alias("_cand_grams"),
         )
     )
-    joined = salted_join(cust, supp, key="_block", n_salts=4).withColumn(
+    joined = cust.join(supp, on="_block").withColumn(
         "sim", F.round(jaccard(F.col("_grams"), F.col("_cand_grams")), 6)
     )
     w = Window.partitionBy("custkey").orderBy(F.desc("sim"), F.col("suppkey"))

@@ -23,10 +23,14 @@ print("packaged /tmp/vnlp_spark.zip")
 EOF
 
 MASTER="${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}"
+# the job builds its own session, so these mirror vnlp_spark/session.py:
+# AQE with its runtime skew split, and the same 64 MB broadcast threshold
+# under which the planner broadcasts the entity table into the edge joins
 exec spark-submit \
     --master "$MASTER" \
     --conf spark.sql.adaptive.enabled=true \
     --conf spark.sql.adaptive.skewJoin.enabled=true \
+    --conf spark.sql.autoBroadcastJoinThreshold=64m \
     --conf spark.sql.execution.arrow.pyspark.enabled=true \
     --conf spark.sql.shuffle.partitions="${SPARK_SHUFFLE_PARTITIONS:-64}" \
     --py-files "$ZIP" \

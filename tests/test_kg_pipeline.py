@@ -1,5 +1,5 @@
 """End-to-end KG pipeline: synthetic corpus -> triples -> entities -> edges,
-plus checkpoint/resume lineage and the salted entity-resolution join."""
+plus checkpoint/resume lineage and the entity-resolution join."""
 import shutil
 import tempfile
 
@@ -11,7 +11,6 @@ from vnlp_spark.operators.entity_resolution import (
     char_ngrams,
     jaccard,
     link_mentions,
-    salted_join,
 )
 from vnlp_spark.plans.corpus import generate_web_pages
 from vnlp_spark.plans.lineage import StageRunner
@@ -78,14 +77,6 @@ def test_char_ngrams_and_jaccard(spark):
     out = df.select(jaccard(char_ngrams("a"), char_ngrams("b")).alias("j")).collect()
     assert out[0]["j"] == 1.0
     assert 0.3 < out[1]["j"] < 1.0
-
-
-def test_salted_join_preserves_rows(spark):
-    big = spark.createDataFrame([(i, i % 3) for i in range(300)], ["v", "k"])
-    small = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], ["k", "name"])
-    plain = big.join(small, "k").count()
-    salted = salted_join(big, small, "k", n_salts=4).count()
-    assert plain == salted == 300
 
 
 def test_link_mentions_similarity(spark):
@@ -189,8 +180,8 @@ def test_kg_job_tables_match_lazy_plan(spark, tmp_path, corpus):
 
 def test_kg_job_end_to_end_with_resume(spark, tmp_path):
     """The spark-submit entry point end to end on synthetic input: all six
-    stages + lineage written, auto entity-join branch taken, and a second
-    invocation resumes (skips completed stages) with identical outputs."""
+    stages + lineage written, and a second invocation resumes (skips
+    completed stages) with identical outputs."""
     from vnlp_spark.bin.kg_job import main
 
     out = str(tmp_path / "kg_out")
@@ -206,3 +197,16 @@ def test_kg_job_end_to_end_with_resume(spark, tmp_path):
     assert main(["--input", "synthetic:60", "--output", out]) == 0
     edges2 = sorted(map(tuple, spark.read.parquet(os.path.join(out, "edges")).collect()))
     assert edges1 == edges2 and len(edges1) > 0
+
+
+def test_kg_job_rejects_unknown_stage(tmp_path):
+    """A misspelled --stages name is a usage error (exit 2) before any
+    work: nothing is written under --output."""
+    from vnlp_spark.bin.kg_job import main
+
+    out = tmp_path / "kg_out"
+    out.mkdir()
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", "synthetic:10", "--output", str(out), "--stages", "edge"])
+    assert exc.value.code == 2
+    assert list(out.iterdir()) == []

@@ -9,7 +9,9 @@ the row id keeps equal values on different rows from cancelling), so a
 change to how an operator crosses the Python boundary cannot alter
 a single value unnoticed.  The vector operators read a native
 ``sin(id * i)`` vector per row; ``ivf_topk`` and the multimodal stages
-are pinned over all their output columns.
+are pinned over all their output columns.  The native normalizer
+statics and the stopword remover, which have Python twins, are pinned
+over the same frame.
 """
 from __future__ import annotations
 
@@ -17,6 +19,13 @@ import pyspark.sql.functions as F
 
 from vnlp_spark.functions.deasciifier import deasciify
 from vnlp_spark.functions.display import dp_displacy_json, ner_displacy_json
+from vnlp_spark.functions.normalizer import (
+    digits_to_zero,
+    preprocess_word,
+    remove_accent_marks,
+    remove_punctuations,
+    turkish_lower,
+)
 from vnlp_spark.functions.numbers import convert_numbers_to_words
 from vnlp_spark.functions.sentence_splitter import split_sentences
 from vnlp_spark.functions.tokenizer import (
@@ -39,6 +48,7 @@ from vnlp_spark.operators.similarity import (
     make_lsh_bucket_udf,
 )
 from vnlp_spark.operators.spu_context import make_spu_context_tagger_udf
+from vnlp_spark.operators.stopwords import drop_stop_words_from_array
 from vnlp_spark.operators.subword import make_spm_ids_udf
 from vnlp_spark.operators.validity import is_token_valid_turkish, tokens_validity
 from vnlp_spark.plans.corpus import SENTENCE_POOL
@@ -47,7 +57,8 @@ DIM = 16
 
 # (rows, nulls, bit_xor(xxhash64(id, out))) per Column function and
 # (rows, bit_xor(xxhash64(all columns))) per whole-frame operator, computed
-# while the operators still ran as pandas UDFs and mapInPandas stages
+# while the operators still ran as pandas UDFs and mapInPandas stages (the
+# last six, the native normalizer and stopword entries, as they run today)
 PINS = {
     "split_sentences": (11549, 1, 3864789461145273917),
     "treebank_tokenize": (11549, 1, 4624658365371831817),
@@ -76,6 +87,12 @@ PINS = {
     "ivf_topk": (50, -4181594763075034828),
     "extract_features": (60, 2778015138925621950),
     "sample_frames": (131, 7094059877323773771),
+    "turkish_lower": (11549, 1, 7071005782646830134),
+    "remove_punctuations": (11549, 1, 5581941060907874130),
+    "remove_accent_marks": (11549, 1, -812477703109993181),
+    "digits_to_zero": (11549, 1, 992093440878010951),
+    "preprocess_word": (11549, 1, -6403540243507506960),
+    "drop_stop_words_from_array": (11549, 1, -6446213564297624274),
 }
 
 
@@ -149,6 +166,12 @@ def test_operator_digests(spark, corpus):
             spark, units=16, emb_dim=16)("tokens"),
         "lsh_bucket": make_lsh_bucket_udf(DIM)("vec"),
         "ivf_cell": make_ivf_cell_udf(centroids)("vec"),
+        "turkish_lower": turkish_lower("text"),
+        "remove_punctuations": remove_punctuations("text"),
+        "remove_accent_marks": remove_accent_marks("text"),
+        "digits_to_zero": digits_to_zero("text"),
+        "preprocess_word": preprocess_word("text"),
+        "drop_stop_words_from_array": drop_stop_words_from_array("tokens"),
     }
     out = annotated.select("id", *[c.alias(n) for n, c in outputs.items()])
     aggs = [F.count(F.lit(1))]

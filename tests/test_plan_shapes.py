@@ -48,56 +48,31 @@ def test_triples_extraction_stays_native(spark):
     assert plan.count("ArrowEvalPython (") == 1
 
 
-def test_edges_salted_fallback_matches_broadcast(spark):
-    """entity_join='salted' (the too-big-to-broadcast path) must produce
-    byte-identical edges with no broadcast of the entity table."""
-    from vnlp_spark.plans.pipeline import edges_stage
+def test_edges_broadcast_without_hint(spark, tmp_path):
+    """edges_stage carries no broadcast hint: the planner broadcasts the
+    entity table from its statistics alone.  Both the benchmarked plan
+    (persisted, entities materialized first) and the lazy plan execute
+    with broadcast entity lookups and no sort-merge join, in the initial
+    adaptive plan as well as the final one (the executed plan's text
+    prints both)."""
+    path = str(tmp_path / "docs.parquet")
+    generate_web_pages(spark, 80).write.parquet(path)
 
-    kg = run_kg_pipeline(generate_web_pages(spark, 80), persist=True)
+    kg = run_kg_pipeline(spark.read.parquet(path), persist=True)
     try:
-        bcast = edges_stage(kg.triples, kg.entities, entity_join="broadcast")
-        salted = edges_stage(kg.triples, kg.entities, entity_join="salted")
-        # emulate an entities table too big for auto-broadcast (at test
-        # scale Catalyst would otherwise auto-broadcast the salted side)
-        threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = _plan(salted)
-            assert "BroadcastHashJoin" not in plan, (
-                "salted mode must not plan a broadcast entity join"
-            )
-            cols = bcast.columns
-            b = sorted(map(tuple, salted.select(*cols).collect()))
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        a = sorted(map(tuple, bcast.select(*cols).collect()))
-        assert a == b and len(a) > 0
+        kg.entities.count()
+        kg.edges.collect()
+        persisted = _plan(kg.edges)
     finally:
         for df in (kg.annotated, kg.triples, kg.entities):
             df.unpersist()
+    lazy = run_kg_pipeline(spark.read.parquet(path)).edges
+    assert len(lazy.collect()) > 0
 
-
-def test_edges_auto_switch(spark):
-    from vnlp_spark.plans.pipeline import edges_stage
-
-    kg = run_kg_pipeline(generate_web_pages(spark, 50), persist=True)
-    try:
-        # tiny entity table -> auto picks broadcast
-        auto_small = edges_stage(kg.triples, kg.entities, entity_join="auto")
-        assert "BroadcastHashJoin" in _plan(auto_small)
-        # force the over-threshold branch via the caller-supplied count
-        auto_big = edges_stage(
-            kg.triples, kg.entities, entity_join="auto", entities_rows=10_000_000
-        )
-        threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            assert "BroadcastHashJoin" not in _plan(auto_big)
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-    finally:
-        for df in (kg.annotated, kg.triples, kg.entities):
-            df.unpersist()
+    for name, plan in (("persisted", persisted), ("lazy", _plan(lazy))):
+        assert "isFinalPlan=true" in plan, name
+        assert "BroadcastHashJoin" in plan, name
+        assert "SortMergeJoin" not in plan, name
 
 
 def test_kg_plan_gateway_round_trips(spark, tmp_path):

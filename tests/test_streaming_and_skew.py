@@ -1,15 +1,20 @@
 """Structured Streaming surface + skew-balancing evidence + featurization
 utilities."""
+import io
 import shutil
+import statistics
 import tempfile
+from collections import Counter
+from contextlib import redirect_stdout
 
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from vnlp_spark.operators.entity_resolution import salted_join
+from vnlp_spark.operators.entity_resolution import build_entities
 from vnlp_spark.operators.model_harness import process_word_context, tokenize_single_word
 from vnlp_spark.plans.corpus import generate_web_pages
+from vnlp_spark.plans.pipeline import edges_stage
 from vnlp_spark.streaming.stream_kg import (
     WEB_PAGE_SCHEMA,
     stream_triples,
@@ -67,23 +72,70 @@ def test_windowed_mention_counts_with_watermark(spark, landing_dir):
     assert all(r["window"]["start"] is not None for r in rows)
 
 
-def test_salted_join_balances_hot_key(spark):
-    # one key owns 90% of the big side: without salting every hot row
-    # lands in one shuffle task; with salting they spread over n_salts
-    big = spark.createDataFrame(
-        [(i, "HOT" if i % 10 != 0 else f"k{i}") for i in range(2000)], ["v", "k"]
-    )
-    small = big.select("k").distinct().withColumn("payload", F.lit(1))
-    joined = salted_join(big, small, "k", n_salts=8)
-    assert joined.count() == 2000
-    # the hot key's rows are spread across >1 salt bucket pre-join
-    salted = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(8))
-    )
-    spread = (
-        salted.filter(F.col("k") == "HOT").select("_salt").distinct().count()
-    )
-    assert spread == 8, "hot key must fan out across all salt buckets"
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+# broadcast off, so both entity lookups are sort-merge joins, and skew
+# thresholds small enough that the hot partition of a test-sized input
+# counts as skewed (Spark's defaults: 256 MB and 64 MB)
+_SKEW_CONF = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16k",
+}
+
+
+def test_edges_skew_split(spark):
+    """One entity is the subject and object of 90% of the triples.  With
+    broadcast off, AQE must split its partition in both edge joins: the
+    final plan marks both sort-merge joins as skew-split, the largest
+    output partition holds at most twice the median rows, and the edges
+    equal the broadcast plan's."""
+    n = 20_000
+    triples = spark.createDataFrame(
+        [
+            (f"Ahmet{i}", "gördü", "İstanbul'u", f"http://t/{i}")
+            if i % 10 == 0 else
+            ("İstanbul'da", "açtı", "İstanbul'u", f"http://t/{i}")
+            for i in range(n)
+        ],
+        "subj string, pred string, obj string, url string",
+    ).selectExpr("*", "TIMESTAMP'2024-01-01 00:00:00' AS warc_ts")
+    # aggregated on (canon_key, type), so the entity side has its own
+    # exchange: AQE does not split a join side that reuses the other's
+    entities = build_entities(spark.createDataFrame(
+        [("istanbul", "LOC", "İstanbul")]
+        + [(f"ahmet{i}", "PER", f"Ahmet{i}") for i in range(0, n, 10)],
+        ["canon_key", "label", "mention"],
+    ))
+
+    saved = {k: spark.conf.get(k) for k in _SKEW_CONF}
+    for k, v in _SKEW_CONF.items():
+        spark.conf.set(k, v)
+    try:
+        skewed = edges_stage(triples, entities).withColumn(
+            "_part", F.spark_partition_id())
+        tagged = skewed.collect()
+        # read after the action: the final adaptive plan
+        plan = _plan(skewed)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+    assert "isFinalPlan=true" in plan
+    assert plan.count("SortMergeJoin(skew=true)") == 2, plan
+    sizes = sorted(Counter(r["_part"] for r in tagged).values())
+    assert sum(sizes) == n
+    assert max(sizes) <= 2 * statistics.median(sizes), sizes
+
+    broadcast = edges_stage(triples, entities)
+    got = sorted(tuple(r)[:-1] for r in tagged)
+    assert got == sorted(map(tuple, broadcast.collect()))
+    assert "BroadcastHashJoin" in _plan(broadcast)
 
 
 def test_tokenize_single_word_prepad():

@@ -32,6 +32,9 @@ import sys
 import time
 
 
+STAGES = ("sentences", "annotated", "mentions", "triples", "entities", "edges")
+
+
 def parse_args(argv=None):
     p = argparse.ArgumentParser(description="vnlp-spark KG construction job")
     p.add_argument("--input", required=True,
@@ -39,9 +42,15 @@ def parse_args(argv=None):
     p.add_argument("--output", required=True, help="output base dir (stage tables + lineage)")
     p.add_argument("--lang", default="tr", help="language filter ('' disables)")
     p.add_argument("--stages", default="all",
-                   help="comma list of sentences,annotated,mentions,triples,entities,edges")
+                   help=f"'all' or a comma list of {','.join(STAGES)}")
     p.add_argument("--force", action="store_true", help="recompute even if stages are complete")
-    return p.parse_args(argv)
+    args = p.parse_args(argv)
+    # a misspelled stage would match nothing: no table written, and the
+    # final counts would run the whole lazy chain three times
+    unknown = set() if args.stages == "all" else set(args.stages.split(",")) - set(STAGES)
+    if unknown:
+        p.error(f"unknown --stages {','.join(sorted(unknown))} (choose from {','.join(STAGES)})")
+    return args
 
 
 def main(argv=None) -> int:
@@ -64,11 +73,7 @@ def main(argv=None) -> int:
     else:
         docs = spark.read.parquet(args.input)
 
-    wanted = (
-        ["sentences", "annotated", "mentions", "triples", "entities", "edges"]
-        if args.stages == "all"
-        else args.stages.split(",")
-    )
+    wanted = STAGES if args.stages == "all" else args.stages.split(",")
     lang = args.lang or None
     runner = StageRunner(spark, args.output)
     t0 = time.monotonic()
@@ -88,15 +93,7 @@ def main(argv=None) -> int:
     entities = P.entities_stage(mentions)
     if "entities" in wanted:
         entities = runner.run("entities", entities, force=args.force)
-        # the stage's lineage table already recorded per-bucket counts:
-        # the broadcast-vs-salted switch costs a 64-row read, not a
-        # re-count of the entity table
-        edges = P.edges_stage(
-            triples, entities, entity_join="auto",
-            entities_rows=runner.row_count("entities"),
-        )
-    else:
-        edges = P.edges_stage(triples, entities)
+    edges = P.edges_stage(triples, entities)
     if "edges" in wanted:
         edges = runner.run("edges", edges, force=args.force)
 

@@ -13,13 +13,15 @@ Pipeline:
 3. **similarity linking** — near-miss mentions (typos, unseen inflections)
    link to known entities via a *blocked* char-3-gram Jaccard join:
    block on (first-2-chars, type); similarity computed natively with
-   array_intersect over n-gram sets.  The block join is salted
-   (``salted_join``) because Zipfian head entities (İstanbul, Türkiye)
-   concentrate whole blocks on one reducer.
+   array_intersect over n-gram sets.
 
-Skew handling (explicit per north rule): ``salted_join`` splits each hot
-key into N sub-keys on the big side and replicates the small side N ways —
-on top of AQE's runtime skew-split, which is also enabled in session.py.
+Skew handling (explicit per north rule): every join here is a plain
+equi-join, and the engine balances it.  Zipfian head entities (İstanbul,
+Türkiye) concentrate whole blocks on one key; AQE's skew join
+(``spark.sql.adaptive.skewJoin.enabled``, on in session.py) reads the
+actual shuffle sizes at runtime and splits each oversized partition of
+the mention side across several tasks, each paired with a copy of the
+matching entity partition.
 """
 from __future__ import annotations
 
@@ -248,22 +250,6 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def salted_join(big: DataFrame, small: DataFrame, key: str, n_salts: int = 8,
-                how: str = "inner") -> DataFrame:
-    """Skew-resistant equi-join: the big side gets a deterministic salt in
-    [0, n_salts) derived from its row content; the small side is exploded
-    n_salts ways.  Hot keys fan out across n_salts reducers instead of one.
-    Column sets are preserved (salt columns dropped)."""
-    big_s = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts))
-    )
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = big_s.join(small_s, on=[key, "_salt"], how=how)
-    return out.drop("_salt")
-
-
 def link_mentions(
     mentions_df: DataFrame,
     entities_df: DataFrame,
@@ -283,12 +269,13 @@ def link_mentions(
     1. exact hits resolve via hash join on (canon_key, type);
     2. alias exact hits (initials / curated short forms) on the folded
        key — broadcast-sized by construction;
-    3. the residual joins on (type, FOLDED-key prefix) blocks — salted —
-       and a candidate passes on folded-gram Jaccard >= ``min_jaccard``,
-       OR candidate-gram containment >= ``min_containment`` (fused
-       suffixed surfaces: İzmirliler ⊇ izmir), OR Damerau-Levenshtein
-       <= ``max_edit`` with matching first char (typos the gram overlap
-       dilutes: Ankra, Anakra).  Argmax by (score, -distance) via one
+    3. the residual joins on (type, FOLDED-key prefix) blocks — a plain
+       equi-join that AQE skew-splits — and a candidate passes on
+       folded-gram Jaccard >= ``min_jaccard``, OR candidate-gram
+       containment >= ``min_containment`` (fused suffixed surfaces:
+       İzmirliler ⊇ izmir), OR Damerau-Levenshtein <= ``max_edit`` with
+       matching first char (typos the gram overlap dilutes: Ankra,
+       Anakra).  Argmax by (score, -distance) via one
        max_by aggregation — no sort, no window."""
     exact = mentions_df.join(
         entities_df.select(key_col, F.col("type").alias(label_col), "entity_id"),
@@ -322,9 +309,8 @@ def link_mentions(
         .withColumn("_block", F.substring("_fkey", 1, block_prefix)) \
         .withColumn("_grams", char_ngrams("_fkey"))
 
-    joined = salted_join(
-        blocked_mentions, blocked_entities, key="_block",
-    ).filter(F.col(label_col) == F.col("_cand_label"))
+    joined = blocked_mentions.join(blocked_entities, on="_block") \
+        .filter(F.col(label_col) == F.col("_cand_label"))
     scored = joined.withColumn(
         "_jac", jaccard(F.col("_grams"), F.col("_cand_grams"))
     ).withColumn(

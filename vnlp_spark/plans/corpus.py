@@ -11,7 +11,7 @@ corpora with perfect determinism (content is a pure function of doc id).
 The sentence pool embeds the reference's golden sentences (so pipeline
 parity is exercised end to end) plus entity-bearing templates with a
 Zipf-skewed head-entity distribution (İstanbul/Türkiye/Ankara dominate),
-which is what makes the salted entity-resolution join measurable.
+which is what makes the entity joins' skew handling measurable.
 """
 from __future__ import annotations
 

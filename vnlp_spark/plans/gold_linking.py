@@ -112,8 +112,8 @@ GOLD_LINKS = [
     ("THY", "ORG", "türk hava yolları"),
     ("GS", "ORG", "galatasaray"),
     ("FB", "ORG", "fenerbahçe"),
-    # head-entity skew: the hot keys appear many times more (the salted
-    # join must spread them; correctness unchanged)
+    # head-entity skew: the hot keys appear many times more (AQE's skew
+    # join may split them; correctness unchanged)
     ("İstanbul'a", "LOC", "istanbul"),
     ("İstanbul'dan", "LOC", "istanbul"),
     ("İstanbuldan", "LOC", "istanbul"),

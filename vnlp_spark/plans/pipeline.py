@@ -12,9 +12,10 @@ documents(url, warc_ts, html, text, lang)
 Scale notes: everything up to `triples` is a single narrow map lineage —
 at 10^12 docs it parallelizes per input split with zero data movement.
 The entity aggregate shuffles (key, type) pairs (vocabulary-sized), and
-the edge join resolves subj/obj via broadcast when entities are small or
-a salted hash join otherwise.  Column pruning keeps `html` out of every
-scan (only `text` is read).
+the edge join resolves subj/obj with plain equi-joins: the planner
+broadcasts the entity table when its statistics say it is small, and
+otherwise AQE splits the hot partitions of the triple side at runtime.
+Column pruning keeps `html` out of every scan (only `text` is read).
 
 Boundary costs are kept small on both sides.  On the driver, each
 relational stage is built from SQL expression strings (``selectExpr`` /
@@ -44,7 +45,7 @@ from pyspark.sql.types import (
 from ..functions.sentence_splitter import py_split_sentences, split_sentences
 from ..functions.tokenizer import py_treebank_tokenize, treebank_tokenize
 from ..operators.dep_parser import dependency_parse, py_parse_tokens
-from ..operators.entity_resolution import build_entities, canonical_key_sql, salted_join
+from ..operators.entity_resolution import build_entities, canonical_key_sql
 from ..operators.morphology import analyze_morphology, py_analyze_tokens
 from ..operators.ner import py_ner_mentions
 from ..operators.triples import explode_triples
@@ -227,48 +228,17 @@ def entities_stage(mentions: DataFrame) -> DataFrame:
     return build_entities(mentions)
 
 
-# broadcast cap for the entity lookup: ~100 B/row puts 500k rows around
-# Spark's comfortable broadcast sizes; beyond it an open-domain crawl's
-# entity table must go through the skew-resistant salted join instead
-BROADCAST_MAX_ENTITY_ROWS = 500_000
-
-
-def edges_stage(
-    triples: DataFrame,
-    entities: DataFrame,
-    entity_join: str = "broadcast",
-    entities_rows: int | None = None,
-) -> DataFrame:
+def edges_stage(triples: DataFrame, entities: DataFrame) -> DataFrame:
     """Resolve triple arguments to entity ids -> edges table.
 
     Subject/object surfaces canonicalize with the same key function the
-    entity table was built with.  The entity lookup join picks its
-    strategy by ``entity_join``:
-
-    - ``"broadcast"`` (default for the lazy plan builder): vocabulary-
-      sized entities ship to every executor; the triple stream never
-      shuffles.
-    - ``"salted"``: skew-resistant shuffle join (entity_resolution.
-      salted_join) for entity tables too big to broadcast — Zipfian head
-      entities (İstanbul, Türkiye) would otherwise pin whole reducers.
-    - ``"auto"``: size-based switch — uses ``entities_rows`` when the
-      caller already knows the count (the staged job reads it from
-      parquet metadata for free), else counts, then picks broadcast
-      below BROADCAST_MAX_ENTITY_ROWS and salted above.  Only use from
-      call sites where `entities` is materialized; counting a lazy
-      entities plan would execute the full annotation chain twice.
+    entity table was built with, then look up their entity with a plain
+    left equi-join each.  Spark chooses the join: a vocabulary-sized
+    entity table is broadcast (its statistics fall under
+    ``spark.sql.autoBroadcastJoinThreshold``), so the triple stream never
+    shuffles; a bigger one goes through a sort-merge join whose Zipfian
+    head partitions (İstanbul, Türkiye) AQE's skew join splits at runtime.
     """
-    mode = entity_join
-    if mode == "auto":
-        n = entities_rows if entities_rows is not None else entities.count()
-        mode = "broadcast" if n <= BROADCAST_MAX_ENTITY_ROWS else "salted"
-    if mode not in ("broadcast", "salted"):
-        raise ValueError(f"unknown entity_join {entity_join!r}")
-
-    ent = entities.select("entity_id", "canon_key", "type")
-    if mode == "broadcast":
-        ent = F.broadcast(ent)
-
     # subj/obj surfaces resolved via their canon keys against entities
     t = triples.selectExpr("*", *(
         f"CASE WHEN {arg} IS NOT NULL THEN {canonical_key_sql(arg)} END AS {arg}_key"
@@ -276,17 +246,13 @@ def edges_stage(
     ))
 
     def rename(side: str):
-        return ent.selectExpr(
+        return entities.selectExpr(
             f"entity_id AS {side}_id", f"canon_key AS {side}_key", f"type AS {side}_etype"
         )
 
-    if mode == "broadcast":
-        e = t.join(rename("subj"), on=["subj_key"], how="left").join(
-            rename("obj"), on=["obj_key"], how="left"
-        )
-    else:
-        e = salted_join(t, rename("subj"), key="subj_key", how="left")
-        e = salted_join(e, rename("obj"), key="obj_key", how="left")
+    e = t.join(rename("subj"), on=["subj_key"], how="left").join(
+        rename("obj"), on=["obj_key"], how="left"
+    )
     return e.select("subj_id", "subj", "pred", "obj_id", "obj", "url", "warc_ts").where(
         "subj_id IS NOT NULL OR obj_id IS NOT NULL")
 

@@ -2,6 +2,12 @@
 
 Local testing uses ``local[N]``; the same conf block is what we'd pass to
 ``spark-submit`` on a real cluster (AQE on, Arrow on, skew-join handling on).
+
+Join strategy is the engine's job, with no hints on the entity joins:
+the planner broadcasts a side whose statistics fall under
+``autoBroadcastJoinThreshold``, and AQE's skew join splits the oversized
+partitions of a sort-merge join at runtime (Spark's default thresholds:
+a partition 5x the median and over 256 MB).
 """
 from __future__ import annotations
 

@@ -73,8 +73,8 @@ def stateful_entity_totals(pages: DataFrame, lang: str | None = "tr") -> DataFra
     running per-entity mention totals held in the state store across
     micro-batches.  Unlike the watermarked window aggregate above, totals
     never expire — this is the "entity popularity so far" accumulator a
-    continuously-ingesting KG needs for hot-key detection (the salted-join
-    threshold) without re-scanning history.
+    continuously-ingesting KG needs for hot-key detection without
+    re-scanning history.
 
     Output (update mode): one (canon_key, total_mentions) row per entity
     per micro-batch that touched it.  State per key is a single long, so
