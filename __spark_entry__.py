@@ -124,28 +124,26 @@ def _q_lang_filter(spark, sf_dir):
 
 
 def _q_token_frequency(spark, sf_dir):
+    from vnlp_spark.operators.stopwords import token_frequencies
+
     docs = _load(spark, sf_dir, "documents")
-    return (
+    toks = (
         docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
         .filter(F.length("token") > 0)
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.col("token"))
-        .limit(200)
     )
+    return token_frequencies(toks).limit(200)
 
 
 def _q_stopword_drop(spark, sf_dir):
+    from vnlp_spark.operators.stopwords import token_frequencies
+
     docs = _load(spark, sf_dir, "documents")
-    return (
+    toks = (
         docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
         .filter(F.length("token") > 0)
         .filter(~F.col("token").isin(_stopwords()))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.col("token"))
-        .limit(200)
     )
+    return token_frequencies(toks).limit(200)
 
 
 def _q_token_count(spark, sf_dir):
@@ -655,7 +653,7 @@ def _q_multimodal_features(spark, sf_dir):
     from vnlp_spark.operators.multimodal import extract_features, synth_media
 
     media = synth_media(spark, 200)
-    feats = extract_features(media, fake=True)
+    feats = extract_features(media)
     return feats.select(
         "doc_id", "kind", F.round(F.aggregate(F.col("feature").cast("array<double>"), F.lit(0.0), lambda a, x: a + x * x), 5).alias("feature_sq_norm")
     ).orderBy("doc_id")

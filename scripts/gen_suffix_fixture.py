@@ -1,4 +1,12 @@
-"""Generate vnlp_spark/resources/suffix_tags_fixture.txt.gz.
+"""Compose the morphotactic core of the suffix table.
+
+The committed ``vnlp_spark/resources/suffix_tags_fixture.txt.gz`` is the
+source of truth and a strict superset of this script's output (52,458
+against 33,816 rows): later rounds extended the committed table in
+place for gaps found in gold error analysis, negative, passive and
+causative participles and verbal nouns among them.  This script never
+writes there; it writes only to the path named on its command line, for
+inspecting or diffing the generated core against the committed table.
 
 The reference's full suffix dictionary (``Suffixes&Tags.txt``, consumed at
 _yildiz_analyzer.py:85-96) is absent from the snapshot
@@ -18,12 +26,12 @@ repo's generator and the reference's (tests/test_reference_parity.py
 injects this table into the reference's TurkishStemSuffixCandidateGenerator
 and asserts candidate parity).
 
-Run once: python scripts/gen_suffix_fixture.py  (output is committed).
+Usage: python scripts/gen_suffix_fixture.py OUT.txt.gz
 """
 from __future__ import annotations
 
+import argparse
 import gzip
-import os
 
 # Harmony classes: the high vowel (H) and low vowel (A) that a suffix takes
 # depend on the preceding vowel.  The root's harmony is unknown at table-build
@@ -488,6 +496,9 @@ def adj_zero_nominal(nominal):
 
 
 def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("out", help="output path (gzip text, one row per reading)")
+    out = ap.parse_args().out
     rows = set()
     nominal = nominal_paradigm()
     rows |= nominal
@@ -517,9 +528,6 @@ def main():
     rows |= {("null", t) for t in nulls}
     rows |= {("'", "Noun+Prop+A3sg+Pnon+Nom")}
 
-    out = os.path.join(
-        os.path.dirname(__file__), "..", "vnlp_spark", "resources", "suffix_tags_fixture.txt.gz"
-    )
     with gzip.open(out, "wt", encoding="utf-8", compresslevel=9) as f:
         for s, t in sorted(rows):
             f.write(f"{s}\t{t}\n")

@@ -97,7 +97,7 @@ def passive_attestation(v: str, kw: frozenset) -> int:
 # MIXED-valency verbs that clear the attestation battery but must not be
 # listed transitive: their bare/ambiguous preverbal nominal is an
 # oblique or subject, not an object.  Same middle class the curated list
-# deliberately leaves out (dep_parser.py commentary: bak, çarp, an,
+# deliberately leaves out (morphology.py commentary: bak, çarp, an,
 # işle) — listing any of these would flip currently-correct parses.
 EXCLUDED = {
     # +Dat / +Abl / +İle oblique frames and experiencer verbs

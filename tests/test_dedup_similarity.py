@@ -148,26 +148,18 @@ def test_embedding_near_dups_selfconsistent(spark):
 
 def test_multimodal_plumbing(spark):
     media = synth_media(spark, 60)
-    feats = extract_features(media, fake=True)
+    feats = extract_features(media)
     rows = feats.collect()
     assert len(rows) == 60
     assert all(len(r["feature"]) == 64 for r in rows)
     # determinism: same payload -> same pseudo-features
-    again = {r["doc_id"]: r["feature"] for r in extract_features(media, fake=True).collect()}
+    again = {r["doc_id"]: r["feature"] for r in extract_features(media).collect()}
     first = {r["doc_id"]: r["feature"] for r in rows}
     assert first == again
-    frames = sample_frames(media, every_ms=1000, fake=True)
+    frames = sample_frames(media, every_ms=1000)
     fr = frames.collect()
     assert len(fr) > 0
     assert all(r["ts_ms"] == r["frame_idx"] * 1000 for r in fr)
-
-
-def test_decode_stub_raises(spark):
-    from vnlp_spark.operators.multimodal import decode_image
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"xx", fake=False)
-    assert decode_image(b"xx", fake=True).shape == (64,)
 
 
 def test_rolling_hash_fingerprint_golden(spark):

@@ -191,9 +191,9 @@ def test_operator_digests(spark, corpus):
                     centroids=centroids)
     got["ivf_topk"] = _digest(topk, topk.columns)
     media = synth_media(spark, 60)
-    feats = extract_features(media, fake=True)
+    feats = extract_features(media)
     got["extract_features"] = _digest(feats, feats.columns)
-    frames = sample_frames(media, every_ms=1000, fake=True)
+    frames = sample_frames(media, every_ms=1000)
     got["sample_frames"] = _digest(frames, frames.columns)
 
     bad = {n: (got[n], PINS.get(n)) for n in got if got[n] != PINS.get(n)}

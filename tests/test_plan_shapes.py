@@ -1,6 +1,7 @@
 """Physical-plan assertions: the scale-critical optimizations must be
 visible in the plans, not just intended."""
 import io
+import threading
 from contextlib import redirect_stdout
 
 import pyspark.sql.functions as F
@@ -88,9 +89,13 @@ def test_kg_plan_gateway_round_trips(spark, tmp_path):
 
     calls = [0]
     send = ClientServerConnection.send_command
+    # py4j's finalizer thread sends the detach commands of Python proxies
+    # that earlier tests dropped; only this thread's calls build the plan
+    me = threading.get_ident()
 
     def counting(self, *args, **kwargs):
-        calls[0] += 1
+        if threading.get_ident() == me:
+            calls[0] += 1
         return send(self, *args, **kwargs)
 
     ClientServerConnection.send_command = counting

@@ -76,11 +76,3 @@ def test_real_lossy_webp_refused_honestly():
     with pytest.raises(NotImplementedError):
         decode_webp(payload)
 
-
-def test_decode_image_integration():
-    from vnlp_spark.operators.multimodal import FEATURE_DIM, decode_image
-
-    img = _grad()
-    feats = decode_image(encode_webp(img, subtract_green=True))
-    assert feats.shape == (FEATURE_DIM,)
-    assert abs(float(np.linalg.norm(feats)) - 1.0) < 1e-5

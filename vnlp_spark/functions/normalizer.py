@@ -3,8 +3,8 @@
 Ops P1/P2/P3/P9/P10 of the reference (vnlp/normalizer/normalizer.py:39-127,
 part_of_speech_tagger/_treestack_utils.py:185-190,390-398) expressed as
 **native Spark Column expressions** so they stay inside whole-stage codegen
-— no Python round-trip.  Each op also has a ``py_*`` pure-Python twin used
-for parity tests and inside composite Arrow UDFs.
+— no Python round-trip.  P1/P2/P3/P9 also have a ``py_*`` pure-Python
+twin used for parity tests and inside composite Arrow UDFs.
 
 Byte-parity notes
 -----------------
@@ -83,27 +83,9 @@ def py_digits_to_zero(text: str) -> str:
     return "".join("0" if c.isdigit() else c for c in text)
 
 
-# P6 ----------------------------------------------------------------------
-def correct_typos(col: Column | str) -> Column:
-    """API-parity stub (reference P6, normalizer.py:156-181): the reference
-    removed its Jamspell-based implementation on 2024-11-27 and the method
-    body is ``pass`` — it computes nothing.  Kept here as identity so
-    pipelines porting from the reference keep working; a real corrector
-    slots in as an Arrow UDF."""
-    return F.col(col) if isinstance(col, str) else col
-
-
-def py_correct_typos(text: str) -> str:
-    return text
-
-
 # P10 --------------------------------------------------------------------
 def preprocess_word(col: Column | str) -> Column:
     """Embedding-lookup pre-norm: curly apostrophe -> straight, Turkish
     lowercase, digits -> 0 (reference P10, _treestack_utils.py:185-190)."""
     c = F.col(col) if isinstance(col, str) else col
     return digits_to_zero(turkish_lower(F.translate(c, "’", "'")))
-
-
-def py_preprocess_word(word: str) -> str:
-    return py_digits_to_zero(py_turkish_lower(word.replace("’", "'")))

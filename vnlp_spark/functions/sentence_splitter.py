@@ -17,7 +17,6 @@ from __future__ import annotations
 from typing import List
 
 import regex
-from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..resources import non_breaking_prefixes
@@ -98,14 +97,3 @@ def py_split_sentences(text: str, prefixes: dict | None = None) -> List[str]:
 
 # prefixes parsed once per python worker (non_breaking_prefixes is cached)
 split_sentences = arrow_map(py_split_sentences, ArrayType(StringType()))
-
-
-def explode_sentences(df, text_col: str = "text", id_cols: tuple = ("url",)):
-    """documents -> one row per sentence: (id_cols..., sent_id, sentence).
-
-    Narrow map + generate — no shuffle; Catalyst prunes unused document
-    columns out of the parquet scan.
-    """
-    return (
-        df.select(*id_cols, F.posexplode(split_sentences(text_col)).alias("sent_id", "sentence"))
-    )

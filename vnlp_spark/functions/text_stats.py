@@ -23,11 +23,6 @@ def whitespace_token_count(col: Column | str) -> Column:
     return F.size(F.split(F.trim(_c(col)), r"\s+"))
 
 
-def word_count(col: Column | str) -> Column:
-    """Alias kept for API symmetry."""
-    return whitespace_token_count(col)
-
-
 # --- quality scoring ----------------------------------------------------
 
 def punct_ratio(col: Column | str) -> Column:
@@ -109,11 +104,6 @@ def normalized_fingerprint(col: Column | str) -> Column:
         )
     )
     return F.md5(F.encode(canon, "UTF-8"))
-
-
-def xx_fingerprint(col: Column | str) -> Column:
-    """64-bit xxhash fingerprint — the cheap scale path (no oracle)."""
-    return F.xxhash64(_c(col))
 
 
 def rolling_hash_fingerprint(col: Column | str, base: int = 31, mod: int = 1_000_000_007) -> Column:

@@ -14,8 +14,9 @@ reproduces the reference's published golden outputs; swap
 ``HeuristicDisambiguator`` for a learned scorer without touching the Spark
 plumbing (both implement ``select(candidates, idx, tokens) -> int``).
 
-The suffix dictionary is a generated morphotactic fixture
-(scripts/gen_suffix_fixture.py) because the reference's full
+The suffix dictionary is a committed morphotactic fixture
+(resources/suffix_tags_fixture.txt.gz, the source of truth; its generated
+core comes from scripts/gen_suffix_fixture.py) because the reference's full
 ``Suffixes&Tags.txt`` is absent from the snapshot.
 
 Spark mapping: one Arrow-UDF row = one tokenized sentence
@@ -56,8 +57,10 @@ _PRONOUN_SWAP = {"ban": "ben", "Ban": "Ben", "san": "sen", "San": "Sen"}
 _SOFTEN = {"b": "p", "B": "P", "c": "ç", "C": "Ç", "d": "t", "D": "T",
            "ğ": "k", "Ğ": "K", "g": "k", "G": "K"}
 
-# titles / role nouns (shared with the dependency parser's mention logic).
-# Several are segmentation-homographs of inflected shorter stems (kaptan =
+# titles / role nouns (shared with the dependency parser's mention logic:
+# before a capitalized name they head the mention and the name attaches
+# flat — Profesör Orhan konuştu -> Profesör nsubj, Orhan -> flat; they are
+# never themselves proper nouns).  Several are segmentation-homographs of inflected shorter stems (kaptan =
 # kap+Abl, bakan = bak+PresPart, başkan = baş+kan): when capitalized they
 # are near-always the role noun in web/news register.
 TITLE_ROLES = {
@@ -196,6 +199,233 @@ _MATERIAL_NOUNS = {
     # ağırladı, rekor katılım)
     "rekor",
 }
+
+# --- lexical classes and helpers shared by the PoS tagger and the
+# dependency parser (pos.py imports them from here; dep_parser imports
+# them and pos, so the import between the two runs one way)
+
+_CAP_RE = re.compile(r"^[A-ZÇĞİIÖŞÜ]")
+
+# words UD-Turkish treebanks tag ADV regardless of the morph table's
+# nominal reading (dün = 'yesterday', not 'yesterday-the-noun')
+_TEMPORAL_ADVS = {
+    "dün", "bugün", "yarın", "şimdi", "demin", "artık", "hemen", "henüz",
+    "hâlâ", "hala", "bazen", "asla", "belki", "yine", "gene", "ayrıca",
+    "ardından", "sonunda", "birlikte", "beraber", "erkenden", "yeniden",
+    "tekrar", "önce", "sonra", "erken", "geç", "gerçekten",
+    # bare "yakında" is the lexicalized adverb ('soon' / 'nearby'); the
+    # possessed spatial form (yakınında) never matches this surface
+    "yakında",
+    # lexicalized manner adverbs (Ins-case in the morph table).
+    # "zamanında" is NOT here: UD keeps it a Loc-possessed NOUN oblique
+    # (Borç ZAMANINDA ödenmezse -> zaman+P3sg+Loc, obl)
+    "başarıyla", "hızla", "dikkatle", "özenle", "içeri", "dışarı",
+    "sırayla", "önceden", "sonradan",
+}
+
+# degree adverbs: advmod to a following ADJ/ADV
+_DEGREE_ADVS = {"çok", "en", "daha", "pek", "gayet", "oldukça", "epey", "az"}
+
+# temporal noun ROOTS: bare-nominative time expressions are obl, never
+# subjects/objects (sabah kalktım)
+_TEMPORAL_ROOTS = {
+    "sabah", "akşam", "gece", "öğle", "gündüz", "hafta", "yıl", "ay",
+    "gün", "sene", "yaz", "kış", "bahar", "sonbahar", "ilkbahar",
+    "dakika", "saat", "saniye", "dönem", "çeyrek", "mevsim", "asır",
+    "sezon",
+    "yüzyıl", "pazartesi", "salı", "çarşamba", "perşembe", "cuma",
+    "cumartesi", "pazar",
+    # frequency nouns behave identically (üçüncü KEZ kazandı -> obl);
+    # "sefer" stays out — its trip/flight sense is a regular noun
+    # (seferler durduruldu)
+    "kez", "defa", "kere",
+}
+
+# transitive verb roots: used ONLY to resolve the Acc / P3sg+Nom surface
+# homography next to the verb (Takım maçı kazandı = obj; Takım kaptanı
+# oynadı = compound subject).  Small curated list of frequent verbs.
+_TRANSITIVE_ROOTS = {
+    "kazan", "oku", "gör", "izle", "seç", "al", "ver", "yap", "iç", "ye",
+    "bul", "sev", "bekle", "söyle", "anlat", "duyur", "tanıt", "aç",
+    "kapat", "kır", "getir", "götür", "koy", "yaz", "çiz", "öğren",
+    "öğret", "bil", "iste", "dinle", "sat", "öde", "kes", "pişir",
+    "hazırla", "topla", "at", "tut", "çek", "unut", "hatırla", "başlat",
+    "bitir", "kur", "boz", "incele", "araştır", "savun", "eleştir",
+    "destekle", "kutla", "belirle", "etkile", "sun", "gönder", "ölç",
+    "yen", "taşı", "kullan", "paylaş", "yayınla", "keşfet", "genişlet",
+    "işlet", "tamamla", "kovala", "şaşırt", "zorla", "yaptır", "geniş",
+    "beğen", "bağışla", "yanıtla", "teslim", "gez", "say", "dağıt",
+    "et", "çal", "sor", "ekle", "onar", "düzelt", "temizle", "yıka", "dile",
+    "bırak", "değiştir", "kaydet", "üret", "uygula", "düzenle", "yönet",
+    "çöz", "tasarla", "denetle", "tartış",
+    # change-of-state causatives (renovate/improve/raise class): their
+    # bare agent + ambiguous-Acc frame is the subject+object reading
+    # (Belediye PARKI yeniledi)
+    "yenile", "geliştir", "güçlendir", "iyileştir", "artır", "arttır",
+    "azalt", "düşür", "yükselt", "büyüt", "vurgula", "hedefle",
+    # frequent news-register transitives (blind-25 hardening: the
+    # ambiguous Acc/P3sg frame before an UNLISTED verb defaults to the
+    # izafet-subject reading, so missing members cost recall)
+    "açıkla", "öner", "sürdür", "durdur", "ertele", "engelle", "önle",
+    "yasakla", "sınırla", "koru", "kurtar", "kaldır", "güncelle",
+    "dönüştür", "doğrula", "tanımla", "yorumla", "sorgula", "sergile",
+    "suçla", "eğit", "görevlendir", "ödüllendir", "cezalandır",
+    "karşıla", "ağırla", "canlandır", "zenginleştir", "pekiştir",
+    "kapsa", "içer", "yayımla", "aktar", "devret", "üstlen",
+    "kazandır", "kaybet", "programla", "gözlemle", "kopyala", "gizle",
+    "reddet", "affet", "böl", "birleştir", "bağla", "yerleştir",
+    "taşı", "karşılaştır",
+    # addressee-directed communication transitives (blind-42: the
+    # person-object frame KAPTAN yolcuları ... uyardı)
+    "uyar", "bilgilendir", "selamla", "davet",
+    # fifth-probe-sweep hardening: frequent news transitives still
+    # unlisted (Kurum ... burs ve ücretsiz yemek SAĞLADI), plus the
+    # blind-44 probe verbs that resolved only via adjacency
+    "sağla", "oluştur", "gerçekleştir", "değerlendir", "imzala",
+    "daralt", "geçir", "ilaçla", "ulaştır",
+    # blind-45: arrange/lay-out class (Gözlükçü çerçeveleri cam rafa
+    # DİZDİ — the izafet-subject reading left the verb objectless)
+    "diz",
+    # blind-48: the lexicalized -Ar causative çıkar- is transitive
+    # (deri botları rafa ÇIKARDI); the intransitive çık- is a separate
+    # stem and never reaches these rules
+    "çıkar",
+    # blind-49: artisanal process transitives (fındıkları KAVURDU,
+    # hamuru MAYALADI, masaları CİLALADI)
+    "kavur", "mayala", "cilala",
+    # eleventh valency sweep: craft/kitchen/process transitives whose
+    # stems the lexicon lists as verbs, each unambiguously transitive
+    # (the productive causatives kaynat/kızart/dondur need no listing —
+    # "Caus" in the tagset already obligates an object)
+    "soğut", "ısıt", "zımparala", "yoğur", "öğüt", "demle", "közle",
+    "ayıkla", "kırp", "aşıla", "istifle", "bük", "sar", "düğümle",
+    "sürgüle", "perçinle", "lehimle", "rendele", "kapa",
+    # ... and administrative/tech/judicial transitives from the same
+    # sweep (mixed-valency verbs like bak/çarp/an deliberately left out)
+    "feshet", "uyarla", "yedekle", "şifrele", "kodla", "dene",
+    "hesapla", "anımsa", "yinele", "tekrarla", "soruştur", "tutukla",
+    # experiencer transitive: its bare event-nominal complement is the
+    # object (sorun yaşadı, ürün kaybı yaşadı); the residence sense
+    # takes Loc obliques which never reach the object rules anyway
+    "yaşa",
+    # everyday physical-action transitives (the kitchen/craft class)
+    "doğra", "kavur", "haşla", "dilimle", "soy", "ez", "süz", "kıy",
+    "öv", "kirala", "onayla", "imzala", "yükle", "indir", "sakla",
+    "boya", "dik", "yık", "sök", "tak", "as", "ser", "katla", "ütüle",
+    "bas", "yay", "tart", "ölç", "say", "karıştır", "tara",
+    # denominal -lA transitives (care/maintenance class: fidanları
+    # SULADI) — the -lA verbalizer is near-uniformly transitive
+    "sula", "yağla", "tuzla", "cilala", "parlat", "süsle", "paketle",
+    "kilitle", "etiketle", "damgala", "mühürle", "listele", "besle",
+    "törpüle", "fırçala", "süpür", "sil",
+    # round-4 inventory sweep: perception/cognition, evaluation, and
+    # everyday news-register transitives missing from the curated list
+    # "işle" deliberately absent: dual valency (veriyi işledi vs faiz
+    # işleyecek) keeps it in the unlisted middle class
+    "belirt", "benimse", "değerlendir", "yakala", "boşalt",
+    "anla", "duy", "hisset", "başar", "öngör", "planla", "amaçla",
+    "yargıla", "görüntüle", "belgele", "ayır", "parçala", "fırlat",
+    "ört", "kapla", "giy", "öp", "kına", "çiğne", "yut", "em",
+    "derle", "özetle", "çevir", "tüket", "harca", "biriktir",
+    "devral", "uğurla", "selamla", "alkışla", "arşivle", "depola",
+    "sars",
+    # bare-object activity verbs (top oynuyor, ders çalışıyor): take obj;
+    # motion/stative intransitives (git, gel, koş, ulaş) stay out so a
+    # bare preverbal nominal before them parses oblique (parka gidemedi)
+    "oyna", "çalış", "söyle", "yüz", "kazan",
+}
+
+# motion / stative intransitives: a bare preverbal nominal before these
+# is an oblique, not an indefinite object.  Blind-2 flipped the default
+# the other way (kararlar AÇIKLADI must be obj even though açıkla is not
+# enumerated above): unlisted verbs now take the object reading, which is
+# the overwhelmingly more frequent frame for a bare preverbal nominal
+# with the subject slot already filled.
+_INTRANSITIVE_ROOTS = {
+    # "ol" never takes an Acc object: possessed-Nom subjects stand
+    # (Kardeşi hasta OLDU)
+    "ol",
+    "git", "gel", "koş", "ulaş", "dön", "kal", "otur", "yürü", "uç", "yağ",
+    "düş", "çık", "gir", "in", "bat", "ak", "yat", "uyu", "dur", "kaç",
+    "var", "öl", "doğ", "büyü", "gez",
+    # unaccusative change-of-state verbs: no Acc object is possible, so
+    # a preverbal nominal is never their obj and a later Nom nominal is
+    # the subject (trafik yoğunluğu AZALDI, fiyatlar YÜKSELDİ)
+    "azal", "art", "yüksel", "çoğal", "ısın", "soğu", "daral",
+    "genişle", "hızlan", "yavaşla", "ucuzla", "zayıfla", "güçlen",
+    "yaygınlaş",
+    # completion / phase / state-change members of the same class:
+    # none can take an Acc object (YARIŞ bittikten sonra — the
+    # preverbal Nom is the subject, never an incorporated object)
+    "bit", "başla", "sön", "eri", "kuru", "çürü", "gecik", "uyan",
+    "doy", "din",
+    # physical-process unaccusatives (round-4 inventory sweep): burn,
+    # collapse, burst, fade, freeze, leak, boil-over, tremble, slip —
+    # none take Acc objects; -lAş 'Become' derivations are handled
+    # structurally by _intrans()
+    "çök", "patla", "sol", "don", "kok", "şiş", "parla", "titre",
+    "kay", "zıpla", "sıçra", "tüken", "yan", "piş", "kop", "sız",
+    "düzel", "dol", "değiş",
+}
+
+# round-5 bulk valency induction: the curated transitive list above is
+# the PRECISION core (~300 hand-verified roots, grown 12-per-sweep over
+# rounds 3-4); the induced file is the RECALL sweep over the whole
+# ~2,450-verb lexicon — verbs whose passive paradigm is attested >=3
+# independent ways in the known-words derivational dictionary
+# (personal passives presuppose a promotable object), minus a curated
+# oblique-frame/mixed-valency exclusion list (scripts/induce_valency.py).
+# Curated intransitives always win the merge.
+def _merged_transitives() -> frozenset:
+    return frozenset(_TRANSITIVE_ROOTS) | (
+        resources.induced_transitives() - _INTRANSITIVE_ROOTS
+    )
+
+
+_TRANSITIVE_ROOTS = _merged_transitives()
+
+
+@lru_cache(maxsize=1)
+def _typed_gazetteer():
+    gaz = resources.ner_gazetteer()
+    per, typed = set(), {}
+    for w, lbl in gaz.items():
+        if lbl == "PER":
+            per.add(to_lower(w))
+        if lbl != "ORGKEY":
+            typed[to_lower(w)] = lbl
+    return per, typed
+
+
+def _case_of(analysis: str) -> str:
+    tags = set(analysis.split("+"))
+    for case in ("Acc", "Dat", "Loc", "Abl", "Gen", "Ins", "Nom"):
+        if case in tags:
+            return case
+    return ""
+
+
+def _base(token: str) -> str:
+    return to_lower(token.split("'")[0].split("’")[0])
+
+
+def _is_possessed(token: str, analysis: str) -> bool:
+    tags = set(analysis.replace("^", "+").split("+"))
+    if tags & {"P1sg", "P2sg", "P3sg", "P1pl", "P2pl", "P3pl"}:
+        return True
+    # apostrophe-Prop analyses absorb the possessive into the root
+    # (Belediyesi'nin -> belediyesi+...+Gen): recover P3sg from the
+    # pre-apostrophe surface (-sH always; bare -H when the remainder is a
+    # dictionary stem: Boğazı yes, Aslı no)
+    if "'" in token or "’" in token:
+        base = _base(token)
+        if re.search(r"s[ıiuü]$", base):
+            return True
+        if len(base) > 3 and base[-1] in "ıiuü" and base[-2] not in "aeıioöuü":
+            if base[:-1] in resources.stem_dict():
+                return True
+    return False
+
 
 _MORPH_TO_UPOS = {
     "Noun": "NOUN",
@@ -1872,7 +2102,3 @@ def py_analyze_sentence(sentence: str) -> List[str]:
 
 # array<string> tokens -> array<string> analyses
 analyze_morphology = arrow_map(py_analyze_tokens, ArrayType(StringType()))
-
-
-def root_of(analysis: str) -> str:
-    return analysis.split("+", 1)[0]

@@ -1,13 +1,12 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + typed
-metadata, with decode / feature-extraction / frame-sampling as
-``mapInArrow`` stages.
+metadata, with feature extraction and frame sampling as ``mapInArrow``
+stages.
 
-The container has no image/audio codecs, so the decode kernels are STUBS:
-``decode_image`` raises NotImplementedError unless ``fake=True``, in which
-case a deterministic content-derived pseudo-decode runs instead (stable
-across executors — suitable for tests and for exercising the real Spark
-plumbing: schemas, Arrow batch shapes, partitioning).  Swapping in Pillow/
-ffmpeg later only replaces the marked kernel bodies.
+No payload is decoded.  Every feature vector comes from
+``_pseudo_decode``: a deterministic, content-derived (sha256-seeded)
+unit vector, stable across executors and runs.  The Spark plumbing
+(schemas, Arrow batch shapes, partitioning) is real; a codec would only
+replace ``_pseudo_decode``.
 
 Schema conventions:
     media(doc_id long, kind string, payload binary,
@@ -76,55 +75,15 @@ def _pseudo_decode(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     return v / (np.linalg.norm(v) + 1e-9)
 
 
-def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
-    """PNG, baseline AND progressive JPEG, and lossless WebP (VP8L)
-    payloads decode for REAL (pure-python codecs: operators/png.py zlib
-    IDAT + numpy unfilter; operators/jpeg.py Huffman + dequant + IDCT
-    incl. progressive scans; operators/webp.py VP8L prefix codes + LZ77
-    + color cache + transforms) and featurize as an 8x8 block-mean
-    thumbnail.  Lossy VP8 WebP still needs a codec library the
-    container lacks — honest NotImplementedError unless fake=True
-    (deterministic pseudo-decode for tests)."""
-    from .jpeg import decode_jpeg, is_jpeg
-    from .png import decode_png, image_features, is_png
-    from .webp import decode_webp, is_webp
-
-    if payload and is_png(payload):
-        return image_features(decode_png(payload), FEATURE_DIM)
-    if payload and is_jpeg(payload):
-        try:
-            return image_features(decode_jpeg(payload), FEATURE_DIM)
-        except NotImplementedError:
-            if not fake:
-                raise
-            return _pseudo_decode(payload)
-    if payload and is_webp(payload):
-        try:
-            return image_features(decode_webp(payload)[..., :3], FEATURE_DIM)
-        except NotImplementedError:
-            if not fake:
-                raise
-            return _pseudo_decode(payload)
-    if not fake:
-        raise NotImplementedError(
-            "non-PNG/JPEG/WebP image decode requires Pillow; PNG, "
-            "baseline+progressive JPEG and VP8L WebP decode natively, "
-            "or run with fake=True for the deterministic pseudo-decode"
-        )
-    return _pseudo_decode(payload)
-
-
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """media -> features via mapInArrow: one Arrow batch in, one out;
     partitioning untouched (narrow), payload column pruned away after use."""
     arrow_schema = to_arrow_schema(FEATURE_SCHEMA)
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            feats = [
-                (_pseudo_decode(p) if fake else decode_image(p, fake=False)).tolist()
-                for p in batch.column("payload").to_pylist()
-            ]
+            feats = [_pseudo_decode(p).tolist()
+                     for p in batch.column("payload").to_pylist()]
             yield pa.RecordBatch.from_pydict(
                 {"doc_id": batch.column("doc_id"), "kind": batch.column("kind"),
                  "feature": feats},
@@ -134,10 +93,9 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
     return media.mapInArrow(gen, schema=FEATURE_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000, fake: bool = True) -> DataFrame:
-    """video -> one row per sampled frame (frame_idx, ts_ms, feature).
-    Frame extraction is the stubbed kernel; the explode/partition plumbing
-    is real."""
+def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
+    """video -> one row per sampled frame (frame_idx, ts_ms, feature);
+    each frame's feature is the pseudo-decode of payload + frame index."""
     schema = StructType(
         [
             StructField("doc_id", LongType()),
@@ -155,8 +113,6 @@ def sample_frames(media: DataFrame, every_ms: int = 1000, fake: bool = True) -> 
             for r in batch.to_pylist():
                 dur = r["meta"]["duration_ms"] or 0
                 n_frames = max(1, int(dur) // every_ms)
-                if not fake:
-                    raise NotImplementedError("frame extraction requires ffmpeg")
                 for i in range(n_frames):
                     rows["doc_id"].append(r["doc_id"])
                     rows["frame_idx"].append(i)

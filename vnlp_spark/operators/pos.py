@@ -22,26 +22,23 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..functions._udf import arrow_map
-
-from .dep_parser import (
+from .morphology import SPATIAL_ROOTS as _SPATIAL_ROOTS
+from .morphology import TITLE_ROLES as _TITLES
+from .morphology import (
     _CAP_RE,
     _DEGREE_ADVS,
-    _SPATIAL_ROOTS,
-    _TEMPORAL_ADVS,
-    _TEMPORAL_ROOTS,
-    _TITLES,
-    _TRANSITIVE_ROOTS,
-    _case_of,
-    _is_possessed,
-    _typed_gazetteer,
-)
-from .morphology import (
     _GENUINE_IN_FINAL_STEMS,
     _GRAMMAT_ADPS,
     _LOAN_I_ACC_ADJS,
     _MATERIAL_NOUNS,
     _MORPH_TO_UPOS,
+    _TEMPORAL_ADVS,
+    _TEMPORAL_ROOTS,
+    _TRANSITIVE_ROOTS,
+    _case_of,
     _engine,
+    _is_possessed,
+    _typed_gazetteer,
     _unknown_fallback_candidates,
     py_analyze_tokens,
     to_lower,

@@ -264,9 +264,8 @@ def make_spu_context_tagger_udf(spark, n_labels: int = 5, units: int = 32,
     4-branch GRU forward, autoregressive decode.  Weights broadcast once;
     model + encoder rebuilt once per Python worker.
 
-    ``weights``: an ``SPUContextModel.arrays()`` payload (e.g. from
-    ``spu_context_train.distill_ner_model_bptt``) — trained arrays drop
-    in here; omitted, a seeded surrogate is broadcast.  Pass the SAME
+    ``weights``: an ``SPUContextModel.arrays()`` payload — trained arrays
+    drop in here; omitted, a seeded surrogate is broadcast.  Pass the SAME
     ``sentence_max_len`` the weights were trained with."""
     from pyspark.sql.types import ArrayType, IntegerType
 

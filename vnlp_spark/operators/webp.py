@@ -24,9 +24,10 @@ Lossy VP8 ('VP8 ' chunks, boolean-coder + DCT) and ALPH chunks raise
 ``NotImplementedError`` honestly; the container walk itself is real and
 tested against the CPython test-suite's python.webp.
 
-Reference parity note: the VNLP reference has no image path at all;
-this module serves the multimodal column contract in SURVEY
-§"LLM-data-pipeline operators" (decode_image in operators/multimodal.py).
+Reference parity note: the VNLP reference has no image path at all.
+No pipeline path calls this module: ``operators/multimodal.py`` derives
+its features from the payload bytes without decoding, so only
+``tests/test_webp.py`` reaches it.
 """
 from __future__ import annotations
 
