@@ -20,7 +20,8 @@ deasciification, trained word2vec, displaCy JSON) are registered without
 an oracle and get rows-only checks; their semantics are covered instead
 by the corpus-wide differential parity suite against the runnable
 reference layer (tests/test_reference_parity.py) and the independent
-UD-guideline gold (vnlp_spark/plans/gold_ud.py).
+UD-guideline gold (vnlp_spark/plans/gold_blind/*.conllu, scored by
+vnlp_spark/plans/gold_ud.py).
 """
 from __future__ import annotations
 
@@ -771,10 +772,12 @@ def _q_dynamic_stopwords(spark, sf_dir):
 
 def _q_triple_pr(spark, sf_dir):
     """Two P/R rows: the corpus-pool pinned-fixture gate AND the
-    independent UD-guideline gold (plans/gold_ud.py) — the honest number
-    the VERDICT asked for alongside the fixture one."""
+    independent UD-guideline gold (plans/gold_blind/tuning.conllu and
+    heldout.conllu) — the honest number the VERDICT asked for alongside
+    the fixture one."""
     from vnlp_spark.plans.evaluation import score_triples
     from vnlp_spark.plans.gold_ud import score_vs_ud_gold
+    from vnlp_spark.plans.gold_ud_blind_data import load_split
     from vnlp_spark.plans.pipeline import run_kg_pipeline
 
     kg = run_kg_pipeline(_corpus_docs(spark, sf_dir), persist=True)
@@ -782,9 +785,7 @@ def _q_triple_pr(spark, sf_dir):
     for df in (kg.annotated, kg.triples, kg.entities):
         df.unpersist()
     ud = score_vs_ud_gold(spark)
-    from vnlp_spark.plans.gold_ud_heldout import HELD_OUT
-
-    held = score_vs_ud_gold(spark, HELD_OUT)
+    held = score_vs_ud_gold(spark, load_split("heldout"))
     return spark.createDataFrame(
         [
             ("pinned_fixture", round(pr.precision, 4), round(pr.recall, 4),

@@ -6,9 +6,9 @@ py_parse_tokens arcs, diffed against gold_triples_for — plus UPOS and arc
 diffs so misses are attributable to morphology vs attachment.
 
 Usage:
-    python scripts/gold_error_analysis.py            # tuning split
-    python scripts/gold_error_analysis.py --heldout  # held-out (final eval only)
-    python scripts/gold_error_analysis.py --quiet    # scores only
+    python scripts/gold_error_analysis.py                  # tuning split
+    python scripts/gold_error_analysis.py --split heldout  # any split in plans/gold_blind/
+    python scripts/gold_error_analysis.py --quiet          # scores only
 """
 from __future__ import annotations
 
@@ -22,6 +22,7 @@ from vnlp_spark.operators.dep_parser import py_parse_tokens
 from vnlp_spark.operators.morphology import py_analyze_tokens
 from vnlp_spark.operators.pos import upos_from_analysis
 from vnlp_spark.plans.gold_ud import gold_triples_for
+from vnlp_spark.plans.gold_ud_blind_data import load_split
 
 _PRED_RELS = ("root", "parataxis")
 
@@ -112,113 +113,5 @@ def run(entries, verbose=True):
 
 
 if __name__ == "__main__":
-    # data-file splits (blind-51+, plans/gold_blind/*.conllu): --split NAME
-    if "--split" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind_data import load_split
-
-        entries = load_split(sys.argv[sys.argv.index("--split") + 1])
-    elif "--blind50" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind50 import BLIND50 as entries
-    elif "--blind49" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind49 import BLIND49 as entries
-    elif "--blind48" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind48 import BLIND48 as entries
-    elif "--blind47" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind47 import BLIND47 as entries
-    elif "--blind46" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind46 import BLIND46 as entries
-    elif "--blind45" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind45 import BLIND45 as entries
-    elif "--blind44" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind44 import BLIND44 as entries
-    elif "--blind43" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind43 import BLIND43 as entries
-    elif "--blind42" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind42 import BLIND42 as entries
-    elif "--blind41" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind41 import BLIND41 as entries
-    elif "--blind40" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind40 import BLIND40 as entries
-    elif "--blind39" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind39 import BLIND39 as entries
-    elif "--blind38" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind38 import BLIND38 as entries
-    elif "--blind37" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind37 import BLIND37 as entries
-    elif "--blind36" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind36 import BLIND36 as entries
-    elif "--blind35" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind35 import BLIND35 as entries
-    elif "--blind34" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind34 import BLIND34 as entries
-    elif "--blind33" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind33 import BLIND33 as entries
-    elif "--blind32" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind32 import BLIND32 as entries
-    elif "--blind31" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind31 import BLIND31 as entries
-    elif "--blind30" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind30 import BLIND30 as entries
-    elif "--blind29" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind29 import BLIND29 as entries
-    elif "--blind28" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind28 import BLIND28 as entries
-    elif "--blind27" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind27 import BLIND27 as entries
-    elif "--blind26" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind26 import BLIND26 as entries
-    elif "--blind25" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind25 import BLIND25 as entries
-    elif "--blind24" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind24 import BLIND24 as entries
-    elif "--blind23" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind23 import BLIND23 as entries
-    elif "--blind22" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind22 import BLIND22 as entries
-    elif "--blind21" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind21 import BLIND21 as entries
-    elif "--blind20" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind20 import BLIND20 as entries
-    elif "--blind19" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind19 import BLIND19 as entries
-    elif "--blind18" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind18 import BLIND18 as entries
-    elif "--blind17" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind17 import BLIND17 as entries
-    elif "--blind16" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind16 import BLIND16 as entries
-    elif "--blind15" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind15 import BLIND15 as entries
-    elif "--blind14" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind14 import BLIND14 as entries
-    elif "--blind13" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind13 import BLIND13 as entries
-    elif "--blind12" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind12 import BLIND12 as entries
-    elif "--blind11" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind11 import BLIND11 as entries
-    elif "--blind10" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind10 import BLIND10 as entries
-    elif "--blind9" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind9 import BLIND9 as entries
-    elif "--blind8" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind8 import BLIND8 as entries
-    elif "--blind7" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind7 import BLIND7 as entries
-    elif "--blind6" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind6 import BLIND6 as entries
-    elif "--blind5" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind5 import BLIND5 as entries
-    elif "--blind4" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind4 import BLIND4 as entries
-    elif "--heldout" in sys.argv:
-        from vnlp_spark.plans.gold_ud_heldout import HELD_OUT as entries
-    elif "--blind3" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind3 import BLIND3 as entries
-    elif "--blind2" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind2 import BLIND2 as entries
-    elif "--blind" in sys.argv:
-        from vnlp_spark.plans.gold_ud_blind import BLIND as entries
-    else:
-        from vnlp_spark.plans.gold_ud import UD_GOLD as entries
-    run(entries, verbose="--quiet" not in sys.argv)
+    split = sys.argv[sys.argv.index("--split") + 1] if "--split" in sys.argv else "tuning"
+    run(load_split(split), verbose="--quiet" not in sys.argv)

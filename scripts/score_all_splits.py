@@ -13,63 +13,6 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import importlib
-
-SPLITS = [
-    ("tuning", "vnlp_spark.plans.gold_ud", "UD_GOLD"),
-    ("heldout", "vnlp_spark.plans.gold_ud_heldout", "HELD_OUT"),
-    ("blind1", "vnlp_spark.plans.gold_ud_blind", "BLIND"),
-    ("blind2", "vnlp_spark.plans.gold_ud_blind2", "BLIND2"),
-    ("blind3", "vnlp_spark.plans.gold_ud_blind3", "BLIND3"),
-    ("blind4", "vnlp_spark.plans.gold_ud_blind4", "BLIND4"),
-    ("blind5", "vnlp_spark.plans.gold_ud_blind5", "BLIND5"),
-    ("blind6", "vnlp_spark.plans.gold_ud_blind6", "BLIND6"),
-    ("blind7", "vnlp_spark.plans.gold_ud_blind7", "BLIND7"),
-    ("blind8", "vnlp_spark.plans.gold_ud_blind8", "BLIND8"),
-    ("blind9", "vnlp_spark.plans.gold_ud_blind9", "BLIND9"),
-    ("blind10", "vnlp_spark.plans.gold_ud_blind10", "BLIND10"),
-    ("blind11", "vnlp_spark.plans.gold_ud_blind11", "BLIND11"),
-    ("blind12", "vnlp_spark.plans.gold_ud_blind12", "BLIND12"),
-    ("blind13", "vnlp_spark.plans.gold_ud_blind13", "BLIND13"),
-    ("blind14", "vnlp_spark.plans.gold_ud_blind14", "BLIND14"),
-    ("blind15", "vnlp_spark.plans.gold_ud_blind15", "BLIND15"),
-    ("blind16", "vnlp_spark.plans.gold_ud_blind16", "BLIND16"),
-    ("blind17", "vnlp_spark.plans.gold_ud_blind17", "BLIND17"),
-    ("blind18", "vnlp_spark.plans.gold_ud_blind18", "BLIND18"),
-    ("blind19", "vnlp_spark.plans.gold_ud_blind19", "BLIND19"),
-    ("blind20", "vnlp_spark.plans.gold_ud_blind20", "BLIND20"),
-    ("blind21", "vnlp_spark.plans.gold_ud_blind21", "BLIND21"),
-    ("blind22", "vnlp_spark.plans.gold_ud_blind22", "BLIND22"),
-    ("blind23", "vnlp_spark.plans.gold_ud_blind23", "BLIND23"),
-    ("blind24", "vnlp_spark.plans.gold_ud_blind24", "BLIND24"),
-    ("blind25", "vnlp_spark.plans.gold_ud_blind25", "BLIND25"),
-    ("blind26", "vnlp_spark.plans.gold_ud_blind26", "BLIND26"),
-    ("blind27", "vnlp_spark.plans.gold_ud_blind27", "BLIND27"),
-    ("blind28", "vnlp_spark.plans.gold_ud_blind28", "BLIND28"),
-    ("blind29", "vnlp_spark.plans.gold_ud_blind29", "BLIND29"),
-    ("blind30", "vnlp_spark.plans.gold_ud_blind30", "BLIND30"),
-    ("blind31", "vnlp_spark.plans.gold_ud_blind31", "BLIND31"),
-    ("blind32", "vnlp_spark.plans.gold_ud_blind32", "BLIND32"),
-    ("blind33", "vnlp_spark.plans.gold_ud_blind33", "BLIND33"),
-    ("blind34", "vnlp_spark.plans.gold_ud_blind34", "BLIND34"),
-    ("blind35", "vnlp_spark.plans.gold_ud_blind35", "BLIND35"),
-    ("blind36", "vnlp_spark.plans.gold_ud_blind36", "BLIND36"),
-    ("blind37", "vnlp_spark.plans.gold_ud_blind37", "BLIND37"),
-    ("blind38", "vnlp_spark.plans.gold_ud_blind38", "BLIND38"),
-    ("blind39", "vnlp_spark.plans.gold_ud_blind39", "BLIND39"),
-    ("blind40", "vnlp_spark.plans.gold_ud_blind40", "BLIND40"),
-    ("blind41", "vnlp_spark.plans.gold_ud_blind41", "BLIND41"),
-    ("blind42", "vnlp_spark.plans.gold_ud_blind42", "BLIND42"),
-    ("blind43", "vnlp_spark.plans.gold_ud_blind43", "BLIND43"),
-    ("blind44", "vnlp_spark.plans.gold_ud_blind44", "BLIND44"),
-    ("blind45", "vnlp_spark.plans.gold_ud_blind45", "BLIND45"),
-    ("blind46", "vnlp_spark.plans.gold_ud_blind46", "BLIND46"),
-    ("blind47", "vnlp_spark.plans.gold_ud_blind47", "BLIND47"),
-    ("blind48", "vnlp_spark.plans.gold_ud_blind48", "BLIND48"),
-    ("blind49", "vnlp_spark.plans.gold_ud_blind49", "BLIND49"),
-    ("blind50", "vnlp_spark.plans.gold_ud_blind50", "BLIND50"),
-]
-
 
 def main():
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -77,14 +20,10 @@ def main():
 
     from vnlp_spark.plans.gold_ud_blind_data import available_splits, load_split
 
-    all_splits = [
-        (name, getattr(importlib.import_module(mod), attr))
-        for name, mod, attr in SPLITS
-    ] + [(name, load_split(name)) for name in available_splits()]
-    for name, entries in all_splits:
+    for name in available_splits():
         buf = io.StringIO()
         with redirect_stdout(buf):
-            run(entries, verbose=False)
+            run(load_split(name), verbose=False)
         print(f"{name:8s} {buf.getvalue().strip().lstrip()}")
 
 

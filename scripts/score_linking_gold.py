@@ -4,7 +4,10 @@ Builds the KB entities with build_entities (seed surfaces weighted by the
 skewed counts), links every gold mention with link_mentions, and reports
 linking precision / recall with per-miss detail.
 
-Run: python scripts/score_linking_gold.py
+The gold is plans/gold_blind/{split}_kb.tsv and {split}_links.tsv;
+``--tuning`` adds the post-scoring pins of linking1_tuning.tsv.
+
+Run: python scripts/score_linking_gold.py [--split linking2] [--tuning]
 """
 from __future__ import annotations
 
@@ -22,7 +25,7 @@ from vnlp_spark.operators.entity_resolution import (
     initials_aliases,
     link_mentions,
 )
-from vnlp_spark.plans.gold_linking import GOLD_LINKS, KB, TUNING_LINKS
+from vnlp_spark.plans.gold_ud_blind_data import load_kb, load_links
 
 
 def main() -> None:
@@ -35,17 +38,14 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    kb, gold_rows = KB, GOLD_LINKS
-    if "--split2" in sys.argv:
-        from vnlp_spark.plans.gold_linking2 import GOLD_LINKS2, KB2
-
-        kb, gold_rows = KB2, GOLD_LINKS2
+    split = sys.argv[sys.argv.index("--split") + 1] if "--split" in sys.argv else "linking1"
+    kb, gold_rows = load_kb(f"{split}_kb"), load_links(f"{split}_links")
     seed_rows = [(surface, typ) for surface, typ, n in kb for _ in range(n)]
     seeds = spark.createDataFrame(seed_rows, "mention string, label string") \
         .withColumn("canon_key", canonical_key("mention"))
     entities = build_entities(seeds).cache()
 
-    rows = gold_rows + (TUNING_LINKS if "--tuning" in sys.argv else [])
+    rows = gold_rows + (load_links("linking1_tuning") if "--tuning" in sys.argv else [])
     mentions = spark.createDataFrame(
         [(i, m, l, g) for i, (m, l, g) in enumerate(rows)],
         "mid int, mention string, label string, gold string",

@@ -1,15 +1,14 @@
-"""Score the frozen sentiment gold set (plans/gold_sentiment.py).
+"""Score a frozen sentiment gold split (plans/gold_blind/sentiment*.tsv).
 
 Blind protocol: the gold file is committed BEFORE this script is first
 run; the first run's number is recorded as-is in BENCH.md.
 
-Reports overall accuracy plus the per-category breakdown (the gold file
-is ordered: pos-plain 30, pos-negation 15, pos-mixed 10, pos-terse 5,
-then the same for negative), and the reference's published 0.947 for
-comparison (/root/reference/vnlp/sentiment_analyzer/
-spu_context_bigru_sentiment.py:78).
+Reports overall accuracy plus the per-category breakdown (each gold row
+carries its category: plain, negation, mixed, terse per polarity), and
+the reference's published 0.947 for comparison (the reference's
+vnlp/sentiment_analyzer/spu_context_bigru_sentiment.py:78).
 
-Usage: python scripts/score_sentiment_gold.py [--split2]
+Usage: python scripts/score_sentiment_gold.py [--split sentiment2]
 """
 from __future__ import annotations
 
@@ -19,41 +18,23 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from vnlp_spark.operators.sentiment import py_sentiment, py_sentiment_proba  # noqa: E402
-from vnlp_spark.plans.gold_sentiment import GOLD_SENTIMENT  # noqa: E402
-
-CATS = [
-    ("pos-plain", 0, 30), ("pos-negation", 30, 45), ("pos-mixed", 45, 55),
-    ("pos-terse", 55, 60), ("neg-plain", 60, 90), ("neg-negation", 90, 105),
-    ("neg-mixed", 105, 115), ("neg-terse", 115, 120),
-]
-CATS2 = [
-    ("pos-plain", 0, 15), ("pos-negation", 15, 23), ("pos-mixed", 23, 28),
-    ("pos-terse", 28, 30), ("neg-plain", 30, 45), ("neg-negation", 45, 53),
-    ("neg-mixed", 53, 58), ("neg-terse", 58, 60),
-]
+from vnlp_spark.plans.gold_ud_blind_data import load_sentiment  # noqa: E402
 
 
 def main() -> None:
-    global GOLD_SENTIMENT, CATS
-    if "--split2" in sys.argv:
-        from vnlp_spark.plans.gold_sentiment2 import GOLD_SENTIMENT2
-        GOLD_SENTIMENT, CATS = GOLD_SENTIMENT2, CATS2
-    elif "--split3" in sys.argv:
-        from vnlp_spark.plans.gold_sentiment3 import CATS3, GOLD_SENTIMENT3
-        GOLD_SENTIMENT, CATS = GOLD_SENTIMENT3, CATS3
-    elif "--split4" in sys.argv:
-        from vnlp_spark.plans.gold_sentiment4 import CATS4, GOLD_SENTIMENT4
-        GOLD_SENTIMENT, CATS = GOLD_SENTIMENT4, CATS4
-    preds = [py_sentiment(t) for t, _ in GOLD_SENTIMENT]
-    golds = [lbl for _, lbl in GOLD_SENTIMENT]
+    split = sys.argv[sys.argv.index("--split") + 1] if "--split" in sys.argv else "sentiment1"
+    gold_rows, cats = load_sentiment(split)
+    preds = [py_sentiment(t) for t, _ in gold_rows]
+    golds = [lbl for _, lbl in gold_rows]
     n_ok = sum(p == g for p, g in zip(preds, golds))
     print(f"overall accuracy: {n_ok}/{len(golds)} = {n_ok / len(golds):.3f}"
           f"   (reference published: 0.947)")
-    for name, lo, hi in CATS:
-        ok = sum(p == g for p, g in zip(preds[lo:hi], golds[lo:hi]))
-        print(f"  {name:14s} {ok:3d}/{hi - lo:<3d} = {ok / (hi - lo):.3f}")
+    for name in dict.fromkeys(cats):
+        idx = [i for i, c in enumerate(cats) if c == name]
+        ok = sum(preds[i] == golds[i] for i in idx)
+        print(f"  {name:14s} {ok:3d}/{len(idx):<3d} = {ok / len(idx):.3f}")
     print("\nmisclassified:")
-    for (text, gold), pred in zip(GOLD_SENTIMENT, preds):
+    for (text, gold), pred in zip(gold_rows, preds):
         if pred != gold:
             proba = py_sentiment_proba(text)
             print(f"  gold={gold} pred={pred} p={proba:.3f}  {text}")

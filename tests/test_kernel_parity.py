@@ -14,7 +14,7 @@ import random
 import time
 
 from vnlp_spark.plans.corpus import SENTENCE_POOL
-from vnlp_spark.plans.gold_ud_blind_data import available_splits, load_split
+from vnlp_spark.plans.gold_ud_blind_data import load_split
 from vnlp_spark.plans.pipeline import _annotate_sentence_cached
 
 KERNEL_SHA256 = "26c9c8ecb8b73d1e384f6b52f6e08ccfb125a2a11fb297ee68bde37f060b471c"
@@ -38,7 +38,8 @@ _TURKISH = "çğıöşüÇĞİÖŞÜ"
 
 
 def _gold_texts() -> list:
-    return [e["text"] for name in available_splits() for e in load_split(name)]
+    # the 200 texts of blind-51..60, the splits KERNEL_SHA256 was pinned on
+    return [e["text"] for i in range(51, 61) for e in load_split(f"blind{i}")]
 
 
 def _fuzz_corpus(n: int = N_FUZZ) -> list:

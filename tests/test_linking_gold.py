@@ -15,7 +15,11 @@ from vnlp_spark.operators.entity_resolution import (
     initials_aliases,
     link_mentions,
 )
-from vnlp_spark.plans.gold_linking import GOLD_LINKS, KB, TUNING_LINKS
+from vnlp_spark.plans.gold_ud_blind_data import load_kb, load_links
+
+KB = load_kb("linking1_kb")
+GOLD_LINKS = load_links("linking1_links")
+TUNING_LINKS = load_links("linking1_tuning")
 
 
 def test_linking_gold_and_tuning_exact(spark):

@@ -85,8 +85,8 @@ PINS = {
     "lsh_bucket": (11549, 0, -8416436542028707701),
     "ivf_cell": (11549, 0, -2315143514253523169),
     "ivf_topk": (50, -4181594763075034828),
-    "extract_features": (60, 2778015138925621950),
-    "sample_frames": (131, 7094059877323773771),
+    "extract_features": (60, -2044186017589900626),
+    "sample_frames": (131, -1163293526080002072),
     "turkish_lower": (11549, 1, 7071005782646830134),
     "remove_punctuations": (11549, 1, 5581941060907874130),
     "remove_accent_marks": (11549, 1, -812477703109993181),

@@ -58,22 +58,33 @@ def test_triple_pr_meets_target(spark):
         df.unpersist()
 
 
-# --- independent UD-guideline gold (plans/gold_ud.py) --------------------
+# --- independent UD-guideline gold (plans/gold_blind/*.conllu) -----------
 
 def test_ud_gold_wellformed():
     from vnlp_spark.functions.tokenizer import py_treebank_tokenize
     from vnlp_spark.plans.gold_ud import UD_GOLD
+    from vnlp_spark.plans.gold_ud_blind_data import available_splits, load_split
 
     assert len(UD_GOLD) >= 40
-    for e in UD_GOLD:
-        n = len(e["tokens"])
-        assert len(e["upos"]) == n and len(e["heads"]) == n
-        assert len(e["deprels"]) == n and len(e["ner"]) == n
-        assert e["deprels"].count("root") == 1
-        for h in e["heads"]:
-            assert 0 <= h <= n
-        # gold tokens must be exactly what the pipeline's tokenizer emits
-        assert py_treebank_tokenize(e["text"]) == e["tokens"], e["text"]
+    assert all("ner" in e for e in UD_GOLD)
+    for name in available_splits():
+        for e in load_split(name):
+            n = len(e["tokens"])
+            assert len(e["upos"]) == n and len(e["heads"]) == n
+            assert len(e["deprels"]) == n and len(e.get("ner", e["tokens"])) == n
+            assert e["deprels"].count("root") == 1
+            assert e["heads"].count(0) == 1
+            for h in e["heads"]:
+                assert 0 <= h <= n
+            # no cycle: every token's head chain reaches the root
+            for i in range(1, n + 1):
+                seen = set()
+                while i and i not in seen:
+                    seen.add(i)
+                    i = e["heads"][i - 1]
+                assert i == 0, (name, e["text"])
+            # gold tokens must be exactly what the pipeline's tokenizer emits
+            assert py_treebank_tokenize(e["text"]) == e["tokens"], (name, e["text"])
 
 
 def test_ud_gold_triple_mining():

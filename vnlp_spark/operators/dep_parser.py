@@ -10,7 +10,7 @@ The reference's GRU weights are S3-hosted and unavailable offline, so this
 is a deterministic attachment parser with the same output contract (swap
 point: any ``(tokens, upos, analyses) -> arcs`` callable).  Round-3
 redesign, tuned on the gold_ud tuning split (held-out split frozen first —
-plans/gold_ud_heldout.py):
+plans/gold_blind/heldout.conllu):
 
 - clause segmentation: every argument attaches to the next finite
   predicate at or after it (Turkish is head-final); predicates are finite

@@ -16,6 +16,7 @@ Schema conventions:
 from __future__ import annotations
 
 import hashlib
+import math
 from typing import Iterator
 
 import numpy as np
@@ -72,7 +73,9 @@ def _pseudo_decode(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big") % (2**32)
     rng = np.random.default_rng(seed)
     v = rng.standard_normal(dim).astype(np.float32)
-    return v / (np.linalg.norm(v) + 1e-9)
+    # each float32 square is exact in float64 and fsum rounds once, so the
+    # norm does not depend on the summation order a BLAS kernel picks
+    return v / (math.sqrt(math.fsum(float(x) * float(x) for x in v)) + 1e-9)
 
 
 def extract_features(media: DataFrame) -> DataFrame:

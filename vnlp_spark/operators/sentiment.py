@@ -39,7 +39,7 @@ scorer:
     small/big") is a fit complaint.
 
   Measured against the frozen 120-sentence blind gold set
-  (plans/gold_sentiment.py, scripts/score_sentiment_gold.py); the
+  (plans/gold_blind/sentiment1.tsv, scripts/score_sentiment_gold.py); the
   first-run and post-fix numbers are recorded in BENCH.md.
 
 The reference's BiGRU weights are S3-hosted; the broadcast-weights

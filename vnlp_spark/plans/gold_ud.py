@@ -1,36 +1,22 @@
-"""Independently-annotated Turkish gold set (UD guidelines).
+"""Independently-annotated Turkish UD gold: triple mining and scoring.
 
-VERDICT r01 flagged the triple P/R gate as self-referential: its gold was
-derived with the same attachment rules the parser implements.  This module
-is the independent replacement: ~40 sentences hand-annotated **following
-the published Universal Dependencies guidelines for Turkish**
-(https://universaldependencies.org/tr/ — the same conventions as the
-UD 2.9 treebanks the reference trained on; see
-/root/reference/vnlp/dependency_parser/ReadMe.md), NOT by running any
-parser in this repo.  Annotations use base UD relations (subtypes like
-nmod:poss collapsed to nmod, matching the reference's label tokenizer)
-plus PER/LOC/ORG token-level NER tags in the reference's scheme
-(B/I-free, punctuation strictly 'O' — named_entity_recognizer/ReadMe.md).
+The gold splits themselves are data files (``plans/gold_blind/*.conllu``,
+read by ``gold_ud_blind_data.load_split``); ``UD_GOLD`` is the tuning
+split.  Two consumers:
 
-Two consumers:
-
-- ``score_vs_ud_gold``: runs the REAL pipeline over these sentences and
+- ``score_vs_ud_gold``: runs the REAL pipeline over gold sentences and
   scores emitted (subj, pred, obj) triples against triples mined from the
   GOLD arcs (same root/parataxis + first-child mining semantics, applied
   to independent annotations) — the honest P/R next to the pinned-fixture
   number.
 - ``annotator_scores``: token-level UPOS accuracy, UAS/LAS, and NER
-  accuracy/F1 of the deterministic surrogate annotators against this
+  accuracy/F1 of the deterministic surrogate annotators against the
   gold, published in BENCH.md next to the reference's own published
   metrics.
 
-Sentences 28/29 reproduce the reference's NER/DP test sentences with the
-reference repo's OWN published annotations (tests/test_general.py) — for
-those two the gold is literally reference output.
-
-ANNOTATION CONVENTIONS (authoritative for every gold_ud_blind*.py
-split — annotate new splits against THIS list; the blind-12
-``sonucunda`` incident was a drift from it):
+ANNOTATION CONVENTIONS (authoritative for every UD split in
+``plans/gold_blind/`` — annotate new splits against THIS list; the
+blind-12 ``sonucunda`` incident was a drift from it):
 
 - first-clause root; subtypes collapsed to base relations
 - title-headed flat names (Doktor Çelik: title NOUN nsubj, name PROPN
@@ -58,3996 +44,9 @@ from __future__ import annotations
 
 from typing import List
 
-# Each entry: text, tokens (treebank tokenization), upos, heads (1-based,
-# 0 = root), deprels, ner (PER/LOC/ORG/O per token; omitted = all O).
-UD_GOLD: List[dict] = [
-    dict(
-        text="Ahmet dün İstanbul'da yeni bir mağaza açtı.",
-        tokens=["Ahmet", "dün", "İstanbul'da", "yeni", "bir", "mağaza", "açtı", "."],
-        upos=["PROPN", "ADV", "PROPN", "ADJ", "DET", "NOUN", "VERB", "PUNCT"],
-        heads=[7, 7, 7, 6, 6, 7, 0, 7],
-        deprels=["nsubj", "advmod", "obl", "amod", "det", "obj", "root", "punct"],
-        ner=["PER", "O", "LOC", "O", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Mehmet geçen yıl Ankara'da üniversiteyi bitirdi.",
-        tokens=["Mehmet", "geçen", "yıl", "Ankara'da", "üniversiteyi", "bitirdi", "."],
-        upos=["PROPN", "ADJ", "NOUN", "PROPN", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 3, 6, 6, 6, 0, 6],
-        deprels=["nsubj", "amod", "obl", "obl", "obj", "root", "punct"],
-        ner=["PER", "O", "O", "LOC", "O", "O", "O"],
-    ),
-    dict(
-        text="Ayşe sabah Türkiye'nin en büyük köprüsünü gördü.",
-        tokens=["Ayşe", "sabah", "Türkiye'nin", "en", "büyük", "köprüsünü", "gördü", "."],
-        upos=["PROPN", "NOUN", "PROPN", "ADV", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[7, 7, 6, 5, 6, 7, 0, 7],
-        deprels=["nsubj", "obl", "nmod", "advmod", "amod", "obj", "root", "punct"],
-        ner=["PER", "O", "LOC", "O", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Mustafa Galatasaray maçını arkadaşlarıyla izledi.",
-        tokens=["Mustafa", "Galatasaray", "maçını", "arkadaşlarıyla", "izledi", "."],
-        upos=["PROPN", "PROPN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "nmod", "obj", "obl", "root", "punct"],
-        ner=["PER", "ORG", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Zeynep Fenerbahçe kulübüne üye oldu.",
-        tokens=["Zeynep", "Fenerbahçe", "kulübüne", "üye", "oldu", "."],
-        upos=["PROPN", "PROPN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "nmod", "obl", "compound", "root", "punct"],
-        ner=["PER", "ORG", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Ali TÜBİTAK projesini başarıyla tamamladı.",
-        tokens=["Ali", "TÜBİTAK", "projesini", "başarıyla", "tamamladı", "."],
-        upos=["PROPN", "PROPN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "nmod", "obj", "advmod", "root", "punct"],
-        ner=["PER", "ORG", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Hasan İzmir'de denize girdi.",
-        tokens=["Hasan", "İzmir'de", "denize", "girdi", "."],
-        upos=["PROPN", "PROPN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "obl", "root", "punct"],
-        ner=["PER", "LOC", "O", "O", "O"],
-    ),
-    dict(
-        text="Elif Boğaziçi Üniversitesi'nde ders veriyor.",
-        tokens=["Elif", "Boğaziçi", "Üniversitesi'nde", "ders", "veriyor", "."],
-        upos=["PROPN", "PROPN", "PROPN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "nmod", "obl", "obj", "root", "punct"],
-        ner=["PER", "ORG", "ORG", "O", "O", "O"],
-    ),
-    dict(
-        text="Murat Türkiye İş Bankası'nda çalışıyor.",
-        tokens=["Murat", "Türkiye", "İş", "Bankası'nda", "çalışıyor", "."],
-        upos=["PROPN", "PROPN", "PROPN", "PROPN", "VERB", "PUNCT"],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=["nsubj", "nmod", "nmod", "obl", "root", "punct"],
-        ner=["PER", "ORG", "ORG", "ORG", "O", "O"],
-    ),
-    dict(
-        text="Emre İstanbul Belediyesi'nin yeni parkını gezdi.",
-        tokens=["Emre", "İstanbul", "Belediyesi'nin", "yeni", "parkını", "gezdi", "."],
-        upos=["PROPN", "PROPN", "PROPN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 3, 5, 5, 6, 0, 6],
-        deprels=["nsubj", "nmod", "nmod", "amod", "obj", "root", "punct"],
-        ner=["PER", "ORG", "ORG", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Selin Ankara'daki müzeyi çok beğendi.",
-        tokens=["Selin", "Ankara'daki", "müzeyi", "çok", "beğendi", "."],
-        upos=["PROPN", "ADJ", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "amod", "obj", "advmod", "root", "punct"],
-        ner=["PER", "LOC", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Kaan Trabzon'dan taze balık getirdi.",
-        tokens=["Kaan", "Trabzon'dan", "taze", "balık", "getirdi", "."],
-        upos=["PROPN", "PROPN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "obl", "amod", "obj", "root", "punct"],
-        ner=["PER", "LOC", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Merve Avrupa turuna İstanbul'dan başladı.",
-        tokens=["Merve", "Avrupa", "turuna", "İstanbul'dan", "başladı", "."],
-        upos=["PROPN", "PROPN", "NOUN", "PROPN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "nmod", "obl", "obl", "root", "punct"],
-        ner=["PER", "LOC", "O", "LOC", "O", "O"],
-    ),
-    dict(
-        text="Osman Türkiye'nin güneyinde tatil yaptı.",
-        tokens=["Osman", "Türkiye'nin", "güneyinde", "tatil", "yaptı", "."],
-        upos=["PROPN", "PROPN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "nmod", "obl", "obj", "root", "punct"],
-        ner=["PER", "LOC", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Deniz TRT belgeselini büyük bir keyifle izledi.",
-        tokens=["Deniz", "TRT", "belgeselini", "büyük", "bir", "keyifle", "izledi", "."],
-        upos=["PROPN", "PROPN", "NOUN", "ADJ", "DET", "NOUN", "VERB", "PUNCT"],
-        heads=[7, 3, 7, 6, 6, 7, 0, 7],
-        deprels=["nsubj", "nmod", "obj", "amod", "det", "obl", "root", "punct"],
-        ner=["PER", "ORG", "O", "O", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Ceren İstanbul Boğazı'nda tekne turuna katıldı.",
-        tokens=["Ceren", "İstanbul", "Boğazı'nda", "tekne", "turuna", "katıldı", "."],
-        upos=["PROPN", "PROPN", "PROPN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 3, 6, 5, 6, 0, 6],
-        deprels=["nsubj", "nmod", "obl", "nmod", "obl", "root", "punct"],
-        ner=["PER", "LOC", "LOC", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Burak Almanya'dan Türkiye'ye kesin dönüş yaptı.",
-        tokens=["Burak", "Almanya'dan", "Türkiye'ye", "kesin", "dönüş", "yaptı", "."],
-        upos=["PROPN", "PROPN", "PROPN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 6, 6, 5, 6, 0, 6],
-        deprels=["nsubj", "obl", "obl", "amod", "obj", "root", "punct"],
-        ner=["PER", "LOC", "LOC", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Pınar Kadıköy'de küçük bir kafe işletiyor.",
-        tokens=["Pınar", "Kadıköy'de", "küçük", "bir", "kafe", "işletiyor", "."],
-        upos=["PROPN", "PROPN", "ADJ", "DET", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 6, 5, 5, 6, 0, 6],
-        deprels=["nsubj", "obl", "amod", "det", "obj", "root", "punct"],
-        ner=["PER", "LOC", "O", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Arda Beşiktaş'tan Üsküdar'a vapurla geçti.",
-        tokens=["Arda", "Beşiktaş'tan", "Üsküdar'a", "vapurla", "geçti", "."],
-        upos=["PROPN", "PROPN", "PROPN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 5, 5, 0, 5],
-        deprels=["nsubj", "obl", "obl", "obl", "root", "punct"],
-        ner=["PER", "LOC", "LOC", "O", "O", "O"],
-    ),
-    dict(
-        text="Yusuf akşam yemeğini ailesiyle yedi.",
-        tokens=["Yusuf", "akşam", "yemeğini", "ailesiyle", "yedi", "."],
-        upos=["PROPN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "nmod", "obj", "obl", "root", "punct"],
-        ner=["PER", "O", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Kitapları okumak insanı zenginleştirir.",
-        tokens=["Kitapları", "okumak", "insanı", "zenginleştirir", "."],
-        upos=["NOUN", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["obj", "csubj", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Hava bugün çok güzel ve güneşli.",
-        tokens=["Hava", "bugün", "çok", "güzel", "ve", "güneşli", "."],
-        upos=["NOUN", "ADV", "ADV", "ADJ", "CCONJ", "ADJ", "PUNCT"],
-        heads=[4, 4, 4, 0, 6, 4, 4],
-        deprels=["nsubj", "advmod", "advmod", "root", "cc", "conj", "punct"],
-    ),
-    dict(
-        text="Yeni teknoloji ürünleri hızla yayılıyor.",
-        tokens=["Yeni", "teknoloji", "ürünleri", "hızla", "yayılıyor", "."],
-        upos=["ADJ", "NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[3, 3, 5, 5, 0, 5],
-        deprels=["amod", "nmod", "nsubj", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Ekonomi haberleri gündemi belirliyor.",
-        tokens=["Ekonomi", "haberleri", "gündemi", "belirliyor", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nmod", "nsubj", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Üniversite sınavlarına canla başla çalışıyorlardı.",
-        tokens=["Üniversite", "sınavlarına", "canla", "başla", "çalışıyorlardı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 5, 3, 0, 5],
-        deprels=["nmod", "obl", "obl", "fixed", "root", "punct"],
-    ),
-    dict(
-        text="Şimdi baştan başla.",
-        tokens=["Şimdi", "baştan", "başla", "."],
-        upos=["ADV", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["advmod", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Oğuz'un kırmızı bir Astra'sı vardı.",
-        tokens=["Oğuz'un", "kırmızı", "bir", "Astra'sı", "vardı", "."],
-        upos=["PROPN", "ADJ", "DET", "PROPN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 5, 0, 5],
-        deprels=["nmod", "amod", "det", "nsubj", "root", "punct"],
-        ner=["PER", "O", "O", "O", "O", "O"],
-    ),
-    dict(
-        # reference NER test sentence with the reference's published labels
-        # (tests/test_general.py NerTest) and UD-guideline arcs
-        text=(
-            "Benim adım Melikşah, 29 yaşındayım, İstanbul'da ikamet ediyorum "
-            "ve VNGRS AI Takımı'nda çalışıyorum."
-        ),
-        tokens=[
-            "Benim", "adım", "Melikşah", ",", "29", "yaşındayım", ",",
-            "İstanbul'da", "ikamet", "ediyorum", "ve", "VNGRS", "AI",
-            "Takımı'nda", "çalışıyorum", ".",
-        ],
-        upos=[
-            "PRON", "NOUN", "PROPN", "PUNCT", "NUM", "NOUN", "PUNCT",
-            "PROPN", "NOUN", "VERB", "CCONJ", "PROPN", "PROPN", "PROPN",
-            "VERB", "PUNCT",
-        ],
-        heads=[2, 3, 0, 6, 6, 3, 10, 10, 10, 3, 15, 14, 14, 15, 10, 3],
-        deprels=[
-            "nmod", "nsubj", "root", "punct", "nummod", "parataxis", "punct",
-            "obl", "compound", "parataxis", "cc", "nmod", "nmod", "obl",
-            "conj", "punct",
-        ],
-        ner=[
-            "O", "O", "PER", "O", "O", "O", "O", "LOC", "O", "O", "O",
-            "ORG", "ORG", "ORG", "O", "O",
-        ],
-    ),
-    dict(
-        # reference DP test sentence (tests/test_general.py
-        # DependencyParserTest).  The reference's published output roots
-        # the LAST verb (sınarız) with leftward parataxis; this gold
-        # follows the UD 2.9 comma-clause convention instead (first
-        # clause is root, comma attaches to the clause it introduces) for
-        # consistency with the frozen held-out split — a DOCUMENTED
-        # deviation; the extracted triples are identical either way.
-        text=(
-            "Onun için yol arkadaşlarımızı titizlikle seçer, kendilerini "
-            "iyice sınarız."
-        ),
-        tokens=[
-            "Onun", "için", "yol", "arkadaşlarımızı", "titizlikle", "seçer",
-            ",", "kendilerini", "iyice", "sınarız", ".",
-        ],
-        upos=[
-            "PRON", "ADP", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT", "PRON",
-            "ADV", "VERB", "PUNCT",
-        ],
-        heads=[6, 1, 4, 6, 6, 0, 10, 10, 10, 6, 6],
-        deprels=[
-            "obl", "case", "nmod", "obj", "obl", "root", "punct",
-            "obj", "advmod", "parataxis", "punct",
-        ],
-    ),
-    dict(
-        text="Çocuklar bahçede top oynuyor.",
-        tokens=["Çocuklar", "bahçede", "top", "oynuyor", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Öğretmen öğrencilere yeni kitaplar dağıttı.",
-        tokens=["Öğretmen", "öğrencilere", "yeni", "kitaplar", "dağıttı", "."],
-        upos=["NOUN", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "obl", "amod", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Annem sabah erken kalktı.",
-        tokens=["Annem", "sabah", "erken", "kalktı", "."],
-        upos=["NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Kediler sıcak süt içer.",
-        tokens=["Kediler", "sıcak", "süt", "içer", "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "amod", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Babam gazete okuyor.",
-        tokens=["Babam", "gazete", "okuyor", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Komşumuz dün bize geldi.",
-        tokens=["Komşumuz", "dün", "bize", "geldi", "."],
-        upos=["NOUN", "ADV", "PRON", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "advmod", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Şirket yeni bir fabrika kurdu.",
-        tokens=["Şirket", "yeni", "bir", "fabrika", "kurdu", "."],
-        upos=["NOUN", "ADJ", "DET", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=["nsubj", "amod", "det", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Takım maçı kazandı.",
-        tokens=["Takım", "maçı", "kazandı", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Yağmur bütün gün yağdı.",
-        tokens=["Yağmur", "bütün", "gün", "yağdı", "."],
-        upos=["NOUN", "DET", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "det", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Müdür toplantıyı yarın yapacak.",
-        tokens=["Müdür", "toplantıyı", "yarın", "yapacak", "."],
-        upos=["NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Turistler müzeyi gezdi.",
-        tokens=["Turistler", "müzeyi", "gezdi", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Aslı İzmir'e uçakla gitti.",
-        tokens=["Aslı", "İzmir'e", "uçakla", "gitti", "."],
-        upos=["PROPN", "PROPN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "obl", "root", "punct"],
-        ner=["PER", "LOC", "O", "O", "O"],
-    ),
-    dict(
-        text="Galatasaray Fenerbahçe'yi dün yendi.",
-        tokens=["Galatasaray", "Fenerbahçe'yi", "dün", "yendi", "."],
-        upos=["PROPN", "PROPN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "advmod", "root", "punct"],
-        ner=["ORG", "ORG", "O", "O", "O"],
-    ),
-    dict(
-        text="Türk Hava Yolları yeni uçaklar aldı.",
-        tokens=["Türk", "Hava", "Yolları", "yeni", "uçaklar", "aldı", "."],
-        upos=["PROPN", "PROPN", "PROPN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 6, 5, 6, 0, 6],
-        deprels=["nmod", "nmod", "nsubj", "amod", "obj", "root", "punct"],
-        ner=["ORG", "ORG", "ORG", "O", "O", "O", "O"],
-    ),
-    # ---- round-3 tuning expansion (45 sentences; held-out split was
-    # frozen FIRST in plans/gold_ud_heldout.py) --------------------------
-    dict(
-        text="Köprü geçen hafta trafiğe kapatıldı.",
-        tokens=["Köprü", "geçen", "hafta", "trafiğe", "kapatıldı", "."],
-        upos=["NOUN", "ADJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "amod", "obl", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Yeni hastane gelecek yıl açılacak.",
-        tokens=["Yeni", "hastane", "gelecek", "yıl", "açılacak", "."],
-        upos=["ADJ", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=["amod", "nsubj", "amod", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Mektubu dün akşam postaya verdim.",
-        tokens=["Mektubu", "dün", "akşam", "postaya", "verdim", "."],
-        upos=["NOUN", "ADV", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["obj", "advmod", "obl", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Sorularınızı toplantıda yanıtlayacağız.",
-        tokens=["Sorularınızı", "toplantıda", "yanıtlayacağız", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["obj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Öğrenciler kütüphanede sessizce ders çalışıyor.",
-        tokens=["Öğrenciler", "kütüphanede", "sessizce", "ders", "çalışıyor", "."],
-        upos=["NOUN", "NOUN", "ADV", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 5, 5, 0, 5],
-        deprels=["nsubj", "obl", "advmod", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Sporcular sabah koşusuna erken başladı.",
-        tokens=["Sporcular", "sabah", "koşusuna", "erken", "başladı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "nmod", "obl", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Kurul üyeleri yeni başkanı seçti.",
-        tokens=["Kurul", "üyeleri", "yeni", "başkanı", "seçti", "."],
-        upos=["NOUN", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=["nmod", "nsubj", "amod", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Mahalleli gürültüden rahatsız oldu.",
-        tokens=["Mahalleli", "gürültüden", "rahatsız", "oldu", "."],
-        upos=["NOUN", "NOUN", "ADJ", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "compound", "root", "punct"],
-    ),
-    dict(
-        text="Banka müşterilerine yeni hizmet sundu.",
-        tokens=["Banka", "müşterilerine", "yeni", "hizmet", "sundu", "."],
-        upos=["NOUN", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "obl", "amod", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Kek tarifini annemden öğrendim.",
-        tokens=["Kek", "tarifini", "annemden", "öğrendim", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nmod", "obj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Yolcular uçağa binmeyi bekliyor.",
-        tokens=["Yolcular", "uçağa", "binmeyi", "bekliyor", "."],
-        upos=["NOUN", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "obl", "ccomp", "root", "punct"],
-    ),
-    dict(
-        text="Kapanan fabrika yüzlerce işçiyi etkiledi.",
-        tokens=["Kapanan", "fabrika", "yüzlerce", "işçiyi", "etkiledi", "."],
-        upos=["VERB", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=["acl", "nsubj", "amod", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Konuşmayı yarın tekrar dinleyeceğim.",
-        tokens=["Konuşmayı", "yarın", "tekrar", "dinleyeceğim", "."],
-        upos=["NOUN", "ADV", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["obj", "advmod", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Kardeşlerim bahçede kum havuzunda oynadı.",
-        tokens=["Kardeşlerim", "bahçede", "kum", "havuzunda", "oynadı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "obl", "nmod", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Sergi gelecek ay sona erecek.",
-        tokens=["Sergi", "gelecek", "ay", "sona", "erecek", "."],
-        upos=["NOUN", "ADJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "amod", "obl", "obl", "root", "punct"],
-    ),
-    dict(
-        # convention aligned with UD-BOUN (and blind-10): "zamanında"
-        # is zaman+P3sg+Loc, a NOUN oblique, not a lexicalized adverb
-        text="Projeyi zamanında teslim ettik.",
-        tokens=["Projeyi", "zamanında", "teslim", "ettik", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["obj", "obl", "compound", "root", "punct"],
-    ),
-    dict(
-        text="Öneriler kurulda uzun uzun tartışıldı.",
-        tokens=["Öneriler", "kurulda", "uzun", "uzun", "tartışıldı", "."],
-        upos=["NOUN", "NOUN", "ADV", "ADV", "VERB", "PUNCT"],
-        heads=[5, 5, 5, 3, 0, 5],
-        deprels=["nsubj", "obl", "advmod", "compound", "root", "punct"],
-    ),
-    dict(
-        text="Kuraklık bu yaz çiftçileri zorladı.",
-        tokens=["Kuraklık", "bu", "yaz", "çiftçileri", "zorladı", "."],
-        upos=["NOUN", "DET", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "det", "obl", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Sokak kedileri mahallede herkesi tanır.",
-        tokens=["Sokak", "kedileri", "mahallede", "herkesi", "tanır", "."],
-        upos=["NOUN", "NOUN", "NOUN", "PRON", "VERB", "PUNCT"],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=["nmod", "nsubj", "obl", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Yemekler masaya sırayla getirildi.",
-        tokens=["Yemekler", "masaya", "sırayla", "getirildi", "."],
-        upos=["NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Hastalar sonuçları sabırsızlıkla bekliyor.",
-        tokens=["Hastalar", "sonuçları", "sabırsızlıkla", "bekliyor", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Ressam tablosunu müzeye bağışladı.",
-        tokens=["Ressam", "tablosunu", "müzeye", "bağışladı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Çocuklar parkta uçurtma uçurdu ve dondurma yedi.",
-        tokens=["Çocuklar", "parkta", "uçurtma", "uçurdu", "ve", "dondurma",
-                "yedi", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "CCONJ", "NOUN", "VERB",
-              "PUNCT"],
-        heads=[4, 4, 4, 0, 7, 7, 4, 4],
-        deprels=["nsubj", "obl", "obj", "root", "cc", "obj", "conj",
-                 "punct"],
-    ),
-    dict(
-        text="Fiyatlar arttı ama talep düşmedi.",
-        tokens=["Fiyatlar", "arttı", "ama", "talep", "düşmedi", "."],
-        upos=["NOUN", "VERB", "CCONJ", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 0, 5, 5, 2, 2],
-        deprels=["nsubj", "root", "cc", "nsubj", "conj", "punct"],
-    ),
-    dict(
-        text="Anne ve çocuk markete girdi.",
-        tokens=["Anne", "ve", "çocuk", "markete", "girdi", "."],
-        upos=["NOUN", "CCONJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 1, 5, 0, 5],
-        deprels=["nsubj", "cc", "conj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Sunucu konukları sahneye davet etti.",
-        tokens=["Sunucu", "konukları", "sahneye", "davet", "etti", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 5, 5, 0, 5],
-        deprels=["nsubj", "obj", "obl", "compound", "root", "punct"],
-    ),
-    dict(
-        text="Takım kaptanı sakatlığına rağmen oynadı.",
-        tokens=["Takım", "kaptanı", "sakatlığına", "rağmen", "oynadı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "ADP", "VERB", "PUNCT"],
-        heads=[2, 5, 5, 3, 0, 5],
-        deprels=["nmod", "nsubj", "obl", "case", "root", "punct"],
-    ),
-    dict(
-        text="Yarışmacılar sahnede şarkılarını söyledi.",
-        tokens=["Yarışmacılar", "sahnede", "şarkılarını", "söyledi", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Bu kitabı herkese öneririm.",
-        tokens=["Bu", "kitabı", "herkese", "öneririm", "."],
-        upos=["DET", "NOUN", "PRON", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["det", "obj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Sokakta eski bir arkadaşımı gördüm.",
-        tokens=["Sokakta", "eski", "bir", "arkadaşımı", "gördüm", "."],
-        upos=["NOUN", "ADJ", "DET", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=["obl", "amod", "det", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Hafta sonu deniz kenarında yürüyüş yaptık.",
-        tokens=["Hafta", "sonu", "deniz", "kenarında", "yürüyüş", "yaptık", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 6, 4, 6, 6, 0, 6],
-        deprels=["nmod", "obl", "nmod", "obl", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Gazeteci olayın görgü tanıklarıyla konuştu.",
-        tokens=["Gazeteci", "olayın", "görgü", "tanıklarıyla", "konuştu", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=["nsubj", "nmod", "nmod", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Müzede tarihi eserler sergileniyor.",
-        tokens=["Müzede", "tarihi", "eserler", "sergileniyor", "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["obl", "amod", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Şarkıcı yeni albümünü tanıttı ve turneye çıktı.",
-        tokens=["Şarkıcı", "yeni", "albümünü", "tanıttı", "ve", "turneye",
-                "çıktı", "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "CCONJ", "NOUN", "VERB",
-              "PUNCT"],
-        heads=[4, 3, 4, 0, 7, 7, 4, 4],
-        deprels=["nsubj", "amod", "obj", "root", "cc", "obl", "conj",
-                 "punct"],
-    ),
-    dict(
-        text="Ormanda kaybolan köpek sahibine kavuştu.",
-        tokens=["Ormanda", "kaybolan", "köpek", "sahibine", "kavuştu", "."],
-        upos=["NOUN", "VERB", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 3, 5, 5, 0, 5],
-        deprels=["obl", "acl", "nsubj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Uzmanlar depreme hazırlık çağrısı yaptı.",
-        tokens=["Uzmanlar", "depreme", "hazırlık", "çağrısı", "yaptı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=["nsubj", "obl", "nmod", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Dükkan sahibi kepenkleri erken kapattı.",
-        tokens=["Dükkan", "sahibi", "kepenkleri", "erken", "kapattı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=["nmod", "nsubj", "obj", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Öğretmenimiz sınav tarihini duyurdu.",
-        tokens=["Öğretmenimiz", "sınav", "tarihini", "duyurdu", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "nmod", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Kitaplığın rafları tozla kaplıydı.",
-        tokens=["Kitaplığın", "rafları", "tozla", "kaplıydı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "ADJ", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nmod", "nsubj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Toplantı salonu bugün tamamen dolu.",
-        tokens=["Toplantı", "salonu", "bugün", "tamamen", "dolu", "."],
-        upos=["NOUN", "NOUN", "ADV", "ADV", "ADJ", "PUNCT"],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=["nmod", "nsubj", "advmod", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Dolapta taze meyve var.",
-        tokens=["Dolapta", "taze", "meyve", "var", "."],
-        upos=["NOUN", "ADJ", "NOUN", "ADJ", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["obl", "amod", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Cüzdanımda hiç para yoktu.",
-        tokens=["Cüzdanımda", "hiç", "para", "yoktu", "."],
-        upos=["NOUN", "ADV", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["obl", "advmod", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Ayşe Yılmaz yarışmada birinci oldu.",
-        tokens=["Ayşe", "Yılmaz", "yarışmada", "birinci", "oldu", "."],
-        upos=["PROPN", "PROPN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 1, 5, 5, 0, 5],
-        deprels=["nsubj", "flat", "obl", "compound", "root", "punct"],
-        ner=["PER", "PER", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Mehmet Öz hastanede doktorluk yapıyor.",
-        tokens=["Mehmet", "Öz", "hastanede", "doktorluk", "yapıyor", "."],
-        upos=["PROPN", "PROPN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 1, 5, 5, 0, 5],
-        deprels=["nsubj", "flat", "obl", "obj", "root", "punct"],
-        ner=["PER", "PER", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Ziraat Bankası yeni şube açtı.",
-        tokens=["Ziraat", "Bankası", "yeni", "şube", "açtı", "."],
-        upos=["PROPN", "PROPN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=["nmod", "nsubj", "amod", "obj", "root", "punct"],
-        ner=["ORG", "ORG", "O", "O", "O", "O"],
-    ),
-    # ---- round-3 tuning expansion, batch 2 (16 sentences): clause
-    # coordination, -DIğInI reported speech, question particle, "göre"
-    # postposition, copular-past adjective predicate, -An participle
-    # relative, genitive-possessive subject, negative-ability verb,
-    # nummod duration, comitative, fronted object, -IncA advcl,
-    # comparative nominal predicate, comma parataxis, dative
-    # experiencer.  Held-out split remains frozen and untouched. -------
-    dict(
-        text="Başbakan toplantıya katıldı ve gazetecilere açıklama yaptı.",
-        tokens=["Başbakan", "toplantıya", "katıldı", "ve", "gazetecilere",
-                "açıklama", "yaptı", "."],
-        upos=["NOUN", "NOUN", "VERB", "CCONJ", "NOUN", "NOUN", "VERB",
-              "PUNCT"],
-        heads=[3, 3, 0, 7, 7, 7, 3, 3],
-        deprels=["nsubj", "obl", "root", "cc", "obl", "obj", "conj",
-                 "punct"],
-    ),
-    dict(
-        text="Bakan projenin bittiğini söyledi.",
-        tokens=["Bakan", "projenin", "bittiğini", "söyledi", "."],
-        upos=["NOUN", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "nsubj", "ccomp", "root", "punct"],
-    ),
-    dict(
-        text="Toplantı yarın yapılacak mı?",
-        tokens=["Toplantı", "yarın", "yapılacak", "mı", "?"],
-        upos=["NOUN", "ADV", "VERB", "AUX", "PUNCT"],
-        heads=[3, 3, 0, 3, 3],
-        deprels=["nsubj", "advmod", "root", "aux", "punct"],
-    ),
-    dict(
-        text="Uzmanlara göre enflasyon gelecek ay düşecek.",
-        tokens=["Uzmanlara", "göre", "enflasyon", "gelecek", "ay",
-                "düşecek", "."],
-        upos=["NOUN", "ADP", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 1, 6, 5, 6, 0, 6],
-        deprels=["obl", "case", "nsubj", "amod", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Hava dün çok soğuktu.",
-        tokens=["Hava", "dün", "çok", "soğuktu", "."],
-        upos=["NOUN", "ADV", "ADV", "ADJ", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "advmod", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Yarışı kazanan sporcu madalya aldı.",
-        tokens=["Yarışı", "kazanan", "sporcu", "madalya", "aldı", "."],
-        upos=["NOUN", "VERB", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 3, 5, 5, 0, 5],
-        deprels=["obj", "acl", "nsubj", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Şirketin geliri bu yıl arttı.",
-        tokens=["Şirketin", "geliri", "bu", "yıl", "arttı", "."],
-        upos=["NOUN", "NOUN", "DET", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=["nmod", "nsubj", "det", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Çocuklar hafta sonu parka gidemedi.",
-        tokens=["Çocuklar", "hafta", "sonu", "parka", "gidemedi", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "nmod", "obl", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Festival üç gün sürdü.",
-        tokens=["Festival", "üç", "gün", "sürdü", "."],
-        upos=["NOUN", "NUM", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "nummod", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Ayşe arkadaşıyla sinemaya gitti.",
-        tokens=["Ayşe", "arkadaşıyla", "sinemaya", "gitti", "."],
-        upos=["PROPN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "obl", "root", "punct"],
-        ner=["PER", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Kitabı öğretmen öğrencilere dağıttı.",
-        tokens=["Kitabı", "öğretmen", "öğrencilere", "dağıttı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["obj", "nsubj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Yağmur yağınca maç ertelendi.",
-        tokens=["Yağmur", "yağınca", "maç", "ertelendi", "."],
-        upos=["NOUN", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nsubj", "advcl", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Bu yol eski yoldan daha güvenli.",
-        tokens=["Bu", "yol", "eski", "yoldan", "daha", "güvenli", "."],
-        upos=["DET", "NOUN", "ADJ", "NOUN", "ADV", "ADJ", "PUNCT"],
-        heads=[2, 6, 4, 6, 6, 0, 6],
-        deprels=["det", "nsubj", "amod", "obl", "advmod", "root",
-                 "punct"],
-    ),
-    dict(
-        text="Ekip sabah yola çıktı, akşam köye ulaştı.",
-        tokens=["Ekip", "sabah", "yola", "çıktı", ",", "akşam", "köye",
-                "ulaştı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT", "NOUN", "NOUN",
-              "VERB", "PUNCT"],
-        # UD comma-clause convention: FIRST clause is root, later clauses
-        # attach rightward as parataxis, delimiting comma to the clause it
-        # introduces (matches the frozen held-out split's annotation)
-        heads=[4, 4, 4, 0, 8, 8, 8, 4, 4],
-        deprels=["nsubj", "obl", "obl", "root", "punct", "obl",
-                 "obl", "parataxis", "punct"],
-    ),
-    dict(
-        text="Şirket yeni fabrikanın açılacağını açıkladı.",
-        tokens=["Şirket", "yeni", "fabrikanın", "açılacağını", "açıkladı",
-                "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=["nsubj", "amod", "nsubj", "ccomp", "root", "punct"],
-    ),
-    dict(
-        text="Bu fikir bana mantıklı geldi.",
-        tokens=["Bu", "fikir", "bana", "mantıklı", "geldi", "."],
-        upos=["DET", "NOUN", "PRON", "ADJ", "VERB", "PUNCT"],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=["det", "nsubj", "obl", "compound", "root", "punct"],
-    ),
-    # ---- round-3 tuning expansion, batch 3 (12 sentences): passive with
-    # tarafından agent, purpose clause -mAk için, -DHktAn sonra, possessed
-    # existential, title apposition run, pronoun subject + negation,
-    # -dir copular predicate, date oblique, comitative+birlikte, -DHğHm
-    # relative, kadar postposition, comma-separated oblique clause. -----
-    dict(
-        text="Karar kurul tarafından alındı.",
-        tokens=["Karar", "kurul", "tarafından", "alındı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "nmod", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Sınavı kazanmak için çok çalıştı.",
-        tokens=["Sınavı", "kazanmak", "için", "çok", "çalıştı", "."],
-        upos=["NOUN", "VERB", "ADP", "ADV", "VERB", "PUNCT"],
-        heads=[2, 5, 2, 5, 0, 5],
-        deprels=["obj", "advcl", "case", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Yemek yedikten sonra yürüyüşe çıktık.",
-        tokens=["Yemek", "yedikten", "sonra", "yürüyüşe", "çıktık", "."],
-        upos=["NOUN", "VERB", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 2, 5, 0, 5],
-        deprels=["obj", "advcl", "case", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Kentin büyük bir parkı var.",
-        tokens=["Kentin", "büyük", "bir", "parkı", "var", "."],
-        upos=["NOUN", "ADJ", "DET", "NOUN", "ADJ", "PUNCT"],
-        heads=[4, 4, 4, 5, 0, 5],
-        deprels=["nmod", "amod", "det", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Başkan Ahmet Yılmaz açıklama yaptı.",
-        tokens=["Başkan", "Ahmet", "Yılmaz", "açıklama", "yaptı", "."],
-        upos=["NOUN", "PROPN", "PROPN", "NOUN", "VERB", "PUNCT"],
-        # UD flat-name convention: the title heads the mention, name
-        # tokens attach flat (consistent with the held-out split)
-        heads=[5, 1, 1, 5, 0, 5],
-        deprels=["nsubj", "flat", "flat", "obj", "root", "punct"],
-        ner=["O", "PER", "PER", "O", "O", "O"],
-    ),
-    dict(
-        text="Onlar raporu dün göndermedi.",
-        tokens=["Onlar", "raporu", "dün", "göndermedi", "."],
-        upos=["PRON", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Bu proje ülke için önemlidir.",
-        tokens=["Bu", "proje", "ülke", "için", "önemlidir", "."],
-        upos=["DET", "NOUN", "NOUN", "ADP", "ADJ", "PUNCT"],
-        heads=[2, 5, 5, 3, 0, 5],
-        deprels=["det", "nsubj", "obl", "case", "root", "punct"],
-    ),
-    dict(
-        text="Toplantı 15 Mayıs'ta yapılacak.",
-        tokens=["Toplantı", "15", "Mayıs'ta", "yapılacak", "."],
-        upos=["NOUN", "NUM", "PROPN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "nummod", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Proje ekiple birlikte yürütüldü.",
-        tokens=["Proje", "ekiple", "birlikte", "yürütüldü", "."],
-        upos=["NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Okuduğum kitap çok güzeldi.",
-        tokens=["Okuduğum", "kitap", "çok", "güzeldi", "."],
-        upos=["VERB", "NOUN", "ADV", "ADJ", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["acl", "nsubj", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Toplantı akşama kadar sürdü.",
-        tokens=["Toplantı", "akşama", "kadar", "sürdü", "."],
-        upos=["NOUN", "NOUN", "ADP", "VERB", "PUNCT"],
-        heads=[4, 4, 2, 0, 4],
-        deprels=["nsubj", "obl", "case", "root", "punct"],
-    ),
-    dict(
-        text="Şirket, krize rağmen büyüdü.",
-        tokens=["Şirket", ",", "krize", "rağmen", "büyüdü", "."],
-        upos=["NOUN", "PUNCT", "NOUN", "ADP", "VERB", "PUNCT"],
-        heads=[5, 5, 5, 3, 0, 5],
-        deprels=["nsubj", "punct", "obl", "case", "root", "punct"],
-    ),
-    # ---- round-3 blind-split miss categories, pinned with fresh lexemes
-    # (annotated from the UD guidelines, not from parser output) --------
-    # compound past -iyordu / -ecekti / -mişti (fixture rows were broken)
-    dict(
-        text="Çocuklar bahçede sessizce oynuyordu.",
-        tokens=["Çocuklar", "bahçede", "sessizce", "oynuyordu", "."],
-        upos=["NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Ekip projeyi dün bitirecekti.",
-        tokens=["Ekip", "projeyi", "dün", "bitirecekti", "."],
-        upos=["NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Yazar romanı iki yılda tamamlamıştı.",
-        tokens=["Yazar", "romanı", "iki", "yılda", "tamamlamıştı", "."],
-        upos=["NOUN", "NOUN", "NUM", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "obj", "nummod", "obl", "root", "punct"],
-    ),
-    # grammaticalized postpositions over bare complements
-    dict(
-        text="Uçuş sis yüzünden gecikti.",
-        tokens=["Uçuş", "sis", "yüzünden", "gecikti", "."],
-        upos=["NOUN", "NOUN", "ADP", "VERB", "PUNCT"],
-        heads=[4, 4, 2, 0, 4],
-        deprels=["nsubj", "obl", "case", "root", "punct"],
-    ),
-    dict(
-        text="Sel yüzünden köprü kapandı.",
-        tokens=["Sel", "yüzünden", "köprü", "kapandı", "."],
-        upos=["NOUN", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 1, 4, 0, 4],
-        deprels=["obl", "case", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Takım çalışması sayesinde proje erken bitti.",
-        tokens=["Takım", "çalışması", "sayesinde", "proje", "erken", "bitti", "."],
-        upos=["NOUN", "NOUN", "ADP", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[2, 6, 2, 6, 6, 0, 6],
-        deprels=["nmod", "obl", "case", "nsubj", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Yol boyunca şarkılar söyledik.",
-        tokens=["Yol", "boyunca", "şarkılar", "söyledik", "."],
-        upos=["NOUN", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 1, 4, 0, 4],
-        deprels=["obl", "case", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Gazeteci olay hakkında soru sordu.",
-        tokens=["Gazeteci", "olay", "hakkında", "soru", "sordu", "."],
-        upos=["NOUN", "NOUN", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 2, 5, 0, 5],
-        deprels=["nsubj", "obl", "case", "obj", "root", "punct"],
-    ),
-    # -ki adjectival with a nominal compound dependent
-    dict(
-        text="Liman kentindeki depolar boşaltıldı.",
-        tokens=["Liman", "kentindeki", "depolar", "boşaltıldı", "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 3, 4, 0, 4],
-        deprels=["nmod", "amod", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Üniversite kampüsündeki öğrenciler sınava hazırlanıyordu.",
-        tokens=["Üniversite", "kampüsündeki", "öğrenciler", "sınava",
-                "hazırlanıyordu", "."],
-        upos=["NOUN", "ADJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 3, 5, 5, 0, 5],
-        deprels=["nmod", "amod", "nsubj", "obl", "root", "punct"],
-    ),
-    # title + name kept flat across a dative clause argument; title
-    # whole-word readings beating segmentation rivals (kaptan, bakan)
-    dict(
-        text="Doktor Çelik hastalarına ilaç yazdı.",
-        tokens=["Doktor", "Çelik", "hastalarına", "ilaç", "yazdı", "."],
-        upos=["NOUN", "PROPN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 1, 5, 5, 0, 5],
-        deprels=["nsubj", "flat", "obl", "obj", "root", "punct"],
-        ner=["O", "PER", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Kaptan gemiyi limana yanaştırdı.",
-        tokens=["Kaptan", "gemiyi", "limana", "yanaştırdı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Bakan gazetecilere açıklama yaptı.",
-        tokens=["Bakan", "gazetecilere", "açıklama", "yaptı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "obj", "root", "punct"],
-    ),
-    # sentence-initial adjective/noun homograph before a bare subject
-    # noun; bare indefinite objects of newly-listed transitives
-    dict(
-        text="Yaşlı adam bankta dinleniyordu.",
-        tokens=["Yaşlı", "adam", "bankta", "dinleniyordu", "."],
-        upos=["ADJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["amod", "nsubj", "obl", "root", "punct"],
-    ),
-    dict(
-        # (an earlier draft used "İhtiyar balıkçı ağları topladı", which
-        # is structurally ambiguous — 'balıkçı ağları' is itself a valid
-        # possessive compound — so it cannot gold-pin the ADJ reading)
-        text="İhtiyar bekçi kapıya koştu.",
-        tokens=["İhtiyar", "bekçi", "kapıya", "koştu", "."],
-        upos=["ADJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["amod", "nsubj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Hemşire hastaya sabır diledi.",
-        tokens=["Hemşire", "hastaya", "sabır", "diledi", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "obj", "root", "punct"],
-    ),
-    # ---- blind-2 miss categories, pinned with fresh lexemes -----------
-    # possessed-instrumental postpositions (nedeniyle class)
-    dict(
-        text="Grev nedeniyle seferler durduruldu.",
-        tokens=["Grev", "nedeniyle", "seferler", "durduruldu", "."],
-        upos=["NOUN", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 1, 4, 0, 4],
-        deprels=["obl", "case", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Yoğun çalışmalar sonucunda anlaşma sağlandı.",
-        tokens=["Yoğun", "çalışmalar", "sonucunda", "anlaşma", "sağlandı", "."],
-        upos=["ADJ", "NOUN", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 2, 5, 0, 5],
-        deprels=["amod", "obl", "case", "nsubj", "root", "punct"],
-    ),
-    # bare plural indefinite object of an unlisted transitive
-    dict(
-        text="Şirket büyük yatırımlar planladı.",
-        tokens=["Şirket", "büyük", "yatırımlar", "planladı", "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "amod", "obj", "root", "punct"],
-    ),
-    # spatial-relational idiom frames (X altında/altına + verb)
-    dict(
-        text="Jandarma kaçakçıları gözetim altında tutuyordu.",
-        tokens=["Jandarma", "kaçakçıları", "gözetim", "altında",
-                "tutuyordu", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "obj", "nmod", "obl", "root", "punct"],
-    ),
-    # adverb scoped inside a participial relative
-    dict(
-        text="Hızla büyüyen şirket yeni ofis açtı.",
-        tokens=["Hızla", "büyüyen", "şirket", "yeni", "ofis", "açtı", "."],
-        upos=["ADV", "VERB", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 3, 6, 5, 6, 0, 6],
-        deprels=["advmod", "acl", "nsubj", "amod", "obj", "root", "punct"],
-    ),
-    # önce as case on a -mAdAn converb clause
-    dict(
-        text="Karar vermeden önce uzmanlara danıştı.",
-        tokens=["Karar", "vermeden", "önce", "uzmanlara", "danıştı", "."],
-        upos=["NOUN", "VERB", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 2, 5, 0, 5],
-        deprels=["obj", "advcl", "case", "obl", "root", "punct"],
-    ),
-    # instrumental complement of adnominal "ilgili"
-    dict(
-        text="Müdür sorunla ilgili rapor istedi.",
-        tokens=["Müdür", "sorunla", "ilgili", "rapor", "istedi", "."],
-        upos=["NOUN", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=["nsubj", "obl", "amod", "obj", "root", "punct"],
-    ),
-    # -mA+Dat nominalized complement with a Loc left argument
-    dict(
-        text="Komisyon dosyaları ofiste incelemeye başladı.",
-        tokens=["Komisyon", "dosyaları", "ofiste", "incelemeye",
-                "başladı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=["nsubj", "obj", "obl", "ccomp", "root", "punct"],
-    ),
-    # whole-word stems against genitive/P2sg splits; passive vs the -Hn
-    # lexicalization (alındı)
-    dict(
-        text="Salgın bütün bölgeye yayıldı.",
-        tokens=["Salgın", "bütün", "bölgeye", "yayıldı", "."],
-        upos=["NOUN", "DET", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "det", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Gerekli önlemler hızla alındı.",
-        tokens=["Gerekli", "önlemler", "hızla", "alındı", "."],
-        upos=["ADJ", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["amod", "nsubj", "advmod", "root", "punct"],
-    ),
-    # ---- blind-3 miss categories, pinned with fresh lexemes -----------
-    dict(
-        text="Şirketin çalışanları greve devam etti.",
-        tokens=["Şirketin", "çalışanları", "greve", "devam", "etti", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=["nmod", "nsubj", "obl", "compound", "root", "punct"],
-    ),
-    dict(
-        text="Vakfın yönetim kurulu üyeleri görevden ayrıldı.",
-        tokens=["Vakfın", "yönetim", "kurulu", "üyeleri", "görevden",
-                "ayrıldı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 4, 6, 6, 0, 6],
-        deprels=["nmod", "nmod", "nmod", "nsubj", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Fiyatlar artarsa talep azalacak.",
-        tokens=["Fiyatlar", "artarsa", "talep", "azalacak", "."],
-        upos=["NOUN", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nsubj", "advcl", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Bekçi havlayan köpeği susturdu.",
-        tokens=["Bekçi", "havlayan", "köpeği", "susturdu", "."],
-        upos=["NOUN", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "acl", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Banka Ankara şubesinde yeni hizmet başlattı.",
-        tokens=["Banka", "Ankara", "şubesinde", "yeni", "hizmet",
-                "başlattı", "."],
-        upos=["NOUN", "PROPN", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 3, 6, 5, 6, 0, 6],
-        deprels=["nsubj", "nmod", "obl", "amod", "obj", "root", "punct"],
-        ner=["O", "LOC", "O", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Öğretmen Aydın velileri okula davet etti.",
-        tokens=["Öğretmen", "Aydın", "velileri", "okula", "davet",
-                "etti", "."],
-        upos=["NOUN", "PROPN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 1, 6, 6, 6, 0, 6],
-        deprels=["nsubj", "flat", "obj", "obl", "compound", "root", "punct"],
-        ner=["O", "PER", "O", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Yasa gereğince başvurular incelendi.",
-        tokens=["Yasa", "gereğince", "başvurular", "incelendi", "."],
-        upos=["NOUN", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 1, 4, 0, 4],
-        deprels=["obl", "case", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Komisyon raporu direkt inceledi.",
-        tokens=["Komisyon", "raporu", "direkt", "inceledi", "."],
-        upos=["NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Güvenlik açısından önlemler yeterliydi.",
-        tokens=["Güvenlik", "açısından", "önlemler", "yeterliydi", "."],
-        upos=["NOUN", "ADP", "NOUN", "ADJ", "PUNCT"],
-        heads=[4, 1, 4, 0, 4],
-        deprels=["obl", "case", "nsubj", "root", "punct"],
-    ),
-    # ---- blind-4 miss categories, pinned with fresh lexemes -----------
-    dict(
-        text="Cevap gayet netti.",
-        tokens=["Cevap", "gayet", "netti", "."],
-        upos=["NOUN", "ADV", "ADJ", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Kurul öneriyi kapsamlı tartıştı.",
-        tokens=["Kurul", "öneriyi", "kapsamlı", "tartıştı", "."],
-        upos=["NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Maç niçin iptal edildi?",
-        tokens=["Maç", "niçin", "iptal", "edildi", "?"],
-        upos=["NOUN", "ADV", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "advmod", "compound", "root", "punct"],
-    ),
-    dict(
-        text="Valilik bölgeye güvenlik sağladı.",
-        tokens=["Valilik", "bölgeye", "güvenlik", "sağladı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Önümüzdeki hafta başına kadar yol kapalı.",
-        tokens=["Önümüzdeki", "hafta", "başına", "kadar", "yol",
-                "kapalı", "."],
-        upos=["ADJ", "NOUN", "NOUN", "ADP", "NOUN", "ADJ", "PUNCT"],
-        heads=[2, 3, 6, 3, 6, 0, 6],
-        deprels=["amod", "nmod", "obl", "case", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Eski sürüm yenisinden daha yavaştı.",
-        tokens=["Eski", "sürüm", "yenisinden", "daha", "yavaştı", "."],
-        upos=["ADJ", "NOUN", "NOUN", "ADV", "ADJ", "PUNCT"],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=["amod", "nsubj", "obl", "advmod", "root", "punct"],
-    ),
-    dict(
-        text="Gençler şehirde kalmak istemiyor.",
-        tokens=["Gençler", "şehirde", "kalmak", "istemiyor", "."],
-        upos=["NOUN", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "obl", "ccomp", "root", "punct"],
-    ),
-    dict(
-        text="Koşucu yarışta ikinci turu tamamladı.",
-        tokens=["Koşucu", "yarışta", "ikinci", "turu", "tamamladı", "."],
-        upos=["NOUN", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "obl", "amod", "obj", "root", "punct"],
-    ),
-    # ---- blind-5 miss categories, pinned with fresh lexemes -----------
-    dict(
-        text="Kurallar değişmezse sorun büyüyecek.",
-        tokens=["Kurallar", "değişmezse", "sorun", "büyüyecek", "."],
-        upos=["NOUN", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nsubj", "advcl", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Şirket borçlarını ödemiyordu.",
-        tokens=["Şirket", "borçlarını", "ödemiyordu", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Ülkeler arasında ticaret gelişti.",
-        tokens=["Ülkeler", "arasında", "ticaret", "gelişti", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nmod", "obl", "nsubj", "root", "punct"],
-    ),
-    dict(
-        text="Yöneticiler beklemeden karar aldı.",
-        tokens=["Yöneticiler", "beklemeden", "karar", "aldı", "."],
-        upos=["NOUN", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "advcl", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Görüşme hafta sonu oldu.",
-        tokens=["Görüşme", "hafta", "sonu", "oldu", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "nmod", "obl", "root", "punct"],
-    ),
-    dict(
-        text="Kulüp gençlere uygun program sundu.",
-        tokens=["Kulüp", "gençlere", "uygun", "program", "sundu", "."],
-        upos=["NOUN", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=["nsubj", "obl", "amod", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Sekreter belgeleri kaydetti.",
-        tokens=["Sekreter", "belgeleri", "kaydetti", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obj", "root", "punct"],
-    ),
-    dict(
-        text="Akşam geç saatlerde elektrik kesildi.",
-        tokens=["Akşam", "geç", "saatlerde", "elektrik", "kesildi", "."],
-        upos=["NOUN", "ADJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 5, 5, 0, 5],
-        deprels=["nmod", "amod", "obl", "nsubj", "root", "punct"],
-    ),
-    # ---- blind-6 miss categories, pinned with fresh lexemes -----------
-    dict(
-        text="Denetçiler sorunları yerinde tespit etti.",
-        tokens=["Denetçiler", "sorunları", "yerinde", "tespit", "etti",
-                "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 5, 5, 0, 5],
-        deprels=["nsubj", "obj", "obl", "compound", "root", "punct"],
-    ),
-    dict(
-        text="Otel açılışı fırtına nedeniyle iptal etti.",
-        tokens=["Otel", "açılışı", "fırtına", "nedeniyle", "iptal",
-                "etti", "."],
-        upos=["NOUN", "NOUN", "NOUN", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 6, 6, 3, 6, 0, 6],
-        deprels=["nsubj", "obj", "obl", "case", "compound", "root",
-                 "punct"],
-    ),
-    dict(
-        text="Ankara garında yoğunluk yaşandı.",
-        tokens=["Ankara", "garında", "yoğunluk", "yaşandı", "."],
-        upos=["PROPN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nmod", "obl", "nsubj", "root", "punct"],
-        ner=["LOC", "O", "O", "O", "O"],
-    ),
-    dict(
-        text="Kulüp taraftarlara ek bilet tahsis etti.",
-        tokens=["Kulüp", "taraftarlara", "ek", "bilet", "tahsis",
-                "etti", "."],
-        upos=["NOUN", "NOUN", "ADJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 6, 4, 6, 6, 0, 6],
-        deprels=["nsubj", "obl", "amod", "obj", "compound", "root",
-                 "punct"],
-    ),
-    # ---- blind-7 category pins (fresh sentences; rules are general) ----
-    # possessed-locative grammaticalized ADP, sentence-initial frame
-    dict(
-        text="Deprem sırasında elektrikler kesildi.",
-        tokens=["Deprem", "sırasında", "elektrikler", "kesildi", "."],
-        upos=["NOUN", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 1, 4, 0, 4],
-        deprels=["obl", "case", "nsubj", "root", "punct"],
-    ),
-    # Inf2 clause licenses the Acc reading of a preceding homograph
-    dict(
-        text="Ekip duvarları boyamaya başladı.",
-        tokens=["Ekip", "duvarları", "boyamaya", "başladı", "."],
-        upos=["NOUN", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "obj", "ccomp", "root", "punct"],
-    ),
-    # genitive subject over an intervening BARE nominal (izafet needs
-    # possessive agreement); temporal adjunct stays in the embedded clause
-    dict(
-        text="Sekreter müdürün gelecek hafta döneceğini duyurdu.",
-        tokens=["Sekreter", "müdürün", "gelecek", "hafta", "döneceğini",
-                "duyurdu", "."],
-        upos=["NOUN", "NOUN", "ADJ", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[6, 5, 4, 5, 6, 0, 6],
-        deprels=["nsubj", "nsubj", "amod", "obl", "ccomp", "root",
-                 "punct"],
-    ),
-    # whole-surface noun homograph of a case segmentation before a
-    # possessed same-case nominal is the compound modifier
-    dict(
-        text="Çocuk okul arkadaşlarıyla oynadı.",
-        tokens=["Çocuk", "okul", "arkadaşlarıyla", "oynadı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "nmod", "obl", "root", "punct"],
-    ),
-    # loan -î adjective homograph (askeri) attributive before an oblique
-    dict(
-        text="Kurum yeni raporu askeri birliğe gönderdi.",
-        tokens=["Kurum", "yeni", "raporu", "askeri", "birliğe",
-                "gönderdi", "."],
-        upos=["NOUN", "ADJ", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 3, 6, 5, 6, 0, 6],
-        deprels=["nsubj", "amod", "obj", "amod", "obl", "root", "punct"],
-    ),
-    # core citation adjective exempt from the zincirleme re-read
-    dict(
-        text="Şirket eski binayı yeniledi.",
-        tokens=["Şirket", "eski", "binayı", "yeniledi", "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "amod", "obj", "root", "punct"],
-    ),
-    # bare Adj/Noun dual-entry word attributive before unpossessed noun
-    dict(
-        text="Hasta yolcu uçaktan indi.",
-        tokens=["Hasta", "yolcu", "uçaktan", "indi", "."],
-        upos=["ADJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["amod", "nsubj", "obl", "root", "punct"],
-    ),
-    # agentive -IcI noun as subject (not ADJ) when not adjacent to a head
-    dict(
-        text="Satıcı yerli ürünleri tanıttı.",
-        tokens=["Satıcı", "yerli", "ürünleri", "tanıttı", "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "amod", "obj", "root", "punct"],
-    ),
-    # agentive -IcI zero-copula predicate keeps the adjectival reading
-    dict(
-        text="Bu roman oldukça sürükleyici.",
-        tokens=["Bu", "roman", "oldukça", "sürükleyici", "."],
-        upos=["DET", "NOUN", "ADV", "ADJ", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["det", "nsubj", "advmod", "root", "punct"],
-    ),
-    # out-of-lexicon -lI With-adjective as zero-copula predicate
-    dict(
-        text="Yönetmen oldukça vizyonlu.",
-        tokens=["Yönetmen", "oldukça", "vizyonlu", "."],
-        upos=["NOUN", "ADV", "ADJ", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "advmod", "root", "punct"],
-    ),
-    # lexicalized -An noun homograph re-read as participle after an
-    # oblique argument (çalışan 'employee' vs 'working')
-    dict(
-        text="Ofiste çalışan memurlar zam bekliyor.",
-        tokens=["Ofiste", "çalışan", "memurlar", "zam", "bekliyor", "."],
-        upos=["NOUN", "VERB", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 3, 5, 5, 0, 5],
-        deprels=["obl", "acl", "nsubj", "obj", "root", "punct"],
-    ),
-    # --- blind-8 category pins (general rules, fresh lexemes) -----------
-    # -IncA converb beats the noun+CA adverb segmentation rival
-    # (gel+ince, not gelin+ce 'bride-like'); the When-clause hosts its
-    # own subject
-    dict(
-        text="Konuklar gelince tören başladı.",
-        tokens=["Konuklar", "gelince", "tören", "başladı", "."],
-        upos=["NOUN", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nsubj", "advcl", "nsubj", "root", "punct"],
-    ),
-    # a genitive whose landing possessed nominal is saturated by its own
-    # bare compound modifier is the nominalized clause's subject
-    # (bakanlığın EĞİTİM POLİTİKALARINI değiştireceğini)
-    dict(
-        text="Yetkililer bakanlığın eğitim politikalarını"
-             " değiştireceğini açıkladı.",
-        tokens=["Yetkililer", "bakanlığın", "eğitim", "politikalarını",
-                "değiştireceğini", "açıkladı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[6, 5, 4, 5, 6, 0, 6],
-        deprels=["nsubj", "nsubj", "nmod", "obj", "ccomp", "root",
-                 "punct"],
-    ),
-    # a post-coordinator adjective modifies its own conjunct's nominal
-    # across a clause boundary, and the modified bare NP before the
-    # transitive second conjunct is its object (shared subject)
-    dict(
-        text="Belediye yolları onardı ve geniş parklar açtı.",
-        tokens=["Belediye", "yolları", "onardı", "ve", "geniş",
-                "parklar", "açtı", "."],
-        upos=["NOUN", "NOUN", "VERB", "CCONJ", "ADJ", "NOUN", "VERB",
-              "PUNCT"],
-        heads=[3, 3, 0, 7, 6, 7, 3, 3],
-        deprels=["nsubj", "obj", "root", "cc", "amod", "obj", "conj",
-                 "punct"],
-    ),
-    # an agentive -CI occupation noun that is also a gazetteer ORG name
-    # (Sözcü the paper vs sözcü 'spokesperson') reads as the occupation
-    # sentence-initially before lowercase text
-    dict(
-        text="Sözcü yeni düzenlemeyi savundu.",
-        tokens=["Sözcü", "yeni", "düzenlemeyi", "savundu", "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "amod", "obj", "root", "punct"],
-    ),
-    # --- blind-9 category pins (fresh lexemes, general rules) ----------
-    # passive x negative compound tense (suffix-fixture paradigm product:
-    # uygula+n+mazsa), conditional clause with its own subject
-    dict(
-        text="Kurallar uygulanmazsa ceza kesilecek.",
-        tokens=["Kurallar", "uygulanmazsa", "ceza", "kesilecek", "."],
-        upos=["NOUN", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nsubj", "advcl", "nsubj", "root", "punct"],
-    ),
-    # -lAn+DIr acquire-causative paradigm product (ödül+lendir+di)
-    dict(
-        text="Şirket genç çalışanlarını ödüllendirdi.",
-        tokens=["Şirket", "genç", "çalışanlarını", "ödüllendirdi", "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "amod", "obj", "root", "punct"],
-    ),
-    # finite past before a coordinating conjunction beats the possessed-
-    # noun homograph (taşı+dı over taşıt+P3sg: the kur/kurt class)
-    dict(
-        text="İşçi malzemeyi taşıdı ve depoya koydu.",
-        tokens=["İşçi", "malzemeyi", "taşıdı", "ve", "depoya", "koydu",
-                "."],
-        upos=["NOUN", "NOUN", "VERB", "CCONJ", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 6, 6, 3, 3],
-        deprels=["nsubj", "obj", "root", "cc", "obl", "conj", "punct"],
-    ),
-    # occupation-noun title (class member beyond the institutional list)
-    # heading a flat name, the name a mid-sentence-capital homograph
-    dict(
-        text="Ressam Demir yeni sergisini açtı.",
-        tokens=["Ressam", "Demir", "yeni", "sergisini", "açtı", "."],
-        upos=["NOUN", "PROPN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 1, 4, 5, 0, 5],
-        deprels=["nsubj", "flat", "amod", "obj", "root", "punct"],
-        ner=["O", "PER", "O", "O", "O", "O"],
-    ),
-    # military title + surname whose lowercase is a case-split homograph
-    # (kara vs kar+Dat): mid-sentence capital takes the citation reading
-    dict(
-        text="Albay Kara törene katıldı.",
-        tokens=["Albay", "Kara", "törene", "katıldı", "."],
-        upos=["NOUN", "PROPN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 1, 4, 0, 4],
-        deprels=["nsubj", "flat", "obl", "root", "punct"],
-        ner=["O", "PER", "O", "O", "O"],
-    ),
-    # adjective lifts over the bare compound to the possessed head even
-    # with a degree adverb later in the clause (the adverb modifies the
-    # predicate, not an ablative comparative)
-    dict(
-        text="Eski şehir merkezi oldukça kalabalık.",
-        tokens=["Eski", "şehir", "merkezi", "oldukça", "kalabalık", "."],
-        upos=["ADJ", "NOUN", "NOUN", "ADV", "ADJ", "PUNCT"],
-        heads=[3, 3, 5, 5, 0, 5],
-        deprels=["amod", "nmod", "nsubj", "advmod", "root", "punct"],
-    ),
-    # bare compound modifier before an OVERTLY possessed accusative
-    # object inside a nominalized complement (gıda FİYATLARINI)
-    dict(
-        text="Uzmanlar salgının gıda fiyatlarını artıracağını söyledi.",
-        tokens=["Uzmanlar", "salgının", "gıda", "fiyatlarını",
-                "artıracağını", "söyledi", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[6, 5, 4, 5, 6, 0, 6],
-        deprels=["nsubj", "nsubj", "nmod", "obj", "ccomp", "root",
-                 "punct"],
-    ),
-    # nominal-reading tie broken toward the longer inflected stem
-    # (amaç+P3sg over ama+Agt), genitive possessor, infinitive predicate
-    dict(
-        text="Projenin amacı gençlere ulaşmak.",
-        tokens=["Projenin", "amacı", "gençlere", "ulaşmak", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nmod", "nsubj", "obl", "root", "punct"],
-    ),
-    # --- blind-10 category pins (fresh lexemes, general rules) ---------
-    # adjective inside an intervening oblique phrase keeps object-verb
-    # adjacency (raporu TİTİZ ŞEKİLDE inceledi -> obj, not compound)
-    dict(
-        text="Yönetici raporu titiz şekilde inceledi.",
-        tokens=["Yönetici", "raporu", "titiz", "şekilde", "inceledi",
-                "."],
-        upos=["NOUN", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "obj", "amod", "obl", "root", "punct"],
-    ),
-    # everyday physical-action transitive class (dilimle)
-    dict(
-        text="Garson limonu dilimledi.",
-        tokens=["Garson", "limonu", "dilimledi", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obj", "root", "punct"],
-    ),
-    # kal- is copular: its predicative adjective is a compound
-    # complement, not an adverb
-    dict(
-        text="Mağaza bayramda kapalı kalacak.",
-        tokens=["Mağaza", "bayramda", "kapalı", "kalacak", "."],
-        upos=["NOUN", "NOUN", "ADJ", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obl", "compound", "root", "punct"],
-    ),
-    # a title run holds its name: the following possessed nominal is the
-    # clause object, not an izafet head over the surname
-    dict(
-        text="Avukat Şahin davaları dikkatle inceledi.",
-        tokens=["Avukat", "Şahin", "davaları", "dikkatle", "inceledi",
-                "."],
-        upos=["NOUN", "PROPN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[5, 1, 5, 5, 0, 5],
-        deprels=["nsubj", "flat", "obj", "advmod", "root", "punct"],
-        ner=["O", "PER", "O", "O", "O", "O"],
-    ),
-    # --- blind-11 category pins (fresh lexemes, general rules) ---------
-    # negative participle nominalization over a causative stem
-    # (artır+MA+yacağını, the suffix-fixture rule-3 product)
-    dict(
-        text="Şirket fiyatları artırmayacağını duyurdu.",
-        tokens=["Şirket", "fiyatları", "artırmayacağını", "duyurdu",
-                "."],
-        upos=["NOUN", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "obj", "ccomp", "root", "punct"],
-    ),
-    # derived-verb (Become) sentence-final finite over its participle
-    # homograph (dijitalleşecek = Fut, not FutPart)
-    dict(
-        text="Kurumlar önümüzdeki yıl dijitalleşecek.",
-        tokens=["Kurumlar", "önümüzdeki", "yıl", "dijitalleşecek",
-                "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "amod", "obl", "root", "punct"],
-    ),
-    # locative oblique + clause coordination select the finite verb over
-    # a possessed-noun homograph (şakı+dı over şakıt+P3sg)
-    dict(
-        text="Kuşlar bahçede şakıdı ve uçtu.",
-        tokens=["Kuşlar", "bahçede", "şakıdı", "ve", "uçtu", "."],
-        upos=["NOUN", "NOUN", "VERB", "CCONJ", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 5, 3, 3],
-        deprels=["nsubj", "obl", "root", "cc", "conj", "punct"],
-    ),
-    # the amod walk consults the RESOLVED possession: an Acc-resolved
-    # object is not a compound head (amod stays on şirket)
-    dict(
-        text="Genç şirket üretimi hızla artırdı.",
-        tokens=["Genç", "şirket", "üretimi", "hızla", "artırdı", "."],
-        upos=["ADJ", "NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=["amod", "nsubj", "obj", "advmod", "root", "punct"],
-    ),
-    # a -lI adjective before a case-marked manner-frame host stays
-    # attributive (planlı BİÇİMDE), it is not a zero-derived noun
-    dict(
-        text="Ekip sorunu planlı biçimde çözdü.",
-        tokens=["Ekip", "sorunu", "planlı", "biçimde", "çözdü", "."],
-        upos=["NOUN", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "obj", "amod", "obl", "root", "punct"],
-    ),
-    # --- blind-12 category pins (fresh lexemes, general rules) ---------
-    # sentence-initial role-noun/adjective homograph before a case-
-    # marked nominal is the subject ...
-    dict(
-        text="Sorumlu hataları hemen kabul etti.",
-        tokens=["Sorumlu", "hataları", "hemen", "kabul", "etti", "."],
-        upos=["NOUN", "NOUN", "ADV", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 5, 5, 0, 5],
-        deprels=["nsubj", "obj", "advmod", "compound", "root", "punct"],
-    ),
-    # ... while before a bare-Nom nominal it stays attributive
-    dict(
-        text="Usta işçiler fabrikada çalıştı.",
-        tokens=["Usta", "işçiler", "fabrikada", "çalıştı", "."],
-        upos=["ADJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["amod", "nsubj", "obl", "root", "punct"],
-    ),
-    # --- blind-13 category pins (fresh lexemes, general rules) ---------
-    # productive -CI agentive of a known stem through the unknown-stem
-    # fallback (simit+çi), bare temporal transparent for adjacency
-    dict(
-        text="Belediye simitçileri sabah denetledi.",
-        tokens=["Belediye", "simitçileri", "sabah", "denetledi", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "obl", "root", "punct"],
-    ),
-    # press/print transitive class member
-    dict(
-        text="Matbaa afişleri bastı.",
-        tokens=["Matbaa", "afişleri", "bastı", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obj", "root", "punct"],
-    ),
-    # bare nominal before a possessed GENITIVE is the zincirleme
-    # modifier outright (the genitive cannot be a clause argument)
-    dict(
-        text="Takım kaptanının sakatlığı üzüntü yarattı.",
-        tokens=["Takım", "kaptanının", "sakatlığı", "üzüntü",
-                "yarattı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 3, 5, 5, 0, 5],
-        deprels=["nmod", "nmod", "nsubj", "obj", "root", "punct"],
-    ),
-    # comma-separated list conjuncts all chain to the FIRST conjunct,
-    # the comma attaches to the conjunct it introduces
-    dict(
-        text="Masada kalem, defter ve silgi duruyor.",
-        tokens=["Masada", "kalem", ",", "defter", "ve", "silgi",
-                "duruyor", "."],
-        upos=["NOUN", "NOUN", "PUNCT", "NOUN", "CCONJ", "NOUN", "VERB",
-              "PUNCT"],
-        heads=[7, 7, 4, 2, 6, 2, 0, 7],
-        deprels=["obl", "nsubj", "punct", "conj", "cc", "conj", "root",
-                 "punct"],
-    ),
-    # a 1st/2nd-person pronoun (incl. the Num+P1pl ikimiz class) is the
-    # subject of a person-marked predicate
-    dict(
-        text="İkimiz maçı birlikte izledik.",
-        tokens=["İkimiz", "maçı", "birlikte", "izledik", "."],
-        upos=["NUM", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "advmod", "root", "punct"],
-    ),
-    # --- blind-14 category pin (fresh lexeme, general rule) ------------
-    # a noun/adjective homograph before an ablative COMPARATIVE frame
-    # stays the subject noun (the Abl is the standard of comparison)
-    dict(
-        text="Bu ipek diğerinden daha parlak.",
-        tokens=["Bu", "ipek", "diğerinden", "daha", "parlak", "."],
-        upos=["DET", "NOUN", "NOUN", "ADV", "ADJ", "PUNCT"],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=["det", "nsubj", "obl", "advmod", "root", "punct"],
-    ),
-    # --- blind-15 category pins (fresh lexemes, general rules) ---------
-    # frequency nouns are obliques like time nouns (ikinci DEFA)
-    dict(
-        text="Ekip ödülü ikinci defa kazandı.",
-        tokens=["Ekip", "ödülü", "ikinci", "defa", "kazandı", "."],
-        upos=["NOUN", "NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "obj", "amod", "obl", "root", "punct"],
-    ),
-    # the emphatic particle attaches to the word it focuses
-    dict(
-        text="Öğretmenler de yürüyüşe katıldı.",
-        tokens=["Öğretmenler", "de", "yürüyüşe", "katıldı", "."],
-        upos=["NOUN", "CCONJ", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 1, 4, 0, 4],
-        deprels=["nsubj", "advmod", "obl", "root", "punct"],
-    ),
-    # a sentence-initial contrastive conjunction is cc on the clause
-    dict(
-        text="Fakat fiyatlar düşmedi.",
-        tokens=["Fakat", "fiyatlar", "düşmedi", "."],
-        upos=["CCONJ", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["cc", "nsubj", "root", "punct"],
-    ),
-    # a mid-run capitalized ADJ-stem surname is PROPN flat (Sarı)
-    dict(
-        text="Savcı Emre Sarı dosyayı kapattı.",
-        tokens=["Savcı", "Emre", "Sarı", "dosyayı", "kapattı", "."],
-        upos=["NOUN", "PROPN", "PROPN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 1, 1, 5, 0, 5],
-        deprels=["nsubj", "flat", "flat", "obj", "root", "punct"],
-        ner=["O", "PER", "PER", "O", "O", "O"],
-    ),
-    # lexicalized "önceden" is an adverb, not an ablative oblique
-    dict(
-        text="Uzman riski önceden bildirdi.",
-        tokens=["Uzman", "riski", "önceden", "bildirdi", "."],
-        upos=["NOUN", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "advmod", "root", "punct"],
-    ),
-    # --- blind-16 category pins (fresh lexemes, general rules) ---------
-    # comitative "ile" is ADP/case; the bare subject stays out of the
-    # postposition phrase when the clause needs it
-    dict(
-        text="Vali heyeti ile bölgeyi gezdi.",
-        tokens=["Vali", "heyeti", "ile", "bölgeyi", "gezdi", "."],
-        upos=["NOUN", "NOUN", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 5, 2, 5, 0, 5],
-        deprels=["nsubj", "obl", "case", "obj", "root", "punct"],
-    ),
-    # a lexicalized -Im nominal beats its accidental P1sg split
-    # (seçim, not seç+P1sg)
-    dict(
-        text="Hükümet seçim takvimini açıkladı.",
-        tokens=["Hükümet", "seçim", "takvimini", "açıkladı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["nsubj", "nmod", "obj", "root", "punct"],
-    ),
-    # noun/adjective homograph before a copular verb is the predicative
-    # adjective (hasta OLDU)
-    dict(
-        text="Dedem geçen yıl hasta oldu.",
-        tokens=["Dedem", "geçen", "yıl", "hasta", "oldu", "."],
-        upos=["NOUN", "ADJ", "NOUN", "ADJ", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "amod", "obl", "compound", "root", "punct"],
-    ),
-    # a post-matrix CCONJ opening a zero-copula clause coordinates
-    # clauses: the zero-copula token is the second conjunct's predicate
-    dict(
-        text="Etkinlik durduruldu çünkü salon doluydu.",
-        tokens=["Etkinlik", "durduruldu", "çünkü", "salon", "doluydu",
-                "."],
-        upos=["NOUN", "VERB", "CCONJ", "NOUN", "ADJ", "PUNCT"],
-        heads=[2, 0, 5, 5, 2, 2],
-        deprels=["nsubj", "root", "cc", "nsubj", "conj", "punct"],
-    ),
-    # --- blind-18 category pins (fresh lexemes, general rules) ---------
-    # an intransitive light-verb nominal stays compound under the
-    # impersonal passive
-    dict(
-        text="Projeye müdahale edildi.",
-        tokens=["Projeye", "müdahale", "edildi", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["obl", "compound", "root", "punct"],
-    ),
-    # a fronted Acc object fills the object slot: the bare preverbal
-    # nominal is the subject (OSV)
-    dict(
-        text="Ödülü genç sporcu kazandı.",
-        tokens=["Ödülü", "genç", "sporcu", "kazandı", "."],
-        upos=["NOUN", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 3, 4, 0, 4],
-        deprels=["obj", "amod", "nsubj", "root", "punct"],
-    ),
-    # a pronoun is never an izafet modifier: demonstrative subject over
-    # a genitive pronoun in a verbless predicate
-    dict(
-        text="Bu sizlerin eseri.",
-        tokens=["Bu", "sizlerin", "eseri", "."],
-        upos=["PRON", "PRON", "NOUN", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "nmod", "root", "punct"],
-    ),
-    # Become+Caus+Pass voice chain from the fixture product
-    dict(
-        text="Yöntem basitleştirildi.",
-        tokens=["Yöntem", "basitleştirildi", "."],
-        upos=["NOUN", "VERB", "PUNCT"],
-        heads=[2, 0, 2],
-        deprels=["nsubj", "root", "punct"],
-    ),
-    # --- blind-19 category pins (general rules) ------------------------
-    # a lexicalized noun beats its A1sg finite homograph after a dative
-    # (yardım, not yar+Past+A1sg), and a transitive passive promotes it
-    dict(
-        text="Depremzedelere yardım gönderildi.",
-        tokens=["Depremzedelere", "yardım", "gönderildi", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["obl", "nsubj", "root", "punct"],
-    ),
-    # under a passive predicate the first bare nominal compounds when a
-    # later subject candidate exists (double izafet + passive)
-    dict(
-        text="Spor salonunda halk toplantısı yapıldı.",
-        tokens=["Spor", "salonunda", "halk", "toplantısı", "yapıldı",
-                "."],
-        upos=["NOUN", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=["nmod", "obl", "nmod", "nsubj", "root", "punct"],
-    ),
-    # an intransitive -ken converb hosts its own preceding subject
-    dict(
-        text="Güneş doğarken balıkçılar denize açıldı.",
-        tokens=["Güneş", "doğarken", "balıkçılar", "denize", "açıldı",
-                "."],
-        upos=["NOUN", "VERB", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=["nsubj", "advcl", "nsubj", "obl", "root", "punct"],
-    ),
-    # OSV with a participle-headed fronted object: the first NOMINAL of
-    # the clause is the topicalized object
-    dict(
-        text="Sunulan raporu kurul inceledi.",
-        tokens=["Sunulan", "raporu", "kurul", "inceledi", "."],
-        upos=["VERB", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["acl", "obj", "nsubj", "root", "punct"],
-    ),
-    # necessitative -mAlI from the fixture family
-    dict(
-        text="Yolcular kemerlerini takmalı.",
-        tokens=["Yolcular", "kemerlerini", "takmalı", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obj", "root", "punct"],
-    ),
-    # --- blind-20 category pins (fresh lexemes, general rules) ---------
-    # -DIkçA converb hosting its own subject
-    dict(
-        text="Ekonomi büyüdükçe istihdam artıyor.",
-        tokens=["Ekonomi", "büyüdükçe", "istihdam", "artıyor", "."],
-        upos=["NOUN", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nsubj", "advcl", "nsubj", "root", "punct"],
-    ),
-    # formal -mAktAdIr progressive
-    dict(
-        text="Görüşmeler devam etmektedir.",
-        tokens=["Görüşmeler", "devam", "etmektedir", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "compound", "root", "punct"],
-    ),
-    # a passive -mAdAn converb hosts its own subject; the Acquire/Pass
-    # homograph resolves to the passive (imzala+n-, not imza+lan-)
-    dict(
-        text="Sözleşme imzalanmadan önce şartlar okundu.",
-        tokens=["Sözleşme", "imzalanmadan", "önce", "şartlar",
-                "okundu", "."],
-        upos=["NOUN", "VERB", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 2, 5, 0, 5],
-        deprels=["nsubj", "advcl", "case", "nsubj", "root", "punct"],
-    ),
-    # sentence-initial -mIş participle heads a relative, not a clause
-    dict(
-        text="Solmuş çiçekler değiştirildi.",
-        tokens=["Solmuş", "çiçekler", "değiştirildi", "."],
-        upos=["VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 3, 0, 3],
-        deprels=["acl", "nsubj", "root", "punct"],
-    ),
-    # quantifier determiner over an adjective-modified nominal
-    dict(
-        text="Birkaç genç sporcu seçildi.",
-        tokens=["Birkaç", "genç", "sporcu", "seçildi", "."],
-        upos=["DET", "ADJ", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 4, 0, 4],
-        deprels=["det", "amod", "nsubj", "root", "punct"],
-    ),
-    # a short dictionary stem's plain plural beats the -Ar Aorist
-    # homograph (at+lar, not atla+r)
-    dict(
-        text="Atlar çayıra salındı.",
-        tokens=["Atlar", "çayıra", "salındı", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obl", "root", "punct"],
-    ),
-    # a whole-word dictionary noun beats its -lA instrumental split
-    # (tarla, not tar+Ins)
-    dict(
-        text="Tarla sabah sürüldü.",
-        tokens=["Tarla", "sabah", "sürüldü", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obl", "root", "punct"],
-    ),
-    # an -IcI agentive before a case-marked argument is the profession
-    # noun subject
-    dict(
-        text="Yüzücü madalyayı kazandı.",
-        tokens=["Yüzücü", "madalyayı", "kazandı", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obj", "root", "punct"],
-    ),
-    # --- blind-21 category pins (fresh lexemes, general rules) ---------
-    # a bare temporal noun directly before a subject-hosting converb is
-    # that converb's subject
-    dict(
-        text="Zaman geçtikçe özlem büyüdü.",
-        tokens=["Zaman", "geçtikçe", "özlem", "büyüdü", "."],
-        upos=["NOUN", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nsubj", "advcl", "nsubj", "root", "punct"],
-    ),
-    # passive of the formal -mAktAdIr progressive (fixture product)
-    dict(
-        text="Proje kararlılıkla yürütülmektedir.",
-        tokens=["Proje", "kararlılıkla", "yürütülmektedir", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obl", "root", "punct"],
-    ),
-    # voiced-boundary unknown-stem split (yalnız+lık: yalnızlığ+ından)
-    dict(
-        text="Şarkıcı yalnızlığından bahsetti.",
-        tokens=["Şarkıcı", "yalnızlığından", "bahsetti", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obl", "root", "punct"],
-    ),
-    # ---- blind-22 pins (fresh lexemes, one per fix category) ----------
-    # P2sg-noun-vs-PresPart homograph (süren = sür+PresPart, not süre+n)
-    dict(
-        text="Uzun süren toplantı sona erdi.",
-        tokens=["Uzun", "süren", "toplantı", "sona", "erdi", "."],
-        upos=["ADV", "VERB", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 3, 5, 5, 0, 5],
-        deprels=["advmod", "acl", "nsubj", "obl", "root", "punct"],
-    ),
-    # derived-nominal Acc/P3sg homography in a conjunct clause
-    # (büyükleri = büyük^DB+Noun, resolves to the object of dinledi)
-    dict(
-        text="Aile toplandı ve büyükleri dinledi.",
-        tokens=["Aile", "toplandı", "ve", "büyükleri", "dinledi", "."],
-        upos=["NOUN", "VERB", "CCONJ", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 0, 5, 5, 2, 2],
-        deprels=["nsubj", "root", "cc", "obj", "conj", "punct"],
-    ),
-    # PCDat postposition with bare-Nom equative complement (saray KADAR)
-    dict(
-        text="Ev saray kadar güzel.",
-        tokens=["Ev", "saray", "kadar", "güzel", "."],
-        upos=["NOUN", "NOUN", "ADP", "ADJ", "PUNCT"],
-        heads=[4, 4, 2, 0, 4],
-        deprels=["nsubj", "obl", "case", "root", "punct"],
-    ),
-    # case-governing Postp demoted without its case (daha FAZLA arttı:
-    # fazla+PCAbl has no ablative complement, the degree reading stands)
-    dict(
-        text="Giderler bu yıl daha fazla arttı.",
-        tokens=["Giderler", "bu", "yıl", "daha", "fazla", "arttı", "."],
-        upos=["NOUN", "DET", "NOUN", "ADV", "ADV", "VERB", "PUNCT"],
-        heads=[6, 3, 6, 5, 6, 0, 6],
-        deprels=["nsubj", "det", "obl", "advmod", "advmod", "root",
-                 "punct"],
-    ),
-    # attributive adj-noun homograph on the tarafından agent when the
-    # clause subject stands left (GENÇ mimarlar tarafından)
-    dict(
-        text="Bina genç mimarlar tarafından tasarlandı.",
-        tokens=["Bina", "genç", "mimarlar", "tarafından", "tasarlandı",
-                "."],
-        upos=["NOUN", "ADJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=["nsubj", "amod", "nmod", "obl", "root", "punct"],
-    ),
-    # adnominal walk to the Acc-resolved compound head when the subject
-    # stands left (yeni bir pazarlama STRATEJİSİ)
-    dict(
-        text="Şirket yeni bir pazarlama stratejisi uyguladı.",
-        tokens=["Şirket", "yeni", "bir", "pazarlama", "stratejisi",
-                "uyguladı", "."],
-        upos=["NOUN", "ADJ", "DET", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 5, 5, 5, 6, 0, 6],
-        deprels=["nsubj", "amod", "det", "nmod", "obj", "root", "punct"],
-    ),
-    # ---- blind-23 pins (fresh lexemes, one per fix category) ----------
-    # sentence-initial -AcAk participle relative (narr_acl0 extended)
-    dict(
-        text="Açılacak fabrikalar istihdam sağlayacak.",
-        tokens=["Açılacak", "fabrikalar", "istihdam", "sağlayacak", "."],
-        upos=["VERB", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["acl", "nsubj", "obj", "root", "punct"],
-    ),
-    # bare interrogative 'neden' before a (nominalized) verb is ADV
-    dict(
-        text="Müdür satışların neden azaldığını sordu.",
-        tokens=["Müdür", "satışların", "neden", "azaldığını", "sordu",
-                "."],
-        upos=["NOUN", "NOUN", "ADV", "VERB", "VERB", "PUNCT"],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=["nsubj", "nsubj", "advmod", "ccomp", "root", "punct"],
-    ),
-    # bare-Nom -mA nominalization as clausal subject (csubj), its
-    # genitive reaching over an adverb
-    dict(
-        text="Takımın erken gelmesi hocayı şaşırttı.",
-        tokens=["Takımın", "erken", "gelmesi", "hocayı", "şaşırttı",
-                "."],
-        upos=["NOUN", "ADV", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "advmod", "csubj", "obj", "root", "punct"],
-    ),
-    # correlative hem..hem: first conjunct keeps its clause role
-    dict(
-        text="Belediye hem yolları hem parkları yeniledi.",
-        tokens=["Belediye", "hem", "yolları", "hem", "parkları",
-                "yeniledi", "."],
-        upos=["NOUN", "CCONJ", "NOUN", "CCONJ", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 3, 6, 5, 3, 0, 6],
-        deprels=["nsubj", "cc", "obj", "cc", "conj", "root", "punct"],
-    ),
-    # correlative ne..ne with bare-Nom conjuncts
-    dict(
-        text="Firma ne indirim ne taksit sundu.",
-        tokens=["Firma", "ne", "indirim", "ne", "taksit", "sundu", "."],
-        upos=["NOUN", "CCONJ", "NOUN", "CCONJ", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 3, 6, 5, 3, 0, 6],
-        deprels=["nsubj", "cc", "obj", "cc", "conj", "root", "punct"],
-    ),
-    # percentage frame: yüzde heads its numeral
-    dict(
-        text="Üretim yüzde kırk azaldı.",
-        tokens=["Üretim", "yüzde", "kırk", "azaldı", "."],
-        upos=["NOUN", "NOUN", "NUM", "VERB", "PUNCT"],
-        heads=[4, 4, 2, 0, 4],
-        deprels=["nsubj", "obl", "nummod", "root", "punct"],
-    ),
-    # loan -î homograph before determiner 'bir' is attributive (resmi)
-    dict(
-        text="Kurum resmi bir açıklama yaptı.",
-        tokens=["Kurum", "resmi", "bir", "açıklama", "yaptı", "."],
-        upos=["NOUN", "ADJ", "DET", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=["nsubj", "amod", "det", "obj", "root", "punct"],
-    ),
-    # partitive quantifier after a genitive is PRON, not DET
-    dict(
-        text="Çalışanların çoğu karara sevindi.",
-        tokens=["Çalışanların", "çoğu", "karara", "sevindi", "."],
-        upos=["NOUN", "PRON", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nmod", "nsubj", "obl", "root", "punct"],
-    ),
-    # clause-scoped Acc/P3sg resolution in a parataxis second clause,
-    # adnominal walk stopped at the clause-initial subject
-    dict(
-        text="Yaşlı doktor hastayı muayene etti, hemşire raporu yazdı.",
-        tokens=["Yaşlı", "doktor", "hastayı", "muayene", "etti", ",",
-                "hemşire", "raporu", "yazdı", "."],
-        upos=["ADJ", "NOUN", "NOUN", "NOUN", "VERB", "PUNCT", "NOUN",
-              "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 5, 5, 0, 9, 9, 9, 5, 5],
-        deprels=["amod", "nsubj", "obj", "compound", "root", "punct",
-                 "nsubj", "obj", "parataxis", "punct"],
-    ),
-    # --- blind-24 rule pins (fresh sentences, not the blind split) ----
-    # genitive + ambiguous -(s)I noun + P3sg transitive nominalization:
-    # the genitive is the nominalization's subject, the noun its object
-    dict(
-        text="Adamın kitabı sattığını gördüm.",
-        tokens=["Adamın", "kitabı", "sattığını", "gördüm", "."],
-        upos=["NOUN", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[3, 3, 4, 0, 4],
-        deprels=["nsubj", "obj", "ccomp", "root", "punct"],
-    ),
-    # incorporated bare-Nom object licenses the verbal -mA reading
-    dict(
-        text="Banka müşterilere kredi vermeyi durdurdu.",
-        tokens=["Banka", "müşterilere", "kredi", "vermeyi", "durdurdu",
-                "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "VERB", "PUNCT"],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=["nsubj", "obl", "obj", "ccomp", "root", "punct"],
-    ),
-    # saturated izafet head is the subject; the next ambiguous noun is
-    # the transitive verb's object
-    dict(
-        text="Ders programı öğrencileri şaşırttı.",
-        tokens=["Ders", "programı", "öğrencileri", "şaşırttı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nmod", "nsubj", "obj", "root", "punct"],
-    ),
-    # clausal hem..hem: conjuncts are the predicates, each particle cc
-    # on its own clause's verb
-    dict(
-        text="Kulüp hem stadı yeniledi hem borçları ödedi.",
-        tokens=["Kulüp", "hem", "stadı", "yeniledi", "hem", "borçları",
-                "ödedi", "."],
-        upos=["NOUN", "CCONJ", "NOUN", "VERB", "CCONJ", "NOUN", "VERB",
-              "PUNCT"],
-        heads=[4, 4, 4, 0, 7, 7, 4, 4],
-        deprels=["nsubj", "cc", "obj", "root", "cc", "obj", "conj",
-                 "punct"],
-    ),
-    # derivational-adjective homograph before a bare-Nom host
-    dict(
-        text="Ünlü yönetmenler festivale katıldı.",
-        tokens=["Ünlü", "yönetmenler", "festivale", "katıldı", "."],
-        upos=["ADJ", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["amod", "nsubj", "obl", "root", "punct"],
-    ),
-    # title + participle-homograph surname stays flat in the mention
-    dict(
-        text="Profesör Duran öğrencilerini sınava hazırladı.",
-        tokens=["Profesör", "Duran", "öğrencilerini", "sınava",
-                "hazırladı", "."],
-        upos=["NOUN", "PROPN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 1, 5, 5, 0, 5],
-        deprels=["nsubj", "flat", "obj", "obl", "root", "punct"],
-        ner=["O", "PER", "O", "O", "O", "O"],
-    ),
-    # ---- blind-25 rule pins (fresh sentences, annotated before use) ----
-    # temporal-det time noun is a clause adjunct, never izafet modifier
-    dict(
-        text="Kurum geçen hafta üyelerine yeni kartlar gönderdi.",
-        tokens=["Kurum", "geçen", "hafta", "üyelerine", "yeni",
-                "kartlar", "gönderdi", "."],
-        upos=["NOUN", "ADJ", "NOUN", "NOUN", "ADJ", "NOUN", "VERB",
-              "PUNCT"],
-        heads=[7, 3, 7, 7, 6, 7, 0, 7],
-        deprels=["nsubj", "amod", "obl", "obl", "amod", "obj", "root",
-                 "punct"],
-    ),
-    # det-completed time noun + bare-Nom frequency host are two obls
-    dict(
-        text="Oyuncu bu sezon beşinci kez gol attı.",
-        tokens=["Oyuncu", "bu", "sezon", "beşinci", "kez", "gol",
-                "attı", "."],
-        upos=["NOUN", "DET", "NOUN", "ADJ", "NOUN", "NOUN", "VERB",
-              "PUNCT"],
-        heads=[7, 3, 7, 5, 7, 7, 0, 7],
-        deprels=["nsubj", "det", "obl", "amod", "obl", "obj", "root",
-                 "punct"],
-    ),
-    # -lI adjective keeps ADJ before a copular ol- nominalization
-    dict(
-        text="Komisyon planın sakıncalı olduğunu bildirdi.",
-        tokens=["Komisyon", "planın", "sakıncalı", "olduğunu",
-                "bildirdi", "."],
-        upos=["NOUN", "NOUN", "ADJ", "VERB", "VERB", "PUNCT"],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=["nsubj", "nsubj", "compound", "ccomp", "root",
-                 "punct"],
-    ),
-    # zero-copula correlative adjective chain: first conjunct is root
-    dict(
-        text="Bu kumaş hem ucuz hem dayanıklı.",
-        tokens=["Bu", "kumaş", "hem", "ucuz", "hem", "dayanıklı", "."],
-        upos=["DET", "NOUN", "CCONJ", "ADJ", "CCONJ", "ADJ", "PUNCT"],
-        heads=[2, 4, 4, 0, 6, 4, 4],
-        deprels=["det", "nsubj", "cc", "root", "cc", "conj", "punct"],
-    ),
-    # derivational-adjective homograph stays attributive across DET bir
-    # (sözlü 'oral' vs sözlü 'fiancé(e)')
-    dict(
-        text="Sözlü bir açıklama yeterli olmaz.",
-        tokens=["Sözlü", "bir", "açıklama", "yeterli", "olmaz", "."],
-        upos=["ADJ", "DET", "NOUN", "ADJ", "VERB", "PUNCT"],
-        heads=[3, 3, 5, 5, 0, 5],
-        deprels=["amod", "det", "nsubj", "compound", "root", "punct"],
-    ),
-    # NUM + unit-lIk measure adjective takes the numeral as nummod
-    dict(
-        text="Ekip iki saatlik bir toplantı yaptı.",
-        tokens=["Ekip", "iki", "saatlik", "bir", "toplantı", "yaptı",
-                "."],
-        upos=["NOUN", "NUM", "ADJ", "DET", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 3, 5, 5, 6, 0, 6],
-        deprels=["nsubj", "nummod", "amod", "det", "obj", "root",
-                 "punct"],
-    ),
-    # change-of-state transitive resolves the ambiguous Acc as object
-    dict(
-        text="Üniversite laboratuvarı geliştirdi.",
-        tokens=["Üniversite", "laboratuvarı", "geliştirdi", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[3, 3, 0, 3],
-        deprels=["nsubj", "obj", "root", "punct"],
-    ),
-    # an ADP complement is not a subject candidate for Acc resolution
-    dict(
-        text="Firma öğrenciler için staj programı açtı.",
-        tokens=["Firma", "öğrenciler", "için", "staj", "programı",
-                "açtı", "."],
-        upos=["NOUN", "NOUN", "ADP", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 6, 2, 5, 6, 0, 6],
-        deprels=["nsubj", "obl", "case", "nmod", "obj", "root",
-                 "punct"],
-    ),
-    # --- blind-26 category pins (fresh tuning sentences; see
-    # BENCH.md twenty-sixth-split entry) ---
-    # verb-initial inversion + temporal adverb skipping an adnominal
-    # participle (pins: inversion root, advmod-to-root)
-    dict(
-        text="Açıldı sonunda yenilenen kütüphane.",
-        tokens=["Açıldı", "sonunda", "yenilenen", "kütüphane", "."],
-        upos=["VERB", "ADV", "VERB", "NOUN", "PUNCT"],
-        heads=[0, 1, 4, 1, 1],
-        deprels=["root", "advmod", "acl", "nsubj", "punct"],
-    ),
-    # ki complement + yakında ADV (pins: ki SCONJ mark/ccomp, yakında)
-    dict(
-        text="Doktor diyor ki hasta yakında iyileşecek.",
-        tokens=["Doktor", "diyor", "ki", "hasta", "yakında",
-                "iyileşecek", "."],
-        upos=["NOUN", "VERB", "SCONJ", "NOUN", "ADV", "VERB", "PUNCT"],
-        heads=[2, 0, 6, 6, 6, 2, 2],
-        deprels=["nsubj", "root", "mark", "nsubj", "advmod", "ccomp",
-                 "punct"],
-    ),
-    # aspectual reduplication converb (pins: V+Aor V+Neg+Aor pair)
-    dict(
-        text="Müzakereler biter bitmez anlaşma imzalandı.",
-        tokens=["Müzakereler", "biter", "bitmez", "anlaşma",
-                "imzalandı", "."],
-        upos=["NOUN", "VERB", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 2, 5, 0, 5],
-        deprels=["nsubj", "advcl", "compound", "nsubj", "root", "punct"],
-    ),
-    # -DIkçA with genitive-izafet matrix subject (pins: Gen->P3sg+Nom)
-    dict(
-        text="Fırtına sürdükçe şehrin trafiği kilitlendi.",
-        tokens=["Fırtına", "sürdükçe", "şehrin", "trafiği",
-                "kilitlendi", "."],
-        upos=["NOUN", "VERB", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "advcl", "nmod", "nsubj", "root", "punct"],
-    ),
-    # question particle mi after -Abil future (pins: Ques class bonus)
-    dict(
-        text="Proje zamanında bitebilir mi?",
-        tokens=["Proje", "zamanında", "bitebilir", "mi", "?"],
-        upos=["NOUN", "NOUN", "VERB", "AUX", "PUNCT"],
-        heads=[3, 3, 0, 3, 3],
-        deprels=["nsubj", "obl", "root", "aux", "punct"],
-    ),
-    # değil over ADJ predicate (pins: AUX cop, nominal root)
-    dict(
-        text="Bu yöntem güvenli değil.",
-        tokens=["Bu", "yöntem", "güvenli", "değil", "."],
-        upos=["DET", "NOUN", "ADJ", "AUX", "PUNCT"],
-        heads=[2, 3, 0, 3, 3],
-        deprels=["det", "nsubj", "root", "cop", "punct"],
-    ),
-    # inflected değildi (pins: _NEG_COPULAS paradigm)
-    dict(
-        text="Sonuçlar kesin değildi.",
-        tokens=["Sonuçlar", "kesin", "değildi", "."],
-        upos=["NOUN", "ADJ", "AUX", "PUNCT"],
-        heads=[2, 0, 2, 2],
-        deprels=["nsubj", "root", "cop", "punct"],
-    ),
-    # causative with dative causee
-    dict(
-        text="Müdür raporu asistanına yazdırdı.",
-        tokens=["Müdür", "raporu", "asistanına", "yazdırdı", "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 4],
-        deprels=["nsubj", "obj", "obl", "root", "punct"],
-    ),
-    # olarak secondary predicate over an Acc pronoun (pins: olarak ADP,
-    # PRON never re-resolved to the numeral homograph)
-    dict(
-        text="Dernek onu sözcü olarak görevlendirdi.",
-        tokens=["Dernek", "onu", "sözcü", "olarak", "görevlendirdi",
-                "."],
-        upos=["NOUN", "PRON", "NOUN", "ADP", "VERB", "PUNCT"],
-        heads=[5, 5, 5, 3, 0, 5],
-        deprels=["nsubj", "obj", "obl", "case", "root", "punct"],
-    ),
-    # partitive hiçbiri with genitive host
-    dict(
-        text="Adayların hiçbiri sınavı geçemedi.",
-        tokens=["Adayların", "hiçbiri", "sınavı", "geçemedi", "."],
-        upos=["NOUN", "PRON", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nmod", "nsubj", "obj", "root", "punct"],
-    ),
-    # gibi simile under ADJ+past-copula root
-    dict(
-        text="Oda buz gibi soğuktu.",
-        tokens=["Oda", "buz", "gibi", "soğuktu", "."],
-        upos=["NOUN", "NOUN", "ADP", "ADJ", "PUNCT"],
-        heads=[4, 4, 2, 0, 4],
-        deprels=["nsubj", "obl", "case", "root", "punct"],
-    ),
-    # evidential zero-copula ADJ root (pins: Zero+Narr family)
-    dict(
-        text="Köy o yıllarda çok fakirmiş.",
-        tokens=["Köy", "o", "yıllarda", "çok", "fakirmiş", "."],
-        upos=["NOUN", "DET", "NOUN", "ADV", "ADJ", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "det", "obl", "advmod", "root", "punct"],
-    ),
-    # -mAksIzIn converb (pins: WithoutHavingDoneSo rows)
-    dict(
-        text="Kulüp üyelere sormaksızın tüzüğü değiştirdi.",
-        tokens=["Kulüp", "üyelere", "sormaksızın", "tüzüğü",
-                "değiştirdi", "."],
-        upos=["NOUN", "NOUN", "VERB", "NOUN", "VERB", "PUNCT"],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=["nsubj", "obl", "advcl", "obj", "root", "punct"],
-    ),
-    # pronominal -ki comparative (pins: headless -ki PRON obl)
-    dict(
-        text="Komşunun bahçesi seninkinden daha genişti.",
-        tokens=["Komşunun", "bahçesi", "seninkinden", "daha",
-                "genişti", "."],
-        upos=["NOUN", "NOUN", "PRON", "ADV", "ADJ", "PUNCT"],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=["nmod", "nsubj", "obl", "advmod", "root", "punct"],
-    ),
-    # ya .. ya da correlative (pins: ya cc, da fixed)
-    dict(
-        text="Şirket ya fiyatları indirecek ya da mağazayı kapatacak.",
-        tokens=["Şirket", "ya", "fiyatları", "indirecek", "ya", "da",
-                "mağazayı", "kapatacak", "."],
-        upos=["NOUN", "CCONJ", "NOUN", "VERB", "CCONJ", "CCONJ",
-              "NOUN", "VERB", "PUNCT"],
-        heads=[4, 4, 4, 0, 8, 5, 8, 4, 4],
-        deprels=["nsubj", "cc", "obj", "root", "cc", "fixed", "obj",
-                 "conj", "punct"],
-    ),
-    # -Iş nominalization izafet subject (pins: Inf3 obliques)
-    dict(
-        text="Takımın yükselişi taraftarları sevindirdi.",
-        tokens=["Takımın", "yükselişi", "taraftarları", "sevindirdi",
-                "."],
-        upos=["NOUN", "NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 4, 4, 0, 4],
-        deprels=["nmod", "nsubj", "obj", "root", "punct"],
-    ),
-    # yerine over infinitive (pins: yerine ADP after Inf)
-    dict(
-        text="Belediye yol yapmak yerine parkları onardı.",
-        tokens=["Belediye", "yol", "yapmak", "yerine", "parkları",
-                "onardı", "."],
-        upos=["NOUN", "NOUN", "VERB", "ADP", "NOUN", "VERB", "PUNCT"],
-        heads=[6, 3, 6, 3, 6, 0, 6],
-        deprels=["nsubj", "obj", "advcl", "case", "obj", "root",
-                 "punct"],
-    ),
-    # plural possessive nominal predicate with past copula
-    dict(
-        text="Bunlar mahallenin en eski binalarıydı.",
-        tokens=["Bunlar", "mahallenin", "en", "eski", "binalarıydı",
-                "."],
-        upos=["PRON", "NOUN", "ADV", "ADJ", "NOUN", "PUNCT"],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=["nsubj", "nmod", "advmod", "amod", "root", "punct"],
-    ),
-    # irregular su possessive izafet (pins: _IRREGULAR_EXACT)
-    dict(
-        text="Kuyunun suyu çekildi.",
-        tokens=["Kuyunun", "suyu", "çekildi", "."],
-        upos=["NOUN", "NOUN", "VERB", "PUNCT"],
-        heads=[2, 3, 0, 3],
-        deprels=["nmod", "nsubj", "root", "punct"],
-    ),
-    # --- blind-27 category pins (fresh tuning sentences; see
-    # BENCH.md twenty-seventh-split entry) ---
-    dict(
-        text='Kulüp müdürü Aydın basın toplantısı düzenledi.',
-        tokens=['Kulüp', 'müdürü', 'Aydın', 'basın', 'toplantısı', 'düzenledi', '.'],
-        upos=['NOUN', 'NOUN', 'PROPN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 6, 2, 5, 6, 0, 6],
-        deprels=['nmod', 'nsubj', 'flat', 'nmod', 'obj', 'root', 'punct'],
-        ner=['O', 'O', 'PER', 'O', 'O', 'O', 'O'],
-    ),
-    dict(
-        text='Sezon sonunda şampiyon belli olacak.',
-        tokens=['Sezon', 'sonunda', 'şampiyon', 'belli', 'olacak', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'ADJ', 'VERB', 'PUNCT'],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=['nmod', 'obl', 'nsubj', 'compound', 'root', 'punct'],
-    ),
-    dict(
-        text='Misafirler ayrıldıklarında ev boşaldı.',
-        tokens=['Misafirler', 'ayrıldıklarında', 'ev', 'boşaldı', '.'],
-        upos=['NOUN', 'VERB', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 4, 4, 0, 4],
-        deprels=['nsubj', 'advcl', 'nsubj', 'root', 'punct'],
-    ),
-    dict(
-        text='Kurumlar raporları da yayımlamaya başladı.',
-        tokens=['Kurumlar', 'raporları', 'da', 'yayımlamaya', 'başladı', '.'],
-        upos=['NOUN', 'NOUN', 'CCONJ', 'VERB', 'VERB', 'PUNCT'],
-        heads=[5, 4, 2, 5, 0, 5],
-        deprels=['nsubj', 'obj', 'advmod', 'ccomp', 'root', 'punct'],
-    ),
-    dict(
-        text='Hafta sonunda kütüphane açık kalacak.',
-        tokens=['Hafta', 'sonunda', 'kütüphane', 'açık', 'kalacak', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'ADJ', 'VERB', 'PUNCT'],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=['nmod', 'obl', 'nsubj', 'compound', 'root', 'punct'],
-    ),
-    dict(
-        text='Yolcular otobüse bindiğinde şoför anons yaptı.',
-        tokens=['Yolcular', 'otobüse', 'bindiğinde', 'şoför', 'anons', 'yaptı', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[3, 3, 6, 6, 6, 0, 6],
-        deprels=['nsubj', 'obl', 'advcl', 'nsubj', 'obj', 'root', 'punct'],
-    ),
-    # --- blind-28 category pins (fresh tuning sentences; see
-    # BENCH.md twenty-eighth-split entry) ---
-    dict(
-        text='Plan kağıt üzerinde kusursuz görünüyor.',
-        tokens=['Plan', 'kağıt', 'üzerinde', 'kusursuz', 'görünüyor', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'ADJ', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obl', 'compound', 'root', 'punct'],
-    ),
-    dict(
-        text='Soğuk havaya rağmen inşaat devam etti.',
-        tokens=['Soğuk', 'havaya', 'rağmen', 'inşaat', 'devam', 'etti', '.'],
-        upos=['ADJ', 'NOUN', 'ADP', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 6, 2, 6, 6, 0, 6],
-        deprels=['amod', 'obl', 'case', 'nsubj', 'compound', 'root', 'punct'],
-    ),
-    dict(
-        text='Belgesel festivalde büyük ödül kazandı.',
-        tokens=['Belgesel', 'festivalde', 'büyük', 'ödül', 'kazandı', '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=['nsubj', 'obl', 'amod', 'obj', 'root', 'punct'],
-    ),
-    dict(
-        text='Yabancı yatırımcılarla görüşmeler sürüyor.',
-        tokens=['Yabancı', 'yatırımcılarla', 'görüşmeler', 'sürüyor', '.'],
-        upos=['ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 4, 4, 0, 4],
-        deprels=['amod', 'obl', 'nsubj', 'root', 'punct'],
-    ),
-    dict(
-        text='Aşırı hıza karşı denetimler artırıldı.',
-        tokens=['Aşırı', 'hıza', 'karşı', 'denetimler', 'artırıldı', '.'],
-        upos=['ADJ', 'NOUN', 'ADP', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 2, 5, 0, 5],
-        deprels=['amod', 'obl', 'case', 'nsubj', 'root', 'punct'],
-    ),
-    # --- blind-29 category pins (fresh tuning sentences; see
-    # BENCH.md twenty-ninth-split entry) ---
-    dict(
-        text='Ekip güneş paneli takmayı öneriyor.',
-        tokens=['Ekip', 'güneş', 'paneli', 'takmayı', 'öneriyor', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'VERB', 'PUNCT'],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obj', 'ccomp', 'root', 'punct'],
-    ),
-    dict(
-        text='Şirket dev bir tesis kuracak.',
-        tokens=['Şirket', 'dev', 'bir', 'tesis', 'kuracak', '.'],
-        upos=['NOUN', 'ADJ', 'DET', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'det', 'obj', 'root', 'punct'],
-    ),
-    dict(
-        text='Mühendisler depreme dayanıklı binalar tasarlıyor.',
-        tokens=['Mühendisler', 'depreme', 'dayanıklı', 'binalar', 'tasarlıyor', '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=['nsubj', 'obl', 'amod', 'obj', 'root', 'punct'],
-    ),
-    dict(
-        text='Uzmanlar bulguları ayrıntılı biçimde tartıştı.',
-        tokens=['Uzmanlar', 'bulguları', 'ayrıntılı', 'biçimde', 'tartıştı', '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=['nsubj', 'obj', 'amod', 'obl', 'root', 'punct'],
-    ),
-    dict(
-        text='Bölgede hızla yayılan salgın için önlem alındı.',
-        tokens=['Bölgede', 'hızla', 'yayılan', 'salgın', 'için', 'önlem', 'alındı', '.'],
-        upos=['NOUN', 'ADV', 'VERB', 'NOUN', 'ADP', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[7, 3, 4, 7, 4, 7, 0, 7],
-        deprels=['obl', 'advmod', 'acl', 'obl', 'case', 'nsubj', 'root', 'punct'],
-    ),
-    # --- blind-30 category pins (fresh tuning sentences; see
-    # BENCH.md thirtieth-split entry) ---
-    dict(
-        text='Şirket çalışanlara primler de ödedi.',
-        tokens=['Şirket', 'çalışanlara', 'primler', 'de', 'ödedi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'CCONJ', 'VERB', 'PUNCT'],
-        heads=[5, 5, 5, 3, 0, 5],
-        deprels=['nsubj', 'obl', 'obj', 'advmod', 'root', 'punct'],
-    ),
-    dict(
-        text='Hava giderek soğuyor.',
-        tokens=['Hava', 'giderek', 'soğuyor', '.'],
-        upos=['NOUN', 'ADV', 'VERB', 'PUNCT'],
-        heads=[3, 3, 0, 3],
-        deprels=['nsubj', 'advmod', 'root', 'punct'],
-    ),
-    dict(
-        text='İşe giderek gazete aldı.',
-        tokens=['İşe', 'giderek', 'gazete', 'aldı', '.'],
-        upos=['NOUN', 'VERB', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 4, 4, 0, 4],
-        deprels=['obl', 'advcl', 'obj', 'root', 'punct'],
-    ),
-    # --- blind-31 category pins (fresh tuning sentences; see
-    # BENCH.md thirty-first-split entry) ---
-    dict(
-        text='Ülke genelinde su tüketimi arttı.',
-        tokens=['Ülke', 'genelinde', 'su', 'tüketimi', 'arttı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=['nmod', 'obl', 'nmod', 'nsubj', 'root', 'punct'],
-    ),
-    dict(
-        text='Doğalgaz fiyatları kışın ucuzladı.',
-        tokens=['Doğalgaz', 'fiyatları', 'kışın', 'ucuzladı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 4, 4, 0, 4],
-        deprels=['nmod', 'nsubj', 'obl', 'root', 'punct'],
-    ),
-    # --- blind-32 category pins (fresh tuning sentences; see
-    # BENCH.md thirty-second-split entry) ---
-    # yap-complex: the event nominal fills yap's own object slot
-    # (kaza yaptı), so the izafet subject stays nsubj
-    dict(
-        text='Yolcu otobüsü mola yerinde kaza yaptı.',
-        tokens=['Yolcu', 'otobüsü', 'mola', 'yerinde', 'kaza', 'yaptı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 6, 4, 6, 6, 0, 6],
-        deprels=['nmod', 'nsubj', 'nmod', 'obl', 'obj', 'root', 'punct'],
-    ),
-    # possessed-head izafet blocks the attributive homograph reading
-    # (dolu TANELERİ = hail stones, not "full" + noun)
-    dict(
-        text='Dolu taneleri araç camlarını kırdı.',
-        tokens=['Dolu', 'taneleri', 'araç', 'camlarını', 'kırdı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=['nmod', 'nsubj', 'nmod', 'obj', 'root', 'punct'],
-    ),
-    dict(
-        text='Hasta ziyaretleri kısıtlandı.',
-        tokens=['Hasta', 'ziyaretleri', 'kısıtlandı', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 0, 3],
-        deprels=['nmod', 'nsubj', 'root', 'punct'],
-    ),
-    # reduplicated bare-Nom nouns are manner adverbials (adım adım)
-    dict(
-        text='Usta işi adım adım anlattı.',
-        tokens=['Usta', 'işi', 'adım', 'adım', 'anlattı', '.'],
-        upos=['NOUN', 'NOUN', 'ADV', 'ADV', 'VERB', 'PUNCT'],
-        heads=[5, 5, 5, 3, 0, 5],
-        deprels=['nsubj', 'obj', 'advmod', 'compound', 'root', 'punct'],
-    ),
-    # bare "geri" directly before a verb is the directional particle
-    dict(
-        text='Belediye otobüsleri geri çağırdı.',
-        tokens=['Belediye', 'otobüsleri', 'geri', 'çağırdı', '.'],
-        upos=['NOUN', 'NOUN', 'ADV', 'VERB', 'PUNCT'],
-        heads=[4, 4, 4, 0, 4],
-        deprels=['nsubj', 'obj', 'advmod', 'root', 'punct'],
-    ),
-    # --- round-4 probe pins: Acc/P3sg homograph after a case-less word
-    # (no izafet possessor -> accusative object), with an izafet-oblique
-    # phrase intervening (rehber eşliğinde)
-    dict(
-        text='Turistler antik kenti rehber eşliğinde gezdi.',
-        tokens=['Turistler', 'antik', 'kenti', 'rehber', 'eşliğinde',
-                'gezdi', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 3, 6, 5, 6, 0, 6],
-        deprels=['nsubj', 'amod', 'obj', 'nmod', 'obl', 'root', 'punct'],
-    ),
-    # terrain -lIk adjective inside a locative phrase (ormanlık alanda)
-    dict(
-        text='Polis kayıp çocuğu ormanlık alanda buldu.',
-        tokens=['Polis', 'kayıp', 'çocuğu', 'ormanlık', 'alanda',
-                'buldu', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 3, 6, 5, 6, 0, 6],
-        deprels=['nsubj', 'amod', 'obj', 'amod', 'obl', 'root', 'punct'],
-    ),
-    # possessed-plural -mA after a bare noun is the izafet compound
-    # (öğretmen atamaları), not a verbal Inf2 clause
-    dict(
-        text='Bakanlık öğretmen atamalarını eylül ayına erteledi.',
-        tokens=['Bakanlık', 'öğretmen', 'atamalarını', 'eylül', 'ayına',
-                'erteledi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 3, 6, 5, 6, 0, 6],
-        deprels=['nsubj', 'nmod', 'obj', 'nmod', 'obl', 'root', 'punct'],
-    ),
-    # drop+voicing stem (kayıp -> kaybı) as experiencer-verb object
-    dict(
-        text='Çiftçiler kuraklık nedeniyle ürün kaybı yaşadı.',
-        tokens=['Çiftçiler', 'kuraklık', 'nedeniyle', 'ürün', 'kaybı',
-                'yaşadı', '.'],
-        upos=['NOUN', 'NOUN', 'ADP', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 6, 2, 5, 6, 0, 6],
-        deprels=['nsubj', 'obl', 'case', 'nmod', 'obj', 'root', 'punct'],
-    ),
-    # LVC nominal stays the noun before ver- (karar verdi), per the
-    # frozen light-verb obj convention
-    dict(
-        text='Mahkeme sanığın tahliyesine karar verdi.',
-        tokens=['Mahkeme', 'sanığın', 'tahliyesine', 'karar', 'verdi',
-                '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obl', 'obj', 'root', 'punct'],
-    ),
-    # attributive -lI before a case-marked noun with the subject filled
-    dict(
-        text='Teknisyenler arızalı hattı gece boyunca onardı.',
-        tokens=['Teknisyenler', 'arızalı', 'hattı', 'gece', 'boyunca',
-                'onardı', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'ADP', 'VERB', 'PUNCT'],
-        heads=[6, 3, 6, 6, 4, 0, 6],
-        deprels=['nsubj', 'amod', 'obj', 'obl', 'case', 'root', 'punct'],
-    ),
-    # lexicalized -Ar causative as a dictionary verb (çıkar- Fut)
-    dict(
-        text='Sanatçı yeni albümünü gelecek ay çıkaracak.',
-        tokens=['Sanatçı', 'yeni', 'albümünü', 'gelecek', 'ay',
-                'çıkaracak', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 3, 6, 5, 6, 0, 6],
-        deprels=['nsubj', 'amod', 'obj', 'amod', 'obl', 'root', 'punct'],
-    ),
-    # ---- blind-34 miss categories, pinned with fresh lexemes -----------
-    # open-class plural is a subject, not an izafet possessor: the Acc
-    # homograph after it is the object
-    dict(
-        text='Öğretmenler sınavı ileri bir tarihe erteledi.',
-        tokens=['Öğretmenler', 'sınavı', 'ileri', 'bir', 'tarihe',
-                'erteledi', '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'DET', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 6, 5, 5, 6, 0, 6],
-        deprels=['nsubj', 'obj', 'amod', 'det', 'obl', 'root', 'punct'],
-    ),
-    # ... while the closed institutional class keeps the plural izafet
-    dict(
-        text='Bakanlar kurulu ekonomik önlemleri görüştü.',
-        tokens=['Bakanlar', 'kurulu', 'ekonomik', 'önlemleri',
-                'görüştü', '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=['nmod', 'nsubj', 'amod', 'obj', 'root', 'punct'],
-    ),
-    # completion-class unaccusative hosts its -DIktAn sonra subject
-    dict(
-        text='Konser bittikten sonra kalabalık dağıldı.',
-        tokens=['Konser', 'bittikten', 'sonra', 'kalabalık', 'dağıldı',
-                '.'],
-        upos=['NOUN', 'VERB', 'ADP', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 2, 5, 0, 5],
-        deprels=['nsubj', 'advcl', 'case', 'nsubj', 'root', 'punct'],
-    ),
-    # weather-intransitive aç with a two-nominal converb clause: the
-    # adjacent weather noun is the converb's subject, the clause-initial
-    # plural the matrix subject
-    dict(
-        text='Yolcular hava açınca güverteye çıktı.',
-        tokens=['Yolcular', 'hava', 'açınca', 'güverteye', 'çıktı',
-                '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nsubj', 'advcl', 'obl', 'root', 'punct'],
-    ),
-    # noun/adjective homograph stays attributive before a deverbal host
-    # governed by a grammaticalized ADP
-    dict(
-        text='Kaçak kullanım nedeniyle elektrik kesintileri arttı.',
-        tokens=['Kaçak', 'kullanım', 'nedeniyle', 'elektrik',
-                'kesintileri', 'arttı', '.'],
-        upos=['ADJ', 'NOUN', 'ADP', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 6, 2, 5, 6, 0, 6],
-        deprels=['amod', 'obl', 'case', 'nmod', 'nsubj', 'root',
-                 'punct'],
-    ),
-    # amod lands on the izafet compound HEAD even under a following
-    # grammaticalized ADP
-    dict(
-        text='Ekipler şiddetli kar yağışı yüzünden yola çıkamadı.',
-        tokens=['Ekipler', 'şiddetli', 'kar', 'yağışı', 'yüzünden',
-                'yola', 'çıkamadı', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'ADP', 'NOUN', 'VERB',
-              'PUNCT'],
-        heads=[7, 4, 4, 7, 4, 7, 0, 7],
-        deprels=['nsubj', 'amod', 'nmod', 'obl', 'case', 'obl', 'root',
-                 'punct'],
-    ),
-    # ---- pre-blind-35 probe-sweep categories, pinned ------------------
-    # sentence-initial bare time noun as the ONLY subject candidate
-    dict(
-        text='Sezon bu yıl erken bitti.',
-        tokens=['Sezon', 'bu', 'yıl', 'erken', 'bitti', '.'],
-        upos=['NOUN', 'DET', 'NOUN', 'ADV', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'det', 'obl', 'advmod', 'root', 'punct'],
-    ),
-    dict(
-        text='Hafta yoğun geçti.',
-        tokens=['Hafta', 'yoğun', 'geçti', '.'],
-        upos=['NOUN', 'ADV', 'VERB', 'PUNCT'],
-        heads=[3, 3, 0, 3],
-        deprels=['nsubj', 'advmod', 'root', 'punct'],
-    ),
-    # son-LVC frames: the nominal, not the adjective 'last'
-    dict(
-        text='Ekip çalışmaya son verdi.',
-        tokens=['Ekip', 'çalışmaya', 'son', 'verdi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 4, 4, 0, 4],
-        deprels=['nsubj', 'obl', 'obj', 'root', 'punct'],
-    ),
-    dict(
-        text='Tartışma kısa sürede son buldu.',
-        tokens=['Tartışma', 'kısa', 'sürede', 'son', 'buldu', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'obl', 'obj', 'root', 'punct'],
-    ),
-    # loan-î citation adjective before a plain finite verb is the Acc
-    # object
-    dict(
-        text='Yetkililer merkezi kapattı.',
-        tokens=['Yetkililer', 'merkezi', 'kapattı', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[3, 3, 0, 3],
-        deprels=['nsubj', 'obj', 'root', 'punct'],
-    ),
-    # the asker/resim/din loan-î trio reads attributive before nominal
-    # hosts
-    dict(
-        text='Bina askeri birliklere devredildi.',
-        tokens=['Bina', 'askeri', 'birliklere', 'devredildi', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'amod', 'obl', 'root', 'punct'],
-    ),
-    dict(
-        text='Bakanlık resmi rakamları açıkladı.',
-        tokens=['Bakanlık', 'resmi', 'rakamları', 'açıkladı', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'amod', 'obj', 'root', 'punct'],
-    ),
-    dict(
-        text='Dernek dini bayramlarda yardım dağıttı.',
-        tokens=['Dernek', 'dini', 'bayramlarda', 'yardım', 'dağıttı',
-                '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'obl', 'obj', 'root', 'punct'],
-    ),
-    # adnominal percentage frame modifies its nominal
-    dict(
-        text='Yüzde beş artış bekleniyor.',
-        tokens=['Yüzde', 'beş', 'artış', 'bekleniyor', '.'],
-        upos=['NOUN', 'NUM', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[3, 1, 4, 0, 4],
-        deprels=['nmod', 'nummod', 'nsubj', 'root', 'punct'],
-    ),
-    # a conjunct shares its partner's Acc: both are objects
-    dict(
-        text='Belediye parkları ve yolları yeniledi.',
-        tokens=['Belediye', 'parkları', 've', 'yolları', 'yeniledi',
-                '.'],
-        upos=['NOUN', 'NOUN', 'CCONJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 4, 2, 0, 5],
-        deprels=['nsubj', 'obj', 'cc', 'conj', 'root', 'punct'],
-    ),
-    # ---- blind-35 miss categories, pinned with fresh lexemes -----------
-    # denominal -lA transitive with coordinated Acc homographs, under an
-    # izafet subject
-    dict(
-        text='Temizlik ekibi camları ve zeminleri sildi.',
-        tokens=['Temizlik', 'ekibi', 'camları', 've', 'zeminleri',
-                'sildi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'CCONJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 6, 6, 5, 3, 0, 6],
-        deprels=['nmod', 'nsubj', 'obj', 'cc', 'conj', 'root', 'punct'],
-    ),
-    # the resmi sub-class stays attributive before a DEVERBAL noun host
-    dict(
-        text='Heyet resmi görüşmelere katıldı.',
-        tokens=['Heyet', 'resmi', 'görüşmelere', 'katıldı', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'amod', 'obl', 'root', 'punct'],
-    ),
-    # doğrudan: lexicalized adverb before case-marked material ...
-    dict(
-        text='Üretici sebzeleri doğrudan pazara getiriyor.',
-        tokens=['Üretici', 'sebzeleri', 'doğrudan', 'pazara',
-                'getiriyor', '.'],
-        upos=['NOUN', 'NOUN', 'ADV', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 5, 5, 0, 5],
-        deprels=['nsubj', 'obj', 'advmod', 'obl', 'root', 'punct'],
-    ),
-    # ... and attributive before a bare nominal
-    dict(
-        text='Şirket doğrudan satış modeline geçti.',
-        tokens=['Şirket', 'doğrudan', 'satış', 'modeline', 'geçti',
-                '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'nmod', 'obl', 'root', 'punct'],
-    ),
-    # ---- round-4 valency-inventory sweep, pinned -----------------------
-    # physical-process unaccusative (yan-)
-    dict(
-        text='Depo yangında tamamen yandı.',
-        tokens=['Depo', 'yangında', 'tamamen', 'yandı', '.'],
-        upos=['NOUN', 'NOUN', 'ADV', 'VERB', 'PUNCT'],
-        heads=[4, 4, 4, 0, 4],
-        deprels=['nsubj', 'obl', 'advmod', 'root', 'punct'],
-    ),
-    # -lAş 'Become' derivation is structurally intransitive: the izafet
-    # subject survives even for an unlisted -lAş verb
-    dict(
-        text='Ev fiyatları pahalılaştı.',
-        tokens=['Ev', 'fiyatları', 'pahalılaştı', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 0, 3],
-        deprels=['nmod', 'nsubj', 'root', 'punct'],
-    ),
-    # sweep transitives take the Acc-homograph object
-    dict(
-        text='Kriz sektörü sarstı.',
-        tokens=['Kriz', 'sektörü', 'sarstı', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[3, 3, 0, 3],
-        deprels=['nsubj', 'obj', 'root', 'punct'],
-    ),
-    dict(
-        text='Uzmanlar durumu değerlendirdi.',
-        tokens=['Uzmanlar', 'durumu', 'değerlendirdi', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[3, 3, 0, 3],
-        deprels=['nsubj', 'obj', 'root', 'punct'],
-    ),
-    # ---- blind-36 miss categories, pinned with fresh lexemes -----------
-    # agentive -CI plural via the productive suffix paradigm
-    dict(
-        text='Oduncular kütükleri ambara taşıdı.',
-        tokens=['Oduncular', 'kütükleri', 'ambara', 'taşıdı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 4, 4, 0, 4],
-        deprels=['nsubj', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # possessed-Nom temporal izafet head is a subject, not a time adjunct
-    dict(
-        text='Av sezonu yarın başlıyor.',
-        tokens=['Av', 'sezonu', 'yarın', 'başlıyor', '.'],
-        upos=['NOUN', 'NOUN', 'ADV', 'VERB', 'PUNCT'],
-        heads=[2, 4, 4, 0, 4],
-        deprels=['nmod', 'nsubj', 'advmod', 'root', 'punct'],
-    ),
-    # kuruluyor is kur+Pass, not the rare kurula- 'towel-dry'
-    dict(
-        text='Sahne konser için yeniden kuruluyor.',
-        tokens=['Sahne', 'konser', 'için', 'yeniden', 'kuruluyor',
-                '.'],
-        upos=['NOUN', 'NOUN', 'ADP', 'ADV', 'VERB', 'PUNCT'],
-        heads=[5, 5, 2, 5, 0, 5],
-        deprels=['nsubj', 'obl', 'case', 'advmod', 'root', 'punct'],
-    ),
-    # fossilized -evi compound stems
-    dict(
-        text='Huzurevi yeni sakinlerini ağırladı.',
-        tokens=['Huzurevi', 'yeni', 'sakinlerini', 'ağırladı', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'amod', 'obj', 'root', 'punct'],
-    ),
-    # fossilized yurtdışı P3sg never hosts a genitive: the Gen is the
-    # nominalization's subject
-    dict(
-        text='Şirket mühendislerin yurtdışına taşınmasını önledi.',
-        tokens=['Şirket', 'mühendislerin', 'yurtdışına',
-                'taşınmasını', 'önledi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'VERB', 'PUNCT'],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=['nsubj', 'nsubj', 'obl', 'ccomp', 'root', 'punct'],
-    ),
-    # deputy/agent role nouns select persons (possessed-title flat)
-    dict(
-        text='Başkan vekili Arıkan projeyi tanıttı.',
-        tokens=['Başkan', 'vekili', 'Arıkan', 'projeyi', 'tanıttı',
-                '.'],
-        upos=['NOUN', 'NOUN', 'PROPN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 2, 5, 0, 5],
-        deprels=['nmod', 'nsubj', 'flat', 'obj', 'root', 'punct'],
-        ner=['O', 'O', 'PER', 'O', 'O', 'O'],
-    ),
-    # zero-copula prohibition predicate over an infinitive csubj
-    dict(
-        text='Parkta mangal yakmak yasak.',
-        tokens=['Parkta', 'mangal', 'yakmak', 'yasak', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'ADJ', 'PUNCT'],
-        heads=[3, 3, 4, 0, 4],
-        deprels=['obl', 'obj', 'csubj', 'root', 'punct'],
-    ),
-    # sentence-initial citation adjective before a genitive with no
-    # other subject candidate is the subject
-    dict(
-        text='Müzikal seyircinin yoğun ilgisiyle uzatıldı.',
-        tokens=['Müzikal', 'seyircinin', 'yoğun', 'ilgisiyle',
-                'uzatıldı', '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'amod', 'obl', 'root', 'punct'],
-    ),
-    # mid-sentence passive Narr participle heads a relative
-    dict(
-        text='Manav dondurulmuş ürünleri ayrı dolapta tutuyor.',
-        tokens=['Manav', 'dondurulmuş', 'ürünleri', 'ayrı', 'dolapta',
-                'tutuyor', '.'],
-        upos=['NOUN', 'VERB', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 3, 6, 5, 6, 0, 6],
-        deprels=['nsubj', 'acl', 'obj', 'amod', 'obl', 'root',
-                 'punct'],
-    ),
-    # material nouns modify as NOUN+nmod
-    dict(
-        text='Kaynakçı demir kapıları yeniledi.',
-        tokens=['Kaynakçı', 'demir', 'kapıları', 'yeniledi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'nmod', 'obj', 'root', 'punct'],
-    ),
-    # ---- blind-37 miss categories, pinned with fresh lexemes -----------
-    # zincirleme chain into an overtly possessed Acc, subject on the left
-    dict(
-        text='Devlet tarım sigortası primlerini artırdı.',
-        tokens=['Devlet', 'tarım', 'sigortası', 'primlerini',
-                'artırdı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'nmod', 'obj', 'root', 'punct'],
-    ),
-    # deverbal -mAlI adjective beats the necessitative before a nominal
-    dict(
-        text='Takım anlaşmalı ayrılığı duyurdu.',
-        tokens=['Takım', 'anlaşmalı', 'ayrılığı', 'duyurdu', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'amod', 'obj', 'root', 'punct'],
-    ),
-    # fossilized P3sg compound stems as izafet modifiers
-    dict(
-        text='Ayakkabı mağazası sezon indirimini başlattı.',
-        tokens=['Ayakkabı', 'mağazası', 'sezon', 'indirimini',
-                'başlattı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=['nmod', 'nsubj', 'nmod', 'obj', 'root', 'punct'],
-    ),
-    # ---- pre-blind-38 probe-sweep categories, pinned -------------------
-    # gel-support construction keeps its nominal as compound
-    dict(
-        text='Voleybol takımı deplasmanda galip geldi.',
-        tokens=['Voleybol', 'takımı', 'deplasmanda', 'galip', 'geldi',
-                '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=['nmod', 'nsubj', 'obl', 'compound', 'root', 'punct'],
-    ),
-    # doluyor is dol- 'fill up', not dola- 'wrap'; possessed time
-    # izafet stays the oblique
-    dict(
-        text='Düğün salonu hafta sonları doluyor.',
-        tokens=['Düğün', 'salonu', 'hafta', 'sonları', 'doluyor', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=['nmod', 'nsubj', 'nmod', 'obl', 'root', 'punct'],
-    ),
-    # Adverb/Adj dual stem is attributive before a bare nominal
-    dict(
-        text='Açık hava sineması sahilde kuruldu.',
-        tokens=['Açık', 'hava', 'sineması', 'sahilde', 'kuruldu', '.'],
-        upos=['ADJ', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[3, 3, 5, 5, 0, 5],
-        deprels=['amod', 'nmod', 'nsubj', 'obl', 'root', 'punct'],
-    ),
-    # ---- blind-38 miss categories, pinned with fresh lexemes -----------
-    # temporal-manner adjective scopes over the light-verb complex
-    dict(
-        text='Doktor hastalığı erken teşhis etti.',
-        tokens=['Doktor', 'hastalığı', 'erken', 'teşhis', 'etti', '.'],
-        upos=['NOUN', 'NOUN', 'ADV', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 5, 5, 0, 5],
-        deprels=['nsubj', 'obj', 'advmod', 'compound', 'root',
-                 'punct'],
-    ),
-    # a POSSESSED plural is a legitimate zincirleme link
-    dict(
-        text='Okul servisleri güzergahları değişti.',
-        tokens=['Okul', 'servisleri', 'güzergahları', 'değişti', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 4, 0, 4],
-        deprels=['nmod', 'nmod', 'nsubj', 'root', 'punct'],
-    ),
-    # lexicalized bare weather juxtaposition
-    dict(
-        text='Sağanak yağmur sürücüleri zorladı.',
-        tokens=['Sağanak', 'yağmur', 'sürücüleri', 'zorladı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 4, 4, 0, 4],
-        deprels=['nmod', 'nsubj', 'obj', 'root', 'punct'],
-    ),
-    # ---- fourth probe sweep, pinned -------------------------------------
-    # -Im deverbal nouns never vowel-drop (aktarma != aktarım+a)
-    dict(
-        text='Yolcular aktarma istasyonunda bekliyor.',
-        tokens=['Yolcular', 'aktarma', 'istasyonunda', 'bekliyor',
-                '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'nmod', 'obl', 'root', 'punct'],
-    ),
-    # benefit relational heads take plural possessors
-    dict(
-        text='Sanatçılar depremzedeler yararına konser verdi.',
-        tokens=['Sanatçılar', 'depremzedeler', 'yararına', 'konser',
-                'verdi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obl', 'obj', 'root', 'punct'],
-    ),
-    # ---- blind-39 arc categories, pinned with fresh lexemes ------------
-    # bare singular link into a two-step izafet chain, subject on left
-    dict(
-        text='Üyeler aidat ödeme planına itiraz etti.',
-        tokens=['Üyeler', 'aidat', 'ödeme', 'planına', 'itiraz',
-                'etti', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 3, 4, 6, 6, 0, 6],
-        deprels=['nsubj', 'nmod', 'nmod', 'obl', 'compound', 'root',
-                 'punct'],
-    ),
-    # degree-juxtaposition rekor modifies the following nominal
-    dict(
-        text='Festival rekor katılımla tamamlandı.',
-        tokens=['Festival', 'rekor', 'katılımla', 'tamamlandı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'nmod', 'obl', 'root', 'punct'],
-    ),
-    # ---- blind-40 miss categories, pinned with fresh lexemes -----------
-    # fossilized -ArAsI adjectives and -yolu compound stems, with the
-    # amod walking onto a case-marked ordinary head
-    dict(
-        text='Havayolu uluslararası uçuş ağını genişletti.',
-        tokens=['Havayolu', 'uluslararası', 'uçuş', 'ağını',
-                'genişletti', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 4, 4, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'nmod', 'obj', 'root', 'punct'],
-    ),
-    # dual Noun/Adj stem before a plural possessed-Nom with a left
-    # subject: the plural is the Acc object, the dual attributive
-    dict(
-        text='Dernek yoksul aileleri giydirdi.',
-        tokens=['Dernek', 'yoksul', 'aileleri', 'giydirdi', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'amod', 'obj', 'root', 'punct'],
-    ),
-    # ---- blind-41 residual categories, pinned with fresh lexemes -------
-    # keep-verb tut- takes a predicative adjective complement
-    dict(
-        text='Aile ortamı evi sıcak tutar.',
-        tokens=['Aile', 'ortamı', 'evi', 'sıcak', 'tutar', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'ADJ', 'VERB', 'PUNCT'],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=['nmod', 'nsubj', 'obj', 'compound', 'root', 'punct'],
-    ),
-    # sentence-initial gazetteer homograph feeding a lowercase izafet
-    # head keeps its common reading
-    dict(
-        text='Emlak ofisi yeni şube açtı.',
-        tokens=['Emlak', 'ofisi', 'yeni', 'şube', 'açtı', '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=['nmod', 'nsubj', 'amod', 'obj', 'root', 'punct'],
-    ),
-    # ---- blind-42 categories, pinned with fresh lexemes ----------------
-    # Agt-deverbal profession noun before a saturated izafet: NOUN subject
-    dict(
-        text='Yaşlı satıcı pazar tezgahını topladı.',
-        tokens=['Yaşlı', 'satıcı', 'pazar', 'tezgahını', 'topladı', '.'],
-        upos=['ADJ', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=['amod', 'nsubj', 'nmod', 'obj', 'root', 'punct'],
-    ),
-    # the aracı/araç+P3sg homograph after a bare-Nom noun is the izafet
-    # vehicle reading
-    dict(
-        text='Belediye aracı dar sokakta ilerledi.',
-        tokens=['Belediye', 'aracı', 'dar', 'sokakta', 'ilerledi', '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=['nmod', 'nsubj', 'amod', 'obl', 'root', 'punct'],
-    ),
-    # temporal-ADP frames (X-dAn önce/sonra) are transparent for the
-    # transitive object resolution
-    dict(
-        text='Görevli odaları denetimden önce temizledi.',
-        tokens=['Görevli', 'odaları', 'denetimden', 'önce', 'temizledi',
-                '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'ADP', 'VERB', 'PUNCT'],
-        heads=[5, 5, 5, 3, 0, 5],
-        deprels=['nsubj', 'obj', 'obl', 'case', 'root', 'punct'],
-    ),
-    # ---- blind-43 categories, pinned with fresh lexemes ----------------
-    # temporal-compound possessed-Acc object separated by an oblique
-    dict(
-        text='Dergi yaz ekini abonelere gönderdi.',
-        tokens=['Dergi', 'yaz', 'ekini', 'abonelere', 'gönderdi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # material juxtaposition inside an oblique is transparent for the
-    # ambiguous-object resolution
-    dict(
-        text='Aşçı pilavı bakır tencerede pişirdi.',
-        tokens=['Aşçı', 'pilavı', 'bakır', 'tencerede', 'pişirdi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=['nsubj', 'obj', 'nmod', 'obl', 'root', 'punct'],
-    ),
-    # a material noun whose chosen analysis is the citation adjective
-    # still modifies as NOUN+nmod (the repaired blind-36 convention)
-    dict(
-        text='Koleksiyoncu gümüş tepsileri sergiledi.',
-        tokens=['Koleksiyoncu', 'gümüş', 'tepsileri', 'sergiledi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'nmod', 'obj', 'root', 'punct'],
-    ),
-    # ---- blind-44 miss categories, pinned with fresh lexemes ---------
-    # antika joins the dual Noun/Adj stem patch: attributive before an
-    # ambiguous plural resolved to Acc by the left subject (NomD path)
-    dict(
-        text='Koleksiyoncu antika vazoları müzayedede sattı.',
-        tokens=['Koleksiyoncu', 'antika', 'vazoları', 'müzayedede',
-                'sattı', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # anaokulu joins the fossil -U compound stems: the citation form is
-    # a bare-Nom izafet modifier, not a fronted anaokul+Acc
-    dict(
-        text='Anaokulu müdürü yeni oyuncaklar aldı.',
-        tokens=['Anaokulu', 'müdürü', 'yeni', 'oyuncaklar', 'aldı',
-                '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=['nmod', 'nsubj', 'amod', 'obj', 'root', 'punct'],
-    ),
-    # a genitive possessor inside an oblique phrase (Gen + ... +
-    # P3sg-Loc) is transparent for ambiguous-object adjacency
-    dict(
-        text='Usta dolabı atölyenin geniş bölümünde onardı.',
-        tokens=['Usta', 'dolabı', 'atölyenin', 'geniş', 'bölümünde',
-                'onardı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 6, 5, 5, 6, 0, 6],
-        deprels=['nsubj', 'obj', 'nmod', 'amod', 'obl', 'root',
-                 'punct'],
-    ),
-    # with the object slot filled by an Acc, a bare preverbal nominal
-    # is a duration adjunct, not a second object
-    dict(
-        text='Avukat dosyayı uzun süre inceledi.',
-        tokens=['Avukat', 'dosyayı', 'uzun', 'süre', 'inceledi', '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=['nsubj', 'obj', 'amod', 'obl', 'root', 'punct'],
-    ),
-    # ---- fifth probe sweep (pre-blind-45), pinned fresh --------------
-    # kuru joins _CORE_ADJS: the kur+u p3nom homograph must not turn an
-    # attributive use into a kurul-style chain link
-    dict(
-        text='Manav kuru kayısıları tezgaha dizdi.',
-        tokens=['Manav', 'kuru', 'kayısıları', 'tezgaha', 'dizdi', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # a bare nominal before a possessed GENITIVE whose chain head is the
-    # Acc object, with no other subject candidate, exits to subject
-    dict(
-        text='Berber çırağının önlüğünü akşam yıkadı.',
-        tokens=['Berber', 'çırağının', 'önlüğünü', 'akşam', 'yıkadı',
-                '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # kömür joins the material-noun class: NOUN+nmod, never amod
-    dict(
-        text='İşçiler kömür vagonlarını istasyonda boşalttı.',
-        tokens=['İşçiler', 'kömür', 'vagonlarını', 'istasyonda',
-                'boşalttı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # mirror LVC repair: an et-converb surface after a bare-Nom nominal
-    # is the support verb (istifa EDİNCE = et+When, never edinç+Dat)
-    dict(
-        text='Başkan istifa edince kongre toplandı.',
-        tokens=['Başkan', 'istifa', 'edince', 'kongre', 'toplandı',
-                '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[3, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'compound', 'advcl', 'nsubj', 'root',
-                 'punct'],
-    ),
-    # the izafet-over-adjective boost is scoped to the loan-î class and
-    # institutional heads: everyday adjectives keep their reading
-    # (kırmız+ı 'its crimson dye' never beats kırmızı+Adj)
-    dict(
-        text='Ressam kırmızı boyayı tuvale sürdü.',
-        tokens=['Ressam', 'kırmızı', 'boyayı', 'tuvale', 'sürdü', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # a CCONJ separated from its nominal conjunct by an attributive
-    # adjective still coordinates the nominals, and the first conjunct
-    # carries the shared object role
-    dict(
-        text='Kurum öğrencilere burs ve ücretsiz yemek sağladı.',
-        tokens=['Kurum', 'öğrencilere', 'burs', 've', 'ücretsiz',
-                'yemek', 'sağladı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'CCONJ', 'ADJ', 'NOUN', 'VERB',
-              'PUNCT'],
-        heads=[7, 7, 7, 6, 6, 3, 0, 7],
-        deprels=['nsubj', 'obl', 'obj', 'cc', 'amod', 'conj', 'root',
-                 'punct'],
-    ),
-    # ---- blind-45 fix categories, pinned with fresh lexemes ----------
-    # diz joins the arrange/lay-out transitives: the izafet-subject
-    # reading would leave the verb objectless
-    dict(
-        text='Kuyumcu yüzükleri kadife kutuya dizdi.',
-        tokens=['Kuyumcu', 'yüzükleri', 'kadife', 'kutuya', 'dizdi',
-                '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=['nsubj', 'obj', 'nmod', 'obl', 'root', 'punct'],
-    ),
-    # a bare nominal directly before a light-verb PARTICIPLE is the
-    # complex's compound (mirror of the finite LVC rule)
-    dict(
-        text='Komisyon iptal edilen seferleri duyurdu.',
-        tokens=['Komisyon', 'iptal', 'edilen', 'seferleri', 'duyurdu',
-                '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=['nsubj', 'compound', 'acl', 'obj', 'root', 'punct'],
-    ),
-    # ---- seventh probe sweep, pinned fresh ---------------------------
-    # kalan's lexicalized-noun homograph yields to the participle in
-    # the idiomatic collocation, and kal-'s copular complement inside
-    # the participle frame is compound
-    dict(
-        text='Aileye yadigar kalan saati sakladı.',
-        tokens=['Aileye', 'yadigar', 'kalan', 'saati', 'sakladı', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[3, 3, 4, 5, 0, 5],
-        deprels=['obl', 'compound', 'acl', 'obj', 'root', 'punct'],
-    ),
-    # ---- eighth probe sweep, pinned fresh ----------------------------
-    # t-initial D-case segmentations after vowel/voiced finals are
-    # phonologically illegal (üre+ten 'from the urea' is not a word),
-    # so the Caus+PresPart rival wins the relative-clause frame
-    dict(
-        text='Fabrika süt ürünleri üreten tesisi genişletti.',
-        tokens=['Fabrika', 'süt', 'ürünleri', 'üreten', 'tesisi',
-                'genişletti', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 3, 4, 5, 6, 0, 6],
-        deprels=['nsubj', 'nmod', 'obj', 'acl', 'obj', 'root',
-                 'punct'],
-    ),
-    # ---- blind-47 fix categories, pinned with fresh lexemes ----------
-    # genitive-shaped junk stems (sorunun, durumun) never shadow the
-    # base paradigm: Gen + possessed-Acc resolves as the object
-    dict(
-        text='Doktor hastanın sorununu dinledi.',
-        tokens=['Doktor', 'hastanın', 'sorununu', 'dinledi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'nmod', 'obj', 'root', 'punct'],
-    ),
-    # erken/geç before a case-marked NON-temporal noun is the manner
-    # adverb, not adnominal
-    dict(
-        text='Yolcular geç otobüse bindi.',
-        tokens=['Yolcular', 'geç', 'otobüse', 'bindi', '.'],
-        upos=['NOUN', 'ADV', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 4, 4, 0, 4],
-        deprels=['nsubj', 'advmod', 'obl', 'root', 'punct'],
-    ),
-    # a case-marked oblique before an acl-attached PASSIVE participle
-    # attaches locally (its oblique frame is real)
-    dict(
-        text='Dedektif olayda bulunan delilleri inceledi.',
-        tokens=['Dedektif', 'olayda', 'bulunan', 'delilleri',
-                'inceledi', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=['nsubj', 'obl', 'acl', 'obj', 'root', 'punct'],
-    ),
-    # maden joins the material-noun class: NOUN+nmod izafet modifier
-    # even when the disambiguator picks its citation-Adj twin
-    dict(
-        text='Maden ocakları denetime kapatıldı.',
-        tokens=['Maden', 'ocakları', 'denetime', 'kapatıldı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 4, 4, 0, 4],
-        deprels=['nmod', 'nsubj', 'obl', 'root', 'punct'],
-    ),
-    # ---- ninth probe sweep, pinned fresh -----------------------------
-    # derivational-adjective homograph before a GENITIVE possessor is
-    # attributive on the possessor (the noun reading would leave the
-    # chain adjective-less)
-    dict(
-        text='Ünlü mimarın projeleri yurtdışında sergilendi.',
-        tokens=['Ünlü', 'mimarın', 'projeleri', 'yurtdışında',
-                'sergilendi', '.'],
-        upos=['ADJ', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 5, 5, 0, 5],
-        deprels=['amod', 'nmod', 'nsubj', 'obl', 'root', 'punct'],
-    ),
-    # the agentive-passive frame's complement slot is nominal: the
-    # PresPart homograph before tarafından is the agent NOUN
-    dict(
-        text='Ödüller bakan tarafından dağıtıldı.',
-        tokens=['Ödüller', 'bakan', 'tarafından', 'dağıtıldı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'nmod', 'obl', 'root', 'punct'],
-    ),
-    # the genitive-possessor license looks through the head's own
-    # attributive material (Şirketin YENİ ürünü)
-    dict(
-        text='Şirketin yeni ürünü fuarda tanıtıldı.',
-        tokens=['Şirketin', 'yeni', 'ürünü', 'fuarda', 'tanıtıldı',
-                '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[3, 3, 5, 5, 0, 5],
-        deprels=['nmod', 'amod', 'nsubj', 'obl', 'root', 'punct'],
-    ),
-    # ---- blind-48 fix categories, pinned with fresh lexemes ----------
-    # material nouns never license possessed-Nom izafet heads, so the
-    # ambiguous plural after one resolves to the object
-    dict(
-        text='Marangoz ahşap oyuncakları fuarda tanıttı.',
-        tokens=['Marangoz', 'ahşap', 'oyuncakları', 'fuarda',
-                'tanıttı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # a possessed chain head continues into the agentive-passive frame
-    # as tarafından's complement
-    dict(
-        text='Davetiyeler dernek başkanı tarafından imzalandı.',
-        tokens=['Davetiyeler', 'dernek', 'başkanı', 'tarafından',
-                'imzalandı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 4, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'nmod', 'obl', 'root', 'punct'],
-    ),
-    # çıkar- joins the transitive inventory
-    dict(
-        text='Bekçi yedek anahtarları dolaptan çıkardı.',
-        tokens=['Bekçi', 'yedek', 'anahtarları', 'dolaptan', 'çıkardı',
-                '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # a sentence-initial -lI word before a QUALITY-dual attributive
-    # chain exits to the zero-derived subject, and the quality dual
-    # (kışlık/yazlık/antika NomDq class) never heads plural izafet —
-    # substance duals keep it (DOLU taneleri stays the izafet subject)
-    dict(
-        text='Görevli kışlık lastikleri depodan çıkardı.',
-        tokens=['Görevli', 'kışlık', 'lastikleri', 'depodan',
-                'çıkardı', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # mid-sentence 'ancak' with no finite clause on its left is the
-    # focalizer 'only', never clause coordination
-    dict(
-        text='Denetçiler eksiği ancak akşam fark etti.',
-        tokens=['Denetçiler', 'eksiği', 'ancak', 'akşam', 'fark',
-                'etti', '.'],
-        upos=['NOUN', 'NOUN', 'ADV', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 6, 6, 6, 6, 0, 6],
-        deprels=['nsubj', 'obj', 'advmod', 'obl', 'compound', 'root',
-                 'punct'],
-    ),
-    # ---- blind-49 fix categories, pinned with fresh lexemes ----------
-    # a -CI agentive over a deverbal -mA noun is the profession word,
-    # outranking paradigm-stealing rare-stem rivals (never ma+çı)
-    dict(
-        text='Dondurmacı külahları tezgaha dizdi.',
-        tokens=['Dondurmacı', 'külahları', 'tezgaha', 'dizdi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 4, 4, 0, 4],
-        deprels=['nsubj', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # artisanal process transitives joined the inventory
-    dict(
-        text='Ustalar parkeleri özenle cilaladı.',
-        tokens=['Ustalar', 'parkeleri', 'özenle', 'cilaladı', '.'],
-        upos=['NOUN', 'NOUN', 'ADV', 'VERB', 'PUNCT'],
-        heads=[4, 4, 4, 0, 4],
-        deprels=['nsubj', 'obj', 'advmod', 'root', 'punct'],
-    ),
-    # a dual-stem attributive also reads ADJ before a P3sg-Nom head the
-    # re-read resolves to Acc (left subject + transitive frame)
-    dict(
-        text='Tamirci ezik tamponu boyadı.',
-        tokens=['Tamirci', 'ezik', 'tamponu', 'boyadı', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'amod', 'obj', 'root', 'punct'],
-    ),
-    # 'tek' before a possessed noun is the adjective (tek başına)
-    dict(
-        text='Bekçi binayı tek başına korudu.',
-        tokens=['Bekçi', 'binayı', 'tek', 'başına', 'korudu', '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=['nsubj', 'obj', 'amod', 'obl', 'root', 'punct'],
-    ),
-    # ---- blind-50 fix categories, pinned with fresh lexemes ----------
-    # a clause with no verbal analysis re-claims its predicate: the
-    # final token's finite rival beats the known-noun homograph
-    # (yoğur+Past, never yoğurt+Acc)
-    dict(
-        text='Usta çamuru elleriyle yoğurdu.',
-        tokens=['Usta', 'çamuru', 'elleriyle', 'yoğurdu', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 4, 4, 0, 4],
-        deprels=['nsubj', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # -mAlArI surfaces carry the full Acc/P3sg+Nom ambiguity: the Acc
-    # object before an active transitive ...
-    dict(
-        text='Sekreter görüşmeleri akşam kaydetti.',
-        tokens=['Sekreter', 'görüşmeleri', 'akşam', 'kaydetti', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 4, 4, 0, 4],
-        deprels=['nsubj', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # ... and the izafet subject under a passive
-    dict(
-        text='Onarım çalışmaları bölgede yürütülmektedir.',
-        tokens=['Onarım', 'çalışmaları', 'bölgede', 'yürütülmektedir',
-                '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 4, 4, 0, 4],
-        deprels=['nmod', 'nsubj', 'obl', 'root', 'punct'],
-    ),
-    # lexicalized institution juxtaposition (sahil güvenlik)
-    dict(
-        text='Sahil güvenlik ekipleri tekneyi kurtardı.',
-        tokens=['Sahil', 'güvenlik', 'ekipleri', 'tekneyi', 'kurtardı',
-                '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 5, 5, 0, 5],
-        deprels=['nmod', 'nmod', 'nsubj', 'obj', 'root', 'punct'],
-    ),
-    # ---- twelfth probe sweep: the generic two-step chain -------------
-    # bare + bare + possessed-Nom head is the clause subject when the
-    # predicate needs no object or has one elsewhere ...
-    dict(
-        text='Tarım ilçe müdürlüğü çiftçileri bilgilendirdi.',
-        tokens=['Tarım', 'ilçe', 'müdürlüğü', 'çiftçileri',
-                'bilgilendirdi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 5, 5, 0, 5],
-        deprels=['nmod', 'nmod', 'nsubj', 'obj', 'root', 'punct'],
-    ),
-    # ... including under passives ...
-    dict(
-        text='Dalga ölçüm şamandıraları kıyıya sürüklendi.',
-        tokens=['Dalga', 'ölçüm', 'şamandıraları', 'kıyıya',
-                'sürüklendi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 5, 5, 0, 5],
-        deprels=['nmod', 'nmod', 'nsubj', 'obl', 'root', 'punct'],
-    ),
-    # ... while an objectless active transitive keeps the pair as its
-    # event-nominal object and the first bare as subject
-    dict(
-        text='Ödülü kazanan yönetmen basın toplantısı düzenledi.',
-        tokens=['Ödülü', 'kazanan', 'yönetmen', 'basın', 'toplantısı',
-                'düzenledi', '.'],
-        upos=['NOUN', 'VERB', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 6, 5, 6, 0, 6],
-        deprels=['obj', 'acl', 'nsubj', 'nmod', 'obj', 'root',
-                 'punct'],
-    ),
-    # --- blind-51 category pins (fresh tuning sentences; see BENCH.md
-    # fifty-first-split entry) ---
-    # compound object reaching across a Dat oblique (pins: preverbal
-    # transparency over the clause's own adjuncts)
-    dict(
-        text='Manav elma sandığını depoya taşıdı.',
-        tokens=['Manav', 'elma', 'sandığını', 'depoya', 'taşıdı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # -Iş noun + Abl over the illegal bare-t causative segmentation
-    # (pins: yarış+tan beats yarış+t+an, önce reads PCAbl)
-    dict(
-        text='Sporcular yarıştan önce salonda ısındı.',
-        tokens=['Sporcular', 'yarıştan', 'önce', 'salonda', 'ısındı',
-                '.'],
-        upos=['NOUN', 'NOUN', 'ADP', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 2, 5, 0, 5],
-        deprels=['nsubj', 'obl', 'case', 'obl', 'root', 'punct'],
-    ),
-    # unaccusative resultative participle + loan-î hidden object across
-    # an oblique (pins: erimiş acl, madeni NOUN+obj)
-    dict(
-        text='Kuyumcu erimiş madeni kalıptan çıkardı.',
-        tokens=['Kuyumcu', 'erimiş', 'madeni', 'kalıptan', 'çıkardı',
-                '.'],
-        upos=['NOUN', 'VERB', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'acl', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # two stacked bare nominals before a transitive verb are compound
-    # modifier + object (pins: yaban nmod, kazı obj)
-    dict(
-        text='Aşçı fırında yaban kazı pişirdi.',
-        tokens=['Aşçı', 'fırında', 'yaban', 'kazı', 'pişirdi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=['nsubj', 'obl', 'nmod', 'obj', 'root', 'punct'],
-    ),
-    # --- round-4 advisor-finding pins ---
-    # zero-copula clause coordination (pins: first predicate roots,
-    # second conj, its bare-Nom is nsubj, ancak stays cc)
-    dict(
-        text='Hava güzel ancak deniz soğuk.',
-        tokens=['Hava', 'güzel', 'ancak', 'deniz', 'soğuk', '.'],
-        upos=['NOUN', 'ADJ', 'CCONJ', 'NOUN', 'ADJ', 'PUNCT'],
-        heads=[2, 0, 5, 5, 2, 2],
-        deprels=['nsubj', 'root', 'cc', 'nsubj', 'conj', 'punct'],
-    ),
-    # genuine -In-final lexeme keeps its base paradigm (pins: motorin
-    # out of the junk-stem penalty)
-    dict(
-        text='Motorinin fiyatı hızla arttı.',
-        tokens=['Motorinin', 'fiyatı', 'hızla', 'arttı', '.'],
-        upos=['NOUN', 'NOUN', 'ADV', 'VERB', 'PUNCT'],
-        heads=[2, 4, 4, 0, 4],
-        deprels=['nmod', 'nsubj', 'advmod', 'root', 'punct'],
-    ),
-    # --- blind-52 category pins (fresh tuning sentences; see BENCH.md
-    # fifty-second-split entry) ---
-    # ham gains its TDK Adj twin (pins: HAM before the ambiguous object)
-    dict(
-        text='Fabrika ham maddeyi yurtdışından getirtti.',
-        tokens=['Fabrika', 'ham', 'maddeyi', 'yurtdışından',
-                'getirtti', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # zeytin joins the material class (pins: NOUN+nmod before the
-    # possessed object, never the color adjective)
-    dict(
-        text='Lokanta zeytin ezmesini kahvaltıda sundu.',
-        tokens=['Lokanta', 'zeytin', 'ezmesini', 'kahvaltıda',
-                'sundu', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # -lI adjective stays the first conjunct's zero-copula predicate
-    # in clause coordination (pins: With-demotion exception)
-    dict(
-        text='Servis hızlı ama yemek sıradan.',
-        tokens=['Servis', 'hızlı', 'ama', 'yemek', 'sıradan', '.'],
-        upos=['NOUN', 'ADJ', 'CCONJ', 'NOUN', 'ADJ', 'PUNCT'],
-        heads=[2, 0, 5, 5, 2, 2],
-        deprels=['nsubj', 'root', 'cc', 'nsubj', 'conj', 'punct'],
-    ),
-    # bare-object activity verbs stay out of the loan-î hidden-object
-    # re-read (pins: resmi attributive before the oblique)
-    dict(
-        text='Takım resmi sahada çalıştı.',
-        tokens=['Takım', 'resmi', 'sahada', 'çalıştı', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'amod', 'obl', 'root', 'punct'],
-    ),
-    # --- blind-53 category pins ---
-    # whole-word adjective before a finite verb with a stranded
-    # attributive neighbor and a saturated frame reads as the
-    # case-marked noun rival (pins: çifte = çift+Dat, yaşlı re-read)
-    dict(
-        text='Garson menüyü yaşlı çifte uzattı.',
-        tokens=['Garson', 'menüyü', 'yaşlı', 'çifte', 'uzattı', '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=['nsubj', 'obj', 'amod', 'obl', 'root', 'punct'],
-    ),
-    # kiralık/satılık gain their citation-adjective twins (pins:
-    # attributive before the Acc object)
-    dict(
-        text='Aile satılık evi akşam gezdi.',
-        tokens=['Aile', 'satılık', 'evi', 'akşam', 'gezdi', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # --- blind-54 category pins ---
-    # a dual homograph before a bare nominal feeding an OVERTLY
-    # case-marked possessed tail exits to the subject (pins: the
-    # unambiguous izafet chain claims the bare nominal)
-    dict(
-        text='Bekçi giriş kapısını geceleri kilitledi.',
-        tokens=['Bekçi', 'giriş', 'kapısını', 'geceleri', 'kilitledi',
-                '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # yavru joins the attributive-noun class (pins: NOUN+nmod over the
-    # listed Adj before a plural-Acc head)
-    dict(
-        text='Barınak yavru kedileri sahiplendirdi.',
-        tokens=['Barınak', 'yavru', 'kedileri', 'sahiplendirdi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'nmod', 'obj', 'root', 'punct'],
-    ),
-    # --- blind-55 category pins ---
-    # bez joins the material class (pins: NOUN+nmod before the Dat head)
-    dict(
-        text='Manav üzümleri bez keselere koydu.',
-        tokens=['Manav', 'üzümleri', 'bez', 'keselere', 'koydu', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 4, 5, 0, 5],
-        deprels=['nsubj', 'obj', 'nmod', 'obl', 'root', 'punct'],
-    ),
-    # a dual homograph fronted by a correlative particle with an ADJ
-    # pair in a verbless clause is the adjective (pins: hem ŞIK hem)
-    dict(
-        text='Yeni çanta hem şık hem dayanıklı.',
-        tokens=['Yeni', 'çanta', 'hem', 'şık', 'hem', 'dayanıklı',
-                '.'],
-        upos=['ADJ', 'NOUN', 'CCONJ', 'ADJ', 'CCONJ', 'ADJ', 'PUNCT'],
-        heads=[2, 4, 4, 0, 6, 4, 4],
-        deprels=['amod', 'nsubj', 'cc', 'root', 'cc', 'conj', 'punct'],
-    ),
-    # --- blind-56 category pins ---
-    # hediyelik joins the citation-adjective twins (pins: amod over the
-    # productive -lIk noun before the ambiguous object)
-    dict(
-        text='Dükkan hediyelik magnetleri girişe koydu.',
-        tokens=['Dükkan', 'hediyelik', 'magnetleri', 'girişe',
-                'koydu', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'amod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # an acl-modified time noun is a referential NP, and activity
-    # verbs incorporate only adjacent bare objects (pins: saat nsubj
-    # across the oblique under çalış-)
-    dict(
-        text='Komşunun kurduğu saat duvarda çalışıyor.',
-        tokens=['Komşunun', 'kurduğu', 'saat', 'duvarda', 'çalışıyor',
-                '.'],
-        upos=['NOUN', 'VERB', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'acl', 'nsubj', 'obl', 'root', 'punct'],
-    ),
-    # --- blind-57 category pins (hard-register probe; see BENCH.md) ---
-    # negative present participle -mAyAn (suffix fixture extension)
-    dict(
-        text='Davete gelmeyen konuklar aranmadı.',
-        tokens=['Davete', 'gelmeyen', 'konuklar', 'aranmadı', '.'],
-        upos=['NOUN', 'VERB', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 4, 0, 4],
-        deprels=['obl', 'acl', 'nsubj', 'root', 'punct'],
-    ),
-    # -mAsInA rağmen is advcl, never ccomp
-    dict(
-        text='Firma ceza almasına rağmen üretimi durdurmadı.',
-        tokens=['Firma', 'ceza', 'almasına', 'rağmen', 'üretimi',
-                'durdurmadı', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'ADP', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 3, 6, 3, 6, 0, 6],
-        deprels=['nsubj', 'obj', 'advcl', 'case', 'obj', 'root',
-                 'punct'],
-    ),
-    # conditional protasis hosts its own subject and attaches to the
-    # embedded complement clause
-    dict(
-        text='Yöneticiler satışlar artarsa üretimin hızlanacağını söylüyor.',
-        tokens=['Yöneticiler', 'satışlar', 'artarsa', 'üretimin',
-                'hızlanacağını', 'söylüyor', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB', 'VERB', 'PUNCT'],
-        heads=[6, 3, 5, 5, 6, 0, 6],
-        deprels=['nsubj', 'nsubj', 'advcl', 'nsubj', 'ccomp', 'root',
-                 'punct'],
-    ),
-    # While-converb of a mixed-valency root takes the bare nominal as
-    # its OWN subject when the matrix subject is filled
-    dict(
-        text='Muhabir tören sürerken konukların ayrıldığını fark etti.',
-        tokens=['Muhabir', 'tören', 'sürerken', 'konukların',
-                'ayrıldığını', 'fark', 'etti', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB', 'NOUN', 'VERB',
-              'PUNCT'],
-        heads=[7, 3, 5, 5, 7, 7, 0, 7],
-        deprels=['nsubj', 'nsubj', 'advcl', 'nsubj', 'ccomp',
-                 'compound', 'root', 'punct'],
-    ),
-    # passive converb keeps its izafet subject when a later bare-Nom
-    # serves the matrix
-    dict(
-        text='Sunucunun sesi kısılınca yayın reklama geçti.',
-        tokens=['Sunucunun', 'sesi', 'kısılınca', 'yayın', 'reklama',
-                'geçti', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 6, 6, 6, 0, 6],
-        deprels=['nmod', 'nsubj', 'advcl', 'nsubj', 'obl', 'root',
-                 'punct'],
-    ),
-    # light-verb nominals are no subject candidates in the two-bare
-    # converb distribution
-    dict(
-        text='Mahalle muhtarı sakinler şikayet edince denetimi başlattı.',
-        tokens=['Mahalle', 'muhtarı', 'sakinler', 'şikayet', 'edince',
-                'denetimi', 'başlattı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB',
-              'PUNCT'],
-        heads=[2, 7, 5, 5, 7, 7, 0, 7],
-        deprels=['nmod', 'nsubj', 'nsubj', 'compound', 'advcl', 'obj',
-                 'root', 'punct'],
-    ),
-    # clause-aware two-step chain: the converb clause's subject does
-    # not license a chain in the matrix
-    dict(
-        text='Hakem maçı durdurunca yedek oyuncu ısınma turu attı.',
-        tokens=['Hakem', 'maçı', 'durdurunca', 'yedek', 'oyuncu',
-                'ısınma', 'turu', 'attı', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'ADJ', 'NOUN', 'NOUN', 'NOUN',
-              'VERB', 'PUNCT'],
-        heads=[3, 3, 8, 5, 8, 7, 8, 0, 8],
-        deprels=['nsubj', 'obj', 'advcl', 'amod', 'nsubj', 'nmod',
-                 'obj', 'root', 'punct'],
-    ),
-    # correlative particles front whole NPs: the izafet HEAD is the
-    # conjunct
-    dict(
-        text='Firma hem ürün kalitesini hem teslimat hızını artırdı.',
-        tokens=['Firma', 'hem', 'ürün', 'kalitesini', 'hem',
-                'teslimat', 'hızını', 'artırdı', '.'],
-        upos=['NOUN', 'CCONJ', 'NOUN', 'NOUN', 'CCONJ', 'NOUN', 'NOUN',
-              'VERB', 'PUNCT'],
-        heads=[8, 4, 4, 8, 7, 7, 4, 0, 8],
-        deprels=['nsubj', 'cc', 'nmod', 'obj', 'cc', 'nmod', 'conj',
-                 'root', 'punct'],
-    ),
-    # correlative clause coordination shares the subject; the second
-    # conjunct's bare nominal feeds its izafet object
-    dict(
-        text='Kurum ne bütçe açığını kapattı ne personel sayısını artırdı.',
-        tokens=['Kurum', 'ne', 'bütçe', 'açığını', 'kapattı', 'ne',
-                'personel', 'sayısını', 'artırdı', '.'],
-        upos=['NOUN', 'CCONJ', 'NOUN', 'NOUN', 'VERB', 'CCONJ', 'NOUN',
-              'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 5, 4, 5, 0, 9, 8, 9, 5, 5],
-        deprels=['nsubj', 'cc', 'nmod', 'obj', 'root', 'cc', 'nmod',
-                 'obj', 'conj', 'punct'],
-    ),
-    # din- joins the unaccusative intransitives
-    dict(
-        text='Fırtına dinince ekipler yola çıktı.',
-        tokens=['Fırtına', 'dinince', 'ekipler', 'yola', 'çıktı', '.'],
-        upos=['NOUN', 'VERB', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 5, 5, 0, 5],
-        deprels=['nsubj', 'advcl', 'nsubj', 'obl', 'root', 'punct'],
-    ),
-    # --- blind-58 category pins (hard-register validation probe) ---
-    # a bare nominal before a PASSIVE -ArkEn converb is its subject
-    # when the matrix subject is filled
-    dict(
-        text='Müdür evraklar taranırken salonda bekledi.',
-        tokens=['Müdür', 'evraklar', 'taranırken', 'salonda',
-                'bekledi', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nsubj', 'advcl', 'obl', 'root', 'punct'],
-    ),
-    # ... and before an INTRANSITIVE -DIktAn sonra clause likewise
-    dict(
-        text='Şef turta piştikten sonra fırını kapattı.',
-        tokens=['Şef', 'turta', 'piştikten', 'sonra', 'fırını',
-                'kapattı', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'ADP', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[6, 3, 6, 3, 6, 0, 6],
-        deprels=['nsubj', 'nsubj', 'advcl', 'case', 'obj', 'root',
-                 'punct'],
-    ),
-    # ver-complexes join the light-verb exclusion in the two-bare
-    # distribution; the event nominal stays the converb's object
-    dict(
-        text='Site yöneticisi sakinler onay verince havuzu açtırdı.',
-        tokens=['Site', 'yöneticisi', 'sakinler', 'onay', 'verince',
-                'havuzu', 'açtırdı', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB',
-              'PUNCT'],
-        heads=[2, 7, 5, 5, 7, 7, 0, 7],
-        deprels=['nmod', 'nsubj', 'nsubj', 'obj', 'advcl', 'obj',
-                 'root', 'punct'],
-    ),
-    # the two-step izafet chain never reaches INTO an own-subject
-    # converb clause with a later matrix
-    dict(
-        text='Müdür okul kayıtları başlayınca ek personel istedi.',
-        tokens=['Müdür', 'okul', 'kayıtları', 'başlayınca', 'ek',
-                'personel', 'istedi', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'ADJ', 'NOUN', 'VERB',
-              'PUNCT'],
-        heads=[7, 3, 4, 7, 6, 7, 0, 7],
-        deprels=['nsubj', 'nmod', 'nsubj', 'advcl', 'amod', 'obj',
-                 'root', 'punct'],
-    ),
-    # gözlemevi joins the fossil -evi compounds
-    dict(
-        text='Gözlemevi personeli yeni teleskobu kurdu.',
-        tokens=['Gözlemevi', 'personeli', 'yeni', 'teleskobu', 'kurdu',
-                '.'],
-        upos=['NOUN', 'NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 5, 4, 5, 0, 5],
-        deprels=['nmod', 'nsubj', 'amod', 'obj', 'root', 'punct'],
-    ),
-    # --- blind-59 category pins (third hard-register probe) ---
-    # düşünce after a Nom nominal with a later finite verb is the
-    # düş- When-converb, never the noun 'thought'
-    dict(
-        text='Borsa endeksi düşünce yatırımcılar satışa geçti.',
-        tokens=['Borsa', 'endeksi', 'düşünce', 'yatırımcılar',
-                'satışa', 'geçti', '.'],
-        upos=['NOUN', 'NOUN', 'VERB', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 3, 6, 6, 6, 0, 6],
-        deprels=['nmod', 'nsubj', 'advcl', 'nsubj', 'obl', 'root',
-                 'punct'],
-    ),
-    # tek before any noun is the adjective; tek tek keeps the ADV pair
-    dict(
-        text='Sürücü tek şeritte ilerledi.',
-        tokens=['Sürücü', 'tek', 'şeritte', 'ilerledi', '.'],
-        upos=['NOUN', 'ADJ', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[4, 3, 4, 0, 4],
-        deprels=['nsubj', 'amod', 'obl', 'root', 'punct'],
-    ),
-    # a POSSESSED -mA nominal after a bare nominal is the lexicalized
-    # izafet compound (noun), while light-verb roots keep the verbal
-    # complex reading
-    dict(
-        text='Dernek tanıtım çalışmasını köyde yürüttü.',
-        tokens=['Dernek', 'tanıtım', 'çalışmasını', 'köyde',
-                'yürüttü', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[5, 3, 5, 5, 0, 5],
-        deprels=['nsubj', 'nmod', 'obj', 'obl', 'root', 'punct'],
-    ),
-    # a possessed izafet head hands the converb its subject only when
-    # DIRECTLY adjacent; with a closer bare nominal the izafet serves
-    # the matrix
-    dict(
-        text='Tiyatro ekibi sahne çökünce provayı durdurdu.',
-        tokens=['Tiyatro', 'ekibi', 'sahne', 'çökünce', 'provayı',
-                'durdurdu', '.'],
-        upos=['NOUN', 'NOUN', 'NOUN', 'VERB', 'NOUN', 'VERB', 'PUNCT'],
-        heads=[2, 6, 4, 6, 6, 0, 6],
-        deprels=['nmod', 'nsubj', 'nsubj', 'advcl', 'obj', 'root',
-                 'punct'],
-    ),
-    # --- blind-60 category pin ---
-    # a dual noun/adjective homograph in zero-copula FIRST-CONJUNCT
-    # predicate position is the adjective
-    dict(
-        text='Meyveler olgun ama fiyat yüksek.',
-        tokens=['Meyveler', 'olgun', 'ama', 'fiyat', 'yüksek', '.'],
-        upos=['NOUN', 'ADJ', 'CCONJ', 'NOUN', 'ADJ', 'PUNCT'],
-        heads=[2, 0, 5, 5, 2, 2],
-        deprels=['nsubj', 'root', 'cc', 'nsubj', 'conj', 'punct'],
-    ),
-]
+from .gold_ud_blind_data import load_split
 
-for _g in UD_GOLD:
-    _g.setdefault("ner", ["O"] * len(_g["tokens"]))
+UD_GOLD: List[dict] = load_split("tuning")
 
 _PRED_RELS = ("root", "parataxis")
 
@@ -4094,8 +93,8 @@ def gold_documents(spark, entries=None):
 def score_vs_ud_gold(spark, entries=None) -> dict:
     """Run the real pipeline over the gold sentences; P/R of emitted
     triples vs gold-arc-mined triples, matched on (url, subj, pred, obj).
-    Pass plans.gold_ud_heldout.HELD_OUT as ``entries`` for the frozen
-    held-out number (the headline metric; tuning never saw it)."""
+    Pass ``load_split("heldout")`` as ``entries`` for the frozen held-out
+    number (the headline metric; tuning never saw it)."""
     from .pipeline import run_kg_pipeline
 
     entries = UD_GOLD if entries is None else entries
