@@ -942,7 +942,7 @@ def _knn_ivf_oracle(dim: int = 64, n_cells: int = 16, n_probe: int = 4, seed: in
 
 
 def _simhash_oracle(n_bits: int = 60, max_hamming: int = 3) -> str:
-    # replays simhash64(token_hash="md5_60"): 60-bit token hash from the
+    # replays simhash64: 60-bit token hash from the
     # top 15 md5 hex chars, per-bit +/-1 vote, sign pack; the all-pairs
     # hamming filter equals the Spark side's 4-segment pigeonhole blocking
     # by construction (any pair at distance <= 3 shares a segment)

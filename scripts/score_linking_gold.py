@@ -5,12 +5,14 @@ skewed counts), links every gold mention with link_mentions, and reports
 linking precision / recall with per-miss detail.
 
 The gold is plans/gold_blind/{split}_kb.tsv and {split}_links.tsv;
-``--tuning`` adds the post-scoring pins of linking1_tuning.tsv.
+``--tuning`` adds the split's post-scoring pins, {split}_tuning.tsv (a
+usage error for a split without one).
 
 Run: python scripts/score_linking_gold.py [--split linking2] [--tuning]
 """
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -28,7 +30,19 @@ from vnlp_spark.operators.entity_resolution import (
 from vnlp_spark.plans.gold_ud_blind_data import load_kb, load_links
 
 
-def main() -> None:
+def main(argv=None) -> None:
+    p = argparse.ArgumentParser(description="score link_mentions against a linking gold split")
+    p.add_argument("--split", default="linking1")
+    p.add_argument("--tuning", action="store_true", help="add the split's tuning pins")
+    args = p.parse_args(argv)
+    split = args.split
+    kb, rows = load_kb(f"{split}_kb"), load_links(f"{split}_links")
+    if args.tuning:
+        try:
+            rows = rows + load_links(f"{split}_tuning")
+        except FileNotFoundError:
+            p.error(f"split {split} has no tuning pins ({split}_tuning.tsv)")
+
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("linking-gold")
@@ -38,14 +52,11 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    split = sys.argv[sys.argv.index("--split") + 1] if "--split" in sys.argv else "linking1"
-    kb, gold_rows = load_kb(f"{split}_kb"), load_links(f"{split}_links")
     seed_rows = [(surface, typ) for surface, typ, n in kb for _ in range(n)]
     seeds = spark.createDataFrame(seed_rows, "mention string, label string") \
         .withColumn("canon_key", canonical_key("mention"))
     entities = build_entities(seeds).cache()
 
-    rows = gold_rows + (load_links("linking1_tuning") if "--tuning" in sys.argv else [])
     mentions = spark.createDataFrame(
         [(i, m, l, g) for i, (m, l, g) in enumerate(rows)],
         "mid int, mention string, label string, gold string",

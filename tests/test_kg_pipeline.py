@@ -198,15 +198,3 @@ def test_kg_job_end_to_end_with_resume(spark, tmp_path):
     edges2 = sorted(map(tuple, spark.read.parquet(os.path.join(out, "edges")).collect()))
     assert edges1 == edges2 and len(edges1) > 0
 
-
-def test_kg_job_rejects_unknown_stage(tmp_path):
-    """A misspelled --stages name is a usage error (exit 2) before any
-    work: nothing is written under --output."""
-    from vnlp_spark.bin.kg_job import main
-
-    out = tmp_path / "kg_out"
-    out.mkdir()
-    with pytest.raises(SystemExit) as exc:
-        main(["--input", "synthetic:10", "--output", str(out), "--stages", "edge"])
-    assert exc.value.code == 2
-    assert list(out.iterdir()) == []

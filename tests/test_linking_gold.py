@@ -7,6 +7,7 @@ suffixes diluted Jaccard, transposition typos fell under every gram
 threshold, abbreviations unreachable by similarity).  Fixed by general
 rules: fold_key blocking/gramming, containment similarity, bounded
 Damerau-Levenshtein verify, initials + curated club aliases."""
+import pytest
 from pyspark.sql import functions as F
 
 from vnlp_spark.operators.entity_resolution import (
@@ -48,3 +49,19 @@ def test_linking_gold_and_tuning_exact(spark):
         if r["linked_key"] != r["gold"]
     ]
     assert misses == [], f"linking misses: {misses}"
+
+
+def test_score_script_rejects_tuning_without_pins(monkeypatch, capsys):
+    """``--tuning`` on a split with no ``{split}_tuning.tsv`` is a usage
+    error (exit 2) raised before any Spark session starts."""
+    from scripts import score_linking_gold
+
+    class NoSpark:
+        def __getattr__(self, name):
+            raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(score_linking_gold, "SparkSession", NoSpark())
+    with pytest.raises(SystemExit) as exc:
+        score_linking_gold.main(["--split", "linking2", "--tuning"])
+    assert exc.value.code == 2
+    assert "linking2_tuning.tsv" in capsys.readouterr().err

@@ -54,7 +54,8 @@ def test_stream_triples_availablenow(spark, landing_dir):
     assert len(rows) == batch
 
 
-def test_windowed_mention_counts_with_watermark(spark, landing_dir):
+@pytest.fixture(scope="module")
+def windowed_counts(spark, landing_dir):
     pages = spark.readStream.schema(WEB_PAGE_SCHEMA).parquet(landing_dir)
     q = (
         windowed_mention_counts(pages, window="1 hour", watermark="2 hours")
@@ -65,11 +66,28 @@ def test_windowed_mention_counts_with_watermark(spark, landing_dir):
         .start()
     )
     q.awaitTermination(120)
-    rows = spark.sql("select * from stream_counts_t").collect()
+    return spark.sql("select * from stream_counts_t").collect()
+
+
+def test_windowed_mention_counts_with_watermark(windowed_counts):
+    rows = windowed_counts
     assert len(rows) > 0
     keys = {r["canon_key"] for r in rows}
     assert "istanbul" in keys
     assert all(r["window"]["start"] is not None for r in rows)
+
+
+def test_windowed_mention_keys_are_entity_keys(spark, landing_dir, windowed_counts):
+    """The stream keys a mention by its head token's root, as the batch
+    entity table does: every windowed key names a batch entity (a
+    surface-only key would give 'üniversiteyi' where the batch has
+    'üniversite')."""
+    from vnlp_spark.plans.pipeline import run_kg_pipeline
+
+    entities = run_kg_pipeline(spark.read.parquet(landing_dir)).entities
+    batch_keys = {r["canon_key"] for r in entities.select("canon_key").collect()}
+    stream_keys = {r["canon_key"] for r in windowed_counts}
+    assert stream_keys and stream_keys <= batch_keys, sorted(stream_keys - batch_keys)
 
 
 def _plan(df) -> str:
@@ -179,14 +197,11 @@ def test_stateful_entity_totals_accumulate(spark, landing_dir):
     got = {r["canon_key"]: r["total"] for r in out}
     assert got
 
-    # ground truth from the batch pipeline on the same input
-    from vnlp_spark.operators.entity_resolution import canonical_key
-    from vnlp_spark.plans.pipeline import annotated_documents_stage
+    # ground truth: the batch pipeline's mention rows on the same input
+    from vnlp_spark.plans.pipeline import run_kg_pipeline
 
     batch = (
-        annotated_documents_stage(spark.read.parquet(landing_dir), "tr")
-        .select(F.explode("mentions").alias("m"))
-        .select(canonical_key("m.mention").alias("canon_key"))
+        run_kg_pipeline(spark.read.parquet(landing_dir)).mentions
         .groupBy("canon_key").count()
     ).collect()
     expect = {r["canon_key"]: r["count"] for r in batch}

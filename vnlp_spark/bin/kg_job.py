@@ -5,13 +5,14 @@ vnlp/bin/vnlp.py — re-shaped from per-sentence invocation into a staged,
 checkpoint-resumable batch job per the north rule):
 
     spark-submit --py-files vnlp_spark.zip vnlp_spark/bin/kg_job.py \
-        --input /data/webpages --output /data/kg --lang tr
+        --input /data/crawl --output /data/kg
 
     # synthetic input for smoke/bench runs:
     spark-submit ... kg_job.py --input synthetic:20000 --output /tmp/kg
 
-Stages (each a parquet table under --output, each resumable — an
-interrupted job re-runs only incomplete stages; see plans/lineage.py):
+Turkish documents (``lang = 'tr'``) go through all six stages, each a
+parquet table under --output, each resumable — an interrupted job re-runs
+only incomplete stages; see plans/lineage.py:
 
     annotated -> sentences, mentions, triples -> entities -> edges
     plus _lineage/<stage>/ rows (bucket, n_rows, checksum, completed_ts)
@@ -32,25 +33,13 @@ import sys
 import time
 
 
-STAGES = ("sentences", "annotated", "mentions", "triples", "entities", "edges")
-
-
 def parse_args(argv=None):
     p = argparse.ArgumentParser(description="vnlp-spark KG construction job")
     p.add_argument("--input", required=True,
                    help="parquet dir with (url, warc_ts, html, text, lang) or 'synthetic:N'")
     p.add_argument("--output", required=True, help="output base dir (stage tables + lineage)")
-    p.add_argument("--lang", default="tr", help="language filter ('' disables)")
-    p.add_argument("--stages", default="all",
-                   help=f"'all' or a comma list of {','.join(STAGES)}")
     p.add_argument("--force", action="store_true", help="recompute even if stages are complete")
-    args = p.parse_args(argv)
-    # a misspelled stage would match nothing: no table written, and the
-    # final counts would run the whole lazy chain three times
-    unknown = set() if args.stages == "all" else set(args.stages.split(",")) - set(STAGES)
-    if unknown:
-        p.error(f"unknown --stages {','.join(sorted(unknown))} (choose from {','.join(STAGES)})")
-    return args
+    return p.parse_args(argv)
 
 
 def main(argv=None) -> int:
@@ -73,33 +62,20 @@ def main(argv=None) -> int:
     else:
         docs = spark.read.parquet(args.input)
 
-    wanted = STAGES if args.stages == "all" else args.stages.split(",")
-    lang = args.lang or None
     runner = StageRunner(spark, args.output)
     t0 = time.monotonic()
 
-    annotated = P.annotated_documents_stage(docs, lang)
-    if "annotated" in wanted:
-        annotated = runner.run("annotated", annotated, force=args.force)
-    if "sentences" in wanted:
-        runner.run("sentences", annotated.select("url", "warc_ts", "sent_id", "sentence"),
-                   force=args.force)
-    mentions = P.mentions_stage(annotated)
-    if "mentions" in wanted:
-        mentions = runner.run("mentions", mentions, force=args.force)
-    triples = P.triples_stage(annotated)
-    if "triples" in wanted:
-        triples = runner.run("triples", triples, force=args.force)
-    entities = P.entities_stage(mentions)
-    if "entities" in wanted:
-        entities = runner.run("entities", entities, force=args.force)
-    edges = P.edges_stage(triples, entities)
-    if "edges" in wanted:
-        edges = runner.run("edges", edges, force=args.force)
+    annotated = runner.run("annotated", P.annotated_documents_stage(docs), force=args.force)
+    runner.run("sentences", annotated.select("url", "warc_ts", "sent_id", "sentence"),
+               force=args.force)
+    mentions = runner.run("mentions", P.mentions_stage(annotated), force=args.force)
+    triples = runner.run("triples", P.triples_stage(annotated), force=args.force)
+    entities = runner.run("entities", P.entities_stage(mentions), force=args.force)
+    runner.run("edges", P.edges_stage(triples, entities), force=args.force)
 
-    n_triples = runner.row_count("triples") if "triples" in wanted else triples.count()
-    n_entities = runner.row_count("entities") if "entities" in wanted else entities.count()
-    n_edges = runner.row_count("edges") if "edges" in wanted else edges.count()
+    n_triples = runner.row_count("triples")
+    n_entities = runner.row_count("entities")
+    n_edges = runner.row_count("edges")
     dt = time.monotonic() - t0
     print(
         f"[kg-job] done in {dt:.1f}s: {n_triples} triples, "

@@ -108,14 +108,14 @@ def _to_signed(h: int) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def spark_xxhash64(*cols, seed: int = 42) -> int:
+def spark_xxhash64(*cols) -> int:
     """``F.xxhash64(*cols)`` in pure python (signed 64-bit, like Spark).
 
     Column typing follows the python value: ``str`` hashes as UTF-8 bytes,
     ``int`` as a Spark long, ``("int", v)`` tuples force the 4-byte int
     path, ``bytes`` as binary, ``None`` is skipped (null semantics).
     """
-    h = seed
+    h = 42  # Spark's hash seed
     for c in cols:
         if c is None:
             continue

@@ -106,9 +106,9 @@ def normalized_fingerprint(col: Column | str) -> Column:
     return F.md5(F.encode(canon, "UTF-8"))
 
 
-def rolling_hash_fingerprint(col: Column | str, base: int = 31, mod: int = 1_000_000_007) -> Column:
+def rolling_hash_fingerprint(col: Column | str) -> Column:
     """Polynomial rolling-hash document fingerprint over Unicode codepoints:
-    ``h = (h * base + codepoint) % mod`` folded left-to-right.
+    ``h = (h * 31 + codepoint) % 1_000_000_007`` folded left-to-right.
 
     Native ``aggregate`` over the char array — single projection, no UDF,
     and the identical fold is expressible in DuckDB ``list_reduce`` for the
@@ -119,5 +119,5 @@ def rolling_hash_fingerprint(col: Column | str, base: int = 31, mod: int = 1_000
     return F.aggregate(
         chars,
         F.lit(0).cast("long"),
-        lambda acc, ch: F.pmod(acc * F.lit(base) + F.ascii(ch), F.lit(mod)),
+        lambda acc, ch: F.pmod(acc * F.lit(31) + F.ascii(ch), F.lit(1_000_000_007)),
     )

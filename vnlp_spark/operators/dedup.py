@@ -8,9 +8,9 @@ Five strategies, cheapest-first — the standard LLM-corpus cleaning ladder:
   only same-bucket docs become candidate pairs (no O(n²) compare).  All
   **native** expressions: shingles via transform/sequence, signatures via
   array_min of seeded xxhash64s, one shuffle per LSH band-group join.
-- **SimHash**: 64-bit weighted-token-hash sign vector; near-dups have
+- **SimHash**: 60-bit weighted-token-hash sign vector; near-dups have
   small Hamming distance, found by 4-segment exact-match blocking
-  (any pair within distance 3 shares at least one identical 16-bit
+  (any pair within distance 3 shares at least one identical 15-bit
   segment — pigeonhole).
 - **n-gram Jaccard**: direct char-3-gram verification, used standalone on
   blocked pairs or as the verify stage after MinHash.
@@ -20,6 +20,9 @@ Five strategies, cheapest-first — the standard LLM-corpus cleaning ladder:
 At 100 TB the only material shuffles are the band-bucket joins, all on
 uniformly-distributed hash keys (no skew by construction); signature
 computation is a narrow map fused into the scan.
+
+The near-dup operators read the ``documents`` columns ``doc_id`` and
+``text``.
 """
 from __future__ import annotations
 
@@ -43,8 +46,8 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # --- minhash + LSH ------------------------------------------------------
 
 
-def word_shingles(text_col: Column | str, k: int = 3) -> Column:
-    """Distinct word k-shingles, natively: slice the token array at every
+def word_shingles(text_col: Column | str) -> Column:
+    """Distinct word 3-shingles, natively: slice the token array at every
     offset and re-join.  Turkish-aware lowering (not plain lower) so 'İ'
     canonicalizes identically here and in the DuckDB oracle."""
     from ..functions.normalizer import turkish_lower
@@ -54,40 +57,34 @@ def word_shingles(text_col: Column | str, k: int = 3) -> Column:
     n = F.size(toks)
     return F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+            F.sequence(F.lit(1), F.greatest(n - 2, F.lit(1))),
+            lambda i: F.concat_ws(" ", F.slice(toks, i, 3)),
         )
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """num_hashes-wide minhash signature: for seed i, min over shingles of
+def minhash_signature(shingles: Column) -> Column:
+    """64-wide minhash signature: for seed i, min over shingles of
     xxhash64(shingle, i).  Empty shingle sets get nulls (dropped later)."""
     return F.array(
         *[
             F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i))))
-            for i in range(num_hashes)
+            for i in range(64)
         ]
     )
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """LSH banding: docs agreeing on all rows of any band become candidate
-    pairs (a, b) with a < b.  rows_per_band = num_hashes // bands."""
-    rows = num_hashes // bands
+def minhash_candidate_pairs(df: DataFrame) -> DataFrame:
+    """LSH banding over 64-wide signatures of word 3-shingles: docs
+    agreeing on all 4 rows of any of 16 bands become candidate pairs
+    (a, b) with a < b."""
+    bands, rows = 16, 4
     sig = df.select(
-        F.col(id_col),
-        minhash_signature(word_shingles(text_col, shingle_k), num_hashes).alias("sig"),
+        F.col("doc_id"),
+        minhash_signature(word_shingles("text")).alias("sig"),
     )
     banded = sig.select(
-        id_col,
+        "doc_id",
         F.posexplode(
             F.array(
                 *[
@@ -108,25 +105,22 @@ def minhash_candidate_pairs(
             on=[
                 F.col(f"l.band") == F.col("r.band"),
                 F.col("l.band_hash") == F.col("r.band_hash"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
+                F.col("l.doc_id") < F.col("r.doc_id"),
             ],
         )
-        .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
+        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
         .distinct()
     )
     return pairs
 
 
-def verify_pairs_jaccard(
-    pairs: DataFrame, df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    shingle_k: int = 3, min_jaccard: float = 0.8,
-) -> DataFrame:
-    """Verify candidate pairs with true shingle Jaccard (two hash joins to
-    re-attach shingle sets, then native set math)."""
-    sh = df.select(F.col(id_col), word_shingles(text_col, shingle_k).alias("sh"))
+def verify_pairs_jaccard(pairs: DataFrame, df: DataFrame, min_jaccard: float = 0.8) -> DataFrame:
+    """Verify candidate pairs with true word-3-shingle Jaccard (two hash
+    joins to re-attach shingle sets, then native set math)."""
+    sh = df.select(F.col("doc_id"), word_shingles("text").alias("sh"))
     out = (
-        pairs.join(sh.withColumnRenamed(id_col, "a").withColumnRenamed("sh", "sh_a"), "a")
-        .join(sh.withColumnRenamed(id_col, "b").withColumnRenamed("sh", "sh_b"), "b")
+        pairs.join(sh.withColumnRenamed("doc_id", "a").withColumnRenamed("sh", "sh_a"), "a")
+        .join(sh.withColumnRenamed("doc_id", "b").withColumnRenamed("sh", "sh_b"), "b")
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn("union", F.size("sh_a") + F.size("sh_b") - F.col("inter"))
         .withColumn(
@@ -139,54 +133,41 @@ def verify_pairs_jaccard(
     return out
 
 
-def minhash_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    num_hashes: int = 64, bands: int = 16, min_jaccard: float = 0.8,
-) -> DataFrame:
+def minhash_dedup(df: DataFrame, min_jaccard: float = 0.8) -> DataFrame:
     """Full near-dup pass: LSH candidates -> Jaccard verify -> keeper map
     (each doc maps to the min id of its verified dup group; one min-id
     propagation round — groups from near-dup text are near-cliques, so a
     single round resolves them; iterate for strict transitive closure)."""
-    pairs = minhash_candidate_pairs(df, text_col, id_col, num_hashes, bands)
-    verified = verify_pairs_jaccard(pairs, df, text_col, id_col, min_jaccard=min_jaccard)
-    fwd = verified.select(F.col("b").alias(id_col), F.col("a").alias("keep"))
-    keeper = fwd.groupBy(id_col).agg(F.min("keep").alias("keep_id"))
-    return df.select(id_col).distinct().join(keeper, id_col, "left").select(
-        id_col, F.coalesce("keep_id", F.col(id_col)).alias("keep_id")
+    pairs = minhash_candidate_pairs(df)
+    verified = verify_pairs_jaccard(pairs, df, min_jaccard=min_jaccard)
+    fwd = verified.select(F.col("b").alias("doc_id"), F.col("a").alias("keep"))
+    keeper = fwd.groupBy("doc_id").agg(F.min("keep").alias("keep_id"))
+    return df.select("doc_id").distinct().join(keeper, "doc_id", "left").select(
+        "doc_id", F.coalesce("keep_id", F.col("doc_id")).alias("keep_id")
     )
 
 
 # --- simhash ------------------------------------------------------------
 
 
-# bit widths per token-hash mode: md5_60 takes the top 15 hex chars of
-# md5 (60 bits, fits a signed long AND is expressible in DuckDB, so the
-# whole simhash becomes oracle-checkable); xxhash64 is the cheapest JVM
-# hash for maximum-throughput runs where no external oracle is needed.
-SIMHASH_BITS = {"md5_60": 60, "xxhash64": 64}
-
-
-def simhash64(text_col: Column | str, token_hash: str = "md5_60") -> Column:
+def simhash64(text_col: Column | str) -> Column:
     """SimHash, natively: per token-hash, each bit contributes +1/-1
     weighted by term frequency; the sign vector packs back into a long.
-    Width is SIMHASH_BITS[token_hash] (60 for the default md5 mode).
 
-    Expressed as one aggregate over the token array per bit — compiled by
-    Catalyst into a single projection (no Python)."""
+    The token hash is the top 15 hex chars of md5 (60 bits): it fits a
+    signed long and is expressible in DuckDB, so the whole simhash is
+    oracle-checkable.  Expressed as one aggregate over the token array per
+    bit — compiled by Catalyst into a single projection (no Python)."""
     from ..functions.normalizer import turkish_lower
 
-    n_bits = SIMHASH_BITS[token_hash]
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     toks = F.split(turkish_lower(F.trim(c)), r"\s+")
-    if token_hash == "xxhash64":
-        hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    else:
-        hashes = F.transform(
-            toks,
-            lambda t: F.conv(F.substring(F.md5(F.encode(t, "UTF-8")), 1, 15), 16, 10).cast(
-                "long"
-            ),
-        )
+    hashes = F.transform(
+        toks,
+        lambda t: F.conv(F.substring(F.md5(F.encode(t, "UTF-8")), 1, 15), 16, 10).cast(
+            "long"
+        ),
+    )
     # bit b: sum over tokens of (bit set ? 1 : -1) > 0
     bits = [
         (
@@ -198,7 +179,7 @@ def simhash64(text_col: Column | str, token_hash: str = "md5_60") -> Column:
             )
             > 0
         ).cast("long")
-        for b in range(n_bits)
+        for b in range(60)
     ]
     out = F.lit(0).cast("long")
     for b, bit in enumerate(bits):
@@ -206,20 +187,16 @@ def simhash64(text_col: Column | str, token_hash: str = "md5_60") -> Column:
     return out
 
 
-def simhash_candidate_pairs(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", max_hamming: int = 3,
-    token_hash: str = "md5_60",
-) -> DataFrame:
-    """Hamming-distance blocking: split the simhash into 4 equal segments;
-    any pair within distance <= 3 agrees on >= 1 segment (pigeonhole), so
-    join on (segment_idx, segment_value) finds all of them, then exact
-    popcount verifies."""
-    n_bits = SIMHASH_BITS[token_hash]
-    seg_bits = n_bits // 4
+def simhash_candidate_pairs(df: DataFrame) -> DataFrame:
+    """Hamming-distance blocking: split the 60-bit simhash into 4 equal
+    segments; any pair within distance <= 3 agrees on >= 1 segment
+    (pigeonhole), so join on (segment_idx, segment_value) finds all of
+    them, then exact popcount verifies."""
+    seg_bits = 60 // 4
     seg_mask = (1 << seg_bits) - 1
-    sh = df.select(F.col(id_col), simhash64(text_col, token_hash).alias("sh"))
+    sh = df.select(F.col("doc_id"), simhash64("text").alias("sh"))
     seg = sh.select(
-        id_col,
+        "doc_id",
         "sh",
         F.posexplode(
             F.array(
@@ -237,12 +214,12 @@ def simhash_candidate_pairs(
             on=[
                 F.col("l.seg_idx") == F.col("r.seg_idx"),
                 F.col("l.seg_val") == F.col("r.seg_val"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
+                F.col("l.doc_id") < F.col("r.doc_id"),
             ],
         )
         .select(
-            F.col(f"l.{id_col}").alias("a"),
-            F.col(f"r.{id_col}").alias("b"),
+            F.col("l.doc_id").alias("a"),
+            F.col("r.doc_id").alias("b"),
             F.col("l.sh").alias("sh_a"),
             F.col("r.sh").alias("sh_b"),
         )
@@ -250,7 +227,7 @@ def simhash_candidate_pairs(
     )
     return (
         cands.withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .select("a", "b", "hamming")
     )
 
@@ -258,10 +235,7 @@ def simhash_candidate_pairs(
 # --- n-gram jaccard (standalone) ---------------------------------------
 
 
-def ngram_jaccard_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", min_jaccard: float = 0.8,
-    mode: str = "lsh",
-) -> DataFrame:
+def ngram_jaccard_dedup(df: DataFrame, min_jaccard: float = 0.8, mode: str = "lsh") -> DataFrame:
     """Char-3-gram Jaccard near-dup pairs (a, b, jaccard).
 
     ``mode="lsh"`` (default — the 100 TB path): candidate pairs come from
@@ -280,15 +254,15 @@ def ngram_jaccard_dedup(
     from .entity_resolution import char_ngrams, jaccard
 
     g = df.select(
-        F.col(id_col),
-        char_ngrams(turkish_lower(F.col(text_col))).alias("grams"),
-        (F.length(text_col) / 20).cast("int").alias("len_bucket"),
-        (F.size(F.split(turkish_lower(F.trim(F.col(text_col))), r"\s+")) < 3).alias(
+        F.col("doc_id"),
+        char_ngrams(turkish_lower(F.col("text"))).alias("grams"),
+        (F.length("text") / 20).cast("int").alias("len_bucket"),
+        (F.size(F.split(turkish_lower(F.trim(F.col("text"))), r"\s+")) < 3).alias(
             "short"
         ),
     )
     if mode == "lsh":
-        cands = minhash_candidate_pairs(df, text_col, id_col)
+        cands = minhash_candidate_pairs(df)
         # sub-shingle-width texts: exact blocked pairs within the short set
         sg = g.filter("short")
         short_cands = (
@@ -297,19 +271,19 @@ def ngram_jaccard_dedup(
                 sg.alias("r"),
                 on=[
                     F.col("l.len_bucket") == F.col("r.len_bucket"),
-                    F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
+                    F.col("l.doc_id") < F.col("r.doc_id"),
                 ],
             )
             .select(
-                F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b")
+                F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b")
             )
         )
         cands = cands.select("a", "b").union(short_cands).distinct()
         pairs = (
             cands.join(
-                g.select(F.col(id_col).alias("a"), F.col("grams").alias("grams_a")), "a"
+                g.select(F.col("doc_id").alias("a"), F.col("grams").alias("grams_a")), "a"
             )
-            .join(g.select(F.col(id_col).alias("b"), F.col("grams").alias("grams_b")), "b")
+            .join(g.select(F.col("doc_id").alias("b"), F.col("grams").alias("grams_b")), "b")
             .select("a", "b", jaccard(F.col("grams_a"), F.col("grams_b")).alias("jaccard"))
         )
     elif mode == "exact_blocked":
@@ -318,11 +292,11 @@ def ngram_jaccard_dedup(
             r,
             on=[
                 F.col("l.len_bucket") == F.col("r.len_bucket"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
+                F.col("l.doc_id") < F.col("r.doc_id"),
             ],
         ).select(
-            F.col(f"l.{id_col}").alias("a"),
-            F.col(f"r.{id_col}").alias("b"),
+            F.col("l.doc_id").alias("a"),
+            F.col("r.doc_id").alias("b"),
             jaccard(F.col("l.grams"), F.col("r.grams")).alias("jaccard"),
         )
     else:

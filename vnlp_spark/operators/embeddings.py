@@ -24,14 +24,13 @@ from pyspark.sql import functions as F
 
 def train_word2vec(
     tokens_df: DataFrame,
-    tokens_col: str = "tokens",
     dim: int = 32,
     min_count: int = 2,
     max_iter: int = 1,
     seed: int = 42,
 ):
-    """Train Word2Vec over an array<string> column; returns the fitted
-    model (model.getVectors() is the (word, vector) table)."""
+    """Train Word2Vec over the array<string> ``tokens`` column; returns
+    the fitted model (model.getVectors() is the (word, vector) table)."""
     from pyspark.ml.feature import Word2Vec
 
     w2v = Word2Vec(
@@ -39,10 +38,10 @@ def train_word2vec(
         minCount=min_count,
         maxIter=max_iter,
         seed=seed,
-        inputCol=tokens_col,
+        inputCol="tokens",
         outputCol="_w2v",
     )
-    return w2v.fit(tokens_df.select(tokens_col))
+    return w2v.fit(tokens_df.select("tokens"))
 
 
 def vectors_table(model) -> DataFrame:

@@ -81,34 +81,35 @@ def canonical_key_sql(mention: str, root: str | None = None) -> str:
     return f"CASE WHEN {generic} THEN {full_key} ELSE {other} END"
 
 
-def canonical_key(mention: str, root: str | None = None) -> Column:
-    """``canonical_key_sql`` as a Column, for DataFrame-API callers."""
-    return F.expr(canonical_key_sql(mention, root))
+def canonical_key(mention: str) -> Column:
+    """``canonical_key_sql`` of a surface alone, as a Column for
+    DataFrame-API callers."""
+    return F.expr(canonical_key_sql(mention))
 
 
-def build_entities(mentions_df: DataFrame, key_col: str = "canon_key",
-                   label_col: str = "label", surface_col: str = "mention") -> DataFrame:
-    """mentions -> entities(entity_id, canonical, type, n_mentions).
+def build_entities(mentions_df: DataFrame) -> DataFrame:
+    """mentions(canon_key, label, mention, ...) -> entities(entity_id,
+    canon_key, canonical, type, n_mentions).
 
     Two hash aggregates, both map-side-combining; the second groups the
     already-small (key, surface) table.  No window functions, no sort of
     the full mention set."""
-    per_surface = mentions_df.groupBy(key_col, label_col, surface_col).agg(
+    per_surface = mentions_df.groupBy("canon_key", "label", "mention").agg(
         F.expr("count(1) AS surface_cnt"))
     return (
-        per_surface.groupBy(key_col, label_col)
+        per_surface.groupBy("canon_key", "label")
         .agg(
             # struct ordering makes the count-tie deterministic (max
             # surface wins) — a bare max_by would pick whichever surface
             # the partial-aggregate merge order happened to see first
-            F.expr(f"max_by({surface_col}, struct(surface_cnt, {surface_col})) AS canonical"),
+            F.expr("max_by(mention, struct(surface_cnt, mention)) AS canonical"),
             F.expr("sum(surface_cnt) AS n_mentions"),
         )
         .selectExpr(
-            f"xxhash64({key_col}, {label_col}) AS entity_id",
-            f"{key_col} AS canon_key",
+            "xxhash64(canon_key, label) AS entity_id",
+            "canon_key",
             "canonical",
-            f"{label_col} AS type",
+            "label AS type",
             "n_mentions",
         )
     )
@@ -232,14 +233,14 @@ def _damerau_levenshtein_udf(a: Column | str, b: Column | str) -> Column:
     return F.coalesce(_damerau_levenshtein(a, b), F.lit(99))
 
 
-def char_ngrams(col: Column | str, n: int = 3) -> Column:
-    """Distinct character n-grams of a string, natively (no UDF)."""
+def char_ngrams(col: Column | str) -> Column:
+    """Distinct character 3-grams of a string, natively (no UDF)."""
     c = F.col(col) if isinstance(col, str) else col
     padded = F.concat(F.lit("^"), c, F.lit("$"))
     return F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(padded) - (n - 1), F.lit(1))),
-            lambda i: padded.substr(i, F.lit(n)),
+            F.sequence(F.lit(1), F.greatest(F.length(padded) - 2, F.lit(1))),
+            lambda i: padded.substr(i, F.lit(3)),
         )
     )
 
@@ -251,15 +252,7 @@ def jaccard(a: Column, b: Column) -> Column:
 
 
 def link_mentions(
-    mentions_df: DataFrame,
-    entities_df: DataFrame,
-    key_col: str = "canon_key",
-    label_col: str = "label",
-    min_jaccard: float = 0.4,
-    min_containment: float = 0.7,
-    max_edit: int = 1,
-    block_prefix: int = 2,
-    aliases_df: DataFrame | None = None,
+    mentions_df: DataFrame, entities_df: DataFrame, aliases_df: DataFrame | None = None
 ) -> DataFrame:
     """Link mentions whose key has NO exact entity to the nearest known
     entity by a blocked ASCII-folded char-3-gram join with a bounded
@@ -269,29 +262,28 @@ def link_mentions(
     1. exact hits resolve via hash join on (canon_key, type);
     2. alias exact hits (initials / curated short forms) on the folded
        key — broadcast-sized by construction;
-    3. the residual joins on (type, FOLDED-key prefix) blocks — a plain
-       equi-join that AQE skew-splits — and a candidate passes on
-       folded-gram Jaccard >= ``min_jaccard``, OR candidate-gram
-       containment >= ``min_containment`` (fused suffixed surfaces:
-       İzmirliler ⊇ izmir), OR Damerau-Levenshtein <= ``max_edit`` with
-       matching first char (typos the gram overlap dilutes: Ankra,
-       Anakra).  Argmax by (score, -distance) via one
-       max_by aggregation — no sort, no window."""
+    3. the residual joins on (type, 2-char FOLDED-key prefix) blocks — a
+       plain equi-join that AQE skew-splits — and a candidate passes on
+       folded-gram Jaccard >= 0.4, OR candidate-gram containment >= 0.7
+       (fused suffixed surfaces: İzmirliler ⊇ izmir), OR
+       Damerau-Levenshtein <= 1 with matching first char (typos the gram
+       overlap dilutes: Ankra, Anakra).  Argmax by (score, -distance) via
+       one max_by aggregation — no sort, no window."""
     exact = mentions_df.join(
-        entities_df.select(key_col, F.col("type").alias(label_col), "entity_id"),
-        on=[key_col, label_col],
+        entities_df.select("canon_key", F.col("type").alias("label"), "entity_id"),
+        on=["canon_key", "label"],
         how="left",
     )
     resolved = exact.filter(F.col("entity_id").isNotNull())
     unresolved = exact.filter(F.col("entity_id").isNull()).drop("entity_id")
 
     if aliases_df is not None:
-        ali = unresolved.withColumn("_fkey", fold_key(key_col)).join(
+        ali = unresolved.withColumn("_fkey", fold_key("canon_key")).join(
             F.broadcast(aliases_df.select(
                 F.col("alias_key").alias("_fkey"),
-                F.col("type").alias(label_col),
+                F.col("type").alias("label"),
                 F.col("entity_id"))),
-            on=["_fkey", label_col], how="left",
+            on=["_fkey", "label"], how="left",
         ).drop("_fkey")
         resolved = resolved.unionByName(
             ali.filter(F.col("entity_id").isNotNull()))
@@ -300,17 +292,17 @@ def link_mentions(
     blocked_entities = entities_df.select(
         F.col("entity_id").alias("cand_id"),
         F.col("type").alias("_cand_label"),
-        F.col(key_col).alias("cand_key"),
-        strip_generic_head(fold_key(key_col)).alias("_cand_fkey"),
-    ).withColumn("_block", F.substring("_cand_fkey", 1, block_prefix)) \
+        F.col("canon_key").alias("cand_key"),
+        strip_generic_head(fold_key("canon_key")).alias("_cand_fkey"),
+    ).withColumn("_block", F.substring("_cand_fkey", 1, 2)) \
         .withColumn("_cand_grams", char_ngrams("_cand_fkey"))
     blocked_mentions = unresolved.withColumn(
-        "_fkey", strip_generic_head(fold_key(key_col))) \
-        .withColumn("_block", F.substring("_fkey", 1, block_prefix)) \
+        "_fkey", strip_generic_head(fold_key("canon_key"))) \
+        .withColumn("_block", F.substring("_fkey", 1, 2)) \
         .withColumn("_grams", char_ngrams("_fkey"))
 
     joined = blocked_mentions.join(blocked_entities, on="_block") \
-        .filter(F.col(label_col) == F.col("_cand_label"))
+        .filter(F.col("label") == F.col("_cand_label"))
     scored = joined.withColumn(
         "_jac", jaccard(F.col("_grams"), F.col("_cand_grams"))
     ).withColumn(
@@ -319,20 +311,12 @@ def link_mentions(
         # edit-verify only where the cheap gram gate failed but the pair
         # is plausibly a typo (same first char, close length)
         "_dl",
-        F.when(
-            (F.col("_jac") >= min_jaccard)
-            | (F.col("_cont") >= min_containment),
-            F.lit(0),
-        ).when(
+        F.when((F.col("_jac") >= 0.4) | (F.col("_cont") >= 0.7), F.lit(0)).when(
             (F.substring("_fkey", 1, 1) == F.substring("_cand_fkey", 1, 1))
             & (F.abs(F.length("_fkey") - F.length("_cand_fkey")) <= 2),
             _damerau_levenshtein_udf("_fkey", "_cand_fkey"),
         ).otherwise(F.lit(99)),
-    ).filter(
-        (F.col("_jac") >= min_jaccard)
-        | (F.col("_cont") >= min_containment)
-        | (F.col("_dl") <= max_edit)
-    )
+    ).filter((F.col("_jac") >= 0.4) | (F.col("_cont") >= 0.7) | (F.col("_dl") <= 1))
     group_cols = [c for c in unresolved.columns]
     best = (
         scored.groupBy(*group_cols)

@@ -599,10 +599,10 @@ class CandidateGenerator:
     classes and the post-passes ask for the same token's candidates, and
     every caller shares the returned list, so none may mutate it."""
 
-    def __init__(self, stem_dic=None, suffix_dic=None, exact_table=None):
-        self.stem_dic = stem_dic if stem_dic is not None else _patched_stem_dict()
-        self.suffix_dic = suffix_dic if suffix_dic is not None else resources.suffix_dict()
-        self.exact = exact_table if exact_table is not None else resources.exact_lookup()
+    def __init__(self):
+        self.stem_dic = _patched_stem_dict()
+        self.suffix_dic = resources.suffix_dict()
+        self.exact = resources.exact_lookup()
         for k, v in _IRREGULAR_EXACT.items():
             self.exact.setdefault(k, v)
         self._parsed: dict = {}

@@ -65,14 +65,14 @@ FEATURE_SCHEMA = StructType(
 FEATURE_DIM = 64
 
 
-def _pseudo_decode(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
+def _pseudo_decode(payload: bytes) -> np.ndarray:
     """Deterministic stand-in for a real decoder: content-addressed
     pseudo-features (sha256-seeded), stable across executors/runs."""
     if payload is None:
         payload = b""
     seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big") % (2**32)
     rng = np.random.default_rng(seed)
-    v = rng.standard_normal(dim).astype(np.float32)
+    v = rng.standard_normal(FEATURE_DIM).astype(np.float32)
     # each float32 square is exact in float64 and fsum rounds once, so the
     # norm does not depend on the summation order a BLAS kernel picks
     return v / (math.sqrt(math.fsum(float(x) * float(x) for x in v)) + 1e-9)
@@ -128,7 +128,7 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     return media.filter(F.col("kind") == "video").mapInArrow(gen, schema=schema)
 
 
-def synth_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
+def synth_media(spark, n: int = 100) -> DataFrame:
     """Deterministic synthetic media table in MEDIA_SCHEMA (binary payloads
     derived from ids) for tests/benchmarks."""
     df = spark.range(n)
@@ -146,7 +146,7 @@ def synth_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
             F.concat(F.lit("application/"), kind).alias("mime"),
             F.lit(640).alias("width"),
             F.lit(480).alias("height"),
-            (F.pmod(F.xxhash64("id", F.lit(seed + 1)), F.lit(10000)) + 1000)
+            (F.pmod(F.xxhash64("id", F.lit(43)), F.lit(10000)) + 1000)
             .cast("int")
             .alias("duration_ms"),
         ).alias("meta"),

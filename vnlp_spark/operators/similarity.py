@@ -11,6 +11,9 @@ Two plans with one answer shape (query_id, vec_id, cos_sim, rank):
   exactly within the probed set.  At 100 TB this turns a full-corpus
   scan per query into a bucket-local join on uniformly distributed keys.
 
+Every plan reads the corpus columns ``vec_id`` / ``embedding`` and the
+query columns ``query_id`` / ``query_vec``.
+
 Signatures are computed by an Arrow UDF — one numpy matmul per Arrow
 batch against a broadcast hyperplane matrix (a few KB).
 """
@@ -41,27 +44,19 @@ def cosine_sim(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k neighbors per query (excluding self-matches by id)."""
-    q = F.broadcast(queries.select(query_id_col, query_vec_col))
-    scored = corpus.select(id_col, vec_col).crossJoin(q).select(
-        query_id_col,
-        id_col,
-        F.round(cosine_sim(F.col(vec_col), F.col(query_vec_col)), 6).alias("cos_sim"),
+    q = F.broadcast(queries.select("query_id", "query_vec"))
+    scored = corpus.select("vec_id", "embedding").crossJoin(q).select(
+        "query_id",
+        "vec_id",
+        F.round(cosine_sim(F.col("embedding"), F.col("query_vec")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
+        .orderBy("query_id", "rank")
     )
 
 
@@ -86,10 +81,10 @@ def fixed_unit_centroids(dim: int, n_cells: int, seed: int = 7) -> np.ndarray:
     return c / np.clip(np.linalg.norm(c, axis=1, keepdims=True), 1e-12, None)
 
 
-def make_lsh_bucket_udf(dim: int, n_planes: int = 12, seed: int = 42):
+def make_lsh_bucket_udf(dim: int, n_planes: int = 12):
     """Random-hyperplane signature UDF: vector -> long bucket id (the sign
     bit pattern against ``n_planes`` seeded Gaussian hyperplanes)."""
-    planes = lsh_planes(dim, n_planes, seed)
+    planes = lsh_planes(dim, n_planes)
 
     @arrow_udf(LongType())
     def bucket(vecs: pa.Array) -> pa.Array:
@@ -107,77 +102,57 @@ def make_lsh_bucket_udf(dim: int, n_planes: int = 12, seed: int = 42):
 
 
 def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 10,
-    n_planes: int = 12,
-    multi_probe: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    seed: int = 42,
+    corpus: DataFrame, queries: DataFrame, dim: int, k: int = 10, n_planes: int = 12
 ) -> DataFrame:
     """Approximate top-k: bucket join + exact rerank inside buckets.
 
-    With multi_probe, each query also probes every 1-bit-flip neighbor
-    bucket (n_planes+1 probes) — recall rises steeply for small extra
-    fan-out because near vectors differ in at most a few sign bits.
+    Each query probes its own bucket and every 1-bit-flip neighbor bucket
+    (n_planes+1 probes) — recall rises steeply for small extra fan-out
+    because near vectors differ in at most a few sign bits.
     """
-    bucket_udf = make_lsh_bucket_udf(dim, n_planes, seed)
-    c = corpus.select(id_col, vec_col).withColumn("bucket", bucket_udf(F.col(vec_col)))
-    q = queries.select(query_id_col, query_vec_col).withColumn(
-        "bucket0", bucket_udf(F.col(query_vec_col))
+    bucket_udf = make_lsh_bucket_udf(dim, n_planes)
+    c = corpus.select("vec_id", "embedding").withColumn("bucket", bucket_udf(F.col("embedding")))
+    q = queries.select("query_id", "query_vec").withColumn(
+        "bucket0", bucket_udf(F.col("query_vec"))
     )
-    if multi_probe:
-        probes = F.array(
-            F.col("bucket0"),
-            *[F.col("bucket0").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)],
-        )
-    else:
-        probes = F.array(F.col("bucket0"))
-    qx = q.select(query_id_col, query_vec_col, F.explode(probes).alias("bucket"))
+    probes = F.array(
+        F.col("bucket0"),
+        *[F.col("bucket0").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)],
+    )
+    qx = q.select("query_id", "query_vec", F.explode(probes).alias("bucket"))
     joined = c.join(qx, "bucket").select(
-        query_id_col,
-        id_col,
-        F.round(cosine_sim(F.col(vec_col), F.col(query_vec_col)), 6).alias("cos_sim"),
+        "query_id",
+        "vec_id",
+        F.round(cosine_sim(F.col("embedding"), F.col("query_vec")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.col("vec_id"))
     return (
         joined.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
+        .orderBy("query_id", "rank")
     )
 
 
 def train_coarse_quantizer(
-    corpus: DataFrame,
-    dim: int,
-    n_cells: int = 64,
-    sample_size: int = 20_000,
-    n_iter: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
+    corpus: DataFrame, dim: int, n_cells: int = 64, seed: int = 42
 ) -> np.ndarray:
-    """Spherical k-means coarse quantizer for IVF, trained on a bounded
-    driver-side sample (the centroid table is tiny — n_cells x dim — and is
-    broadcast; the corpus itself is never collected).  Returns
-    L2-normalized centroids (n_cells, dim).
+    """Spherical k-means coarse quantizer for IVF (10 iterations), trained
+    on a bounded driver-side sample (the centroid table is tiny — n_cells
+    x dim — and is broadcast; the corpus itself is never collected).
+    Returns L2-normalized centroids (n_cells, dim).
 
-    The sample is the first ``sample_size`` rows by ``id_col`` — Spark
-    plans an unsorted limit() as take-whatever-partition-answers-first,
-    which would make the k-means init depend on partition layout;
-    orderBy+limit compiles to TakeOrderedAndProject (per-partition heap,
-    no full sort) and is deterministic for a given seed + corpus."""
+    The sample is the first 20,000 rows by ``vec_id`` — Spark plans an
+    unsorted limit() as take-whatever-partition-answers-first, which would
+    make the k-means init depend on partition layout; orderBy+limit
+    compiles to TakeOrderedAndProject (per-partition heap, no full sort)
+    and is deterministic for a given seed + corpus."""
     sample = [
-        r[vec_col]
-        for r in corpus.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(sample_size)
+        r["embedding"]
+        for r in corpus.select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(20_000)
         .collect()
-        if r[vec_col] is not None
+        if r["embedding"] is not None
     ]
     x = np.asarray(sample, dtype=np.float64)
     norms = np.linalg.norm(x, axis=1, keepdims=True)
@@ -185,7 +160,7 @@ def train_coarse_quantizer(
     rng = np.random.default_rng(seed)
     k = min(n_cells, len(x))
     cent = x[rng.choice(len(x), size=k, replace=False)]
-    for _ in range(n_iter):
+    for _ in range(10):
         assign = np.argmax(x @ cent.T, axis=1)
         for c in range(k):
             members = x[assign == c]
@@ -219,11 +194,6 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 64,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    seed: int = 42,
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF approximate top-k — the inverted-file scale path next to LSH.
@@ -239,11 +209,9 @@ def ivf_topk(
     n_probe/n_cells of the corpus.  Writing the corpus partitioned by
     ``cell`` makes repeated query batches partition-pruned scans."""
     if centroids is None:
-        centroids = train_coarse_quantizer(
-            corpus, dim, n_cells=n_cells, id_col=id_col, vec_col=vec_col, seed=seed
-        )
+        centroids = train_coarse_quantizer(corpus, dim, n_cells=n_cells)
     cell_udf = make_ivf_cell_udf(centroids)
-    c = corpus.select(id_col, vec_col).withColumn("cell", cell_udf(F.col(vec_col)))
+    c = corpus.select("vec_id", "embedding").withColumn("cell", cell_udf(F.col("embedding")))
 
     cent = centroids
 
@@ -261,49 +229,43 @@ def ivf_topk(
                 out[i] = [int(t) for t in top[row]]
         return pa.array(out, type=pa.list_(pa.int64()))
 
-    q = queries.select(query_id_col, query_vec_col).withColumn(
-        "cell", F.explode(probe_cells(F.col(query_vec_col)))
+    q = queries.select("query_id", "query_vec").withColumn(
+        "cell", F.explode(probe_cells(F.col("query_vec")))
     )
     joined = c.join(q, "cell").select(
-        query_id_col,
-        id_col,
-        F.round(cosine_sim(F.col(vec_col), F.col(query_vec_col)), 6).alias("cos_sim"),
+        "query_id",
+        "vec_id",
+        F.round(cosine_sim(F.col("embedding"), F.col("query_vec")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.col("vec_id"))
     return (
         joined.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .orderBy(query_id_col, "rank")
+        .orderBy("query_id", "rank")
     )
 
 
 def embedding_near_dups(
-    df: DataFrame,
-    dim: int,
-    min_cos: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 14,
-    seed: int = 42,
-    multi_probe: bool = True,
+    df: DataFrame, dim: int, min_cos: float = 0.95, multi_probe: bool = True
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b) via LSH blocking +
     exact cosine verify — the semantic arm of the dedup suite.
 
     With ``multi_probe`` (default) the left side also probes every
     1-bit-flip neighbor bucket, so a pair is only missed when its two
-    vectors disagree on >= 2 of the ``n_planes`` sign bits — for
+    vectors disagree on >= 2 of the 14 sign bits — for
     true near-dups (cos >= 0.95) that drives recall to ~1 at the cost of
-    (n_planes+1)x fan-out on one side of the bucket join, which stays a
+    15x fan-out on one side of the bucket join, which stays a
     join on uniformly-distributed hash keys at 100 TB."""
-    bucket_udf = make_lsh_bucket_udf(dim, n_planes, seed)
-    v = df.select(id_col, vec_col).withColumn("bucket", bucket_udf(F.col(vec_col)))
+    n_planes = 14
+    bucket_udf = make_lsh_bucket_udf(dim, n_planes)
+    v = df.select("vec_id", "embedding").withColumn("bucket", bucket_udf(F.col("embedding")))
     if multi_probe:
         probes = F.array(
             F.col("bucket"),
             *[F.col("bucket").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)],
         )
-        l = v.select(id_col, vec_col, F.explode(probes).alias("bucket")).alias("l")
+        l = v.select("vec_id", "embedding", F.explode(probes).alias("bucket")).alias("l")
     else:
         l = v.alias("l")
     r = v.alias("r")
@@ -312,14 +274,14 @@ def embedding_near_dups(
             r,
             on=[
                 F.col("l.bucket") == F.col("r.bucket"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
+                F.col("l.vec_id") < F.col("r.vec_id"),
             ],
         )
         .select(
-            F.col(f"l.{id_col}").alias("a"),
-            F.col(f"r.{id_col}").alias("b"),
-            F.col(f"l.{vec_col}").alias("va"),
-            F.col(f"r.{vec_col}").alias("vb"),
+            F.col("l.vec_id").alias("a"),
+            F.col("r.vec_id").alias("b"),
+            F.col("l.embedding").alias("va"),
+            F.col("r.embedding").alias("vb"),
         )
         .dropDuplicates(["a", "b"])
         .select(

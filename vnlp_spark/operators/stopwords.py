@@ -23,18 +23,15 @@ from pyspark.sql import functions as F
 from ..resources import stop_words
 
 
-def drop_stop_words(df: DataFrame, token_col: str = "token", extra: List[str] | None = None) -> DataFrame:
-    """Filter rows whose token is a static stopword (reference
+def drop_stop_words(df: DataFrame) -> DataFrame:
+    """Filter rows whose ``token`` is a static stopword (reference
     stopword_remover.py:120-142; list per turkish_stop_words.txt)."""
-    words = set(stop_words())
-    if extra:
-        words |= set(extra)
-    return df.filter(~F.col(token_col).isin(sorted(words)))
+    return df.filter(~F.col("token").isin(sorted(set(stop_words()))))
 
 
-def drop_stop_words_from_array(col: Column | str, extra: List[str] | None = None) -> Column:
+def drop_stop_words_from_array(col: Column | str) -> Column:
     """array<string> variant: keeps order, no explode needed."""
-    words = sorted(set(stop_words()) | set(extra or []))
+    words = sorted(set(stop_words()))
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(c, lambda t: ~t.isin(words))
 
@@ -73,43 +70,39 @@ def py_dynamically_detect_stop_words(tokens: List[str], rare_words_freq: int = 0
     return detected
 
 
-def dynamically_detect_stop_words(
-    df: DataFrame,
-    token_col: str = "token",
-    rare_words_freq: int = 0,
-    head_size: int = 200_000,
-) -> List[str]:
-    """Distributed dynamic stopword detection.
+def dynamically_detect_stop_words(df: DataFrame, rare_words_freq: int = 0) -> List[str]:
+    """Distributed dynamic stopword detection over a ``token`` column.
 
     The frequency table is computed with a (partial+final) hash aggregate;
-    only its head — the top ``head_size`` tokens by count — is collected for
+    only its head — the top 200,000 tokens by count — is collected for
     the knee-point math.  The knee of a Zipfian curve always sits in the
-    head, so this is exact whenever the vocabulary fits ``head_size`` and a
+    head, so this is exact whenever the vocabulary fits the head and a
     tight approximation far beyond; rare-word detection stays fully
     distributed.
     """
-    freq = df.groupBy(token_col).agg(F.count(F.lit(1)).alias("cnt"))
+    freq = df.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     head = (
-        freq.orderBy(F.desc("cnt"), F.desc(token_col))
-        .limit(head_size)
+        freq.orderBy(F.desc("cnt"), F.desc("token"))
+        .limit(200_000)
         .collect()
     )
-    tokens_sorted = np.array([r[token_col] for r in head], dtype=object)
+    tokens_sorted = np.array([r["token"] for r in head], dtype=object)
     counts_sorted = np.array([r["cnt"] for r in head], dtype=np.int64)
     detected = knee_point_cut(tokens_sorted, counts_sorted)
     if rare_words_freq > 0:
-        rare = freq.filter(F.col("cnt") <= rare_words_freq).select(token_col).collect()
-        detected += [r[token_col] for r in rare]
+        rare = freq.filter(F.col("cnt") <= rare_words_freq).select("token").collect()
+        detected += [r["token"] for r in rare]
     else:
         detected += tokens_sorted[counts_sorted <= 0].tolist()  # no-op, parity with rare_words_freq=0
     return detected
 
 
-def token_frequencies(df: DataFrame, token_col: str = "token") -> DataFrame:
-    """Descending frequency table (reference A1+O1) — partial/final hash
-    aggregate, shuffle only on the (small) distinct token keys."""
+def token_frequencies(df: DataFrame) -> DataFrame:
+    """Descending frequency table of a ``token`` column (reference A1+O1)
+    — partial/final hash aggregate, shuffle only on the (small) distinct
+    token keys."""
     return (
-        df.groupBy(token_col)
+        df.groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.col(token_col))
+        .orderBy(F.desc("cnt"), F.col("token"))
     )

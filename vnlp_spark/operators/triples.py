@@ -20,8 +20,8 @@ from pyspark.sql import DataFrame
 _PRED_RELS = ("root", "parataxis")
 
 
-def triples_sql(arcs: str = "arcs", mentions: str = "mentions") -> str:
-    """SQL text: arcs array<struct<idx,token,head,deprel>> + mentions
+def triples_sql() -> str:
+    """SQL text: ``arcs`` array<struct<idx,token,head,deprel>> + ``mentions``
     array<struct<mention,label,first_tok,last_tok>>
     -> array<struct<subj,pred,obj,obl,subj_type,obj_type>>.
 
@@ -31,17 +31,17 @@ def triples_sql(arcs: str = "arcs", mentions: str = "mentions") -> str:
 
     def child(rel: str) -> str:
         # try_element_at: ANSI-safe null when the predicate has no such child
-        return (f"try_element_at(filter({arcs}, "
+        return ("try_element_at(filter(arcs, "
                 f"x -> x.head = p.idx AND x.deprel = '{rel}'), 1)")
 
     def mention_label(tok: str) -> str:
         # token idx is 1-based; mention spans are 0-based token positions
-        return (f"try_element_at(filter({mentions}, m -> m.first_tok <= {tok}.idx - 1 "
+        return (f"try_element_at(filter(mentions, m -> m.first_tok <= {tok}.idx - 1 "
                 f"AND m.last_tok >= {tok}.idx - 1), 1).label")
 
     rels = ", ".join(f"'{r}'" for r in _PRED_RELS)
     # bind each predicate's children once, then read token and type off them
-    clauses = (f"transform(filter({arcs}, a -> a.deprel IN ({rels})), p -> named_struct("
+    clauses = (f"transform(filter(arcs, a -> a.deprel IN ({rels})), p -> named_struct("
                f"'pred', p.token, 's', {child('nsubj')}, 'o', {child('obj')}, "
                f"'l', {child('obl')}))")
     one = (f"named_struct('subj', c.s.token, 'pred', c.pred, 'obj', c.o.token, "
@@ -52,8 +52,7 @@ def triples_sql(arcs: str = "arcs", mentions: str = "mentions") -> str:
             "t -> t.subj IS NOT NULL OR t.obj IS NOT NULL OR t.obl IS NOT NULL)")
 
 
-def explode_triples(df: DataFrame, arcs_col: str = "arcs", mentions_col: str = "mentions",
-                    keep_cols: tuple = ("url", "sent_id")) -> DataFrame:
-    """Sentence-level df -> flat triples table
-    (keep_cols..., subj, pred, obj, obl, subj_type, obj_type)."""
-    return df.selectExpr(*keep_cols, f"inline({triples_sql(arcs_col, mentions_col)})")
+def explode_triples(df: DataFrame) -> DataFrame:
+    """Annotated sentence rows -> flat triples table
+    (url, warc_ts, sent_id, subj, pred, obj, obl, subj_type, obj_type)."""
+    return df.selectExpr("url", "warc_ts", "sent_id", f"inline({triples_sql()})")

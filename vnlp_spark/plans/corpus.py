@@ -68,12 +68,10 @@ MAX_SENTS_PER_DOC = 12
 def generate_web_pages(
     spark: SparkSession,
     n_docs: int,
-    turkish_fraction: float = 0.9,
-    seed: int = 42,
     n_partitions: int | None = None,
     unique_tail: bool = False,
 ) -> DataFrame:
-    """n_docs synthetic pages, deterministic in (n_docs, seed).
+    """n_docs synthetic pages, 90% Turkish, deterministic in n_docs.
 
     ``unique_tail=True`` appends a per-document unique sentence (numeric
     id tokens), making every document's sentence set distinct — use for
@@ -83,13 +81,12 @@ def generate_web_pages(
         n_partitions = max(8, spark.sparkContext.defaultParallelism)
     pool_tr = F.array(*[F.lit(s) for s in SENTENCE_POOL])
     pool_en = F.array(*[F.lit(s) for s in _EN_SENTENCES])
-    tr_cut = int(turkish_fraction * 100)
 
     df = spark.range(0, n_docs, 1, n_partitions)
     # multi-arg xxhash64 (no id arithmetic — would overflow long under ANSI
     # at trillion-doc ids)
-    h = lambda j: F.xxhash64(F.col("id"), F.lit(seed), F.lit(j))  # noqa: E731
-    is_tr = F.pmod(h(0), F.lit(100)) < tr_cut
+    h = lambda j: F.xxhash64(F.col("id"), F.lit(42), F.lit(j))  # noqa: E731
+    is_tr = F.pmod(h(0), F.lit(100)) < 90
     n_sents = (F.pmod(h(1), F.lit(MAX_SENTS_PER_DOC)) + 1).cast("int")
 
     # Zipf-ish skew: half of all sentence draws collapse onto the first 6

@@ -120,8 +120,8 @@ def score_vs_ud_gold(spark, entries=None) -> dict:
     }
 
 
-def annotator_scores(entries=None) -> dict:
-    """Pure-python eval of the surrogate annotators against the gold:
+def annotator_scores() -> dict:
+    """Pure-python eval of the surrogate annotators against the tuning gold:
     UPOS accuracy, UAS/LAS, NER token accuracy + macro F1 over PER/LOC/ORG.
     Published in BENCH.md next to the reference's own numbers."""
     from ..functions.tokenizer import py_treebank_tokenize
@@ -134,8 +134,7 @@ def annotator_scores(entries=None) -> dict:
     ner_ok = ner_n = 0
     per_label = {lab: [0, 0, 0] for lab in ("PER", "LOC", "ORG")}  # tp, fp, fn
     tok_mismatch = 0
-    entries = UD_GOLD if entries is None else entries
-    for entry in entries:
+    for entry in UD_GOLD:
         toks = entry["tokens"]
         if py_treebank_tokenize(entry["text"]) != toks:
             tok_mismatch += 1
@@ -174,7 +173,7 @@ def annotator_scores(entries=None) -> dict:
         rec = tp / (tp + fn) if tp + fn else 0.0
         f1s[lab] = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
     return {
-        "n_sentences": len(entries),
+        "n_sentences": len(UD_GOLD),
         "tokenization_mismatches": tok_mismatch,
         "upos_accuracy": pos_ok / pos_n if pos_n else 0.0,
         "uas": uas_ok / arc_n if arc_n else 0.0,

@@ -27,11 +27,11 @@ from pyspark.sql import functions as F
 N_BUCKETS = 64
 
 
-def _bucket(col: str = "url") -> F.Column:
+def _bucket(col: str) -> F.Column:
     return F.pmod(F.xxhash64(F.col(col)), F.lit(N_BUCKETS)).alias("bucket")
 
 
-def stage_lineage(df: DataFrame, stage: str, key_col: str = "url") -> DataFrame:
+def stage_lineage(df: DataFrame, stage: str, key_col: str) -> DataFrame:
     """Per-bucket row counts + content checksums for a stage output."""
     cols = [F.col(c) for c in df.columns]
     return (
@@ -51,10 +51,9 @@ def stage_lineage(df: DataFrame, stage: str, key_col: str = "url") -> DataFrame:
 class StageRunner:
     """Materializes pipeline stages with resume semantics."""
 
-    def __init__(self, spark: SparkSession, base_dir: str, key_col: str = "url"):
+    def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir
-        self.key_col = key_col
         os.makedirs(base_dir, exist_ok=True)
 
     def _paths(self, stage: str):
@@ -69,22 +68,19 @@ class StageRunner:
             os.path.join(lin_dir, "_SUCCESS")
         )
 
-    def run(self, stage: str, df: DataFrame, force: bool = False,
-            partition_by: str | None = None) -> DataFrame:
+    def run(self, stage: str, df: DataFrame, force: bool = False) -> DataFrame:
         """Write `df` as the stage output (or read the prior output when
-        already complete) and return the materialized DataFrame."""
+        already complete) and return the materialized DataFrame.  Lineage
+        buckets by ``url``, or by the first column of a table without one."""
         data_dir, lin_dir = self._paths(stage)
         if self.is_done(stage) and not force:
             return self.spark.read.parquet(data_dir)
         for d in (data_dir, lin_dir):
             if os.path.exists(d):
                 shutil.rmtree(d)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(data_dir)
+        df.write.mode("overwrite").parquet(data_dir)
         out = self.spark.read.parquet(data_dir)
-        key = self.key_col if self.key_col in out.columns else out.columns[0]
+        key = "url" if "url" in out.columns else out.columns[0]
         stage_lineage(out, stage, key).write.mode("overwrite").parquet(lin_dir)
         return out
 

@@ -129,14 +129,12 @@ def _annotate_document_udf(texts: pa.Array) -> pa.Array:
     return pa.array(rows, type=_DOC_ARROW_TYPE)
 
 
-def sentences_stage(docs: DataFrame, lang: str | None = "tr") -> DataFrame:
-    """documents -> (url, warc_ts, sent_id, sentence) through the
+def sentences_stage(docs: DataFrame) -> DataFrame:
+    """Turkish documents -> (url, warc_ts, sent_id, sentence) through the
     ``split_sentences`` UDF alone: the input of ``annotate_stage`` when
     NER runs on real weights.  The KG plans take their sentence rows from
     ``annotated_documents_stage`` instead."""
-    if lang is not None:
-        docs = docs.filter(F.col("lang") == lang)
-    return docs.select(
+    return docs.filter(F.col("lang") == "tr").select(
         "url",
         "warc_ts",
         F.posexplode(split_sentences("text")).alias("sent_id", "sentence"),
@@ -203,14 +201,20 @@ def annotated_documents_stage(docs: DataFrame, lang: str | None = "tr") -> DataF
 
 def triples_stage(annotated: DataFrame) -> DataFrame:
     """-> flat (url, warc_ts, sent_id, subj, pred, obj, obl, subj_type, obj_type)."""
-    return explode_triples(annotated, keep_cols=("url", "warc_ts", "sent_id"))
+    return explode_triples(annotated)
+
+
+# SQL text: the canonical key of an exploded mention ``m`` of an annotated
+# row.  The head token's root (the analysis at ``last_tok`` up to its first
+# ``+``) is preferred over the surface, so the entity table and the
+# streaming aggregates give the mention "Ankara'da üniversiteyi" one key,
+# 'üniversite'.
+MENTION_KEY_SQL = canonical_key_sql(
+    "m.mention", "split(try_element_at(analyses, m.last_tok + 1), '[+]')[0]")
 
 
 def mentions_stage(annotated: DataFrame) -> DataFrame:
-    """-> flat mention rows with canonical keys (roots preferred): the
-    head token's root is the analysis at ``last_tok`` up to its first
-    ``+``."""
-    head_root = "split(try_element_at(analyses, m.last_tok + 1), '[+]')[0]"
+    """-> flat mention rows with canonical keys (``MENTION_KEY_SQL``)."""
     return annotated.selectExpr(
         "url", "sent_id", "analyses", "explode(mentions) AS m"
     ).selectExpr(
@@ -220,7 +224,7 @@ def mentions_stage(annotated: DataFrame) -> DataFrame:
         "m.label AS label",
         "m.first_tok AS first_tok",
         "m.last_tok AS last_tok",
-        f"{canonical_key_sql('m.mention', head_root)} AS canon_key",
+        f"{MENTION_KEY_SQL} AS canon_key",
     )
 
 

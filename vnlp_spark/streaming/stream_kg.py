@@ -6,11 +6,11 @@ module exists for the continuous-ingestion deployment mode: the SAME fused
 annotation stage (``annotated_documents_stage``) and triple extractor run
 unchanged on a streaming DataFrame (they are stateless per document, so
 trivially micro-batch-safe), plus watermarked event-time windowing for
-rolling entity statistics.
+entity statistics, keyed like the batch entity table.
 
     pages = (spark.readStream.schema(WEB_PAGE_SCHEMA).parquet(landing_dir))
     triples = stream_triples(pages)                      # append mode
-    counts  = windowed_mention_counts(pages, "10 minutes", "5 minutes")
+    counts  = windowed_mention_counts(pages, "10 minutes")
     counts.writeStream.outputMode("append")...           # late data handled
 """
 from __future__ import annotations
@@ -25,9 +25,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.entity_resolution import canonical_key_sql
 from ..operators.triples import explode_triples
-from ..plans.pipeline import annotated_documents_stage
+from ..plans.pipeline import MENTION_KEY_SQL, annotated_documents_stage
 
 WEB_PAGE_SCHEMA = StructType(
     [
@@ -40,35 +39,33 @@ WEB_PAGE_SCHEMA = StructType(
 )
 
 
-def stream_triples(pages: DataFrame, lang: str | None = "tr") -> DataFrame:
+def stream_triples(pages: DataFrame) -> DataFrame:
     """Streaming documents -> (url, warc_ts, sent_id, subj, pred, obj, ...)
     in append mode (no aggregation state)."""
-    ann = annotated_documents_stage(pages, lang)
-    return explode_triples(ann, keep_cols=("url", "warc_ts", "sent_id"))
+    ann = annotated_documents_stage(pages)
+    return explode_triples(ann)
 
 
 def windowed_mention_counts(
     pages: DataFrame,
     window: str = "10 minutes",
-    slide: str | None = None,
     watermark: str = "30 minutes",
-    lang: str | None = "tr",
 ) -> DataFrame:
-    """Rolling per-entity mention counts over event time (warc_ts) with a
+    """Tumbling per-entity mention counts over event time (warc_ts) with a
     watermark for late crawls — the streaming analog of the entities
-    aggregate.  Output: (window, canon_key, label, n_mentions)."""
-    ann = annotated_documents_stage(pages, lang).withWatermark("warc_ts", watermark)
-    mentions = ann.selectExpr("warc_ts", "explode(mentions) AS m").selectExpr(
-        "warc_ts", f"{canonical_key_sql('m.mention')} AS canon_key", "m.label AS label"
+    aggregate, keyed like it.  Output: (window, canon_key, label,
+    n_mentions)."""
+    ann = annotated_documents_stage(pages).withWatermark("warc_ts", watermark)
+    mentions = ann.selectExpr("warc_ts", "analyses", "explode(mentions) AS m").selectExpr(
+        "warc_ts", f"{MENTION_KEY_SQL} AS canon_key", "m.label AS label"
     )
-    win = F.window("warc_ts", window, slide) if slide else F.window("warc_ts", window)
     return (
-        mentions.groupBy(win.alias("window"), "canon_key", "label")
+        mentions.groupBy(F.window("warc_ts", window).alias("window"), "canon_key", "label")
         .agg(F.count(F.lit(1)).alias("n_mentions"))
     )
 
 
-def stateful_entity_totals(pages: DataFrame, lang: str | None = "tr") -> DataFrame:
+def stateful_entity_totals(pages: DataFrame) -> DataFrame:
     """Custom stateful streaming operator (``applyInPandasWithState``):
     running per-entity mention totals held in the state store across
     micro-batches.  Unlike the watermarked window aggregate above, totals
@@ -87,9 +84,9 @@ def stateful_entity_totals(pages: DataFrame, lang: str | None = "tr") -> DataFra
     from pyspark.sql.types import StructField as _Field
     from pyspark.sql.types import StructType as _Struct
 
-    ann = annotated_documents_stage(pages, lang)
-    mentions = ann.selectExpr("explode(mentions) AS m").selectExpr(
-        f"{canonical_key_sql('m.mention')} AS canon_key"
+    ann = annotated_documents_stage(pages)
+    mentions = ann.selectExpr("analyses", "explode(mentions) AS m").selectExpr(
+        f"{MENTION_KEY_SQL} AS canon_key"
     )
 
     out_schema = _Struct(
