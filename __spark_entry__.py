@@ -874,10 +874,11 @@ _COS_SQL = (
 )
 
 
-def _knn_lsh_oracle(dim: int = 64, n_planes: int = 8, seed: int = 42, k: int = 5) -> str:
+def _knn_lsh_oracle() -> str:
     from vnlp_spark.operators.similarity import lsh_planes
 
-    planes = lsh_planes(dim, n_planes, seed)
+    n_planes = 8
+    planes = lsh_planes(64, n_planes, 42)
     bucket_terms = " + ".join(
         f"(CASE WHEN list_dot_product(v, {_fmt_vec_sql(planes[:, b])}) > 0 "
         f"THEN {1 << b} ELSE 0 END)"
@@ -898,15 +899,15 @@ def _knn_lsh_oracle(dim: int = 64, n_planes: int = 8, seed: int = 42, k: int = 5
     )
     SELECT query_id, vec_id, cos_sim,
       row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-    FROM joined QUALIFY rank <= {k} ORDER BY query_id, rank
+    FROM joined QUALIFY rank <= 5 ORDER BY query_id, rank
     """
 
 
-def _knn_ivf_oracle(dim: int = 64, n_cells: int = 16, n_probe: int = 4, seed: int = 7,
-                    k: int = 5) -> str:
+def _knn_ivf_oracle() -> str:
     from vnlp_spark.operators.similarity import fixed_unit_centroids
 
-    cents = fixed_unit_centroids(dim, n_cells, seed)
+    n_cells = 16
+    cents = fixed_unit_centroids(64, n_cells, 7)
     cent_rows = ", ".join(f"({i}, {_fmt_vec_sql(cents[i])})" for i in range(n_cells))
     cos = _COS_SQL.format(a="c.v", b="q.v")
     # unit centroids: argmax_c dot(v/||v||, c) == argmax_c dot(v, c), and a
@@ -926,7 +927,7 @@ def _knn_ivf_oracle(dim: int = 64, n_cells: int = 16, n_probe: int = 4, seed: in
       SELECT vec_id AS query_id, cid AS cell FROM (
         SELECT vec_id, cid,
           row_number() OVER (PARTITION BY vec_id ORDER BY d DESC, cid) AS rn
-        FROM dots WHERE vec_id < 3) WHERE rn <= {n_probe}
+        FROM dots WHERE vec_id < 3) WHERE rn <= 4
     ),
     joined AS (
       SELECT p.query_id, c.vec_id, {cos} AS cos_sim
@@ -937,16 +938,16 @@ def _knn_ivf_oracle(dim: int = 64, n_cells: int = 16, n_probe: int = 4, seed: in
     )
     SELECT query_id, vec_id, cos_sim,
       row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-    FROM joined QUALIFY rank <= {k} ORDER BY query_id, rank
+    FROM joined QUALIFY rank <= 5 ORDER BY query_id, rank
     """
 
 
-def _simhash_oracle(n_bits: int = 60, max_hamming: int = 3) -> str:
+def _simhash_oracle() -> str:
     # replays simhash64: 60-bit token hash from the
     # top 15 md5 hex chars, per-bit +/-1 vote, sign pack; the all-pairs
     # hamming filter equals the Spark side's 4-segment pigeonhole blocking
     # by construction (any pair at distance <= 3 shares a segment)
-    return f"""
+    return """
     WITH toks AS (
       SELECT doc_id,
         unnest(regexp_split_to_array(
@@ -957,7 +958,7 @@ def _simhash_oracle(n_bits: int = 60, max_hamming: int = 3) -> str:
     ), bitsum AS (
       SELECT doc_id, b.range AS bit,
         sum(CASE WHEN (h >> b.range::INT) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      FROM th CROSS JOIN range({n_bits}) b GROUP BY doc_id, b.range
+      FROM th CROSS JOIN range(60) b GROUP BY doc_id, b.range
     ), sh AS (
       SELECT doc_id,
         sum(CASE WHEN s > 0 THEN (1::BIGINT << bit::INT) ELSE 0 END)::BIGINT AS sh
@@ -967,7 +968,7 @@ def _simhash_oracle(n_bits: int = 60, max_hamming: int = 3) -> str:
         bit_count(xor(a.sh, b2.sh))::INT AS hamming
       FROM sh a JOIN sh b2 ON a.doc_id < b2.doc_id
     )
-    SELECT a, b, hamming FROM pairs WHERE hamming <= {max_hamming} ORDER BY a, b
+    SELECT a, b, hamming FROM pairs WHERE hamming <= 3 ORDER BY a, b
     """
 
 

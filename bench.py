@@ -45,7 +45,7 @@ def kg_docs_for_sf(sf: float) -> int:
     return max(500, int(sf * 200_000))
 
 
-def run_kg(spark, n_docs: int, unique_tail: bool = False) -> tuple[float, int]:
+def run_kg(spark, n_docs: int) -> tuple[float, int]:
     """Returns (elapsed_sec, n_triples) for the full KG pipeline, entities
     and edges materialized too (counts forced)."""
     from vnlp_spark.plans.corpus import generate_web_pages
@@ -53,7 +53,7 @@ def run_kg(spark, n_docs: int, unique_tail: bool = False) -> tuple[float, int]:
 
     # 4x cores partitions: smooths stragglers in the narrow annotate stage
     n_parts = spark.sparkContext.defaultParallelism * 4
-    docs = generate_web_pages(spark, n_docs, unique_tail=unique_tail, n_partitions=n_parts)
+    docs = generate_web_pages(spark, n_docs, n_partitions=n_parts)
     t0 = time.monotonic()
     kg = run_kg_pipeline(docs, persist=True)
     n_triples = kg.triples.count()
@@ -95,14 +95,14 @@ def _burn_control() -> dict:
     }
 
 
-def _probe(cores: int, n_docs: int, n_passes: int = 3) -> dict:
+def _probe(cores: int, n_docs: int) -> dict:
     import subprocess
 
     here = os.path.dirname(os.path.abspath(__file__))
     cmd = [
         "taskset", "-c", f"0-{cores - 1}",
         sys.executable, os.path.join(here, "scripts", "scale_probe.py"),
-        str(cores), str(n_docs), str(n_passes),
+        str(cores), str(n_docs),
     ]
     proc = subprocess.run(cmd, capture_output=True, text=True, cwd=here, timeout=1800)
     r = json.loads(proc.stdout.strip().splitlines()[-1])

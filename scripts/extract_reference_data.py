@@ -46,39 +46,6 @@ def extract_deasciifier_table() -> None:
     print(f"wrote {dst} ({os.path.getsize(dst)} bytes, {len(table)} letters)")
 
 
-
-
-KERAS_VOCABS = {
-    "ner_label": "named_entity_recognizer/resources/NER_label_tokenizer.json",
-    "charner_char": "named_entity_recognizer/resources/CharNER_char_tokenizer.json",
-    "dp_label": "dependency_parser/resources/DP_label_tokenizer.json",
-    "pos_label": "part_of_speech_tagger/resources/PoS_label_tokenizer.json",
-    "stemmer_char": "stemmer_morph_analyzer/resources/Stemmer_char_tokenizer.json",
-    "stemmer_morph_tag": "stemmer_morph_analyzer/resources/Stemmer_morph_tag_tokenizer.json",
-    "tb_word": "resources/TB_word_tokenizer.json",
-}
-
-
-def extract_keras_vocab(name: str, rel: str) -> None:
-    """Keras Tokenizer JSON -> just the vocabulary DATA the engine needs
-    (word_index + oov/num_words config) — the reference reloads these via
-    tf.keras tokenizer_from_json (utils.py:27-36); no TF is needed for a
-    dict."""
-    with open(os.path.join(REF, rel), encoding="utf-8") as f:
-        cfg = json.load(f)["config"]
-    out = {
-        "word_index": json.loads(cfg["word_index"]),
-        "oov_token": cfg.get("oov_token"),
-        "num_words": cfg.get("num_words"),
-        "lower": cfg.get("lower"),
-        "char_level": cfg.get("char_level"),
-    }
-    dst = os.path.join(OUT, f"keras_vocab_{name}.json.gz")
-    with gzip.open(dst, "wt", encoding="utf-8", compresslevel=9) as f:
-        json.dump(out, f, ensure_ascii=False)
-    print(f"wrote {dst} ({os.path.getsize(dst)} bytes, {len(out['word_index'])} entries)")
-
-
 def main() -> None:
     os.makedirs(OUT, exist_ok=True)
     gz_copy(f"{REF}/resources/turkish_stop_words.txt", "turkish_stop_words.txt.gz")
@@ -99,8 +66,6 @@ def main() -> None:
         "exact_lookup.txt.gz",
     )
     extract_deasciifier_table()
-    for name, rel in KERAS_VOCABS.items():
-        extract_keras_vocab(name, rel)
 
 
 if __name__ == "__main__":

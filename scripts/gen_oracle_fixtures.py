@@ -58,18 +58,16 @@ ARC_T = pa.struct(
 )
 
 
-def pure_python_web_pages(n_docs: int, turkish_fraction: float = 0.9,
-                          seed: int = 42):
+def pure_python_web_pages(n_docs: int):
     """plans/corpus.generate_web_pages in pure python (same hash chain:
-    xxhash64(id, lit(seed), lit(j)); python % == Spark pmod for positive
+    xxhash64(id, lit(42), lit(j)); python % == Spark pmod for positive
     modulus)."""
-    tr_cut = int(turkish_fraction * 100)
     pages = []
     for i in range(n_docs):
         def h(j):
-            return spark_xxhash64(i, ("int", seed), ("int", j))
+            return spark_xxhash64(i, ("int", 42), ("int", j))
 
-        is_tr = h(0) % 100 < tr_cut
+        is_tr = h(0) % 100 < 90
         n_sents = h(1) % MAX_SENTS_PER_DOC + 1
         sents = []
         for j in range(n_sents):

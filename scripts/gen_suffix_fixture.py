@@ -41,7 +41,7 @@ CLASSES = [("ı", "a"), ("i", "e"), ("u", "a"), ("ü", "e")]
 _VOWELS = "aeıioöuü"
 
 
-def nominal_paradigm(include_copula=True, include_ki=True):
+def nominal_paradigm():
     """(surface, tags) rows for the nominal inflection paradigm
     number x possessive x case, plus copular person/tense extensions on
     predicate-capable cases and the locative-relative ``-ki``."""
@@ -62,10 +62,10 @@ def nominal_paradigm(include_copula=True, include_ki=True):
         high = {"a": "ı", "ı": "ı", "o": "u", "u": "u", "e": "i", "i": "i",
                 "ö": "ü", "ü": "ü"}[last_v] if last_v else state_high
         low = "a" if high in "ıu" else "e"
-        if include_ki and case == "Loc":
+        if case == "Loc":
             # evdeki / Ankara'daki / yanındaki -> relative adjective
             rows.add((surface + "ki", "+".join(tags + ["DB", "Adj", "Rel"])))
-        if include_copula and case in ("Nom", "Loc"):
+        if case in ("Nom", "Loc"):
             buf = "y" if ends_vowel else ""
             cop = {
                 "Pres+A1sg": buf + high + "m" if not ends_vowel else "y" + high + "m",

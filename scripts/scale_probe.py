@@ -7,8 +7,7 @@ overlap the JVM's cores and overstate small-N throughput.
 The input corpus is materialized to parquet BEFORE timing starts: both
 cluster sizes read the identical files, and corpus generation cost stays
 out of the measured window.  Two warm-up passes retire python-worker
-spin-up and JVM codegen; best-of-N measured passes (N from argv, bench
-passes 3) is reported.
+spin-up and JVM codegen; the best of 3 measured passes is reported.
 
 Each timed pass also samples machine-wide CPU steal from /proc/stat —
 this sandbox VM's hypervisor withholds a time-varying share of its
@@ -37,7 +36,6 @@ def _cpu_counters():
 def main():
     cores = int(sys.argv[1])
     n_docs = int(sys.argv[2])
-    n_passes = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from vnlp_spark.session import get_spark
     from vnlp_spark.plans.corpus import generate_web_pages
@@ -73,7 +71,7 @@ def main():
         # warm passes (25 -> 17.7 -> 10.9 -> 9.4s observed); a third
         # retires the remaining JIT/page-cache transient so measured
         # passes reflect the steady state a 100 TB run amortizes to
-        passes = [job(docs) for _ in range(n_passes)]
+        passes = [job(docs) for _ in range(3)]
         best_sec, ntr, steal = min(passes, key=lambda p: p[0])
         print(json.dumps({
             "cores": cores,

@@ -38,7 +38,7 @@ from vnlp_spark.operators.dep_parser import dependency_parse
 from vnlp_spark.operators.entity_resolution import _damerau_levenshtein_udf
 from vnlp_spark.operators.morphology import analyze_morphology
 from vnlp_spark.operators.multimodal import extract_features, sample_frames, synth_media
-from vnlp_spark.operators.ner import mentions_from_labels, ner_mentions, ner_tags
+from vnlp_spark.operators.ner import ner_mentions, ner_tags
 from vnlp_spark.operators.pos import pos_tags
 from vnlp_spark.operators.sentiment import sentiment_label, sentiment_proba
 from vnlp_spark.operators.similarity import (
@@ -47,9 +47,7 @@ from vnlp_spark.operators.similarity import (
     make_ivf_cell_udf,
     make_lsh_bucket_udf,
 )
-from vnlp_spark.operators.spu_context import make_spu_context_tagger_udf
 from vnlp_spark.operators.stopwords import drop_stop_words_from_array
-from vnlp_spark.operators.subword import make_spm_ids_udf
 from vnlp_spark.operators.validity import is_token_valid_turkish, tokens_validity
 from vnlp_spark.plans.corpus import SENTENCE_POOL
 
@@ -74,14 +72,11 @@ PINS = {
     "dependency_parse": (11549, 1325, -4554050503836432546),
     "dependency_parse_partial_analyses": (11549, 1325, -4554050503836432546),
     "ner_mentions": (11549, 1, -6169971633590171730),
-    "mentions_from_labels": (11549, 1, -6169971633590171730),
     "dp_displacy_json": (11549, 1325, 3873208477900544871),
     "ner_displacy_json": (11549, 1, -2495349436464349792),
     "is_token_valid_turkish": (11549, 5, 4146855028191268986),
     "tokens_validity": (11549, 1, 8381415554320599116),
     "damerau_levenshtein": (11549, 0, 7733680422761802963),
-    "spm_ids": (11549, 1, -5948302280376458611),
-    "spu_context_tagger": (11549, 1, -1206715962300918977),
     "lsh_bucket": (11549, 0, -8416436542028707701),
     "ivf_cell": (11549, 0, -2315143514253523169),
     "ivf_topk": (50, -4181594763075034828),
@@ -154,16 +149,12 @@ def test_operator_digests(spark, corpus):
         "dependency_parse_partial_analyses": dependency_parse(
             "tokens", F.when(F.col("id") % 2 == 0, F.col("analyses"))),
         "ner_mentions": ner_mentions("tokens"),
-        "mentions_from_labels": mentions_from_labels("tokens", "labels"),
         "dp_displacy_json": dp_displacy_json(
             "arcs", F.when(F.col("id") % 3 != 0, F.col("upos"))),
         "ner_displacy_json": ner_displacy_json("text", "tokens", "labels"),
         "is_token_valid_turkish": is_token_valid_turkish(first),
         "tokens_validity": tokens_validity("tokens"),
         "damerau_levenshtein": _damerau_levenshtein_udf(first, second),
-        "spm_ids": make_spm_ids_udf(spark)("tokens"),
-        "spu_context_tagger": make_spu_context_tagger_udf(
-            spark, units=16, emb_dim=16)("tokens"),
         "lsh_bucket": make_lsh_bucket_udf(DIM)("vec"),
         "ivf_cell": make_ivf_cell_udf(centroids)("vec"),
         "turkish_lower": turkish_lower("text"),

@@ -1,9 +1,9 @@
-"""Every option of the library has a caller.  A defaulted parameter of a
-function under ``vnlp_spark/`` that no call site in the repository passes
-(by keyword, by position, or through ``*args`` / ``**kwargs``) has one
-value in use: it is a constant, and every branch only another value could
-select is dead code.  ``ALLOWED`` names the exceptions, each with its
-reason.
+"""Every option of the program has a caller.  A defaulted parameter of a
+function under ``vnlp_spark/``, in ``__spark_entry__.py``, ``bench.py`` or
+``scripts/`` that no call site in the repository passes (by keyword, by
+position, or through ``*args`` / ``**kwargs``) has one value in use: it is
+a constant, and every branch only another value could select is dead
+code.  ``ALLOWED`` names the exceptions, each with its reason.
 
 Calls are matched by name (the callee's last dotted part; a class name
 for ``__init__``), so a same-named function elsewhere can only make a
@@ -16,19 +16,12 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 _REFERENCE = "mirrors the reference VNLP signature"
-_SWAP = "real-weight swap point; set once trained weights exist"
 ALLOWED = {
     "functions/deasciifier.py::_get_context(size)": _REFERENCE,
     "functions/numbers.py::py_convert_numbers_to_words(num_dec_digits)": _REFERENCE,
     "functions/numbers.py::py_convert_numbers_to_words(decimal_seperator)": _REFERENCE,
     "operators/stopwords.py::py_dynamically_detect_stop_words(rare_words_freq)": _REFERENCE,
     "operators/stopwords.py::dynamically_detect_stop_words(rare_words_freq)": _REFERENCE,
-    "plans/pipeline.py::annotate_stage(weights)": _SWAP,
-    "plans/pipeline.py::annotate_stage(sentence_max_len)": _SWAP,
-    "operators/spu_context.py::SPUContextModel.surrogate(fc_units_multiplier)": _SWAP,
-    "operators/subword.py::SpmUnigramEncoder.from_model_file(path)": _SWAP,
-    "operators/subword.py::make_spm_ids_udf(model_path)": _SWAP,
-    "operators/subword.py::make_spm_ids_udf(max_pieces)": _SWAP,
 }
 
 
@@ -41,13 +34,19 @@ def _py_files():
 
 def _options():
     """{id: (callee name, positional index or None, parameter)} for every
-    defaulted parameter of a function under vnlp_spark/."""
+    defaulted parameter of a function under vnlp_spark/ (ids relative to
+    it), in the driver entry, bench.py or scripts/ (ids relative to the
+    repository)."""
     found = {}
     lib = REPO / "vnlp_spark"
     for path in _py_files():
-        if lib not in path.parents:
+        if lib in path.parents:
+            rel = path.relative_to(lib).as_posix()
+        elif path in (REPO / "__spark_entry__.py", REPO / "bench.py") \
+                or path.parent == REPO / "scripts":
+            rel = path.relative_to(REPO).as_posix()
+        else:
             continue
-        rel = path.relative_to(lib).as_posix()
 
         def visit(node, scope, cls):
             for child in ast.iter_child_nodes(node):

@@ -1,5 +1,4 @@
-"""Structured Streaming surface + skew-balancing evidence + featurization
-utilities."""
+"""Structured Streaming surface + skew-balancing evidence."""
 import io
 import shutil
 import statistics
@@ -7,12 +6,10 @@ import tempfile
 from collections import Counter
 from contextlib import redirect_stdout
 
-import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
 from vnlp_spark.operators.entity_resolution import build_entities
-from vnlp_spark.operators.model_harness import process_word_context, tokenize_single_word
 from vnlp_spark.plans.corpus import generate_web_pages
 from vnlp_spark.plans.pipeline import edges_stage
 from vnlp_spark.streaming.stream_kg import (
@@ -154,22 +151,6 @@ def test_edges_skew_split(spark):
     got = sorted(tuple(r)[:-1] for r in tagged)
     assert got == sorted(map(tuple, broadcast.collect()))
     assert "BroadcastHashJoin" in _plan(broadcast)
-
-
-def test_tokenize_single_word_prepad():
-    vocab = {"a": 1, "b": 2, "c": 3}
-    assert tokenize_single_word("ab", vocab, 4) == [0, 0, 1, 2]
-    assert tokenize_single_word("abcabc", vocab, 4) == [1, 2, 3, 1]
-    assert tokenize_single_word("zz", vocab, 3) == [0, 0, 0]
-
-
-def test_process_word_context_shapes():
-    ids = [[0, 0, 1, 2]] * 5
-    mat = process_word_context(2, ids, sentence_max_len=3, piece_width=4)
-    assert mat.shape == (7, 4)
-    assert mat.dtype == np.int32
-    # left context pre-padded: first row is zeros when fewer than max tokens
-    assert (mat[0] == 0).all()
 
 
 def test_stateful_entity_totals_accumulate(spark, landing_dir):

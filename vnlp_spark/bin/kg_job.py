@@ -66,8 +66,7 @@ def main(argv=None) -> int:
     t0 = time.monotonic()
 
     annotated = runner.run("annotated", P.annotated_documents_stage(docs), force=args.force)
-    runner.run("sentences", annotated.select("url", "warc_ts", "sent_id", "sentence"),
-               force=args.force)
+    runner.run("sentences", P.sentences_stage(annotated), force=args.force)
     mentions = runner.run("mentions", P.mentions_stage(annotated), force=args.force)
     triples = runner.run("triples", P.triples_stage(annotated), force=args.force)
     entities = runner.run("entities", P.entities_stage(mentions), force=args.force)

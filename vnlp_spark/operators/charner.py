@@ -7,12 +7,10 @@ Reference semantics (vnlp/named_entity_recognizer/charner.py):
 - texts longer than 256 chars are recursively halved at the nearest space
   and processed piecewise (charner.py:174-192).
 
-The trained weights are S3-hosted and unavailable offline; the char
+The trained weights are S3-hosted and not in this repository; the char
 scorer here is the deterministic gazetteer labeler projected down to
 char level, run through the reference's own mode-decode + halving control
-flow so the operator's structure (and its cost profile) is faithful.  The
-``char_scores`` hook is the swap point for the real BiGRU over char
-ids.
+flow so the operator's structure (and its cost profile) is faithful.
 """
 from __future__ import annotations
 
@@ -92,22 +90,3 @@ def py_charner_pairs(text: str) -> List[str]:
 
 
 charner_pairs = arrow_map(py_charner_pairs, ArrayType(StringType()))
-
-
-def charner_char_ids(text: str) -> List[int]:
-    """Character featurization for the real BiGRU swap point, using the
-    reference's REAL CharNER_char_tokenizer vocabulary (vendored as data;
-    reloaded there via tf.keras tokenizer_from_json).  Keras
-    texts_to_sequences semantics with num_words=150 + oov_token='<OOV>':
-    chars with id >= num_words (or unseen) map to the OOV id."""
-    from .. import resources
-
-    vocab = resources.keras_vocab("charner_char")
-    wi = vocab["word_index"]
-    num_words = vocab["num_words"] or (max(wi.values()) + 1)
-    oov_id = wi[vocab["oov_token"]]
-    out = []
-    for ch in text:
-        i = wi.get(ch, oov_id)
-        out.append(i if i < num_words else oov_id)
-    return out

@@ -6,10 +6,10 @@ named_entity_recognizer.py:32-78); span merging of adjacent same-label
 tokens mirrors the displacy converter (named_entity_recognizer/utils.py:
 39-66), which is the mention basis for entity linking.
 
-The reference's SPUContext GRU weights live on S3 and are unavailable
-offline, so labeling here is a deterministic gazetteer+orthography
-surrogate with the same I/O contract (swap point: any callable
-``tokens -> labels``).  Signals, in priority order:
+The reference's SPUContext GRU weights live on S3 and are not in this
+repository, so labeling here is a deterministic gazetteer+orthography
+labeler with the same I/O contract (``tokens -> labels``).  Signals, in
+priority order:
 
 1. typed gazetteer hit (LOC/PER/ORG lists, case-normalized)
 2. ALL-CAPS tokens (len ≥ 2) -> ORG
@@ -152,14 +152,7 @@ _MENTION_SCHEMA = ArrayType(
 )
 
 
-def py_mentions_from_labels(tokens: List[str], labels: List[str] | None) -> List[dict] | None:
-    """(tokens, labels) -> mention spans; null without labels.  The span
-    assembler for external label sources (e.g. the SPUContext tagger)."""
-    return None if labels is None else py_merge_mentions(tokens, labels)
-
-
 # array<string> tokens -> array<string> labels (O/PER/LOC/ORG)
 ner_tags = arrow_map(py_ner_tags, ArrayType(StringType()))
 # array<string> tokens -> array<struct<mention,label,first_tok,last_tok>>
 ner_mentions = arrow_map(py_ner_mentions, _MENTION_SCHEMA)
-mentions_from_labels = arrow_map(py_mentions_from_labels, _MENTION_SCHEMA)

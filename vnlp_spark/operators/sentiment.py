@@ -42,9 +42,8 @@ scorer:
   (plans/gold_blind/sentiment1.tsv, scripts/score_sentiment_gold.py); the
   first-run and post-fix numbers are recorded in BENCH.md.
 
-The reference's BiGRU weights are S3-hosted; the broadcast-weights
-executor shape of its neural annotators lives in
-``operators/spu_context.py`` (``make_spu_context_tagger_udf(weights=...)``).
+The reference's BiGRU weights are S3-hosted and not in this repository,
+so no neural scorer is shipped.
 """
 from __future__ import annotations
 

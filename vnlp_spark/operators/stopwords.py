@@ -92,8 +92,6 @@ def dynamically_detect_stop_words(df: DataFrame, rare_words_freq: int = 0) -> Li
     if rare_words_freq > 0:
         rare = freq.filter(F.col("cnt") <= rare_words_freq).select("token").collect()
         detected += [r["token"] for r in rare]
-    else:
-        detected += tokens_sorted[counts_sorted <= 0].tolist()  # no-op, parity with rare_words_freq=0
     return detected
 
 

@@ -42,11 +42,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.sentence_splitter import py_split_sentences, split_sentences
-from ..functions.tokenizer import py_treebank_tokenize, treebank_tokenize
-from ..operators.dep_parser import dependency_parse, py_parse_tokens
+from ..functions.sentence_splitter import py_split_sentences
+from ..functions.tokenizer import py_treebank_tokenize
+from ..operators.dep_parser import py_parse_tokens
 from ..operators.entity_resolution import build_entities, canonical_key_sql
-from ..operators.morphology import analyze_morphology, py_analyze_tokens
+from ..operators.morphology import py_analyze_tokens
 from ..operators.ner import py_ner_mentions
 from ..operators.triples import explode_triples
 from ..resources import non_breaking_prefixes
@@ -129,74 +129,25 @@ def _annotate_document_udf(texts: pa.Array) -> pa.Array:
     return pa.array(rows, type=_DOC_ARROW_TYPE)
 
 
-def sentences_stage(docs: DataFrame) -> DataFrame:
-    """Turkish documents -> (url, warc_ts, sent_id, sentence) through the
-    ``split_sentences`` UDF alone: the input of ``annotate_stage`` when
-    NER runs on real weights.  The KG plans take their sentence rows from
-    ``annotated_documents_stage`` instead."""
-    return docs.filter(F.col("lang") == "tr").select(
-        "url",
-        "warc_ts",
-        F.posexplode(split_sentences("text")).alias("sent_id", "sentence"),
-    )
-
-
-def _ner_label_names() -> list:
-    """The reference's REAL NER label id order (NER_label_tokenizer.json:
-    O=1, ORG=2, PER=3, LOC=4; 0 = Keras pad, decoded as O) — so trained
-    weights' output units line up with the harness's label ids."""
-    from .. import resources
-
-    return resources.label_list("ner_label", pad="O")
-
-
-def annotate_stage(sentences: DataFrame, weights=None,
-                   sentence_max_len: int | None = None) -> DataFrame:
-    """(url, sent_id, sentence) -> + tokens, analyses, mentions, arcs with
-    NER from a broadcast copy of the reference's full 4-branch
-    architecture (operators/spu_context.py): word/left/right/prev-entity
-    GRU stacks over real SentencePiece piece ids, autoregressive decode.
-
-    This is the one swap point for real weights:
-    ``annotate_stage(sentences, weights=...)``.  Without ``weights`` the
-    arrays are deterministic surrogates, so the labels are not
-    linguistically meaningful; passing trained arrays is the only change
-    left.  Morphology and parsing stay on their own annotators (separate
-    models in the reference too).  The heuristic annotator every KG job
-    runs is ``annotated_documents_stage``."""
-    from ..operators.ner import mentions_from_labels
-    from ..operators.spu_context import make_spu_context_tagger_udf
-
-    names = _ner_label_names()
-    kw = {"n_labels": len(names)}
-    if weights is not None:
-        kw["weights"] = weights
-    if sentence_max_len is not None:
-        kw["sentence_max_len"] = sentence_max_len
-    label_udf = make_spu_context_tagger_udf(sentences.sparkSession, **kw)
-    label_names = F.array(*[F.lit(x) for x in names])
-    out = (
-        sentences.withColumn("tokens", treebank_tokenize("sentence"))
-        .withColumn("_lab_ids", label_udf("tokens"))
-        .withColumn(
-            "_labels",
-            F.transform("_lab_ids", lambda i: F.element_at(label_names, i + 1)),
-        )
-        .withColumn("mentions", mentions_from_labels("tokens", "_labels"))
-        .withColumn("analyses", analyze_morphology("tokens"))
-        .withColumn("arcs", dependency_parse("tokens", "analyses"))
-    )
-    return out.select(*sentences.columns, "tokens", "analyses", "mentions", "arcs")
+def sentences_stage(annotated: DataFrame) -> DataFrame:
+    """Annotated sentence rows -> (url, warc_ts, sent_id, sentence): the
+    ``sentences`` table of every KG job, lazy or staged."""
+    return annotated.select("url", "warc_ts", "sent_id", "sentence")
 
 
 def annotated_documents_stage(docs: DataFrame, lang: str | None = "tr") -> DataFrame:
     """documents -> fully annotated sentence rows in ONE python stage
     (split + tokenize + morphology + NER + parse fused per document): the
-    heuristic annotation stage of every KG job, lazy or staged.  Same
-    output columns as ``annotate_stage(sentences_stage(docs))``."""
+    heuristic annotation stage of every KG job, lazy or staged: (url,
+    warc_ts, sent_id, sentence, tokens, analyses, mentions, arcs)."""
     if lang is not None:
         docs = docs.filter(F.col("lang") == lang)
     return docs.select("url", "warc_ts", F.inline(_annotate_document_udf("text")))
+
+
+# perfbench's trace wrap list (perfbench/run.py ``_wrap_program``) looks this
+# name up; nothing else reads it.
+annotate_stage = annotated_documents_stage
 
 
 def triples_stage(annotated: DataFrame) -> DataFrame:
@@ -284,7 +235,7 @@ def run_kg_pipeline(docs: DataFrame, lang: str | None = "tr",
     chain — the dominant cost.  On a cluster the same role is played by
     the stage-boundary write (plans.lineage.StageRunner)."""
     annotated = annotated_documents_stage(docs, lang)
-    sentences = annotated.select("url", "warc_ts", "sent_id", "sentence")
+    sentences = sentences_stage(annotated)
     if persist:
         from pyspark import StorageLevel
 

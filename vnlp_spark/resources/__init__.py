@@ -168,25 +168,3 @@ def suffix_dict() -> dict[str, list[str]]:
         suffix, tags = line.split("\t")
         out.setdefault(suffix, []).append(tags)
     return out
-
-
-@lru_cache(maxsize=None)
-def keras_vocab(name: str) -> dict:
-    """Vendored Keras-Tokenizer vocabulary DATA (S3): word_index +
-    oov/num_words config, extracted from the reference's tokenizer JSONs
-    (reloaded there via tf.keras tokenizer_from_json, utils.py:27-36 —
-    a dict needs no TF).  Names: ner_label, charner_char, dp_label,
-    pos_label, stemmer_char, stemmer_morph_tag, tb_word."""
-    path = os.path.join(_DIR, f"keras_vocab_{name}.json.gz")
-    with gzip.open(path, "rt", encoding="utf-8") as f:
-        return json.load(f)
-
-
-def label_list(name: str, pad: str) -> list[str]:
-    """Id-ordered label names for a label tokenizer: index 0 is the Keras
-    padding id (never predicted by the reference; mapped to ``pad``)."""
-    wi = keras_vocab(name)["word_index"]
-    out = [pad] * (max(wi.values()) + 1)
-    for lab, i in wi.items():
-        out[i] = lab
-    return out
