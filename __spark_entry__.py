@@ -1633,9 +1633,13 @@ def oracle_sql() -> dict[str, str]:
         # deterministic on a frozen HEAD (pipeline + gold are both pinned
         # in-repo), so pinning them converts the former rows-only check
         # into a regression gate — any pipeline change that moves triple
-        # P/R off 1.0 at the driver's sf, or changes the gold/pred/hit
-        # counts, breaks the hash.  Counts verified by driving the query
-        # in a fresh driver-sim process at sf0.01.
+        # P/R off 1.0, or changes the gold/pred/hit counts, breaks the
+        # hash.  Valid at sf0.01 only, like every _fx fixture oracle here
+        # (all generated from the sf0.01 tables): the two UD rows do not
+        # depend on the scale factor, but the pinned_fixture count 5857
+        # is the gold triples of the 2,000 docs _corpus_docs yields at
+        # sf0.01 (it yields max(200, sf * 200,000)).  Counts verified by
+        # driving the query in a fresh driver-sim process at sf0.01.
         "triple_precision_recall": (
             "SELECT * FROM (VALUES "
             "('pinned_fixture', 1.0::DOUBLE, 1.0::DOUBLE, "

@@ -205,7 +205,6 @@ def _segment_runs(tokens, upos, analyses) -> List[List[int]]:
 
 def py_parse_tokens(
     tokens: List[str],
-    upos: Optional[List[str]] = None,
     analyses: Optional[List[str]] = None,
 ) -> Optional[List[Tuple[int, str, int, str]]]:
     n = len(tokens)
@@ -215,9 +214,7 @@ def py_parse_tokens(
         return None  # reference refuses; pipeline chunks upstream
     if analyses is None:
         analyses = py_analyze_tokens(tokens)
-    if upos is None:
-        upos = [upos_from_analysis(a) for a in analyses]
-    upos = adjust_upos(tokens, upos, analyses)
+    upos = adjust_upos(tokens, [upos_from_analysis(a) for a in analyses], analyses)
 
     lows = [to_lower(t) for t in tokens]
     tagsets = [set(a.replace("^", "+").split("+")) for a in analyses]

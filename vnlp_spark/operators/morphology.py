@@ -14,10 +14,10 @@ reproduces the reference's published golden outputs; swap
 ``HeuristicDisambiguator`` for a learned scorer without touching the Spark
 plumbing (both implement ``select(candidates, idx, tokens) -> int``).
 
-The suffix dictionary is a committed morphotactic fixture
-(resources/suffix_tags_fixture.txt.gz, the source of truth; its generated
-core comes from scripts/gen_suffix_fixture.py) because the reference's full
-``Suffixes&Tags.txt`` is absent from the snapshot.
+The suffix dictionary is a committed morphotactic table
+(resources/suffix_tags_fixture.txt.gz), the source of truth, kept and
+edited as data because the reference's full ``Suffixes&Tags.txt`` is
+absent from the snapshot.
 
 Spark mapping: one Arrow-UDF row = one tokenized sentence
 (``array<string> -> array<string>``); the three lexicons are process-local

@@ -2,17 +2,21 @@
 
 The gold splits themselves are data files (``plans/gold_blind/*.conllu``,
 read by ``gold_ud_blind_data.load_split``); ``UD_GOLD`` is the tuning
-split.  Two consumers:
+split.  Two scorers, which check each other on tuning
+(``tests/test_validity_charner_eval.py``):
 
-- ``score_vs_ud_gold``: runs the REAL pipeline over gold sentences and
-  scores emitted (subj, pred, obj) triples against triples mined from the
-  GOLD arcs (same root/parataxis + first-child mining semantics, applied
-  to independent annotations) — the honest P/R next to the pinned-fixture
-  number.
-- ``annotator_scores``: token-level UPOS accuracy, UAS/LAS, and NER
-  accuracy/F1 of the deterministic surrogate annotators against the
-  gold, published in BENCH.md next to the reference's own published
-  metrics.
+- ``score_split``: pure Python.  Runs the annotation kernel of every KG
+  job (``pipeline._annotate_sentence_cached``) once per gold sentence
+  and takes triples P/R, UPOS accuracy, UAS/LAS and, on splits that
+  carry NER, NER token accuracy and macro F1 from that one result.
+  ``gold_levels`` renders its level line per split, which
+  ``tests/test_gold_data.py`` pins and ``scripts/gold_error_analysis.py``
+  prints.
+- ``score_vs_ud_gold``: runs the Spark pipeline over the gold sentences
+  and scores the emitted (subj, pred, obj) triples.
+
+Both mine triples with ``gold_triples_for`` from the GOLD arcs (the
+independent annotations) and compare them with what the engine emits.
 
 ANNOTATION CONVENTIONS (authoritative for every UD split in
 ``plans/gold_blind/`` — annotate new splits against THIS list; the
@@ -44,18 +48,21 @@ from __future__ import annotations
 
 from typing import List
 
-from .gold_ud_blind_data import load_split
+from ..operators.ner import py_ner_tags
+from ..operators.pos import adjust_upos, upos_from_analysis
+from ..operators.triples import _PRED_RELS
+from .gold_ud_blind_data import available_splits, load_split
+from .pipeline import _annotate_sentence_cached, run_kg_pipeline
 
 UD_GOLD: List[dict] = load_split("tuning")
 
-_PRED_RELS = ("root", "parataxis")
-
 
 def gold_triples_for(entry: dict) -> List[tuple]:
-    """Mine (subj, pred, obj, obl) from the GOLD arcs with the pipeline's
-    extraction semantics (operators/triples.py: root/parataxis predicates,
-    first nsubj/obj/obl child by token order).  The mining rule is shared
-    with the engine; the ARCS it runs on are the independent annotations."""
+    """Mine (subj, pred, obj, obl) from a sentence's arcs with the
+    pipeline's extraction semantics (operators/triples.py: root/parataxis
+    predicates, first nsubj/obj/obl child by token order).  ``entry``
+    carries tokens / heads / deprels: a gold sentence, whose arcs are the
+    independent annotations, or the kernel's parse of it."""
     toks, heads, rels = entry["tokens"], entry["heads"], entry["deprels"]
     out = []
     for p in range(len(toks)):
@@ -95,8 +102,6 @@ def score_vs_ud_gold(spark, entries=None) -> dict:
     triples vs gold-arc-mined triples, matched on (url, subj, pred, obj).
     Pass ``load_split("heldout")`` as ``entries`` for the frozen held-out
     number (the headline metric; tuning never saw it)."""
-    from .pipeline import run_kg_pipeline
-
     entries = UD_GOLD if entries is None else entries
     kg = run_kg_pipeline(gold_documents(spark, entries), lang="tr")
     pred = [
@@ -120,65 +125,110 @@ def score_vs_ud_gold(spark, entries=None) -> dict:
     }
 
 
-def annotator_scores() -> dict:
-    """Pure-python eval of the surrogate annotators against the tuning gold:
-    UPOS accuracy, UAS/LAS, NER token accuracy + macro F1 over PER/LOC/ORG.
-    Published in BENCH.md next to the reference's own numbers."""
-    from ..functions.tokenizer import py_treebank_tokenize
-    from ..operators.dep_parser import py_parse_tokens
-    from ..operators.ner import py_ner_tags
-    from ..operators.pos import py_pos_tags
 
-    pos_ok = pos_n = 0
-    uas_ok = las_ok = arc_n = 0
+
+def _ratio(num: int, den: int) -> float:
+    return num / den if den else 0.0
+
+
+def score_split(entries: List[dict]) -> dict:
+    """Score the annotation kernel of every KG job against one gold split.
+
+    Each sentence runs once through ``_annotate_sentence_cached`` and every
+    number comes from that one result: triples (``gold_triples_for`` over
+    the gold arcs and the kernel's arcs alike, compared as (subj, pred,
+    obj) sets), UPOS (``adjust_upos`` over the kernel's analyses, as
+    ``py_pos_tags``), UAS/LAS over the kernel's arcs, and NER token
+    accuracy and macro F1 over PER/LOC/ORG (``py_ner_tags``) on sentences
+    that carry NER.  A sentence the tokenizer splits differently from the
+    gold is counted in ``tok_mismatch`` and not scored.  Every gold token
+    counts in the UAS/LAS denominator: a parse the kernel refuses scores
+    its arcs as wrong.  ``diffs`` holds one record per sentence with any
+    difference from the gold."""
+    cache: dict = {}
+    tp = fp = fn = tok_mismatch = 0
+    pos_ok = uas_ok = las_ok = n_tok = 0
     ner_ok = ner_n = 0
     per_label = {lab: [0, 0, 0] for lab in ("PER", "LOC", "ORG")}  # tp, fp, fn
-    tok_mismatch = 0
-    for entry in UD_GOLD:
-        toks = entry["tokens"]
-        if py_treebank_tokenize(entry["text"]) != toks:
+    diffs = []
+    for si, entry in enumerate(entries):
+        tokens, analyses, _mentions, arcs = _annotate_sentence_cached(cache, entry["text"])
+        if tokens != entry["tokens"]:
             tok_mismatch += 1
+            diffs.append(dict(index=si, text=entry["text"], tokens=tokens))
             continue
-        pred_pos = py_pos_tags(toks)
-        for g, p in zip(entry["upos"], pred_pos):
-            pos_n += 1
-            pos_ok += g == p
-        # every gold token counts in the UAS/LAS denominator — a sentence
-        # the parser declines (None) or under-covers scores its missing
-        # arcs as wrong, it does not shrink the denominator
-        arcs = py_parse_tokens(toks) or []
-        arc_map = {idx: (head, rel) for (idx, _tok, head, rel) in arcs}
-        for i, (g_head, g_rel) in enumerate(zip(entry["heads"], entry["deprels"]), start=1):
-            arc_n += 1
-            pred = arc_map.get(i)
-            if pred is not None and pred[0] == g_head:
-                uas_ok += 1
-                if pred[1] == g_rel:
-                    las_ok += 1
-        pred_ner = py_ner_tags(toks)
-        for g, p in zip(entry["ner"], pred_ner):
-            ner_n += 1
-            ner_ok += g == p
-            for lab in per_label:
-                tp_fp_fn = per_label[lab]
-                if p == lab and g == lab:
-                    tp_fp_fn[0] += 1
-                elif p == lab:
-                    tp_fp_fn[1] += 1
-                elif g == lab:
-                    tp_fp_fn[2] += 1
+        arcs = arcs or [(i + 1, tok, None, None) for i, tok in enumerate(tokens)]
+        kernel = dict(tokens=tokens, heads=[a[2] for a in arcs], deprels=[a[3] for a in arcs])
+        gold = {(s, p, o) for (s, p, o, _obl) in gold_triples_for(entry)}
+        pred = {(s, p, o) for (s, p, o, _obl) in gold_triples_for(kernel)}
+        tp += len(gold & pred)
+        fp += len(pred - gold)
+        fn += len(gold - pred)
+
+        upos = adjust_upos(tokens, [upos_from_analysis(a) for a in analyses], analyses)
+        pos_diffs = [
+            (tokens[i], g, p, analyses[i])
+            for i, (g, p) in enumerate(zip(entry["upos"], upos))
+            if g != p
+        ]
+        arc_diffs = []
+        for i, (gh, gr) in enumerate(zip(entry["heads"], entry["deprels"])):
+            _idx, _tok, h, r = arcs[i]
+            uas_ok += h == gh
+            las_ok += h == gh and r == gr
+            if (h, r) != (gh, gr):
+                arc_diffs.append((tokens[i], f"{gh}:{gr}", f"{h}:{r}" if h is not None else "-"))
+        n_tok += len(tokens)
+        pos_ok += len(tokens) - len(pos_diffs)
+
+        if "ner" in entry:
+            for g, p in zip(entry["ner"], py_ner_tags(tokens)):
+                ner_n += 1
+                ner_ok += g == p
+                for lab, counts in per_label.items():
+                    if p == lab and g == lab:
+                        counts[0] += 1
+                    elif p == lab:
+                        counts[1] += 1
+                    elif g == lab:
+                        counts[2] += 1
+
+        if pred != gold or pos_diffs or arc_diffs:
+            diffs.append(dict(index=si, text=entry["text"], fp=sorted(pred - gold, key=str),
+                              fn=sorted(gold - pred, key=str), pos=pos_diffs, arcs=arc_diffs))
     f1s = {}
-    for lab, (tp, fp, fn) in per_label.items():
-        prec = tp / (tp + fp) if tp + fp else 0.0
-        rec = tp / (tp + fn) if tp + fn else 0.0
-        f1s[lab] = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
+    for lab, (ltp, lfp, lfn) in per_label.items():
+        prec, rec = _ratio(ltp, ltp + lfp), _ratio(ltp, ltp + lfn)
+        f1s[lab] = _ratio(2 * prec * rec, prec + rec)
     return {
-        "n_sentences": len(UD_GOLD),
-        "tokenization_mismatches": tok_mismatch,
-        "upos_accuracy": pos_ok / pos_n if pos_n else 0.0,
-        "uas": uas_ok / arc_n if arc_n else 0.0,
-        "las": las_ok / arc_n if arc_n else 0.0,
-        "ner_token_accuracy": ner_ok / ner_n if ner_n else 0.0,
+        "n_sentences": len(entries),
+        "tok_mismatch": tok_mismatch,
+        "tp": tp,
+        "fp": fp,
+        "fn": fn,
+        "precision": _ratio(tp, tp + fp),
+        "recall": _ratio(tp, tp + fn),
+        "upos_accuracy": _ratio(pos_ok, n_tok),
+        "uas": _ratio(uas_ok, n_tok),
+        "las": _ratio(las_ok, n_tok),
+        "ner_token_accuracy": _ratio(ner_ok, ner_n),
         "ner_f1_per_label": f1s,
-        "ner_f1_macro": sum(f1s.values()) / 3,
+        "ner_f1_macro": sum(f1s.values()) / len(f1s),
+        "diffs": diffs,
     }
+
+
+def level_line(name: str, s: dict) -> str:
+    """One split's level: triples P/R, UPOS, UAS/LAS, tokenization
+    mismatches."""
+    return (
+        f"{name:8s} triples: P={s['precision']:.3f} R={s['recall']:.3f} "
+        f"(tp={s['tp']} fp={s['fp']} fn={s['fn']})  UPOS={s['upos_accuracy']:.3f}  "
+        f"UAS={s['uas']:.3f} LAS={s['las']:.3f}  "
+        f"tok_mismatch={s['tok_mismatch']}/{s['n_sentences']}"
+    )
+
+
+def gold_levels() -> List[str]:
+    """The level line of every UD split, in ``available_splits`` order."""
+    return [level_line(name, score_split(load_split(name))) for name in available_splits()]
