@@ -108,6 +108,16 @@ def test_annotator_scores_against_ud_gold():
     # UPOS / UAS / LAS are pinned by the tuning level line (test_gold_data)
     assert round(s["ner_token_accuracy"], 4) == 0.9913
     assert round(s["ner_f1_macro"], 4) == 0.8299
+    # the macro averages only the labels a split has (gold or predicted):
+    # blind13's one label, PER, is all correct; blind17 has no entities
+    from vnlp_spark.plans.gold_ud_blind_data import load_split
+
+    b13 = score_split(load_split("blind13"))
+    assert b13["ner_f1_per_label"] == {"PER": 1.0, "LOC": None, "ORG": None}
+    assert b13["ner_f1_macro"] == 1.0
+    b17 = score_split(load_split("blind17"))
+    assert b17["ner_token_accuracy"] == 1.0
+    assert b17["ner_f1_macro"] is None
 
 
 def test_score_vs_ud_gold_runs(spark):

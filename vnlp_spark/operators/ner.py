@@ -111,11 +111,10 @@ def py_ner_pairs(tokens: List[str]) -> List[Tuple[str, str]]:
     return list(zip(tokens, py_ner_tags(tokens)))
 
 
-def py_merge_mentions(tokens: List[str], labels: List[str]) -> List[dict]:
-    """Merge adjacent same-label tokens into mention spans (reference
-    span logic, named_entity_recognizer/utils.py:39-66).  Label source is
-    caller-supplied, so the heuristic tagger and the GRU-harness tagger
-    share one span assembler."""
+def py_ner_mentions(tokens: List[str]) -> List[dict]:
+    """Adjacent same-label tokens merged into mention spans (reference
+    span logic, named_entity_recognizer/utils.py:39-66)."""
+    labels = py_ner_tags(tokens)
     mentions = []
     start = None
     for i, lab in enumerate(labels + ["O"]):
@@ -134,10 +133,6 @@ def py_merge_mentions(tokens: List[str], labels: List[str]) -> List[dict]:
             )
             start = i if lab != "O" else None
     return mentions
-
-
-def py_ner_mentions(tokens: List[str]) -> List[dict]:
-    return py_merge_mentions(tokens, py_ner_tags(tokens))
 
 
 _MENTION_SCHEMA = ArrayType(

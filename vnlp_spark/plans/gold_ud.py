@@ -49,7 +49,7 @@ from __future__ import annotations
 from typing import List
 
 from ..operators.ner import py_ner_tags
-from ..operators.pos import adjust_upos, upos_from_analysis
+from ..operators.pos import adjust_upos
 from ..operators.triples import _PRED_RELS
 from .gold_ud_blind_data import available_splits, load_split
 from .pipeline import _annotate_sentence_cached, run_kg_pipeline
@@ -139,12 +139,14 @@ def score_split(entries: List[dict]) -> dict:
     the gold arcs and the kernel's arcs alike, compared as (subj, pred,
     obj) sets), UPOS (``adjust_upos`` over the kernel's analyses, as
     ``py_pos_tags``), UAS/LAS over the kernel's arcs, and NER token
-    accuracy and macro F1 over PER/LOC/ORG (``py_ner_tags``) on sentences
-    that carry NER.  A sentence the tokenizer splits differently from the
-    gold is counted in ``tok_mismatch`` and not scored.  Every gold token
-    counts in the UAS/LAS denominator: a parse the kernel refuses scores
-    its arcs as wrong.  ``diffs`` holds one record per sentence with any
-    difference from the gold."""
+    accuracy and macro F1 (``py_ner_tags``) on sentences that carry NER.
+    The macro averages the PER/LOC/ORG F1 of the labels that have gold or
+    predicted tokens; an absent label's F1 is ``None``, and so is the
+    macro of a split with no label at all.  A sentence the tokenizer
+    splits differently from the gold is counted in ``tok_mismatch`` and
+    not scored.  Every gold token counts in the UAS/LAS denominator: a
+    parse the kernel refuses scores its arcs as wrong.  ``diffs`` holds
+    one record per sentence with any difference from the gold."""
     cache: dict = {}
     tp = fp = fn = tok_mismatch = 0
     pos_ok = uas_ok = las_ok = n_tok = 0
@@ -165,7 +167,7 @@ def score_split(entries: List[dict]) -> dict:
         fp += len(pred - gold)
         fn += len(gold - pred)
 
-        upos = adjust_upos(tokens, [upos_from_analysis(a) for a in analyses], analyses)
+        upos = adjust_upos(tokens, analyses)
         pos_diffs = [
             (tokens[i], g, p, analyses[i])
             for i, (g, p) in enumerate(zip(entry["upos"], upos))
@@ -198,8 +200,12 @@ def score_split(entries: List[dict]) -> dict:
                               fn=sorted(gold - pred, key=str), pos=pos_diffs, arcs=arc_diffs))
     f1s = {}
     for lab, (ltp, lfp, lfn) in per_label.items():
+        if ltp + lfp + lfn == 0:
+            f1s[lab] = None  # neither gold nor predicted: nothing to score
+            continue
         prec, rec = _ratio(ltp, ltp + lfp), _ratio(ltp, ltp + lfn)
         f1s[lab] = _ratio(2 * prec * rec, prec + rec)
+    present = [f for f in f1s.values() if f is not None]
     return {
         "n_sentences": len(entries),
         "tok_mismatch": tok_mismatch,
@@ -213,7 +219,7 @@ def score_split(entries: List[dict]) -> dict:
         "las": _ratio(las_ok, n_tok),
         "ner_token_accuracy": _ratio(ner_ok, ner_n),
         "ner_f1_per_label": f1s,
-        "ner_f1_macro": sum(f1s.values()) / len(f1s),
+        "ner_f1_macro": sum(present) / len(present) if present else None,
         "diffs": diffs,
     }
 
