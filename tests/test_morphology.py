@@ -3,6 +3,7 @@ and candidate-generator behaviors (_yildiz_analyzer.py rules)."""
 from vnlp_spark.operators.morphology import (
     CandidateGenerator,
     py_analyze_sentence,
+    py_analyze_tokens,
     to_lower,
     capitalize,
 )
@@ -44,6 +45,8 @@ def test_punct_and_number_candidates():
 def test_unknown_fallback():
     gen = CandidateGenerator()
     assert gen.get_analysis_candidates("zzzqqqxx") == [("zzzqqqxx", "", "Unknown")]
+    # the selection layer emits word+Unknown itself
+    assert py_analyze_tokens(["zzzqqqxx", "geldi", "."])[0] == "zzzqqqxx+Unknown"
 
 
 def test_consonant_derivation_candidates():

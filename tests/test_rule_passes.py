@@ -1,8 +1,9 @@
-"""Structure of the parse path: ``adjust_upos`` and ``py_parse_tokens`` are
-thin drivers over ordered tuples of named, module-level rule passes
-(``pos.UPOS_RULES``, ``dep_parser.PARSE_RULES``), so each rule can be
+"""Structure of the morphology and parse paths: ``py_analyze_tokens``,
+``adjust_upos`` and ``py_parse_tokens`` are thin drivers over ordered
+tuples of named, module-level rule passes (``morphology.MORPH_RULES``,
+``pos.UPOS_RULES``, ``dep_parser.PARSE_RULES``), so each rule can be
 timed, counted and checked on its own.  Checked on the source with
-``ast``: no function in either module is longer than 200 lines, the two
+``ast``: no function in the three modules is longer than 200 lines, the
 drivers define no nested function or lambda, and each rule tuple lists
 only functions defined at module level."""
 import ast
@@ -20,7 +21,7 @@ def _module(name: str) -> ast.Module:
         return ast.parse(f.read())
 
 
-@pytest.mark.parametrize("name", ["dep_parser.py", "pos.py"])
+@pytest.mark.parametrize("name", ["dep_parser.py", "pos.py", "morphology.py"])
 def test_no_function_longer_than_200_lines(name):
     long = [
         (node.name, node.end_lineno - node.lineno + 1)
@@ -31,7 +32,9 @@ def test_no_function_longer_than_200_lines(name):
 
 
 @pytest.mark.parametrize(
-    "name,driver", [("dep_parser.py", "py_parse_tokens"), ("pos.py", "adjust_upos")]
+    "name,driver",
+    [("dep_parser.py", "py_parse_tokens"), ("pos.py", "adjust_upos"),
+     ("morphology.py", "py_analyze_tokens")],
 )
 def test_driver_defines_no_nested_function(name, driver):
     fn = next(n for n in _module(name).body if isinstance(n, _FUNCS) and n.name == driver)
@@ -44,7 +47,9 @@ def test_driver_defines_no_nested_function(name, driver):
 
 
 @pytest.mark.parametrize(
-    "name,rules", [("dep_parser.py", "PARSE_RULES"), ("pos.py", "UPOS_RULES")]
+    "name,rules",
+    [("dep_parser.py", "PARSE_RULES"), ("pos.py", "UPOS_RULES"),
+     ("morphology.py", "MORPH_RULES")],
 )
 def test_rules_are_a_tuple_of_module_level_functions(name, rules):
     tree = _module(name)

@@ -2993,8 +2993,7 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
             heads[i], rels[i] = p + 1, "nsubj"
             subj_of[p] = i
     elif (
-        subjish is not None
-        and vt != p
+        vt != p
         and upos[vt] == "VERB"
         and (converb[vt]
              # the -DIktAn sonra/önce temporal frame is a

@@ -10,9 +10,12 @@ Disambiguation: the reference scores candidates with a context GRU whose
 weights live on S3 and are unavailable offline, so selection here is a
 deterministic context-aware heuristic (lexicon membership, root length,
 sentence-position verb/imperative logic, possessive-case priors) that
-reproduces the reference's published golden outputs; swap
-``HeuristicDisambiguator`` for a learned scorer without touching the Spark
-plumbing (both implement ``select(candidates, idx, tokens) -> int``).
+reproduces the reference's published golden outputs.  Per sentence,
+``py_analyze_tokens`` chooses each token's analysis left to right from
+its ``TokenContext`` (``_analyze_one``: a word no candidate analyzes is
+``word+Unknown`` there; ``HeuristicDisambiguator.select`` scores only
+real rivals, as named rule groups), then runs the ``MORPH_RULES``
+post-passes, each ``rule(MorphState) -> None``, over the chosen analyses.
 
 The suffix dictionary is a committed morphotactic table
 (resources/suffix_tags_fixture.txt.gz), the source of truth, kept and
@@ -28,14 +31,12 @@ from __future__ import annotations
 
 import re
 from functools import lru_cache
-from typing import List, Sequence, Tuple
+from typing import List, NamedTuple, Sequence, Tuple
 
 from pyspark.sql.types import ArrayType, StringType
 
 from .. import resources
 from ..functions._udf import arrow_map
-
-NUM_MAX_ANALYSIS = 10  # reference stemmer_morph_analyzer.py:34
 
 _CONSONANTS = set("bcdfgğhjklmnprsştvyzxwqBCDFGĞHJKLMNPRSŞTVYZXWQ")
 _STARTS_UPPER = re.compile(r"^[ABCÇDEFGĞHIİJKLMNOÖPRSŞTUÜQVYXZ]")
@@ -95,22 +96,24 @@ TITLE_ROLES = {
 _COORD_CONJS = {"ve", "veya", "ama", "fakat", "ancak"}
 
 
-def _next_is_coord(tokens, idx) -> bool:
-    """True when the token after ``idx`` opens a coordinating conjunction,
-    including the two-word 'ya da' (ya alone is the question particle and
-    must NOT trigger the clause-coordination bonus)."""
-    n = len(tokens)
+def _next_is_coord(lows, idx) -> bool:
+    """True when the lowered token after ``idx`` opens a coordinating
+    conjunction, including the two-word 'ya da' (ya alone is the question
+    particle and must NOT trigger the clause-coordination bonus)."""
+    n = len(lows)
     if idx + 1 >= n:
         return False
-    nxt = to_lower(tokens[idx + 1])
+    nxt = lows[idx + 1]
     if nxt in _COORD_CONJS:
         return True
-    return nxt == "ya" and idx + 2 < n and to_lower(tokens[idx + 2]) == "da"
+    return nxt == "ya" and idx + 2 < n and lows[idx + 2] == "da"
 
 # converb (adverbial-clause) tags — mirror of dep_parser._CONVERB_TAGS
 # (defined locally to keep this module import-independent)
 _CONVERB_TAG_SET = {"When", "AfterDoingSo", "ByDoingSo", "While",
                     "AsLongAs", "WithoutHavingDoneSo"}
+# finite tense tags of a verb reading
+_FINITE_TAGS = {"Aor", "Past", "Prog1", "Fut", "Narr"}
 
 # spatial relational nouns: possessed-case forms (altına, üstünde,
 # arasında) head postposition-like oblique frames (shared with the
@@ -397,8 +400,8 @@ def _typed_gazetteer():
     return per, typed
 
 
-def _case_of(analysis: str) -> str:
-    tags = set(analysis.split("+"))
+def _case_of(tags: set) -> str:
+    """The first case tag in ``tags``, an analysis split on "+"."""
     for case in ("Acc", "Dat", "Loc", "Abl", "Gen", "Ins", "Nom"):
         if case in tags:
             return case
@@ -409,8 +412,9 @@ def _base(token: str) -> str:
     return to_lower(token.split("'")[0].split("’")[0])
 
 
-def _is_possessed(token: str, analysis: str) -> bool:
-    tags = set(analysis.replace("^", "+").split("+"))
+def _is_possessed(token: str, tags: set) -> bool:
+    """Whether ``token``'s analysis, split on "+" and "^" into ``tags``,
+    is possessed."""
     if tags & {"P1sg", "P2sg", "P3sg", "P1pl", "P2pl", "P3pl"}:
         return True
     # apostrophe-Prop analyses absorb the possessive into the root
@@ -692,7 +696,7 @@ class CandidateGenerator:
         sdic = self.suffix_dic
         for i in range(1, len(word)):
             suffix = low[i:] if sliced else to_lower(word[i:])
-            # _add emits only `suffix` or `rest`, and _tags_for_suffix
+            # _add emits only `suffix` or `rest`, and _parsed_tags
             # resolves only the empty suffix, a table key or "'" + a key:
             # a split where neither resolves yields no candidate
             rest = suffix[1:]
@@ -747,10 +751,6 @@ class CandidateGenerator:
             res.append((first, seq, "+".join(seq).replace("+DB", "^DB")))
         hit = self._parsed[suffix] = tuple(res)
         return hit
-
-    def _tags_for_suffix(self, suffix: str, stem_tags=None) -> list:
-        return [list(seq) for first, seq, _j in self._parsed_tags(suffix)
-                if stem_tags is None or first in stem_tags]
 
     # --- candidate assembly --------------------------------------------
 
@@ -809,9 +809,96 @@ class CandidateGenerator:
         return out
 
 
+class TokenContext(NamedTuple):
+    """One token and what the choice of its analysis knows of its sentence
+    (``_analyze_one`` keys its cache on these fields)."""
+
+    token: str
+    sent_final: bool  # the last word before any trailing punctuation
+    non_initial: bool  # a token precedes it
+    prev_case: str  # the previous analysis's ``_context_case``
+    next_coord: bool  # a coordinating conjunction follows (``_next_is_coord``)
+    prev_is_punct: bool  # the previous token is punctuation
+
+
+class Rivals:
+    """The kinds of reading a token's candidate list holds, from one pass
+    over it; ``HeuristicDisambiguator.score`` weighs candidates by them."""
+
+    __slots__ = ("segmented", "seg_nonp1", "finite", "plain_finite",
+                 "whole", "adj_whole", "passive", "converb", "acc")
+
+    def __init__(self, candidates, in_stems):
+        segmented = seg_nonp1 = finite = plain_finite = False
+        whole = adj_whole = passive = converb = acc = False
+        derived_acc, p3nom = set(), set()
+        for root, sfx, tags in candidates:
+            tset = set(tags)
+            first = tags[0]
+            stem = in_stems(root)
+            # a one-letter suffix barely outweighs the whole-word reading
+            # (hava vs hav+a); only >=2-char NOMINAL case splits demote it
+            # (baş+tan yes; toplan+tı finite-verb reading no — toplantı the
+            # noun beats the passive-past verb reading).  Genitive and
+            # 2nd-person-possessive splits don't demote the whole word — a
+            # genitive needs a following possessed head the whole-word
+            # reading doesn't, and P2sg is vanishingly rare in web prose
+            # (yangın stays yangın, not yang+Gen / yang+P2sg); P3sg splits
+            # still demote (günü = gün+P3sg).  Bare -lA instrumental and
+            # -DA locative splits never demote a whole-word dictionary noun
+            # (MAHALLE stays mahalle, not mahal+Ins; KOMİTE stays komite,
+            # not komi+Loc — the classic baş+tan demotion is ablative)
+            if (len(sfx) >= 2 and first.startswith("Noun") and stem
+                    and not tset & {"DB", "Gen", "Ins", "Loc", "P2sg",
+                                    "P2pl"}):
+                segmented = True
+                # does any demoting split exist BEYOND P1-possessive
+                # readings?  (a lexicalized -Im NOUN beats its accidental
+                # P1sg split — yatırım stays yatırım, not yatır+P1sg — but
+                # P1 splits still demote non-noun wholes: yarım+Num loses
+                # to the Adj reading)
+                seg_nonp1 = seg_nonp1 or not tset & {"P1sg", "P1pl"}
+            if first.startswith("Verb") and tset & _FINITE_TAGS:
+                # a whole-word imperative loses to a finite segmentation
+                # rival (içer = iç+Aor, not 'contain!')
+                finite = finite or bool(sfx)
+                # an underived (no-DB) finite verb rival demotes
+                # voice-derived readings of the same token (oynuyor:
+                # oyna+Prog1 over oy+Pass)
+                plain_finite = plain_finite or (first == "Verb"
+                                                and "DB" not in tset)
+            if not sfx and stem:
+                whole = True
+                adj_whole = adj_whole or first == "Adj"
+            if "Pass" in tset and "DB" in tset:
+                passive = True
+            if first.startswith("Verb") and stem and tset & _CONVERB_TAG_SET:
+                converb = True
+            # a plain accusative reading of a dictionary stem (kent+i,
+            # çocuğ+u) rivals the P3sg+Nom izafet reading of the same
+            # surface — the consonant-final homograph class where -(s)I
+            # possessive and -(y)I accusative coincide
+            if sfx and stem and "Acc" in tset and "Pnon" in tset:
+                if first == "Noun" and "DB" not in tset:
+                    acc = True
+                elif "DB" in tset and tags[-3:] == ["A3sg", "Pnon", "Acc"]:
+                    derived_acc.add((root, sfx))
+            if "P3sg" in tset and "Nom" in tset:
+                p3nom.add((root, sfx))
+        self.segmented, self.seg_nonp1 = segmented, seg_nonp1
+        self.finite, self.plain_finite = finite, plain_finite
+        self.whole, self.adj_whole = whole, adj_whole
+        self.passive, self.converb = passive, converb
+        # the same rivalry holds between DERIVED twins of one root:
+        # etkin+Ness+P3sg+Nom ('its etkinlik') vs etkin+Ness+Pnon+Acc —
+        # the -(s)I/-(y)I homograph carries over to -lIk/-mA
+        # nominalizations wholesale
+        self.acc = acc or not derived_acc.isdisjoint(p3nom)
+
+
 class HeuristicDisambiguator:
     """Deterministic context-aware candidate selector (surrogate for the
-    reference's context-GRU scorer — same selection interface)."""
+    reference's context-GRU scorer)."""
 
     def __init__(self):
         self.known = resources.known_words()
@@ -827,27 +914,17 @@ class HeuristicDisambiguator:
     def _in_stems(self, root: str) -> bool:
         return root in self.stems or capitalize(root) in self.stems
 
-    def score(
-        self,
-        root: str,
-        suffix: str,
-        tags,
-        idx: int,
-        tokens: Sequence[str],
-        has_segmented_rival: bool,
-        has_finite_rival: bool = False,
-        prev_case: str = "",
-        has_plain_finite_rival: bool = False,
-        has_whole_rival: bool = False,
-        has_pass_rival: bool = False,
-        has_converb_rival: bool = False,
-        has_adj_whole_rival: bool = False,
-        has_seg_rival_nonp1: bool = True,
-        has_any_rival: bool = False,
-        has_acc_rival: bool = False,
-    ) -> float:
-        if tags == "Unknown" or tags == ["Unknown"]:
-            return -1000.0
+    def score(self, root, suffix, tags, ctx: TokenContext, rivals) -> float:
+        """One candidate's score: the sum of the rule groups below.  Every
+        weight is a multiple of 0.5, so the sum is exact in any order."""
+        tag_set = set(tags)
+        return (self._lexicon_score(root, suffix)
+                + self._verb_score(root, suffix, tags, tag_set, ctx, rivals)
+                + self._class_score(tags, tag_set, ctx, rivals)
+                + self._segment_score(root, suffix, tags, tag_set, ctx, rivals)
+                + self._nominal_score(root, suffix, tags, tag_set, ctx, rivals))
+
+    def _lexicon_score(self, root: str, suffix: str) -> float:
         s = 1.0 * len(root)
         if self._in_stems(root):
             s += 40.0
@@ -867,20 +944,20 @@ class HeuristicDisambiguator:
             and root not in self.known
         ):
             s += 6.0
-        tag_set = set(tags)
-        first = tags[0]
-        token = tokens[idx]
-        # sentence-final (before trailing punctuation) verbs are likely
-        sent_final = idx == len(tokens) - 1 or all(
-            _NON_WORD.match(t) for t in tokens[idx + 1:]
-        )
-        if first == "Verb":
+        return s
+
+    def _verb_score(self, root, suffix, tags, tag_set, ctx, rivals):
+        """Verb readings against their nominal homographs, and the voice
+        and derivation rivals of a verb stem."""
+        s = 0.0
+        prev_case = ctx.prev_case
+        if tags[0] == "Verb":
             # final-obstruent voicing is a NOMINAL alternation (kitap ->
             # kitabı); verb stems keep their voiceless final before
             # vowel-initial suffixes (sap+Ar = sapar, never *sabar) except
             # the closed t->d class (git+Iyor = gidiyor).  A verb reading
             # whose stem surfaces voiced (sabır != sap+Aor) is bogus.
-            low_tok = to_lower(token)
+            low_tok = to_lower(ctx.token)
             pre = low_tok[: len(root)]
             if (
                 suffix
@@ -900,13 +977,13 @@ class HeuristicDisambiguator:
                 "Inf3", "Ness", "With", "Without", "Rel", "Ly",
             }
             if "Imp" in tag_set:
-                if sent_final:
-                    s += 2.0 if has_finite_rival else 25.0
+                if ctx.sent_final:
+                    s += 2.0 if rivals.finite else 25.0
                 else:
                     s += -15.0
-            elif sent_final:
+            elif ctx.sent_final:
                 s += 8.0 if not deriv else -4.0
-            if not deriv and tag_set & {"Aor", "Past", "Prog1", "Fut", "Narr"}:
+            if not deriv and tag_set & _FINITE_TAGS:
                 # finite readings beat nominal homographs also mid-sentence
                 # (arttı = art+Past, not 'its remainder')
                 s += 2.0
@@ -914,7 +991,7 @@ class HeuristicDisambiguator:
                 # whole-word noun is quotative-register only: in web
                 # prose the lexicalized noun wins (Komşulara YARDIM
                 # edildi = yardım the noun, not yar+Past+A1sg)
-                if tag_set & {"A1sg", "A2sg"} and has_whole_rival:
+                if tag_set & {"A1sg", "A2sg"} and rivals.whole:
                     s -= 1.0
                 # an oblique complement to the left selects the verb over
                 # a whole-word noun homograph (yola çıktı, parkta koştu
@@ -931,7 +1008,7 @@ class HeuristicDisambiguator:
                 # kurt+P3sg); possessed-noun homographs before "ve" are
                 # conjoined NPs and keep winning only when no finite
                 # rival exists (okul müdürü ve öğretmenler)
-                if _next_is_coord(tokens, idx):
+                if ctx.next_coord:
                     # +8 matches the sentence-final finite bonus: the
                     # pre-coordinator slot IS clause-final for the first
                     # conjunct (parkta KOŞTU ve ... sallandı)
@@ -969,13 +1046,13 @@ class HeuristicDisambiguator:
             if (
                 "PresPart" in tag_set
                 and prev_case in ("Loc", "Dat", "Abl")
-                and not sent_final
-                and to_lower(token) not in TITLE_ROLES
+                and not ctx.sent_final
+                and low_tok not in TITLE_ROLES
             ):
                 s += 10.0
             # prefer the underived finite reading over a voice-derived
             # rival (oynuyor = oyna+Prog1, not oy+Pass+Prog1)
-            if "Pass" in tag_set and "DB" in tags and has_plain_finite_rival:
+            if "Pass" in tag_set and "DB" in tags and rivals.plain_finite:
                 s -= 6.0
             # ... except when the "underived" rival is itself a rare -Hn
             # lexicalization of the passive's base verb: karar alındı is
@@ -983,35 +1060,42 @@ class HeuristicDisambiguator:
             # ... or a rare -lA denominal shadowing an everyday passive:
             # pazar kuruluyor is kur+Pass 'is being set up', almost
             # never kurula- 'towel-dry'
-            if root in ("alın", "kurula") and has_pass_rival:
+            if root in ("alın", "kurula") and rivals.passive:
                 s -= 15.0
             # rare a-final stems whose a-drop -Iyor surface shadows an
             # everyday consonant-final verb: doluyor = dol- 'fill up',
             # almost never dola- 'wrap around'
             if root == "dola" and tag_set & {"Prog1", "Prog2"}:
                 s -= 8.0
-        if "Acquire" in tag_set and has_pass_rival:
+        if "Acquire" in tag_set and rivals.passive:
             # when a denominal Acquire and a passive of the longer verb
             # stem spell the SAME surface (imza+lan- vs imzala+n-), the
             # passive parse carries the voice information downstream
             # (imzalanmadan önce = 'before being signed'); sized to beat
             # the known-lexicon gap of derived -lA verb stems
             s -= 12.0
-        if first == "Noun" and root == "alındı" and has_pass_rival:
+        if tags[0] == "Noun" and root == "alındı" and rivals.passive:
             # 'receipt' is live only as a modifier (alındı belgesi);
             # against a passive-finite rival the predicate reading wins
             # (karar alındı)
             s -= 15.0
-        if first == "Noun" and "Ly" in tag_set and has_converb_rival:
+        if tags[0] == "Noun" and "Ly" in tag_set and rivals.converb:
             # a -CA adverb segmentation of a noun homograph (çıkın+ca
             # 'bundle-like', gelin+ce 'bride-like') loses to a converb
             # rival of the verb stem (çık+ınca, gel+ince): -HncA/-Hp
             # adverbial clauses are orders of magnitude more frequent
             # than noun+CA manner adverbs in web prose
             s -= 8.0
+        return s
+
+    def _class_score(self, tags, tag_set, ctx, rivals):
+        """Closed-class and part-of-speech priors."""
+        s = 0.0
+        first = tags[0]
+        prev_case = ctx.prev_case
         if first == "Punc":
             s += 100.0
-        if first == "Num" and prev_case != "Gen" and not has_finite_rival:
+        if first == "Num" and prev_case != "Gen" and not rivals.finite:
             # number-word whole readings beat nominal segmentation
             # homographs (iki != ik+Acc, altı != alt+P3sg) — except after
             # a genitive possessor, where the possessed reading is live
@@ -1050,7 +1134,7 @@ class HeuristicDisambiguator:
                 s += 6.0  # postpositions (için, gibi, kadar) beat noun rivals
         if first == "Det":
             s += 8.0  # tiny closed class (bir, bu, şu, her...): near-certain
-        if first == "Adverb" and idx == 0:
+        if first == "Adverb" and not ctx.non_initial:
             s += 6.0  # sentence-initial adverbs (Şimdi, Sonra, ...)
         if first == "Adj" and len(tags) == 1:
             # citation-form adjectives resist over-segmentation, but the
@@ -1058,26 +1142,32 @@ class HeuristicDisambiguator:
             # in argument positions keep their nominal reading (taze
             # balık getirdi: balık = Noun, not Adj)
             s += 4.0
-        if first != "Verb" and "Verb" in tag_set:
+        if first != "Verb" and "Verb" in tag_set and ctx.sent_final:
             # DERIVED verbs (Become/Acquire: kesinLEŞECEK) carry the same
             # sentence-final finite-vs-participle asymmetry as plain
             # verbs; judge the segment after the LAST derivation boundary
             last_db = len(tags) - 1 - tags[::-1].index("DB") if "DB" in tags else -1
             final_seg = set(tags[last_db + 1:])
-            if sent_final:
-                # zero-copula chains (aç+Adj+...+Zero+Past 'it was open')
-                # keep their own penalties, and a Verb-first finite rival
-                # (yenile+ndi vs yeni+lendi) needs no counterweight; only
-                # derived-verb conjugations competing against OTHER
-                # derived readings (kesinLEŞECEK FutPart vs Fut) earn the
-                # finite bonus
-                if (final_seg & {"Aor", "Past", "Prog1", "Fut", "Narr"}
-                        and "Zero" not in final_seg
-                        and not has_finite_rival):
-                    s += 8.0
-                elif final_seg & {"PresPart", "FutPart", "PastPart",
-                                  "Agt", "Inf", "Inf2", "Inf3"}:
-                    s -= 4.0
+            # zero-copula chains (aç+Adj+...+Zero+Past 'it was open')
+            # keep their own penalties, and a Verb-first finite rival
+            # (yenile+ndi vs yeni+lendi) needs no counterweight; only
+            # derived-verb conjugations competing against OTHER
+            # derived readings (kesinLEŞECEK FutPart vs Fut) earn the
+            # finite bonus
+            if (final_seg & _FINITE_TAGS
+                    and "Zero" not in final_seg
+                    and not rivals.finite):
+                s += 8.0
+            elif final_seg & {"PresPart", "FutPart", "PastPart",
+                              "Agt", "Inf", "Inf2", "Inf3"}:
+                s -= 4.0
+        return s
+
+    def _segment_score(self, root, suffix, tags, tag_set, ctx, rivals):
+        """Whole word against segmentation, and the phonological and
+        lexical checks on a cut."""
+        s = 0.0
+        first = tags[0]
         # a case-marked segmentation with a dictionary root usually beats
         # the unmarked whole-word reading (baştan = baş+Abl, not
         # baştan+Nom) — except a whole-word NOUN whose only rival is a
@@ -1085,8 +1175,8 @@ class HeuristicDisambiguator:
         # -Im nominal stands)
         if (
             not suffix and first != "Adj"
-            and (has_seg_rival_nonp1
-                 or (has_segmented_rival and first != "Noun"))
+            and (rivals.seg_nonp1
+                 or (rivals.segmented and first != "Noun"))
         ):
             s -= 8.0
             # ... unless the token is capitalized MID-sentence: Turkish
@@ -1095,25 +1185,26 @@ class HeuristicDisambiguator:
             # (Mimar KAYA = kaya+Nom, not kay+Dat).  Sentence-initial
             # capitals carry no such signal.
             if (
-                idx > 0
+                ctx.non_initial
                 and first in ("Noun", "Adj")
                 and "Nom" in tag_set
-                and _STARTS_UPPER.match(token)
-                and not _NON_WORD.match(tokens[idx - 1])
+                and _STARTS_UPPER.match(ctx.token)
+                and not ctx.prev_is_punct
             ):
                 s += 16.0
-        # 2nd-person possessives are register-rare in web prose: when ANY
-        # rival reading exists, a P2 parse needs discourse support a
-        # single token can't supply (ziyaret EDEN = et+PresPart, not
-        # ede+P2sg 'your ede'; bare-candidate words like baban keep it)
-        if first == "Noun" and tag_set & {"P2sg", "P2pl"} and has_any_rival:
+        # 2nd-person possessives are register-rare in web prose: against
+        # any rival reading (and a scored candidate always has one), a P2
+        # parse needs discourse support a single token can't supply
+        # (ziyaret EDEN = et+PresPart, not ede+P2sg 'your ede'; words
+        # whose only candidate is P2, like baban, keep it)
+        if first == "Noun" and tag_set & {"P2sg", "P2pl"}:
             s -= 4.0
         # ... but a possessive/genitive segmentation needs discourse
         # context a single token can't supply: when an unsegmented
         # dictionary reading exists, it wins (fırtına != fırt+P3sg+Dat,
         # Takım != takı+P1sg, ürün != ür+Gen; plain-case splits like
         # baş+tan are unaffected)
-        if suffix and has_whole_rival and (
+        if suffix and rivals.whole and (
             tag_set & {"P1sg", "P1pl", "P2sg", "P2pl", "P3sg", "P3pl"}
             or "Gen" in tag_set
         ):
@@ -1125,7 +1216,7 @@ class HeuristicDisambiguator:
             s -= 2.0
             if tag_set & {"P1sg", "P2sg", "P1pl", "P2pl"}:
                 s -= 8.0
-            if not sent_final:
+            if not ctx.sent_final:
                 # copular predicates are clause-final; a mid-clause token
                 # is almost never 'tak+ım' = "I am a peg"
                 s -= 12.0
@@ -1141,7 +1232,7 @@ class HeuristicDisambiguator:
         # the reading steals a consonant (arttı != art+ı)
         if (
             suffix
-            and len(root) + len(suffix) == len(tokens[idx]) - 1
+            and len(root) + len(suffix) == len(ctx.token) - 1
             and root not in ("his", "hak", "zan", "af", "ret", "şık", "sır")
         ):
             s -= 6.0
@@ -1194,6 +1285,14 @@ class HeuristicDisambiguator:
                      and suffix[2] == "r")
         ):
             s -= 1000.0
+        return s
+
+    def _nominal_score(self, root, suffix, tags, tag_set, ctx, rivals):
+        """Izafet, possessive and proper-noun priors of nominal readings."""
+        s = 0.0
+        first = tags[0]
+        token = ctx.token
+        prev_case = ctx.prev_case
         # a possessed segmentation directly after a bare-Nom noun is the
         # izafet compound head; against a whole-word citation-adjective
         # homograph the compound reading wins (şehir MERKEZİ oldukça
@@ -1203,7 +1302,7 @@ class HeuristicDisambiguator:
             and suffix
             and "P3sg" in tag_set
             and prev_case in ("Nom", "NomPl", "NomD", "NomDq")
-            and has_adj_whole_rival
+            and rivals.adj_whole
             # scoped to the CLOSED loan-î homograph class (merkez+i/
             # merkezî, tarih+i/tarihî, asker+i/askerî), where noun and
             # adjective are separate lexemes split by circumflex loss.
@@ -1236,7 +1335,7 @@ class HeuristicDisambiguator:
              or ("DB" in tag_set and "Noun" in tag_set))
             and "P3sg" in tag_set
             and "Nom" in tag_set
-            and has_acc_rival
+            and rivals.acc
             and (
                 prev_case not in ("Nom", "NomP", "Gen", "NomPl", "NomD", "NomDq")
                 # a PLURAL bare-Nom licenses izafet only for the closed
@@ -1309,11 +1408,11 @@ class HeuristicDisambiguator:
             s += 8.0
         if "Prop" in tag_set and (
             "'" in token
-            or (_STARTS_UPPER.match(token) and idx > 0)
+            or (_STARTS_UPPER.match(token) and ctx.non_initial)
             or (_STARTS_UPPER.match(token) and to_lower(token) in self.gazetteer)
         ):
             s += 12.0  # apostrophe, mid-sentence capital, or gazetteer name
-        elif "Prop" in tag_set and idx == 0 and "'" not in token:
+        elif "Prop" in tag_set and not ctx.non_initial and "'" not in token:
             # sentence-initial capitalization alone is NOT a Prop signal:
             # prefer any real analysis rival (Yaşlı adam = yaş+lı, Sabah
             # kahvaltıda = sabah+Noun); novel true names keep winning
@@ -1321,147 +1420,30 @@ class HeuristicDisambiguator:
             s -= 8.0
         return s
 
-    def select(self, candidates, idx: int, tokens: Sequence[str],
-               prev_case: str = "") -> int:
-        # score every candidate: the reference's NUM_MAX_ANALYSIS cap is a
-        # model-input shape, not a search bound, and the whole-word reading
-        # is emitted LAST by the generator (hastane after hasta+ne)
-        cands = candidates
-        # a one-letter suffix barely outweighs the whole-word reading
-        # (hava vs hav+a); only >=2-char NOMINAL case splits demote it
-        # (baş+tan yes; toplan+tı finite-verb reading no — toplantı the
-        # noun beats the passive-past verb reading)
-        has_segmented_rival = any(
-            sfx and len(sfx) >= 2 and not isinstance(tags, str)
-            and tags and tags[0].startswith("Noun") and "DB" not in tags
-            and self._in_stems(root)
-            # genitive and 2nd-person-possessive splits don't demote the
-            # whole word — a genitive needs a following possessed head
-            # the whole-word reading doesn't, and P2sg is vanishingly
-            # rare in web prose (yangın stays yangın, not yang+Gen /
-            # yang+P2sg); P3sg splits still demote (günü = gün+P3sg)
-            and "Gen" not in tags
-            # bare -lA instrumental and -DA locative splits never demote
-            # a whole-word dictionary noun (MAHALLE stays mahalle, not
-            # mahal+Ins; KOMİTE stays komite, not komi+Loc — the classic
-            # baş+tan demotion is ablative and still applies)
-            and "Ins" not in tags
-            and "Loc" not in tags
-            and not {"P2sg", "P2pl"} & set(tags)
-            for root, sfx, tags in cands
-        )
-        # a whole-word imperative loses to a finite segmentation rival
-        # (içer = iç+Aor, not 'contain!'); keeps its bonus otherwise (başla)
-        has_finite_rival = any(
-            sfx and not isinstance(tags, str) and tags
-            and tags[0].startswith("Verb")
-            and {"Aor", "Past", "Prog1", "Fut", "Narr"} & set(tags)
-            for _root, sfx, tags in cands
-        )
-        # an underived (no-DB) finite verb rival demotes voice-derived
-        # readings of the same token (oynuyor: oyna+Prog1 over oy+Pass)
-        has_plain_finite_rival = any(
-            not isinstance(tags, str) and tags
-            and tags[0] == "Verb" and "DB" not in tags
-            and {"Aor", "Past", "Prog1", "Fut", "Narr"} & set(tags)
-            for _root, _sfx, tags in cands
-        )
-        has_whole_rival = any(
-            not sfx and not isinstance(tags, str) and tags
-            and self._in_stems(root)
-            for root, sfx, tags in cands
-        )
-        # does any demoting split exist BEYOND P1-possessive readings?
-        # (a lexicalized -Im NOUN beats its accidental P1sg split —
-        # yatırım stays yatırım, not yatır+P1sg — but P1 splits still
-        # demote non-noun wholes: yarım+Num loses to the Adj reading)
-        has_seg_rival_nonp1 = any(
-            sfx and len(sfx) >= 2 and not isinstance(tags, str)
-            and tags and tags[0].startswith("Noun") and "DB" not in tags
-            and self._in_stems(root)
-            and "Gen" not in tags
-            and "Ins" not in tags
-            and "Loc" not in tags
-            and not {"P1sg", "P1pl", "P2sg", "P2pl"} & set(tags)
-            for root, sfx, tags in cands
-        )
-        has_pass_rival = any(
-            not isinstance(tags, str) and tags
-            and "Pass" in tags and "DB" in tags
-            for _root, _sfx, tags in cands
-        )
-        has_converb_rival = any(
-            not isinstance(tags, str) and tags
-            and tags[0].startswith("Verb")
-            and set(tags) & _CONVERB_TAG_SET
-            and self._in_stems(root)
-            for root, _sfx, tags in cands
-        )
-        has_adj_whole_rival = any(
-            not sfx and not isinstance(tags, str) and tags
-            and tags[0] == "Adj" and self._in_stems(root)
-            for root, sfx, tags in cands
-        )
-        # a plain accusative reading of a dictionary stem (kent+i, çocuğ+u)
-        # rivals the P3sg+Nom izafet reading of the same surface — the
-        # consonant-final homograph class where -(s)I possessive and -(y)I
-        # accusative coincide
-        has_acc_rival = any(
-            sfx and not isinstance(tags, str) and tags
-            and tags[0] == "Noun" and "DB" not in tags
-            and "Acc" in tags and "Pnon" in tags
-            and self._in_stems(root)
-            for root, sfx, tags in cands
-        ) or any(
-            # the same rivalry holds between DERIVED twins of one root:
-            # etkin+Ness+P3sg+Nom ('its etkinlik') vs etkin+Ness+Pnon+Acc
-            # — the -(s)I/-(y)I homograph carries over to -lIk/-mA
-            # nominalizations wholesale
-            sfx and not isinstance(tags, str) and tags
-            and "DB" in tags and "Acc" in tags and "Pnon" in tags
-            and tags[-3:] == ["A3sg", "Pnon", "Acc"]
-            and self._in_stems(root)
-            and any(
-                r2 == root and s2 == sfx and not isinstance(t2, str)
-                and t2 and "P3sg" in t2 and "Nom" in t2
-                for r2, s2, t2 in cands
-            )
-            for root, sfx, tags in cands
-        )
+    def select(self, candidates, ctx: TokenContext) -> int:
+        """Index of the best of ``candidates`` (each with a tag list) for
+        the token in ``ctx``; a lone candidate is the pick, unscored."""
+        if len(candidates) == 1:
+            return 0
+        # score every candidate: the reference's cap of 10 analyses is a
+        # model-input shape, not a search bound, and the whole-word
+        # reading is emitted LAST by the generator (hastane after hasta+ne)
+        rivals = Rivals(candidates, self._in_stems)
         best, best_score = 0, float("-inf")
-        for ci, (root, suffix, tags) in enumerate(cands):
-            sc = self.score(
-                root,
-                suffix,
-                tags if not isinstance(tags, str) else [tags],
-                idx,
-                tokens,
-                has_segmented_rival,
-                has_finite_rival,
-                prev_case,
-                has_plain_finite_rival,
-                has_whole_rival,
-                has_pass_rival,
-                has_converb_rival,
-                has_adj_whole_rival,
-                has_seg_rival_nonp1,
-                has_any_rival=len(cands) > 1,
-                has_acc_rival=has_acc_rival,
-            )
+        for ci, (root, suffix, tags) in enumerate(candidates):
+            sc = self.score(root, suffix, tags, ctx, rivals)
             # tie-break WITHIN nominal readings: prefer the longer root
             # (inflection over derivation — ağaç+P3sg over ağa+Agt), the
             # reference stemmer's own longest-match bias.  Scoped to
             # nominal-vs-nominal ties so a finite-verb reading tied with
             # a noun homograph keeps its list priority (koş+Past over
             # koşut+P3sg for 'koştu')
-            tags0 = tags[0] if not isinstance(tags, str) else tags
-            best_tags = cands[best][2]
-            best0 = best_tags[0] if not isinstance(best_tags, str) else best_tags
+            best_root, _suffix, best_tags = candidates[best]
             if sc > best_score or (
                 sc == best_score
-                and len(root) > len(cands[best][0])
-                and tags0 in ("Noun", "Adj")
-                and best0 in ("Noun", "Adj")
+                and len(root) > len(best_root)
+                and tags[0] in ("Noun", "Adj")
+                and best_tags[0] in ("Noun", "Adj")
             ):
                 best, best_score = ci, sc
         return best
@@ -1470,6 +1452,15 @@ class HeuristicDisambiguator:
 @lru_cache(maxsize=1)
 def _engine():
     return CandidateGenerator(), HeuristicDisambiguator()
+
+
+def _real_candidates(token: str):
+    """The generator's candidates for ``token``, each with a tag list: none
+    where it fell back to its lone ``(word, "", "Unknown")``, the reference
+    contract.  The list is the generator's memo; callers must not mutate it."""
+    candidates = _engine()[0].get_analysis_candidates(token)
+    _root, _suffix, tags = candidates[0]
+    return () if isinstance(tags, str) else candidates
 
 
 def _unknown_fallback_candidates(word: str) -> list:
@@ -1483,7 +1474,7 @@ def _unknown_fallback_candidates(word: str) -> list:
     downstream case/possession rules still work; the longest stem with a
     legal suffix parse wins, and tags are restricted to plain nominal
     inflection (an unknown stem gives no evidence for ^DB derivation).
-    Returns [] when no split parses; callers then keep word+Unknown."""
+    Returns [] when no split parses: the word stays word+Unknown."""
     gen, _dis = _engine()
     low = to_lower(word)
     # foreign orthography or clitic apostrophes: not a Turkish inflection
@@ -1495,12 +1486,11 @@ def _unknown_fallback_candidates(word: str) -> list:
         if (sfx not in gen.suffix_dic or not _harmony_ok(stem, sfx)
                 or not _final_cluster_ok(stem)):
             continue
-        for tag_seq in gen._tags_for_suffix(sfx, ["Noun"]):
-            if "DB" in tag_seq:
-                continue
+        for first, tag_seq, _joined in gen._parsed_tags(sfx):
             # 2nd-person possessive parses of UNKNOWN stems are noise in
             # web prose (sakatlığına = P3sg+Dat, not 'to your sakatlığı')
-            if {"P2sg", "P2pl"} & set(tag_seq):
+            if (first != "Noun" or "DB" in tag_seq
+                    or {"P2sg", "P2pl"} & set(tag_seq)):
                 continue
             out.append((stem, sfx, list(tag_seq)))
     # a cut whose stem is a PRODUCTIVE agentive derivation of a known
@@ -1582,44 +1572,29 @@ _ANALYSIS_CACHE_MAX = 500_000
 
 
 def _analyze_one(token: str, sent_final: bool, non_initial: bool,
-                 prev_case: str = "", next_coord: bool = False,
-                 prev_is_punct: bool = False) -> str:
-    """One token's best analysis: the heuristic disambiguator's pick
-    among the generator's candidates."""
+                 prev_case: str, next_coord: bool, prev_is_punct: bool) -> str:
+    """One token's best analysis: the heuristic disambiguator's pick among
+    the generator's candidates (or, for an out-of-lexicon word, the
+    nominal fallback's), and ``word+Unknown`` where neither has one."""
     key = (token, sent_final, non_initial, prev_case, next_coord,
            prev_is_punct)
     hit = _ANALYSIS_CACHE.get(key)
     if hit is None:
-        gen, dis = _engine()
         exist = _EXISTENTIAL_EXACT.get(to_lower(token))
         if exist is not None:
             # closed-class existential copula: deterministic analysis
             suffix, rest = exist[0].split("/", 1)
             parts = _TAG_SEP.split(rest)
             candidates = [(parts[0], suffix, parts[1:])]
-            pick = 0
         else:
-            candidates = gen.get_analysis_candidates(token)
-            if len(candidates) == 1 and candidates[0][-1] == "Unknown":
-                fb = _unknown_fallback_candidates(token)
-                if fb:
-                    candidates = fb
-            # synthetic context: the one right-context fact the scorer
-            # uses beyond sentence-finality is whether a coordinating
-            # conjunction follows (clause-coordination prior), surfaced
-            # here as a literal "ve"; the one left-context fact is
-            # whether the previous token is punctuation (suppresses the
-            # mid-sentence capitalized-name bonus after quotes/colons),
-            # surfaced as a literal ":"
-            right = [] if sent_final else (["ve"] if next_coord else ["x"])
-            left = ([":"] if prev_is_punct else [""]) if non_initial else []
-            ctx = left + [token] + right
-            pick = dis.select(candidates, 1 if non_initial else 0, ctx,
-                              prev_case)
-        root, _suffix, tags = candidates[pick]
-        if isinstance(tags, str):
-            tags = [tags]
-        hit = "+".join([root] + list(tags)).replace("+DB", "^DB")
+            candidates = (_real_candidates(token)
+                          or _unknown_fallback_candidates(token))
+        if candidates:
+            pick = _engine()[1].select(candidates, TokenContext._make(key))
+            root, _suffix, tags = candidates[pick]
+            hit = "+".join([root, *tags]).replace("+DB", "^DB")
+        else:
+            hit = to_lower(token) + "+Unknown"
         if len(_ANALYSIS_CACHE) >= _ANALYSIS_CACHE_MAX:
             _ANALYSIS_CACHE.clear()
         _ANALYSIS_CACHE[key] = hit
@@ -1656,7 +1631,7 @@ def _context_case(analysis: str) -> str:
     elif prev_case == "Nom" and "A3pl" in tags and "Pnon" in tags:
         # a PLURAL bare-Nom is its own class too: it licenses izafet
         # only for institutional heads (Bakanlar Kurulu), not the
-        # open class — see the P3sg+Nom demotion in score()
+        # open class — see the P3sg+Nom demotion in ``_nominal_score``
         prev_case = "NomPl"
     elif (prev_case == "Nom" and "A3sg" in tags
           and not _tag_split(analysis)[1:2] == ["Adj"]
@@ -1666,7 +1641,7 @@ def _context_case(analysis: str) -> str:
         # a bare Noun/Adj DUAL stem (kaçak, dolu) licenses singular
         # izafet heads (dolu YAĞIŞI) but not PLURAL possessed ones
         # (kaçak YAPILARI = the Acc object of a transitive, with
-        # kaçak attributive) — see the matching demotion in score().
+        # kaçak attributive) — see the matching demotion in ``_nominal_score``.
         # QUALITY duals (kışlık, yazlık, antika) never head plural
         # izafet at all (kışlık LASTİKLERİ is attributive + Acc),
         # while substance duals keep it (DOLU taneleri = hailstones)
@@ -1682,28 +1657,33 @@ _PERIOD_ROOTS = {"yıl", "hafta", "ay", "gün", "sezon", "dönem", "yüzyıl",
                  "sınav", "yarış", "tören", "görüşme", "seçim"}
 
 
-def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
-    """Tokenized sentence -> best analysis string per token (the
-    ``StemmerAnalyzer.predict`` output contract, CAPITALIZE_PNONS=False).
+class MorphState:
+    """One sentence as the morphology passes see it: the tokens, their
+    Turkish-lowered forms and the chosen analyses, which the selection
+    pass fills left to right and the ``MORPH_RULES`` rewrite in place."""
 
-    Left context (previous token's chosen case) feeds the disambiguator's
-    homograph preferences (yola çıktı -> çık+Past, not the 'printout'
-    noun); it is part of the bounded cache key."""
-    out = []
-    n = len(tokens)
-    lows = [to_lower(t) for t in tokens]
+    __slots__ = ("tokens", "lows", "analyses")
+
+    def __init__(self, tokens: Sequence[str]):
+        self.tokens = tokens
+        self.lows = [to_lower(t) for t in tokens]
+        self.analyses: List[str] = []
+
+
+def _select_analyses(s: MorphState) -> None:
+    """Each token's analysis, left to right: the previous token's chosen
+    analysis gives the next one its left context (``prev_case``)."""
+    tokens, lows, out = s.tokens, s.lows, s.analyses
     non_word = [_NON_WORD.match(t) is not None for t in tokens]
     # trailing-punct run: every token at or after this position is NON_WORD
-    tail = n
+    tail = len(tokens)
     while tail > 0 and non_word[tail - 1]:
         tail -= 1
     prev_case = ""
     for idx, token in enumerate(tokens):
-        sent_final = idx >= tail - 1
-        next_coord = _next_is_coord(lows, idx)
-        prev_is_punct = idx > 0 and non_word[idx - 1]
-        analysis = _analyze_one(token, sent_final, idx > 0, prev_case,
-                                next_coord, prev_is_punct)
+        analysis = _analyze_one(token, idx >= tail - 1, idx > 0, prev_case,
+                                _next_is_coord(lows, idx),
+                                idx > 0 and non_word[idx - 1])
         if (
             analysis == "aracı+Noun+A3sg+Pnon+Nom"
             and idx > 0
@@ -1728,18 +1708,20 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
             analysis = "son+Noun+A3sg+P3sg+Loc"
         out.append(analysis)
         prev_case = _context_case(analysis)
-    # LVC-nominal repair (needs RIGHT context the per-token pass lacks):
-    # a chosen finite-verb reading directly before a light-verb finite
-    # (tahliyesine KARAR verdi = karar the noun + ver-, never kar+Aor +
-    # ver-: Turkish finite verbs do not stack) flips back to the token's
-    # whole-word noun reading when the lexicon has one.  Scoped to the
-    # light-verb family so -Ar -mAz reduplication converbs stay finite
-    # (çıkar çıkmaz).
-    gen, _dis = _engine()
+
+
+# LVC-nominal repair (needs RIGHT context the per-token pass lacks):
+# a chosen finite-verb reading directly before a light-verb finite
+# (tahliyesine KARAR verdi = karar the noun + ver-, never kar+Aor +
+# ver-: Turkish finite verbs do not stack) flips back to the token's
+# whole-word noun reading when the lexicon has one.  Scoped to the
+# light-verb family so -Ar -mAz reduplication converbs stay finite
+# (çıkar çıkmaz).
+def _light_verb_nominal(s: MorphState) -> None:
+    out, lows, stems = s.analyses, s.lows, _patched_stem_dict()
     for idx in range(len(out) - 1):
         tags_i = set(_tag_split(out[idx]))
-        if "Verb" not in tags_i or not tags_i & {"Aor", "Past", "Prog1",
-                                                 "Fut", "Narr"}:
+        if "Verb" not in tags_i or not tags_i & _FINITE_TAGS:
             continue
         nxt = _tag_split(out[idx + 1])
         if "Verb" not in nxt or nxt[0] not in ("ver", "et", "yap", "ol",
@@ -1748,14 +1730,17 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
         if not {"Aor", "Past", "Prog1", "Fut", "Narr", "Imp"} & set(nxt):
             continue
         low = lows[idx]
-        if low != out[idx].split("+", 1)[0] and "Noun" in gen.stem_dic.get(
-                low, ()):
+        if low != out[idx].split("+", 1)[0] and "Noun" in stems.get(low, ()):
             out[idx] = low + "+Noun+A3sg+Pnon+Nom"
-    # an Inf2 plural surface (-mAlArI) chosen as the Acc object after a
-    # bare-Nom possessor flips to its P3sg+Nom izafet twin when the
-    # clause predicate is PASSIVE (Kazı ÇALIŞMALARI ... sürdürülmektedir
-    # = the izafet subject); before an active verb the Acc object
-    # reading stands (Kurum YAZIŞMALARI ... şifreledi)
+
+
+# an Inf2 plural surface (-mAlArI) chosen as the Acc object after a
+# bare-Nom possessor flips to its P3sg+Nom izafet twin when the
+# clause predicate is PASSIVE (Kazı ÇALIŞMALARI ... sürdürülmektedir
+# = the izafet subject); before an active verb the Acc object
+# reading stands (Kurum YAZIŞMALARI ... şifreledi)
+def _inf2_plural_izafet(s: MorphState) -> None:
+    out = s.analyses
     for idx in range(1, len(out)):
         if ("+Inf2+" not in out[idx].replace("^", "+")
                 or not out[idx].endswith("+A3pl+Pnon+Acc")):
@@ -1769,47 +1754,53 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
         if nxt_verb is not None and "Pass" in _tag_split(nxt_verb):
             out[idx] = out[idx].replace("+A3pl+Pnon+Acc",
                                         "+A3pl+P3sg+Nom")
-    # every Turkish prose sentence needs a predicate: when NO chosen
-    # analysis in the sentence is verbal (finite, participle, converb or
-    # verbal noun) and the LAST content token has a plain finite rival,
-    # the nominal homograph stole the predicate slot (Pideci hamuru
-    # sabah erken YOĞURDU = yoğur+Past, never yoğurt+Acc — the noun's
-    # known-word bonus outscores the verb lexically, but the clause
-    # evidence is decisive).  Imperatives are excluded: zero-copula
-    # nominal sentences (Hedef büyüme.) keep their reading.
-    # ... and only with positive clause evidence: a case-marked nominal
-    # ARGUMENT earlier in the sentence (hamuru+Acc in the yoğurdu case).
-    # Bare copula-less equational sentences (Hedef büyüme. / Sonuç
-    # başarı.) carry no such argument and keep their nominal reading
-    # even when the final word has an Aor/Past noun-verb homograph.
-    if not any("Verb" in _tag_split(a) for a in out):
-        for idx in range(len(out) - 1, -1, -1):
-            if not any(ch.isalpha() for ch in tokens[idx]):
-                continue
-            if not any(
-                    ({"Acc", "Dat", "Loc", "Abl"} & set(tg))
-                    # a possessed-Nom nominal is the Acc-ambiguous
-                    # object shape (hamuru = hamur+P3sg+Nom / +Acc)
-                    # and counts as argument evidence too
-                    or {"P3sg", "Nom"} <= set(tg)
-                    for tg in (_tag_split(out[j])
-                               for j in range(idx))):
-                break
-            for root, sfx, tags in gen.get_analysis_candidates(
-                    tokens[idx]):
-                if (not isinstance(tags, str) and tags[0] == "Verb"
-                        and "DB" not in tags
-                        and {"Aor", "Past", "Prog1", "Fut",
-                             "Narr"} & set(tags)):
-                    out[idx] = root + "+" + "+".join(tags)
-                    break
+
+
+# every Turkish prose sentence needs a predicate: when NO chosen
+# analysis in the sentence is verbal (finite, participle, converb or
+# verbal noun) and the LAST content token has a plain finite rival,
+# the nominal homograph stole the predicate slot (Pideci hamuru
+# sabah erken YOĞURDU = yoğur+Past, never yoğurt+Acc — the noun's
+# known-word bonus outscores the verb lexically, but the clause
+# evidence is decisive).  Imperatives are excluded: zero-copula
+# nominal sentences (Hedef büyüme.) keep their reading.
+# ... and only with positive clause evidence: a case-marked nominal
+# ARGUMENT earlier in the sentence (hamuru+Acc in the yoğurdu case).
+# Bare copula-less equational sentences (Hedef büyüme. / Sonuç
+# başarı.) carry no such argument and keep their nominal reading
+# even when the final word has an Aor/Past noun-verb homograph.
+def _missing_predicate(s: MorphState) -> None:
+    out, tokens = s.analyses, s.tokens
+    if any("Verb" in _tag_split(a) for a in out):
+        return
+    for idx in range(len(out) - 1, -1, -1):
+        if not any(ch.isalpha() for ch in tokens[idx]):
+            continue
+        if not any(
+                ({"Acc", "Dat", "Loc", "Abl"} & set(tg))
+                # a possessed-Nom nominal is the Acc-ambiguous
+                # object shape (hamuru = hamur+P3sg+Nom / +Acc)
+                # and counts as argument evidence too
+                or {"P3sg", "Nom"} <= set(tg)
+                for tg in (_tag_split(out[j])
+                           for j in range(idx))):
             break
-    # a lexicalized deverbal-noun homograph of the kal-participle
-    # (kalan 'the remainder') directly after a bare-Nom noun and before
-    # a nominal is the participle in its idiomatic collocation (miras
-    # KALAN evi, yadigar KALAN saat): the left nominal is the
-    # participle's own argument.  Scoped to kal- — open agentive nouns
-    # (çalışan sayısı 'employee count') keep their izafet reading.
+        for root, sfx, tags in _real_candidates(tokens[idx]):
+            if (tags[0] == "Verb" and "DB" not in tags
+                    and _FINITE_TAGS & set(tags)):
+                out[idx] = root + "+" + "+".join(tags)
+                break
+        break
+
+
+# a lexicalized deverbal-noun homograph of the kal-participle
+# (kalan 'the remainder') directly after a bare-Nom noun and before
+# a nominal is the participle in its idiomatic collocation (miras
+# KALAN evi, yadigar KALAN saat): the left nominal is the
+# participle's own argument.  Scoped to kal- — open agentive nouns
+# (çalışan sayısı 'employee count') keep their izafet reading.
+def _kalan_participle(s: MorphState) -> None:
+    out = s.analyses
     for idx in range(1, len(out) - 1):
         if out[idx] != "kalan+Noun+A3sg+Pnon+Nom":
             continue
@@ -1818,11 +1809,15 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
         if ("Noun" in prv and "Pnon" in prv and "Nom" in prv
                 and "Noun" in nxt):
             out[idx] = "kal+Verb+Pos^DB+Adj+PresPart"
-    # the mirror repair: a NOUN reading chosen for an et/ol/yap surface
-    # directly AFTER a bare-Nom noun is the light-verb complex's verb
-    # (kulüp başkanı istifa EDİNCE = et+When, never edinç+Dat 'to the
-    # acquisition'): the bare nominal demands its support verb, and the
-    # rival noun stems in this surface class are archaic
+
+
+# the mirror repair: a NOUN reading chosen for an et/ol/yap surface
+# directly AFTER a bare-Nom noun is the light-verb complex's verb
+# (kulüp başkanı istifa EDİNCE = et+When, never edinç+Dat 'to the
+# acquisition'): the bare nominal demands its support verb, and the
+# rival noun stems in this surface class are archaic
+def _support_verb(s: MorphState) -> None:
+    out, tokens, lows = s.analyses, s.tokens, s.lows
     for idx in range(1, len(out)):
         # cheap surface pre-filter: an et/ol/yap/kıl/bulun-rooted
         # candidate only exists for these prefixes — skipping the
@@ -1838,8 +1833,8 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
         if not (prv[0:1] and "Noun" in prv and "Pnon" in prv
                 and "Nom" in prv):
             continue
-        for root, sfx, tags in gen.get_analysis_candidates(tokens[idx]):
-            if (not isinstance(tags, str) and tags[0] == "Verb"
+        for root, sfx, tags in _real_candidates(tokens[idx]):
+            if (tags[0] == "Verb"
                     and root in ("et", "ol", "yap", "kıl", "bulun")
                     # only UNDERIVED verb forms (edince, ederek, etti):
                     # a multiply-derived candidate is an artifact of the
@@ -1856,10 +1851,14 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
                 out[idx] = root + "+" + "+".join(tags).replace(
                     "+DB", "^DB")
                 break
-    # the same repair for the frozen son-LVC frames: the Adj reading of
-    # "son" directly before ver-/bul- finite is the lexicalized event
-    # nominal (çalışmaya SON verdi, tartışma SON buldu), never the
-    # adjective 'last' (which needs a nominal host)
+
+
+# the same repair for the frozen son-LVC frames: the Adj reading of
+# "son" directly before ver-/bul- finite is the lexicalized event
+# nominal (çalışmaya SON verdi, tartışma SON buldu), never the
+# adjective 'last' (which needs a nominal host)
+def _son_light_verb(s: MorphState) -> None:
+    out = s.analyses
     for idx in range(len(out) - 1):
         if out[idx] != "son+Adj":
             continue
@@ -1868,20 +1867,22 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
                 and {"Aor", "Past", "Prog1", "Fut", "Narr",
                      "Imp"} & set(nxt)):
             out[idx] = "son+Noun+A3sg+Pnon+Nom"
-    # a whole-word adjective directly before a plain finite verb, with
-    # an attributive-capable neighbor on its left and the clause's
-    # subject AND Acc object both standing earlier, is the case-marked
-    # noun rival (Emlakçı daireyi genç ÇİFTE gösterdi = çift+Dat 'to
-    # the couple'): the adjective reading strands its neighbor hostless
-    # before the verb, and the frame already has its arguments
+
+
+# a whole-word adjective directly before a plain finite verb, with
+# an attributive-capable neighbor on its left and the clause's
+# subject AND Acc object both standing earlier, is the case-marked
+# noun rival (Emlakçı daireyi genç ÇİFTE gösterdi = çift+Dat 'to
+# the couple'): the adjective reading strands its neighbor hostless
+# before the verb, and the frame already has its arguments
+def _stranded_adjective(s: MorphState) -> None:
+    out, tokens, stems = s.analyses, s.tokens, _patched_stem_dict()
     for idx in range(2, len(out) - 1):
         cur = out[idx]
         if cur.count("+") != 1 or not cur.endswith("+Adj"):
             continue
         nxt = _tag_split(out[idx + 1])
-        if ("Verb" not in nxt
-                or not {"Aor", "Past", "Prog1", "Fut", "Narr"}
-                & set(nxt)):
+        if "Verb" not in nxt or not _FINITE_TAGS & set(nxt):
             continue
         prv = _tag_split(out[idx - 1])
         prv_stem = prv[0]
@@ -1894,7 +1895,7 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
             prv_final = prv[1] if len(prv) > 1 else prv[-1]
         prev_attr = (prv[-1:] == ["Adj"]
                      or prv_final == "Adj"
-                     or ("Adj" in gen.stem_dic.get(prv_stem, ())
+                     or ("Adj" in stems.get(prv_stem, ())
                          and "Noun" in prv and "Pnon" in prv
                          and "Nom" in prv))
         if not prev_attr:
@@ -1907,9 +1908,8 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
             continue
         cased = next(
             (root + "+" + "+".join(tags)
-             for root, sfx, tags in gen.get_analysis_candidates(
-                 tokens[idx])
-             if not isinstance(tags, str) and sfx
+             for root, sfx, tags in _real_candidates(tokens[idx])
+             if sfx
              and tags[-1] in ("Dat", "Loc", "Abl", "Ins")
              and "Pnon" in tags),
             None,
@@ -1918,15 +1918,18 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
             continue
         out[idx] = cased.replace("+DB+", "^DB+")
         # the stranded neighbor re-reads as its attributive twin
-        if prv[-1:] != ["Adj"] and "Adj" in gen.stem_dic.get(
-                prv_stem, ()):
+        if prv[-1:] != ["Adj"] and "Adj" in stems.get(prv_stem, ()):
             out[idx - 1] = prv_stem + "+Adj"
-    # the 'düşünce' homograph: the whole-word noun ('thought') directly
-    # after a Nom/possessed-Nom NOMINAL, with a later finite verb, is
-    # the düş- When-converb (tirajı DÜŞÜNCE kapağı yeniledi, üretimi
-    # DÜŞÜNCE jeneratörü devreye aldı): the noun reading would need its
-    # own izafet or determiner frame (bu düşünce, yeni bir düşünce),
-    # never a bare-Nom left neighbor
+
+
+# the 'düşünce' homograph: the whole-word noun ('thought') directly
+# after a Nom/possessed-Nom NOMINAL, with a later finite verb, is
+# the düş- When-converb (tirajı DÜŞÜNCE kapağı yeniledi, üretimi
+# DÜŞÜNCE jeneratörü devreye aldı): the noun reading would need its
+# own izafet or determiner frame (bu düşünce, yeni bir düşünce),
+# never a bare-Nom left neighbor
+def _dusunce_converb(s: MorphState) -> None:
+    out = s.analyses
     for idx in range(1, len(out)):
         if out[idx] != "düşünce+Noun+A3sg+Pnon+Nom":
             continue
@@ -1934,16 +1937,19 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
         if not ({"Noun", "Nom"} <= prv or {"Noun", "Acc"} <= prv):
             continue
         if any("Verb" in _tag_split(out[j])
-               and {"Aor", "Past", "Prog1", "Fut", "Narr"}
-               & set(_tag_split(out[j]))
+               and _FINITE_TAGS & set(_tag_split(out[j]))
                for j in range(idx + 1, len(out))):
             out[idx] = "düş+Verb+Pos+When"
-    # a -mA deverbal nominal whose surface collides with a RARE noun's
-    # Dat (yükleme = yükle+Inf2 vs yüklem+Dat), directly before a PHASE
-    # verb (bit-/başla-/tamamlan-), is the event nominal: phase verbs
-    # select event subjects, and the Dat-goal reading has no licenser
-    # (YÜKLEME bitince ambarı mühürledi).  Scoped to the phase class so
-    # "bu ANLAMA gelir" keeps anlam+Dat.
+
+
+# a -mA deverbal nominal whose surface collides with a RARE noun's
+# Dat (yükleme = yükle+Inf2 vs yüklem+Dat), directly before a PHASE
+# verb (bit-/başla-/tamamlan-), is the event nominal: phase verbs
+# select event subjects, and the Dat-goal reading has no licenser
+# (YÜKLEME bitince ambarı mühürledi).  Scoped to the phase class so
+# "bu ANLAMA gelir" keeps anlam+Dat.
+def _phase_event_nominal(s: MorphState) -> None:
+    out, tokens = s.analyses, s.tokens
     for idx in range(len(out) - 1):
         parts = _tag_split(out[idx])
         if parts[-1:] != ["Dat"] or parts[0:1] == ["Verb"]:
@@ -1954,20 +1960,23 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
             continue
         inf2 = next(
             (root + "+" + "+".join(tags).replace("+DB+", "^DB+")
-             for root, sfx, tags in gen.get_analysis_candidates(
-                 tokens[idx])
-             if not isinstance(tags, str) and tags[0] == "Verb"
+             for root, sfx, tags in _real_candidates(tokens[idx])
+             if tags[0] == "Verb"
              and "Inf2" in tags and "Nom" in tags and "Pnon" in tags),
             None,
         )
         if inf2 is not None:
             out[idx] = inf2
-    # a loan-î citation adjective directly before a plain finite verb is
-    # the Acc-object segmentation when the clause already has a subject
-    # (Yetkililer MERKEZİ kapattı; Rehber TARİHİ anlatıyor): an
-    # adjective cannot modify a finite verb, and the manner-adverb
-    # reading does not exist for this closed class.  Copular/light verbs
-    # keep the predicative adjective (resmi OLDU).
+
+
+# a loan-î citation adjective directly before a plain finite verb is
+# the Acc-object segmentation when the clause already has a subject
+# (Yetkililer MERKEZİ kapattı; Rehber TARİHİ anlatıyor): an
+# adjective cannot modify a finite verb, and the manner-adverb
+# reading does not exist for this closed class.  Copular/light verbs
+# keep the predicative adjective (resmi OLDU).
+def _loan_i_object(s: MorphState) -> None:
+    out, tokens, lows = s.analyses, s.tokens, s.lows
     for idx in range(1, len(out) - 1):
         low = lows[idx]
         if low not in _LOAN_I_ACC_ADJS or out[idx] != low + "+Adj":
@@ -1980,8 +1989,7 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
                 # zero-copula predicates are not verb hosts for an
                 # object; voice/causative derivations (kapattı) are
                 or "Zero" in nxt
-                or not {"Aor", "Past", "Prog1", "Fut",
-                        "Narr"} & set(nxt)):
+                or not _FINITE_TAGS & set(nxt)):
             continue
         if not any(
             "Noun" in _tag_split(o) and "Nom" in _tag_split(o)
@@ -1990,20 +1998,22 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
             continue
         acc = next(
             (f"{root}+" + "+".join(tags)
-             for root, _sfx, tags in gen.get_analysis_candidates(
-                 tokens[idx])
-             if not isinstance(tags, str) and tags
-             and tags[0] == "Noun" and "Acc" in tags
+             for root, _sfx, tags in _real_candidates(tokens[idx])
+             if tags[0] == "Noun" and "Acc" in tags
              and "Pnon" in tags and "DB" not in tags),
             None,
         )
         if acc:
             out[idx] = acc
-    # the asker/resim/din sub-class of loan-î homographs is attributive
-    # before a nominal host: their P3sg izafet readings are rare in web
-    # prose (Bina ASKERİ birliklere devredildi -> askerî birlikler),
-    # unlike tarih/merkez, whose possessed readings are everyday izafet
-    # heads (ülke tarihi, şehir merkezi) and stay untouched
+
+
+# the asker/resim/din sub-class of loan-î homographs is attributive
+# before a nominal host: their P3sg izafet readings are rare in web
+# prose (Bina ASKERİ birliklere devredildi -> askerî birlikler),
+# unlike tarih/merkez, whose possessed readings are everyday izafet
+# heads (ülke tarihi, şehir merkezi) and stay untouched
+def _loan_i_attributive(s: MorphState) -> None:
+    out, lows = s.analyses, s.lows
     for idx in range(len(out) - 1):
         low = lows[idx]
         if low not in ("askeri", "resmi", "dini", "madeni"):
@@ -2024,49 +2034,57 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
             nxt_pos = nxt_parts[1] if len(nxt_parts) > 1 else ""
         if nxt_pos == "Noun":
             out[idx] = low + "+Adj"
-    # a DUAL Noun/Adj stem before a PLURAL possessed-Nom with an Acc
-    # rival: when the clause already has a subject on the LEFT, the
-    # plural is the Acc object and the dual is attributive (Zabıta
-    # ekipleri kaçak YAPILARI mühürledi); sentence-initially the izafet
-    # stands (DOLU taneleri camları kırdı)
+
+
+# a DUAL Noun/Adj stem before a PLURAL possessed-Nom with an Acc
+# rival: when the clause already has a subject on the LEFT, the
+# plural is the Acc object and the dual is attributive (Zabıta
+# ekipleri kaçak YAPILARI mühürledi); sentence-initially the izafet
+# stands (DOLU taneleri camları kırdı)
+def _dual_stem_attributive(s: MorphState) -> None:
+    out, tokens, lows = s.analyses, s.tokens, s.lows
+    stems = _patched_stem_dict()
     for idx in range(1, len(out) - 1):
         low = lows[idx]
         parts = _tag_split(out[idx])
-        if (parts[0] == low
+        if not (parts[0] == low
                 and parts[1:2] == ["Noun"] and "Pnon" in parts
                 and "Nom" in parts and "A3sg" in parts
-                and "Adj" in gen.stem_dic.get(low, ())):
-            nxt = _tag_split(out[idx + 1])
-            if not ("A3pl" in nxt and "P3sg" in nxt and "Nom" in nxt
-                    and "Noun" in nxt):
-                continue
-            if not any(
-                "Noun" in _tag_split(o) and "Nom" in _tag_split(o)
-                for o in out[:idx]
-            ):
-                continue
-            acc = next(
-                (f"{root}+" + "+".join(tags)
-                 for root, _sfx, tags in gen.get_analysis_candidates(
-                     tokens[idx + 1])
-                 if not isinstance(tags, str) and tags
-                 and tags[0] == "Noun" and "Acc" in tags
-                 and "Pnon" in tags and "A3pl" in tags
-                 and "DB" not in tags),
-                None,
-            )
-            if acc:
-                out[idx + 1] = acc
-                out[idx] = low + "+Adj"
-    # an Adverb/Adj dual stem (açık, yalnız, geri) directly before a
-    # bare unpossessed nominal is the attributive adjective (AÇIK hava
-    # sineması, YALNIZ kadın); the adverb reading needs a verb or
-    # clause-level scope
+                and "Adj" in stems.get(low, ())):
+            continue
+        nxt = _tag_split(out[idx + 1])
+        if not ("A3pl" in nxt and "P3sg" in nxt and "Nom" in nxt
+                and "Noun" in nxt):
+            continue
+        if not any(
+            "Noun" in _tag_split(o) and "Nom" in _tag_split(o)
+            for o in out[:idx]
+        ):
+            continue
+        acc = next(
+            (f"{root}+" + "+".join(tags)
+             for root, _sfx, tags in _real_candidates(tokens[idx + 1])
+             if tags[0] == "Noun" and "Acc" in tags
+             and "Pnon" in tags and "A3pl" in tags
+             and "DB" not in tags),
+            None,
+        )
+        if acc:
+            out[idx + 1] = acc
+            out[idx] = low + "+Adj"
+
+
+# an Adverb/Adj dual stem (açık, yalnız, geri) directly before a
+# bare unpossessed nominal is the attributive adjective (AÇIK hava
+# sineması, YALNIZ kadın); the adverb reading needs a verb or
+# clause-level scope
+def _adverb_attributive(s: MorphState) -> None:
+    out, lows, stems = s.analyses, s.lows, _patched_stem_dict()
     for idx in range(len(out) - 1):
         low = lows[idx]
         if out[idx] != low + "+Adverb":
             continue
-        if "Adj" not in gen.stem_dic.get(low, ()):
+        if "Adj" not in stems.get(low, ()):
             continue
         nxt_parts = _tag_split(out[idx + 1])
         if ("Noun" in nxt_parts and "Verb" not in nxt_parts
@@ -2074,8 +2092,12 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
                 and ("Nom" in nxt_parts
                      or not any(c in nxt_parts for c in _CASE_TAGS))):
             out[idx] = low + "+Adj"
-    # clock-time frame: a numeral-Loc reading directly after bare "saat"
-    # beats the pronoun homograph (Tören saat ONDA başladı != 'in it')
+
+
+# clock-time frame: a numeral-Loc reading directly after bare "saat"
+# beats the pronoun homograph (Tören saat ONDA başladı != 'in it')
+def _clock_time(s: MorphState) -> None:
+    out, tokens, lows = s.analyses, s.tokens, s.lows
     for idx in range(1, len(out)):
         if lows[idx - 1] != "saat":
             continue
@@ -2083,15 +2105,34 @@ def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
             continue
         num_loc = next(
             (f"{root}+" + "+".join(tags).replace("+DB+", "^DB+")
-             for root, _sfx, tags in gen.get_analysis_candidates(
-                 tokens[idx])
-             if not isinstance(tags, str) and tags
-             and tags[0] == "Num" and "Loc" in tags),
+             for root, _sfx, tags in _real_candidates(tokens[idx])
+             if tags[0] == "Num" and "Loc" in tags),
             None,
         )
         if num_loc:
             out[idx] = num_loc
-    return out
+
+
+# the post-passes, in order, over the analyses ``_select_analyses`` chose:
+# each reads right context the left-to-right selection lacks
+MORPH_RULES = (
+    _light_verb_nominal, _inf2_plural_izafet, _missing_predicate,
+    _kalan_participle, _support_verb, _son_light_verb, _stranded_adjective,
+    _dusunce_converb, _phase_event_nominal, _loan_i_object,
+    _loan_i_attributive, _dual_stem_attributive, _adverb_attributive,
+    _clock_time,
+)
+
+
+def py_analyze_tokens(tokens: Sequence[str]) -> List[str]:
+    """Tokenized sentence -> best analysis string per token (the
+    ``StemmerAnalyzer.predict`` output contract, CAPITALIZE_PNONS=False):
+    the left-to-right selection, then each of ``MORPH_RULES`` in order."""
+    s = MorphState(tokens)
+    _select_analyses(s)
+    for rule in MORPH_RULES:
+        rule(s)
+    return s.analyses
 
 
 def py_analyze_sentence(sentence: str) -> List[str]:

@@ -38,6 +38,7 @@ from .morphology import (
     _case_of,
     _engine,
     _is_possessed,
+    _real_candidates,
     _typed_gazetteer,
     _unknown_fallback_candidates,
     py_analyze_tokens,
@@ -60,17 +61,13 @@ def _readings(token: str) -> frozenset:
     layer and the parser — 'can this word be a bare adjective / a plain
     noun / both Acc and P3sg+Nom?')."""
     gen, _dis = _engine()
-    cands = gen.get_analysis_candidates(token)
-    if all(isinstance(t, str) or t == ["Unknown"] for _r, _s, t in cands):
-        # out-of-lexicon stems (kaçakçıları): the selection layer analyzes
-        # these through the nominal-inflection fallback, so the reading
-        # classes must come from the same candidate set or the Acc /
-        # P3sg+Nom homography would silently never be re-resolved
-        cands = list(cands) + _unknown_fallback_candidates(token)
+    # out-of-lexicon stems (kaçakçıları): the selection layer analyzes
+    # these through the nominal-inflection fallback, so the reading
+    # classes must come from the same candidate set or the Acc /
+    # P3sg+Nom homography would silently never be re-resolved
+    cands = _real_candidates(token) or _unknown_fallback_candidates(token)
     out = set()
     for _root, _suffix, tags in cands:
-        if isinstance(tags, str):
-            continue
         # genitive-shaped junk stems from the reference list (durumun):
         # their suffixed readings shadow the base-stem paradigm and must
         # not contribute reading classes (durumun+u would add a bogus
@@ -283,9 +280,12 @@ class ParseState:
         self.lows = [to_lower(t) for t in tokens]
         tagsets = self.tagsets = [set(a.replace("^", "+").split("+"))
                                   for a in analyses]
-        self.roots = [a.split("+", 1)[0] for a in analyses]
-        self.base_case = [_case_of(a) for a in analyses]
-        self.base_poss = [_is_possessed(tokens[i], analyses[i])
+        parts = [a.split("+") for a in analyses]
+        self.roots = [p[0] for p in parts]
+        # the case reads the "+"-split tags, where a "Nom^DB" group is no
+        # Nom; the possessive reads the "^"-split ``tagsets``
+        self.base_case = [_case_of(set(p)) for p in parts]
+        self.base_poss = [_is_possessed(tokens[i], tagsets[i])
                           for i in range(n)]
         # the morph-derived UPOS, which some UPOS rules read after ``upos``
         # has moved on

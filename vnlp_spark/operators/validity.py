@@ -16,16 +16,14 @@ from pyspark.sql.types import ArrayType, BooleanType
 
 from .. import resources
 from ..functions._udf import arrow_map
-from .morphology import _engine
+from .morphology import _real_candidates
 
 _TOKEN_MEMO_MAX = 8192
 
 
 @lru_cache(maxsize=_TOKEN_MEMO_MAX)
 def py_is_token_valid_turkish(token: str) -> bool:
-    gen, _ = _engine()
-    valid_by_analyzer = gen.get_analysis_candidates(token)[0][-1] != "Unknown"
-    return valid_by_analyzer or token in resources.known_words()
+    return bool(_real_candidates(token)) or token in resources.known_words()
 
 
 def py_tokens_validity(tokens: List[str]) -> List[bool]:
