@@ -88,35 +88,24 @@ def pure_python_web_pages(n_docs: int):
     return pages
 
 
-def annotate_text(text: str, prefixes) -> list:
-    """Full pure-python annotation of one document: -> list of per-
-    sentence dicts (sent_id, sentence, tokens, analyses, mentions, arcs)."""
-    from vnlp_spark.functions.sentence_splitter import py_split_sentences
-    from vnlp_spark.functions.tokenizer import py_treebank_tokenize
-    from vnlp_spark.operators.dep_parser import py_parse_tokens
-    from vnlp_spark.operators.morphology import py_analyze_tokens
-    from vnlp_spark.operators.ner import py_ner_mentions
+def annotate_text(text: str) -> list:
+    """Full pure-python annotation of one document (the kernel of the KG
+    jobs' annotation UDF): -> list of per-sentence dicts (sent_id,
+    sentence, tokens, analyses, mentions, arcs)."""
+    from vnlp_spark.plans.pipeline import py_annotate_document
 
-    out = []
-    for sid, sent in enumerate(py_split_sentences(text, prefixes)):
-        tokens = py_treebank_tokenize(sent)
-        analyses = py_analyze_tokens(tokens)
-        mentions = [
-            {"mention": m["mention"], "label": m["label"],
-             "first_tok": m["first_tok"], "last_tok": m["last_tok"]}
-            for m in py_ner_mentions(tokens)
-        ]
-        parsed = py_parse_tokens(tokens, analyses=analyses)
-        # None = the reference's >40-token refusal -> null arcs column
-        arcs = None if parsed is None else [
-            {"idx": a[0], "token": a[1], "head": a[2], "deprel": a[3]}
-            for a in parsed
-        ]
-        out.append(
-            {"sent_id": sid, "sentence": sent, "tokens": tokens,
-             "analyses": analyses, "mentions": mentions, "arcs": arcs}
-        )
-    return out
+    return [
+        {"sent_id": sid, "sentence": sent, "tokens": tokens,
+         "analyses": analyses,
+         "mentions": [
+             {"mention": m, "label": lab, "first_tok": first, "last_tok": last}
+             for (m, lab, first, last) in mentions],
+         # None = the reference's >40-token refusal -> null arcs column
+         "arcs": None if arcs is None else [
+             {"idx": i, "token": tok, "head": head, "deprel": rel}
+             for (i, tok, head, rel) in arcs]}
+        for sid, sent, tokens, analyses, mentions, arcs in py_annotate_document(text)
+    ]
 
 
 def write(out_dir, name, cols: dict, types: dict):
@@ -235,7 +224,7 @@ def main():
 
         # annotated sentences for the kg_triples SQL replay (lang=None:
         # every doc, url = doc://<id>, per docs_to_web_pages)
-        for row in annotate_text(text, prefixes):
+        for row in annotate_text(text):
             ann_docs["url"].append(f"doc://{doc_id}")
             ann_docs["sent_id"].append(row["sent_id"])
             ann_docs["tokens"].append(row["tokens"])
@@ -283,7 +272,7 @@ def main():
             continue
         rows = sent_cache.get(p["text"])
         if rows is None:
-            rows = annotate_text(p["text"], prefixes)
+            rows = annotate_text(p["text"])
             sent_cache[p["text"]] = rows
         for row in rows:
             ann_c["url"].append(p["url"])

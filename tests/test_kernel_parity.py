@@ -1,6 +1,6 @@
 """Parity hash of the annotation kernel.
 
-Every KG job annotates through ``pipeline._annotate_sentence_cached``
+Every KG job annotates through ``pipeline.annotate_sentence``
 (tokenize + morphology + NER + parse).  This test hashes its outputs
 ``(tokens, analyses, mentions, arcs)`` over three fixed inputs — the
 synthetic corpus's sentence pool, the frozen gold sentence texts and a
@@ -15,7 +15,7 @@ import time
 
 from vnlp_spark.plans.corpus import SENTENCE_POOL
 from vnlp_spark.plans.gold_ud_blind_data import load_split
-from vnlp_spark.plans.pipeline import _annotate_sentence_cached
+from vnlp_spark.plans.pipeline import annotate_sentence
 
 KERNEL_SHA256 = "26c9c8ecb8b73d1e384f6b52f6e08ccfb125a2a11fb297ee68bde37f060b471c"
 
@@ -68,10 +68,9 @@ def _fuzz_corpus(n: int = N_FUZZ) -> list:
 
 def kernel_digest() -> str:
     h = hashlib.sha256()
-    cache: dict = {}
     for corpus in (list(SENTENCE_POOL), _gold_texts(), _fuzz_corpus()):
         for sentence in corpus:
-            h.update(repr(_annotate_sentence_cached(cache, sentence)).encode("utf-8"))
+            h.update(repr(annotate_sentence(sentence)).encode("utf-8"))
             h.update(b"\n")
     return h.hexdigest()
 

@@ -76,6 +76,38 @@ def test_edges_broadcast_without_hint(spark, tmp_path):
         assert "SortMergeJoin" not in plan, name
 
 
+def _executed_nodes(df) -> list:
+    """Node names of ``df``'s executed physical plan, walked as a tree
+    (not its string): the final adaptive plan, and each query stage's
+    plan.  A reused exchange is a leaf; the plan it reuses is counted
+    once, where it ran."""
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+        if names[-1] == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif node.getClass().getSimpleName().endswith("QueryStageExec"):
+            todo.append(node.plan())
+    return names
+
+
+def test_lazy_edges_plan_reuses_entity_broadcast(spark, tmp_path):
+    """The lazy edges plan annotates twice, once for the entity aggregate
+    and once for the triple stream: the obj lookup reuses the subj
+    lookup's broadcast exchange instead of annotating a third time."""
+    path = str(tmp_path / "docs.parquet")
+    generate_web_pages(spark, 80).write.parquet(path)
+    edges = run_kg_pipeline(spark.read.parquet(path)).edges
+    assert len(edges.collect()) > 0
+    nodes = _executed_nodes(edges)
+    assert nodes[0] == "AdaptiveSparkPlan"
+    assert nodes.count("ArrowEvalPython") == 2, nodes
+    assert nodes.count("ReusedExchange") == 1, nodes
+
+
 def test_kg_plan_gateway_round_trips(spark, tmp_path):
     """Building the lazy KG plan is cheap on the driver: the relational
     stages cross to the JVM as SQL strings, not one py4j round trip per

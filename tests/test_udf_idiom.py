@@ -1,9 +1,10 @@
 """The operator library has one UDF idiom: Arrow UDFs (``arrow_map`` for
 per-row kernels, ``arrow_udf`` / ``mapInArrow`` for batch-numpy stages).
-No module under ``vnlp_spark/`` defines a pandas UDF, runs ``mapInPandas``
-or imports pandas — except the streaming ``stateful_entity_totals``,
-whose ``applyInPandasWithState`` has no Arrow form on the same state
-store."""
+Only ``functions/_udf.py`` (the ``arrow_map`` helper) and the batch-numpy
+``operators/similarity.py`` use ``arrow_udf`` directly.  No module under
+``vnlp_spark/`` defines a pandas UDF, runs ``mapInPandas`` or imports
+pandas — except the streaming ``stateful_entity_totals``, whose
+``applyInPandasWithState`` has no Arrow form on the same state store."""
 from __future__ import annotations
 
 import ast
@@ -11,6 +12,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent / "vnlp_spark"
 ALLOWED_PANDAS = ("streaming/stream_kg.py", "stateful_entity_totals")
+ALLOWED_ARROW_UDF = ("functions/_udf.py", "operators/similarity.py")
 
 
 def _violations(path: Path) -> list:
@@ -35,6 +37,10 @@ def _violations(path: Path) -> list:
             found.append(f"{rel}:{node.lineno} {node.attr}")
         if isinstance(node, ast.alias) and node.name == "pandas_udf":
             found.append(f"{rel} imports pandas_udf")
+        if (isinstance(node, ast.alias) and node.name == "arrow_udf"
+                or isinstance(node, ast.Attribute) and node.attr == "arrow_udf"):
+            if rel not in ALLOWED_ARROW_UDF:
+                found.append(f"{rel} uses arrow_udf outside arrow_map")
         for child in ast.iter_child_nodes(node):
             visit(child, func)
 

@@ -59,12 +59,14 @@ from .morphology import SPATIAL_ROOTS as _SPATIAL_ROOTS
 from .morphology import TITLE_ROLES as _TITLES
 from .morphology import (
     _CAP_RE,
+    _CONVERB_TAGS,
     _DEGREE_ADVS,
     _GRAMMAT_ADPS,
     _INTRANSITIVE_ROOTS,
     _LOAN_I_ACC_ADJS,
     _MATERIAL_NOUNS,
     _PL_IZAFET_HEADS,
+    _SUBORD_TAGS,
     _TEMPORAL_ADVS,
     _TEMPORAL_ROOTS,
     _TRANSITIVE_ROOTS,
@@ -100,14 +102,6 @@ _TIME_DETS = {
     "geçen", "bu", "şu", "o", "her", "önümüzdeki", "gelecek", "son",
     "ilk", "aynı",
 }
-# ADP whose complement precedes it (postpositions) keep the old handling;
-# önce/sonra after a bare time NP are ADP too
-_SUBORD_TAGS = {"Inf", "Inf2", "Inf3", "FutPart", "PastPart", "PresPart"}
-# converb (adverbial-clause) suffixes: -(y)HncA, -(y)Hp, -(y)ArAk, -ken,
-# -mAdAn.  Converbs are never finite predicates; -HncA clauses carry
-# their own subject, the rest share the matrix subject.
-_CONVERB_TAGS = {"When", "AfterDoingSo", "ByDoingSo", "While", "AsLongAs",
-                 "WithoutHavingDoneSo"}
 
 # nominal halves of gel-support constructions (GALİP geldi, denk
 # geldi): compound, never the subject/oblique of motion gel-

@@ -115,6 +115,10 @@ def build_entities(mentions_df: DataFrame) -> DataFrame:
     )
 
 
+# fold_key's ASCII map: each Turkish or circumflexed letter -> its base
+_FOLD_FROM, _FOLD_TO = "çğıöşüâîû", "cgiosuaiu"
+
+
 def fold_key(col: Column | str) -> Column:
     """ASCII-fold a canon key for BLOCKING and n-gram similarity only
     (linking identity stays on the true key): web text freely drops
@@ -122,20 +126,12 @@ def fold_key(col: Column | str) -> Column:
     breaks both the prefix block and the gram overlap.  Native
     ``translate`` — no UDF."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.translate(c, "çğıöşüâîû", "cgiosuaiu")
+    return F.translate(c, _FOLD_FROM, _FOLD_TO)
 
 
 # fold_key images of GENERIC_ORG_HEADS, for similarity-time stripping
-_GENERIC_FOLDED = (
-    "ajans", "ajansi", "bakanligi", "bakanlik", "banka", "bankasi",
-    "baskanligi", "baskanlik", "belediye", "belediyesi", "birligi",
-    "birlik", "borsa", "borsasi", "dernegi", "dernek", "federasyon",
-    "federasyonu", "fk", "grubu", "grup", "holding", "jk", "kulubu",
-    "kulup", "kurul", "kurulu", "kurum", "kurumu", "mahkeme",
-    "mahkemesi", "mudurlugu", "mudurluk", "oda", "odasi", "sigorta",
-    "sigortasi", "takim", "takimi", "universite", "universitesi",
-    "vakfi", "vakif", "yollari",
-)
+_GENERIC_FOLDED = sorted(
+    {h.translate(str.maketrans(_FOLD_FROM, _FOLD_TO)) for h in GENERIC_ORG_HEADS})
 
 
 def strip_generic_head(folded_key: Column) -> Column:

@@ -108,10 +108,14 @@ def _next_is_coord(lows, idx) -> bool:
         return True
     return nxt == "ya" and idx + 2 < n and lows[idx + 2] == "da"
 
-# converb (adverbial-clause) tags — mirror of dep_parser._CONVERB_TAGS
-# (defined locally to keep this module import-independent)
-_CONVERB_TAG_SET = {"When", "AfterDoingSo", "ByDoingSo", "While",
-                    "AsLongAs", "WithoutHavingDoneSo"}
+# converb (adverbial-clause) suffixes: -(y)HncA, -(y)Hp, -(y)ArAk, -ken,
+# -mAdAn.  Converbs are never finite predicates; -HncA clauses carry
+# their own subject, the rest share the matrix subject.
+_CONVERB_TAGS = {"When", "AfterDoingSo", "ByDoingSo", "While", "AsLongAs",
+                 "WithoutHavingDoneSo"}
+# subordinate (nominalized / participle) verb forms: a verb reading with
+# one of these is no finite predicate
+_SUBORD_TAGS = {"Inf", "Inf2", "Inf3", "FutPart", "PastPart", "PresPart"}
 # finite tense tags of a verb reading
 _FINITE_TAGS = {"Aor", "Past", "Prog1", "Fut", "Narr"}
 
@@ -872,7 +876,7 @@ class Rivals:
                 adj_whole = adj_whole or first == "Adj"
             if "Pass" in tset and "DB" in tset:
                 passive = True
-            if first.startswith("Verb") and stem and tset & _CONVERB_TAG_SET:
+            if first.startswith("Verb") and stem and tset & _CONVERB_TAGS:
                 converb = True
             # a plain accusative reading of a dictionary stem (kent+i,
             # çocuğ+u) rivals the P3sg+Nom izafet reading of the same
@@ -1720,14 +1724,14 @@ def _select_analyses(s: MorphState) -> None:
 def _light_verb_nominal(s: MorphState) -> None:
     out, lows, stems = s.analyses, s.lows, _patched_stem_dict()
     for idx in range(len(out) - 1):
-        tags_i = set(_tag_split(out[idx]))
-        if "Verb" not in tags_i or not tags_i & _FINITE_TAGS:
-            continue
         nxt = _tag_split(out[idx + 1])
         if "Verb" not in nxt or nxt[0] not in ("ver", "et", "yap", "ol",
                                                "al", "kıl", "bulun"):
             continue
         if not {"Aor", "Past", "Prog1", "Fut", "Narr", "Imp"} & set(nxt):
+            continue
+        tags_i = set(_tag_split(out[idx]))
+        if "Verb" not in tags_i or not tags_i & _FINITE_TAGS:
             continue
         low = lows[idx]
         if low != out[idx].split("+", 1)[0] and "Noun" in stems.get(low, ()):

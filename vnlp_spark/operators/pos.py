@@ -32,6 +32,7 @@ from .morphology import (
     _LOAN_I_ACC_ADJS,
     _MATERIAL_NOUNS,
     _MORPH_TO_UPOS,
+    _SUBORD_TAGS,
     _TEMPORAL_ADVS,
     _TEMPORAL_ROOTS,
     _TRANSITIVE_ROOTS,
@@ -293,10 +294,7 @@ class ParseState:
                                         for a in analyses]
         self.upos = list(morph_upos)
         self.has_finite_verb = any(
-            u == "VERB" and not (
-                tagsets[i]
-                & {"Inf", "Inf2", "Inf3", "FutPart", "PastPart", "PresPart"}
-            )
+            u == "VERB" and not tagsets[i] & _SUBORD_TAGS
             for i, u in enumerate(morph_upos)
         )
         self.last_content = next(

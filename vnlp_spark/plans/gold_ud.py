@@ -6,7 +6,7 @@ split.  Two scorers, which check each other on tuning
 (``tests/test_validity_charner_eval.py``):
 
 - ``score_split``: pure Python.  Runs the annotation kernel of every KG
-  job (``pipeline._annotate_sentence_cached``) once per gold sentence
+  job (``pipeline.annotate_sentence``) once per gold sentence
   and takes triples P/R, UPOS accuracy, UAS/LAS and, on splits that
   carry NER, NER token accuracy and macro F1 from that one result.
   ``gold_levels`` renders its level line per split, which
@@ -52,7 +52,7 @@ from ..operators.ner import py_ner_tags
 from ..operators.pos import adjust_upos
 from ..operators.triples import _PRED_RELS
 from .gold_ud_blind_data import available_splits, load_split
-from .pipeline import _annotate_sentence_cached, run_kg_pipeline
+from .pipeline import annotate_sentence, run_kg_pipeline
 
 UD_GOLD: List[dict] = load_split("tuning")
 
@@ -134,7 +134,7 @@ def _ratio(num: int, den: int) -> float:
 def score_split(entries: List[dict]) -> dict:
     """Score the annotation kernel of every KG job against one gold split.
 
-    Each sentence runs once through ``_annotate_sentence_cached`` and every
+    Each sentence runs once through ``annotate_sentence`` and every
     number comes from that one result: triples (``gold_triples_for`` over
     the gold arcs and the kernel's arcs alike, compared as (subj, pred,
     obj) sets), UPOS (``adjust_upos`` over the kernel's analyses, as
@@ -147,14 +147,13 @@ def score_split(entries: List[dict]) -> dict:
     not scored.  Every gold token counts in the UAS/LAS denominator: a
     parse the kernel refuses scores its arcs as wrong.  ``diffs`` holds
     one record per sentence with any difference from the gold."""
-    cache: dict = {}
     tp = fp = fn = tok_mismatch = 0
     pos_ok = uas_ok = las_ok = n_tok = 0
     ner_ok = ner_n = 0
     per_label = {lab: [0, 0, 0] for lab in ("PER", "LOC", "ORG")}  # tp, fp, fn
     diffs = []
     for si, entry in enumerate(entries):
-        tokens, analyses, _mentions, arcs = _annotate_sentence_cached(cache, entry["text"])
+        tokens, analyses, _mentions, arcs = annotate_sentence(entry["text"])
         if tokens != entry["tokens"]:
             tok_mismatch += 1
             diffs.append(dict(index=si, text=entry["text"], tokens=tokens))

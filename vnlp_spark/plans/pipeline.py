@@ -20,20 +20,20 @@ Column pruning keeps `html` out of every scan (only `text` is read).
 Boundary costs are kept small on both sides.  On the driver, each
 relational stage is built from SQL expression strings (``selectExpr`` /
 ``F.expr``), so a plan costs a few hundred py4j round trips instead of
-one per Column-builder node.  On the workers, the one annotation UDF
-takes and returns Arrow arrays directly: the kernel's tuples become one
+one per Column-builder node.  On the workers, the one annotation UDF is
+an ``arrow_map`` over ``py_annotate_document``: it runs once per distinct
+document of an Arrow batch, each sentence goes through the worker's
+bounded ``annotate_sentence`` cache, and the kernel's tuples become one
 ``pa.array(rows, type=...)`` call, with no pandas conversion of the
 nested ``array<struct<...>>`` output.
 """
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import lru_cache
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
-from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -42,91 +42,66 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions._udf import arrow_map
 from ..functions.sentence_splitter import py_split_sentences
 from ..functions.tokenizer import py_treebank_tokenize
-from ..operators.dep_parser import py_parse_tokens
+from ..operators.dep_parser import ARC_SCHEMA, py_parse_tokens
 from ..operators.entity_resolution import build_entities, canonical_key_sql
 from ..operators.morphology import py_analyze_tokens
-from ..operators.ner import py_ner_mentions
+from ..operators.ner import _MENTION_SCHEMA, py_ner_mentions
 from ..operators.triples import explode_triples
 from ..resources import non_breaking_prefixes
 
-_ANNOTATION_SCHEMA = StructType(
-    [
-        StructField("tokens", ArrayType(StringType())),
-        StructField("analyses", ArrayType(StringType())),
-        StructField(
-            "mentions",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("mention", StringType()),
-                        StructField("label", StringType()),
-                        StructField("first_tok", IntegerType()),
-                        StructField("last_tok", IntegerType()),
-                    ]
-                )
-            ),
-        ),
-        StructField(
-            "arcs",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("idx", IntegerType()),
-                        StructField("token", StringType()),
-                        StructField("head", IntegerType()),
-                        StructField("deprel", StringType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-
 _DOC_ANNOTATION_SCHEMA = ArrayType(
     StructType(
-        [StructField("sent_id", IntegerType()), StructField("sentence", StringType())]
-        + list(_ANNOTATION_SCHEMA.fields)
+        [
+            StructField("sent_id", IntegerType()),
+            StructField("sentence", StringType()),
+            StructField("tokens", ArrayType(StringType())),
+            StructField("analyses", ArrayType(StringType())),
+            StructField("mentions", ArrayType(_MENTION_SCHEMA.elementType)),
+            StructField("arcs", ArrayType(ARC_SCHEMA.elementType)),
+        ]
     )
 )
 
-
-_DOC_ARROW_TYPE = to_arrow_type(_DOC_ANNOTATION_SCHEMA)
-
-
-def _annotate_sentence_cached(cache: dict, sentence: str):
-    hit = cache.get(sentence)
-    if hit is None:
-        tokens = py_treebank_tokenize(sentence)
-        analyses = py_analyze_tokens(tokens)
-        mentions = [
-            (m["mention"], m["label"], m["first_tok"], m["last_tok"])
-            for m in py_ner_mentions(tokens)
-        ]
-        arcs = py_parse_tokens(tokens, analyses=analyses)
-        hit = (tokens, analyses, mentions, arcs)
-        cache[sentence] = hit
-    return hit
+# distinct sentences each python worker keeps annotated: boilerplate and
+# pooled sentences repeat across batches, while text that never repeats
+# holds at most this many results (7 MB per worker on perfbench's
+# open-vocab sentences, measured with tracemalloc)
+SENTENCE_CACHE_MAX = 4096
 
 
-@arrow_udf(_DOC_ANNOTATION_SCHEMA)
-def _annotate_document_udf(texts: pa.Array) -> pa.Array:
-    """Document-level full fusion: split + tokenize + morphology + NER +
-    parse in ONE python pass per document — a single ArrowEvalPython node
-    for the whole annotation layer (callers inline the result).  The
-    kernel's tuples go straight into one Arrow array."""
-    prefixes = non_breaking_prefixes()
-    cache: dict = {}
-    rows = [
-        None if text is None else [
-            (sid, sent) + _annotate_sentence_cached(cache, sent)
-            for sid, sent in enumerate(py_split_sentences(text, prefixes))
-        ]
-        for text in texts.to_pylist()
+@lru_cache(maxsize=SENTENCE_CACHE_MAX)
+def annotate_sentence(sentence: str) -> tuple:
+    """The annotation kernel of every KG job: tokenize + morphology + NER
+    + parse of one sentence -> ``(tokens, analyses, mentions, arcs)``.
+    The result is shared by every caller that asks for the same sentence,
+    so callers must not mutate it."""
+    tokens = py_treebank_tokenize(sentence)
+    analyses = py_analyze_tokens(tokens)
+    mentions = [
+        (m["mention"], m["label"], m["first_tok"], m["last_tok"])
+        for m in py_ner_mentions(tokens)
     ]
-    return pa.array(rows, type=_DOC_ARROW_TYPE)
+    arcs = py_parse_tokens(tokens, analyses=analyses)
+    return tokens, analyses, mentions, arcs
+
+
+def py_annotate_document(text: str) -> list:
+    """One document -> its annotated sentence rows ``(sent_id, sentence,
+    tokens, analyses, mentions, arcs)``: split, then ``annotate_sentence``
+    per sentence."""
+    return [
+        (sid, sent) + annotate_sentence(sent)
+        for sid, sent in enumerate(py_split_sentences(text, non_breaking_prefixes()))
+    ]
+
+
+# string text -> the document's annotated sentence rows, in ONE python
+# pass per distinct document of a batch (a single ArrowEvalPython node for
+# the whole annotation layer; callers inline the result)
+_annotate_document_udf = arrow_map(py_annotate_document, _DOC_ANNOTATION_SCHEMA)
 
 
 def sentences_stage(annotated: DataFrame) -> DataFrame:
