@@ -266,15 +266,10 @@ def main():
 
     ann_c = {"url": [], "warc_epoch": [], "sent_id": [], "sentence": [],
              "tokens": [], "analyses": [], "mentions": [], "arcs": []}
-    sent_cache: dict = {}
     for p in pages:
         if p["lang"] != "tr":
             continue
-        rows = sent_cache.get(p["text"])
-        if rows is None:
-            rows = annotate_text(p["text"])
-            sent_cache[p["text"]] = rows
-        for row in rows:
+        for row in annotate_text(p["text"]):
             ann_c["url"].append(p["url"])
             ann_c["warc_epoch"].append(p["warc_epoch"])
             ann_c["sent_id"].append(row["sent_id"])

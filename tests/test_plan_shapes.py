@@ -49,6 +49,24 @@ def test_triples_extraction_stays_native(spark):
     assert plan.count("ArrowEvalPython (") == 1
 
 
+def _executed_nodes(df) -> list:
+    """Node names of ``df``'s executed physical plan, walked as a tree
+    (not its string): the final adaptive plan, and each query stage's
+    plan.  A reused exchange is a leaf; the plan it reuses is counted
+    once, where it ran."""
+    names, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+        if names[-1] == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif node.getClass().getSimpleName().endswith("QueryStageExec"):
+            todo.append(node.plan())
+    return names
+
+
 def test_edges_broadcast_without_hint(spark, tmp_path):
     """edges_stage carries no broadcast hint: the planner broadcasts the
     entity table from its statistics alone.  Both the benchmarked plan
@@ -69,43 +87,18 @@ def test_edges_broadcast_without_hint(spark, tmp_path):
             df.unpersist()
     lazy = run_kg_pipeline(spark.read.parquet(path)).edges
     assert len(lazy.collect()) > 0
+    # the lazy plan annotates twice, once for the entity aggregate and once
+    # for the triple stream: the obj lookup reuses the subj lookup's
+    # broadcast exchange instead of annotating a third time
+    nodes = _executed_nodes(lazy)
+    assert nodes[0] == "AdaptiveSparkPlan"
+    assert nodes.count("ArrowEvalPython") == 2, nodes
+    assert nodes.count("ReusedExchange") == 1, nodes
 
     for name, plan in (("persisted", persisted), ("lazy", _plan(lazy))):
         assert "isFinalPlan=true" in plan, name
         assert "BroadcastHashJoin" in plan, name
         assert "SortMergeJoin" not in plan, name
-
-
-def _executed_nodes(df) -> list:
-    """Node names of ``df``'s executed physical plan, walked as a tree
-    (not its string): the final adaptive plan, and each query stage's
-    plan.  A reused exchange is a leaf; the plan it reuses is counted
-    once, where it ran."""
-    names, todo = [], [df._jdf.queryExecution().executedPlan()]
-    while todo:
-        node = todo.pop()
-        names.append(node.nodeName())
-        kids = node.children()
-        todo.extend(kids.apply(i) for i in range(kids.size()))
-        if names[-1] == "AdaptiveSparkPlan":
-            todo.append(node.executedPlan())
-        elif node.getClass().getSimpleName().endswith("QueryStageExec"):
-            todo.append(node.plan())
-    return names
-
-
-def test_lazy_edges_plan_reuses_entity_broadcast(spark, tmp_path):
-    """The lazy edges plan annotates twice, once for the entity aggregate
-    and once for the triple stream: the obj lookup reuses the subj
-    lookup's broadcast exchange instead of annotating a third time."""
-    path = str(tmp_path / "docs.parquet")
-    generate_web_pages(spark, 80).write.parquet(path)
-    edges = run_kg_pipeline(spark.read.parquet(path)).edges
-    assert len(edges.collect()) > 0
-    nodes = _executed_nodes(edges)
-    assert nodes[0] == "AdaptiveSparkPlan"
-    assert nodes.count("ArrowEvalPython") == 2, nodes
-    assert nodes.count("ReusedExchange") == 1, nodes
 
 
 def test_kg_plan_gateway_round_trips(spark, tmp_path):

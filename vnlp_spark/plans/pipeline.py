@@ -65,10 +65,12 @@ _DOC_ANNOTATION_SCHEMA = ArrayType(
     )
 )
 
-# distinct sentences each python worker keeps annotated: boilerplate and
-# pooled sentences repeat across batches, while text that never repeats
-# holds at most this many results (7 MB per worker on perfbench's
-# open-vocab sentences, measured with tracemalloc)
+# distinct sentences each python worker keeps annotated.  Repeats across
+# Arrow batches are rare: in perfbench's seed-1 and seed-2 runs the cache
+# hit 120 of about 117,000 crawl-pooled sentence rows that the per-batch
+# memo missed, and none on open-vocab.  The bound caps what text that
+# never repeats holds: about 7 MB per worker on open-vocab sentences
+# (tracemalloc), inside the 10% py_peak_rss_mb bound.
 SENTENCE_CACHE_MAX = 4096
 
 
