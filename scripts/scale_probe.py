@@ -1,5 +1,5 @@
 """One scaling measurement: run the KG job at a given core count and print
-a single JSON line.  Invoked under ``taskset -c 0-(N-1)`` by bench.py so
+a single JSON line.  Invoked under ``taskset`` to N cpus by bench.py so
 the WHOLE process tree (JVM + python workers) is confined to N cores —
 local[N] alone does not bound python-UDF workers, which would otherwise
 overlap the JVM's cores and overstate small-N throughput.

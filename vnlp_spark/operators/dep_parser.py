@@ -61,9 +61,7 @@ from .morphology import (
     _CAP_RE,
     _CONVERB_TAGS,
     _DEGREE_ADVS,
-    _GRAMMAT_ADPS,
     _INTRANSITIVE_ROOTS,
-    _LOAN_I_ACC_ADJS,
     _MATERIAL_NOUNS,
     _PL_IZAFET_HEADS,
     _SUBORD_TAGS,
@@ -197,61 +195,8 @@ def _segment_runs(s) -> List[List[int]]:
 
 def _intrans(s, x: int) -> bool:
     tagsets, roots = s.tagsets, s.roots
-    # curated unaccusative inventory + the -lAş 'Become' derivation,
-    # which is uniformly intransitive (yaygınlaştı, sertleşti,
-    # güzelleşti) — unless re-causativized (-lAştIr)
-    return ((roots[x] in _INTRANSITIVE_ROOTS
-             or "Become" in tagsets[x])
-            and "Caus" not in tagsets[x])
-
-# --- lexicalized -mA nominalizations in argument slots ---------------
-# An Inf2 verbal noun carrying an argument case with no left argument
-# of its own is a plain nominal (Konuşmayı ... dinleyeceğim -> obj);
-# with an immediately-preceding case-marked dependent it stays a
-# clausal complement (kitabı okumayı sevmek -> ccomp)
-def _lexicalized_inf2(s):
-    tokens, n, lows, tagsets, base_case = s.tokens, s.n, s.lows, s.tagsets, s.base_case
-    upos = s.upos
-    for i in range(n):
-        if (
-            upos[i] == "VERB"
-            and "Inf2" in tagsets[i]
-            and base_case[i] in ("Acc", "Dat", "Loc", "Abl")
-        ):
-            # the emphatic particle is transparent for the argument frame
-            # (hizmetleri DE sunmaya başladı)
-            pi = i - 1
-            while pi > 0 and lows[pi] in ("de", "da"):
-                pi -= 1
-            prev_arg = (
-                pi >= 0
-                and upos[pi] in _NOMINAL
-                and (
-                    base_case[pi] in ("Acc", "Dat", "Loc", "Abl", "Ins", "Gen")
-                    # an Acc / P3sg+Nom homograph to the left counts: its
-                    # surface case is resolved only AFTER this gate, and
-                    # the Inf2 clause is exactly what licenses its Acc
-                    # reading (parktaki ağaçları BUDAMAYA başladı)
-                    or "acc" in _readings(tokens[pi])
-                    # an INCORPORATED bare-Nom object counts too, when a
-                    # subject candidate stands further left (Firma ... ek
-                    # PRİM ödemeyi planlıyor — "prim" has no other
-                    # licenser); clause-initial bare nominals are the
-                    # matrix subject instead (Konuşmayı dinleyeceğim)
-                    or (
-                        base_case[pi] in ("Nom", "")
-                        and "Pnon" in tagsets[pi]
-                        and upos[pi] == "NOUN"
-                        and any(
-                            upos[j] in _NOMINAL
-                            and base_case[j] in ("Nom", "")
-                            for j in range(0, pi)
-                        )
-                    )
-                )
-            )
-            if not prev_arg:
-                upos[i] = "NOUN"
+    # curated unaccusative inventory, unless re-causativized
+    return roots[x] in _INTRANSITIVE_ROOTS and "Caus" not in tagsets[x]
 
 # --- predicates and root -------------------------------------------
 def _clause_predicates(s):
@@ -289,9 +234,6 @@ def _clause_predicates(s):
         if upos[i] == "VERB" and not subord[i] and not converb[i]
         and not cond[i]
     ]
-    if not finite and any(cond):
-        finite = [i for i in range(n) if cond[i]]
-        cond = [False] * n
     copular = not finite
     cop_conj = None
     narr_acl0 = False
@@ -305,7 +247,7 @@ def _clause_predicates(s):
 def _choose_root(s):
     n, lows, tagsets, roots, base_case = s.n, s.lows, s.tagsets, s.roots, s.base_case
     base_poss, upos, converb, cond = s.base_poss, s.upos, s.converb, s.cond
-    redup_converb, finite, narr_acl0 = s.redup_converb, s.finite, s.narr_acl0
+    finite, narr_acl0 = s.finite, s.narr_acl0
     narr_acl_mid, cop_aux, cop_conj = s.narr_acl_mid, s.cop_aux, s.cop_conj
     non_punct = [i for i in range(n) if upos[i] != "PUNCT"]
     if finite:
@@ -356,18 +298,10 @@ def _choose_root(s):
                 and tagsets[q] & {"Narr", "Fut"} and "A3sg" in tagsets[q]
                 and not tagsets[q] & {"Past", "Cond", "Neg"}
                 and q + 1 < n
-                and ((upos[q + 1] in ("NOUN", "PROPN")
-                      and base_case[q + 1] in ("Nom", "", "Acc"))
-                     # the participle can stack before an adjective-
-                     # modified head (erimiş MADENİ kalıba — the loan-î
-                     # adjective re-reads as the object downstream)
-                     or (upos[q + 1] == "ADJ" and q + 2 < n
-                         and upos[q + 2] in ("NOUN", "PROPN")))
+                and upos[q + 1] in ("NOUN", "PROPN")
+                and base_case[q + 1] in ("Nom", "", "Acc")
             ):
                 preds.remove(q)
-                if q in finite:
-                    # an adnominal participle is no clause boundary
-                    finite.remove(q)
                 narr_acl_mid.append(q)
                 if root == q:
                     root = preds[0]
@@ -389,21 +323,6 @@ def _choose_root(s):
         # conditional protasis clauses likewise host their own subject
         # (Yağmur yağarsa -> Yağmur is yağarsa's nsubj)
         when_preds += [i for i in range(n) if cond[i]]
-        # the aspectual reduplication converb hosts its own subject ONLY
-        # when another bare-Nom subject candidate follows the pair for
-        # the matrix (Müzakereler biter bitmez ANLAŞMA imzalandı);
-        # otherwise the subject is shared and stays with the matrix
-        # (MÜDÜR ofise gelir gelmez toplantıyı başlattı)
-        if redup_converb is not None:
-            rc0, rc1 = redup_converb
-            nf = next((f for f in finite if f > rc1), None)
-            if nf is not None and any(
-                upos[j] in ("NOUN", "PROPN", "PRON")
-                and base_case[j] in ("Nom", "")
-                and not base_poss[j]
-                for j in range(rc1 + 1, nf)
-            ):
-                when_preds.append(rc0)
         if when_preds:
             preds = sorted(set(preds) | set(when_preds))
     else:
@@ -525,10 +444,7 @@ def _correlatives(s):
                 )
             else:
                 c = next(
-                    (j for j in range(k + 1, n)
-                     if upos[j] in _NOMINAL or upos[j] == "VERB"
-                     or (upos[j] == "ADJ"
-                         and not (j + 1 < n and upos[j + 1] in _NOMINAL))),
+                    (j for j in range(k + 1, n) if upos[j] in _NOMINAL),
                     None,
                 )
                 # the particle fronts a whole NP: a bare-Nom modifier
@@ -550,8 +466,6 @@ def _correlatives(s):
         if heads[_idxs[0]] == -1:
             heads[_idxs[0]], rels[_idxs[0]] = c1 + 1, "cc"
         for k, c in zip(_idxs[1:], _conjs[1:]):
-            if heads[k] == -1:
-                heads[k], rels[k] = c + 1, "cc"
             if c != c1 and heads[c] == -1 and upos[c] != "VERB":
                 heads[c], rels[c] = c1 + 1, "conj"
     s.corr_first, s.corr_cc_idx = corr_first, corr_cc_idx
@@ -651,8 +565,6 @@ def _next_verbish(s, i: int) -> Optional[int]:
                     and eff_case[i] in ("Nom", "", "Acc")):
                 continue
             return j
-        if upos[j] == "ADJ" and tagsets[j] & {"PresPart"}:
-            return j
     return None
 
 def _next_nominal(s, i: int, stop: Optional[int] = None) -> Optional[int]:
@@ -700,61 +612,6 @@ def _reread_chain_link(s):
             upos[i] = "NOUN"
             eff_case[i], eff_poss[i] = "Nom", True
 
-# a loan-î whole-word adjective standing before a case-marked
-# OBLIQUE nominal, with a transitive finite verb left otherwise
-# objectless, hides the accusative object (erimiş MADENİ kalıba
-# döktü = maden+Acc poured into the mold, never 'metallic mold'):
-# the adjective reading would strand the verb without an object
-# while an overt subject stands left
-def _reread_loan_i_object(s):
-    analyses, n, lows, tagsets, roots = s.analyses, s.n, s.lows, s.tagsets, s.roots
-    upos, eff_case, eff_poss, subord = s.upos, s.eff_case, s.eff_poss, s.subord
-    converb, preds = s.converb, s.preds
-    for i in range(1, n - 1):
-        if (
-            upos[i] == "ADJ"
-            and analyses[i].count("+") == 1
-            and analyses[i].endswith("+Adj")
-            and lows[i] in _LOAN_I_ACC_ADJS
-            and upos[i + 1] in _NOMINAL
-            and eff_case[i + 1] in ("Dat", "Loc", "Abl", "Ins")
-            and not (i + 2 < n and upos[i + 2] == "ADP")
-        ):
-            v = next((j for j in range(i + 1, n)
-                      if upos[j] == "VERB" and not subord[j]
-                      and not converb[j]), None)
-            if (
-                v is not None
-                and roots[v] in _TRANSITIVE_ROOTS
-                # bare-object ACTIVITY verbs need no object (resmi
-                # TATİLDE çalıştı keeps the attributive reading)
-                and roots[v] not in ("oyna", "çalış", "yüz")
-                and "Pass" not in tagsets[v]
-                and not any(
-                    eff_case[j] == "Acc"
-                    # same clause: no other predicate between j and v
-                    and not any(p != v and min(j, v) < p < max(j, v)
-                                for p in preds)
-                    for j in range(n) if j != i
-                )
-                # ... and no BARE-Nom object candidate either (Dernek
-                # dini bayramlarda YARDIM dağıttı — yardım is the verb's
-                # bare object, dini stays attributive)
-                and not any(
-                    upos[j] in _NOMINAL
-                    and eff_case[j] in ("Nom", "")
-                    and not eff_poss[j]
-                    for j in range(i + 1, v)
-                )
-                and any(upos[j] in ("PROPN", "PRON")
-                        or (upos[j] in _NOMINAL
-                            and eff_case[j] in ("Nom", "")
-                            and not eff_poss[j])
-                        for j in range(i))
-            ):
-                upos[i] = "NOUN"
-                eff_case[i], eff_poss[i] = "Acc", False
-
 # whole-word-Adj / possessed-locative homographs directly before the
 # verb with an object to their left are the locative adverbial
 # (olayları YERİNDE inceledi = yer+P3sg+Loc, not yerinde 'apt')
@@ -798,81 +655,11 @@ def _reread_same_case_compound(s):
         ):
             eff_case[i] = "Nom"
 
-# loan -î adjectives are systematically homographic with Acc/P3sg
-# segmentations (resmi = resmî 'official' / resim+Acc, mali = malî /
-# mal+Acc, tarihi, askeri): a chosen Acc/P3sg SEGMENTATION with a
-# whole-word bare-Adj reading, standing directly before a case-marked
-# nominal it would modify, is the attributive adjective when the
-# clause's object slot is already claimed by another Acc-capable
-# nominal to its left (yeni yönetmeliği RESMİ gazetede yayımladı)
-def _reread_loan_i_attributive(s):
-    tokens, n, lows, tagsets, roots = s.tokens, s.n, s.lows, s.tagsets, s.roots
-    upos, eff_case, eff_poss = s.upos, s.eff_case, s.eff_poss
-    for i in range(1, n - 1):
-        if (
-            upos[i] in ("NOUN",)
-            and roots[i] != lows[i]
-            and ("Acc" in tagsets[i]
-                 or ("Nom" in tagsets[i]
-                     and tagsets[i] & {"P3sg", "P3pl"}))
-            and "bare_adj" in _readings(tokens[i])
-            and upos[i + 1] in ("NOUN", "PROPN")
-            and eff_case[i + 1] in ("Dat", "Loc", "Abl", "Ins", "Gen")
-            and any(
-                upos[j] in _NOMINAL
-                and ("acc" in _readings(tokens[j])
-                     or eff_case[j] == "Acc")
-                for j in range(0, i)
-            )
-        ):
-            upos[i] = "ADJ"
-            eff_case[i], eff_poss[i] = "", False
-
-# the same loan -î homograph class directly before the determiner
-# "bir" + a NON-temporal nominal is attributive outright: a possessed
-# izafet head is never followed by its own indefinite determiner
-# (Bu anlaşma TARİHİ bir adımdır = tarihî 'historic'; "toplantı
-# tarihi bir gün önce ..." keeps the date reading — gün is temporal,
-# that "bir" is the numeral of the time adjunct)
-def _reread_loan_i_before_bir(s):
-    tokens, n, lows, tagsets, roots = s.tokens, s.n, s.lows, s.tagsets, s.roots
-    upos, eff_case, eff_poss = s.upos, s.eff_case, s.eff_poss
-    for i in range(1, n - 2):
-        if (
-            upos[i] == "NOUN"
-            and roots[i] != lows[i]
-            and ("Acc" in tagsets[i]
-                 or ("Nom" in tagsets[i]
-                     and tagsets[i] & {"P3sg", "P3pl"}))
-            and "bare_adj" in _readings(tokens[i])
-            and lows[i + 1] == "bir"
-            and upos[i + 2] in ("NOUN", "PROPN")
-            and roots[i + 2] not in _TEMPORAL_ROOTS
-            and upos[i - 1] in _NOMINAL
-        ):
-            upos[i] = "ADJ"
-            eff_case[i], eff_poss[i] = "", False
-
-def _spatial_frame_mod(s, j: int) -> bool:
-    n, roots, upos, eff_case = s.n, s.roots, s.upos, s.eff_case
-    # bare nominal feeding a possessed spatial-relational oblique
-    # (gözetim ALTINDA tutuyordu, kontrol ALTINA alındı): part of the
-    # oblique frame, transparent for object adjacency
-    return (
-        upos[j] in _NOMINAL
-        and eff_case[j] in ("Nom", "")
-        and j + 1 < n
-        and roots[j + 1] in _SPATIAL_ROOTS
-        and eff_case[j + 1] in ("Dat", "Loc", "Abl")
-    )
-
 def _izafet_oblique_mod(s, j: int) -> bool:
     n, upos, eff_case, eff_poss = s.n, s.upos, s.eff_case, s.eff_poss
     # bare nominal feeding a POSSESSED oblique-case izafet head
     # (rehber EŞLİĞİNDE gezdi, mahalle SAKİNLERİNE açtı): the pair
-    # is one oblique phrase — same frame as _spatial_frame_mod but
-    # for ordinary relational heads — transparent for object
-    # adjacency.  An unpossessed next nominal keeps its neighbor a
+    # is one oblique phrase, transparent for object adjacency.  An unpossessed next nominal keeps its neighbor a
     # subject candidate (Kitabı ÖĞRETMEN öğrencilere dağıttı).
     return (
         upos[j] in _NOMINAL
@@ -918,31 +705,12 @@ def _gen_oblique_mod(s, j: int, v: int) -> bool:
     )
 
 def _adjacent_to_verb(s, i: int, v: int) -> bool:
-    n, lows, tagsets, roots, upos = s.n, s.lows, s.tagsets, s.roots, s.upos
-    eff_case, eff_poss = s.eff_case, s.eff_poss
+    n, lows, roots, upos, eff_case = s.n, s.lows, s.roots, s.upos, s.eff_case
     for j in range(i + 1, v):
         if upos[j] in _TRANSPARENT:
             continue
-        if lows[j] in ("de", "da") and upos[j] == "CCONJ":
-            continue  # the emphatic particle is transparent for the
-            # object frame (hizmetleri DE sunmaya başladı)
         if upos[j] in _NOMINAL and eff_case[j] in ("Dat", "Loc", "Abl", "Ins"):
             continue  # obliques may intervene before the object
-        if (
-            upos[j] == "ADJ" and j + 1 < v
-            and upos[j + 1] in _NOMINAL
-            and eff_case[j + 1] in ("Dat", "Loc", "Abl", "Ins")
-        ):
-            continue  # adjective inside an intervening oblique
-            # phrase (soruları SAKİN BİÇİMDE yanıtladı)
-        if (
-            "Ness" in tagsets[j] and j + 1 < v
-            and upos[j + 1] in _NOMINAL
-            and not eff_poss[j + 1]
-            and eff_case[j + 1] == "Loc"
-        ):
-            continue  # attributive -lIk terrain nominal inside a
-            # locative phrase (çocuğu ORMANLIK alanda buldu)
         if _izafet_oblique_mod(s, j):
             continue
         if _material_mod(s, j):
@@ -960,8 +728,6 @@ def _adjacent_to_verb(s, i: int, v: int) -> bool:
             # adjunct phrase (yazışmaları GÜVENLİK İÇİN şifreledi)
         if upos[j] == "NOUN" and roots[j] in _TEMPORAL_ROOTS:
             continue  # bare time expressions are obliques too
-        if _spatial_frame_mod(s, j):
-            continue
         if (upos[j] == "NOUN" and j + 1 == v
                 and roots[v] in ("ol", "et", "yap")):
             continue  # light-verb nominal (davet etti, kutlama yaptı)
@@ -978,11 +744,6 @@ def _juxtaposition_modifiers(s):
         if (lows[j] == "sağanak"
                 and lows[j + 1].startswith(("yağış",
                                                         "yağmur"))):
-            juxt_mod[j] = True
-        # lexicalized institution juxtaposition (SAHİL güvenlik
-        # botları = the Coast Guard's boats): same closed class
-        if (lows[j] == "sahil"
-                and lows[j + 1].startswith("güvenlik")):
             juxt_mod[j] = True
     s.juxt_mod = juxt_mod
 
@@ -1007,13 +768,6 @@ def _acc_nom_gate(s, i: int) -> Optional[int]:
     )
     r = _readings(tokens[i])
     if not chosen_ambiguous or "acc" not in r or "p3nom" not in r:
-        return None
-    if "Pron" in tagsets[i]:
-        # a chosen closed-class pronoun ANALYSIS (ONU seçti =
-        # o+Pron+Acc) is never re-resolved into the possessed-noun
-        # homograph of a numeral (on+P3sg 'its ten'); quantifier
-        # pronouns whose chosen reading is nominal (herkesi =
-        # herkes+Noun) still resolve normally
         return None
     v = _next_verbish(s, i)
     if v is None:
@@ -1064,39 +818,8 @@ def _acc_nom_gate(s, i: int) -> Optional[int]:
     ):
         # a bare time noun to the left always modifies (hafta sonu,
         # akşam yemeği) -> compound-head reading; a det-marked time
-        # noun is a clause adjunct instead (bu yaz çiftçileri zorladı).
-        # The compound-head CASE still follows the clause: a
-        # possessed-Nom object must sit next to its verb, so when a
-        # case-marked argument separates the head from a TRANSITIVE
-        # verb with no other object, the overt -(s)InI possessed-Acc
-        # reading is the only grammatical one (Gazete pazar EKİNİ
-        # okurlara veriyor -> ek+P3sg+Acc, obj)
-        if (
-            roots[v] in _TRANSITIVE_ROOTS
-            and "Pass" not in tagsets[v]
-            # ... the compound must not itself be a TIME expression
-            # (hafta SONU deniz kenarında yürüyüş yaptık stays the
-            # clause-level time adjunct)
-            and roots[i] not in _TEMPORAL_ROOTS
-            and roots[i] not in ("son", "baş", "orta")
-            and not any("Acc" in tagsets[k] for k in range(n)
-                        if k != i)
-            # ... and no bare-Nom object candidate may stand closer
-            # to the verb (the light-verb nominal yürüyüş in the
-            # same sentence fills the object slot itself)
-            and not any(
-                upos[j] in _NOMINAL
-                and eff_case[j] in ("Nom", "")
-                and not eff_poss[j]
-                and roots[j] not in _TEMPORAL_ROOTS
-                for j in range(i + 1, v))
-            and any(upos[j] in _NOMINAL
-                    and eff_case[j] in ("Dat", "Loc", "Abl", "Ins")
-                    for j in range(i + 1, v))
-        ):
-            eff_case[i], eff_poss[i] = "Acc", True
-        else:
-            eff_case[i], eff_poss[i] = "Nom", True
+        # noun is a clause adjunct instead (bu yaz çiftçileri zorladı)
+        eff_case[i], eff_poss[i] = "Nom", True
         return None
     if tagsets[v] & {"A1sg", "A2sg", "A1pl", "A2pl"}:
         # pro-dropped 1st/2nd-person subject: the nominal is the object
@@ -1163,10 +886,8 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
         # izafet head, so the ambiguous plural resolves to the
         # object (deri BOTLARI rafa çıkardı)
         and roots[i - 1] not in _MATERIAL_NOUNS
-        # a plural modifier licenses izafet only for the closed
-        # institutional-head class (Bakanlar KURULU görüştü)
-        and ("A3pl" not in tagsets[i - 1]
-             or roots[i] in _PL_IZAFET_HEADS)
+        # a plural modifier does not license izafet
+        and "A3pl" not in tagsets[i - 1]
         and not (roots[i - 1] in _TEMPORAL_ROOTS
                  and i > 1 and upos[i - 2] == "DET")
         # the name of a title run is not a compound modifier
@@ -1198,11 +919,6 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
     transitive_v = (
         roots[v] in _TRANSITIVE_ROOTS
         or obligate_v
-        # an Inf2 verbal-noun clause licenses its own object: the
-        # X+Acc V+mAyA başla frame takes the object reading even
-        # when the embedded verb is not in the curated transitive
-        # list (Ekip DUVARLARI boyamaya başladı)
-        or (upos[v] == "VERB" and bool(tagsets[v] & {"Inf2"}))
     )
     strict_adj = _strict_adjacency(s, i, v)
     # subject candidates only count within the SAME clause: a nominal
@@ -1211,10 +927,9 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
     # KARARI onayladı -> kararı is the second clause's object)
     cl_start = max((f + 1 for f in finite if f < i), default=0)
     subject_elsewhere = any(
-        (upos[j] in ("PROPN", "PRON")
-         or (upos[j] in _NOMINAL and eff_case[j] in ("Nom", "")
-             and not eff_poss[j]
-             and roots[j] not in _TEMPORAL_ROOTS))
+        upos[j] in _NOMINAL and eff_case[j] in ("Nom", "")
+        and not eff_poss[j]
+        and roots[j] not in _TEMPORAL_ROOTS
         # the complement of a following postposition is inside an
         # adjunct phrase, never a subject candidate (çocuklar İÇİN
         # oyun alanı kurdu)
@@ -1241,7 +956,6 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
         eff_case[i], eff_poss[i] = "Acc", False
     elif prev_bare_mod and (
         not transitive_v
-        or obj_later
         or (not strict_adj and not obligate_v)
         or (subject_elsewhere and not obligate_v)
         # inside an infinitive clause under a copular matrix
@@ -1284,36 +998,14 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
         if later_subject:
             eff_case[i], eff_poss[i] = "Acc", False
         elif (
-            obligate_v and not obj_later and prev_bare_mod
-            # ... and no bare-Nom object candidate stands between
-            # either (ADP complements and the light-verb nominal
-            # itself do not count): Hastane yönetimi EK PERSONEL
-            # talep etti keeps its compound subject
-            and not any(
-                upos[j] in _NOMINAL
-                and eff_case[j] in ("Nom", "")
-                and not eff_poss[j]
-                and j != v - 1
-                and not (j + 1 < n and upos[j + 1] == "ADP")
-                for j in range(i + 1, v)
-            )
-        ):
-            # an obligately transitive predicate with no other object
-            # in the clause: the compound-subject reading would leave
-            # it objectless, so the fronted-object reading wins even
-            # across an adjunct phrase (Takım ANTRENMANI yağmur
-            # nedeniyle iptal etti)
-            eff_case[i], eff_poss[i] = "Acc", False
-        elif (
             transitive_v
             and not prev_bare_mod
             and not obj_later
             and any(
-                upos[j] in ("PROPN", "PRON")
-                or (upos[j] in _NOMINAL
-                    and eff_case[j] in ("Nom", "")
-                    and not eff_poss[j]
-                    and roots[j] not in _TEMPORAL_ROOTS)
+                upos[j] in _NOMINAL
+                and eff_case[j] in ("Nom", "")
+                and not eff_poss[j]
+                and roots[j] not in _TEMPORAL_ROOTS
                 for j in range(cl_start, i)
             )
         ):
@@ -1327,8 +1019,7 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
             eff_case[i], eff_poss[i] = "Nom", True
 
 def _strict_adjacency(s, i: int, v: int) -> bool:
-    n, lows, tagsets, roots, upos = s.n, s.lows, s.tagsets, s.roots, s.upos
-    eff_case, eff_poss = s.eff_case, s.eff_poss
+    n, lows, roots, upos, eff_case = s.n, s.lows, s.roots, s.upos, s.eff_case
     # plain case-marked obliques may stand between object and verb
     # (raporu meclise sundu -> obj); an ADP-governed adjunct phrase
     # signals the clause-level frame of a compound subject instead
@@ -1359,18 +1050,6 @@ def _strict_adjacency(s, i: int, v: int) -> bool:
                 and upos[j + 1] == "ADP"
                 and lows[j + 1] not in ("rağmen",
                                                     "karşın"))
-            or _spatial_frame_mod(s, j)
-            # adjective inside an intervening oblique phrase
-            # (soruları SAKİN biçimde yanıtladı)
-            or (upos[j] == "ADJ" and j + 1 < v
-                and upos[j + 1] in _NOMINAL
-                and eff_case[j + 1] in ("Dat", "Loc", "Abl", "Ins"))
-            # attributive -lIk terrain nominal inside a locative
-            # phrase (ORMANLIK alanda)
-            or ("Ness" in tagsets[j] and j + 1 < v
-                and upos[j + 1] in _NOMINAL
-                and not eff_poss[j + 1]
-                and eff_case[j + 1] == "Loc")
             # bare modifier of a possessed oblique izafet head
             # (rehber EŞLİĞİNDE)
             or _izafet_oblique_mod(s, j)
@@ -1575,11 +1254,6 @@ def _verb_attachment(s):
             elif tags & {"FutPart", "PastPart"}:
                 nom = _next_nominal(s, i)
                 heads[i], rels[i] = (nom + 1 if nom is not None else p + 1), "acl"
-            elif (i + 1 < n
-                  and lows[i + 1] in ("rağmen", "karşın")):
-                # -mAsInA rağmen is the concessive ADVERBIAL clause
-                # (zarar ETMESİNE rağmen sürdürdü), never a complement
-                heads[i], rels[i] = p + 1, "advcl"
             else:
                 heads[i], rels[i] = p + 1, "ccomp"
         else:
@@ -1648,12 +1322,7 @@ def _compound_walk(s, nom, i: int):
         # for the fossil -ArAsI adjectives, which scope over the
         # whole compound (şehirlerarası otobüs BİLETLERİNE)
         and (base_case[nom + 1] in ("Nom", "Acc")
-             or (lows[i].endswith("arası")
-                 and not (roots[nom + 1] in _SPATIAL_ROOTS
-                          or roots[nom + 1] in _TEMPORAL_ROOTS
-                          or roots[nom + 1] in ("son", "taraf",
-                                                   "yarar", "leh",
-                                                   "aleyh"))))
+             or lows[i].endswith("arası"))
         and (eff_poss[nom + 1]
              or (bool(tagsets[nom + 1] & {"P3sg", "P3pl"})
                  # a time noun heads its own adjunct (bu YAZ
@@ -1670,25 +1339,12 @@ def _compound_walk(s, nom, i: int):
         and (base_case[nom + 1] != "Acc"
              or any(upos[j] in ("NOUN", "PROPN", "PRON")
                     for j in range(i)))
-        and not (nom + 2 < n
-                 and (
-                     # an ADP blocks the walk only onto a RELATIONAL
-                     # target (hafta SONUNA kadar, oda İÇİNE doğru):
-                     # an ordinary possessed head before a
-                     # grammaticalized ADP still takes the adnominal
-                     # (kötü hava KOŞULLARI yüzünden)
-                     (upos[nom + 2] == "ADP"
-                      and (roots[nom + 1] in _SPATIAL_ROOTS
-                           or roots[nom + 1] in _TEMPORAL_ROOTS
-                           or roots[nom + 1] == "son"))
-                     or (lows[nom + 2] in _DEGREE_ADVS
-                         and base_case[nom + 1] == "Abl")))
     ):
         nom += 1
     return nom
 
 def _function_words(s):
-    n, lows, tagsets, roots, upos = s.n, s.lows, s.tagsets, s.roots, s.upos
+    n, lows, tagsets, upos = s.n, s.lows, s.tagsets, s.upos
     eff_poss, heads, rels, subord = s.eff_poss, s.heads, s.rels, s.subord
     converb, root, preds = s.converb, s.root, s.preds
     for i in range(n):
@@ -1729,7 +1385,7 @@ def _function_words(s):
                 heads[i], rels[i] = conj_v + 1, "cc"
             else:
                 for j in range(i + 1, n):
-                    if heads[j] == -1 or upos[j] in _NOMINAL or upos[j] in ("VERB", "ADJ"):
+                    if upos[j] in _NOMINAL or upos[j] in ("VERB", "ADJ"):
                         heads[i], rels[i] = j + 1, "cc"
                         break
                 else:
@@ -1763,13 +1419,6 @@ def _function_words(s):
                 # percentage frame: the measure noun heads its numeral
                 # (yüzde ON arttı -> on nummod yüzde)
                 heads[i], rels[i] = i, "nummod"
-            elif (
-                i + 1 < n
-                and upos[i + 1] == "VERB"
-                and roots[i + 1] in ("ol", "gel")
-            ):
-                # light-verb frame: birinci oldu -> compound
-                heads[i], rels[i] = i + 2, "compound"
             elif (
                 i + 1 < n
                 and upos[i + 1] == "ADJ"
@@ -1822,18 +1471,6 @@ def _adverb_head(s, i: int) -> None:
         if tgt is None:
             tgt = _next_pred(s, i)
         heads[i], rels[i] = tgt + 1, "advmod"
-    elif (
-        i + 1 < n
-        and upos[i + 1] == "VERB"
-        and (subord[i + 1] or converb[i + 1])
-        # a finite predicate BEFORE the adverb claims it for the
-        # matrix clause (GELDİ sonunda beklenen haber -> sonunda
-        # modifies geldi, not the adnominal participle)
-        and not any(f < i for f in finite)
-    ):
-        # adverb scoped inside a participial/converb clause stays
-        # there (YENİ açılan restoran -> yeni modifies açılan)
-        heads[i], rels[i] = i + 2, "advmod"
     elif (
         (nv := next((j for j in range(i + 1, n)
                      if upos[j] == "VERB"), None)) is not None
@@ -1932,12 +1569,9 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
     rels, cop_conj, preds, corr_first = s.rels, s.cop_conj, s.preds, s.corr_first
     corr_cc_idx = s.corr_cc_idx
     if (
-        (lows[i] == "sağanak"
-         and i + 1 < n
-         and lows[i + 1].startswith(("yağış", "yağmur")))
-        or (lows[i] == "sahil"
-            and i + 1 < n
-            and lows[i + 1].startswith("güvenlik"))
+        lows[i] == "sağanak"
+        and i + 1 < n
+        and lows[i + 1].startswith(("yağış", "yağmur"))
     ):
         # lexicalized bare weather juxtaposition: sağanak modifies
         # its precipitation head without possession (SAĞANAK yağış
@@ -1993,10 +1627,9 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
         # a clause-initial material noun is its own argument (Bu
         # İPEK diğerinden daha parlak)
         and any(
-            upos[j] in ("PROPN", "PRON")
-            or (upos[j] in _NOMINAL
-                and eff_case[j] in ("Nom", "")
-                and roots[j] not in _TEMPORAL_ROOTS)
+            upos[j] in _NOMINAL
+            and eff_case[j] in ("Nom", "")
+            and roots[j] not in _TEMPORAL_ROOTS
             for j in range(i)
         )
     ):
@@ -2214,7 +1847,7 @@ def _genitive_argument(s, i: int, p: int, vt: int) -> None:
             ), "nmod"
 
 def _oblique_argument(s, i: int, p: int, vt: int, case: str) -> None:
-    tokens, n, tagsets, upos, eff_case = s.tokens, s.n, s.tagsets, s.upos, s.eff_case
+    tokens, n, upos, eff_case = s.tokens, s.n, s.upos, s.eff_case
     heads, rels, subord = s.heads, s.rels, s.subord
     if (
         i + 1 < n
@@ -2246,8 +1879,7 @@ def _oblique_argument(s, i: int, p: int, vt: int, case: str) -> None:
         # KOLAYLIK sağladı); the action-noun frame needs a
         # continuing nominal (depreme hazırlık ÇAĞRISI)
         and i + 2 != vt
-        and ("Ness" in tagsets[i + 1]
-             or "ness" in _readings(tokens[i + 1]))
+        and "ness" in _readings(tokens[i + 1])
     ):
         # dative complement of a deverbal action noun (depreme
         # hazırlık çağrısı) attaches to that noun
@@ -2272,9 +1904,8 @@ def _oblique_argument(s, i: int, p: int, vt: int, case: str) -> None:
 def _bare_nominal(s, i: int, p: int, v: Optional[int], vt: int) -> None:
     n, lows, tagsets, roots, upos = s.n, s.lows, s.tagsets, s.roots, s.upos
     eff_case, eff_poss, heads, rels = s.eff_case, s.eff_poss, s.heads, s.rels
-    subord, converb, cond, preds = s.subord, s.converb, s.cond, s.preds
-    run_head = s.run_head
-    preverbal = i + 1 == vt or (i + 1 < n and run_head.get(i + 1) == vt)
+    subord, converb, preds = s.subord, s.converb, s.preds
+    preverbal = i + 1 == vt
     # a coordinated NP is preverbal as a WHOLE: the first
     # conjunct inherits preverbality from its last conj child
     # (ne ZAM ne ek ödeme önerdi -> zam is the object)
@@ -2376,9 +2007,7 @@ def _bare_nominal(s, i: int, p: int, v: Optional[int], vt: int) -> None:
         and eff_poss[i + 2]
         and eff_case[i + 2] in ("Nom", "")
         and "A3pl" not in tagsets[i]
-        and not (i + 3 < n
-                 and (upos[i + 3] == "ADP"
-                      or lows[i + 3] in _GRAMMAT_ADPS))
+        and not (i + 3 < n and upos[i + 3] == "ADP")
         and not (i + 3 < n and upos[i + 3] == "VERB"
                  and subord[i + 3])
         and not (i + 3 < n and upos[i + 3] == "NOUN"
@@ -2388,15 +2017,13 @@ def _bare_nominal(s, i: int, p: int, v: Optional[int], vt: int) -> None:
         # (yönetmen basın TOPLANTISI düzenledi): fire only when
         # the predicate needs no object or has one elsewhere
         and ("Pass" in tagsets[p]
-             or _intrans(s, p)
              or any(eff_case[k] == "Acc"
                     for k in range(i + 3, p)))
         # ... and never INTO an own-subject converb clause with
         # a later matrix: the chain pair is the converb's
         # subject and the first bare exits to the matrix
         # (Organizatör bilet SATIŞLARI durunca ... güncelledi)
-        and not ((converb[p] or cond[p])
-                 and any(pp > p for pp in preds))
+        and not (converb[p] and any(pp > p for pp in preds))
     ):
         heads[i], rels[i] = i + 2, "nmod"
         return
@@ -2481,11 +2108,10 @@ def _compoundable(s, i: int, p: int) -> bool:
              # (şirket MÜDÜRÜ çalışanlarını topladı)
              or (eff_poss[i + 1] and eff_case[i + 1] == "Acc"
                  and any(
-                     upos[j] in ("PROPN", "PRON")
-                     or (upos[j] in _NOMINAL
-                         and eff_case[j] in ("Nom", "")
-                         and not eff_poss[j]
-                         and roots[j] not in _TEMPORAL_ROOTS)
+                     upos[j] in _NOMINAL
+                     and eff_case[j] in ("Nom", "")
+                     and not eff_poss[j]
+                     and roots[j] not in _TEMPORAL_ROOTS
                      for j in range(0, i - 1)
                  ))
              # a possessed chain head continues into the
@@ -2547,13 +2173,8 @@ def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
                 and "Pass" not in tagsets[p]
                 and not _verb_person_12(s, p)
                 and p not in subj_of
-                and not any(
-                    (upos[j] in ("PROPN", "PRON")
-                     or (upos[j] in _NOMINAL
-                         and eff_case[j] in ("Nom", "")
-                         and not eff_poss[j]
-                         and roots[j] not in _TEMPORAL_ROOTS))
-                    for j in range(0, p) if j != i)):
+                and not any(upos[j] in ("PROPN", "PRON")
+                            for j in range(0, p) if j != i)):
             compoundable = False
     elif (compoundable and eff_case[i + 1] not in ("Nom", "")
             and not tagsets[i + 1] & {"P1sg", "P2sg", "P1pl", "P2pl"}):
@@ -2619,8 +2240,7 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
                        compoundable: bool) -> None:
     n, lows, tagsets, roots, base_case = s.n, s.lows, s.tagsets, s.roots, s.base_case
     upos, eff_case, eff_poss, heads = s.upos, s.eff_case, s.eff_poss, s.heads
-    rels, subord, converb, cond = s.rels, s.subord, s.converb, s.cond
-    subj_of = s.subj_of
+    rels, subord, converb, subj_of = s.rels, s.subord, s.converb, s.subj_of
     low_root = roots[i]
     if compoundable:
         heads[i], rels[i] = i + 2, "nmod"
@@ -2641,14 +2261,6 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
         heads[i], rels[i] = i + 3, "nmod"
     elif (
         low_root in _TEMPORAL_ROOTS and upos[i] == "NOUN"
-        and v is not None and v == i + 1
-        and converb[v] and tagsets[v] & {"When", "AsLongAs"}
-    ):
-        # a bare time noun DIRECTLY before a subject-hosting
-        # converb is that converb's subject (GÜN ilerledikçe)
-        heads[i], rels[i] = v + 1, "nsubj"
-    elif (
-        low_root in _TEMPORAL_ROOTS and upos[i] == "NOUN"
         and eff_case[i] in ("Nom", "")
         and not eff_poss[i]
         # only the SENTENCE-initial time noun can be the subject
@@ -2662,10 +2274,9 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
         and not _verb_person_12(s, p)
         and upos[p] == "VERB"
         and not any(
-            upos[j] in ("PROPN", "PRON")
-            or (upos[j] in _NOMINAL
-                and eff_case[j] in ("Nom", "")
-                and roots[j] not in _TEMPORAL_ROOTS)
+            upos[j] in _NOMINAL
+            and eff_case[j] in ("Nom", "")
+            and roots[j] not in _TEMPORAL_ROOTS
             for j in range(i + 1, p)
         )
     ):
@@ -2717,7 +2328,7 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
         heads[i], rels[i] = vt + 1, "compound"
     elif (preverbal
           and upos[vt] == "VERB"
-          and (converb[vt] or cond[vt]
+          and (converb[vt]
                or ("Pass" in tagsets[vt] and subord[vt])
                # -DIktAn sonra/önce temporal clauses host their
                # own subject the same way (turta PİŞTİKTEN
@@ -2731,8 +2342,7 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
           and not any(rels[j] == "nsubj" and heads[j] == vt + 1
                       for j in range(i))
           and (roots[vt] not in _TRANSITIVE_ROOTS
-               or "Pass" in tagsets[vt]
-               or _intrans(s, vt))
+               or "Pass" in tagsets[vt])
           and ("Pass" in tagsets[vt]
                or "Caus" not in tagsets[vt])
           and not (vt > 0
@@ -2755,10 +2365,6 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
             _intrans(s, vt)
             and not lv_nominal
         ) or "Pass" in tagsets[vt]
-        # a possessed temporal before "ol" is an adjunct, not a
-        # support-verb complement (gece YARISI olmuş -> obl)
-        if roots[vt] == "ol" and eff_poss[i]:
-            intransitive = True
         # only a true VERB takes a bare object; copular/adjectival
         # predicates take obliques (hafta sonu AÇIK -> obl)
         if upos[vt] != "VERB":
@@ -2780,7 +2386,6 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
                 # ... topladı), not a duration adjunct — only
                 # time-expression possesseds demote (hafta SONU)
                 and (not eff_poss[i]
-                     or roots[i] in _TEMPORAL_ROOTS
                      or roots[i] in ("son", "yarı", "baş",
                                         "orta"))
                 and any(rels[k] == "nsubj" and heads[k] == vt + 1
@@ -2824,10 +2429,9 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
                         None)) is not None
         and mp not in subj_of
         and not any(
-            (upos[j] in ("PROPN", "PRON")
-             or (upos[j] in _NOMINAL
-                 and eff_case[j] in ("Nom", "")
-                 and roots[j] not in _TEMPORAL_ROOTS))
+            upos[j] in _NOMINAL
+            and eff_case[j] in ("Nom", "")
+            and roots[j] not in _TEMPORAL_ROOTS
             # a light-verb NOMINAL is no subject candidate
             # (veliler itiraz edince geziyi İPTAL etti,
             # inişe İZİN verdi)
@@ -2840,18 +2444,13 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
             # incorporated object (başlayınca ek PERSONEL
             # istedi)
             and not (j == mp - 1
-                     and (roots[mp] in _TRANSITIVE_ROOTS
-                          or "Caus" in tagsets[mp])
+                     and roots[mp] in _TRANSITIVE_ROOTS
                      and "Pass" not in tagsets[mp])
             # ... nor is a bare modifier feeding a possessed
-            # or Acc izafet head (AMBAR kapaklarını, KONSER
-            # programını — object material, not a subject)
+            # izafet head (AMBAR kapaklarını, KONSER programını
+            # — object material, not a subject)
             and not (j + 1 < n and upos[j + 1] in _NOMINAL
-                     and (eff_poss[j + 1]
-                          or eff_case[j + 1] == "Acc"
-                          or tagsets[j + 1]
-                          & {"P1sg", "P2sg", "P3sg",
-                             "P1pl", "P2pl", "P3pl"}))
+                     and eff_poss[j + 1])
             for j in range(p + 1, mp)
         )
     ):
@@ -2955,10 +2554,9 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         and p not in subj_of
         and upos[vt] == "VERB"
         and converb[vt]
-        and ("A3pl" in tagsets[i] or eff_poss[i]
-             or upos[i] in ("PROPN", "PRON"))
+        and ("A3pl" in tagsets[i] or eff_poss[i])
     ):
-        # a plural/possessed/proper bare nominal before a
+        # a plural/possessed bare nominal before a
         # subject-sharing converb is the matrix subject
         # (İŞÇİLER dinlenmeden çalışmaya devam etti); a
         # bare singular stays the converb's object (SU
@@ -2997,28 +2595,14 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
                  and base_case[vt] == "Abl"
                  and vt + 1 < n
                  and lows[vt + 1] in ("sonra", "önce")))
-        and (_intrans(s, vt)
-             or "Pass" in tagsets[vt]
-             or (roots[vt] in _WEATHER_INTRANS_VERBS
-                 and roots[i] in _WEATHER_NOUNS)
-             # ... and an UNLISTED/mixed-valency converb
-             # with the MATRIX subject already filled:
-             # the bare nominal is the converb's own
-             # subject (Vali KONVOY geçerken ... duyurdu)
-             or (p in subj_of
-                 and roots[vt] not in _TRANSITIVE_ROOTS
-                 and not (vt > 0
-                          and roots[vt] in ("et", "yap",
-                                               "ol"))))
+        and (_intrans(s, vt) or "Pass" in tagsets[vt])
     ):
         # an INTRANSITIVE or PASSIVE converb cannot take
         # the bare nominal as object: it is the converb's
         # own subject (YAĞMUR yağarken maç durdu; KARAR
         # verilmeden önce taraflar dinlendi)
         heads[i], rels[i] = vt + 1, "nsubj"
-    elif ((roots[vt] in ("ol", "et")
-           or (roots[vt] == "gel"
-               and lows[i] in _GEL_SUPPORT_NOMINALS))
+    elif (roots[vt] in ("ol", "et")
           and not lv_nominal
           and not eff_poss[i]):
         # support-verb construction: üye oldu, ikamet
@@ -3062,7 +2646,7 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         heads[i], rels[i] = vt + 1, "obj"
 
 def _subjish(s, i: int, p: int, vt: int) -> bool:
-    n, lows, tagsets, roots, upos = s.n, s.lows, s.tagsets, s.roots, s.upos
+    n, tagsets, roots, upos = s.n, s.tagsets, s.roots, s.upos
     eff_poss, heads, rels, preds = s.eff_poss, s.heads, s.rels, s.preds
     # directly preverbal: indefinite subject vs bare object
     modified = any(
@@ -3081,12 +2665,9 @@ def _subjish(s, i: int, p: int, vt: int) -> bool:
     )
     return (
         modified
-        or lows[vt] in ("var", "yok")
-        or roots[vt] in ("var", "yok")
         or eff_poss[i]
         or "A3pl" in tagsets[i]
         or upos[i] in ("PROPN", "PRON")
-        or "Prop" in tagsets[i]
         or "Pass" in tagsets[vt if upos[vt] == "VERB" else i]
         # a clause-initial bare nominal claims the subject
         # slot only when another nominal stands between it
@@ -3169,8 +2750,7 @@ def _first_conjunct_role(s):
                 and eff_case[k] in ("Nom", "")
                 and k + 1 < n and k + 1 == heads[f] - 1
                 and upos[k + 1] == "VERB"
-                and (roots[k + 1] in _TRANSITIVE_ROOTS
-                     or roots[k + 1] in ("ver", "et", "yap"))
+                and roots[k + 1] in _TRANSITIVE_ROOTS
                 and "Pass" not in tagsets[k + 1]):
             rels[f] = "obj"
 
@@ -3185,15 +2765,13 @@ def _leftovers(s):
 # the parser's sections in order; each reads and rewrites the ParseState
 # that adjust_upos's UPOS_RULES have already run over
 PARSE_RULES = (
-    _lexicalized_inf2, _clause_predicates, _choose_root, _clause_arcs,
-    _fixed_expressions, _correlatives, _verbless_comma_clause,
-    _post_matrix_clause, _reread_chain_link, _reread_loan_i_object,
-    _reread_possessed_locative, _reread_same_case_compound,
-    _reread_loan_i_attributive, _reread_loan_i_before_bir,
-    _juxtaposition_modifiers, _acc_nom_homography, _title_flat_name,
-    _mention_runs, _verb_attachment, _copular_root, _function_words,
-    _nominal_arguments, _cc_repoint, _list_comma, _bare_obl_compound,
-    _first_conjunct_role, _leftovers,
+    _clause_predicates, _choose_root, _clause_arcs, _fixed_expressions,
+    _correlatives, _verbless_comma_clause, _post_matrix_clause,
+    _reread_chain_link, _reread_possessed_locative,
+    _reread_same_case_compound, _juxtaposition_modifiers,
+    _acc_nom_homography, _title_flat_name, _mention_runs, _verb_attachment,
+    _copular_root, _function_words, _nominal_arguments, _cc_repoint,
+    _list_comma, _bare_obl_compound, _first_conjunct_role, _leftovers,
 )
 
 

@@ -2098,25 +2098,6 @@ def _adverb_attributive(s: MorphState) -> None:
             out[idx] = low + "+Adj"
 
 
-# clock-time frame: a numeral-Loc reading directly after bare "saat"
-# beats the pronoun homograph (Tören saat ONDA başladı != 'in it')
-def _clock_time(s: MorphState) -> None:
-    out, tokens, lows = s.analyses, s.tokens, s.lows
-    for idx in range(1, len(out)):
-        if lows[idx - 1] != "saat":
-            continue
-        if "Pron" not in _tag_split(out[idx]):
-            continue
-        num_loc = next(
-            (f"{root}+" + "+".join(tags).replace("+DB+", "^DB+")
-             for root, _sfx, tags in _real_candidates(tokens[idx])
-             if tags[0] == "Num" and "Loc" in tags),
-            None,
-        )
-        if num_loc:
-            out[idx] = num_loc
-
-
 # the post-passes, in order, over the analyses ``_select_analyses`` chose:
 # each reads right context the left-to-right selection lacks
 MORPH_RULES = (
@@ -2124,7 +2105,6 @@ MORPH_RULES = (
     _kalan_participle, _support_verb, _son_light_verb, _stranded_adjective,
     _dusunce_converb, _phase_event_nominal, _loan_i_object,
     _loan_i_attributive, _dual_stem_attributive, _adverb_attributive,
-    _clock_time,
 )
 
 

@@ -125,11 +125,10 @@ _HARMONY_I = {"a": "ı", "ı": "ı", "e": "i", "i": "i",
 
 def _harmonic_split(root: str, suffix: str) -> bool:
     """Fourfold (-I type) vowel harmony between a root's last vowel and
-    its suffix's first vowel; permissive when either has no vowel or the
-    suffix vowel is not I-type."""
+    its suffix's first vowel; permissive when either has no vowel."""
     rv = next((c for c in reversed(root) if c in "aeıioöuü"), None)
     sv = next((c for c in suffix if c in "aeıioöuü"), None)
-    if rv is None or sv is None or sv not in "ıiuü":
+    if rv is None or sv is None:
         return True
     return _HARMONY_I[rv] == sv
 
@@ -172,12 +171,6 @@ _LEX_PRONOUNS = {
 # reading for the bare uninflected surface / zero-copula predicate
 _LOAN_ADJS = {"net", "komple", "direkt", "süper", "ekstra", "kalabalık"}
 
-# role nouns whose citation form doubles as an adjective (usta işçi vs
-# USTA mayayı yoğurdu): sentence-initially before a case-marked nominal
-# the role-noun subject reading wins — an adjective cannot modify a
-# case-marked object from outside its NP
-_ROLE_NOUN_ADJS = {"usta", "görevli", "yetkili", "sorumlu"}
-
 # core qualitative adjectives (Turkish grammar's primary nitelik
 # sıfatları): citation-form adjectives so frequent that their accidental
 # P3sg segmentation homographs (yeni = yen+P3sg 'its sleeve') are
@@ -210,7 +203,7 @@ def _zero_cop_class(analysis: str) -> str:
     # the adjectival root only shines through an intermediate BARE
     # nominal (soğuktu: Adj -> Noun+Pnon+Nom -> Zero); a case/possessive-
     # marked nominal is a real nominal predicate (yaşındayım: P3sg+Loc)
-    pre_bare = pre is gs[0] or {"Pnon", "Nom"} <= pre_set
+    pre_bare = {"Pnon", "Nom"} <= pre_set
     if pre_bare and (
         gs[0].split("+")[1:2] == ["Adj"]
         or to_lower(gs[0].split("+")[0]) in _LOAN_ADJS
@@ -224,13 +217,11 @@ def _zero_cop_class(analysis: str) -> str:
 
 @lru_cache(maxsize=50_000)
 def _common_noun_stem(low: str) -> bool:
-    """Is the surface a plain common-noun stem in the lexicon (either
-    case variant)?  Drives the sentence-initial Prop demotion."""
+    """Is the surface a plain common-noun stem in the lexicon?  Drives
+    the sentence-initial Prop demotion."""
     from .. import resources
-    from .morphology import capitalize
 
-    sd = resources.stem_dict()
-    tags = sd.get(low) or sd.get(capitalize(low))
+    tags = resources.stem_dict().get(low)
     return bool(tags) and any(t == "Noun" for t in tags)
 
 
@@ -306,25 +297,6 @@ class ParseState:
         self.rels = [""] * n
 
 
-# sentence-initial role-noun/adjective homograph directly before a
-# case-marked (or Acc-readable) nominal is the clause subject, not
-# an attributive adjective (USTA mayayı yoğurdu, GÖREVLİ afişleri
-# astı); before a bare-Nom nominal the attributive reading stands
-# (usta işçiler, görevli memurlar)
-def _role_noun_subject(s):
-    tokens, n, lows, base_case = s.tokens, s.n, s.lows, s.base_case
-    morph_upos, upos = s.morph_upos, s.upos
-    if (
-        n > 1
-        and morph_upos[0] == "ADJ"
-        and lows[0] in _ROLE_NOUN_ADJS
-        and morph_upos[1] in ("NOUN", "PROPN")
-        and (base_case[1] not in ("Nom", "")
-             or "acc" in _readings(tokens[1]))
-    ):
-        morph_upos[0] = "NOUN"
-        upos[0] = "NOUN"
-
 def _lexical_context(s):
     # one walk over the tokens: the first of the four branch groups that
     # matches a token decides it, as one if/elif chain would
@@ -354,11 +326,7 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
         upos[i] = "ADJ"
     elif (
         i > 0
-        and (upos[i] in ("ADJ", "NOUN")
-             # participle-homograph surnames (Duran, Koşan): the
-             # capitalized token after a title is the name, not an
-             # -An relative
-             or (upos[i] == "VERB" and "PresPart" in tags))
+        and upos[i] in ("ADJ", "NOUN")
         and _CAP_RE.match(tokens[i])
         and "Prop" not in tags
         and (lows[i - 1].split("'")[0] in _TITLES
@@ -367,8 +335,7 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
              or (roots[i - 1] in _TITLES
                  and "P3sg" in tagsets[i - 1]))
         and upos[i - 1] == "NOUN"
-        and (_CAP_RE.match(tokens[i - 1])
-             or roots[i - 1] in _TITLES)
+        and roots[i - 1] in _TITLES
     ):
         # a capitalized token directly after a capitalized title is
         # the person's NAME even when the lexicon only knows it as a
@@ -431,8 +398,7 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
         # (SON yıllarda turizm hızla gelişti)
         and any(
             upos[j] == "VERB"
-            and (roots[j] in _TRANSITIVE_ROOTS
-                 or "Caus" in tagsets[j])
+            and roots[j] in _TRANSITIVE_ROOTS
             for j in range(i + 2, n)
         )
     ):
@@ -577,7 +543,7 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
         and upos[i] == "NOUN"
         and i + 1 < n
         and upos[i + 1] in ("NOUN", "PROPN")
-        and not ("P3sg" in analyses[i + 1] or "P3pl" in analyses[i + 1])
+        and "P3sg" not in analyses[i + 1]
     ):
         # lexicalized terrain/ground -lIk adjectives: before an
         # UNPOSSESSED nominal they are attributive (ORMANLIK alanda,
@@ -605,8 +571,7 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
     ):
         # önce/sonra after an ablative or time NP stay postpositions
         if low in ("önce", "sonra") and i > 0 and (
-            base_case[i - 1] == "Abl"
-            or morph_upos[i - 1] in ("NOUN", "NUM")
+            morph_upos[i - 1] in ("NOUN", "NUM")
             # converb clause complement: ulaşmadan önce, yemeden önce
             or "WithoutHavingDoneSo" in analyses[i - 1]
         ):
@@ -621,7 +586,6 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
             # case-marked NON-temporal noun is a verb argument and
             # erken is the manner adverb (erken YOLA çıktı)
             and (roots[i + 1] in _TEMPORAL_ROOTS
-                 or roots[i + 1] in ("yaş", "saat", "dönem", "vakit", "tarih")
                  or base_case[i + 1] in ("Nom", ""))
         ):
             # adnominal use keeps the adjective (erken SAATLERDE)
@@ -693,13 +657,6 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
         # left argument of its own is a lexicalized nominal (Konuşmayı
         # ... dinleyeceğim) — same gate the parser applies
         upos[i] = "VERB"
-    elif (
-        low in ("gelecek", "önümüzdeki", "geçtiğimiz")
-        and i + 1 < n
-        and roots[i + 1] in _TEMPORAL_ROOTS
-    ):
-        # lexicalized temporal modifiers (gelecek ay, önümüzdeki hafta)
-        upos[i] = "ADJ"
     elif low in _LEX_PRONOUNS:
         upos[i] = "PRON"
     elif (
@@ -764,8 +721,7 @@ def _lexical_modifiers(s, i: int, low: str, tags: set) -> bool:
         and i + 1 < n
         # the next token may be a nominalized verb whose own NOUN ->
         # VERB rewrite runs later in this pass: read the analysis
-        and (upos[i + 1] == "VERB"
-             or "Verb" in tagsets[i + 1])
+        and "Verb" in tagsets[i + 1]
     ):
         # the bare interrogative directly before a verb is the
         # wh-adverb 'why' (fiyatların NEDEN arttığını açıkladı);
@@ -856,13 +812,7 @@ def _lexical_modifiers(s, i: int, low: str, tags: set) -> bool:
             )
         )
         and not all(upos[j] == "PUNCT" for j in range(i + 1, n))
-        and not (i + 1 < n
-                 and (upos[i + 1] == "VERB"
-                      # the nominalized-verb NOUN -> VERB rewrite runs
-                      # later in this pass: a copular/verbal host read
-                      # from the analysis counts (riskli OLDUĞUNU
-                      # savunuyor keeps the predicative adjective)
-                      or "Verb" in tagsets[i + 1]))
+        and not (i + 1 < n and upos[i + 1] == "VERB")
         # a conjunct chain of adjectives closing the sentence is a
         # zero-copula coordinated predicate: every token after this
         # one being CCONJ/ADJ/PUNCT keeps the adjective reading
@@ -919,14 +869,7 @@ def _lexical_case_frames(s, i: int, low: str, tags: set) -> bool:
                  # attributive (KAÇAK avlanma nedeniyle)
                  and lows[i + 2] not in _GRAMMAT_ADPS
                  and (base_case[i + 2] in ("Nom", "")
-                      or base_poss[i + 2]
-                      # an overtly case-marked POSSESSED tail is a
-                      # chain too (SEYİS yarış atını eyerledi: the
-                      # izafet object ends the chain, the homograph
-                      # is the subject)
-                      or tagsets[i + 2]
-                      & {"P1sg", "P2sg", "P3sg",
-                         "P1pl", "P2pl", "P3pl"})
+                      or base_poss[i + 2])
                  # ... unless that third nominal is a light-verb
                  # nominal (EK personel talep etti): the chain ends
                  # at the light-verb complex, the homograph modifies
@@ -1069,39 +1012,19 @@ def _lexical_case_frames(s, i: int, low: str, tags: set) -> bool:
         and "’" not in tokens[i]
         and not (i + 1 < n and upos[i + 1] in ("NOUN", "PROPN")
                  and _CAP_RE.match(tokens[i + 1]))
-        and (low not in _typed_gazetteer()[1]
-             # gazetteer names that are also TEMPORAL nouns (Sabah
-             # the paper vs sabah 'morning') or agentive occupation
-             # nouns (Sözcü the paper vs sözcü 'spokesperson') read
-             # as the common noun sentence-initially before
-             # lowercase text
-             or low in _TEMPORAL_ROOTS
-             or _agentive_common(low))
+        and (low in _TEMPORAL_ROOTS or _agentive_common(low))
         and _common_noun_stem(low)
     ):
-        # sentence-initial capitalization is not a Prop signal: a
-        # common-noun homograph outside the gazetteer reads as the
-        # noun (Sanatçı ... söyledi, Sabah ... yedik); capitalized
-        # RUNS (Ziraat Bankası) and gazetteer names stay proper
+        # sentence-initial capitalization is not a Prop signal for
+        # names that are also TEMPORAL nouns (Sabah the paper vs sabah
+        # 'morning') or agentive occupation nouns (Sözcü the paper vs
+        # sözcü 'spokesperson'): before lowercase text they read as the
+        # common noun (Sanatçı ... söyledi, Sabah ... yedik); capitalized
+        # RUNS (Ziraat Bankası) stay proper
         upos[i] = "NOUN"
     else:
         return False
     return True
-
-# a capitalized token right after a capitalized title is the person's
-# name, even when its lowercase surface is an adjective/common-noun
-# homograph (Profesör Aydın, Doktor Çelik) -> PROPN
-def _name_after_title(s):
-    tokens, n, lows, upos = s.tokens, s.n, s.lows, s.upos
-    for i in range(1, n):
-        if (
-            upos[i] in ("ADJ", "NOUN")
-            and _CAP_RE.match(tokens[i])
-            and lows[i - 1] in _TITLES
-            and upos[i - 1] in ("NOUN", "PROPN")
-            and _CAP_RE.match(tokens[i - 1])
-        ):
-            upos[i] = "PROPN"
 
 # mention runs: >=2 adjacent capitalized nominals are proper nouns
 # (Ziraat Bankası, Boğaziçi Köprüsü'nden); titles keep their common
@@ -1163,8 +1086,7 @@ def _gazetteer_names(s):
             and _CAP_RE.match(tokens[i])
             and lows[i].split("'")[0] in _typed_gazetteer()[1]
             and lows[i] not in _TITLES
-            and not (i == 0 and (lows[i] in _TEMPORAL_ROOTS
-                                 or _agentive_common(lows[i])))
+            and not (i == 0 and lows[i] in _TEMPORAL_ROOTS)
             # a SENTENCE-INITIAL gazetteer homograph whose common-noun
             # reading feeds a lowercase izafet head keeps the common
             # reading (ZİRAAT odası üreticilere fide dağıttı); the
@@ -1208,8 +1130,7 @@ def _chain_link_noun(s):
 
 # a loan-î whole-word adjective before a case-marked OBLIQUE nominal
 # with an otherwise objectless transitive finite verb is the hidden
-# accusative object (erimiş MADENİ kalıba döktü = maden+Acc) —
-# mirror of the parser's upos/eff_case re-read
+# accusative object (erimiş MADENİ kalıba döktü = maden+Acc)
 def _loan_i_object(s):
     analyses, n, lows, tagsets, roots = s.analyses, s.n, s.lows, s.tagsets, s.roots
     base_case, base_poss, upos = s.base_case, s.base_poss, s.upos
@@ -1240,10 +1161,9 @@ def _loan_i_object(s):
                             and base_case[j] in ("Nom", "")
                             and not base_poss[j]
                             for j in range(i + 1, v))
-                and any(upos[j] in ("PROPN", "PRON")
-                        or (upos[j] == "NOUN"
-                            and base_case[j] in ("Nom", "")
-                            and not base_poss[j])
+                and any(upos[j] == "NOUN"
+                        and base_case[j] in ("Nom", "")
+                        and not base_poss[j]
                         for j in range(i))
             ):
                 upos[i] = "NOUN"
@@ -1270,18 +1190,15 @@ def _possessed_locative(s):
 # loan -î adjective homographs of Acc/P3sg segmentations (resmi =
 # resmî / resim+Acc) directly before a case-marked nominal, with the
 # object slot claimed by an earlier Acc-capable nominal, are the
-# attributive adjective — mirror of the parser's re-read
+# attributive adjective
 def _loan_i_attributive(s):
-    tokens, analyses, n, lows, tagsets = s.tokens, s.analyses, s.n, s.lows, s.tagsets
+    tokens, n, lows, tagsets = s.tokens, s.n, s.lows, s.tagsets
     roots, base_case, upos = s.roots, s.base_case, s.upos
     for i in range(1, n - 1):
         if (
             upos[i] == "NOUN"
             and roots[i] != lows[i]
-            and (tagsets[i] & {"Acc"}
-                 or ("Nom" in analyses[i]
-                     and tagsets[i]
-                     & {"P3sg", "P3pl"}))
+            and "Acc" in tagsets[i]
             and "bare_adj" in _readings(tokens[i])
             and upos[i + 1] in ("NOUN", "PROPN")
             and base_case[i + 1] in ("Dat", "Loc", "Abl", "Ins",
@@ -1296,8 +1213,8 @@ def _loan_i_attributive(s):
 
 # the same loan -î class directly before determiner "bir" + a
 # non-temporal nominal is attributive outright (Bu anlaşma TARİHİ
-# bir adımdır) — mirror of the parser's re-read; "toplantı tarihi
-# bir gün önce" keeps the date reading (gün is temporal)
+# bir adımdır); "toplantı tarihi bir gün önce" keeps the date
+# reading (gün is temporal)
 def _loan_i_before_bir(s):
     tokens, analyses, n, lows, tagsets = s.tokens, s.analyses, s.n, s.lows, s.tagsets
     roots, upos = s.roots, s.upos
@@ -1305,10 +1222,8 @@ def _loan_i_before_bir(s):
         if (
             upos[i] == "NOUN"
             and roots[i] != lows[i]
-            and (tagsets[i] & {"Acc"}
-                 or ("Nom" in analyses[i]
-                     and tagsets[i]
-                     & {"P3sg", "P3pl"}))
+            and "Nom" in analyses[i]
+            and tagsets[i] & {"P3sg", "P3pl"}
             and "bare_adj" in _readings(tokens[i])
             and lows[i + 1] == "bir"
             and upos[i + 2] in ("NOUN", "PROPN")
@@ -1321,18 +1236,16 @@ def _loan_i_before_bir(s):
 # unless they stand directly before the nominal they would modify
 # (temizleyici madde keeps ADJ; yüzücü MİLLİ takıma -> NOUN subject)
 def _agentive_nouns(s):
-    tokens, analyses, n, tagsets = s.tokens, s.analyses, s.n, s.tagsets
+    analyses, n, tagsets = s.analyses, s.n, s.tagsets
     base_case, upos = s.base_case, s.upos
     for i in range(n):
         if (
             upos[i] == "ADJ"
             and analyses[i].endswith("+Adj+Agt")
             and (i + 1 >= n or upos[i + 1] not in ("NOUN", "PROPN")
-                 # a case-marked (or Acc-readable) nominal is a clause
-                 # argument, not a modifiable head (İZLEYİCİ finali
-                 # beğendi)
+                 # a case-marked nominal is a clause argument, not a
+                 # modifiable head (İZLEYİCİ finali beğendi)
                  or base_case[i + 1] not in ("Nom", "")
-                 or "acc" in _readings(tokens[i + 1])
                  # a bare-Nom nominal already feeding its own izafet
                  # head is saturated — the Agt word exits to the
                  # profession-noun subject (GENÇ YÜZÜCÜ kulaç rekorunu)
@@ -1408,8 +1321,7 @@ def _attributive_before_bare(s):
             # is attributive on the ADP/agent complement (Köprü YABANCI
             # mühendisler tarafından inşa edildi)
             and not (i + 2 < n
-                     and (upos[i + 2] == "ADP"
-                          or lows[i + 2] == "tarafından")
+                     and upos[i + 2] == "ADP"
                      and not any(upos[j] in ("NOUN", "PROPN", "PRON")
                                  for j in range(i)))
             # ... and not when the bare nominal is itself the bare
@@ -1609,13 +1521,14 @@ def _material_nouns(s):
 # adjust_upos's passes in order; the parser runs them too, on the same
 # ParseState, before its own PARSE_RULES
 UPOS_RULES = (
-    _role_noun_subject, _lexical_context, _name_after_title, _capitalized_runs,
-    _gazetteer_names, _chain_link_noun, _loan_i_object, _possessed_locative,
+    _lexical_context, _capitalized_runs, _gazetteer_names,
+    _chain_link_noun, _loan_i_object, _possessed_locative,
     _loan_i_attributive, _loan_i_before_bir, _agentive_nouns,
     _adjective_before_bir, _giderek_adverb, _attributive_before_bare,
-    _unknown_li_adjectives, _first_conjunct_adjective, _correlative_adjective,
-    _reduplicated_adjectives, _reduplicated_nouns, _geri_particle,
-    _manner_before_light_verb, _adjective_before_verb, _material_nouns,
+    _unknown_li_adjectives, _first_conjunct_adjective,
+    _correlative_adjective, _reduplicated_adjectives, _reduplicated_nouns,
+    _geri_particle, _manner_before_light_verb, _adjective_before_verb,
+    _material_nouns,
 )
 
 
