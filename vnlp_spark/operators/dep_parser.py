@@ -659,8 +659,9 @@ def _izafet_oblique_mod(s, j: int) -> bool:
     n, upos, eff_case, eff_poss = s.n, s.upos, s.eff_case, s.eff_poss
     # bare nominal feeding a POSSESSED oblique-case izafet head
     # (rehber EŞLİĞİNDE gezdi, mahalle SAKİNLERİNE açtı): the pair
-    # is one oblique phrase, transparent for object adjacency.  An unpossessed next nominal keeps its neighbor a
-    # subject candidate (Kitabı ÖĞRETMEN öğrencilere dağıttı).
+    # is one oblique phrase, transparent for object adjacency.  An
+    # unpossessed next nominal keeps its neighbor a subject candidate
+    # (Kitabı ÖĞRETMEN öğrencilere dağıttı).
     return (
         upos[j] in _NOMINAL
         and eff_case[j] in ("Nom", "")
@@ -2606,8 +2607,8 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
           and not lv_nominal
           and not eff_poss[i]):
         # support-verb construction: üye oldu, ikamet
-        # etti, GALİP geldi (yap/gör light verbs keep
-        # their obj per UD-BOUN)
+        # etti (yap/gör light verbs keep their obj per
+        # UD-BOUN)
         heads[i], rels[i] = vt + 1, "compound"
     elif (
         vt == p

@@ -337,7 +337,7 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
         and upos[i - 1] == "NOUN"
         and roots[i - 1] in _TITLES
     ):
-        # a capitalized token directly after a capitalized title is
+        # a capitalized token directly after a title is
         # the person's NAME even when the lexicon only knows it as a
         # common word (Doktor AYDIN — aydın 'enlightened' stays an
         # adjective elsewhere); titles select persons
@@ -569,7 +569,7 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
         and not (roots[i] != low
                  and "P3sg" in tags)
     ):
-        # önce/sonra after an ablative or time NP stay postpositions
+        # önce/sonra after a nominal or numeral stay postpositions
         if low in ("önce", "sonra") and i > 0 and (
             morph_upos[i - 1] in ("NOUN", "NUM")
             # converb clause complement: ulaşmadan önce, yemeden önce
@@ -581,8 +581,8 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
             and upos[i] == "ADJ"
             and i + 1 < n
             and upos[i + 1] in ("NOUN", "PROPN")
-            # ... only before a TEMPORAL host (erken SAATLERDE,
-            # erken yaşta) or a bare-Nom nominal (erken seçim); a
+            # ... only before a TEMPORAL host (erken SAATLERDE) or a
+            # bare-Nom nominal (erken seçim); a
             # case-marked NON-temporal noun is a verb argument and
             # erken is the manner adverb (erken YOLA çıktı)
             and (roots[i + 1] in _TEMPORAL_ROOTS
@@ -606,17 +606,17 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
             and base_case[i] in ("Acc", "Dat", "Loc", "Abl")
             and i > 0
             # the emphatic particle is transparent for the argument
-            # frame (hizmetleri DE sunmaya) — same skip as the parser
+            # frame (hizmetleri DE sunmaya)
             and (lambda pv: (
                 base_case[pv] in ("Acc", "Dat", "Loc", "Abl", "Ins", "Gen")
                 # Acc / P3sg+Nom homographs to the left count — the
                 # parser resolves them to Acc under this very clause
-                # (ağaçları BUDAMAYA başladı); same gate as the parser
+                # (ağaçları BUDAMAYA başladı)
                 or ("acc" in _readings(tokens[pv])
                     and upos[pv] in ("NOUN", "PRON"))
                 # incorporated bare-Nom object with a subject
                 # candidate further left (Firma ... ek PRİM ödemeyi
-                # planlıyor) — same gate as the parser.  Only for
+                # planlıyor).  Only for
                 # UNPOSSESSED -mA forms: a POSSESSED Inf2 after a
                 # bare nominal is the lexicalized izafet compound
                 # (kurtarma ÇALIŞMASINI başlattı = the rescue
@@ -655,7 +655,7 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
         # (yapacağını söyledi, anlattığı konu); bare FutPart nominals
         # stay nominal (gelecek hafta), and an -mA verbal noun with no
         # left argument of its own is a lexicalized nominal (Konuşmayı
-        # ... dinleyeceğim) — same gate the parser applies
+        # ... dinleyeceğim)
         upos[i] = "VERB"
     elif low in _LEX_PRONOUNS:
         upos[i] = "PRON"
