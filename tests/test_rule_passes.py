@@ -14,8 +14,8 @@ import os
 import pickle
 
 import pytest
-from test_kernel_parity import _fuzz_corpus
 
+from tests.test_kernel_parity import _fuzz_corpus
 from vnlp_spark.functions.tokenizer import py_treebank_tokenize
 from vnlp_spark.operators import dep_parser, morphology, pos
 from vnlp_spark.plans.gold_ud_blind_data import available_splits, load_split
