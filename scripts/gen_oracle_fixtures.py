@@ -130,9 +130,9 @@ def main():
     from vnlp_spark.functions.tokenizer import py_treebank_tokenize
     from vnlp_spark.operators.charner import py_charner
     from vnlp_spark.operators.dep_parser import py_parse_tokens
-    from vnlp_spark.operators.morphology import py_analyze_tokens
+    from vnlp_spark.operators.morphology import analysis_tags, py_analyze_tokens
     from vnlp_spark.operators.ner import py_ner_tags
-    from vnlp_spark.operators.pos import py_pos_tags, upos_from_analysis
+    from vnlp_spark.operators.pos import py_pos_tags
     from vnlp_spark.operators.sentiment import py_sentiment_proba
     from vnlp_spark.operators.validity import py_is_token_valid_turkish
     from vnlp_spark.resources import non_breaking_prefixes
@@ -198,8 +198,9 @@ def main():
         da["doc_id"].append(doc_id)
         da["text_deascii"].append(" ".join(py_deasciify(space_toks)))
         # displacy: same inputs the query builds (treebank tokens, native
-        # upos_from_analysis — NOT the adjusted py_pos_tags — and NER tags)
-        upos_native = [upos_from_analysis(a) for a in analyses]
+        # morph UPOS of each analysis — NOT the adjusted py_pos_tags — and
+        # NER tags)
+        upos_native = [analysis_tags(a).upos for a in analyses]
         dp_json = (
             None if arcs is None else json.dumps(
                 dp_to_displacy(arcs, list(zip([a[1] for a in arcs], upos_native))),

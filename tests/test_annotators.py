@@ -1,9 +1,12 @@
 """NER / PoS / DP golden-parity (reference tests/test_general.py:43-110)
 and sentiment behavior."""
+from tests.test_kernel_parity import _fuzz_corpus
 from vnlp_spark.functions.tokenizer import py_treebank_tokenize
 from vnlp_spark.operators.dep_parser import py_parse_sentence, py_parse_tokens
+from vnlp_spark.operators.morphology import analysis_tags, py_analyze_tokens
 from vnlp_spark.operators.ner import py_ner_mentions, py_ner_pairs
-from vnlp_spark.operators.pos import py_pos_pairs
+from vnlp_spark.operators.pos import pos_from_analyses, py_pos_pairs
+from vnlp_spark.plans.gold_ud_blind_data import available_splits, load_split
 from vnlp_spark.operators.sentiment import py_sentiment, py_sentiment_proba
 
 NER_SENT = (
@@ -38,6 +41,25 @@ def test_pos_golden():
         ("Astra'sı", "PROPN"), ("vardı", "VERB"), (".", "PUNCT"),
     ]
     assert py_pos_pairs(py_treebank_tokenize("Oğuz'un kırmızı bir Astra'sı vardı.")) == gold
+
+
+
+def test_native_upos_matches_analysis_tags(spark):
+    # pos_from_analyses is the JVM copy of the morph UPOS mapping: it must
+    # give every analysis the UPOS of its AnalysisTags record
+    texts = [e["text"] for name in available_splits() for e in load_split(name)]
+    texts += _fuzz_corpus()
+    analyses = {a for t in texts for a in py_analyze_tokens(py_treebank_tokenize(t))}
+    analyses |= {"x+Punc", "word+Unknown",
+                 "soğuk+Adj^DB+Noun+Zero+A3sg+Pnon+Nom^DB+Verb+Zero+Past+A3sg"}
+    rows = [([a],) for a in sorted(analyses)]
+    got = (spark.createDataFrame(rows, "analyses array<string>")
+           .select("analyses", pos_from_analyses("analyses").alias("upos"))
+           .collect())
+    assert len(got) == len(rows)
+    mismatched = [(r.analyses[0], r.upos[0]) for r in got
+                  if r.upos[0] != analysis_tags(r.analyses[0]).upos]
+    assert mismatched == []
 
 
 def test_dp_golden():

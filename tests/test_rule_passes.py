@@ -4,8 +4,10 @@ tuples of named, module-level rule passes (``morphology.MORPH_RULES``,
 ``pos.UPOS_RULES``, ``dep_parser.PARSE_RULES``), so each rule can be
 timed, counted and checked on its own.  Checked on the source with
 ``ast``: no function in the three modules is longer than 200 lines, the
-drivers define no nested function or lambda, and each rule tuple lists
-only functions defined at module level.  Checked by running the rules
+drivers define no nested function or lambda, each rule tuple lists
+only functions defined at module level, and ``pos`` and ``dep_parser``
+take no analysis string apart themselves (they read
+``morphology.analysis_tags``).  Checked by running the rules
 over every gold text and the kernel-parity fuzz corpus: every rule
 changes the output of some sentence, so no rule stays in a tuple after
 later rules have taken over its work."""
@@ -73,6 +75,37 @@ def test_rules_are_a_tuple_of_module_level_functions(name, rules):
     entries = [e.id if isinstance(e, ast.Name) else ast.dump(e) for e in value.elts]
     assert [e for e in entries if e not in top_level] == []
     assert len(set(entries)) == len(entries)
+
+
+def _format_reads(tree: ast.Module) -> list:
+    """The ``.split`` / ``.count`` / ``.replace`` calls with a "+" or "^"
+    literal, and the references to ``_TAG_SEP``, outside ``_upos_sql``
+    (the JVM copy of the UPOS mapping), as ``(line, name)``."""
+    exempt = {
+        id(node)
+        for fn in tree.body if isinstance(fn, _FUNCS) and fn.name == "_upos_sql"
+        for node in ast.walk(fn)
+    }
+    reads = []
+    for node in ast.walk(tree):
+        if id(node) in exempt:
+            continue
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("split", "count", "replace")
+                and any(isinstance(a, ast.Constant) and isinstance(a.value, str)
+                        and ("+" in a.value or "^" in a.value) for a in node.args)):
+            reads.append((node.lineno, node.func.attr))
+        name = getattr(node, "id", None) or getattr(node, "attr", None) or getattr(node, "name", None)
+        if name == "_TAG_SEP":
+            reads.append((node.lineno, name))
+    return sorted(reads)
+
+
+@pytest.mark.parametrize("name", ["dep_parser.py", "pos.py"])
+def test_analysis_format_read_only_in_morphology(name):
+    # the rule modules read an analysis string through
+    # ``morphology.analysis_tags``, never by splitting it themselves
+    assert _format_reads(_module(name)) == []
 
 
 # every tuple a rule is run from; the parser imports UPOS_RULES by name

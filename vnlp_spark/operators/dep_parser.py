@@ -70,6 +70,7 @@ from .morphology import (
     _TRANSITIVE_ROOTS,
     _base,
     _typed_gazetteer,
+    analysis_tags,
     py_analyze_tokens,
     to_lower,
 )
@@ -594,8 +595,7 @@ def _reread_chain_link(s):
             # NOUN (its mirror of this rule); the chosen ANALYSIS is the
             # signal either way
             upos[i] in ("ADJ", "NOUN")
-            and analyses[i].count("+") == 1
-            and analyses[i].endswith("+Adj")
+            and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and "p3nom" in _readings(tokens[i])
             and lows[i] not in _CORE_ADJS
             # the asker/resim/din loan-î trio reads attributive before a
@@ -621,8 +621,7 @@ def _reread_possessed_locative(s):
     for i in range(1, n - 1):
         if (
             upos[i] in ("ADJ", "NOUN")
-            and analyses[i].count("+") == 1
-            and analyses[i].endswith("+Adj")
+            and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and "p3loc" in _readings(tokens[i])
             and (upos[i + 1] == "VERB"
                  # ... or a light-verb complex (yerinde TESPİT ETTİ)

@@ -404,14 +404,6 @@ def _typed_gazetteer():
     return per, typed
 
 
-def _case_of(tags: set) -> str:
-    """The first case tag in ``tags``, an analysis split on "+"."""
-    for case in ("Acc", "Dat", "Loc", "Abl", "Gen", "Ins", "Nom"):
-        if case in tags:
-            return case
-    return ""
-
-
 def _base(token: str) -> str:
     return to_lower(token.split("'")[0].split("’")[0])
 
@@ -451,22 +443,6 @@ _MORPH_TO_UPOS = {
     "Dup": "X",
     "Unknown": "NOUN",  # unanalyzable content words are usually nominals
 }
-
-
-def upos_from_analysis(analysis: str) -> str:
-    """Morph analysis string -> UD UPOS.  The PoS is the first tag of the
-    LAST derivation group (after the final ^DB), with Prop -> PROPN
-    (reference get_pos_from_analysis, _yildiz_analyzer.py:531-535)."""
-    tags_str = analysis.split("+", 1)[1] if "+" in analysis else analysis
-    if "^" in tags_str:
-        tags_str = tags_str[tags_str.rfind("^") + 4 :]  # skip '^DB+'
-    tags = tags_str.split("+")
-    if tags[0] == "Noun" and len(tags) > 1 and tags[1] == "Prop":
-        return "PROPN"
-    if tags[0] == "Noun" and len(tags) > 1 and tags[1] == "Time":
-        return "NUM"  # digit tokens analyzed Noun+Time (29, 2024)
-    return _MORPH_TO_UPOS.get(tags[0], "X")
-
 
 
 # Turkish lowering differs from str.lower() only on dotted/dotless I;
@@ -820,7 +796,7 @@ class TokenContext(NamedTuple):
     token: str
     sent_final: bool  # the last word before any trailing punctuation
     non_initial: bool  # a token precedes it
-    prev_case: str  # the previous analysis's ``_context_case``
+    prev_case: str  # the previous analysis's ``AnalysisTags.context_case``
     next_coord: bool  # a coordinating conjunction follows (``_next_is_coord``)
     prev_is_punct: bool  # the previous token is punctuation
 
@@ -1606,42 +1582,65 @@ def _analyze_one(token: str, sent_final: bool, non_initial: bool,
 
 
 _CASE_TAGS = ("Acc", "Dat", "Loc", "Abl", "Gen", "Ins", "Nom")
+_POSS_TAGS = frozenset({"P1sg", "P2sg", "P3sg", "P1pl", "P2pl", "P3pl"})
 
-# analysis strings whose tag split and context class are kept (LRU): the
-# post-passes re-read one sentence's analyses, so a small bound serves them
-_TAG_SPLIT_MEMO_MAX = 2048
+# frequent adjectives the reference stem list tags Noun-only (net,
+# direkt, kalabalık): the vendored lexicon cannot be edited (candidate-
+# generator parity), so the ADJUSTED-POS layer supplies the adjectival
+# reading for the bare uninflected surface / zero-copula predicate
+_LOAN_ADJS = {"net", "komple", "direkt", "süper", "ekstra", "kalabalık"}
+
+# analysis strings whose record is kept (LRU): the post-passes and the
+# parse state re-read each sentence's analyses, and most analyses of
+# open text repeat across sentences
+_ANALYSIS_TAGS_MEMO_MAX = 4096
 
 
-@lru_cache(maxsize=_TAG_SPLIT_MEMO_MAX)
-def _tag_split(analysis: str) -> list:
-    """``_TAG_SEP.split(analysis)``, memoized for the post-passes that
-    re-read every chosen analysis; the list is shared, so callers must
-    not mutate it."""
-    return _TAG_SEP.split(analysis)
+class AnalysisTags(NamedTuple):
+    """One analysis string (``root+Tag+…^DB+Tag+…``) taken apart once;
+    every reader of the format reads this record."""
+
+    root: str  # the text before the first "+"
+    tags: tuple  # the root and the tags, split on "+" and "^"
+    tagset: frozenset  # ``tags`` as a set
+    case: str  # the first case of the "+" split: a "Nom^DB" group is no Nom
+    context_case: str  # the left context it hands the next token
+    final_pos: str  # the first tag of the last derivation group
+    upos: str  # the UD UPOS of that group
+    zero_cop_class: str  # the lexical class of a zero-copula predicate
 
 
-@lru_cache(maxsize=_TAG_SPLIT_MEMO_MAX)
-def _context_case(analysis: str) -> str:
-    """The left-context class a chosen analysis hands the next token's
-    disambiguation: its case, with bare-Nom split into the classes
-    below (memoized; a pure function of the analysis string)."""
-    tags = set(analysis.split("+"))
-    prev_case = next((c for c in _CASE_TAGS if c in tags), "")
-    if prev_case == "Nom" and tags & {"P3sg", "P3pl", "P1sg", "P1pl",
-                                      "P2sg", "P2pl"}:
+@lru_cache(maxsize=_ANALYSIS_TAGS_MEMO_MAX)
+def analysis_tags(analysis: str) -> AnalysisTags:
+    """The record of ``analysis`` (memoized; a pure function of the
+    string, shared, so callers must not mutate it)."""
+    tags = tuple(analysis.replace("^", "+").split("+"))
+    plus = analysis.split("+")
+    case = ""
+    for c in _CASE_TAGS:
+        if c in plus:
+            case = c
+            break
+    root, sep, rest = analysis.partition("+")
+    # the derivation groups after the root; each one's PoS is its first tag
+    groups = (rest if sep else analysis).split("^DB+")
+
+    # the left-context class a chosen analysis hands the next token's
+    # disambiguation: its case, with bare-Nom split into the classes below
+    context_case = case
+    if case == "Nom" and not _POSS_TAGS.isdisjoint(plus):
         # possessed-Nom is its own context class: it heads izafet
         # chains rather than feeding them (ekibi TARİHİ konağı ...)
-        prev_case = "NomP"
-    elif prev_case == "Nom" and "A3pl" in tags and "Pnon" in tags:
+        context_case = "NomP"
+    elif case == "Nom" and "A3pl" in plus and "Pnon" in plus:
         # a PLURAL bare-Nom is its own class too: it licenses izafet
         # only for institutional heads (Bakanlar Kurulu), not the
         # open class — see the P3sg+Nom demotion in ``_nominal_score``
-        prev_case = "NomPl"
-    elif (prev_case == "Nom" and "A3sg" in tags
-          and not _tag_split(analysis)[1:2] == ["Adj"]
+        context_case = "NomPl"
+    elif (case == "Nom" and "A3sg" in plus
+          and tags[1:2] != ("Adj",)
           and "DB" not in analysis
-          and "Adj" in _engine()[0].stem_dic.get(
-              analysis.split("+", 1)[0], ())):
+          and "Adj" in _engine()[0].stem_dic.get(root, ())):
         # a bare Noun/Adj DUAL stem (kaçak, dolu) licenses singular
         # izafet heads (dolu YAĞIŞI) but not PLURAL possessed ones
         # (kaçak YAPILARI = the Acc object of a transitive, with
@@ -1649,11 +1648,44 @@ def _context_case(analysis: str) -> str:
         # QUALITY duals (kışlık, yazlık, antika) never head plural
         # izafet at all (kışlık LASTİKLERİ is attributive + Acc),
         # while substance duals keep it (DOLU taneleri = hailstones)
-        prev_case = ("NomDq"
-                     if analysis.split("+", 1)[0]
-                     in ("kışlık", "yazlık", "antika")
-                     else "NomD")
-    return prev_case
+        context_case = ("NomDq" if root in ("kışlık", "yazlık", "antika")
+                        else "NomD")
+
+    # the UPOS is the first tag of the LAST derivation group, with Prop ->
+    # PROPN (reference get_pos_from_analysis, _yildiz_analyzer.py:531-535)
+    last = groups[-1].split("+")
+    final_pos = last[0]
+    if final_pos == "Noun" and last[1:2] == ["Prop"]:
+        upos = "PROPN"
+    elif final_pos == "Noun" and last[1:2] == ["Time"]:
+        upos = "NUM"  # digit tokens analyzed Noun+Time (29, 2024)
+    else:
+        upos = _MORPH_TO_UPOS.get(final_pos, "X")
+
+    # the lexical class of a zero-copula predicate, read off the group
+    # before the copula: "Adj" when the ROOT group is adjectival
+    # (soğuk+Adj^DB+Noun...^DB+Verb+Zero — UD keeps the adjectival
+    # predicate reading) or the root is a curated Noun-only-lexicon
+    # adjective; "Noun" when the pre-copula group is nominal (evdeydi,
+    # öğretmenim); "" otherwise
+    zero_cop_class = ""
+    if len(groups) >= 2:
+        pre = groups[-2].split("+")
+        # the adjectival root only shines through an intermediate BARE
+        # nominal (soğuktu: Adj -> Noun+Pnon+Nom -> Zero); a case/possessive-
+        # marked nominal is a real nominal predicate (yaşındayım: P3sg+Loc)
+        if "Pnon" in pre and "Nom" in pre and (
+                groups[0].partition("+")[0] == "Adj"
+                or to_lower(root) in _LOAN_ADJS):
+            zero_cop_class = "Adj"
+        elif pre[0] == "Adj":
+            zero_cop_class = "Adj"
+        elif pre[0] in ("Noun", "Num"):
+            zero_cop_class = "Noun"
+
+    return AnalysisTags(root, tags, frozenset(tags), case, context_case,
+                        final_pos, upos, zero_cop_class)
+
 
 # bare time-period nouns that head "X sonunda/başında" izafet frames
 _PERIOD_ROOTS = {"yıl", "hafta", "ay", "gün", "sezon", "dönem", "yüzyıl",
@@ -1703,7 +1735,7 @@ def _select_analyses(s: MorphState) -> None:
             analysis == "sonunda+Adverb"
             and idx > 0
             and prev_case == "Nom"
-            and out[-1].split("+", 1)[0] in _PERIOD_ROOTS
+            and analysis_tags(out[-1]).root in _PERIOD_ROOTS
         ):
             # after a bare time-period noun the relational segmentation
             # is the izafet head (yıl SONUNDA, hafta sonunda), not the
@@ -1711,7 +1743,7 @@ def _select_analyses(s: MorphState) -> None:
             # whole-word adverb otherwise outscores the possessed noun
             analysis = "son+Noun+A3sg+P3sg+Loc"
         out.append(analysis)
-        prev_case = _context_case(analysis)
+        prev_case = analysis_tags(analysis).context_case
 
 
 # LVC-nominal repair (needs RIGHT context the per-token pass lacks):
@@ -1724,17 +1756,16 @@ def _select_analyses(s: MorphState) -> None:
 def _light_verb_nominal(s: MorphState) -> None:
     out, lows, stems = s.analyses, s.lows, _patched_stem_dict()
     for idx in range(len(out) - 1):
-        nxt = _tag_split(out[idx + 1])
-        if "Verb" not in nxt or nxt[0] not in ("ver", "et", "yap", "ol",
-                                               "al", "kıl", "bulun"):
+        nxt = analysis_tags(out[idx + 1])
+        if nxt.tags[0] not in ("ver", "et", "yap", "ol", "al", "kıl", "bulun"):
             continue
-        if not {"Aor", "Past", "Prog1", "Fut", "Narr", "Imp"} & set(nxt):
+        if not {"Aor", "Past", "Prog1", "Fut", "Narr", "Imp"} & nxt.tagset:
             continue
-        tags_i = set(_tag_split(out[idx]))
-        if "Verb" not in tags_i or not tags_i & _FINITE_TAGS:
+        cur = analysis_tags(out[idx])
+        if not cur.tagset & _FINITE_TAGS:
             continue
         low = lows[idx]
-        if low != out[idx].split("+", 1)[0] and "Noun" in stems.get(low, ()):
+        if low != cur.root and "Noun" in stems.get(low, ()):
             out[idx] = low + "+Noun+A3sg+Pnon+Nom"
 
 
@@ -1746,16 +1777,14 @@ def _light_verb_nominal(s: MorphState) -> None:
 def _inf2_plural_izafet(s: MorphState) -> None:
     out = s.analyses
     for idx in range(1, len(out)):
-        if ("+Inf2+" not in out[idx].replace("^", "+")
-                or not out[idx].endswith("+A3pl+Pnon+Acc")):
+        if "Inf2" not in analysis_tags(out[idx]).tagset:
             continue
-        prv = _tag_split(out[idx - 1])
-        if not ("Noun" in prv and "Pnon" in prv and "Nom" in prv):
+        if not {"Noun", "Pnon", "Nom"} <= analysis_tags(out[idx - 1]).tagset:
             continue
-        nxt_verb = next((a for a in out[idx + 1:]
-                         if "Verb" in _tag_split(a)
-                         and "Inf2" not in _tag_split(a)), None)
-        if nxt_verb is not None and "Pass" in _tag_split(nxt_verb):
+        nxt_verb = next((t for t in map(analysis_tags, out[idx + 1:])
+                         if "Verb" in t.tagset and "Inf2" not in t.tagset),
+                        None)
+        if nxt_verb is not None and "Pass" in nxt_verb.tagset:
             out[idx] = out[idx].replace("+A3pl+Pnon+Acc",
                                         "+A3pl+P3sg+Nom")
 
@@ -1775,18 +1804,18 @@ def _inf2_plural_izafet(s: MorphState) -> None:
 # even when the final word has an Aor/Past noun-verb homograph.
 def _missing_predicate(s: MorphState) -> None:
     out, tokens = s.analyses, s.tokens
-    if any("Verb" in _tag_split(a) for a in out):
+    if any("Verb" in analysis_tags(a).tagset for a in out):
         return
     for idx in range(len(out) - 1, -1, -1):
         if not any(ch.isalpha() for ch in tokens[idx]):
             continue
         if not any(
-                ({"Acc", "Dat", "Loc", "Abl"} & set(tg))
+                ({"Acc", "Dat", "Loc", "Abl"} & tg)
                 # a possessed-Nom nominal is the Acc-ambiguous
                 # object shape (hamuru = hamur+P3sg+Nom / +Acc)
                 # and counts as argument evidence too
-                or {"P3sg", "Nom"} <= set(tg)
-                for tg in (_tag_split(out[j])
+                or {"P3sg", "Nom"} <= tg
+                for tg in (analysis_tags(out[j]).tagset
                            for j in range(idx))):
             break
         for root, sfx, tags in _real_candidates(tokens[idx]):
@@ -1808,10 +1837,8 @@ def _kalan_participle(s: MorphState) -> None:
     for idx in range(1, len(out) - 1):
         if out[idx] != "kalan+Noun+A3sg+Pnon+Nom":
             continue
-        prv = _tag_split(out[idx - 1])
-        nxt = _tag_split(out[idx + 1])
-        if ("Noun" in prv and "Pnon" in prv and "Nom" in prv
-                and "Noun" in nxt):
+        if ({"Noun", "Pnon", "Nom"} <= analysis_tags(out[idx - 1]).tagset
+                and "Noun" in analysis_tags(out[idx + 1]).tagset):
             out[idx] = "kal+Verb+Pos^DB+Adj+PresPart"
 
 
@@ -1830,12 +1857,9 @@ def _support_verb(s: MorphState) -> None:
         if not lows[idx].startswith(
                 ("ed", "et", "ol", "yap", "kıl", "bulun")):
             continue
-        tags_i = _tag_split(out[idx])
-        if "Verb" in tags_i:
+        if "Verb" in analysis_tags(out[idx]).tagset:
             continue
-        prv = _tag_split(out[idx - 1])
-        if not (prv[0:1] and "Noun" in prv and "Pnon" in prv
-                and "Nom" in prv):
+        if not {"Noun", "Pnon", "Nom"} <= analysis_tags(out[idx - 1]).tagset:
             continue
         for root, sfx, tags in _real_candidates(tokens[idx]):
             if (tags[0] == "Verb"
@@ -1866,10 +1890,10 @@ def _son_light_verb(s: MorphState) -> None:
     for idx in range(len(out) - 1):
         if out[idx] != "son+Adj":
             continue
-        nxt = _tag_split(out[idx + 1])
-        if ("Verb" in nxt and nxt[0] in ("ver", "bul")
+        nxt = analysis_tags(out[idx + 1])
+        if ("Verb" in nxt.tagset and nxt.tags[0] in ("ver", "bul")
                 and {"Aor", "Past", "Prog1", "Fut", "Narr",
-                     "Imp"} & set(nxt)):
+                     "Imp"} & nxt.tagset):
             out[idx] = "son+Noun+A3sg+Pnon+Nom"
 
 
@@ -1882,33 +1906,24 @@ def _son_light_verb(s: MorphState) -> None:
 def _stranded_adjective(s: MorphState) -> None:
     out, tokens, stems = s.analyses, s.tokens, _patched_stem_dict()
     for idx in range(2, len(out) - 1):
-        cur = out[idx]
-        if cur.count("+") != 1 or not cur.endswith("+Adj"):
+        if analysis_tags(out[idx]).tags[1:] != ("Adj",):
             continue
-        nxt = _tag_split(out[idx + 1])
-        if "Verb" not in nxt or not _FINITE_TAGS & set(nxt):
+        nxt = analysis_tags(out[idx + 1]).tagset
+        if not _FINITE_TAGS & nxt:
             continue
-        prv = _tag_split(out[idx - 1])
-        prv_stem = prv[0]
+        prv = analysis_tags(out[idx - 1])
+        prv_stem = prv.tags[0]
         # final derivation segment's PoS: a derived adjective (yaşlı =
         # yaş+With, kiralık = kira+Ness) is attributive-capable too
-        if "DB" in prv:
-            last_db = len(prv) - 1 - prv[::-1].index("DB")
-            prv_final = prv[last_db + 1] if last_db + 1 < len(prv) else ""
-        else:
-            prv_final = prv[1] if len(prv) > 1 else prv[-1]
-        prev_attr = (prv[-1:] == ["Adj"]
-                     or prv_final == "Adj"
+        prev_attr = (prv.final_pos == "Adj"
                      or ("Adj" in stems.get(prv_stem, ())
-                         and "Noun" in prv and "Pnon" in prv
-                         and "Nom" in prv))
+                         and {"Noun", "Pnon", "Nom"} <= prv.tagset))
         if not prev_attr:
             continue
-        earlier = [set(_tag_split(out[j])) for j in range(idx - 1)]
+        earlier = [analysis_tags(out[j]).tagset for j in range(idx - 1)]
         if not any("Acc" in t for t in earlier):
             continue
-        if not any("Noun" in t and "Pnon" in t and "Nom" in t
-                   for t in earlier):
+        if not any({"Noun", "Pnon", "Nom"} <= t for t in earlier):
             continue
         cased = next(
             (root + "+" + "+".join(tags)
@@ -1922,7 +1937,7 @@ def _stranded_adjective(s: MorphState) -> None:
             continue
         out[idx] = cased.replace("+DB+", "^DB+")
         # the stranded neighbor re-reads as its attributive twin
-        if prv[-1:] != ["Adj"] and "Adj" in stems.get(prv_stem, ()):
+        if prv.tags[-1:] != ("Adj",) and "Adj" in stems.get(prv_stem, ()):
             out[idx - 1] = prv_stem + "+Adj"
 
 
@@ -1937,12 +1952,11 @@ def _dusunce_converb(s: MorphState) -> None:
     for idx in range(1, len(out)):
         if out[idx] != "düşünce+Noun+A3sg+Pnon+Nom":
             continue
-        prv = set(_tag_split(out[idx - 1]))
-        if not ({"Noun", "Nom"} <= prv or {"Noun", "Acc"} <= prv):
+        prv = analysis_tags(out[idx - 1]).tagset
+        if not {"Noun", "Nom"} <= prv:
             continue
-        if any("Verb" in _tag_split(out[j])
-               and _FINITE_TAGS & set(_tag_split(out[j]))
-               for j in range(idx + 1, len(out))):
+        if any("Verb" in t and _FINITE_TAGS & t
+               for t in (analysis_tags(a).tagset for a in out[idx + 1:])):
             out[idx] = "düş+Verb+Pos+When"
 
 
@@ -1955,12 +1969,11 @@ def _dusunce_converb(s: MorphState) -> None:
 def _phase_event_nominal(s: MorphState) -> None:
     out, tokens = s.analyses, s.tokens
     for idx in range(len(out) - 1):
-        parts = _tag_split(out[idx])
-        if parts[-1:] != ["Dat"] or parts[0:1] == ["Verb"]:
+        parts = analysis_tags(out[idx]).tags
+        if parts[-1:] != ("Dat",):
             continue
-        nxt = _tag_split(out[idx + 1])
-        if "Verb" not in nxt or nxt[0] not in ("bit", "başla", "sür",
-                                               "tamamlan", "uza"):
+        nxt = analysis_tags(out[idx + 1])
+        if nxt.tags[0] not in ("bit", "başla", "sür", "tamamlan", "uza"):
             continue
         inf2 = next(
             (root + "+" + "+".join(tags).replace("+DB+", "^DB+")
@@ -1977,28 +1990,20 @@ def _phase_event_nominal(s: MorphState) -> None:
 # the Acc-object segmentation when the clause already has a subject
 # (Yetkililer MERKEZİ kapattı; Rehber TARİHİ anlatıyor): an
 # adjective cannot modify a finite verb, and the manner-adverb
-# reading does not exist for this closed class.  Copular/light verbs
-# keep the predicative adjective (resmi OLDU).
+# reading does not exist for this closed class.
 def _loan_i_object(s: MorphState) -> None:
     out, tokens, lows = s.analyses, s.tokens, s.lows
     for idx in range(1, len(out) - 1):
         low = lows[idx]
         if low not in _LOAN_I_ACC_ADJS or out[idx] != low + "+Adj":
             continue
-        nxt = _tag_split(out[idx + 1])
-        if ("Verb" not in nxt
-                or nxt[0] in ("et", "ol", "kıl", "bulun", "gel",
-                              "görün", "dur", "kal", "say", "ver",
-                              "yap", "al")
-                # zero-copula predicates are not verb hosts for an
-                # object; voice/causative derivations (kapattı) are
-                or "Zero" in nxt
-                or not _FINITE_TAGS & set(nxt)):
+        nxt = analysis_tags(out[idx + 1])
+        # zero-copula predicates are not verb hosts for an object;
+        # voice/causative derivations (kapattı) are
+        if "Zero" in nxt.tagset or not _FINITE_TAGS & nxt.tagset:
             continue
-        if not any(
-            "Noun" in _tag_split(o) and "Nom" in _tag_split(o)
-            for o in out[:idx]
-        ):
+        if not any({"Noun", "Nom"} <= analysis_tags(o).tagset
+                   for o in out[:idx]):
             continue
         acc = next(
             (f"{root}+" + "+".join(tags)
@@ -2022,21 +2027,13 @@ def _loan_i_attributive(s: MorphState) -> None:
         low = lows[idx]
         if low not in ("askeri", "resmi", "dini", "madeni"):
             continue
-        parts = _tag_split(out[idx])
-        if parts[0] not in ("asker", "resim", "din", "maden") \
-                or "P3sg" not in parts:
+        cur = analysis_tags(out[idx])
+        if "P3sg" not in cur.tagset:
             continue
         # the HOST test reads the final derivation group's PoS, so a
         # deverbal noun host counts (resmi AÇILIŞLA başladı: açılış =
         # aç+Pass+Inf3 ends Noun)
-        nxt_parts = _tag_split(out[idx + 1])
-        if "DB" in nxt_parts:
-            last_db = len(nxt_parts) - 1 - nxt_parts[::-1].index("DB")
-            nxt_pos = nxt_parts[last_db + 1] \
-                if last_db + 1 < len(nxt_parts) else ""
-        else:
-            nxt_pos = nxt_parts[1] if len(nxt_parts) > 1 else ""
-        if nxt_pos == "Noun":
+        if analysis_tags(out[idx + 1]).final_pos == "Noun":
             out[idx] = low + "+Adj"
 
 
@@ -2050,20 +2047,17 @@ def _dual_stem_attributive(s: MorphState) -> None:
     stems = _patched_stem_dict()
     for idx in range(1, len(out) - 1):
         low = lows[idx]
-        parts = _tag_split(out[idx])
-        if not (parts[0] == low
-                and parts[1:2] == ["Noun"] and "Pnon" in parts
-                and "Nom" in parts and "A3sg" in parts
+        cur = analysis_tags(out[idx])
+        if not (cur.tags[0] == low
+                and cur.tags[1:2] == ("Noun",)
+                and {"Pnon", "Nom", "A3sg"} <= cur.tagset
                 and "Adj" in stems.get(low, ())):
             continue
-        nxt = _tag_split(out[idx + 1])
-        if not ("A3pl" in nxt and "P3sg" in nxt and "Nom" in nxt
-                and "Noun" in nxt):
+        if not ({"A3pl", "P3sg", "Nom", "Noun"}
+                <= analysis_tags(out[idx + 1]).tagset):
             continue
-        if not any(
-            "Noun" in _tag_split(o) and "Nom" in _tag_split(o)
-            for o in out[:idx]
-        ):
+        if not any({"Noun", "Nom"} <= analysis_tags(o).tagset
+                   for o in out[:idx]):
             continue
         acc = next(
             (f"{root}+" + "+".join(tags)
@@ -2090,11 +2084,10 @@ def _adverb_attributive(s: MorphState) -> None:
             continue
         if "Adj" not in stems.get(low, ()):
             continue
-        nxt_parts = _tag_split(out[idx + 1])
-        if ("Noun" in nxt_parts and "Verb" not in nxt_parts
-                and "Pnon" in nxt_parts
-                and ("Nom" in nxt_parts
-                     or not any(c in nxt_parts for c in _CASE_TAGS))):
+        nxt = analysis_tags(out[idx + 1]).tagset
+        if ("Noun" in nxt and "Verb" not in nxt
+                and "Pnon" in nxt
+                and "Nom" in nxt):
             out[idx] = low + "+Adj"
 
 

@@ -29,6 +29,7 @@ from .morphology import (
     _DEGREE_ADVS,
     _GENUINE_IN_FINAL_STEMS,
     _GRAMMAT_ADPS,
+    _LOAN_ADJS,
     _LOAN_I_ACC_ADJS,
     _MATERIAL_NOUNS,
     _MORPH_TO_UPOS,
@@ -36,15 +37,14 @@ from .morphology import (
     _TEMPORAL_ADVS,
     _TEMPORAL_ROOTS,
     _TRANSITIVE_ROOTS,
-    _case_of,
     _engine,
     _is_possessed,
     _real_candidates,
     _typed_gazetteer,
     _unknown_fallback_candidates,
+    analysis_tags,
     py_analyze_tokens,
     to_lower,
-    upos_from_analysis,
 )
 
 # lexicalized terrain/ground -lIk ADJECTIVES (dictionary adjectives, not
@@ -165,12 +165,6 @@ _LEX_PRONOUNS = {
     "onlar", "onları", "onlara", "onların", "onlarla", "onlardan",
 }
 
-# frequent adjectives the reference stem list tags Noun-only (net,
-# direkt, kalabalık): the vendored lexicon cannot be edited (candidate-
-# generator parity), so the ADJUSTED-POS layer supplies the adjectival
-# reading for the bare uninflected surface / zero-copula predicate
-_LOAN_ADJS = {"net", "komple", "direkt", "süper", "ekstra", "kalabalık"}
-
 # core qualitative adjectives (Turkish grammar's primary nitelik
 # sıfatları): citation-form adjectives so frequent that their accidental
 # P3sg segmentation homographs (yeni = yen+P3sg 'its sleeve') are
@@ -185,34 +179,6 @@ _CORE_ADJS = {
     # an attributive use into a chain link (Bahçıvan KURU dalları kesti)
     "kuru",
 }
-
-
-def _zero_cop_class(analysis: str) -> str:
-    """Lexical class of a zero-copula predicate: "Adj" when the ROOT
-    segment is adjectival (soğuk+Adj^DB+Noun...^DB+Verb+Zero — UD keeps
-    the adjectival predicate reading) or the root is a curated
-    Noun-only-lexicon adjective; "Noun" when the pre-copula segment is
-    nominal (evdeydi, öğretmenim); "" otherwise.  Root segments carry
-    their POS at index 1, later ^DB segments at index 0."""
-    gs = analysis.replace("^", "+").split("+DB+")
-    if len(gs) < 2:
-        return ""
-    pre = gs[-2]
-    parts = pre.split("+")
-    pre_set = set(parts)
-    # the adjectival root only shines through an intermediate BARE
-    # nominal (soğuktu: Adj -> Noun+Pnon+Nom -> Zero); a case/possessive-
-    # marked nominal is a real nominal predicate (yaşındayım: P3sg+Loc)
-    pre_bare = {"Pnon", "Nom"} <= pre_set
-    if pre_bare and (
-        gs[0].split("+")[1:2] == ["Adj"]
-        or to_lower(gs[0].split("+")[0]) in _LOAN_ADJS
-    ):
-        return "Adj"
-    pos = parts[1] if len(gs) == 2 and len(parts) > 1 else parts[0]
-    if pos == "Adj":
-        return "Adj"
-    return "Noun" if pos in ("Noun", "Num") else ""
 
 
 @lru_cache(maxsize=50_000)
@@ -251,11 +217,12 @@ class ParseState:
     """One sentence as the UPOS and parse rules see it, built once.
 
     Holds the tokens and analyses; each per-token feature, derived once
-    (``lows``, ``tagsets``, ``roots`` and the analysis's own case and
-    possession, ``base_case`` / ``base_poss``); the mutable ``upos``,
-    ``eff_case``, ``eff_poss``, ``heads`` and ``rels``; and the clause
-    scalars the parse rules set for the rules after them.  A rule binds
-    the fields it reads to locals on entry."""
+    (``lows``; from each analysis's ``morphology.AnalysisTags`` record its
+    ``tagsets``, ``roots``, own case ``base_case`` and ``morph_upos``; and
+    the possession ``base_poss``, which reads the surface too); the
+    mutable ``upos``, ``eff_case``, ``eff_poss``, ``heads`` and ``rels``;
+    and the clause scalars the parse rules set for the rules after them.
+    A rule binds the fields it reads to locals on entry."""
 
     __slots__ = (
         "tokens", "analyses", "n", "lows", "tagsets", "roots", "base_case",
@@ -270,19 +237,16 @@ class ParseState:
         n = self.n = len(tokens)
         self.tokens, self.analyses = tokens, analyses
         self.lows = [to_lower(t) for t in tokens]
-        tagsets = self.tagsets = [set(a.replace("^", "+").split("+"))
-                                  for a in analyses]
-        parts = [a.split("+") for a in analyses]
-        self.roots = [p[0] for p in parts]
-        # the case reads the "+"-split tags, where a "Nom^DB" group is no
-        # Nom; the possessive reads the "^"-split ``tagsets``
-        self.base_case = [_case_of(set(p)) for p in parts]
+        recs = [analysis_tags(a) for a in analyses]
+        tagsets = self.tagsets = [r.tagset for r in recs]
+        self.roots = [r.root for r in recs]
+        self.base_case = [r.case for r in recs]
+        # the possessive reads the surface too, so it is per token
         self.base_poss = [_is_possessed(tokens[i], tagsets[i])
                           for i in range(n)]
         # the morph-derived UPOS, which some UPOS rules read after ``upos``
         # has moved on
-        morph_upos = self.morph_upos = [upos_from_analysis(a)
-                                        for a in analyses]
+        morph_upos = self.morph_upos = [r.upos for r in recs]
         self.upos = list(morph_upos)
         self.has_finite_verb = any(
             u == "VERB" and not tagsets[i] & _SUBORD_TAGS
@@ -378,7 +342,7 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
     elif (
         upos[i] == "ADJ"
         and i == 0
-        and analyses[i].count("+") == 1
+        and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
         and i + 1 < n
         and upos[i + 1] in ("NOUN", "PROPN")
         and base_case[i + 1] in ("Dat", "Loc", "Abl", "Ins")
@@ -412,7 +376,7 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
     elif (
         upos[i] == "ADJ"
         and i == 0
-        and analyses[i].count("+") == 1
+        and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
         and i + 1 < n
         and upos[i + 1] in ("NOUN", "PROPN")
         and base_case[i + 1] == "Gen"
@@ -437,7 +401,7 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
     elif (
         upos[i] == "VERB"
         and "Zero" in tags
-        and _zero_cop_class(analyses[i]) == "Adj"
+        and analysis_tags(analyses[i]).zero_cop_class == "Adj"
         and roots[i] not in ("var", "yok")
         and not tags & {"A1sg", "A2sg", "A1pl", "A2pl"}
     ):
@@ -448,7 +412,7 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
     elif (
         upos[i] == "VERB"
         and "Zero" in tags
-        and _zero_cop_class(analyses[i]) == "Noun"
+        and analysis_tags(analyses[i]).zero_cop_class == "Noun"
         and roots[i] not in ("var", "yok")
         # a live finite-verb reading means the zero-copula nominal
         # is a misanalysis (alındı = al+Pass+Past, not 'was a
@@ -1110,8 +1074,7 @@ def _chain_link_noun(s):
     for i in range(1, n - 1):
         if (
             upos[i] == "ADJ"
-            and analyses[i].count("+") == 1
-            and analyses[i].endswith("+Adj")
+            and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and "p3nom" in _readings(tokens[i])
             and lows[i] not in _CORE_ADJS
             # the asker/resim/din loan-î trio reads attributive before a
@@ -1137,8 +1100,7 @@ def _loan_i_object(s):
     for i in range(1, n - 1):
         if (
             upos[i] == "ADJ"
-            and analyses[i].count("+") == 1
-            and analyses[i].endswith("+Adj")
+            and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and lows[i] in _LOAN_I_ACC_ADJS
             and upos[i + 1] in ("NOUN", "PROPN")
             and base_case[i + 1] in ("Dat", "Loc", "Abl", "Ins")
@@ -1176,8 +1138,7 @@ def _possessed_locative(s):
     for i in range(1, n - 1):
         if (
             upos[i] == "ADJ"
-            and analyses[i].count("+") == 1
-            and analyses[i].endswith("+Adj")
+            and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and "p3loc" in _readings(tokens[i])
             and (upos[i + 1] == "VERB"
                  or (i + 2 < n and upos[i + 1] == "NOUN"
@@ -1216,13 +1177,13 @@ def _loan_i_attributive(s):
 # bir adımdır); "toplantı tarihi bir gün önce" keeps the date
 # reading (gün is temporal)
 def _loan_i_before_bir(s):
-    tokens, analyses, n, lows, tagsets = s.tokens, s.analyses, s.n, s.lows, s.tagsets
+    tokens, n, lows, tagsets = s.tokens, s.n, s.lows, s.tagsets
     roots, upos = s.roots, s.upos
     for i in range(1, n - 2):
         if (
             upos[i] == "NOUN"
             and roots[i] != lows[i]
-            and "Nom" in analyses[i]
+            and "Nom" in tagsets[i]
             and tagsets[i] & {"P3sg", "P3pl"}
             and "bare_adj" in _readings(tokens[i])
             and lows[i + 1] == "bir"
@@ -1266,13 +1227,13 @@ def _agentive_nouns(s):
 # determiner "bir" + a nominal is attributive (İLERİ bir tarihe
 # erteledi): a noun cannot modify across the determiner
 def _adjective_before_bir(s):
-    tokens, analyses, n, lows, roots = s.tokens, s.analyses, s.n, s.lows, s.roots
-    upos = s.upos
+    tokens, n, lows, tagsets = s.tokens, s.n, s.lows, s.tagsets
+    roots, upos = s.roots, s.upos
     for i in range(n - 2):
         if (
             upos[i] == "NOUN"
             and roots[i] == lows[i]
-            and "Pnon" in analyses[i] and "Nom" in analyses[i]
+            and {"Pnon", "Nom"} <= tagsets[i]
             and "bare_adj" in _readings(tokens[i])
             and lows[i + 1] == "bir"
             and upos[i + 1] == "DET"
@@ -1302,13 +1263,13 @@ def _giderek_adverb(s):
 # modifiers need possessed heads (izafet), adjectives do not
 # (GENÇ yüzücü seçildi -> amod; maaş ARTIŞI istedi keeps the compound)
 def _attributive_before_bare(s):
-    tokens, analyses, n, lows, tagsets = s.tokens, s.analyses, s.n, s.lows, s.tagsets
+    tokens, n, lows, tagsets = s.tokens, s.n, s.lows, s.tagsets
     roots, base_case, base_poss, upos = s.roots, s.base_case, s.base_poss, s.upos
     for i in range(n - 1):
         if (
             upos[i] == "NOUN"
             and roots[i] == lows[i]
-            and "Pnon" in analyses[i] and "Nom" in analyses[i]
+            and {"Pnon", "Nom"} <= tagsets[i]
             and "bare_adj" in _readings(tokens[i])
             and upos[i + 1] == "NOUN"
             and base_case[i + 1] in ("Nom", "")
@@ -1374,12 +1335,12 @@ def _unknown_li_adjectives(s):
 # whose coordinated tail is itself a zero-copula clause — is the
 # adjective (Yemekler TAZE ama servis yavaş.)
 def _first_conjunct_adjective(s):
-    tokens, analyses, n, lows, roots = s.tokens, s.analyses, s.n, s.lows, s.roots
-    base_case, upos = s.base_case, s.upos
+    tokens, n, lows, tagsets = s.tokens, s.n, s.lows, s.tagsets
+    roots, base_case, upos = s.roots, s.base_case, s.upos
     for i in range(1, n - 1):
         if (upos[i] == "NOUN"
                 and roots[i] == lows[i]
-                and "Pnon" in analyses[i] and "Nom" in analyses[i]
+                and {"Pnon", "Nom"} <= tagsets[i]
                 and "bare_adj" in _readings(tokens[i])
                 and upos[i - 1] in ("NOUN", "PROPN")
                 and base_case[i - 1] in ("Nom", "")
@@ -1441,12 +1402,12 @@ def _reduplicated_nouns(s):
 # (geri döndü, geri dönüştürerek, geri verdi) — the noun reading
 # needs case or possession
 def _geri_particle(s):
-    analyses, n, lows, upos = s.analyses, s.n, s.lows, s.upos
+    n, lows, tagsets, upos = s.n, s.lows, s.tagsets, s.upos
     for i in range(n - 1):
         if (
             upos[i] == "NOUN"
             and lows[i] == "geri"
-            and "Pnon" in analyses[i] and "Nom" in analyses[i]
+            and {"Pnon", "Nom"} <= tagsets[i]
             and upos[i + 1] == "VERB"
         ):
             upos[i] = "ADV"
@@ -1510,8 +1471,7 @@ def _material_nouns(s):
     for i in range(n - 1):
         if (
             upos[i] == "ADJ"
-            and analyses[i].count("+") == 1
-            and analyses[i].endswith("+Adj")
+            and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and lows[i] in _MATERIAL_NOUNS
             and upos[i + 1] in ("NOUN", "PROPN")
         ):
@@ -1558,7 +1518,7 @@ pos_tags = arrow_map(py_pos_tags, ArrayType(StringType()))
 def pos_from_analyses(col: Column | str) -> Column:
     """Derive UPOS **natively** from an already-materialized analyses
     column (array<string>) — no second Python pass when morphology ran
-    upstream.  Same semantics as ``upos_from_analysis``, expressed with
+    upstream.  Same semantics as ``AnalysisTags.upos``, expressed with
     JVM string functions inside whole-stage codegen."""
     c = F.col(col) if isinstance(col, str) else col
     return F.transform(c, _upos_sql)
