@@ -411,7 +411,7 @@ def _base(token: str) -> str:
 def _is_possessed(token: str, tags: set) -> bool:
     """Whether ``token``'s analysis, split on "+" and "^" into ``tags``,
     is possessed."""
-    if tags & {"P1sg", "P2sg", "P3sg", "P1pl", "P2pl", "P3pl"}:
+    if tags & _POSS_TAGS:
         return True
     # apostrophe-Prop analyses absorb the possessive into the root
     # (Belediyesi'nin -> belediyesi+...+Gen): recover P3sg from the
@@ -1591,9 +1591,10 @@ _POSS_TAGS = frozenset({"P1sg", "P2sg", "P3sg", "P1pl", "P2pl", "P3pl"})
 _LOAN_ADJS = {"net", "komple", "direkt", "süper", "ekstra", "kalabalık"}
 
 # analysis strings whose record is kept (LRU): the post-passes and the
-# parse state re-read each sentence's analyses, and most analyses of
-# open text repeat across sentences
-_ANALYSIS_TAGS_MEMO_MAX = 4096
+# parse state re-read each sentence's analyses after the selection pass
+# has built their records.  A record takes about 1.5 KB, so this bound
+# holds the worker memory the memos it replaced held (about 1.3 MB)
+_ANALYSIS_TAGS_MEMO_MAX = 1024
 
 
 class AnalysisTags(NamedTuple):
