@@ -6,8 +6,8 @@ from vnlp_spark.operators.dep_parser import py_parse_sentence, py_parse_tokens
 from vnlp_spark.operators.morphology import analysis_tags, py_analyze_tokens
 from vnlp_spark.operators.ner import py_ner_mentions, py_ner_pairs
 from vnlp_spark.operators.pos import pos_from_analyses, py_pos_pairs
-from vnlp_spark.plans.gold_ud_blind_data import available_splits, load_split
 from vnlp_spark.operators.sentiment import py_sentiment, py_sentiment_proba
+from vnlp_spark.plans.gold_ud_blind_data import available_splits, load_split
 
 NER_SENT = (
     "Benim adım Melikşah, 29 yaşındayım, İstanbul'da ikamet ediyorum "
@@ -41,7 +41,6 @@ def test_pos_golden():
         ("Astra'sı", "PROPN"), ("vardı", "VERB"), (".", "PUNCT"),
     ]
     assert py_pos_pairs(py_treebank_tokenize("Oğuz'un kırmızı bir Astra'sı vardı.")) == gold
-
 
 
 def test_native_upos_matches_analysis_tags(spark):
