@@ -102,10 +102,6 @@ _TIME_DETS = {
     "ilk", "aynı",
 }
 
-# nominal halves of gel-support constructions (GALİP geldi, denk
-# geldi): compound, never the subject/oblique of motion gel-
-_GEL_SUPPORT_NOMINALS = {"galip", "mağlup", "denk", "rast", "üstün"}
-
 # verbs with a conventionalized INTRANSITIVE weather/celestial sense
 # next to a weather-noun subject (güneş AÇINCA, hava AÇTI, gün DOĞDU),
 # even though the same root is transitive elsewhere (kapıyı açtı)
@@ -201,7 +197,7 @@ def _intrans(s, x: int) -> bool:
 
 # --- predicates and root -------------------------------------------
 def _clause_predicates(s):
-    n, tagsets, roots, upos = s.n, s.tagsets, s.roots, s.upos
+    n, tagsets, upos = s.n, s.tagsets, s.upos
     subord = [bool(tagsets[i] & _SUBORD_TAGS) for i in range(n)]
     converb = [bool(tagsets[i] & _CONVERB_TAGS) for i in range(n)]
     # -sA conditionals are protasis clauses, never the matrix predicate
@@ -209,7 +205,6 @@ def _clause_predicates(s):
     # a sentence whose only verb is conditional keeps it as root
     cond = [
         upos[i] == "VERB" and "Cond" in tagsets[i]
-        and not subord[i] and not converb[i]
         for i in range(n)
     ]
     # V+Aor V+Neg+Aor same-stem adjacent pair is the 'as soon as'
@@ -222,9 +217,6 @@ def _clause_predicates(s):
             upos[_i] == "VERB" and upos[_i + 1] == "VERB"
             and "Aor" in tagsets[_i] and "Pos" in tagsets[_i]
             and "Aor" in tagsets[_i + 1] and "Neg" in tagsets[_i + 1]
-            and not (tagsets[_i] | tagsets[_i + 1]) & _SUBORD_TAGS
-            and roots[_i] == roots[_i + 1]
-            and any(upos[_k] == "VERB" for _k in range(_i + 2, n))
         ):
             converb[_i] = True
             converb[_i + 1] = True
@@ -267,8 +259,7 @@ def _choose_root(s):
         # (KURUMUŞ dallar toplandı; YAPILACAK yatırımlar açıklanacak)
         if (
             len(preds) >= 2 and preds[0] == 0
-            and upos[0] == "VERB"
-            and tagsets[0] & {"Narr", "Fut"} and "A3sg" in tagsets[0]
+            and tagsets[0] & {"Narr", "Fut"}
             and not tagsets[0] & {"Past", "Cond", "Neg"}
             and upos[1] in ("NOUN", "PROPN")
             and base_case[1] in ("Nom", "")
@@ -283,8 +274,6 @@ def _choose_root(s):
         for q in list(preds):
             if (
                 q > 0 and q != preds[-1]
-                and any(f > q for f in preds)
-                and upos[q] == "VERB"
                 and ("Pass" in tagsets[q]
                      # ... or an UNACCUSATIVE root: its Narr participle
                      # is the productive prenominal resultative (erimiş
@@ -293,11 +282,9 @@ def _choose_root(s):
                      # and the matrix must be transitive, so a genuine
                      # evidential chain keeps its own clause
                      or (roots[q] in _INTRANSITIVE_ROOTS
-                         and roots[q] not in ("yağ", "es")
                          and any(f > q and roots[f] in
                                  _TRANSITIVE_ROOTS for f in preds)))
-                and tagsets[q] & {"Narr", "Fut"} and "A3sg" in tagsets[q]
-                and not tagsets[q] & {"Past", "Cond", "Neg"}
+                and tagsets[q] & {"Narr", "Fut"}
                 and q + 1 < n
                 and upos[q + 1] in ("NOUN", "PROPN")
                 and base_case[q + 1] in ("Nom", "", "Acc")
@@ -318,8 +305,6 @@ def _choose_root(s):
             i for i in range(n)
             if upos[i] == "VERB" and "PastPart" in tagsets[i]
             and base_case[i] == "Loc"
-            and not (i + 1 < n
-                     and lows[i + 1] in ("sonra", "önce"))
         ]
         # conditional protasis clauses likewise host their own subject
         # (Yağmur yağarsa -> Yağmur is yağarsa's nsubj)
@@ -411,8 +396,8 @@ def _fixed_expressions(s):
 # ihracatı conj->üretimi).  The first conjunct must NOT take the
 # generic nominal conj-back rule (it has no left conjunct).
 def _correlatives(s):
-    n, lows, tagsets, base_case = s.n, s.lows, s.tagsets, s.base_case
-    base_poss, upos, heads, rels = s.base_poss, s.upos, s.heads, s.rels
+    n, lows, base_case = s.n, s.lows, s.base_case
+    upos, heads, rels = s.upos, s.heads, s.rels
     corr_first = set()
     corr_cc_idx = set()
     _corr_groups = {}
@@ -431,7 +416,6 @@ def _correlatives(s):
         # ihracatı artırdı) have no verb before the second particle.
         _clausal = any(
             upos[j] == "VERB"
-            and not (tagsets[j] & (_SUBORD_TAGS | _CONVERB_TAGS))
             for j in range(_idxs[0] + 1, _idxs[1])
         )
         _conjs = []
@@ -439,8 +423,7 @@ def _correlatives(s):
             if _clausal:
                 c = next(
                     (j for j in range(k + 1, n)
-                     if upos[j] == "VERB"
-                     and not (tagsets[j] & (_SUBORD_TAGS | _CONVERB_TAGS))),
+                     if upos[j] == "VERB"),
                     None,
                 )
             else:
@@ -452,11 +435,9 @@ def _correlatives(s):
                 # feeding a possessed izafet head makes the HEAD the
                 # conjunct (hem personel SAYISINI hem yatak
                 # KAPASİTESİNİ artırdı)
-                if (c is not None and upos[c] == "NOUN"
+                if (c is not None
                         and base_case[c] in ("Nom", "")
-                        and not base_poss[c]
-                        and c + 1 < n and upos[c + 1] == "NOUN"
-                        and base_poss[c + 1]):
+                        and c + 1 < n and upos[c + 1] == "NOUN"):
                     c += 1
             _conjs.append(c)
         if any(c is None for c in _conjs) or len(set(_conjs)) < 2:
@@ -467,7 +448,7 @@ def _correlatives(s):
         if heads[_idxs[0]] == -1:
             heads[_idxs[0]], rels[_idxs[0]] = c1 + 1, "cc"
         for k, c in zip(_idxs[1:], _conjs[1:]):
-            if c != c1 and heads[c] == -1 and upos[c] != "VERB":
+            if upos[c] != "VERB":
                 heads[c], rels[c] = c1 + 1, "conj"
     s.corr_first, s.corr_cc_idx = corr_first, corr_cc_idx
 
@@ -616,19 +597,13 @@ def _reread_chain_link(s):
 # verb with an object to their left are the locative adverbial
 # (olayları YERİNDE inceledi = yer+P3sg+Loc, not yerinde 'apt')
 def _reread_possessed_locative(s):
-    tokens, analyses, n, roots, upos = s.tokens, s.analyses, s.n, s.roots, s.upos
+    tokens, analyses, n, upos = s.tokens, s.analyses, s.n, s.upos
     eff_case, eff_poss = s.eff_case, s.eff_poss
     for i in range(1, n - 1):
         if (
             upos[i] in ("ADJ", "NOUN")
             and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and "p3loc" in _readings(tokens[i])
-            and (upos[i + 1] == "VERB"
-                 # ... or a light-verb complex (yerinde TESPİT ETTİ)
-                 or (i + 2 < n and upos[i + 1] == "NOUN"
-                     and upos[i + 2] == "VERB"
-                     and roots[i + 2] in ("et", "yap", "ol")))
-            and upos[i - 1] in _NOMINAL
         ):
             upos[i] = "NOUN"
             eff_case[i], eff_poss[i] = "Loc", True
@@ -639,7 +614,7 @@ def _reread_possessed_locative(s):
 # (MAHALLE sakinleriyle aradı -> mahalle nmod, one oblique, not two
 # stacked same-case obliques)
 def _reread_same_case_compound(s):
-    tokens, n, lows, roots, upos = s.tokens, s.n, s.lows, s.roots, s.upos
+    tokens, n, upos = s.tokens, s.n, s.upos
     eff_case, eff_poss = s.eff_case, s.eff_poss
     for i in range(n - 1):
         if (
@@ -647,7 +622,6 @@ def _reread_same_case_compound(s):
             and eff_case[i] in ("Dat", "Loc", "Abl", "Ins")
             and not eff_poss[i]
             and "bare_noun" in _readings(tokens[i])
-            and roots[i] != lows[i]
             and upos[i + 1] in _NOMINAL
             and eff_poss[i + 1]
             and eff_case[i + 1] == eff_case[i]
@@ -672,7 +646,7 @@ def _izafet_oblique_mod(s, j: int) -> bool:
     )
 
 def _material_mod(s, j: int) -> bool:
-    n, roots, upos, eff_case, eff_poss = s.n, s.roots, s.upos, s.eff_case, s.eff_poss
+    n, roots, upos, eff_case = s.n, s.roots, s.upos, s.eff_case
     # material/degree juxtaposition feeding a case-marked UNPOSSESSED
     # host (taş FIRINDA pişirdi): one oblique phrase, transparent for
     # object adjacency — mirrors the material-noun nmod arc rule
@@ -683,7 +657,6 @@ def _material_mod(s, j: int) -> bool:
         and j + 1 < n
         and upos[j + 1] in _NOMINAL
         and eff_case[j + 1] in ("Dat", "Loc", "Abl", "Ins")
-        and not eff_poss[j + 1]
     )
 
 def _gen_oblique_mod(s, j: int, v: int) -> bool:
@@ -705,7 +678,7 @@ def _gen_oblique_mod(s, j: int, v: int) -> bool:
     )
 
 def _adjacent_to_verb(s, i: int, v: int) -> bool:
-    n, lows, roots, upos, eff_case = s.n, s.lows, s.roots, s.upos, s.eff_case
+    n, roots, upos, eff_case = s.n, s.roots, s.upos, s.eff_case
     for j in range(i + 1, v):
         if upos[j] in _TRANSPARENT:
             continue
@@ -718,12 +691,7 @@ def _adjacent_to_verb(s, i: int, v: int) -> bool:
         if _gen_oblique_mod(s, j, v):
             continue
         if (upos[j] in _NOMINAL and j + 1 < n
-                and upos[j + 1] == "ADP"
-                # ... except the concessive class, whose frame
-                # signals a compound subject (sakatlığına RAĞMEN
-                # oynadı keeps the izafet reading)
-                and lows[j + 1] not in ("rağmen",
-                                                    "karşın")):
+                and upos[j + 1] == "ADP"):
             continue  # a bare-Nom ADP complement is inside an
             # adjunct phrase (yazışmaları GÜVENLİK İÇİN şifreledi)
         if upos[j] == "NOUN" and roots[j] in _TEMPORAL_ROOTS:
@@ -785,8 +753,6 @@ def _acc_nom_gate(s, i: int) -> Optional[int]:
         i > 0 and eff_case[i - 1] == "Gen"
         and i + 1 < n and upos[i + 1] == "VERB" and subord[i + 1]
         and tagsets[i + 1] & {"P3sg", "P3pl"}
-        and roots[i + 1] in _TRANSITIVE_ROOTS
-        and "Pass" not in tagsets[i + 1]
     ):
         # genitive + ambiguous -(s)I noun + P3sg-agreeing TRANSITIVE
         # nominalization directly after: the nominalization's own
@@ -859,7 +825,6 @@ def _acc_nom_gate(s, i: int) -> Optional[int]:
         and not eff_poss[i - 2]
         and roots[i - 2] not in _TEMPORAL_ROOTS
         and roots[v] in _TRANSITIVE_ROOTS
-        and "Pass" not in tagsets[v]
     ):
         # the left neighbor already heads its own bare-modifier
         # izafet (kar YAĞIŞI): a possessed-Nom head cannot itself
@@ -874,7 +839,7 @@ def _acc_nom_gate(s, i: int) -> Optional[int]:
 def _acc_nom_weigh(s, i: int, v: int) -> None:
     tokens, n, lows, tagsets, roots = s.tokens, s.n, s.lows, s.tagsets, s.roots
     base_case, upos, eff_case, eff_poss = s.base_case, s.upos, s.eff_case, s.eff_poss
-    subord, finite, copular, preds = s.subord, s.finite, s.copular, s.preds
+    finite, copular = s.finite, s.copular
     juxt_mod = s.juxt_mod
     prev_bare_mod = (
         i > 0
@@ -888,8 +853,7 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
         and roots[i - 1] not in _MATERIAL_NOUNS
         # a plural modifier does not license izafet
         and "A3pl" not in tagsets[i - 1]
-        and not (roots[i - 1] in _TEMPORAL_ROOTS
-                 and i > 1 and upos[i - 2] == "DET")
+        and roots[i - 1] not in _TEMPORAL_ROOTS
         # the name of a title run is not a compound modifier
         # (Gazeteci YILDIZ soruları ... yanıtladı: Yıldız stays in
         # the mention, the possessed nominal is the clause object)
@@ -914,7 +878,6 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
     obligate_v = "Caus" in tagsets[v] or (
         v > 0 and upos[v - 1] == "NOUN" and v - 1 != i
         and eff_case[v - 1] in ("Nom", "") and roots[v] == "et"
-        and roots[v - 1] not in _INTRANS_LIGHT_NOMINALS
     )
     transitive_v = (
         roots[v] in _TRANSITIVE_ROOTS
@@ -943,10 +906,7 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
         i + 2 < n
         and upos[i + 1] == "CCONJ"
         and lows[i + 1] in ("ve", "veya", "ya")
-        and upos[i + 2] in _NOMINAL
         and base_case[i + 2] == "Acc"
-        and transitive_v
-        and "Pass" not in tagsets[v]
     ):
         # an ambiguous nominal coordinated with an overt/resolved
         # Acc conjunct shares its case: both are the transitive
@@ -962,15 +922,12 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
         # (piknik ateşi YAKMAK yasak) there is no subject slot the
         # bare modifier could fill — an overt infinitive subject
         # would be genitive — so the compound reading stands
-        or (copular and subord[v]
-            and tagsets[v] & {"Inf", "Inf1", "Inf2", "Inf3"})
+        or copular
     ):
         eff_case[i], eff_poss[i] = "Nom", True
     elif (roots[i] in _TEMPORAL_ROOTS
           and "A3pl" in tagsets[i]
           and any(eff_case[j] == "Acc"
-                  and not any(pp != v and min(j, v) < pp < max(j, v)
-                              for pp in preds)
                   for j in range(n) if j != i)):
         # distributive-plural time expression with the clause's
         # object slot already filled (kapısını GECELERİ kilitledi =
@@ -1069,7 +1026,7 @@ def _strict_adjacency(s, i: int, v: int) -> bool:
 # clause argument (kulüp başkanı Erdoğan'ı eleştirdi)
 def _title_flat_name(s):
     tokens, n, tagsets, roots = s.tokens, s.n, s.tagsets, s.roots
-    base_case, upos, heads, rels = s.base_case, s.upos, s.heads, s.rels
+    upos, heads, rels = s.upos, s.heads, s.rels
     for _i in range(1, n):
         if (
             heads[_i] == -1
@@ -1078,8 +1035,7 @@ def _title_flat_name(s):
             and upos[_i - 1] == "NOUN"
             and roots[_i - 1] in _TITLES
             and tagsets[_i - 1] & {"P3sg", "P3pl"}
-            and not ("'" in tokens[_i]
-                     and base_case[_i] not in ("Nom", ""))
+            and "'" not in tokens[_i]
         ):
             heads[_i], rels[_i] = _i, "flat"
 
@@ -1178,9 +1134,7 @@ def _verb_attachment(s):
             fin = next((p for p in finite if p > i), root)
             emb = next(
                 (j for j in range(i + 1, fin)
-                 if upos[j] == "VERB" and subord[j]
-                 and tagsets[j] & {"Inf2", "FutPart", "PastPart"}
-                 and base_case[j] in ("Acc", "Dat")),
+                 if upos[j] == "VERB" and subord[j]),
                 None,
             )
             if emb is not None and any(
@@ -1193,13 +1147,7 @@ def _verb_attachment(s):
                     # material (tercih YAPMAYA başladı keeps the
                     # converb on the matrix), and non-adjacent bare
                     # nominals are the matrix's arguments
-                    or (j == emb - 1
-                        and upos[j] == "NOUN"
-                        and base_case[j] in ("Nom", "")
-                        and roots[j] not in _TEMPORAL_ROOTS
-                        and not (roots[emb] in ("et", "yap", "ol",
-                                                   "ver", "al", "kıl")
-                                 and "Pass" not in tagsets[emb]))
+                    or (j == emb - 1 and "Pass" in tagsets[emb])
                     for j in range(i + 1, emb)):
                 heads[i], rels[i] = emb + 1, "advcl"
             else:
@@ -1214,7 +1162,7 @@ def _verb_attachment(s):
             elif "Inf" in tags and i + 1 < n and upos[i + 1] == "ADP":
                 # purpose clause: kazanmak için çalıştı
                 heads[i], rels[i] = p + 1, "advcl"
-            elif "Inf" in tags and case in ("", "Nom"):
+            elif "Inf" in tags:
                 # bare infinitive: complement of a volitional/phasal
                 # matrix verb (çalışmak İSTİYOR -> ccomp); subject of an
                 # impersonal predicate otherwise (çalışmak gerekiyor)
@@ -1222,30 +1170,27 @@ def _verb_attachment(s):
                     "ccomp" if roots[p] in _INF_CCOMP_ROOTS else "csubj"
                 )
                 heads[i], rels[i] = p + 1, rel_inf
-            elif (tags & {"FutPart", "PastPart", "Inf2"}
-                  and case in ("Acc", "Dat")
+            elif (case in ("Acc", "Dat")
                   # -mAsInA rağmen/karşın is the concessive ADVERBIAL
                   # clause (zarar ETMESİNE rağmen sürdürdü), never a
                   # complement
                   and not (i + 1 < n and lows[i + 1] in ("rağmen", "karşın"))):
                 heads[i], rels[i] = p + 1, "ccomp"
-            elif (tags & {"FutPart", "PastPart", "Inf2"}
-                  and case in ("Acc", "Dat")):
+            elif case in ("Acc", "Dat"):
                 heads[i], rels[i] = p + 1, "advcl"
-            elif "Inf2" in tags and case in ("", "Nom"):
+            elif "Inf2" in tags:
                 # bare-Nom -mA nominalization heading the subject slot is
                 # the clausal SUBJECT of the matrix predicate (Projenin
                 # zamanında BİTMESİ herkesi sevindirdi)
                 heads[i], rels[i] = p + 1, "csubj"
             elif (
-                tags & {"PastPart"}
-                and case in ("Abl", "Loc")
+                case in ("Abl", "Loc")
                 and i + 1 < n
                 and lows[i + 1] in ("sonra", "önce")
             ):
                 # temporal adverbial frame: yedikten sonra
                 heads[i], rels[i] = p + 1, "advcl"
-            elif tags & {"PastPart"} and case == "Loc":
+            elif case == "Loc":
                 # -DIğIndA 'when'-clause (ulaştıklarında yağmur
                 # başlamıştı): temporal advcl on the next finite
                 # predicate, like -IncA
@@ -1263,7 +1208,7 @@ def _verb_attachment(s):
             prev_fin = max([v for v in finite if v < i], default=-1)
             ki_c = next(
                 (c for c in range(prev_fin + 1, i)
-                 if upos[c] == "SCONJ" and lows[c] == "ki"),
+                 if upos[c] == "SCONJ"),
                 None,
             )
             if ki_c is not None:
@@ -1345,7 +1290,7 @@ def _compound_walk(s, nom, i: int):
 
 def _function_words(s):
     n, lows, tagsets, upos = s.n, s.lows, s.tagsets, s.upos
-    eff_poss, heads, rels, subord = s.eff_poss, s.heads, s.rels, s.subord
+    heads, rels, subord = s.heads, s.rels, s.subord
     converb, root, preds = s.converb, s.root, s.preds
     for i in range(n):
         if heads[i] != -1:
@@ -1366,7 +1311,6 @@ def _function_words(s):
                 if (
                     prev_w is not None
                     and upos[prev_w] == "CCONJ"
-                    and lows[prev_w] == "ya"
                 ):
                     # the bigram second correlative 'ya da' keeps ya as
                     # the cc and da as its fixed continuation
@@ -1413,8 +1357,6 @@ def _function_words(s):
             if (
                 i > 0
                 and lows[i - 1] == "yüzde"
-                and upos[i - 1] == "NOUN"
-                and not eff_poss[i - 1]
             ):
                 # percentage frame: the measure noun heads its numeral
                 # (yüzde ON arttı -> on nummod yüzde)
@@ -1488,7 +1430,7 @@ def _adverb_head(s, i: int) -> None:
         heads[i], rels[i] = _next_pred(s, i) + 1, "advmod"
 
 def _adjective_head(s, i: int) -> None:
-    n, tagsets, roots, upos, heads = s.n, s.tagsets, s.roots, s.upos, s.heads
+    n, tagsets, upos, heads = s.n, s.tagsets, s.upos, s.heads
     rels, corr_cc_idx = s.rels, s.corr_cc_idx
     j = i - 1
     while j >= 0 and upos[j] == "PUNCT":
@@ -1519,8 +1461,6 @@ def _adjective_head(s, i: int) -> None:
     if (
         i + 1 < n
         and upos[i + 1] == "VERB"
-        and roots[i + 1] in ("ol", "et", "gel", "görün", "dur",
-                                "kal", "tut")
     ):
         # predicative complement of a copular/psych/keep verb
         # (rahatsız oldu, mantıklı geldi)
@@ -1592,9 +1532,7 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
         and eff_case[i + 1] in ("Nom", "")
         and not eff_poss[i + 1]
         and upos[i + 2] in _NOMINAL
-        and eff_poss[i + 2]
-        and i + 1 != vt and i + 2 != vt
-        and not (i + 2 < n and upos[i + 2] == "ADP")
+        and eff_poss[i + 2] and i + 2 != vt
         and any(
             upos[j] in ("PROPN", "PRON")
             or (upos[j] in _NOMINAL
@@ -1622,14 +1560,12 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
         and not eff_poss[i]
         and i + 1 < n
         and upos[i + 1] in ("NOUN", "PROPN")
-        and i + 1 != vt
         # only with the subject slot already claimed further left —
         # a clause-initial material noun is its own argument (Bu
         # İPEK diğerinden daha parlak)
         and any(
             upos[j] in _NOMINAL
             and eff_case[j] in ("Nom", "")
-            and roots[j] not in _TEMPORAL_ROOTS
             for j in range(i)
         )
     ):
@@ -1660,7 +1596,6 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
         and roots[v] in ("et", "ol")
         and "Pass" in tagsets[v]
         and low_root in _INTRANS_LIGHT_NOMINALS
-        and eff_case[i] in ("Nom", "")
     ):
         heads[i], rels[i] = v + 1, "compound"
         return True
@@ -1683,7 +1618,6 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
                                 "kal")
         and tagsets[i + 1] & {"PresPart", "PastPart", "FutPart"}
         and eff_case[i] in ("Nom", "")
-        and not eff_poss[i]
         and (roots[i + 1] != "kal"
              or low_root in ("miras", "yadigar", "emanet",
                              "armağan", "hatıra"))
@@ -1703,8 +1637,6 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
         prev_upos == "ADJ"
         and rels[i - 1] == "amod" and heads[i - 1] == i + 1
         and i - 2 >= 0 and upos[i - 2] == "CCONJ"
-        and lows[i - 2] not in ("de", "da")
-        and i - 2 not in corr_cc_idx
     )
     if ((prev_upos == "CCONJ" and lows[i - 1] not in ("de", "da")
             and i not in corr_first
@@ -1801,9 +1733,7 @@ def _genitive_argument(s, i: int, p: int, vt: int) -> None:
                  # (Takımın erken GELMESİ hocayı şaşırttı —
                  # only an adverb intervenes)
                  or sub_v < nom
-                 or (nom < sub_v and not eff_poss[nom]
-                     and not tagsets[nom]
-                     & {"P1sg", "P2sg", "P1pl", "P2pl"})
+                 or not eff_poss[nom]
                  # an ADJUNCT-cased (Loc/Abl/Ins) possessed
                  # nominal between the genitive and the
                  # nominalization is the clause's adverbial, not
@@ -1813,16 +1743,12 @@ def _genitive_argument(s, i: int, p: int, vt: int) -> None:
                  # head stays the possessed (taraftarların
                  # DESTEĞİNİ unutmayacağını), and another
                  # genitive closer to the nominalization blocks
-                 or (nom < sub_v
-                     and eff_case[nom] in ("Loc", "Abl", "Ins")
-                     and not any(eff_case[k] == "Gen"
-                                 for k in range(i + 1, sub_v)))
+                 or eff_case[nom] in ("Loc", "Abl", "Ins")
                  # fossilized P3sg compounds (yurtdışı, yurtiçi)
                  # never take a genitive possessor: the genitive
                  # is the nominalization's subject
                  # (akademisyenlerin YURTDIŞINA gitmesini)
-                 or (nom < sub_v
-                     and roots[nom] in ("yurtdış", "yurtiç"))
+                 or roots[nom] in ("yurtdış", "yurtiç")
                  # a possessed landing nominal whose P3sg agreement
                  # is already saturated by its own bare compound
                  # modifier (the walk advanced over it) cannot also
@@ -1831,9 +1757,7 @@ def _genitive_argument(s, i: int, p: int, vt: int) -> None:
                  # subject (kuraklığın TARIM ÜRÜNLERİNİ
                  # etkileyeceğini); later genitives keep the
                  # possessor read (tüccarın ÜLKENİN ürünlerini ...)
-                 or (nom < sub_v and walked
-                     and not any(eff_case[k] == "Gen"
-                                 for k in range(i))))
+                 or walked)
         ):
             heads[i], rels[i] = sub_v + 1, "nsubj"
             # the nominalization's subject slot is now filled:
@@ -1886,8 +1810,7 @@ def _oblique_argument(s, i: int, p: int, vt: int, case: str) -> None:
         heads[i], rels[i] = i + 2, "obl"
     elif (
         i == 0
-        and vt is not None and vt != p
-        and upos[vt] == "VERB" and subord[vt]
+        and vt is not None and vt != p and subord[vt]
         and i + 1 < vt
         and upos[i + 1] == "ADV"
     ):
@@ -1904,7 +1827,7 @@ def _oblique_argument(s, i: int, p: int, vt: int, case: str) -> None:
 def _bare_nominal(s, i: int, p: int, v: Optional[int], vt: int) -> None:
     n, lows, tagsets, roots, upos = s.n, s.lows, s.tagsets, s.roots, s.upos
     eff_case, eff_poss, heads, rels = s.eff_case, s.eff_poss, s.heads, s.rels
-    subord, converb, preds = s.subord, s.converb, s.preds
+    subord, converb = s.subord, s.converb
     preverbal = i + 1 == vt
     # a coordinated NP is preverbal as a WHOLE: the first
     # conjunct inherits preverbality from its last conj child
@@ -1971,8 +1894,6 @@ def _bare_nominal(s, i: int, p: int, v: Optional[int], vt: int) -> None:
         and upos[i + 1] == "ADJ"
         and "Rel" in tagsets[i + 1]
         and tagsets[i + 1] & {"P3sg", "P3pl"}
-        and not eff_poss[i]
-        and "A3pl" not in tagsets[i]
     ):
         heads[i], rels[i] = i + 2, "nmod"
         return
@@ -1996,7 +1917,6 @@ def _bare_nominal(s, i: int, p: int, v: Optional[int], vt: int) -> None:
     if (
         i + 2 < n
         and upos[i] == "NOUN"
-        and eff_case[i] in ("Nom", "")
         and not eff_poss[i]
         and roots[i] not in _TEMPORAL_ROOTS
         and upos[i + 1] == "NOUN"
@@ -2019,11 +1939,6 @@ def _bare_nominal(s, i: int, p: int, v: Optional[int], vt: int) -> None:
         and ("Pass" in tagsets[p]
              or any(eff_case[k] == "Acc"
                     for k in range(i + 3, p)))
-        # ... and never INTO an own-subject converb clause with
-        # a later matrix: the chain pair is the converb's
-        # subject and the first bare exits to the matrix
-        # (Organizatör bilet SATIŞLARI durunca ... güncelledi)
-        and not (converb[p] and any(pp > p for pp in preds))
     ):
         heads[i], rels[i] = i + 2, "nmod"
         return
@@ -2066,7 +1981,6 @@ def _compoundable(s, i: int, p: int) -> bool:
             low_root in _TEMPORAL_ROOTS
             and i > 0
             and lows[i - 1] in _TIME_DETS
-            and roots[i + 1] not in _TEMPORAL_ROOTS
             and roots[i + 1] not in ("son", "baş", "orta",
                                         "iç", "sonu")
         )
@@ -2084,15 +1998,10 @@ def _compoundable(s, i: int, p: int) -> bool:
              # ... and inside the institutional izafet class
              # (Bakanlar KURULU, öğretmenler ODASI)
              or roots[i + 1] in _PL_IZAFET_HEADS
-             or (roots[i + 1] in _SPATIAL_ROOTS
-                 and eff_case[i + 1] in ("Dat", "Loc", "Abl"))
+             or roots[i + 1] in _SPATIAL_ROOTS
              # benefit/side relational heads take plural
              # possessors too (depremzedeler YARARINA konser)
-             or (roots[i + 1] in ("yarar", "leh", "aleyh")
-                 and eff_case[i + 1] in ("Dat", "Loc")
-                 and eff_poss[i + 1])
-             or (roots[i + 1] == "taraf"
-                 and eff_case[i + 1] == "Abl" and eff_poss[i + 1]))
+             or roots[i + 1] in ("yarar", "leh", "aleyh", "taraf"))
         # a possessed nominal heads its own phrase (Kitabın son
         # bölümü okuyucuları şaşırttı -> bölümü is the subject,
         # not a modifier of okuyucuları) — UNLESS the next nominal
@@ -2117,12 +2026,10 @@ def _compoundable(s, i: int, p: int) -> bool:
              # a possessed chain head continues into the
              # agentive-passive frame as tarafından's nmod
              # complement (okul MÜDÜRÜ tarafından dağıtıldı)
-             or (eff_poss[i + 1] and eff_case[i + 1] == "Abl"
-                 and roots[i + 1] == "taraf"))
+             or (eff_poss[i + 1] and eff_case[i + 1] == "Abl"))
         and not (i + 1 in run_member and i not in run_member)
     )
-    if (compoundable and i + 2 < n and upos[i + 2] == "ADP"
-            and eff_poss[i + 1]):
+    if compoundable and i + 2 < n and upos[i + 2] == "ADP":
         # the possessed nominal heads a postposition phrase: the
         # bare nominal compounds in only when it is NOT a viable
         # clause subject (MÜDÜR ekibi ile toplantı yaptı ->
@@ -2131,8 +2038,6 @@ def _compoundable(s, i: int, p: int) -> bool:
         later_subj = any(
             upos[j] in _NOMINAL
             and eff_case[j] in ("Nom", "")
-            and not eff_poss[j]
-            and roots[j] not in _TEMPORAL_ROOTS
             # the light-verb nominal is not a subject candidate
             and not (j + 1 < n and upos[j + 1] == "VERB"
                      and roots[j + 1] in ("et", "yap", "ol"))
@@ -2148,12 +2053,10 @@ def _compoundable(s, i: int, p: int) -> bool:
     return _case_head_compoundable(s, i, p, compoundable)
 
 def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
-    tokens, n, tagsets, roots, upos = s.tokens, s.n, s.tagsets, s.roots, s.upos
+    tokens, tagsets, roots, upos = s.tokens, s.tagsets, s.roots, s.upos
     eff_case, eff_poss, heads, subj_of = s.eff_case, s.eff_poss, s.heads, s.subj_of
     low_root = roots[i]
-    if (compoundable and eff_case[i + 1] == "Gen"
-            and eff_poss[i + 1]
-            and upos[i] in ("NOUN", "PROPN")):
+    if compoundable and eff_case[i + 1] == "Gen":
         # a bare nominal before a possessed GENITIVE is the
         # zincirleme chain's modifier outright (OKUL müdürünün
         # odası): the genitive cannot be a clause argument, so
@@ -2170,7 +2073,6 @@ def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
                         None)
         if (gen_head is not None
                 and eff_case[gen_head] == "Acc"
-                and "Pass" not in tagsets[p]
                 and not _verb_person_12(s, p)
                 and p not in subj_of
                 and not any(upos[j] in ("PROPN", "PRON")
@@ -2189,7 +2091,6 @@ def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
             and not ("Pass" in tagsets[p] and any(
                 upos[j] in _NOMINAL
                 and eff_case[j] in ("Nom", "")
-                and roots[j] not in _TEMPORAL_ROOTS
                 for j in range(i + 2, p)))
             # the same holds under an INTRANSITIVE predicate: it
             # cannot absorb a later Nom nominal as an object, so
@@ -2200,14 +2101,12 @@ def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
                      and any(
                          upos[j] in _NOMINAL
                          and eff_case[j] in ("Nom", "")
-                         and roots[j] not in _TEMPORAL_ROOTS
                          for j in range(i + 2, p)))
             and not ("A3pl" in tagsets[p] and "A3pl" not in tagsets[i])
             # a spatial-relational frame binds its complement even
             # with the subject slot open (ÜLKELER arasında ticaret
             # gelişti -> nmod, the subject comes later)
-            and not (roots[i + 1] in _SPATIAL_ROOTS
-                     and eff_case[i + 1] in ("Dat", "Loc", "Abl"))
+            and roots[i + 1] not in _SPATIAL_ROOTS
             # a LOC-gazetteer name before a possessed nominal is
             # its venue/place modifier, not the clause subject
             # (İZMİR limanına yeni vinçler kuruldu)
@@ -2225,10 +2124,7 @@ def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
                      or (upos[j] in _NOMINAL
                          and eff_case[j] in ("Nom", "")
                          and not eff_poss[j]
-                         and roots[j] not in _TEMPORAL_ROOTS
-                         and not (j + 1 < n
-                                  and upos[j + 1] in _NOMINAL
-                                  and eff_poss[j + 1])))
+                         and roots[j] not in _TEMPORAL_ROOTS))
                 for j in range(0, i - 1)
             )
         )
@@ -2238,7 +2134,7 @@ def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
 def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
                        preverbal: bool, lv_nominal: bool,
                        compoundable: bool) -> None:
-    n, lows, tagsets, roots, base_case = s.n, s.lows, s.tagsets, s.roots, s.base_case
+    n, lows, tagsets, roots = s.n, s.lows, s.tagsets, s.roots
     upos, eff_case, eff_poss, heads = s.upos, s.eff_case, s.eff_poss, s.heads
     rels, subord, converb, subj_of = s.rels, s.subord, s.converb, s.subj_of
     low_root = roots[i]
@@ -2261,7 +2157,6 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
         heads[i], rels[i] = i + 3, "nmod"
     elif (
         low_root in _TEMPORAL_ROOTS and upos[i] == "NOUN"
-        and eff_case[i] in ("Nom", "")
         and not eff_poss[i]
         # only the SENTENCE-initial time noun can be the subject
         # (a mid-sentence or second-conjunct bare time noun is a
@@ -2269,8 +2164,6 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
         # ulaştı), and frequency nouns never are (üç KERE
         # dinledi)
         and not any(upos[k] != "PUNCT" for k in range(i))
-        and low_root not in ("kez", "kere", "defa", "sefer")
-        and p not in subj_of
         and not _verb_person_12(s, p)
         and upos[p] == "VERB"
         and not any(
@@ -2293,7 +2186,7 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
         # NP, not a bare time adjunct (Kayak SEZONU açıldı,
         # Kasaba PAZARI kuruluyor): fall through to the normal
         # nominal machinery instead
-        and not (eff_poss[i] and eff_case[i] in ("Nom", ""))
+        and not eff_poss[i]
         # ... and so is an acl-MODIFIED time noun (Ustanın
         # onardığı SAAT kulede çalışıyor — the participle makes
         # it the clock, not the hour)
@@ -2309,8 +2202,6 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
             heads[i], rels[i] = p + 1, "obl"
     elif (
         lows[i] in _PRON_12
-        and _verb_person_12(s, p)
-        and p not in subj_of
     ):
         # a 1st/2nd-person pronoun IS the subject of a
         # person-marked predicate (HEPİMİZ sevindik, biz
@@ -2321,33 +2212,22 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
     elif p not in subj_of and not _verb_person_12(s, p):
         _open_subject(s, i, p, vt, preverbal, lv_nominal)
     elif (preverbal
-          and (roots[vt] in ("ol", "et")
-               or (roots[vt] == "gel"
-                   and lows[i] in _GEL_SUPPORT_NOMINALS))
+          and roots[vt] in ("ol", "et", "gel")
           and not lv_nominal and not eff_poss[i]):
         heads[i], rels[i] = vt + 1, "compound"
     elif (preverbal
           and upos[vt] == "VERB"
           and (converb[vt]
                or ("Pass" in tagsets[vt] and subord[vt])
-               # -DIktAn sonra/önce temporal clauses host their
-               # own subject the same way (turta PİŞTİKTEN
-               # sonra fırını kapattı)
-               or ("PastPart" in tagsets[vt]
-                   and base_case[vt] == "Abl"
-                   and vt + 1 < n
-                   and lows[vt + 1] in ("sonra",
-                                                    "önce")))
+               # -DIk participle clauses host their own subject
+               # the same way (turta PİŞTİKTEN sonra fırını
+               # kapattı)
+               or "PastPart" in tagsets[vt])
           and vt != p and p in subj_of
           and not any(rels[j] == "nsubj" and heads[j] == vt + 1
                       for j in range(i))
           and (roots[vt] not in _TRANSITIVE_ROOTS
-               or "Pass" in tagsets[vt])
-          and ("Pass" in tagsets[vt]
-               or "Caus" not in tagsets[vt])
-          and not (vt > 0
-                   and roots[vt] in ("et", "yap", "ol")
-                   and "Pass" not in tagsets[vt])):
+               or "Pass" in tagsets[vt])):
         # a bare nominal before an own-subject-capable converb
         # or passive subordinate — of an unlisted/mixed root, a
         # PASSIVE (eserler ASILIRKEN; karar VERİLMEYECEĞİNİ), or
@@ -2380,14 +2260,12 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
         # sporcu MADALYA aldı keeps obj), and an Acc nominal here
         # is a conjunct object, never demoted (hem yolları hem
         # parkları yeniledi)
-        if (eff_case[i] in ("Nom", "")
+        if ((not eff_poss[i]
                 # a POSSESSED-Nom nominal here is an izafet
                 # subject candidate (Sahil güvenlik BOTLARI
                 # ... topladı), not a duration adjunct — only
                 # time-expression possesseds demote (hafta SONU)
-                and (not eff_poss[i]
-                     or roots[i] in ("son", "yarı", "baş",
-                                        "orta"))
+                or roots[i] in ("son", "yarı", "baş", "orta"))
                 and any(rels[k] == "nsubj" and heads[k] == vt + 1
                         for k in range(i))
                 and any(
@@ -2414,45 +2292,17 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
     if preverbal:
         _preverbal_subject(s, i, p, vt, lv_nominal)
     elif (
-        ((converb[p] and tagsets[p] & {"When", "AsLongAs"})
+        (converb[p]
          # conditional protases host their own subject the
          # same way (Uzmanlar fiyatlar DÜŞERSE ... öngörüyor)
          or cond[p])
         and any(
-            upos[j] in _NOMINAL
-            and eff_case[j] in ("Nom", "")
-            and not eff_poss[j]
-            and roots[j] not in _TEMPORAL_ROOTS
+            eff_case[j] in ("Nom", "")
             for j in range(i + 1, p)
         )
         and (mp := next((pp for pp in preds if pp > p),
                         None)) is not None
         and mp not in subj_of
-        and not any(
-            upos[j] in _NOMINAL
-            and eff_case[j] in ("Nom", "")
-            and roots[j] not in _TEMPORAL_ROOTS
-            # a light-verb NOMINAL is no subject candidate
-            # (veliler itiraz edince geziyi İPTAL etti,
-            # inişe İZİN verdi)
-            and not (j + 1 < n and upos[j + 1] == "VERB"
-                     and roots[j + 1] in ("et", "yap",
-                                             "ol", "ver",
-                                             "al", "kıl"))
-            # ... nor is a bare nominal DIRECTLY before the
-            # transitive matrix verb — that is its
-            # incorporated object (başlayınca ek PERSONEL
-            # istedi)
-            and not (j == mp - 1
-                     and roots[mp] in _TRANSITIVE_ROOTS
-                     and "Pass" not in tagsets[mp])
-            # ... nor is a bare modifier feeding a possessed
-            # izafet head (AMBAR kapaklarını, KONSER programını
-            # — object material, not a subject)
-            and not (j + 1 < n and upos[j + 1] in _NOMINAL
-                     and eff_poss[j + 1])
-            for j in range(p + 1, mp)
-        )
     ):
         # TWO bare nominals before an own-subject converb
         # with a subjectless matrix: the nominal adjacent to
@@ -2466,7 +2316,6 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
           and (heads[p] - 1) in subj_of
           and (roots[p] in _TRANSITIVE_ROOTS
                or "Caus" in tagsets[p])
-          and "Pass" not in tagsets[p]
           and not eff_poss[i]
           and i + 1 < n
           and upos[i + 1] == "NOUN" and eff_poss[i + 1]
@@ -2486,7 +2335,7 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
         subj_of[p] = i
 
 def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
-    n, lows, tagsets, roots, base_case = s.n, s.lows, s.tagsets, s.roots, s.base_case
+    tagsets, roots = s.tagsets, s.roots
     upos, eff_case, eff_poss, heads = s.upos, s.eff_case, s.eff_poss, s.heads
     rels, subord, converb, subj_of = s.rels, s.subord, s.converb, s.subj_of
     subjish = _subjish(s, i, p, vt)
@@ -2514,9 +2363,6 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         subj_of[p] = i
     elif (
         subjish
-        and vt != p
-        and p not in subj_of
-        and upos[vt] == "VERB"
         and tagsets[vt] & {"PresPart"}
         and heads[vt] > 0
         and eff_case[heads[vt] - 1] not in ("Nom", "")
@@ -2531,16 +2377,8 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         subj_of[p] = i
     elif (
         subjish
-        and vt != p
-        and p not in subj_of
-        and upos[vt] == "VERB"
         and subord[vt]
-        and any(
-            upos[j] in _NOMINAL
-            and eff_case[j] in ("Nom", "")
-            and not eff_poss[j]
-            for j in range(i + 1, vt)
-        )
+        and i + 1 < vt
     ):
         # the subordinate verbal noun already has its own
         # adjacent bare nominal (Belediye YOL yapmak
@@ -2550,9 +2388,6 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         subj_of[p] = i
     elif (
         subjish
-        and vt != p
-        and p not in subj_of
-        and upos[vt] == "VERB"
         and converb[vt]
         and ("A3pl" in tagsets[i] or eff_poss[i])
     ):
@@ -2566,19 +2401,9 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         # OWN subject (Kazanın NEDENİ araştırılırken YOL
         # trafiğe kapatıldı)
         if (("Pass" in tagsets[vt] or _intrans(s, vt))
-                # only when DIRECTLY adjacent to the
-                # converb (Kazanın nedeni
-                # ARAŞTIRILIRKEN): with a closer bare
-                # nominal in between, THAT one is the
-                # converb's subject and this izafet
-                # head serves the matrix (Maden ekibi
-                # GALERİ çökünce ... başlattı)
-                and i + 1 == vt
                 and any(
                     upos[j] in _NOMINAL
                     and eff_case[j] in ("Nom", "")
-                    and not eff_poss[j]
-                    and roots[j] not in _TEMPORAL_ROOTS
                     for j in range(vt + 1, p))):
             heads[i], rels[i] = vt + 1, "nsubj"
         else:
@@ -2586,15 +2411,10 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
             subj_of[p] = i
     elif (
         vt != p
-        and upos[vt] == "VERB"
         and (converb[vt]
-             # the -DIktAn sonra/önce temporal frame is a
-             # subject-hosting adverbial clause the same
-             # way (YARIŞ bittikten sonra ...)
-             or ("PastPart" in tagsets[vt]
-                 and base_case[vt] == "Abl"
-                 and vt + 1 < n
-                 and lows[vt + 1] in ("sonra", "önce")))
+             # a -DIk participle clause is subject-hosting
+             # the same way (YARIŞ bittikten sonra ...)
+             or "PastPart" in tagsets[vt])
         and (_intrans(s, vt) or "Pass" in tagsets[vt])
     ):
         # an INTRANSITIVE or PASSIVE converb cannot take
@@ -2603,8 +2423,7 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         # verilmeden önce taraflar dinlendi)
         heads[i], rels[i] = vt + 1, "nsubj"
     elif (roots[vt] in ("ol", "et")
-          and not lv_nominal
-          and not eff_poss[i]):
+          and not lv_nominal):
         # support-verb construction: üye oldu, ikamet
         # etti (yap/gör light verbs keep their obj per
         # UD-BOUN)
@@ -2618,15 +2437,13 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
              # weather sense is its subject (GÜNEŞ
              # açınca, HAVA açtı)
              or (roots[vt] in _WEATHER_INTRANS_VERBS
-                 and roots[i] in _WEATHER_NOUNS
-                 and "Caus" not in tagsets[vt])
+                 and roots[i] in _WEATHER_NOUNS)
              # an INTRANSITIVE light-verb complex cannot
              # take the bare nominal as object either
              # (festival DEVAM etti -> festival subject)
              or (vt > 0 and vt - 1 != i
                  and roots[vt] in ("et", "ol")
                  and roots[vt - 1] in _INTRANS_LIGHT_NOMINALS))
-        and "Pass" not in tagsets[vt]
     ):
         # a bare nominal cannot be the object of an
         # intransitive finite verb: with the subject slot
@@ -2739,7 +2556,7 @@ def _bare_obl_compound(s):
 # transitive verb, a first conjunct that fell to obl is the shared
 # object (ikramiye ve ek İZİN verdi -> ikramiye obj)
 def _first_conjunct_role(s):
-    n, tagsets, roots, upos, eff_case = s.n, s.tagsets, s.roots, s.upos, s.eff_case
+    n, roots, upos, eff_case = s.n, s.roots, s.upos, s.eff_case
     eff_poss, heads, rels = s.eff_poss, s.heads, s.rels
     for k in range(n):
         if rels[k] != "conj" or heads[k] <= 0:
@@ -2750,8 +2567,7 @@ def _first_conjunct_role(s):
                 and eff_case[k] in ("Nom", "")
                 and k + 1 < n and k + 1 == heads[f] - 1
                 and upos[k + 1] == "VERB"
-                and roots[k + 1] in _TRANSITIVE_ROOTS
-                and "Pass" not in tagsets[k + 1]):
+                and roots[k + 1] in _TRANSITIVE_ROOTS):
             rels[f] = "obj"
 
 # --- leftovers -------------------------------------------------------
