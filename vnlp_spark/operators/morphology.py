@@ -1068,8 +1068,6 @@ class HeuristicDisambiguator:
         s = 0.0
         first = tags[0]
         prev_case = ctx.prev_case
-        if first == "Punc":
-            s += 100.0
         if first == "Num" and prev_case != "Gen" and not rivals.finite:
             # number-word whole readings beat nominal segmentation
             # homographs (iki != ik+Acc, altı != alt+P3sg) — except after
@@ -1133,9 +1131,6 @@ class HeuristicDisambiguator:
                     and "Zero" not in final_seg
                     and not rivals.finite):
                 s += 8.0
-            elif final_seg & {"PresPart", "FutPart", "PastPart",
-                              "Agt", "Inf", "Inf2", "Inf3"}:
-                s -= 4.0
         return s
 
     def _segment_score(self, root, suffix, tags, tag_set, ctx, rivals):
@@ -1184,12 +1179,9 @@ class HeuristicDisambiguator:
         ):
             s -= 5.0
         # zero-copula readings (X+DB+Verb+Zero: "evdeydi") are real but
-        # rare relative to their segmentation rivals; a 1st/2nd-person
-        # possessive under one ("şi+m+di" = 'it was my şi') is absurd
+        # rare relative to their segmentation rivals
         if "Zero" in tag_set:
             s -= 2.0
-            if tag_set & {"P1sg", "P2sg", "P1pl", "P2pl"}:
-                s -= 8.0
             if not ctx.sent_final:
                 # copular predicates are clause-final; a mid-clause token
                 # is almost never 'tak+ım' = "I am a peg"
