@@ -2,6 +2,7 @@
 and candidate-generator behaviors (_yildiz_analyzer.py rules)."""
 from vnlp_spark.operators.morphology import (
     CandidateGenerator,
+    analysis_tags,
     py_analyze_sentence,
     py_analyze_tokens,
     to_lower,
@@ -79,3 +80,14 @@ def test_ban_san_transform():
 def test_turkish_case_helpers():
     assert to_lower("İIĞÜÖŞÇ") == "iığüöşç"
     assert capitalize("İSTANBUL") == "Istanbul"  # reference asciifies first char
+
+
+def test_analysis_tags_keeps_a_caret_inside_the_root():
+    # junk tokens can put a "^" inside the root; only the text after the
+    # root is split into tags
+    rec = analysis_tags("t^gürkiye+Noun+Prop+A3sg+Pnon+Dat")
+    assert rec.tags[0] == rec.root == "t^gürkiye"
+    assert rec.tags[1:] == ("Noun", "Prop", "A3sg", "Pnon", "Dat")
+    assert "gürkiye" not in rec.tagset and "t" not in rec.tagset
+    assert analysis_tags("git+Verb+Pos^DB+Noun+Inf2+A3sg+Pnon+Nom").tags == (
+        "git", "Verb", "Pos", "DB", "Noun", "Inf2", "A3sg", "Pnon", "Nom")

@@ -135,7 +135,7 @@ def _segment_runs(s) -> List[List[int]]:
     """Maximal runs of adjacent capitalized nominals, segmented into
     mention groups: [ [i, j, ...], ... ] (singletons omitted)."""
     tokens, upos, base_case, base_poss = s.tokens, s.upos, s.base_case, s.base_poss
-    per, typed = _typed_gazetteer()
+    per, typed, _orgkeys = _typed_gazetteer()
     runs = []
     i, n = 0, len(tokens)
     while i < n:

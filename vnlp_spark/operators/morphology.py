@@ -394,17 +394,23 @@ _TRANSITIVE_ROOTS = _merged_transitives()
 
 @lru_cache(maxsize=1)
 def _typed_gazetteer():
+    """The NER gazetteer, Turkish-lowered: ``(per, typed, orgkeys)`` — the
+    PER names, every typed entry (all labels but ORGKEY) with its label,
+    and the ORGKEY organization head words."""
     gaz = resources.ner_gazetteer()
-    per, typed = set(), {}
+    per, typed, orgkeys = set(), {}, set()
     for w, lbl in gaz.items():
         if lbl == "PER":
             per.add(to_lower(w))
-        if lbl != "ORGKEY":
+        if lbl == "ORGKEY":
+            orgkeys.add(to_lower(w))
+        else:
             typed[to_lower(w)] = lbl
-    return per, typed
+    return per, typed, orgkeys
 
 
 def _base(token: str) -> str:
+    """Pre-apostrophe surface, Turkish-lowered (İstanbul'da -> istanbul)."""
     return to_lower(token.split("'")[0].split("’")[0])
 
 
@@ -885,9 +891,7 @@ class HeuristicDisambiguator:
         # initial capitalized token has no positional Prop signal, but a
         # gazetteer hit (Ali, Murat, İzmir) disambiguates name-vs-common-
         # noun homographs (murat 'wish' vs Murat the name)
-        self.gazetteer = {
-            to_lower(w) for w, lbl in resources.ner_gazetteer().items() if lbl != "ORGKEY"
-        }
+        self.gazetteer = _typed_gazetteer()[1]
 
     def _in_stems(self, root: str) -> bool:
         return root in self.stems or capitalize(root) in self.stems
@@ -1585,7 +1589,7 @@ class AnalysisTags(NamedTuple):
     every reader of the format reads this record."""
 
     root: str  # the text before the first "+"
-    tags: tuple  # the root and the tags, split on "+" and "^"
+    tags: tuple  # the root, then the tags after it split on "+" and "^"
     tagset: frozenset  # ``tags`` as a set
     case: str  # the first case of the "+" split: a "Nom^DB" group is no Nom
     context_case: str  # the left context it hands the next token
@@ -1598,14 +1602,16 @@ class AnalysisTags(NamedTuple):
 def analysis_tags(analysis: str) -> AnalysisTags:
     """The record of ``analysis`` (memoized; a pure function of the
     string, shared, so callers must not mutate it)."""
-    tags = tuple(analysis.replace("^", "+").split("+"))
+    root, sep, rest = analysis.partition("+")
+    # the root may itself hold a "^" (junk tokens): only the text after
+    # it is split into tags
+    tags = (root, *rest.replace("^", "+").split("+")) if sep else (root,)
     plus = analysis.split("+")
     case = ""
     for c in _CASE_TAGS:
         if c in plus:
             case = c
             break
-    root, sep, rest = analysis.partition("+")
     # the derivation groups after the root; each one's PoS is its first tag
     groups = (rest if sep else analysis).split("^DB+")
 

@@ -26,7 +26,6 @@ tokenized sentence; gazetteer is a process-local singleton in the Python worker.
 from __future__ import annotations
 
 import re
-from functools import lru_cache
 from typing import List, Tuple
 
 from pyspark.sql.types import (
@@ -37,42 +36,23 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .. import resources
 from ..functions._udf import arrow_map
-from .morphology import to_lower
+from .morphology import _base, _typed_gazetteer
 
 _UPPER_RE = re.compile(r"^[A-ZÇĞİIÖŞÜ]")
 _ALL_CAPS_RE = re.compile(r"^[A-ZÇĞİIÖŞÜ]{2,}$")
 _HAS_LETTER_RE = re.compile(r"[A-Za-zçğıöşüÇĞİIÖŞÜ]")
 
 
-@lru_cache(maxsize=1)
-def _gazetteer():
-    gaz = resources.ner_gazetteer()
-    typed = {}
-    orgkeys = set()
-    for word, label in gaz.items():
-        if label == "ORGKEY":
-            orgkeys.add(to_lower(word))
-        else:
-            typed[to_lower(word)] = label
-    return typed, orgkeys
-
-
-def _base_form(token: str) -> str:
-    """Pre-apostrophe surface, Turkish-lowered (İstanbul'da -> istanbul)."""
-    return to_lower(token.split("'")[0].split("’")[0])
-
-
 def py_ner_tags(tokens: List[str]) -> List[str]:
-    typed, orgkeys = _gazetteer()
+    _per, typed, orgkeys = _typed_gazetteer()
     labels: List[str] = []
     for idx, token in enumerate(tokens):
         label = "O"
         if not _HAS_LETTER_RE.search(token):
             labels.append("O")
             continue
-        base = _base_form(token)
+        base = _base(token)
         has_apos = "'" in token or "’" in token
         capitalized = bool(_UPPER_RE.match(token))
         prev = labels[idx - 1] if idx > 0 else "O"
@@ -94,7 +74,7 @@ def py_ner_tags(tokens: List[str]) -> List[str]:
                 # Türkiye İş Bankası'nda: Murat stays PER)
                 j = idx - 1
                 while j >= 0 and labels[j] != "O":
-                    if typed.get(_base_form(tokens[j])) == "PER":
+                    if typed.get(_base(tokens[j])) == "PER":
                         break
                     labels[j] = "ORG"
                     j -= 1

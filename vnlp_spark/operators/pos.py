@@ -21,6 +21,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from .. import resources
 from ..functions._udf import arrow_map
 from .morphology import SPATIAL_ROOTS as _SPATIAL_ROOTS
 from .morphology import TITLE_ROLES as _TITLES
@@ -107,15 +108,13 @@ def _readings(token: str) -> frozenset:
         if (tags[0] == "Verb"
                 and tset & {"Aor", "Past", "Prog1", "Fut", "Narr"}):
             out.add("finite")  # a real finite-verb reading exists (alındı)
-        if "DB" in tags:
-            fseg2 = tags[len(tags) - 1 - tags[::-1].index("DB") + 1:]
-            if (fseg2 and fseg2[0] == "Adj"
-                    and set(fseg2) & {"With", "Without", "Rel"}
-                    and _harmonic_split(_root, _suffix)):
-                # a derivational adjective reading exists alongside the
-                # lexicalized noun (ün+lü 'famous' vs ünlü 'celebrity');
-                # harmony-invalid splits (va+li for 'vali') don't count
-                out.add("adj_deriv")
+        if ("DB" in tags and fseg and fseg[0] == "Adj"
+                and set(fseg) & {"With", "Without", "Rel"}
+                and _harmonic_split(_root, _suffix)):
+            # a derivational adjective reading exists alongside the
+            # lexicalized noun (ün+lü 'famous' vs ünlü 'celebrity');
+            # harmony-invalid splits (va+li for 'vali') don't count
+            out.add("adj_deriv")
     return frozenset(out)
 
 
@@ -181,23 +180,18 @@ _CORE_ADJS = {
 }
 
 
-@lru_cache(maxsize=50_000)
 def _common_noun_stem(low: str) -> bool:
     """Is the surface a plain common-noun stem in the lexicon?  Drives
     the sentence-initial Prop demotion."""
-    from .. import resources
-
-    tags = resources.stem_dict().get(low)
-    return bool(tags) and any(t == "Noun" for t in tags)
+    return "Noun" in resources.stem_dict().get(low, ())
 
 
 _AGENTIVE_SUFFIXES = ("cı", "ci", "cu", "cü", "çı", "çi", "çu", "çü")
 
 
-@lru_cache(maxsize=50_000)
 def _agentive_common(low: str) -> bool:
     """Is the surface an agentive -CI occupation noun (sözcü, oyuncu,
-    satıcı) — a common stem whose -CI base is itself a known stem?
+    satıcı) — a common-noun stem ending in -CI?
     Gazetteer homographs of this class (Sözcü the paper vs sözcü
     'spokesperson') read as the occupation sentence-initially, the
     same way temporal homographs (Sabah) read as the time noun."""
