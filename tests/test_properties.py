@@ -1,5 +1,6 @@
-"""Property-based tests (hypothesis) for the deterministic text layer —
-inputs the reference's golden fixtures never cover."""
+"""Property-based tests (hypothesis) for the deterministic text layer and
+the annotation kernel — inputs the reference's golden fixtures never
+cover."""
 import hypothesis.strategies as st
 from hypothesis import given, settings
 
@@ -12,7 +13,10 @@ from vnlp_spark.functions.normalizer import (
 from vnlp_spark.functions.numbers import py_convert_numbers_to_words
 from vnlp_spark.functions.sentence_splitter import py_split_sentences
 from vnlp_spark.functions.tokenizer import py_treebank_tokenize, py_word_punct_tokenize
+from vnlp_spark.operators.dep_parser import MAX_TOKENS
 from vnlp_spark.operators.morphology import py_analyze_tokens
+from vnlp_spark.plans.corpus import SENTENCE_POOL
+from vnlp_spark.plans.pipeline import annotate_sentence
 
 turkish_text = st.text(
     alphabet="abcçdefgğhıijklmnoöprsştuüvyzABCÇDEFGĞHIİJKLMNOÖPRSŞTUÜVYZ .,!?'\"0123456789",
@@ -80,3 +84,33 @@ def test_morphology_total_one_analysis_per_token(tokens):
     out = py_analyze_tokens(tokens)
     assert len(out) == len(tokens)
     assert all("+" in a for a in out)
+
+
+# pool words, random Turkish-alphabet strings and punctuation, up to past
+# the parser's token limit
+kernel_words = st.lists(
+    st.one_of(
+        st.sampled_from(sorted({w for s in SENTENCE_POOL for w in s.split()})),
+        st.text(alphabet="abcçdefgğhıijklmnoöprsştuüvyzABCÇDEFGĞHIİJKLMNOÖPRSŞTUÜVYZ'",
+                min_size=1, max_size=12),
+        st.sampled_from(list(".,;:!?'\"()-…")),
+    ),
+    min_size=1,
+    max_size=48,
+)
+
+
+@given(kernel_words)
+@settings(max_examples=300, deadline=None)
+def test_annotate_sentence_total(words):
+    # the kernel annotates any token list: one analysis per token, an arc
+    # per token numbered 1..n up to the parser's limit and None past it,
+    # and every mention span inside the tokens
+    tokens, analyses, mentions, arcs = annotate_sentence(" ".join(words))
+    assert len(analyses) == len(tokens)
+    if len(tokens) > MAX_TOKENS:
+        assert arcs is None
+    else:
+        assert [arc[0] for arc in arcs] == list(range(1, len(tokens) + 1))
+    for _mention, _label, first_tok, last_tok in mentions:
+        assert 0 <= first_tok <= last_tok < len(tokens)
