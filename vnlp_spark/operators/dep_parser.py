@@ -135,7 +135,7 @@ def _segment_runs(s) -> List[List[int]]:
     """Maximal runs of adjacent capitalized nominals, segmented into
     mention groups: [ [i, j, ...], ... ] (singletons omitted)."""
     tokens, upos, base_case, base_poss = s.tokens, s.upos, s.base_case, s.base_poss
-    per, typed, _orgkeys = _typed_gazetteer()
+    per, typed, _ = _typed_gazetteer()
     runs = []
     i, n = 0, len(tokens)
     while i < n:
@@ -259,7 +259,7 @@ def _choose_root(s):
         # (KURUMUŞ dallar toplandı; YAPILACAK yatırımlar açıklanacak)
         if (
             len(preds) >= 2 and preds[0] == 0
-            and tagsets[0] & {"Narr", "Fut"}
+            and tagsets[0] & {"Narr", "Fut"} and "A3sg" in tagsets[0]
             and not tagsets[0] & {"Past", "Cond", "Neg"}
             and upos[1] in ("NOUN", "PROPN")
             and base_case[1] in ("Nom", "")
@@ -1637,6 +1637,7 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
         prev_upos == "ADJ"
         and rels[i - 1] == "amod" and heads[i - 1] == i + 1
         and i - 2 >= 0 and upos[i - 2] == "CCONJ"
+        and lows[i - 2] not in ("de", "da")
     )
     if ((prev_upos == "CCONJ" and lows[i - 1] not in ("de", "da")
             and i not in corr_first
@@ -1981,6 +1982,7 @@ def _compoundable(s, i: int, p: int) -> bool:
             low_root in _TEMPORAL_ROOTS
             and i > 0
             and lows[i - 1] in _TIME_DETS
+            and roots[i + 1] not in _TEMPORAL_ROOTS
             and roots[i + 1] not in ("son", "baş", "orta",
                                         "iç", "sonu")
         )
@@ -2297,7 +2299,8 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
          # same way (Uzmanlar fiyatlar DÜŞERSE ... öngörüyor)
          or cond[p])
         and any(
-            eff_case[j] in ("Nom", "")
+            upos[j] in _NOMINAL
+            and eff_case[j] in ("Nom", "")
             for j in range(i + 1, p)
         )
         and (mp := next((pp for pp in preds if pp > p),

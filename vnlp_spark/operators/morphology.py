@@ -1319,7 +1319,7 @@ class HeuristicDisambiguator:
                 # all: a plural possessed after one reads attributive +
                 # Acc (kışlık LASTİKLERİ); substance duals keep the
                 # license (DOLU taneleri = hailstones)
-                or prev_case == "NomDq"
+                or (prev_case == "NomDq" and "A3pl" in tag_set)
             )
         ):
             s -= 2.5
@@ -1816,16 +1816,19 @@ def _missing_predicate(s: MorphState) -> None:
 
 
 # a lexicalized deverbal-noun homograph of the kal-participle
-# (kalan 'the remainder') inside the sentence is the participle in
-# its idiomatic collocation (miras KALAN evi, yadigar KALAN saat):
-# the left nominal is the participle's own argument.  Scoped to kal- — open agentive nouns
+# (kalan 'the remainder') directly after a bare-Nom noun and before
+# a nominal is the participle in its idiomatic collocation (miras
+# KALAN evi, yadigar KALAN saat): the left nominal is the
+# participle's own argument.  Scoped to kal- — open agentive nouns
 # (çalışan sayısı 'employee count') keep their izafet reading.
 def _kalan_participle(s: MorphState) -> None:
     out = s.analyses
     for idx in range(1, len(out) - 1):
         if out[idx] != "kalan+Noun+A3sg+Pnon+Nom":
             continue
-        out[idx] = "kal+Verb+Pos^DB+Adj+PresPart"
+        if ({"Noun", "Pnon", "Nom"} <= analysis_tags(out[idx - 1]).tagset
+                and "Noun" in analysis_tags(out[idx + 1]).tagset):
+            out[idx] = "kal+Verb+Pos^DB+Adj+PresPart"
 
 
 # the mirror repair: a NOUN reading chosen for an et/ol/yap surface
@@ -2048,8 +2051,8 @@ def _dual_stem_attributive(s: MorphState) -> None:
             out[idx] = low + "+Adj"
 
 
-# an Adverb/Adj dual stem (açık, yalnız, geri) directly before a
-# Nom-case word is the attributive adjective (AÇIK hava
+# an Adverb/Adj dual stem (açık, yalnız, geri) directly before an
+# unpossessed Nom-case word is the attributive adjective (AÇIK hava
 # sineması, YALNIZ kadın); the adverb reading needs a verb or
 # clause-level scope
 def _adverb_attributive(s: MorphState) -> None:
@@ -2061,7 +2064,7 @@ def _adverb_attributive(s: MorphState) -> None:
         if "Adj" not in stems.get(low, ()):
             continue
         nxt = analysis_tags(out[idx + 1]).tagset
-        if "Nom" in nxt:
+        if "Pnon" in nxt and "Nom" in nxt:
             out[idx] = low + "+Adj"
 
 

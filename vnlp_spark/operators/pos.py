@@ -407,8 +407,9 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
         # 'instead of V-ing' (artırmak YERİNE): grammaticalized ADP
         # over the infinitive clause
         upos[i] = "ADP"
-    elif low == "ki":
-        # complementizer ki (diyor Kİ fiyatlar düşecek)
+    elif low == "ki" and i > 0 and upos[i - 1] == "VERB":
+        # post-verbal complementizer ki (diyor Kİ fiyatlar düşecek):
+        # SCONJ; the coordinating/discourse ki elsewhere stays CCONJ
         upos[i] = "SCONJ"
     else:
         return False
@@ -1001,7 +1002,7 @@ def _chain_link_noun(s):
 # accusative object (erimiş MADENİ kalıba döktü = maden+Acc)
 def _loan_i_object(s):
     analyses, n, lows, tagsets, roots = s.analyses, s.n, s.lows, s.tagsets, s.roots
-    base_case, upos = s.base_case, s.upos
+    base_case, base_poss, upos = s.base_case, s.base_poss, s.upos
     for i in range(1, n - 1):
         if (
             upos[i] == "ADJ"
@@ -1025,6 +1026,10 @@ def _loan_i_object(s):
                             for j in range(n) if j != i)
                 and not any(base_case[j] in ("Nom", "")
                             for j in range(i + 1, v))
+                and any(upos[j] == "NOUN"
+                        and base_case[j] in ("Nom", "")
+                        and not base_poss[j]
+                        for j in range(i))
             ):
                 upos[i] = "NOUN"
 
@@ -1346,6 +1351,7 @@ def _material_nouns(s):
             upos[i] == "ADJ"
             and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and lows[i] in _MATERIAL_NOUNS
+            and upos[i + 1] in ("NOUN", "PROPN")
         ):
             upos[i] = "NOUN"
 
