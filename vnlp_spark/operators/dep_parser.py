@@ -102,6 +102,10 @@ _TIME_DETS = {
     "ilk", "aynı",
 }
 
+# nominal halves of gel-support constructions (GALİP geldi, denk
+# geldi): compound, never the subject/oblique of motion gel-
+_GEL_SUPPORT_NOMINALS = {"galip", "mağlup", "denk", "rast", "üstün"}
+
 # verbs with a conventionalized INTRANSITIVE weather/celestial sense
 # next to a weather-noun subject (güneş AÇINCA, hava AÇTI, gün DOĞDU),
 # even though the same root is transitive elsewhere (kapıyı açtı)
@@ -282,6 +286,7 @@ def _choose_root(s):
                      # and the matrix must be transitive, so a genuine
                      # evidential chain keeps its own clause
                      or (roots[q] in _INTRANSITIVE_ROOTS
+                         and roots[q] not in ("yağ", "es")
                          and any(f > q and roots[f] in
                                  _TRANSITIVE_ROOTS for f in preds)))
                 and tagsets[q] & {"Narr", "Fut"}
@@ -604,6 +609,7 @@ def _reread_possessed_locative(s):
             upos[i] in ("ADJ", "NOUN")
             and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and "p3loc" in _readings(tokens[i])
+            and upos[i - 1] in _NOMINAL
         ):
             upos[i] = "NOUN"
             eff_case[i], eff_poss[i] = "Loc", True
@@ -1026,7 +1032,7 @@ def _strict_adjacency(s, i: int, v: int) -> bool:
 # clause argument (kulüp başkanı Erdoğan'ı eleştirdi)
 def _title_flat_name(s):
     tokens, n, tagsets, roots = s.tokens, s.n, s.tagsets, s.roots
-    upos, heads, rels = s.upos, s.heads, s.rels
+    base_case, upos, heads, rels = s.base_case, s.upos, s.heads, s.rels
     for _i in range(1, n):
         if (
             heads[_i] == -1
@@ -1035,7 +1041,8 @@ def _title_flat_name(s):
             and upos[_i - 1] == "NOUN"
             and roots[_i - 1] in _TITLES
             and tagsets[_i - 1] & {"P3sg", "P3pl"}
-            and "'" not in tokens[_i]
+            and not ("'" in tokens[_i]
+                     and base_case[_i] not in ("Nom", ""))
         ):
             heads[_i], rels[_i] = _i, "flat"
 
@@ -1560,6 +1567,7 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
         and not eff_poss[i]
         and i + 1 < n
         and upos[i + 1] in ("NOUN", "PROPN")
+        and i + 1 != vt
         # only with the subject slot already claimed further left —
         # a clause-initial material noun is its own argument (Bu
         # İPEK diğerinden daha parlak)
@@ -2028,7 +2036,8 @@ def _compoundable(s, i: int, p: int) -> bool:
              # a possessed chain head continues into the
              # agentive-passive frame as tarafından's nmod
              # complement (okul MÜDÜRÜ tarafından dağıtıldı)
-             or (eff_poss[i + 1] and eff_case[i + 1] == "Abl"))
+             or (eff_poss[i + 1] and eff_case[i + 1] == "Abl"
+                 and roots[i + 1] == "taraf"))
         and not (i + 1 in run_member and i not in run_member)
     )
     if compoundable and i + 2 < n and upos[i + 2] == "ADP":
@@ -2214,7 +2223,9 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
     elif p not in subj_of and not _verb_person_12(s, p):
         _open_subject(s, i, p, vt, preverbal, lv_nominal)
     elif (preverbal
-          and roots[vt] in ("ol", "et", "gel")
+          and (roots[vt] in ("ol", "et")
+               or (roots[vt] == "gel"
+                   and lows[i] in _GEL_SUPPORT_NOMINALS))
           and not lv_nominal and not eff_poss[i]):
         heads[i], rels[i] = vt + 1, "compound"
     elif (preverbal
@@ -2301,11 +2312,36 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
         and any(
             upos[j] in _NOMINAL
             and eff_case[j] in ("Nom", "")
+            and not eff_poss[j]
             for j in range(i + 1, p)
         )
         and (mp := next((pp for pp in preds if pp > p),
                         None)) is not None
         and mp not in subj_of
+        and not any(
+            upos[j] in _NOMINAL
+            and eff_case[j] in ("Nom", "")
+            and roots[j] not in _TEMPORAL_ROOTS
+            # a light-verb NOMINAL is no subject candidate
+            # (veliler itiraz edince geziyi İPTAL etti,
+            # inişe İZİN verdi)
+            and not (j + 1 < n and upos[j + 1] == "VERB"
+                     and roots[j + 1] in ("et", "yap",
+                                             "ol", "ver",
+                                             "al", "kıl"))
+            # ... nor is a bare nominal DIRECTLY before the
+            # transitive matrix verb — that is its
+            # incorporated object (başlayınca ek PERSONEL
+            # istedi)
+            and not (j == mp - 1
+                     and roots[mp] in _TRANSITIVE_ROOTS
+                     and "Pass" not in tagsets[mp])
+            # ... nor is a bare modifier feeding a possessed
+            # izafet head (AMBAR kapaklarını, KONSER programını
+            # — object material, not a subject)
+            and not (j + 1 < n and eff_poss[j + 1])
+            for j in range(p + 1, mp)
+        )
     ):
         # TWO bare nominals before an own-subject converb
         # with a subjectless matrix: the nominal adjacent to
@@ -2381,7 +2417,12 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
     elif (
         subjish
         and subord[vt]
-        and i + 1 < vt
+        and any(
+            upos[j] in _NOMINAL
+            and eff_case[j] in ("Nom", "")
+            and not eff_poss[j]
+            for j in range(i + 1, vt)
+        )
     ):
         # the subordinate verbal noun already has its own
         # adjacent bare nominal (Belediye YOL yapmak

@@ -1027,6 +1027,7 @@ class HeuristicDisambiguator:
                 "PresPart" in tag_set
                 and prev_case in ("Loc", "Dat", "Abl")
                 and not ctx.sent_final
+                and to_lower(ctx.token) not in TITLE_ROLES
             ):
                 s += 10.0
             # prefer the underived finite reading over a voice-derived

@@ -400,12 +400,14 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
         # (karar kolay bir karar DEĞİL; hazır değildi): AUX in UD
         # regardless of the lexicon's Verb/Conj readings
         upos[i] = "AUX"
-    elif low == "olarak":
-        # grammaticalized 'as'-postposition (başkan OLARAK seçti)
+    elif low == "olarak" and i > 0:
+        # grammaticalized 'as'-postposition (başkan OLARAK seçti); the
+        # literal ol- converb reading survives clause-initially
         upos[i] = "ADP"
-    elif low == "yerine":
+    elif low == "yerine" and i > 0 and "Inf" in tagsets[i - 1]:
         # 'instead of V-ing' (artırmak YERİNE): grammaticalized ADP
-        # over the infinitive clause
+        # over the infinitive clause; after plain nominals the
+        # literal possessed noun stays (yerine koydu)
         upos[i] = "ADP"
     elif low == "ki" and i > 0 and upos[i - 1] == "VERB":
         # post-verbal complementizer ki (diyor Kİ fiyatlar düşecek):
@@ -416,7 +418,7 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
     return True
 
 def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
-    tokens, analyses, n, lows = s.tokens, s.analyses, s.n, s.lows
+    tokens, analyses, n, lows, tagsets = s.tokens, s.analyses, s.n, s.lows, s.tagsets
     roots, base_case, morph_upos, upos = s.roots, s.base_case, s.morph_upos, s.upos
     has_finite_verb = s.has_finite_verb
     if (
@@ -537,6 +539,7 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
                 # operation, a noun), while its Gen-subject twin
                 # stays the ccomp verb via the case disjunct above
                 or (upos[pv] == "NOUN"
+                    and "Pnon" in tagsets[pv]
                     and (not tags & {"P1sg", "P2sg", "P3sg",
                                      "P1pl", "P2pl", "P3pl"}
                          # light-verb roots keep the VERB reading:
@@ -546,7 +549,10 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
                          # modifier
                          or roots[i]
                          in ("et", "ol", "yap", "ver", "al", "kıl"))
-                    and pv > 0)
+                    and any(
+                        upos[j] in ("NOUN", "PROPN", "PRON")
+                        and base_case[j] in ("Nom", "")
+                        for j in range(0, pv)))
             ))(next((k for k in range(i - 1, -1, -1)
                      if lows[k] not in ("de", "da")),
                     i - 1)))
@@ -643,10 +649,12 @@ def _lexical_modifiers(s, i: int, low: str, tags: set) -> bool:
         and not any(upos[j] == "VERB" for j in range(i))
         # a zero-copula PRESENT first conjunct has no VERB but is
         # still a complete clause (Hava güzel ANCAK deniz soğuk):
-        # a bare predicate directly on the left keeps the
-        # coordination
+        # a bare predicate-capable ADJ/NOUN directly on the left
+        # preceded by a bare-Nom subject keeps the coordination
         and not (
-            base_case[i - 1] in ("Nom", "")
+            i >= 2
+            and upos[i - 1] in ("ADJ", "NOUN")
+            and base_case[i - 1] in ("Nom", "")
             # a POSSESSED Nom nominal is the Acc-ambiguous OBJECT
             # shape, not a bare predicate (Çevirmen raporu ANCAK
             # sabah bitirdi keeps the focalizer reading)
@@ -713,6 +721,11 @@ def _lexical_modifiers(s, i: int, low: str, tags: set) -> bool:
                  and all(upos[j] in ("CCONJ", "ADJ", "PUNCT")
                          or (j + 1 < n and upos[j + 1] == "ADJ")
                          for j in range(i + 1, n)))
+        # manner-frame hosts keep their attributive adjective even
+        # case-marked (dikkatli ŞEKİLDE, sakin BİÇİMDE)
+        and not (i + 1 < n and upos[i + 1] == "NOUN"
+                 and roots[i + 1] in ("şekil", "biçim", "tarz", "üslup")
+                 and base_case[i + 1] in ("Loc", "Ins"))
     ):
         # -lH/-sHz adjective not modifying anything nominal is a
         # zero-derived noun (Mahalleli ... rahatsız oldu); but keep
@@ -757,7 +770,7 @@ def _lexical_case_frames(s, i: int, low: str, tags: set) -> bool:
                           and roots[i + 3] in ("et", "yap", "ol")))
         and "bare_adj" in _readings(tokens[i])
         and low not in _MATERIAL_NOUNS
-        and low not in _TITLES
+        and not (low in _TITLES and _CAP_RE.match(tokens[i]))
     ):
         # noun/adjective homograph directly before a BARE nominal is
         # the adjective (taze balık); before a case-marked nominal
@@ -1033,9 +1046,9 @@ def _loan_i_object(s):
             ):
                 upos[i] = "NOUN"
 
-# whole-word-Adj / possessed-locative homographs are the locative
-# adverbial (olayları YERİNDE inceledi) — mirror of the parser's
-# re-read
+# whole-word-Adj / possessed-locative homographs with a nominal to
+# their left are the locative adverbial (olayları YERİNDE inceledi)
+# — mirror of the parser's re-read
 def _possessed_locative(s):
     tokens, analyses, n, upos = s.tokens, s.analyses, s.n, s.upos
     for i in range(1, n - 1):
@@ -1043,6 +1056,7 @@ def _possessed_locative(s):
             upos[i] == "ADJ"
             and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and "p3loc" in _readings(tokens[i])
+            and upos[i - 1] in ("NOUN", "PROPN", "PRON", "NUM")
         ):
             upos[i] = "NOUN"
 
@@ -1110,9 +1124,10 @@ def _agentive_nouns(s):
                      and {"P3sg", "P3pl"} & tagsets[i + 2]))
         ):
             # ... but a sentence-final zero-copula predicate keeps the
-            # adjectival reading (çok ETKİLEYİCİ.)
+            # adjectival reading (çok ETKİLEYİCİ.) unless a determiner
+            # marks the nominal use (iyi bir YÜZÜCÜ.)
             pred_final = all(upos[j] == "PUNCT" for j in range(i + 1, n))
-            if pred_final:
+            if pred_final and not (i > 0 and upos[i - 1] in ("DET", "NUM")):
                 continue
             upos[i] = "NOUN"
 
@@ -1246,7 +1261,8 @@ def _correlative_adjective(s):
         if (upos[i] == "NOUN"
                 and "bare_adj" in _readings(tokens[i])
                 and lows[i - 1] in ("hem", "ne", "ya",
-                                                "gerek")):
+                                                "gerek")
+                and not any(upos[j] == "VERB" for j in range(n))):
             pair = next(
                 (j for j in range(i + 1, n - 1)
                  if lows[j] == lows[i - 1]),
