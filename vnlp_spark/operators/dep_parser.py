@@ -201,7 +201,7 @@ def _intrans(s, x: int) -> bool:
 
 # --- predicates and root -------------------------------------------
 def _clause_predicates(s):
-    n, tagsets, upos = s.n, s.tagsets, s.upos
+    n, tagsets, roots, upos = s.n, s.tagsets, s.roots, s.upos
     subord = [bool(tagsets[i] & _SUBORD_TAGS) for i in range(n)]
     converb = [bool(tagsets[i] & _CONVERB_TAGS) for i in range(n)]
     # -sA conditionals are protasis clauses, never the matrix predicate
@@ -209,6 +209,7 @@ def _clause_predicates(s):
     # a sentence whose only verb is conditional keeps it as root
     cond = [
         upos[i] == "VERB" and "Cond" in tagsets[i]
+        and not subord[i] and not converb[i]
         for i in range(n)
     ]
     # V+Aor V+Neg+Aor same-stem adjacent pair is the 'as soon as'
@@ -221,6 +222,9 @@ def _clause_predicates(s):
             upos[_i] == "VERB" and upos[_i + 1] == "VERB"
             and "Aor" in tagsets[_i] and "Pos" in tagsets[_i]
             and "Aor" in tagsets[_i + 1] and "Neg" in tagsets[_i + 1]
+            and not (tagsets[_i] | tagsets[_i + 1]) & _SUBORD_TAGS
+            and roots[_i] == roots[_i + 1]
+            and any(upos[_k] == "VERB" for _k in range(_i + 2, n))
         ):
             converb[_i] = True
             converb[_i + 1] = True
@@ -289,7 +293,8 @@ def _choose_root(s):
                          and roots[q] not in ("yağ", "es")
                          and any(f > q and roots[f] in
                                  _TRANSITIVE_ROOTS for f in preds)))
-                and tagsets[q] & {"Narr", "Fut"}
+                and tagsets[q] & {"Narr", "Fut"} and "A3sg" in tagsets[q]
+                and not tagsets[q] & {"Past", "Cond", "Neg"}
                 and q + 1 < n
                 and upos[q + 1] in ("NOUN", "PROPN")
                 and base_case[q + 1] in ("Nom", "", "Acc")
@@ -310,6 +315,8 @@ def _choose_root(s):
             i for i in range(n)
             if upos[i] == "VERB" and "PastPart" in tagsets[i]
             and base_case[i] == "Loc"
+            and not (i + 1 < n
+                     and lows[i + 1] in ("sonra", "önce"))
         ]
         # conditional protasis clauses likewise host their own subject
         # (Yağmur yağarsa -> Yağmur is yağarsa's nsubj)
@@ -401,8 +408,8 @@ def _fixed_expressions(s):
 # ihracatı conj->üretimi).  The first conjunct must NOT take the
 # generic nominal conj-back rule (it has no left conjunct).
 def _correlatives(s):
-    n, lows, base_case = s.n, s.lows, s.base_case
-    upos, heads, rels = s.upos, s.heads, s.rels
+    n, lows, tagsets, base_case = s.n, s.lows, s.tagsets, s.base_case
+    base_poss, upos, heads, rels = s.base_poss, s.upos, s.heads, s.rels
     corr_first = set()
     corr_cc_idx = set()
     _corr_groups = {}
@@ -421,6 +428,7 @@ def _correlatives(s):
         # ihracatı artırdı) have no verb before the second particle.
         _clausal = any(
             upos[j] == "VERB"
+            and not (tagsets[j] & (_SUBORD_TAGS | _CONVERB_TAGS))
             for j in range(_idxs[0] + 1, _idxs[1])
         )
         _conjs = []
@@ -428,7 +436,8 @@ def _correlatives(s):
             if _clausal:
                 c = next(
                     (j for j in range(k + 1, n)
-                     if upos[j] == "VERB"),
+                     if upos[j] == "VERB"
+                     and not (tagsets[j] & (_SUBORD_TAGS | _CONVERB_TAGS))),
                     None,
                 )
             else:
@@ -440,9 +449,11 @@ def _correlatives(s):
                 # feeding a possessed izafet head makes the HEAD the
                 # conjunct (hem personel SAYISINI hem yatak
                 # KAPASİTESİNİ artırdı)
-                if (c is not None
+                if (c is not None and upos[c] == "NOUN"
                         and base_case[c] in ("Nom", "")
-                        and c + 1 < n and upos[c + 1] == "NOUN"):
+                        and not base_poss[c]
+                        and c + 1 < n and upos[c + 1] == "NOUN"
+                        and base_poss[c + 1]):
                     c += 1
             _conjs.append(c)
         if any(c is None for c in _conjs) or len(set(_conjs)) < 2:
@@ -453,7 +464,7 @@ def _correlatives(s):
         if heads[_idxs[0]] == -1:
             heads[_idxs[0]], rels[_idxs[0]] = c1 + 1, "cc"
         for k, c in zip(_idxs[1:], _conjs[1:]):
-            if upos[c] != "VERB":
+            if c != c1 and heads[c] == -1 and upos[c] != "VERB":
                 heads[c], rels[c] = c1 + 1, "conj"
     s.corr_first, s.corr_cc_idx = corr_first, corr_cc_idx
 
@@ -602,13 +613,18 @@ def _reread_chain_link(s):
 # verb with an object to their left are the locative adverbial
 # (olayları YERİNDE inceledi = yer+P3sg+Loc, not yerinde 'apt')
 def _reread_possessed_locative(s):
-    tokens, analyses, n, upos = s.tokens, s.analyses, s.n, s.upos
+    tokens, analyses, n, roots, upos = s.tokens, s.analyses, s.n, s.roots, s.upos
     eff_case, eff_poss = s.eff_case, s.eff_poss
     for i in range(1, n - 1):
         if (
             upos[i] in ("ADJ", "NOUN")
             and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and "p3loc" in _readings(tokens[i])
+            and (upos[i + 1] == "VERB"
+                 # ... or a light-verb complex (yerinde TESPİT ETTİ)
+                 or (i + 2 < n and upos[i + 1] == "NOUN"
+                     and upos[i + 2] == "VERB"
+                     and roots[i + 2] in ("et", "yap", "ol")))
             and upos[i - 1] in _NOMINAL
         ):
             upos[i] = "NOUN"
@@ -620,7 +636,7 @@ def _reread_possessed_locative(s):
 # (MAHALLE sakinleriyle aradı -> mahalle nmod, one oblique, not two
 # stacked same-case obliques)
 def _reread_same_case_compound(s):
-    tokens, n, upos = s.tokens, s.n, s.upos
+    tokens, n, lows, roots, upos = s.tokens, s.n, s.lows, s.roots, s.upos
     eff_case, eff_poss = s.eff_case, s.eff_poss
     for i in range(n - 1):
         if (
@@ -628,6 +644,7 @@ def _reread_same_case_compound(s):
             and eff_case[i] in ("Dat", "Loc", "Abl", "Ins")
             and not eff_poss[i]
             and "bare_noun" in _readings(tokens[i])
+            and roots[i] != lows[i]
             and upos[i + 1] in _NOMINAL
             and eff_poss[i + 1]
             and eff_case[i + 1] == eff_case[i]
@@ -652,7 +669,7 @@ def _izafet_oblique_mod(s, j: int) -> bool:
     )
 
 def _material_mod(s, j: int) -> bool:
-    n, roots, upos, eff_case = s.n, s.roots, s.upos, s.eff_case
+    n, roots, upos, eff_case, eff_poss = s.n, s.roots, s.upos, s.eff_case, s.eff_poss
     # material/degree juxtaposition feeding a case-marked UNPOSSESSED
     # host (taş FIRINDA pişirdi): one oblique phrase, transparent for
     # object adjacency — mirrors the material-noun nmod arc rule
@@ -663,6 +680,7 @@ def _material_mod(s, j: int) -> bool:
         and j + 1 < n
         and upos[j + 1] in _NOMINAL
         and eff_case[j + 1] in ("Dat", "Loc", "Abl", "Ins")
+        and not eff_poss[j + 1]
     )
 
 def _gen_oblique_mod(s, j: int, v: int) -> bool:
@@ -684,7 +702,7 @@ def _gen_oblique_mod(s, j: int, v: int) -> bool:
     )
 
 def _adjacent_to_verb(s, i: int, v: int) -> bool:
-    n, roots, upos, eff_case = s.n, s.roots, s.upos, s.eff_case
+    n, lows, roots, upos, eff_case = s.n, s.lows, s.roots, s.upos, s.eff_case
     for j in range(i + 1, v):
         if upos[j] in _TRANSPARENT:
             continue
@@ -697,7 +715,12 @@ def _adjacent_to_verb(s, i: int, v: int) -> bool:
         if _gen_oblique_mod(s, j, v):
             continue
         if (upos[j] in _NOMINAL and j + 1 < n
-                and upos[j + 1] == "ADP"):
+                and upos[j + 1] == "ADP"
+                # ... except the concessive class, whose frame
+                # signals a compound subject (sakatlığına RAĞMEN
+                # oynadı keeps the izafet reading)
+                and lows[j + 1] not in ("rağmen",
+                                                    "karşın")):
             continue  # a bare-Nom ADP complement is inside an
             # adjunct phrase (yazışmaları GÜVENLİK İÇİN şifreledi)
         if upos[j] == "NOUN" and roots[j] in _TEMPORAL_ROOTS:
@@ -759,6 +782,8 @@ def _acc_nom_gate(s, i: int) -> Optional[int]:
         i > 0 and eff_case[i - 1] == "Gen"
         and i + 1 < n and upos[i + 1] == "VERB" and subord[i + 1]
         and tagsets[i + 1] & {"P3sg", "P3pl"}
+        and roots[i + 1] in _TRANSITIVE_ROOTS
+        and "Pass" not in tagsets[i + 1]
     ):
         # genitive + ambiguous -(s)I noun + P3sg-agreeing TRANSITIVE
         # nominalization directly after: the nominalization's own
@@ -831,6 +856,7 @@ def _acc_nom_gate(s, i: int) -> Optional[int]:
         and not eff_poss[i - 2]
         and roots[i - 2] not in _TEMPORAL_ROOTS
         and roots[v] in _TRANSITIVE_ROOTS
+        and "Pass" not in tagsets[v]
     ):
         # the left neighbor already heads its own bare-modifier
         # izafet (kar YAĞIŞI): a possessed-Nom head cannot itself
@@ -845,7 +871,7 @@ def _acc_nom_gate(s, i: int) -> Optional[int]:
 def _acc_nom_weigh(s, i: int, v: int) -> None:
     tokens, n, lows, tagsets, roots = s.tokens, s.n, s.lows, s.tagsets, s.roots
     base_case, upos, eff_case, eff_poss = s.base_case, s.upos, s.eff_case, s.eff_poss
-    finite, copular = s.finite, s.copular
+    subord, finite, copular, preds = s.subord, s.finite, s.copular, s.preds
     juxt_mod = s.juxt_mod
     prev_bare_mod = (
         i > 0
@@ -859,7 +885,8 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
         and roots[i - 1] not in _MATERIAL_NOUNS
         # a plural modifier does not license izafet
         and "A3pl" not in tagsets[i - 1]
-        and roots[i - 1] not in _TEMPORAL_ROOTS
+        and not (roots[i - 1] in _TEMPORAL_ROOTS
+                 and i > 1 and upos[i - 2] == "DET")
         # the name of a title run is not a compound modifier
         # (Gazeteci YILDIZ soruları ... yanıtladı: Yıldız stays in
         # the mention, the possessed nominal is the clause object)
@@ -884,6 +911,7 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
     obligate_v = "Caus" in tagsets[v] or (
         v > 0 and upos[v - 1] == "NOUN" and v - 1 != i
         and eff_case[v - 1] in ("Nom", "") and roots[v] == "et"
+        and roots[v - 1] not in _INTRANS_LIGHT_NOMINALS
     )
     transitive_v = (
         roots[v] in _TRANSITIVE_ROOTS
@@ -912,7 +940,10 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
         i + 2 < n
         and upos[i + 1] == "CCONJ"
         and lows[i + 1] in ("ve", "veya", "ya")
+        and upos[i + 2] in _NOMINAL
         and base_case[i + 2] == "Acc"
+        and transitive_v
+        and "Pass" not in tagsets[v]
     ):
         # an ambiguous nominal coordinated with an overt/resolved
         # Acc conjunct shares its case: both are the transitive
@@ -928,12 +959,15 @@ def _acc_nom_weigh(s, i: int, v: int) -> None:
         # (piknik ateşi YAKMAK yasak) there is no subject slot the
         # bare modifier could fill — an overt infinitive subject
         # would be genitive — so the compound reading stands
-        or copular
+        or (copular and subord[v]
+            and tagsets[v] & {"Inf", "Inf1", "Inf2", "Inf3"})
     ):
         eff_case[i], eff_poss[i] = "Nom", True
     elif (roots[i] in _TEMPORAL_ROOTS
           and "A3pl" in tagsets[i]
           and any(eff_case[j] == "Acc"
+                  and not any(pp != v and min(j, v) < pp < max(j, v)
+                              for pp in preds)
                   for j in range(n) if j != i)):
         # distributive-plural time expression with the clause's
         # object slot already filled (kapısını GECELERİ kilitledi =
@@ -1141,7 +1175,9 @@ def _verb_attachment(s):
             fin = next((p for p in finite if p > i), root)
             emb = next(
                 (j for j in range(i + 1, fin)
-                 if upos[j] == "VERB" and subord[j]),
+                 if upos[j] == "VERB" and subord[j]
+                 and tagsets[j] & {"Inf2", "FutPart", "PastPart"}
+                 and base_case[j] in ("Acc", "Dat")),
                 None,
             )
             if emb is not None and any(
@@ -1154,7 +1190,13 @@ def _verb_attachment(s):
                     # material (tercih YAPMAYA başladı keeps the
                     # converb on the matrix), and non-adjacent bare
                     # nominals are the matrix's arguments
-                    or (j == emb - 1 and "Pass" in tagsets[emb])
+                    or (j == emb - 1
+                        and upos[j] == "NOUN"
+                        and base_case[j] in ("Nom", "")
+                        and roots[j] not in _TEMPORAL_ROOTS
+                        and not (roots[emb] in ("et", "yap", "ol",
+                                                   "ver", "al", "kıl")
+                                 and "Pass" not in tagsets[emb]))
                     for j in range(i + 1, emb)):
                 heads[i], rels[i] = emb + 1, "advcl"
             else:
@@ -1169,7 +1211,7 @@ def _verb_attachment(s):
             elif "Inf" in tags and i + 1 < n and upos[i + 1] == "ADP":
                 # purpose clause: kazanmak için çalıştı
                 heads[i], rels[i] = p + 1, "advcl"
-            elif "Inf" in tags:
+            elif "Inf" in tags and case in ("", "Nom"):
                 # bare infinitive: complement of a volitional/phasal
                 # matrix verb (çalışmak İSTİYOR -> ccomp); subject of an
                 # impersonal predicate otherwise (çalışmak gerekiyor)
@@ -1177,27 +1219,30 @@ def _verb_attachment(s):
                     "ccomp" if roots[p] in _INF_CCOMP_ROOTS else "csubj"
                 )
                 heads[i], rels[i] = p + 1, rel_inf
-            elif (case in ("Acc", "Dat")
+            elif (tags & {"FutPart", "PastPart", "Inf2"}
+                  and case in ("Acc", "Dat")
                   # -mAsInA rağmen/karşın is the concessive ADVERBIAL
                   # clause (zarar ETMESİNE rağmen sürdürdü), never a
                   # complement
                   and not (i + 1 < n and lows[i + 1] in ("rağmen", "karşın"))):
                 heads[i], rels[i] = p + 1, "ccomp"
-            elif case in ("Acc", "Dat"):
+            elif (tags & {"FutPart", "PastPart", "Inf2"}
+                  and case in ("Acc", "Dat")):
                 heads[i], rels[i] = p + 1, "advcl"
-            elif "Inf2" in tags:
+            elif "Inf2" in tags and case in ("", "Nom"):
                 # bare-Nom -mA nominalization heading the subject slot is
                 # the clausal SUBJECT of the matrix predicate (Projenin
                 # zamanında BİTMESİ herkesi sevindirdi)
                 heads[i], rels[i] = p + 1, "csubj"
             elif (
-                case in ("Abl", "Loc")
+                tags & {"PastPart"}
+                and case in ("Abl", "Loc")
                 and i + 1 < n
                 and lows[i + 1] in ("sonra", "önce")
             ):
                 # temporal adverbial frame: yedikten sonra
                 heads[i], rels[i] = p + 1, "advcl"
-            elif case == "Loc":
+            elif tags & {"PastPart"} and case == "Loc":
                 # -DIğIndA 'when'-clause (ulaştıklarında yağmur
                 # başlamıştı): temporal advcl on the next finite
                 # predicate, like -IncA
@@ -1215,7 +1260,7 @@ def _verb_attachment(s):
             prev_fin = max([v for v in finite if v < i], default=-1)
             ki_c = next(
                 (c for c in range(prev_fin + 1, i)
-                 if upos[c] == "SCONJ"),
+                 if upos[c] == "SCONJ" and lows[c] == "ki"),
                 None,
             )
             if ki_c is not None:
@@ -1297,7 +1342,7 @@ def _compound_walk(s, nom, i: int):
 
 def _function_words(s):
     n, lows, tagsets, upos = s.n, s.lows, s.tagsets, s.upos
-    heads, rels, subord = s.heads, s.rels, s.subord
+    eff_poss, heads, rels, subord = s.eff_poss, s.heads, s.rels, s.subord
     converb, root, preds = s.converb, s.root, s.preds
     for i in range(n):
         if heads[i] != -1:
@@ -1318,6 +1363,7 @@ def _function_words(s):
                 if (
                     prev_w is not None
                     and upos[prev_w] == "CCONJ"
+                    and lows[prev_w] == "ya"
                 ):
                     # the bigram second correlative 'ya da' keeps ya as
                     # the cc and da as its fixed continuation
@@ -1364,6 +1410,8 @@ def _function_words(s):
             if (
                 i > 0
                 and lows[i - 1] == "yüzde"
+                and upos[i - 1] == "NOUN"
+                and not eff_poss[i - 1]
             ):
                 # percentage frame: the measure noun heads its numeral
                 # (yüzde ON arttı -> on nummod yüzde)
@@ -1437,7 +1485,7 @@ def _adverb_head(s, i: int) -> None:
         heads[i], rels[i] = _next_pred(s, i) + 1, "advmod"
 
 def _adjective_head(s, i: int) -> None:
-    n, tagsets, upos, heads = s.n, s.tagsets, s.upos, s.heads
+    n, tagsets, roots, upos, heads = s.n, s.tagsets, s.roots, s.upos, s.heads
     rels, corr_cc_idx = s.rels, s.corr_cc_idx
     j = i - 1
     while j >= 0 and upos[j] == "PUNCT":
@@ -1468,6 +1516,8 @@ def _adjective_head(s, i: int) -> None:
     if (
         i + 1 < n
         and upos[i + 1] == "VERB"
+        and roots[i + 1] in ("ol", "et", "gel", "görün", "dur",
+                                "kal", "tut")
     ):
         # predicative complement of a copular/psych/keep verb
         # (rahatsız oldu, mantıklı geldi)
@@ -1539,7 +1589,8 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
         and eff_case[i + 1] in ("Nom", "")
         and not eff_poss[i + 1]
         and upos[i + 2] in _NOMINAL
-        and eff_poss[i + 2] and i + 2 != vt
+        and eff_poss[i + 2]
+        and i + 1 != vt and i + 2 != vt
         and any(
             upos[j] in ("PROPN", "PRON")
             or (upos[j] in _NOMINAL
@@ -1574,6 +1625,7 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
         and any(
             upos[j] in _NOMINAL
             and eff_case[j] in ("Nom", "")
+            and roots[j] not in _TEMPORAL_ROOTS
             for j in range(i)
         )
     ):
@@ -1604,6 +1656,7 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
         and roots[v] in ("et", "ol")
         and "Pass" in tagsets[v]
         and low_root in _INTRANS_LIGHT_NOMINALS
+        and eff_case[i] in ("Nom", "")
     ):
         heads[i], rels[i] = v + 1, "compound"
         return True
@@ -1626,6 +1679,7 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
                                 "kal")
         and tagsets[i + 1] & {"PresPart", "PastPart", "FutPart"}
         and eff_case[i] in ("Nom", "")
+        and not eff_poss[i]
         and (roots[i + 1] != "kal"
              or low_root in ("miras", "yadigar", "emanet",
                              "armağan", "hatıra"))
@@ -1646,6 +1700,7 @@ def _nominal_frame(s, i: int, p: int, v: Optional[int], vt: int) -> bool:
         and rels[i - 1] == "amod" and heads[i - 1] == i + 1
         and i - 2 >= 0 and upos[i - 2] == "CCONJ"
         and lows[i - 2] not in ("de", "da")
+        and i - 2 not in corr_cc_idx
     )
     if ((prev_upos == "CCONJ" and lows[i - 1] not in ("de", "da")
             and i not in corr_first
@@ -1742,7 +1797,9 @@ def _genitive_argument(s, i: int, p: int, vt: int) -> None:
                  # (Takımın erken GELMESİ hocayı şaşırttı —
                  # only an adverb intervenes)
                  or sub_v < nom
-                 or not eff_poss[nom]
+                 or (not eff_poss[nom]
+                     and not tagsets[nom]
+                     & {"P1sg", "P2sg", "P1pl", "P2pl"})
                  # an ADJUNCT-cased (Loc/Abl/Ins) possessed
                  # nominal between the genitive and the
                  # nominalization is the clause's adverbial, not
@@ -1752,7 +1809,9 @@ def _genitive_argument(s, i: int, p: int, vt: int) -> None:
                  # head stays the possessed (taraftarların
                  # DESTEĞİNİ unutmayacağını), and another
                  # genitive closer to the nominalization blocks
-                 or eff_case[nom] in ("Loc", "Abl", "Ins")
+                 or (eff_case[nom] in ("Loc", "Abl", "Ins")
+                     and not any(eff_case[k] == "Gen"
+                                 for k in range(i + 1, sub_v)))
                  # fossilized P3sg compounds (yurtdışı, yurtiçi)
                  # never take a genitive possessor: the genitive
                  # is the nominalization's subject
@@ -1766,7 +1825,9 @@ def _genitive_argument(s, i: int, p: int, vt: int) -> None:
                  # subject (kuraklığın TARIM ÜRÜNLERİNİ
                  # etkileyeceğini); later genitives keep the
                  # possessor read (tüccarın ÜLKENİN ürünlerini ...)
-                 or walked)
+                 or (walked
+                     and not any(eff_case[k] == "Gen"
+                                 for k in range(i))))
         ):
             heads[i], rels[i] = sub_v + 1, "nsubj"
             # the nominalization's subject slot is now filled:
@@ -1819,7 +1880,8 @@ def _oblique_argument(s, i: int, p: int, vt: int, case: str) -> None:
         heads[i], rels[i] = i + 2, "obl"
     elif (
         i == 0
-        and vt is not None and vt != p and subord[vt]
+        and vt is not None and vt != p
+        and upos[vt] == "VERB" and subord[vt]
         and i + 1 < vt
         and upos[i + 1] == "ADV"
     ):
@@ -1836,7 +1898,7 @@ def _oblique_argument(s, i: int, p: int, vt: int, case: str) -> None:
 def _bare_nominal(s, i: int, p: int, v: Optional[int], vt: int) -> None:
     n, lows, tagsets, roots, upos = s.n, s.lows, s.tagsets, s.roots, s.upos
     eff_case, eff_poss, heads, rels = s.eff_case, s.eff_poss, s.heads, s.rels
-    subord, converb = s.subord, s.converb
+    subord, converb, preds = s.subord, s.converb, s.preds
     preverbal = i + 1 == vt
     # a coordinated NP is preverbal as a WHOLE: the first
     # conjunct inherits preverbality from its last conj child
@@ -1903,6 +1965,8 @@ def _bare_nominal(s, i: int, p: int, v: Optional[int], vt: int) -> None:
         and upos[i + 1] == "ADJ"
         and "Rel" in tagsets[i + 1]
         and tagsets[i + 1] & {"P3sg", "P3pl"}
+        and not eff_poss[i]
+        and "A3pl" not in tagsets[i]
     ):
         heads[i], rels[i] = i + 2, "nmod"
         return
@@ -1948,6 +2012,11 @@ def _bare_nominal(s, i: int, p: int, v: Optional[int], vt: int) -> None:
         and ("Pass" in tagsets[p]
              or any(eff_case[k] == "Acc"
                     for k in range(i + 3, p)))
+        # ... and never INTO an own-subject converb clause with
+        # a later matrix: the chain pair is the converb's
+        # subject and the first bare exits to the matrix
+        # (Organizatör bilet SATIŞLARI durunca ... güncelledi)
+        and not (converb[p] and any(pp > p for pp in preds))
     ):
         heads[i], rels[i] = i + 2, "nmod"
         return
@@ -2008,10 +2077,15 @@ def _compoundable(s, i: int, p: int) -> bool:
              # ... and inside the institutional izafet class
              # (Bakanlar KURULU, öğretmenler ODASI)
              or roots[i + 1] in _PL_IZAFET_HEADS
-             or roots[i + 1] in _SPATIAL_ROOTS
+             or (roots[i + 1] in _SPATIAL_ROOTS
+                 and eff_case[i + 1] in ("Dat", "Loc", "Abl"))
              # benefit/side relational heads take plural
              # possessors too (depremzedeler YARARINA konser)
-             or roots[i + 1] in ("yarar", "leh", "aleyh", "taraf"))
+             or (roots[i + 1] in ("yarar", "leh", "aleyh")
+                 and eff_case[i + 1] in ("Dat", "Loc")
+                 and eff_poss[i + 1])
+             or (roots[i + 1] == "taraf"
+                 and eff_case[i + 1] == "Abl" and eff_poss[i + 1]))
         # a possessed nominal heads its own phrase (Kitabın son
         # bölümü okuyucuları şaşırttı -> bölümü is the subject,
         # not a modifier of okuyucuları) — UNLESS the next nominal
@@ -2040,7 +2114,8 @@ def _compoundable(s, i: int, p: int) -> bool:
                  and roots[i + 1] == "taraf"))
         and not (i + 1 in run_member and i not in run_member)
     )
-    if compoundable and i + 2 < n and upos[i + 2] == "ADP":
+    if (compoundable and i + 2 < n and upos[i + 2] == "ADP"
+            and eff_poss[i + 1]):
         # the possessed nominal heads a postposition phrase: the
         # bare nominal compounds in only when it is NOT a viable
         # clause subject (MÜDÜR ekibi ile toplantı yaptı ->
@@ -2049,6 +2124,8 @@ def _compoundable(s, i: int, p: int) -> bool:
         later_subj = any(
             upos[j] in _NOMINAL
             and eff_case[j] in ("Nom", "")
+            and not eff_poss[j]
+            and roots[j] not in _TEMPORAL_ROOTS
             # the light-verb nominal is not a subject candidate
             and not (j + 1 < n and upos[j + 1] == "VERB"
                      and roots[j + 1] in ("et", "yap", "ol"))
@@ -2064,10 +2141,12 @@ def _compoundable(s, i: int, p: int) -> bool:
     return _case_head_compoundable(s, i, p, compoundable)
 
 def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
-    tokens, tagsets, roots, upos = s.tokens, s.tagsets, s.roots, s.upos
+    tokens, n, tagsets, roots, upos = s.tokens, s.n, s.tagsets, s.roots, s.upos
     eff_case, eff_poss, heads, subj_of = s.eff_case, s.eff_poss, s.heads, s.subj_of
     low_root = roots[i]
-    if compoundable and eff_case[i + 1] == "Gen":
+    if (compoundable and eff_case[i + 1] == "Gen"
+            and eff_poss[i + 1]
+            and upos[i] in ("NOUN", "PROPN")):
         # a bare nominal before a possessed GENITIVE is the
         # zincirleme chain's modifier outright (OKUL müdürünün
         # odası): the genitive cannot be a clause argument, so
@@ -2084,6 +2163,7 @@ def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
                         None)
         if (gen_head is not None
                 and eff_case[gen_head] == "Acc"
+                and "Pass" not in tagsets[p]
                 and not _verb_person_12(s, p)
                 and p not in subj_of
                 and not any(upos[j] in ("PROPN", "PRON")
@@ -2102,6 +2182,7 @@ def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
             and not ("Pass" in tagsets[p] and any(
                 upos[j] in _NOMINAL
                 and eff_case[j] in ("Nom", "")
+                and roots[j] not in _TEMPORAL_ROOTS
                 for j in range(i + 2, p)))
             # the same holds under an INTRANSITIVE predicate: it
             # cannot absorb a later Nom nominal as an object, so
@@ -2112,12 +2193,14 @@ def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
                      and any(
                          upos[j] in _NOMINAL
                          and eff_case[j] in ("Nom", "")
+                         and roots[j] not in _TEMPORAL_ROOTS
                          for j in range(i + 2, p)))
             and not ("A3pl" in tagsets[p] and "A3pl" not in tagsets[i])
             # a spatial-relational frame binds its complement even
             # with the subject slot open (ÜLKELER arasında ticaret
             # gelişti -> nmod, the subject comes later)
-            and roots[i + 1] not in _SPATIAL_ROOTS
+            and not (roots[i + 1] in _SPATIAL_ROOTS
+                     and eff_case[i + 1] in ("Dat", "Loc", "Abl"))
             # a LOC-gazetteer name before a possessed nominal is
             # its venue/place modifier, not the clause subject
             # (İZMİR limanına yeni vinçler kuruldu)
@@ -2135,7 +2218,10 @@ def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
                      or (upos[j] in _NOMINAL
                          and eff_case[j] in ("Nom", "")
                          and not eff_poss[j]
-                         and roots[j] not in _TEMPORAL_ROOTS))
+                         and roots[j] not in _TEMPORAL_ROOTS
+                         and not (j + 1 < n
+                                  and upos[j + 1] in _NOMINAL
+                                  and eff_poss[j + 1])))
                 for j in range(0, i - 1)
             )
         )
@@ -2145,7 +2231,7 @@ def _case_head_compoundable(s, i: int, p: int, compoundable: bool) -> bool:
 def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
                        preverbal: bool, lv_nominal: bool,
                        compoundable: bool) -> None:
-    n, lows, tagsets, roots = s.n, s.lows, s.tagsets, s.roots
+    n, lows, tagsets, roots, base_case = s.n, s.lows, s.tagsets, s.roots, s.base_case
     upos, eff_case, eff_poss, heads = s.upos, s.eff_case, s.eff_poss, s.heads
     rels, subord, converb, subj_of = s.rels, s.subord, s.converb, s.subj_of
     low_root = roots[i]
@@ -2175,6 +2261,8 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
         # ulaştı), and frequency nouns never are (üç KERE
         # dinledi)
         and not any(upos[k] != "PUNCT" for k in range(i))
+        and low_root not in ("kez", "kere", "defa", "sefer")
+        and p not in subj_of
         and not _verb_person_12(s, p)
         and upos[p] == "VERB"
         and not any(
@@ -2213,6 +2301,8 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
             heads[i], rels[i] = p + 1, "obl"
     elif (
         lows[i] in _PRON_12
+        and _verb_person_12(s, p)
+        and p not in subj_of
     ):
         # a 1st/2nd-person pronoun IS the subject of a
         # person-marked predicate (HEPİMİZ sevindik, biz
@@ -2232,15 +2322,24 @@ def _bare_nominal_role(s, i: int, p: int, v: Optional[int], vt: int,
           and upos[vt] == "VERB"
           and (converb[vt]
                or ("Pass" in tagsets[vt] and subord[vt])
-               # -DIk participle clauses host their own subject
-               # the same way (turta PİŞTİKTEN sonra fırını
-               # kapattı)
-               or "PastPart" in tagsets[vt])
+               # -DIktAn sonra/önce temporal clauses host their
+               # own subject the same way (turta PİŞTİKTEN
+               # sonra fırını kapattı)
+               or ("PastPart" in tagsets[vt]
+                   and base_case[vt] == "Abl"
+                   and vt + 1 < n
+                   and lows[vt + 1] in ("sonra",
+                                                    "önce")))
           and vt != p and p in subj_of
           and not any(rels[j] == "nsubj" and heads[j] == vt + 1
                       for j in range(i))
           and (roots[vt] not in _TRANSITIVE_ROOTS
-               or "Pass" in tagsets[vt])):
+               or "Pass" in tagsets[vt])
+          and ("Pass" in tagsets[vt]
+               or "Caus" not in tagsets[vt])
+          and not (vt > 0
+                   and roots[vt] in ("et", "yap", "ol")
+                   and "Pass" not in tagsets[vt])):
         # a bare nominal before an own-subject-capable converb
         # or passive subordinate — of an unlisted/mixed root, a
         # PASSIVE (eserler ASILIRKEN; karar VERİLMEYECEĞİNİ), or
@@ -2305,7 +2404,7 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
     if preverbal:
         _preverbal_subject(s, i, p, vt, lv_nominal)
     elif (
-        (converb[p]
+        ((converb[p] and tagsets[p] & {"When", "AsLongAs"})
          # conditional protases host their own subject the
          # same way (Uzmanlar fiyatlar DÜŞERSE ... öngörüyor)
          or cond[p])
@@ -2313,6 +2412,7 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
             upos[j] in _NOMINAL
             and eff_case[j] in ("Nom", "")
             and not eff_poss[j]
+            and roots[j] not in _TEMPORAL_ROOTS
             for j in range(i + 1, p)
         )
         and (mp := next((pp for pp in preds if pp > p),
@@ -2339,7 +2439,8 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
             # ... nor is a bare modifier feeding a possessed
             # izafet head (AMBAR kapaklarını, KONSER programını
             # — object material, not a subject)
-            and not (j + 1 < n and eff_poss[j + 1])
+            and not (j + 1 < n and upos[j + 1] in _NOMINAL
+                     and eff_poss[j + 1])
             for j in range(p + 1, mp)
         )
     ):
@@ -2355,6 +2456,7 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
           and (heads[p] - 1) in subj_of
           and (roots[p] in _TRANSITIVE_ROOTS
                or "Caus" in tagsets[p])
+          and "Pass" not in tagsets[p]
           and not eff_poss[i]
           and i + 1 < n
           and upos[i + 1] == "NOUN" and eff_poss[i + 1]
@@ -2374,7 +2476,7 @@ def _open_subject(s, i: int, p: int, vt: int, preverbal: bool,
         subj_of[p] = i
 
 def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
-    tagsets, roots = s.tagsets, s.roots
+    n, lows, tagsets, roots, base_case = s.n, s.lows, s.tagsets, s.roots, s.base_case
     upos, eff_case, eff_poss, heads = s.upos, s.eff_case, s.eff_poss, s.heads
     rels, subord, converb, subj_of = s.rels, s.subord, s.converb, s.subj_of
     subjish = _subjish(s, i, p, vt)
@@ -2402,6 +2504,8 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         subj_of[p] = i
     elif (
         subjish
+        and p not in subj_of
+        and upos[vt] == "VERB"
         and tagsets[vt] & {"PresPart"}
         and heads[vt] > 0
         and eff_case[heads[vt] - 1] not in ("Nom", "")
@@ -2416,6 +2520,8 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         subj_of[p] = i
     elif (
         subjish
+        and p not in subj_of
+        and upos[vt] == "VERB"
         and subord[vt]
         and any(
             upos[j] in _NOMINAL
@@ -2432,6 +2538,8 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         subj_of[p] = i
     elif (
         subjish
+        and p not in subj_of
+        and upos[vt] == "VERB"
         and converb[vt]
         and ("A3pl" in tagsets[i] or eff_poss[i])
     ):
@@ -2445,9 +2553,19 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         # OWN subject (Kazanın NEDENİ araştırılırken YOL
         # trafiğe kapatıldı)
         if (("Pass" in tagsets[vt] or _intrans(s, vt))
+                # only when DIRECTLY adjacent to the
+                # converb (Kazanın nedeni
+                # ARAŞTIRILIRKEN): with a closer bare
+                # nominal in between, THAT one is the
+                # converb's subject and this izafet
+                # head serves the matrix (Maden ekibi
+                # GALERİ çökünce ... başlattı)
+                and i + 1 == vt
                 and any(
                     upos[j] in _NOMINAL
                     and eff_case[j] in ("Nom", "")
+                    and not eff_poss[j]
+                    and roots[j] not in _TEMPORAL_ROOTS
                     for j in range(vt + 1, p))):
             heads[i], rels[i] = vt + 1, "nsubj"
         else:
@@ -2455,10 +2573,15 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
             subj_of[p] = i
     elif (
         vt != p
+        and upos[vt] == "VERB"
         and (converb[vt]
-             # a -DIk participle clause is subject-hosting
-             # the same way (YARIŞ bittikten sonra ...)
-             or "PastPart" in tagsets[vt])
+             # the -DIktAn sonra/önce temporal frame is a
+             # subject-hosting adverbial clause the same
+             # way (YARIŞ bittikten sonra ...)
+             or ("PastPart" in tagsets[vt]
+                 and base_case[vt] == "Abl"
+                 and vt + 1 < n
+                 and lows[vt + 1] in ("sonra", "önce")))
         and (_intrans(s, vt) or "Pass" in tagsets[vt])
     ):
         # an INTRANSITIVE or PASSIVE converb cannot take
@@ -2467,7 +2590,8 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
         # verilmeden önce taraflar dinlendi)
         heads[i], rels[i] = vt + 1, "nsubj"
     elif (roots[vt] in ("ol", "et")
-          and not lv_nominal):
+          and not lv_nominal
+          and not eff_poss[i]):
         # support-verb construction: üye oldu, ikamet
         # etti (yap/gör light verbs keep their obj per
         # UD-BOUN)
@@ -2481,13 +2605,15 @@ def _preverbal_subject(s, i: int, p: int, vt: int, lv_nominal: bool) -> None:
              # weather sense is its subject (GÜNEŞ
              # açınca, HAVA açtı)
              or (roots[vt] in _WEATHER_INTRANS_VERBS
-                 and roots[i] in _WEATHER_NOUNS)
+                 and roots[i] in _WEATHER_NOUNS
+                 and "Caus" not in tagsets[vt])
              # an INTRANSITIVE light-verb complex cannot
              # take the bare nominal as object either
              # (festival DEVAM etti -> festival subject)
              or (vt > 0 and vt - 1 != i
                  and roots[vt] in ("et", "ol")
                  and roots[vt - 1] in _INTRANS_LIGHT_NOMINALS))
+        and "Pass" not in tagsets[vt]
     ):
         # a bare nominal cannot be the object of an
         # intransitive finite verb: with the subject slot
@@ -2600,7 +2726,7 @@ def _bare_obl_compound(s):
 # transitive verb, a first conjunct that fell to obl is the shared
 # object (ikramiye ve ek İZİN verdi -> ikramiye obj)
 def _first_conjunct_role(s):
-    n, roots, upos, eff_case = s.n, s.roots, s.upos, s.eff_case
+    n, tagsets, roots, upos, eff_case = s.n, s.tagsets, s.roots, s.upos, s.eff_case
     eff_poss, heads, rels = s.eff_poss, s.heads, s.rels
     for k in range(n):
         if rels[k] != "conj" or heads[k] <= 0:
@@ -2611,7 +2737,8 @@ def _first_conjunct_role(s):
                 and eff_case[k] in ("Nom", "")
                 and k + 1 < n and k + 1 == heads[f] - 1
                 and upos[k + 1] == "VERB"
-                and roots[k + 1] in _TRANSITIVE_ROOTS):
+                and roots[k + 1] in _TRANSITIVE_ROOTS
+                and "Pass" not in tagsets[k + 1]):
             rels[f] = "obj"
 
 # --- leftovers -------------------------------------------------------

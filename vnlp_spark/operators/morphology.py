@@ -774,6 +774,7 @@ class CandidateGenerator:
                     stem_tags = ["Noun+Prop"]
                 elif (
                     suffix.startswith("'")
+                    and suffix in self.suffix_dic
                     and "Noun+Prop" in stem_tags
                 ):
                     stem_tags = ["Noun+Prop"]
@@ -850,13 +851,14 @@ class Rivals:
                 # an underived (no-DB) finite verb rival demotes
                 # voice-derived readings of the same token (oynuyor:
                 # oyna+Prog1 over oy+Pass)
-                plain_finite = plain_finite or "DB" not in tset
+                plain_finite = plain_finite or (first == "Verb"
+                                                and "DB" not in tset)
             if not sfx and stem:
                 whole = True
                 adj_whole = adj_whole or first == "Adj"
-            if "Pass" in tset:
+            if "Pass" in tset and "DB" in tset:
                 passive = True
-            if first.startswith("Verb") and tset & _CONVERB_TAGS:
+            if first.startswith("Verb") and stem and tset & _CONVERB_TAGS:
                 converb = True
             # a plain accusative reading of a dictionary stem (kent+i,
             # çocuğ+u) rivals the P3sg+Nom izafet reading of the same
@@ -865,7 +867,7 @@ class Rivals:
             if sfx and stem and "Acc" in tset and "Pnon" in tset:
                 if first == "Noun" and "DB" not in tset:
                     acc = True
-                elif tags[-3:] == ["A3sg", "Pnon", "Acc"]:
+                elif "DB" in tset and tags[-3:] == ["A3sg", "Pnon", "Acc"]:
                     derived_acc.add((root, sfx))
             if "P3sg" in tset and "Nom" in tset:
                 p3nom.add((root, sfx))
@@ -947,6 +949,7 @@ class HeuristicDisambiguator:
                 and pre != root
                 and pre[:-1] == root[:-1]
                 and root[-1] in "pçtk"
+                and pre[-1:] in ("b", "c", "d", "ğ", "g")
                 and not (root[-1] == "t"
                          and root in ("git", "et", "tat", "güt", "dit"))
             ):
@@ -1001,6 +1004,7 @@ class HeuristicDisambiguator:
             # lexicalized -mA noun keeps winning (ödemeyi iade etti)
             if (
                 "Inf2" in tag_set
+                and "DB" in tags
                 and tag_set & {"Acc", "Dat"}
                 # a possessed-Nom izafet group licenses the frame the
                 # same way a bare nominal does (rüzgar santrali KURMAYI
@@ -1032,7 +1036,7 @@ class HeuristicDisambiguator:
                 s += 10.0
             # prefer the underived finite reading over a voice-derived
             # rival (oynuyor = oyna+Prog1, not oy+Pass+Prog1)
-            if "Pass" in tag_set and rivals.plain_finite:
+            if "Pass" in tag_set and "DB" in tags and rivals.plain_finite:
                 s -= 6.0
             # ... except when the "underived" rival is itself a rare -Hn
             # lexicalization of the passive's base verb: karar alındı is
@@ -1054,7 +1058,7 @@ class HeuristicDisambiguator:
             # (imzalanmadan önce = 'before being signed'); sized to beat
             # the known-lexicon gap of derived -lA verb stems
             s -= 12.0
-        if tags[0] == "Noun" and root == "alındı":
+        if tags[0] == "Noun" and root == "alındı" and rivals.passive:
             # 'receipt' is live only as a modifier (alındı belgesi);
             # against a passive-finite rival the predicate reading wins
             # (karar alındı)
@@ -1162,6 +1166,7 @@ class HeuristicDisambiguator:
             if (
                 ctx.non_initial
                 and first in ("Noun", "Adj")
+                and "Nom" in tag_set
                 and _STARTS_UPPER.match(ctx.token)
                 and not ctx.prev_is_punct
             ):
@@ -1195,7 +1200,7 @@ class HeuristicDisambiguator:
         # except the plain plural of a real dictionary stem (SU+lar:
         # sular the noun, not sula+Aor)
         if suffix and len(root) <= 2 and not (
-            suffix in ("lar", "ler")
+            suffix in ("lar", "ler") and self._in_stems(root)
         ):
             s -= 8.0 if len(root) == 1 else 3.0
         # gemination readings (root+suffix one char short of the surface,
@@ -1320,7 +1325,8 @@ class HeuristicDisambiguator:
                 # all: a plural possessed after one reads attributive +
                 # Acc (kışlık LASTİKLERİ); substance duals keep the
                 # license (DOLU taneleri = hailstones)
-                or (prev_case == "NomDq" and "A3pl" in tag_set)
+                or (prev_case == "NomDq" and "A3pl" in tag_set
+                    and root not in _PL_IZAFET_HEADS)
             )
         ):
             s -= 2.5
@@ -1331,10 +1337,12 @@ class HeuristicDisambiguator:
         if (
             first == "Noun"
             and "Agt" in tag_set
+            and "DB" in tag_set
             and root[-2:] in ("ma", "me")
             # a real deverbal -mA noun, not an accidental short stem
             # (maç+ı must never fall to ma+çı)
             and len(root) >= 5
+            and self._in_stems(root)
         ):
             s += 5.0
         # nominal priors: unmarked possessive > P3sg > other
@@ -1376,11 +1384,11 @@ class HeuristicDisambiguator:
             s += 8.0
         if "Prop" in tag_set and (
             "'" in token
-            or ctx.non_initial
-            or to_lower(token) in self.gazetteer
+            or (_STARTS_UPPER.match(token) and ctx.non_initial)
+            or (_STARTS_UPPER.match(token) and to_lower(token) in self.gazetteer)
         ):
             s += 12.0  # apostrophe, mid-sentence capital, or gazetteer name
-        elif "Prop" in tag_set and "'" not in token:
+        elif "Prop" in tag_set and not ctx.non_initial and "'" not in token:
             # sentence-initial capitalization alone is NOT a Prop signal:
             # prefer any real analysis rival (Yaşlı adam = yaş+lı, Sabah
             # kahvaltıda = sabah+Noun); novel true names keep winning
@@ -1623,7 +1631,7 @@ def analysis_tags(analysis: str) -> AnalysisTags:
         # possessed-Nom is its own context class: it heads izafet
         # chains rather than feeding them (ekibi TARİHİ konağı ...)
         context_case = "NomP"
-    elif case == "Nom" and "A3pl" in plus:
+    elif case == "Nom" and "A3pl" in plus and "Pnon" in plus:
         # a PLURAL bare-Nom is its own class too: it licenses izafet
         # only for institutional heads (Bakanlar Kurulu), not the
         # open class — see the P3sg+Nom demotion in ``_nominal_score``
@@ -1756,7 +1764,7 @@ def _light_verb_nominal(s: MorphState) -> None:
         if not cur.tagset & _FINITE_TAGS:
             continue
         low = lows[idx]
-        if "Noun" in stems.get(low, ()):
+        if low != cur.root and "Noun" in stems.get(low, ()):
             out[idx] = low + "+Noun+A3sg+Pnon+Nom"
 
 
@@ -1810,7 +1818,8 @@ def _missing_predicate(s: MorphState) -> None:
                            for j in range(idx))):
             break
         for root, sfx, tags in _real_candidates(tokens[idx]):
-            if tags[0] == "Verb" and "DB" not in tags:
+            if (tags[0] == "Verb" and "DB" not in tags
+                    and _FINITE_TAGS & set(tags)):
                 out[idx] = root + "+" + "+".join(tags)
                 break
         break
@@ -1872,7 +1881,8 @@ def _support_verb(s: MorphState) -> None:
 
 
 # the same repair for the frozen son-LVC frames: the Adj reading of
-# "son" directly before a verb is the lexicalized event nominal (çalışmaya SON verdi, tartışma SON buldu), never the
+# "son" directly before ver-/bul- finite is the lexicalized event
+# nominal (çalışmaya SON verdi, tartışma SON buldu), never the
 # adjective 'last' (which needs a nominal host)
 def _son_light_verb(s: MorphState) -> None:
     out = s.analyses
@@ -1880,7 +1890,9 @@ def _son_light_verb(s: MorphState) -> None:
         if out[idx] != "son+Adj":
             continue
         nxt = analysis_tags(out[idx + 1])
-        if "Verb" in nxt.tagset:
+        if ("Verb" in nxt.tagset and nxt.tags[0] in ("ver", "bul")
+                and {"Aor", "Past", "Prog1", "Fut", "Narr",
+                     "Imp"} & nxt.tagset):
             out[idx] = "son+Noun+A3sg+Pnon+Nom"
 
 
@@ -1916,14 +1928,16 @@ def _stranded_adjective(s: MorphState) -> None:
             (root + "+" + "+".join(tags)
              for root, sfx, tags in _real_candidates(tokens[idx])
              if sfx
-             and tags[-1] in ("Dat", "Loc", "Abl", "Ins")),
+             and tags[-1] in ("Dat", "Loc", "Abl", "Ins")
+             and "Pnon" in tags),
             None,
         )
         if cased is None:
             continue
         out[idx] = cased.replace("+DB+", "^DB+")
         # the stranded neighbor re-reads as its attributive twin
-        out[idx - 1] = prv_stem + "+Adj"
+        if prv.tags[-1:] != ("Adj",) and "Adj" in stems.get(prv_stem, ()):
+            out[idx - 1] = prv_stem + "+Adj"
 
 
 # the 'düşünce' homograph: the whole-word noun ('thought') directly
@@ -1963,7 +1977,8 @@ def _phase_event_nominal(s: MorphState) -> None:
         inf2 = next(
             (root + "+" + "+".join(tags).replace("+DB+", "^DB+")
              for root, sfx, tags in _real_candidates(tokens[idx])
-             if tags[0] == "Verb" and "Nom" in tags),
+             if tags[0] == "Verb"
+             and "Inf2" in tags and "Nom" in tags and "Pnon" in tags),
             None,
         )
         if inf2 is not None:
@@ -1992,7 +2007,8 @@ def _loan_i_object(s: MorphState) -> None:
         acc = next(
             (f"{root}+" + "+".join(tags)
              for root, _sfx, tags in _real_candidates(tokens[idx])
-             if "Acc" in tags),
+             if tags[0] == "Noun" and "Acc" in tags
+             and "Pnon" in tags and "DB" not in tags),
             None,
         )
         if acc:
@@ -2033,6 +2049,7 @@ def _dual_stem_attributive(s: MorphState) -> None:
         cur = analysis_tags(out[idx])
         if not (cur.tags[0] == low
                 and cur.tags[1:2] == ("Noun",)
+                and {"Pnon", "Nom", "A3sg"} <= cur.tagset
                 and "Adj" in stems.get(low, ())):
             continue
         if not ({"A3pl", "P3sg", "Nom", "Noun"}
@@ -2044,7 +2061,9 @@ def _dual_stem_attributive(s: MorphState) -> None:
         acc = next(
             (f"{root}+" + "+".join(tags)
              for root, _sfx, tags in _real_candidates(tokens[idx + 1])
-             if tags[0] == "Noun" and "Acc" in tags),
+             if tags[0] == "Noun" and "Acc" in tags
+             and "Pnon" in tags and "A3pl" in tags
+             and "DB" not in tags),
             None,
         )
         if acc:
@@ -2052,8 +2071,8 @@ def _dual_stem_attributive(s: MorphState) -> None:
             out[idx] = low + "+Adj"
 
 
-# an Adverb/Adj dual stem (açık, yalnız, geri) directly before an
-# unpossessed Nom-case word is the attributive adjective (AÇIK hava
+# an Adverb/Adj dual stem (açık, yalnız, geri) directly before a
+# bare unpossessed nominal is the attributive adjective (AÇIK hava
 # sineması, YALNIZ kadın); the adverb reading needs a verb or
 # clause-level scope
 def _adverb_attributive(s: MorphState) -> None:
@@ -2065,7 +2084,9 @@ def _adverb_attributive(s: MorphState) -> None:
         if "Adj" not in stems.get(low, ()):
             continue
         nxt = analysis_tags(out[idx + 1]).tagset
-        if "Pnon" in nxt and "Nom" in nxt:
+        if ("Noun" in nxt and "Verb" not in nxt
+                and "Pnon" in nxt
+                and "Nom" in nxt):
             out[idx] = low + "+Adj"
 
 

@@ -105,7 +105,7 @@ def _readings(token: str) -> frozenset:
         if (tags[0] == "Noun" and "Prop" not in tset
                 and tset & {"P3sg", "P3pl"} and "Loc" in tset):
             out.add("p3loc")  # possessed locative reading (yer+i+nde)
-        if (tags[0] == "Verb"
+        if (tags[0] == "Verb" and "Zero" not in tset
                 and tset & {"Aor", "Past", "Prog1", "Fut", "Narr"}):
             out.add("finite")  # a real finite-verb reading exists (alındı)
         if ("DB" in tags and fseg and fseg[0] == "Adj"
@@ -191,13 +191,20 @@ _AGENTIVE_SUFFIXES = ("cı", "ci", "cu", "cü", "çı", "çi", "çu", "çü")
 
 def _agentive_common(low: str) -> bool:
     """Is the surface an agentive -CI occupation noun (sözcü, oyuncu,
-    satıcı) — a common-noun stem ending in -CI?
+    satıcı) — a common stem whose -CI base is itself a known stem?
     Gazetteer homographs of this class (Sözcü the paper vs sözcü
     'spokesperson') read as the occupation sentence-initially, the
     same way temporal homographs (Sabah) read as the time noun."""
     if len(low) < 4 or not low.endswith(_AGENTIVE_SUFFIXES):
         return False
-    return _common_noun_stem(low)
+    return _common_noun_stem(low) and _common_noun_stem(low[:-2])
+
+
+# adjectives that also work adverbially directly before a verb
+_ADVERBIAL_ADJS = {
+    "yorgun", "olumsuz", "olumlu", "hızlı", "yavaş", "iyi", "kötü",
+    "doğru", "kolay", "zor", "güzel", "sessiz", "rahat", "mutlu",
+}
 
 
 class ParseState:
@@ -265,7 +272,13 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
     roots, base_case, base_poss, upos = s.roots, s.base_case, s.base_poss, s.upos
     if low in _EXISTENTIALS:
         upos[i] = "ADJ"
-    elif upos[i] == "NOUN" and low in _LOAN_ADJS:
+    elif (
+        upos[i] == "NOUN"
+        and low in _LOAN_ADJS
+        and "Pnon" in tags
+        and "Nom" in tags
+        and low == to_lower(roots[i])
+    ):
         # bare loan adjective the lexicon tags Noun-only (net cevap,
         # net hatırlayamadı); inflected forms keep the noun reading
         upos[i] = "ADJ"
@@ -280,6 +293,7 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
              or (roots[i - 1] in _TITLES
                  and "P3sg" in tagsets[i - 1]))
         and upos[i - 1] == "NOUN"
+        and roots[i - 1] in _TITLES
     ):
         # a capitalized token directly after a title is
         # the person's NAME even when the lexicon only knows it as a
@@ -300,13 +314,17 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
             # homograph and its nominal host (ÜNLÜ bir mimar) — the
             # host may then carry any case, the DET proves the
             # adnominal frame
-            or upos[i + 1] == "DET"
+            or (upos[i + 1] == "DET" and i + 2 < n
+                and upos[i + 2] in ("NOUN", "PROPN"))
             # a GENITIVE host is a possessor needing its own head:
             # the homograph modifies the possessor, not the clause
             # (ÜNLÜ ressamın tabloları) — the noun-argument reading
             # would leave the genitive chain adjective-less
             or (upos[i + 1] in ("NOUN", "PROPN")
-                and base_case[i + 1] == "Gen")
+                and base_case[i + 1] == "Gen"
+                and i + 2 < n
+                and upos[i + 2] in ("NOUN", "PROPN")
+                and {"P3sg", "P3pl"} & tagsets[i + 2])
         )
     ):
         # whole-word noun with a derivational-adjective homograph
@@ -363,6 +381,8 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
         )
         and any(
             upos[j] == "VERB"
+            and not tagsets[j]
+            & {"A1sg", "A2sg", "A1pl", "A2pl"}
             for j in range(i + 1, n)
         )
     ):
@@ -387,6 +407,7 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
         upos[i] == "VERB"
         and "Zero" in tags
         and analysis_tags(analyses[i]).zero_cop_class == "Noun"
+        and roots[i] not in ("var", "yok")
         # a live finite-verb reading means the zero-copula nominal
         # is a misanalysis (alındı = al+Pass+Past, not 'was a
         # receipt'): keep VERB
@@ -400,16 +421,30 @@ def _lexical_homographs(s, i: int, low: str, tags: set) -> bool:
         # (karar kolay bir karar DEĞİL; hazır değildi): AUX in UD
         # regardless of the lexicon's Verb/Conj readings
         upos[i] = "AUX"
-    elif low == "olarak" and i > 0:
-        # grammaticalized 'as'-postposition (başkan OLARAK seçti); the
-        # literal ol- converb reading survives clause-initially
+    elif (
+        low == "olarak"
+        and i > 0
+        and upos[i - 1] in ("NOUN", "PROPN", "ADJ", "NUM")
+    ):
+        # grammaticalized 'as'-postposition over a bare nominal
+        # (başkan OLARAK seçti): ADP; the literal ol- converb
+        # reading survives clause-initially and after verbs
         upos[i] = "ADP"
-    elif low == "yerine" and i > 0 and "Inf" in tagsets[i - 1]:
+    elif (
+        low == "yerine"
+        and i > 0
+        and "Inf" in tagsets[i - 1]
+    ):
         # 'instead of V-ing' (artırmak YERİNE): grammaticalized ADP
         # over the infinitive clause; after plain nominals the
         # literal possessed noun stays (yerine koydu)
         upos[i] = "ADP"
-    elif low == "ki" and i > 0 and upos[i - 1] == "VERB":
+    elif (
+        low == "ki"
+        and i > 0
+        and upos[i - 1] == "VERB"
+        and any(upos[j] == "VERB" for j in range(i + 1, n))
+    ):
         # post-verbal complementizer ki (diyor Kİ fiyatlar düşecek):
         # SCONJ; the coordinating/discourse ki elsewhere stays CCONJ
         upos[i] = "SCONJ"
@@ -441,15 +476,21 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
         upos[i] = "ADV"
     elif (
         low in ("yasak", "serbest")
+        and upos[i] == "NOUN"
         and all(upos[j] == "PUNCT" for j in range(i + 1, n))
+        and any(upos[j] == "VERB"
+                and "Inf" in tagsets[j]
+                for j in range(i))
     ):
         # zero-copula prohibition/permission predicate over an
         # infinitive csubj is the adjective (ateş yakmak YASAK)
         upos[i] = "ADJ"
     elif (
         low == "doğrudan"
+        and upos[i] == "ADJ"
         and i + 1 < n
-        and base_case[i + 1] not in ("Nom", "")
+        and not (upos[i + 1] in ("NOUN", "PROPN")
+                 and base_case[i + 1] in ("Nom", ""))
     ):
         # 'doğrudan' is the lexicalized adverb 'directly' except in
         # the attributive frame before a bare nominal (doğrudan
@@ -517,7 +558,8 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
             upos[i] = "ADV"
     elif upos[i] == "NOUN" and (
         "PastPart" in tags
-        or "FutPart" in tags
+        or ("FutPart" in tags
+            and base_case[i] in ("Acc", "Dat", "Loc", "Abl"))
         or ("Inf2" in tags
             and base_case[i] in ("Acc", "Dat", "Loc", "Abl")
             and i > 0
@@ -539,6 +581,7 @@ def _lexical_function_words(s, i: int, low: str, tags: set) -> bool:
                 # operation, a noun), while its Gen-subject twin
                 # stays the ccomp verb via the case disjunct above
                 or (upos[pv] == "NOUN"
+                    and base_case[pv] in ("Nom", "")
                     and "Pnon" in tagsets[pv]
                     and (not tags & {"P1sg", "P2sg", "P3sg",
                                      "P1pl", "P2pl", "P3pl"}
@@ -596,6 +639,7 @@ def _lexical_modifiers(s, i: int, low: str, tags: set) -> bool:
     base_case, upos = s.base_case, s.upos
     if (
         low == "ile"
+        and upos[i] == "CCONJ"
         and not (
             i > 0 and i + 1 < n
             and upos[i - 1] == "PROPN" and upos[i + 1] == "PROPN"
@@ -627,15 +671,28 @@ def _lexical_modifiers(s, i: int, low: str, tags: set) -> bool:
         # quantifiers are determiners in UD (bütün gün, ÇOĞU
         # izleyici)
         upos[i] = "DET"
-    elif low == "neden":
-        # the interrogative is the wh-adverb 'why' (fiyatların NEDEN
-        # arttığını açıkladı)
+    elif (
+        low == "neden"
+        and upos[i] == "NOUN"
+        and "Pnon" in tags
+        and base_case[i] in ("Nom", "")
+        and i + 1 < n
+        # the next token may be a nominalized verb whose own NOUN ->
+        # VERB rewrite runs later in this pass: read the analysis
+        and "Verb" in tagsets[i + 1]
+    ):
+        # the bare interrogative directly before a verb is the
+        # wh-adverb 'why' (fiyatların NEDEN arttığını açıkladı);
+        # the noun 'cause' is possessed/case-marked/determined
         upos[i] = "ADV"
     elif (
         low == "tek"
         and upos[i] == "NUM"
         and i + 1 < n
         and upos[i + 1] in ("NOUN", "PROPN")
+        # the reduplication 'tek tek' keeps NUM for the later
+        # ADV-pair rewrite
+        and lows[i + 1] != "tek"
         and not (i > 0 and lows[i - 1] == "tek")
     ):
         # 'tek' before ANY noun is the adjective 'single/sole'
@@ -645,6 +702,7 @@ def _lexical_modifiers(s, i: int, low: str, tags: set) -> bool:
         upos[i] = "ADJ"
     elif (
         low == "ancak"
+        and upos[i] == "CCONJ"
         and i > 0
         and not any(upos[j] == "VERB" for j in range(i))
         # a zero-copula PRESENT first conjunct has no VERB but is
@@ -661,6 +719,9 @@ def _lexical_modifiers(s, i: int, low: str, tags: set) -> bool:
             and not (tagsets[i - 1]
                      & {"P1sg", "P2sg", "P3sg",
                         "P1pl", "P2pl", "P3pl"})
+            and any(upos[j] in ("NOUN", "PROPN", "PRON")
+                    and base_case[j] in ("Nom", "")
+                    for j in range(i - 1))
         )
     ):
         # mid-sentence 'ancak' with no finite first conjunct before
@@ -703,6 +764,8 @@ def _lexical_modifiers(s, i: int, low: str, tags: set) -> bool:
             and base_case[i + 1] not in ("Nom", "")
             and any(
                 upos[j] in ("NOUN", "PROPN", "PRON")
+                and base_case[j] in ("Nom", "")
+                and roots[j] not in _TEMPORAL_ROOTS
                 for j in range(0, i)
             )
         )
@@ -719,7 +782,9 @@ def _lexical_modifiers(s, i: int, low: str, tags: set) -> bool:
         # porsiyon küçük.)
         and not (i + 1 < n and upos[i + 1] == "CCONJ"
                  and all(upos[j] in ("CCONJ", "ADJ", "PUNCT")
-                         or (j + 1 < n and upos[j + 1] == "ADJ")
+                         or (upos[j] in ("NOUN", "PROPN")
+                             and base_case[j] in ("Nom", "")
+                             and j + 1 < n and upos[j + 1] == "ADJ")
                          for j in range(i + 1, n)))
         # manner-frame hosts keep their attributive adjective even
         # case-marked (dikkatli ŞEKİLDE, sakin BİÇİMDE)
@@ -818,11 +883,16 @@ def _lexical_case_frames(s, i: int, low: str, tags: set) -> bool:
                      upos[j] == "NOUN"
                      and base_case[j] in ("Nom", "")
                      and not base_poss[j]
+                     # an LVC nominal is not a subject candidate
+                     # (ziyaret ETTİ)
+                     and not (j + 1 < n and upos[j + 1] == "VERB"
+                              and roots[j + 1] in ("et", "yap", "ol"))
                      for j in range(i + 2, n))))
         # a possessed SPATIAL relational host takes the bare noun as
         # its nmod, not an amod (kağıt ÜZERİNDE kusursuz görünüyor)
         and not (roots[i + 1] in _SPATIAL_ROOTS
                  and "P3sg" in tagsets[i + 1])
+        and "Agt" not in tags
         # a lexicalized adverb surface (yakında, önceden) is about
         # to be rewritten ADV: the homograph then has no nominal to
         # modify and stays the subject noun (hasta YAKINDA iyileşecek)
@@ -853,6 +923,7 @@ def _lexical_case_frames(s, i: int, low: str, tags: set) -> bool:
         and i + 1 < n
         and morph_upos[i + 1] == "VERB"
         and roots[i + 1] in ("ol", "gel")
+        and _ORDINAL_RE.search(low)
     ):
         # ordinal + light verb: birinci oldu -> nominal compound
         upos[i] = "NOUN"
@@ -871,6 +942,8 @@ def _lexical_case_frames(s, i: int, low: str, tags: set) -> bool:
         and low[:-3] in _UNIT_ROOTS
         and i > 0
         and upos[i - 1] == "NUM"
+        and i + 1 < n
+        and upos[i + 1] in ("DET", "NOUN", "PROPN", "ADJ")
     ):
         # NUM + unit-noun + -lIk is the measure adjective (bin
         # YILLIK bir mezar, iki KİŞİLİK masa, üç GÜNLÜK gezi) —
@@ -898,6 +971,7 @@ def _lexical_case_frames(s, i: int, low: str, tags: set) -> bool:
         and not (i + 1 < n and upos[i + 1] in ("NOUN", "PROPN")
                  and _CAP_RE.match(tokens[i + 1]))
         and (low in _TEMPORAL_ROOTS or _agentive_common(low))
+        and _common_noun_stem(low)
     ):
         # sentence-initial capitalization is not a Prop signal for
         # names that are also TEMPORAL nouns (Sabah the paper vs sabah
@@ -978,6 +1052,7 @@ def _gazetteer_names(s):
             # Bankası) or a mid-sentence capital
             and not (i == 0 and i + 1 < n
                      and upos[i + 1] == "NOUN"
+                     and not _CAP_RE.match(tokens[i + 1])
                      and base_poss[i + 1])
         ):
             upos[i] = "PROPN"
@@ -1023,6 +1098,7 @@ def _loan_i_object(s):
             and lows[i] in _LOAN_I_ACC_ADJS
             and upos[i + 1] in ("NOUN", "PROPN")
             and base_case[i + 1] in ("Dat", "Loc", "Abl", "Ins")
+            and not (i + 2 < n and upos[i + 2] == "ADP")
         ):
             v = next((j for j in range(i + 1, n) if upos[j] == "VERB"),
                      None)
@@ -1037,7 +1113,9 @@ def _loan_i_object(s):
                 and "Pass" not in tagsets[v]
                 and not any(base_case[j] == "Acc"
                             for j in range(n) if j != i)
-                and not any(base_case[j] in ("Nom", "")
+                and not any(upos[j] in ("NOUN", "PROPN")
+                            and base_case[j] in ("Nom", "")
+                            and not base_poss[j]
                             for j in range(i + 1, v))
                 and any(upos[j] == "NOUN"
                         and base_case[j] in ("Nom", "")
@@ -1046,16 +1124,20 @@ def _loan_i_object(s):
             ):
                 upos[i] = "NOUN"
 
-# whole-word-Adj / possessed-locative homographs with a nominal to
-# their left are the locative adverbial (olayları YERİNDE inceledi)
-# — mirror of the parser's re-read
+# whole-word-Adj / possessed-locative homographs directly before the
+# verb with a nominal to their left are the locative adverbial
+# (olayları YERİNDE inceledi) — mirror of the parser's re-read
 def _possessed_locative(s):
-    tokens, analyses, n, upos = s.tokens, s.analyses, s.n, s.upos
+    tokens, analyses, n, roots, upos = s.tokens, s.analyses, s.n, s.roots, s.upos
     for i in range(1, n - 1):
         if (
             upos[i] == "ADJ"
             and analysis_tags(analyses[i]).tags[1:] == ("Adj",)
             and "p3loc" in _readings(tokens[i])
+            and (upos[i + 1] == "VERB"
+                 or (i + 2 < n and upos[i + 1] == "NOUN"
+                     and upos[i + 2] == "VERB"
+                     and roots[i + 2] in ("et", "yap", "ol")))
             and upos[i - 1] in ("NOUN", "PROPN", "PRON", "NUM")
         ):
             upos[i] = "NOUN"
@@ -1099,6 +1181,9 @@ def _loan_i_before_bir(s):
             and tagsets[i] & {"P3sg", "P3pl"}
             and "bare_adj" in _readings(tokens[i])
             and lows[i + 1] == "bir"
+            and upos[i + 2] in ("NOUN", "PROPN")
+            and roots[i + 2] not in _TEMPORAL_ROOTS
+            and upos[i - 1] in ("NOUN", "PROPN", "PRON", "NUM")
         ):
             upos[i] = "ADJ"
 
@@ -1121,6 +1206,7 @@ def _agentive_nouns(s):
                  # profession-noun subject (GENÇ YÜZÜCÜ kulaç rekorunu)
                  or (i + 2 < n and upos[i + 2] in ("NOUN", "PROPN")
                      and "Pnon" in analyses[i + 1]
+                     and "Nom" in analyses[i + 1]
                      and {"P3sg", "P3pl"} & tagsets[i + 2]))
         ):
             # ... but a sentence-final zero-copula predicate keeps the
@@ -1144,7 +1230,9 @@ def _adjective_before_bir(s):
             and {"Pnon", "Nom"} <= tagsets[i]
             and "bare_adj" in _readings(tokens[i])
             and lows[i + 1] == "bir"
+            and upos[i + 1] == "DET"
             and upos[i + 2] in ("NOUN", "PROPN")
+            and not _CAP_RE.match(tokens[i])
         ):
             upos[i] = "ADJ"
 
@@ -1153,11 +1241,12 @@ def _adjective_before_bir(s):
 # own Dat/Abl goal argument (okula GİDEREK alıştı keeps the converb;
 # fiyatlar GİDEREK artıyor is the adverb)
 def _giderek_adverb(s):
-    n, lows, base_case, upos = s.n, s.lows, s.base_case, s.upos
+    analyses, n, lows, base_case, upos = s.analyses, s.n, s.lows, s.base_case, s.upos
     for i in range(n - 1):
         if (
             upos[i] == "VERB"
             and lows[i] == "giderek"
+            and "ByDoingSo" in analyses[i]
             and upos[i + 1] in ("VERB", "ADJ", "ADV")
             and not (i > 0 and base_case[i - 1] in ("Dat", "Abl"))
         ):
@@ -1187,7 +1276,9 @@ def _attributive_before_bare(s):
             # is attributive on the ADP/agent complement (Köprü YABANCI
             # mühendisler tarafından inşa edildi)
             and not (i + 2 < n
-                     and upos[i + 2] == "ADP")
+                     and upos[i + 2] == "ADP"
+                     and not any(upos[j] in ("NOUN", "PROPN", "PRON")
+                                 for j in range(i)))
             # ... and not when the bare nominal is itself the bare
             # MODIFIER of a following OVERTLY case-marked possessed
             # head (SEYİS yarış atını eyerledi): that izafet chain is
@@ -1226,7 +1317,10 @@ def _unknown_li_adjectives(s):
         if low[-2:] != harmony[stem_vowels[-1]]:
             continue
         attributive = i + 1 < n and upos[i + 1] in ("NOUN", "PROPN")
-        pred_final = all(upos[j] == "PUNCT" for j in range(i + 1, n))
+        pred_final = (
+            all(upos[j] == "PUNCT" for j in range(i + 1, n))
+            and not any(upos[j] == "VERB" for j in range(n))
+        )
         if attributive or pred_final:
             upos[i] = "ADJ"
 
@@ -1247,7 +1341,10 @@ def _first_conjunct_adjective(s):
                 and upos[i + 1] == "CCONJ"
                 and not any(upos[j] == "VERB" for j in range(n))
                 and all(upos[j] in ("CCONJ", "ADJ", "PUNCT")
-                        or (j + 1 < n and upos[j + 1] in ("ADJ", "NOUN"))
+                        or (upos[j] in ("NOUN", "PROPN")
+                            and base_case[j] in ("Nom", "")
+                            and j + 1 < n and upos[j + 1] in ("ADJ",
+                                                             "NOUN"))
                         for j in range(i + 1, n))):
             upos[i] = "ADJ"
 
@@ -1268,7 +1365,7 @@ def _correlative_adjective(s):
                  if lows[j] == lows[i - 1]),
                 None,
             )
-            if pair is not None:
+            if pair is not None and upos[pair + 1] == "ADJ":
                 upos[i] = "ADJ"
 
 # reduplicated adjectives quantify the verb phrase adverbially
@@ -1290,6 +1387,7 @@ def _reduplicated_nouns(s):
             upos[i] == upos[i + 1] == "NOUN"
             and tokens[i] == tokens[i + 1]
             and "Pnon" in analyses[i] and "Nom" in analyses[i]
+            and "Pnon" in analyses[i + 1] and "Nom" in analyses[i + 1]
             and not (i + 2 < n and upos[i + 2] in ("NOUN", "PROPN"))
         ):
             upos[i] = upos[i + 1] = "ADV"
@@ -1298,11 +1396,12 @@ def _reduplicated_nouns(s):
 # (geri döndü, geri dönüştürerek, geri verdi) — the noun reading
 # needs case or possession
 def _geri_particle(s):
-    n, lows, upos = s.n, s.lows, s.upos
+    n, lows, tagsets, upos = s.n, s.lows, s.tagsets, s.upos
     for i in range(n - 1):
         if (
             upos[i] == "NOUN"
             and lows[i] == "geri"
+            and {"Pnon", "Nom"} <= tagsets[i]
             and upos[i + 1] == "VERB"
         ):
             upos[i] = "ADV"
@@ -1343,6 +1442,7 @@ def _adjective_before_verb(s):
                 continue  # psych-verb frame: bana mantıklı geldi
             low = lows[i]
             if ("bare_noun" in _readings(tokens[i])
+                    and low not in _ADVERBIAL_ADJS
                     # loan adjectives' bare_noun reading is an artifact of
                     # the Noun-only lexicon entry, not evidence of
                     # argumenthood (net, direkt — NOT kalabalık, whose
