@@ -43,6 +43,21 @@ def test_pos_golden():
     assert py_pos_pairs(py_treebank_tokenize("Oğuz'un kırmızı bir Astra'sı vardı.")) == gold
 
 
+def test_pos_rules_keep_their_documented_frames():
+    # rules stay inside the frame their comments document: the noun
+    # 'neden' outside the wh-adverb frame, the ol- converb after a verb
+    tags = dict(py_pos_pairs(py_treebank_tokenize("Tek neden bu.")))
+    assert tags["neden"] == "NOUN"
+    tags = dict(py_pos_pairs(py_treebank_tokenize("Önemli bir neden, maliyet.")))
+    assert tags["neden"] == "NOUN"
+    tags = dict(py_pos_pairs(py_treebank_tokenize("Fiyatların neden arttığını açıkladı.")))
+    assert tags["neden"] == "ADV"
+    tags = dict(py_pos_pairs(py_treebank_tokenize("Geldi olarak gitti.")))
+    assert tags["olarak"] == "VERB"
+    tags = dict(py_pos_pairs(py_treebank_tokenize("Onu başkan olarak seçti.")))
+    assert tags["olarak"] == "ADP"
+
+
 def test_native_upos_matches_analysis_tags(spark):
     # pos_from_analyses is the JVM copy of the morph UPOS mapping: it must
     # give every analysis the UPOS of its AnalysisTags record

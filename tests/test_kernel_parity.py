@@ -8,16 +8,25 @@ seeded fuzz corpus — and compares the digest with a committed constant.
 A kernel refactor (rule-pass fusion, cache layout, hoisted imports) must
 leave ``KERNEL_SHA256`` unchanged; a change that means to alter output
 updates the constant and says why.
+
+``COMMENT_EXAMPLES_SHA256`` pins the kernel and ``py_pos_tags`` on the
+example phrases the rule modules' comments document
+(``rule_comment_examples.txt``), so a rule that is narrowed or widened
+away from its documented examples fails here too.
 """
 import hashlib
 import random
 import time
+from pathlib import Path
 
+from vnlp_spark.operators.pos import py_pos_tags
 from vnlp_spark.plans.corpus import SENTENCE_POOL
 from vnlp_spark.plans.gold_ud_blind_data import load_split
 from vnlp_spark.plans.pipeline import annotate_sentence
 
 KERNEL_SHA256 = "26c9c8ecb8b73d1e384f6b52f6e08ccfb125a2a11fb297ee68bde37f060b471c"
+
+COMMENT_EXAMPLES_SHA256 = "df36d58123fcd173d37825ac81e40ec295237510f45c1b69a60d1177dd651b05"
 
 N_FUZZ = 2500
 
@@ -83,3 +92,26 @@ def test_kernel_parity_hash():
     digest = kernel_digest()
     assert time.monotonic() - t0 < 30
     assert digest == KERNEL_SHA256
+
+
+def _comment_examples() -> list:
+    """The example phrases in the comments of ``pos.py``, ``dep_parser.py``
+    and ``morphology.py`` (the parenthesized Turkish ones), each alone,
+    capitalized with a full stop, and in three carrier frames ("Ahmet dün
+    X.", "X ve kitabı aldı.", "Bu X oldu."); frozen in a text file."""
+    path = Path(__file__).with_name("rule_comment_examples.txt")
+    return path.read_text(encoding="utf-8").splitlines()
+
+
+def comment_examples_digest() -> str:
+    h = hashlib.sha256()
+    for sentence in _comment_examples():
+        out = annotate_sentence(sentence)
+        h.update(repr((out, py_pos_tags(out[0]))).encode("utf-8"))
+        h.update(b"\n")
+    return h.hexdigest()
+
+
+def test_comment_examples_hash():
+    assert len(_comment_examples()) == 2545
+    assert comment_examples_digest() == COMMENT_EXAMPLES_SHA256

@@ -2,7 +2,7 @@
 the annotation kernel — inputs the reference's golden fixtures never
 cover."""
 import hypothesis.strategies as st
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 
 from vnlp_spark.functions.deasciifier import py_deasciify_token
 from vnlp_spark.functions.normalizer import (
@@ -101,16 +101,21 @@ kernel_words = st.lists(
 
 
 @given(kernel_words)
+@example(["hem", "hem", "Ali", "hem", "Veli", "geldi", "."])
 @settings(max_examples=300, deadline=None)
 def test_annotate_sentence_total(words):
     # the kernel annotates any token list: one analysis per token, an arc
     # per token numbered 1..n up to the parser's limit and None past it,
-    # and every mention span inside the tokens
+    # each arc's head inside 0..n and never the token itself, and every
+    # mention span inside the tokens
     tokens, analyses, mentions, arcs = annotate_sentence(" ".join(words))
-    assert len(analyses) == len(tokens)
-    if len(tokens) > MAX_TOKENS:
+    n = len(tokens)
+    assert len(analyses) == n
+    if n > MAX_TOKENS:
         assert arcs is None
     else:
-        assert [arc[0] for arc in arcs] == list(range(1, len(tokens) + 1))
+        assert [arc[0] for arc in arcs] == list(range(1, n + 1))
+        for idx, _word, head, _rel in arcs:
+            assert 0 <= head <= n and head != idx
     for _mention, _label, first_tok, last_tok in mentions:
         assert 0 <= first_tok <= last_tok < len(tokens)
